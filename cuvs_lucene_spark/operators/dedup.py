@@ -21,6 +21,12 @@ never crossJoin:
                  stage (only true pairs reach an exchange)
 - embedding    — cosine-threshold near-dup pairs; exact at test scale,
                  same verification composes with LSH/IVF buckets at scale
+- components   — near-dup pairs → keep decisions: one narrow pass builds
+                 each partition's spanning forest with a numpy min-label
+                 union-find, and the driver unions the collected forests
+                 with the same kernel; a forest over
+                 ``COMPONENTS_BCAST_MAX_NODES`` rows falls back to Spark
+                 rounds of min-label propagation over its edges
 
 Determinism: every hash is md5 of an explicit string — bit-stable across
 Spark (JVM md5), hashlib, DuckDB, and re-runs (resumability).
@@ -33,9 +39,9 @@ from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.functions.tokenize import tokenize_expr
 
-# node-count ceiling for duplicate_components' broadcast tier: 2M (id,
-# label) rows ≈ 32 MB framed — comfortably under broadcast limits; larger
-# graphs take the pinned-partitioning shuffle tier
+# row cap on the spanning forest duplicate_components collects to the
+# driver for its in-memory union-find: 2M (root, node) rows ≈ 32 MB of
+# int64 arrays; a longer forest takes the shuffle tier (Spark rounds)
 COMPONENTS_BCAST_MAX_NODES = 2_000_000
 
 
@@ -309,8 +315,8 @@ def ngram_jaccard_pairs(
 
 
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32) -> DataFrame:
-    """32-bit SimHash fingerprints: per-token md5-derived hash, tf-weighted
-    sign aggregation per bit. (id, simhash long).
+    """SimHash fingerprints (32 bits by default): per-token md5-derived
+    hash, tf-weighted sign aggregation per bit. (id, simhash long).
 
     One narrow Arrow-batched pass — zero shuffles, zero row explosion
     (replaces the original explode → groupBy(id,t) → bits× explode → two
@@ -323,11 +329,16 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
     would run every hash and every bit fold through the interpreted
     evaluator). Values are bit-identical to the original aggregate
     (integer math throughout); docs with zero tokens are excluded
-    (explode semantics of the original — preserved exactly)."""
+    (explode semantics of the original — preserved exactly).
+
+    ``bits`` must be in 1..32: each token hash is a 32-bit md5 prefix, so
+    any wider fingerprint would carry always-zero high bits."""
     import numpy as np
     import pandas as pd
 
     n_bits = int(bits)
+    if not 1 <= n_bits <= 32:
+        raise ValueError(f"simhash bits must be in 1..32 (the token hash has 32), got {bits}")
 
     def kernel(batches):
         import hashlib
@@ -632,6 +643,125 @@ def embedding_near_dup_lsh(
     return verified
 
 
+def _min_label(a, b):
+    """Connected components of the edge list ``a[i] ~ b[i]`` (int64 node
+    ids) → ``(nodes, labels)``: the distinct nodes in ascending order and,
+    for each, the minimum node id of its component.
+
+    Vectorized hook-and-jump union-find over dense node indices (index
+    order is id order, so the minimum index is the minimum id). Each
+    round hooks every root to the smallest root it shares an edge with,
+    then follows parent pointers until each node points at a root
+    (pointer jumping: a chain collapses in O(log length) steps). Parents
+    only decrease and never leave their component, so once every edge
+    joins one root, that root is its component's minimum. An edge whose
+    ends share a root keeps sharing it, so each round scans only the
+    edges still split."""
+    import numpy as np
+
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a) :]
+    parent = np.arange(nodes.size)
+    while True:
+        pa, pb = parent[ia], parent[ib]
+        split = pa != pb
+        if not split.any():
+            return nodes, nodes[parent]
+        ia, ib, pa, pb = ia[split], ib[split], pa[split], pb[split]
+        np.minimum.at(parent, np.maximum(pa, pb), np.minimum(pa, pb))
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _spanning_forest(batches):
+    """``mapInPandas`` kernel: one partition's (a, b) pairs → its spanning
+    forest as (root, node) rows, each node under the minimum id of its
+    partition-local component. A root is implied by its children's rows;
+    a root without children (a node seen only in self-pairs) emits
+    (root, root) so that it still reaches the global pass."""
+    import numpy as np
+    import pandas as pd
+
+    cols = [(pdf["a"].to_numpy(np.int64), pdf["b"].to_numpy(np.int64)) for pdf in batches]
+    if not cols:
+        return
+    nodes, labels = _min_label(
+        np.concatenate([a for a, _ in cols]), np.concatenate([b for _, b in cols])
+    )
+    child = labels != nodes
+    emit = child | ~np.isin(nodes, labels[child])
+    yield pd.DataFrame({"root": labels[emit], "node": nodes[emit]})
+
+
+def _components_rounds(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Shuffle tier of :func:`duplicate_components` for forests too big
+    for the driver: ``(a, b)`` edges → ``(id, component)`` by iterative
+    min-label propagation with pointer jumping, as Spark rounds.
+
+    A directed edge copy is checkpointed hash-partitioned on the join
+    key, and the label table is re-pinned to the same layout each round,
+    so the per-round edges⋈labels sort-merge join re-shuffles neither
+    side (guide §2.4 exchange reuse). Every round each node adopts the
+    minimum label in its closed neighborhood, then follows one hop
+    through the previous label table (path halving, so rounds ≈
+    O(log diameter)). The new label table is eagerly checkpointed with a
+    ``chg`` flag (fixpoint detection is a scan, not a join) and the
+    previous one unpersisted, so lineage stays one round deep and at
+    most two label tables are live."""
+    spark = edges.sparkSession
+    n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
+    und_dir = (
+        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .repartition(n_part, "a")
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        und_dir.select(F.col("a").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_iterations):
+        nbr_min = (
+            und_dir.join(labels, und_dir["a"] == labels["id"])
+            .groupBy(F.col("b").alias("id"))
+            .agg(F.min("label").alias("nmin"))
+        )
+        cand = labels.join(nbr_min, "id", "left").select(
+            "id",
+            F.col("label").alias("old_label"),
+            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+        )
+        # pointer jump: every label IS a node id, so follow one hop
+        # through the previous (already materialized) label table
+        hop = labels.select(F.col("id").alias("hid"), F.col("label").alias("hlabel"))
+        jumped = F.least(cand["label"], F.coalesce("hlabel", cand["label"]))
+        new_labels = (
+            cand.join(hop, cand["label"] == hop["hid"], "left")
+            .select(
+                cand["id"],
+                jumped.alias("label"),
+                (jumped != cand["old_label"]).alias("chg"),
+            )
+            .repartition(n_part, "id")
+            .localCheckpoint(eager=True)
+        )
+        changed = new_labels.filter("chg").count()
+        labels.unpersist()
+        labels = new_labels.drop("chg")
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"duplicate_components did not converge in {max_iterations} rounds"
+        )
+    und_dir.unpersist()
+    return labels.select("id", F.col("label").alias("component"))
+
+
 def duplicate_components(
     pairs: DataFrame,
     all_ids: DataFrame | None = None,
@@ -646,145 +776,53 @@ def duplicate_components(
     under-delete: A~B and B~C must collapse to ONE survivor even when A~C
     was never emitted as a candidate).
 
-    Algorithm: iterative min-label propagation WITH pointer jumping.
-    Every round each node adopts the minimum label in its closed
-    neighborhood (its own label and all neighbors'), then follows one hop
-    through the label table (label ← label[label], path halving) — the
-    hop compresses chains exponentially, so rounds ≈ O(log diameter)
-    instead of O(diameter); a fixpoint is the component minimum.
-    ``max_iterations`` is a generous backstop.
+    Algorithm: spanning forests, then one union-find.
 
-    Scale shape, two tiers keyed on the NODE count (node rows are 16
-    bytes, so the label table is many orders of magnitude smaller than
-    the edge table a near-dup pipeline emits — dense dup clusters make
-    |E| quadratic in cluster size while |V| stays the corpus size):
+    1. **On the executors**: one ``mapInPandas`` pass over the canonical
+       (min, max) pair list runs the numpy min-label union-find
+       (:func:`_min_label`) inside each partition — no shuffle — and
+       emits the partition's spanning forest as (root, node) rows. The
+       forest has at most one row per node per partition, however dense
+       the duplicate clusters (|E| grows quadratically in cluster size,
+       the forest linearly).
+    2. **On the driver**: the forest is collected, capped at
+       ``COMPONENTS_BCAST_MAX_NODES`` rows, and the same kernel unions
+       the partition forests into global components, which become the
+       ``(id, component)`` frame through one ``createDataFrame``. Merging
+       forests preserves connectivity, so the result is the component
+       minimum, exactly.
 
-    - **broadcast tier** (nodes ≤ ``COMPONENTS_BCAST_MAX_NODES``): each
-      round broadcasts the label table and streams the checkpointed
-      canonical edge list through two broadcast-hash joins + one
-      map-side-partial groupBy(min) — the edge table is NEVER shuffled,
-      not even once (guide §3.1: broadcast replaces the big side's
-      exchange).
-    - **shuffle tier** (bigger graphs): a directed edge copy is
-      checkpointed hash-partitioned on the join key, and the label table
-      is re-pinned to the same layout each round, so the per-round
-      edges⋈labels sort-merge join re-shuffles neither side (guide
-      §2.4 exchange reuse).
-
-    Every round eagerly ``localCheckpoint``s the new label table
-    (carrying a ``chg`` convergence flag, so fixpoint detection is a
-    scan, not a labels⋈labels join job) and unpersists the previous
-    round's — lineage stays one round deep and executor storage stays
-    bounded at two label tables. Deterministic: min is
-    order-independent.
+    A forest longer than the cap takes the shuffle tier instead
+    (:func:`_components_rounds`): Spark rounds of min-label propagation
+    over the forest edges, which are never more than the raw pairs.
+    ``max_iterations`` is that tier's convergence backstop. The in-memory
+    tier runs a handful of Spark jobs and persists nothing.
+    Deterministic: min is order-independent. Pairs with both ids null
+    are ignored; a pair with one null id keeps the other as a node.
 
     ``all_ids`` (one ``id`` column, optional): include singletons with
     ``component = id`` so the output is a TOTAL decision table.
     """
+    import pyarrow as pa
+
     spark = pairs.sparkSession
-    n_part = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-    edges = pairs.select(
-        F.col(id_a).cast("long").alias("a"), F.col(id_b).cast("long").alias("b")
+    a, b = F.col(id_a).cast("long"), F.col(id_b).cast("long")
+    edges = pairs.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b")).filter(
+        F.col("a").isNotNull()
     )
-    # materialize the pair graph ONCE — candidate generation (band joins,
-    # hamming verify, ...) upstream of `pairs` must not re-execute every
-    # propagation round. Canonical (min, max) normalization only — NO
-    # distinct: near-dup candidate generators already emit distinct
-    # pairs, min-label propagation is idempotent under duplicate edges
-    # (min is unaffected), and a distinct here re-shuffled the full edge
-    # list once for nothing; duplicated input pairs merely cost
-    # proportional extra join work in each round, never wrong results.
-    und = (
-        edges.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        und.select(F.explode(F.array("a", "b")).alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    ).localCheckpoint(eager=True)
-    n_nodes = labels.count()
-    bcast = n_nodes <= COMPONENTS_BCAST_MAX_NODES
-    if not bcast:
-        und_dir = (
-            und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .repartition(n_part, "a")
-            .localCheckpoint(eager=True)
+    forest = edges.mapInPandas(_spanning_forest, "root long, node long")
+    cap = COMPONENTS_BCAST_MAX_NODES
+    rows = forest.limit(cap + 1).toArrow()
+    if rows.num_rows <= cap:
+        nodes, labels = _min_label(
+            rows.column("root").to_numpy(), rows.column("node").to_numpy()
         )
-    for it in range(max_iterations):
-        if bcast:
-            lb = F.broadcast(labels)
-            nbr = (
-                und.join(lb, und["a"] == lb["id"])
-                .select(F.col("b").alias("id"), "label")
-                .unionByName(
-                    und.join(lb, und["b"] == lb["id"]).select(
-                        F.col("a").alias("id"), "label"
-                    )
-                )
-            )
-        else:
-            nbr = und_dir.join(labels, und_dir["a"] == labels["id"]).select(
-                F.col("b").alias("id"), "label"
-            )
-        nbr_min = nbr.groupBy("id").agg(F.min("label").alias("nmin"))
-        cand = labels.join(nbr_min, "id", "left").select(
-            "id",
-            F.col("label").alias("old_label"),
-            F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-        )
-        # pointer jump: every label IS a node id, so follow one hop
-        # through the PREVIOUS label table (already materialized — no
-        # extra pass over the edges) — chains collapse exponentially.
-        # (A second hop through the SAME previous table was measured to
-        # change convergence by <5% — the first hop already composes the
-        # old table with itself — while its extra per-round join made
-        # late rounds several times slower; one hop is the sweet spot.)
-        hop = labels.select(
-            F.col("id").alias("hid"), F.col("label").alias("hlabel")
-        )
-        if bcast:
-            hop = F.broadcast(hop)
-        # convergence flag carried WITH the labels: the old label rode
-        # along through the round, so detecting a fixpoint is a scan of
-        # this checkpointed table — the previous per-round
-        # labels⋈new_labels join job (an extra shuffle + full recompute)
-        # is gone (guide §2.4)
-        new_labels = cand.join(hop, cand["label"] == hop["hid"], "left").select(
-            cand["id"],
-            F.least(cand["label"], F.coalesce("hlabel", cand["label"])).alias(
-                "label"
-            ),
-            (
-                F.least(cand["label"], F.coalesce("hlabel", cand["label"]))
-                != cand["old_label"]
-            ).alias("chg"),
-        )
-        if not bcast:
-            # pin the label table's partitioning to the directed edge
-            # table's key layout so next round's edges⋈labels join is
-            # exchange-free on BOTH sides
-            new_labels = new_labels.repartition(n_part, "id")
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = new_labels.filter("chg").count()
-        # the previous round's checkpointed labels are now obsolete —
-        # release their storage (bounded at two label tables live)
-        labels.unpersist()
-        labels = new_labels.drop("chg")
-        if changed == 0:
-            break
+        comp = spark.createDataFrame(pa.table({"id": nodes, "component": labels}))
     else:
-        raise RuntimeError(
-            f"duplicate_components did not converge in {max_iterations} rounds"
+        comp = _components_rounds(
+            forest.select(F.col("root").alias("a"), F.col("node").alias("b")),
+            max_iterations,
         )
-    # the edge checkpoints are dead once labels converged — release their
-    # storage NOW (the returned frame references only the final label
-    # checkpoint); leaking ~|E| blocks per call builds executor-storage
-    # debris that degrades every later job in the session via GC pressure
-    und.unpersist()
-    if not bcast:
-        und_dir.unpersist()
-    comp = labels.select("id", F.col("label").alias("component"))
     if all_ids is not None:
         comp = (
             all_ids.select(F.col(all_ids.columns[0]).cast("long").alias("id"))
