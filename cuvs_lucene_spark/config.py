@@ -107,15 +107,17 @@ class IndexConfig:
     #                               from ivf_pq_params n_probes)
     #   refinementRate              ``rerank_factor`` arg of ann_topk_sq/_pq
     #                               (coarse candidates = k * rerank_factor)
-    #   filtered-search widening    ``overfetch`` below: eff_k = min(k +
-    #                               overfetch, |mask|)
+    #   filtered-search widening    none needed: filters apply INSIDE each
+    #                               leaf (pre-filter), so a leaf's top-k is
+    #                               already its accepted top-k
     #   visitedLimit                ``visited_limit`` arg of ann_topk_graph
     #                               (max nodes scored per leaf; beam stops
     #                               early when exhausted — collector budget,
     #                               GPUPerLeafCuVSKnnCollector.java:26-38)
     default_k: int = 10
-    overfetch: int = 10                 # filtered-search widening: min(k+10, |mask|)
-                                        # (CuVS2510GPUVectorsReader.java:432)
+    overfetch: int = 10                 # graph beam floor: ef = max(k + overfetch, 64)
+                                        # (the k+10 widening of
+                                        # CuVS2510GPUVectorsReader.java:432)
     # incremental merges drop segments logically; a merge auto-compacts the
     # segdata table once the dropped-doc fraction exceeds this (Lucene
     # deletes unreferenced files; Iceberg rewrite_data_files)

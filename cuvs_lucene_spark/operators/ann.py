@@ -1,29 +1,68 @@
 """ANN sidecar index — the reference codec's own role re-expressed
-Spark-first (SURVEY.md Layer B: §2.2 B2-B5/B9-B11, §2.4 S1-S6).
+Spark-first (SURVEY.md Layer B: §2.2 B2-B5/B9-B11, §2.4 S1-S6), laid out
+like the reference's pluggable ``KnnVectorsFormat`` layer: a registry of
+vector formats around one host-side search driver.
 
-Per-segment build via ``groupBy(segment).applyInPandas`` mirrors the flush
-path (``CuVS2510GPUVectorsWriter.writeFieldInternal:181-234``): the whole
-segment's vectors become one dense numpy matrix (the
-``Utils.createFloatMatrix:56-72`` analogue), from which we emit
+Storage. ``ann_flat`` — per segment, the raw float32 row-major matrix and
+its ext_id map, sorted by ext_id (the delegated ``FlatVectorsFormat``, I3)
+— is the source of truth; ``ann_ids`` is its thin (segment_id, ext_id)
+map. Every other table is a derived FORMAT built per segment from flat
+blobs by the flush kernel (``CuVS2510GPUVectorsWriter.writeFieldInternal:
+181-234``; the dense matrix is the ``Utils.createFloatMatrix:56-72``
+analogue).
 
-- ``ann_flat``  — raw float32 row-major matrix + ext_id map (flat vector
-  storage, the delegated ``FlatVectorsFormat`` I3; source of truth for
-  merge-as-rebuild)
-- ``ann_sq``    — per-segment scalar-quantized codes + min/max stats (B10)
-- ``ann_ivf``   — IVF lists (deterministic Lloyd k-means) with parameters
-  from the reference's heuristic formulas
-  (``CagraIndexParamsFactory.java:31-93,149-178`` — O1/O2); segments with
-  fewer than ``min_ann_index_size`` vectors fall back to brute force, the
-  B2 CAGRA→BF degradation ladder
+Formats (``FORMATS``). One entry per derived table supplies what only
+that format knows:
 
-Search (S1-S6): per-segment scorer → global top-k. Routing mirrors S1:
-``k > max_k_ann`` or no IVF index → brute force. L2 scores are normalized
-``1/(1 + dist)`` exactly as ``getScoreNormalizationFunc:390-393`` (dist =
-squared L2, cuVS L2Expanded). Filters are PRE-semantics with top-k widened
-to ``min(k + 10, |mask|)`` (``CuVS2510GPUVectorsReader.java:418-434``).
+- its table, row schema and sort keys;
+- its row builder for a set of segments — ``_sq_rows`` (B10),
+  ``_bq_rows`` (B9), ``_ivf_rows`` (k-means lists with the
+  ``CagraIndexParamsFactory.java:31-93,149-178`` heuristics, O1/O2),
+  ``_graph_rows`` (B12), ``_pq_rows``, ``_ivfpq_rows``;
+- its coarse scorer, if it is compressed: SQ dequantize, PQ / IVF-PQ ADC
+  lookup table, BQ Hamming (raw IVF lists and exact scans have none; the
+  graph navigates by beam search).
+
+Build, streaming epochs, merge and compaction all walk this one list, so
+a new format is one entry plus a thin search wrapper.
+
+Search (S1-S6). Each public search function picks a plan shape for its
+format and hands it to the driver (``_search`` / ``_Search``), which
+holds the contract the reference's host supplies around every format:
+
+- metric: derived formats search under the index's build metric; cosine
+  indexes navigate in unit space (``_nav_vectors``) and rescore raw flat
+  vectors; L2 scores normalize ``1/(1 + d)``, d = squared L2
+  (``getScoreNormalizationFunc:390-393``);
+- acceptDocs: the query filter and the tombstones are a PRE-filter inside
+  every leaf — closure arrays when small, per-segment blobs when large
+  (``_resolve_filter``, ``_resolve_tombstones``;
+  ``CuVS2510GPUVectorsReader.java:418-434``);
+- visit budget: ``visited_limit`` caps the vectors a leaf scores, first in
+  ext_id order; a tiny budget degrades recall, never errors
+  (``GPUPerLeafCuVSKnnCollector.java:26-38``);
+- B2 fallback: a segment with no index rows (below
+  ``min_ann_index_size``, oversized for the graph, or missing after a
+  crashed merge) is scanned exactly from flat — every vector is reachable
+  in every mode, like the reference's per-leaf routing;
+- exact rerank: compressed formats cut ``k · rerank_factor`` coarse
+  candidates per leaf and rescore them exactly from flat;
+- one tie rule: best first, lower ext_id first among equals —
+  ``lexsort((ids, key))`` in the numpy kernels (``_exact_topk``,
+  ``_rerank_topk``) and ``orderBy(score desc, ext_id asc)`` in the global
+  top-k.
+
+Plan shapes stay per format: exact and IVF are one ``mapInPandas`` over
+flat rows or the probed lists; SQ, PQ, BQ and the graph are one cogroup
+with ``ann_flat``; IVF-PQ is an ADC ``mapInPandas`` over the probed code
+lists, then a rerank cogroup. Routing mirrors S1: ``k > max_k_ann`` or no
+IVF index → brute force.
 """
 
 from __future__ import annotations
+
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -36,7 +75,12 @@ from cuvs_lucene_spark.config import (
     ivf_pq_params,
     shuffle_partitions,
 )
-from cuvs_lucene_spark.functions.quantize import scalar_dequantize, scalar_quantize, widen_unsigned
+from cuvs_lucene_spark.functions.quantize import (
+    binary_quantize,
+    scalar_dequantize,
+    scalar_quantize,
+    widen_unsigned,
+)
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
@@ -44,6 +88,7 @@ ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
                         # pre-v3 indexes self-heal the map on first large filter
 
 FLAT_SCHEMA = "segment_id long, n_vecs int, dim int, ext_ids binary, vectors binary"
+IDS_SCHEMA = "segment_id long, ext_id long"
 PQ_SCHEMA = (
     "segment_id long, n_vecs int, dim int, pq_dim int, pq_bits int, "
     "codebook binary, codes binary"
@@ -53,7 +98,11 @@ BQ_SCHEMA = "segment_id long, n_vecs int, dim int, centroid binary, codes binary
 IVF_SCHEMA = (
     "segment_id long, list_id int, n int, ext_ids binary, vectors binary"
 )
-CENTROIDS_SCHEMA = "segment_id long, n_lists int, dim int, centroids binary"
+IVFPQ_SCHEMA = "segment_id long, list_id int, n int, ext_ids binary, codes binary"
+GRAPH_SCHEMA = (
+    "segment_id long, layer int, stride int, n_nodes int, degree int, "
+    "offsets binary, graph binary"
+)
 TOPK_SCHEMA = "segment_id long, ext_id long, score double"
 
 
@@ -106,55 +155,48 @@ def _kmeans(x: np.ndarray, n_lists: int, iters: int, seed: int, trainset_fractio
     return cents
 
 
-def _sq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
-    """Per-segment scalar-quantized codes (B10) from flat blobs (codes are
-    in navigation space — unit-normalized for cosine indexes)."""
+def _per_segment(flat_df: DataFrame, metric: str, encode, schema: str) -> DataFrame:
+    """One format row per flat segment row: ``encode(x)`` maps the
+    segment's vectors in navigation space (unit-normalized for cosine
+    indexes) to the format's own columns."""
 
-    def build_sq(it):
+    def build(it):
         for pdf in it:
-            for r in pdf.itertuples():
+            for r in pdf.itertuples(index=False):
                 x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                q, mins, maxs = scalar_quantize(_nav_vectors(x, metric))
+                cols = encode(_nav_vectors(x, metric))
                 yield pd.DataFrame(
-                    {
-                        "segment_id": [r.segment_id],
-                        "n_vecs": [r.n_vecs],
-                        "dim": [r.dim],
-                        "mins": [mins.astype(np.float32).tobytes()],
-                        "maxs": [maxs.astype(np.float32).tobytes()],
-                        "codes": [q.tobytes()],
-                    }
+                    {"segment_id": [r.segment_id], "n_vecs": [r.n_vecs], "dim": [r.dim],
+                     **{c: [v] for c, v in cols.items()}}
                 )
 
-    return flat_df.mapInPandas(build_sq, SQ_SCHEMA)
+    return flat_df.mapInPandas(build, schema)
+
+
+def _sq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
+    """Per-segment scalar-quantized codes (B10) from flat blobs."""
+
+    def encode(x):
+        q, mins, maxs = scalar_quantize(x)
+        return {"mins": mins.astype(np.float32).tobytes(),
+                "maxs": maxs.astype(np.float32).tobytes(), "codes": q.tobytes()}
+
+    return _per_segment(flat_df, metric, encode, SQ_SCHEMA)
 
 
 def _bq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
     """Per-segment binary-quantized codes (B9): mean-centroid sign bits
     packed 8/byte — the LuceneAcceleratedHNSWBinaryQuantized analogue.
-    Cosine indexes quantize in navigation space (unit-normalized — the
-    Lucene normalize-before-quantize COSINE treatment), so the hamming
-    order tracks angular structure, not raw magnitudes."""
+    Quantizing in navigation space is the Lucene normalize-before-quantize
+    COSINE treatment, so the hamming order tracks angular structure, not
+    raw magnitudes."""
 
-    def build_bq(it):
-        from cuvs_lucene_spark.functions.quantize import binary_quantize
+    def encode(x):
+        packed, centroid = binary_quantize(x)
+        # float64 so query-side bits reproduce build-side bits
+        return {"centroid": centroid.astype(np.float64).tobytes(), "codes": packed.tobytes()}
 
-        for pdf in it:
-            for r in pdf.itertuples():
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                packed, centroid = binary_quantize(_nav_vectors(x, metric))
-                yield pd.DataFrame(
-                    {
-                        "segment_id": [r.segment_id],
-                        "n_vecs": [r.n_vecs],
-                        "dim": [r.dim],
-                        # float64 so query-side bits reproduce build-side bits
-                        "centroid": [centroid.astype(np.float64).tobytes()],
-                        "codes": [packed.tobytes()],
-                    }
-                )
-
-    return flat_df.mapInPandas(build_bq, BQ_SCHEMA)
+    return _per_segment(flat_df, metric, encode, BQ_SCHEMA)
 
 
 def _ivf_rows(flat_df: DataFrame, ann: AnnParams, metric: str = "l2") -> DataFrame:
@@ -212,6 +254,87 @@ def _ivf_rows(flat_df: DataFrame, ann: AnnParams, metric: str = "l2") -> DataFra
     return flat_df.mapInPandas(build_ivf, IVF_SCHEMA)
 
 
+def _pq_rows(flat_df: DataFrame, cfg: IndexConfig, metric: str = "l2") -> DataFrame:
+    """Per-segment PQ codebooks + codes from flat blobs: ``pq_dim``
+    contiguous subspaces, each with its own deterministic k-means codebook
+    of 2^pq_bits centroids."""
+    seed = cfg.ann.seed
+    iters = cfg.ann.kmeans_iters
+
+    def encode(x):
+        n, dim = x.shape
+        p = ivf_pq_params(n, dim)
+        pq_dim, bits = p["pq_dim"], p["pq_bits"]
+        if dim % pq_dim:
+            pq_dim = dim  # fall back to 1-dim subspaces
+        sub = dim // pq_dim
+        k_cb = min(1 << bits, n)
+        books = np.empty((pq_dim, 1 << bits, sub), np.float32)
+        codes = np.empty((n, pq_dim), np.uint8)
+        for s in range(pq_dim):
+            xs = x[:, s * sub : (s + 1) * sub]
+            cents = _kmeans(xs, k_cb, iters, seed + s, 1.0)
+            d = -2.0 * xs @ cents.T + (cents**2).sum(1)[None, :]
+            codes[:, s] = d.argmin(1).astype(np.uint8)
+            books[s, :k_cb] = cents
+            if k_cb < (1 << bits):
+                books[s, k_cb:] = cents[0]  # pad unused slots
+        return {"pq_dim": np.int32(pq_dim), "pq_bits": np.int32(bits),
+                "codebook": books.tobytes(), "codes": codes.tobytes()}
+
+    return _per_segment(flat_df, metric, encode, PQ_SCHEMA)
+
+
+def _ivfpq_rows(ivf_df: DataFrame, pq_df: DataFrame, metric: str = "l2") -> DataFrame:
+    """Per-list PQ codes — the combined IVF-PQ structure the reference's
+    parameter factory derives as ONE unit (``CagraIndexParamsFactory.java:
+    31-93`` sets nLists/nProbes AND pqDim/pqBits together; cuVS's IVF_PQ
+    index stores pq-encoded residualless codes per inverted list). Each
+    segment's IVF lists are re-encoded against the segment's existing PQ
+    codebook (navigation space), so a probed list costs ``n·pq_dim`` bytes
+    instead of ``n·4·dim`` — the read-volume shape that works at 100 TB."""
+
+    def enc(key, lists: pd.DataFrame, pqp: pd.DataFrame) -> pd.DataFrame:
+        cols = ["segment_id", "list_id", "n", "ext_ids", "codes"]
+        empty = pd.DataFrame({c: [] for c in cols}).astype(
+            {"segment_id": "int64", "list_id": "int32", "n": "int32",
+             "ext_ids": "object", "codes": "object"}
+        )
+        if lists.empty or pqp.empty:
+            return empty
+        r = pqp.iloc[0]
+        pq_dim, bits = int(r["pq_dim"]), int(r["pq_bits"])
+        dim = int(r["dim"])
+        sub = dim // pq_dim
+        books = np.frombuffer(r["codebook"], np.float32).reshape(
+            pq_dim, 1 << bits, sub
+        )
+        out = []
+        for lr in lists.itertuples():
+            x = np.frombuffer(lr.vectors, np.float32).reshape(int(lr.n), dim)
+            xn = _nav_vectors(x, metric)
+            codes = np.empty((int(lr.n), pq_dim), np.uint8)
+            for s_ in range(pq_dim):
+                xs = xn[:, s_ * sub : (s_ + 1) * sub].astype(np.float64)
+                cb = books[s_].astype(np.float64)
+                d = -2.0 * xs @ cb.T + (cb**2).sum(1)[None, :]
+                codes[:, s_] = d.argmin(1).astype(np.uint8)
+            out.append(
+                (int(lr.segment_id), int(lr.list_id), int(lr.n),
+                 lr.ext_ids, codes.tobytes())
+            )
+        if not out:
+            return empty
+        return pd.DataFrame(out, columns=cols)
+
+    return (
+        ivf_df.filter(F.col("list_id") >= 0)
+        .groupby("segment_id")
+        .cogroup(pq_df.groupby("segment_id"))
+        .applyInPandas(enc, IVFPQ_SCHEMA)
+    )
+
+
 def build_flat_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """One (segment_id, ext_id, vector) group → one packed flat-storage row
     (the Utils.createFloatMatrix dense-matrix analogue) — shared by the
@@ -244,6 +367,204 @@ def validate_vectors(df: DataFrame, vector_col: str, id_col: str, ann: AnnParams
         raise ValueError("multiple vectors per doc id (GPUFieldWriter.addValue guard)")
 
 
+# ---------------------------------------------------------------------------
+# Coarse scorers (executor side): approximate distance per vector of one
+# segment or list row, lower = closer; None when the format row is missing
+# ---------------------------------------------------------------------------
+
+
+def _sq_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+    """SQ: the index metric over the dequantized 7-bit codes. B11
+    round-trip: unsigned widening is the wire format the device sees, so
+    shift back before dequantizing."""
+    if r is None:
+        return None
+    codes = np.frombuffer(r.codes, np.int8).reshape(int(r.n_vecs), int(r.dim))
+    codes_i = (widen_unsigned(codes).astype(np.int16) - 64).astype(np.int8)
+    x_deq = scalar_dequantize(
+        codes_i, np.frombuffer(r.mins, np.float32), np.frombuffer(r.maxs, np.float32)
+    )
+    return -_scores(x_deq, ctx.q, ctx.metric)
+
+
+def _adc_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+    """PQ / IVF-PQ asymmetric distance: one (pq_dim × 2^bits) lookup table
+    of squared L2 from each navigation-space query subvector to every
+    centroid of its subspace, summed over each vector's codes."""
+    if r is None:
+        return None
+    pq_dim, bits = int(r.pq_dim), int(r.pq_bits)
+    sub = int(r.dim) // pq_dim
+    books = np.frombuffer(r.codebook, np.float32).reshape(pq_dim, 1 << bits, sub)
+    codes = np.frombuffer(r.codes, np.uint8).reshape(-1, pq_dim)
+    qsub = ctx.qn.astype(np.float64).reshape(pq_dim, sub)
+    lut = ((books.astype(np.float64) - qsub[:, None, :]) ** 2).sum(2)
+    return lut[np.arange(pq_dim)[None, :], codes].sum(1)
+
+
+def _bq_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+    """BQ: Hamming distance between the query's and each vector's sign
+    bits about the segment centroid (navigation space). A missing row is
+    recomputed from the flat vectors — binary quantization is a
+    deterministic function of them — so the segment keeps bit-identical
+    Hamming semantics."""
+    if r is None:
+        if x is None:
+            return None
+        codes, centroid = binary_quantize(_nav_vectors(x, ctx.metric))
+        centroid = centroid.astype(np.float64)
+    else:
+        codes = np.frombuffer(r.codes, np.uint8).reshape(int(r.n_vecs), -1)
+        # v2 writes the centroid as float64; v1 indexes wrote float32 —
+        # gate on blob length (dim*8 vs dim*4) so pre-v2 indexes open
+        raw = bytes(r.centroid)
+        if len(raw) == int(r.dim) * 8:
+            centroid = np.frombuffer(raw, np.float64)
+        else:
+            centroid = np.frombuffer(raw, np.float32).astype(np.float64)
+    qbits = np.packbits(ctx.qn.astype(np.float64) > centroid)
+    return np.unpackbits(codes ^ qbits[None, :], axis=1).sum(1)
+
+
+# ---------------------------------------------------------------------------
+# Format registry
+# ---------------------------------------------------------------------------
+
+
+class AnnFormat(NamedTuple):
+    """One derived vector format. ``rows(src, cfg, metric)`` builds the
+    rows for the segments ``src`` serves (``src(table)`` reads one of
+    ``inputs`` restricted to those segments); ``default`` formats are
+    written by every build, epoch and merge, the others are maintained
+    once built. ``keys`` order a full write (list-keyed tables prune the
+    probe's ``list_id IN`` scan by row-group statistics)."""
+
+    table: str
+    schema: str
+    rows: Callable[[Callable[[str], DataFrame], IndexConfig, str], DataFrame]
+    coarse: Callable | None = None
+    default: bool = False
+    inputs: tuple[str, ...] = ("ann_flat",)
+    keys: tuple[str, ...] = ()
+
+
+def _graph_format_rows(src, cfg: IndexConfig, metric: str) -> DataFrame:
+    from cuvs_lucene_spark.operators.ann_graph import _graph_rows  # imports this module
+
+    return _graph_rows(src("ann_flat"), cfg, metric=metric)
+
+
+FORMATS: dict[str, AnnFormat] = {
+    "sq": AnnFormat(
+        "ann_sq", SQ_SCHEMA,
+        lambda src, cfg, metric: _sq_rows(src("ann_flat"), metric),
+        _sq_coarse, default=True,
+    ),
+    "bq": AnnFormat(
+        "ann_bq", BQ_SCHEMA,
+        lambda src, cfg, metric: _bq_rows(src("ann_flat"), metric),
+        _bq_coarse, default=True,
+    ),
+    "ivf": AnnFormat(
+        "ann_ivf", IVF_SCHEMA,
+        lambda src, cfg, metric: _ivf_rows(src("ann_flat"), cfg.ann, metric),
+        default=True, keys=("segment_id", "list_id"),
+    ),
+    "graph": AnnFormat("ann_graph", GRAPH_SCHEMA, _graph_format_rows),
+    "pq": AnnFormat(
+        "ann_pq", PQ_SCHEMA,
+        lambda src, cfg, metric: _pq_rows(src("ann_flat"), cfg, metric),
+        _adc_coarse,
+    ),
+    "ivfpq": AnnFormat(
+        "ann_ivfpq", IVFPQ_SCHEMA,
+        lambda src, cfg, metric: _ivfpq_rows(src("ann_ivf"), src("ann_pq"), metric),
+        _adc_coarse, inputs=("ann_ivf", "ann_pq"), keys=("segment_id", "list_id"),
+    ),
+}
+
+
+def _index_metric(cat: IndexCatalog) -> str:
+    return cat.read_manifest().get("config", {}).get("ann_metric", "l2")
+
+
+def _write_format(spark: SparkSession, cat: IndexCatalog, fmt: AnnFormat,
+                  cfg: IndexConfig, src=None) -> None:
+    """Full (re)build of one format from the committed tables it derives
+    from (``src(table)``, default a fresh read). The write covers exactly
+    the append tags all its inputs cover (else ``_derived_in_sync`` would
+    read the tagless fresh entry as stale once flat carries epoch/merge
+    appends)."""
+    covers = set.intersection(*(_covered_tags(cat, t) for t in fmt.inputs))
+    cat.write(
+        fmt.rows(src or (lambda t: cat.read(spark, t)), cfg, _index_metric(cat)),
+        fmt.table,
+        sort_within_partitions=list(fmt.keys) or None,
+        extra_entry={"covers_tags": sorted(covers)},
+    )
+    cat.mark_stage(fmt.table)
+
+
+def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
+                    tag: str, extra_entry=lambda table: None) -> None:
+    """Append every maintained format's rows for the new segments ``src``
+    serves, under one shared tag (a streaming epoch or a merge
+    generation). Formats built from flat are mutually independent, so
+    their Spark jobs run concurrently from a driver thread pool (guide
+    §2.6; manifest commits serialize under the catalog lock); formats
+    built from other derived tables (IVF-PQ) follow once those are
+    committed. A crash leaves any subset of tables without the tag —
+    ``_derived_in_sync`` detects that per table."""
+    fmts = [
+        f for f in FORMATS.values()
+        if f.default or all(cat.exists(t) for t in (f.table, *f.inputs))
+    ]
+
+    def one(f: AnnFormat, src) -> None:
+        cat.append(f.rows(src, cfg, metric), f.table, tag=tag,
+                   extra_entry=extra_entry(f.table))
+
+    first = [f for f in fmts if f.inputs == ("ann_flat",)]
+    flat = src("ann_flat")  # one read shared by the pool (see build_ann)
+    with ThreadPoolExecutor(max_workers=len(first)) as pool:
+        for fut in [pool.submit(one, f, lambda t: flat) for f in first]:
+            fut.result()
+    for f in fmts:
+        if f not in first:
+            one(f, src)
+
+
+def _mark_bf_fallback(spark: SparkSession, cat: IndexCatalog) -> None:
+    """B2 bookkeeping on the ``ann_ivf`` stage, recomputed after every
+    build, epoch and merge: the segments with no IVF index (brute-forced
+    by every IVF search without re-deriving the set per query) and the
+    indexed-segment count (``probe_mode='auto'``'s driver→distributed
+    switch). Both collects are segment-count-sized manifest upkeep.
+    ``mark_stage`` replaces the stage dict, so other entries carry over."""
+    flat = {int(r[0]) for r in cat.read(spark, "ann_flat").select("segment_id").collect()}
+    ivf = {
+        int(r[0]) for r in cat.read(spark, "ann_ivf")
+        .filter(F.col("list_id") == -1).select("segment_id").collect()
+    }
+    stage = {
+        k: v for k, v in cat.read_manifest()["stages"].get("ann_ivf", {}).items()
+        if k not in ("status", "at")
+    }
+    stage.update(bf_fallback_segments=sorted(flat - ivf), n_ivf_segments=len(ivf))
+    cat.mark_stage("ann_ivf", **stage)
+
+
+def _check_index_metric(metric: str) -> None:
+    """MIP has no normalize-to-L2 reduction; derived structures (IVF/SQ/
+    PQ/graph) would rank wrong-metric. Exact scans (ann_topk
+    mode="exact", knn_join, exact_knn_expr) support dot directly."""
+    if metric == "dot":
+        raise ValueError(
+            "metric 'dot' is supported on exact scans only; build the "
+            "index with 'l2' or 'cosine'"
+        )
+
+
 def build_ann(
     spark: SparkSession,
     vectors: DataFrame,
@@ -253,17 +574,11 @@ def build_ann(
     vector_col: str = "vector",
     rows_per_segment: int | None = None,
 ) -> IndexCatalog:
-    """Build the ANN sidecar tables from (id, array<float>) rows."""
+    """Build the ANN sidecar tables (flat, ids and the default formats)
+    from (id, array<float>) rows."""
     cfg = cfg or IndexConfig()
     ann = cfg.ann
-    if ann.metric == "dot":
-        # MIP has no normalize-to-L2 reduction; derived structures (IVF/SQ/
-        # PQ/graph) would rank wrong-metric. Exact scans (ann_topk
-        # mode="exact", knn_join, exact_knn_expr) support dot directly.
-        raise ValueError(
-            "metric 'dot' is supported on exact scans only; build the "
-            "index with 'l2' or 'cosine'"
-        )
+    _check_index_metric(ann.metric)
     cat = IndexCatalog(index_root)
     validate_vectors(vectors, vector_col, id_col, ann)
     rps = rows_per_segment or cfg.rows_per_segment
@@ -287,15 +602,12 @@ def build_ann(
     cat.write(flat, "ann_flat")
     cat.mark_stage("ann_flat")
 
-    # derived stages read the committed flat blobs (merge reads flat only, M4)
-    flat_df = cat.read(spark, "ann_flat")
-
-    # the four remaining tables are mutually independent (ids derives
-    # from the input, sq/bq/ivf from the committed flat) — write them
-    # from a small driver thread pool so their Spark jobs overlap
-    # (guide §2.6): the build commit pays the SLOWEST write instead of
-    # the sum of four. Manifest commits serialize under the catalog's
-    # lock; each thread writes a distinct table.
+    # the remaining tables are mutually independent (ids derives from the
+    # input, the default formats from the committed flat — merge reads
+    # flat only, M4) — write them from a small driver thread pool so their
+    # Spark jobs overlap (guide §2.6): the build commit pays the SLOWEST
+    # write instead of the sum. Manifest commits serialize under the
+    # catalog's lock; each thread writes a distinct table.
     def _w_ids():
         # thin row-level (segment_id, ext_id) map — the DataFrame-filter
         # tier's join target (and the merge policy's id→segment resolver)
@@ -306,50 +618,23 @@ def build_ann(
         )
         cat.mark_stage("ann_ids")
 
-    def _w_sq():
-        cat.write(_sq_rows(flat_df, ann.metric), "ann_sq")
-        cat.mark_stage("ann_sq")
-
-    def _w_bq():
-        cat.write(_bq_rows(flat_df, ann.metric), "ann_bq")
-        cat.mark_stage("ann_bq")
-
-    def _w_ivf():
-        cat.write(
-            _ivf_rows(flat_df, ann, ann.metric),
-            "ann_ivf",
-            sort_within_partitions=["segment_id", "list_id"],
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for f in [pool.submit(fn) for fn in (_w_ids, _w_sq, _w_bq, _w_ivf)]:
+    # one flat read shared by the pool (concurrent first reads would each
+    # infer the parquet schema)
+    flat_df = cat.read(spark, "ann_flat")
+    jobs = [_w_ids] + [
+        (lambda f=f: _write_format(spark, cat, f, cfg, lambda t: flat_df))
+        for f in FORMATS.values() if f.default
+    ]
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        for f in [pool.submit(fn) for fn in jobs]:
             f.result()
-    # segments below min_ann_index_size emit no IVF rows; record them so the
-    # IVF search path can brute-force exactly those (B2 per-leaf fallback)
-    # without re-deriving the set per query
-    ivf_segs = {
-        r["segment_id"]
-        for r in cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1)
-        .select("segment_id")
-        .collect()
-    }
-    flat_segs = {
-        r["segment_id"] for r in flat_df.select("segment_id").collect()
-    }
-    cat.mark_stage(
-        "ann_ivf",
-        bf_fallback_segments=sorted(int(s) for s in flat_segs - ivf_segs),
-        n_ivf_segments=len(ivf_segs),
-    )
+    _mark_bf_fallback(spark, cat)
     cat.mark_stage("ann_build")
     return cat
 
 
 # ---------------------------------------------------------------------------
-# Search
+# Search: acceptDocs (filters and tombstones)
 # ---------------------------------------------------------------------------
 
 
@@ -364,6 +649,13 @@ def _sorted_ids(ids) -> np.ndarray | None:
 
 FILTER_BROADCAST_MAX = 200_000  # DataFrame filters above this resolve to
                                 # per-segment packed blobs, never a driver set
+FILTER_MODES = ("auto", "broadcast", "df")
+
+
+def _check_choice(name: str, value: str, allowed: tuple) -> None:
+    """Reject an unknown mode string instead of silently running a default."""
+    if value not in allowed:
+        raise ValueError(f"unknown {name} {value!r}; expected one of {allowed}")
 
 
 def _derived_in_sync(cat: IndexCatalog, table: str) -> bool:
@@ -439,28 +731,31 @@ def _ann_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
         return ids
 
 
-def _filter_blobs(spark: SparkSession, cat: IndexCatalog, fdf: DataFrame) -> DataFrame:
-    """Per-segment packed allowed-set blobs (sorted int64 ext_ids) resolved
-    EXECUTOR-side from the ann_ids map — the bm25 large-filter tier
-    (bm25._aux_df) applied to the ANN paths. Matches the reference's
-    acceptDocs contract: the filter bits derive from the index per leaf,
-    they are never shipped from the caller
-    (``GPUKnnFloatVectorQuery.java:43-51``). Segments with no allowed id
-    produce no blob row, so an inner join prunes them from the scan."""
+def _filter_blobs(spark: SparkSession, cat: IndexCatalog, ids: DataFrame,
+                  col: str = "allowed") -> DataFrame:
+    """Per-segment packed blobs (sorted int64 ext_ids) of the indexed ids
+    in ``ids``, resolved EXECUTOR-side through the thin ``ann_ids`` map —
+    the large-set transport of both acceptDocs inputs, the bm25 large-filter
+    tier (bm25._aux_df) applied to the ANN paths. ``allowed``: the query
+    filter's bits derive from the index per leaf, never shipped from the
+    caller (``GPUKnnFloatVectorQuery.java:43-51``). ``tomb``: deletes are
+    leaf-local liveDocs bits, never a global driver array
+    (``TestCuVSDeletedDocuments.java:83``). Segments with no such id
+    produce no row (see :func:`_attach_aux` for how each joins)."""
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame(
             {
                 "segment_id": [int(pdf["segment_id"].iloc[0])],
-                "allowed": [np.sort(pdf["ext_id"].to_numpy(np.int64)).tobytes()],
+                col: [np.sort(pdf["ext_id"].to_numpy(np.int64)).tobytes()],
             }
         )
 
     return (
         _ann_ids(spark, cat)
-        .join(fdf, "ext_id", "left_semi")
+        .join(ids, "ext_id", "left_semi")
         .groupBy("segment_id")
-        .applyInPandas(pack, "segment_id long, allowed binary")
+        .applyInPandas(pack, f"segment_id long, {col} binary")
     )
 
 
@@ -477,6 +772,7 @@ def _resolve_filter(
     a DataFrame above ``FILTER_BROADCAST_MAX`` ids (``filter_mode``:
     ``auto`` probes the size with one limit(N+1) collect, ``broadcast`` /
     ``df`` force a tier)."""
+    _check_choice("filter_mode", filter_mode, FILTER_MODES)
     if filter_ext_ids is None:
         return None, None
     if not isinstance(filter_ext_ids, DataFrame):
@@ -496,13 +792,12 @@ def _resolve_filter(
     return np.sort(np.array([r[0] for r in head], dtype=np.int64)), None
 
 
-def _blob_allowed(frame: pd.DataFrame, row) -> np.ndarray | None:
-    """Per-segment allowed ids from the joined blob column (if the blob
-    tier is active for this query), else None."""
-    if "allowed" not in frame.columns:
+def _blob(frame: pd.DataFrame, row, col: str) -> np.ndarray | None:
+    """Per-segment sorted ids from a joined blob column (``allowed`` /
+    ``tomb``) when that blob tier is active for this query, else None."""
+    if col not in frame.columns or getattr(row, col) is None:
         return None
-    blob = row["allowed"] if isinstance(row, pd.Series) else row.allowed
-    return None if blob is None else np.frombuffer(blob, np.int64)
+    return np.frombuffer(getattr(row, col), np.int64)
 
 
 def _member_mask(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
@@ -531,15 +826,6 @@ def _accept_mask(
     return m
 
 
-def _blob_tomb(frame: pd.DataFrame, row) -> np.ndarray | None:
-    """Per-segment tombstone ids from the joined ``tomb`` blob column (if
-    the blob tombstone tier is active), else None."""
-    if "tomb" not in frame.columns:
-        return None
-    blob = row["tomb"] if isinstance(row, pd.Series) else row.tomb
-    return None if blob is None else np.frombuffer(blob, np.int64)
-
-
 def _row_accept(frame: pd.DataFrame, row, ids: np.ndarray,
                 allowed: np.ndarray | None, tomb: np.ndarray | None):
     """acceptDocs for one segment row under BOTH two-tier transports:
@@ -547,8 +833,8 @@ def _row_accept(frame: pd.DataFrame, row, ids: np.ndarray,
     ``tomb`` columns joined onto the scan) when large."""
     return _accept_mask(
         ids,
-        allowed if allowed is not None else _blob_allowed(frame, row),
-        tomb if tomb is not None else _blob_tomb(frame, row),
+        allowed if allowed is not None else _blob(frame, row, "allowed"),
+        tomb if tomb is not None else _blob(frame, row, "tomb"),
     )
 
 
@@ -656,6 +942,12 @@ def delete_ann(
     return n
 
 
+def _manifest_version(cat: IndexCatalog) -> float:
+    """Latest table commit time — the key of the per-catalog query memos."""
+    tables = cat.read_manifest()["tables"].values()
+    return max((e.get("committed_at", 0) for e in tables), default=0)
+
+
 def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | None:
     """Sorted tombstoned ext_ids (None when empty), memoized per manifest
     version — the CLOSURE tier, used only when the registered count is at
@@ -665,8 +957,7 @@ def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | Non
         return None
     if cat.table_lineage("ann_tombstones").get("n") == 0:
         return None
-    m = cat.read_manifest()
-    ver = max((e.get("committed_at", 0) for e in m["tables"].values()), default=0)
+    ver = _manifest_version(cat)
     memo = getattr(cat, "_ann_tomb_memo", None)
     if memo is not None and memo["ver"] == ver:
         return memo["arr"]
@@ -677,30 +968,6 @@ def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | Non
     arr = arr if arr.size else None
     cat._ann_tomb_memo = {"ver": ver, "arr": arr}
     return arr
-
-
-def _tombstone_blobs(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
-    """Per-segment packed tombstone blobs (sorted int64), resolved
-    EXECUTOR-side through the thin ``ann_ids`` map — the same large-set
-    transport as ``_filter_blobs``, mirroring the per-segment liveDocs
-    model (``TestCuVSDeletedDocuments.java:83``: deletes are leaf-local
-    bits, never a global driver array). Segments with no tombstoned id
-    produce no row; callers LEFT-join so untombed segments still scan."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "segment_id": [int(pdf["segment_id"].iloc[0])],
-                "tomb": [np.sort(pdf["ext_id"].to_numpy(np.int64)).tobytes()],
-            }
-        )
-
-    return (
-        _ann_ids(spark, cat)
-        .join(cat.read(spark, "ann_tombstones"), "ext_id", "left_semi")
-        .groupBy("segment_id")
-        .applyInPandas(pack, "segment_id long, tomb binary")
-    )
 
 
 def _resolve_tombstones(
@@ -717,12 +984,10 @@ def _resolve_tombstones(
     if n == 0:
         return None, None
     if n is not None and n > FILTER_BROADCAST_MAX:
-        return None, _tombstone_blobs(spark, cat)
+        return None, _filter_blobs(
+            spark, cat, cat.read(spark, "ann_tombstones"), "tomb"
+        )
     return _tombstone_array(spark, cat), None
-
-
-# back-compat alias (closure tier only) for external callers/tests
-_ann_tombstones = _tombstone_array
 
 
 def _scores(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
@@ -744,170 +1009,291 @@ def _scores(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
     raise ValueError(metric)
 
 
-def ann_topk(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    query: list[float] | np.ndarray,
-    k: int = 10,
-    metric: str = "l2",
-    cfg: IndexConfig | None = None,
-    mode: str = "auto",
-    nprobe: int | None = None,
-    filter_ext_ids=None,
-    probe_mode: str = "auto",
-    filter_mode: str = "auto",
-) -> DataFrame:
-    """Top-k nearest vectors → DataFrame(ext_id, score), score desc.
+# ---------------------------------------------------------------------------
+# Search kernels (numpy, one segment or IVF list at a time, Spark-free)
+# ---------------------------------------------------------------------------
 
-    ``filter_ext_ids`` accepts a set / array (closure fast path) or a
-    DataFrame of ids — large DataFrame filters resolve to per-segment
-    packed blobs executor-side (``_resolve_filter``), never a driver set.
 
-    ``mode``: ``exact`` (brute force, S4), ``ivf`` (coarse probe, S3), or
-    ``auto`` (S1 routing: IVF when available and k ≤ max_k_ann).
+def _top_order(ids: np.ndarray, key: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the ``k`` smallest ``key`` values, ties broken by the
+    lower ext_id — ``lexsort((ids, key))[:k]``, after an O(n) partition
+    to the k-th value (every tie at the cut survives it)."""
+    cand = np.arange(key.size)
+    if key.size > k:
+        cand = np.flatnonzero(~(key > np.partition(key, k - 1)[k - 1]))
+    return cand[np.lexsort((ids[cand], key[cand]))[:k]]
 
-    IVF probing is two small jobs, not one full-table pass: (1) scan ONLY
-    the centroid rows (``list_id = -1`` — pushed to the parquet scan, the
-    blob column of list rows is never read) and rank lists per segment;
-    (2) scan ``ann_ivf`` restricted to the probed (segment_id, list_id)
-    pairs, scoring each selected list row independently (no shuffle).
-    Segments too small to have an IVF index (B2 fallback) are brute-forced
-    from ``ann_flat`` via the build-time ``bf_fallback_segments`` manifest
-    list and unioned in — every vector is reachable in every mode, like
-    the reference's per-leaf routing.
 
-    ``probe_mode`` picks where step (1) ranks lists:
+def _exact_topk(x: np.ndarray, ids: np.ndarray, q: np.ndarray, metric: str,
+                k: int, accept: np.ndarray | None = None):
+    """Exact top-k of one segment or list → (ext_ids, scores), best first:
+    the accepted vectors scored under ``metric`` (S4)."""
+    if accept is not None:
+        x, ids = x[accept], ids[accept]
+    s = _scores(x, q, metric)
+    o = _top_order(ids, -s, k)
+    return ids[o], s[o]
 
-    - ``driver`` — centroid rows are collected ONCE (memoized per manifest
-      version) into a flat numpy pack; per query the ranking is ONE
-      vectorized pass over the concatenated centroid matrix (no Python
-      loop over segments), and the probed pairs reach the list scan as a
-      pushed ``list_id IN`` filter + broadcast semi-join. Latency-optimal;
-      driver memory ∝ total centroids.
-    - ``distributed`` — the ranking runs inside a ``mapInPandas`` over the
-      pruned centroid scan and the pairs join the list rows as a
-      left-semi (AQE picks broadcast vs shuffled hash by pair count). NO
-      driver-side state grows with segment count — the 10⁶-segment path.
-    - ``auto`` — ``driver`` while the build-time segment count is at most
-      ``PROBE_DRIVER_MAX_SEGMENTS``, else ``distributed``.
-    """
-    cfg = cfg or IndexConfig()
-    ann = cfg.ann
-    q = np.asarray(query, dtype=np.float32)
-    qn = _nav_query(q, metric)  # navigation-space query (unit for cosine)
-    if k <= 0:
-        return spark.createDataFrame([], "ext_id long, score double")  # S9
-    use_ivf = mode == "ivf" or (mode == "auto" and k <= ann.max_k_ann and cat.exists("ann_ivf"))
-    if mode == "exact":
-        use_ivf = False
-    if use_ivf:
-        # similarity-function mismatch guard for derived structures
-        # (CuVS2510GPUVectorsReader.java:247-255): IVF lists are clustered
-        # under the build metric; probing them under another is an error.
-        # Exact mode scores raw flat vectors, which support any metric.
-        _validate_metric(cat, metric)
-    eff_k = k
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    if allowed is not None:
-        eff_k = min(k + cfg.overfetch, allowed.size)  # S2 widening
-    elif fblobs is not None:
-        eff_k = k + cfg.overfetch  # blob tier: widen without a global count
 
-    def _apply_filter(frame, row, ids: np.ndarray, s: np.ndarray):
-        m = _row_accept(frame, row, ids, allowed, tomb)
-        if m is None:
-            return ids, s
-        return ids[m], s[m]
+def _coarse_cut(ids: np.ndarray, approx: np.ndarray, m: int,
+                accept: np.ndarray | None = None,
+                budget: int | None = None) -> np.ndarray:
+    """Positions of the ``m`` coarse-closest accepted vectors of one leaf,
+    scoring at most ``budget`` of them (the first in ext_id order)."""
+    ok = np.arange(ids.size) if accept is None else np.flatnonzero(accept)
+    if budget is not None:
+        ok = ok[:budget]
+    return ok[_top_order(ids[ok], approx[ok], m)]
 
-    def scan(it):
-        # brute-force per-segment scan over the flat storage (S4)
-        for pdf in it:
-            for r in pdf.itertuples():
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                ids = np.frombuffer(r.ext_ids, np.int64)
-                ids, s = _apply_filter(pdf, r, ids, _scores(x, q, metric))
-                if ids.size == 0:
-                    continue
-                top = np.argsort(-s, kind="stable")[:eff_k]
-                yield pd.DataFrame(
-                    {"segment_id": r.segment_id, "ext_id": ids[top], "score": s[top]}
-                )
 
-    if use_ivf and not cat.exists("ann_ivf"):
-        use_ivf = False
-    if use_ivf:
-        dim = q.size
-        sel = _probe_select(
-            spark, cat,
-            cat.read(spark, "ann_ivf").filter(F.col("list_id") >= 0),
-            qn, nprobe, probe_mode,
-        )
-        if sel is not None and not _derived_in_sync(cat, "ann_ivf"):
-            # stale ann_ivf (crash between merge appends) may still carry
-            # the merged-AWAY segments' lists — anchoring on live flat
-            # segments prevents those from emitting duplicate results
-            # (the cogrouped formats are flat-anchored by construction)
-            sel = sel.join(
-                cat.read(spark, "ann_flat").select("segment_id"),
-                "segment_id", "left_semi",
-            )
-        if sel is None:
-            use_ivf = False
-    if use_ivf and sel is not None:
+def _rerank_topk(x: np.ndarray, ids: np.ndarray, q: np.ndarray, metric: str,
+                 k: int, approx: np.ndarray, m: int,
+                 accept: np.ndarray | None = None, budget: int | None = None):
+    """Coarse cut to ``m`` candidates, then their exact top-k from the raw
+    vectors → (ext_ids, scores) (the quantized formats' rescoring, which
+    Lucene's quantized readers delegate to the flat storage)."""
+    cand = _coarse_cut(ids, approx, m, accept, budget)
+    return _exact_topk(x[cand], ids[cand], q, metric, k)
 
-        def score_lists(it):
-            for pdf in it:
-                for r in pdf.itertuples():
-                    x = np.frombuffer(r.vectors, np.float32).reshape(r.n, dim)
-                    ids = np.frombuffer(r.ext_ids, np.int64)
-                    ids, s = _apply_filter(pdf, r, ids, _scores(x, q, metric))
-                    if ids.size == 0:
-                        continue
-                    top = np.argsort(-s, kind="stable")[:eff_k]
-                    yield pd.DataFrame(
-                        {"segment_id": r.segment_id, "ext_id": ids[top], "score": s[top]}
-                    )
 
-        # blob tiers ride the list rows (filter inner-joins — segments with
-        # zero allowed ids are pruned before scoring; tombstones left-join)
-        sel = _attach_aux(sel, fblobs, tblobs)
-        partials = sel.mapInPandas(score_lists, TOPK_SCHEMA)
-        # B2 degradation ladder: segments with no IVF index are brute-forced
-        bf_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
-            "bf_fallback_segments"
-        )
-        if not _derived_in_sync(cat, "ann_ivf"):
-            # a crash between the flat append and the ann_ivf append (or
-            # its stage recompute) leaves the manifest list stale — fall
-            # through to the anti-join derivation so the new segments'
-            # vectors stay reachable (same contract as bq/ivfpq healing)
-            bf_segs = None
-        flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-        if bf_segs is None:
-            # pre-v2 index without the manifest list: derive it with an anti-join
-            ivf_seg_df = (
-                cat.read(spark, "ann_ivf")
-                .filter(F.col("list_id") == -1)
-                .select("segment_id")
-            )
-            missing = flat.join(ivf_seg_df, "segment_id", "left_anti")
-            partials = partials.unionByName(missing.mapInPandas(scan, TOPK_SCHEMA))
-        elif bf_segs:
-            missing = flat.filter(F.col("segment_id").isin(list(bf_segs)))
-            partials = partials.unionByName(missing.mapInPandas(scan, TOPK_SCHEMA))
-    else:
-        flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-        partials = flat.mapInPandas(scan, TOPK_SCHEMA)
+# ---------------------------------------------------------------------------
+# Search driver
+# ---------------------------------------------------------------------------
 
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
+
+class _Query(NamedTuple):
+    """The executor-side half of one search: raw and navigation-space
+    query, metric, k, the closure tier of acceptDocs and the visit budget."""
+
+    q: np.ndarray
+    qn: np.ndarray
+    metric: str
+    k: int
+    allowed: np.ndarray | None
+    tomb: np.ndarray | None
+    budget: int | None
+
+    def accept(self, frame: pd.DataFrame, row, ids: np.ndarray) -> np.ndarray | None:
+        return _row_accept(frame, row, ids, self.allowed, self.tomb)
+
+    def vectors(self, row, ids: np.ndarray) -> np.ndarray:
+        return np.frombuffer(row.vectors, np.float32).reshape(ids.size, self.q.size)
+
+
+def _partial(seg, ids: np.ndarray, vals: np.ndarray, value: str = "score") -> pd.DataFrame:
+    return pd.DataFrame(
+        {"segment_id": np.full(ids.size, seg, np.int64), "ext_id": ids, value: vals}
     )
 
 
+def _scan_exact(ctx: _Query):
+    """``mapInPandas`` kernel: exact top-k of every flat segment or IVF
+    list row."""
+
+    def scan(it):
+        for pdf in it:
+            for r in pdf.itertuples(index=False):
+                ids = np.frombuffer(r.ext_ids, np.int64)
+                top, s = _exact_topk(
+                    ctx.vectors(r, ids), ids, ctx.q, ctx.metric, ctx.k,
+                    ctx.accept(pdf, r, ids),
+                )
+                if top.size:
+                    yield _partial(r.segment_id, top, s)
+
+    return scan
+
+
+def _segment_kernel(ctx: _Query, segment, value: str):
+    """``applyInPandas`` kernel of a format table cogrouped with flat, one
+    segment per call. ``segment(rows, x, ids, accept)`` is the format's
+    per-leaf search → (ext_ids, values), or None when the leaf has no
+    format row — then the exact scan keeps it reachable (B2). Format rows
+    of merged-away segments have no flat row and are skipped."""
+    dtype = np.float64 if value == "score" else np.int32
+
+    def scan(key, rows: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
+        out = None
+        if not fp.empty:
+            fr = next(fp.itertuples(index=False))
+            ids = np.frombuffer(fr.ext_ids, np.int64)
+            x = ctx.vectors(fr, ids) if "vectors" in fp.columns else None
+            accept = ctx.accept(fp, fr, ids)
+            out = segment(rows, x, ids, accept)
+            if out is None and x is not None:  # (BQ's id-only projection has no x)
+                out = _exact_topk(x, ids, ctx.q, ctx.metric, ctx.k, accept)
+        if out is None:
+            return _partial(0, np.empty(0, np.int64), np.empty(0, dtype), value)
+        return _partial(fr.segment_id, out[0], out[1].astype(dtype), value)
+
+    return scan
+
+
+class _Search:
+    """Driver side of one resolved single-query search (see
+    :func:`_search`): the plan pieces every format shares."""
+
+    def __init__(self, spark, cat, ctx: _Query, fblobs, tblobs):
+        self.spark, self.cat, self.ctx = spark, cat, ctx
+        self.fblobs, self.tblobs = fblobs, tblobs
+
+    def aux(self, df: DataFrame) -> DataFrame:
+        """Ride the per-segment acceptDocs blobs (if any) on a scan."""
+        return _attach_aux(df, self.fblobs, self.tblobs)
+
+    def flat(self, *cols: str) -> DataFrame:
+        df = self.cat.read(self.spark, "ann_flat")
+        return self.aux(df.select(*cols) if cols else df)
+
+    def exact(self, rows: DataFrame) -> DataFrame:
+        """Exact per-row top-k partials of flat or IVF list rows."""
+        return rows.mapInPandas(_scan_exact(self.ctx), TOPK_SCHEMA)
+
+    def with_fallback(self, partials: DataFrame, covering=("ann_ivf",)) -> DataFrame:
+        """``partials`` plus the exact scan of the segments that have no
+        index rows in ``covering`` (B2)."""
+        bf = _bf_fallback(self.spark, self.cat, self.flat(), covering)
+        return partials if bf is None else partials.unionByName(self.exact(bf))
+
+    def cogroup(self, fmt_rows: DataFrame, segment, value: str = "score",
+                flat_cols: tuple = ()) -> DataFrame:
+        """One cogroup of per-segment format rows with flat, running
+        ``segment`` per leaf (see :func:`_segment_kernel`)."""
+        dtype = "double" if value == "score" else "int"
+        return (
+            fmt_rows.groupby("segment_id")
+            .cogroup(self.flat(*flat_cols).groupby("segment_id"))
+            .applyInPandas(
+                _segment_kernel(self.ctx, segment, value),
+                f"segment_id long, ext_id long, {value} {dtype}",
+            )
+        )
+
+    def coarse(self, fmt: AnnFormat, rerank_factor: int | None,
+               flat_cols: tuple = ()) -> DataFrame:
+        """Coarse cut over ``fmt``'s codes, cogrouped with flat. With a
+        rerank factor, the ``k · factor`` coarse-best per leaf are
+        rescored exactly; without one, the coarse distances are the
+        result (BQ's Hamming search)."""
+        ctx, coarse = self.ctx, fmt.coarse
+        m = ctx.k * max(1, rerank_factor or 1)
+
+        def segment(rows, x, ids, accept):
+            approx = coarse(next(rows.itertuples(index=False), None), ctx, x)
+            if approx is None:
+                return None
+            if rerank_factor is None:
+                cut = _coarse_cut(ids, approx, m, accept, ctx.budget)
+                return ids[cut], approx[cut]
+            return _rerank_topk(
+                x, ids, ctx.q, ctx.metric, ctx.k, approx, m, accept, ctx.budget
+            )
+
+        value = "score" if rerank_factor is not None else "hamming"
+        return self.cogroup(
+            self.cat.read(self.spark, fmt.table), segment, value, flat_cols
+        )
+
+    def top(self, partials: DataFrame, value: str = "score") -> DataFrame:
+        """Global top-k of the per-segment partials (same tie rule)."""
+        order = F.desc(value) if value == "score" else F.asc(value)
+        return (
+            partials.orderBy(order, F.asc("ext_id"))
+            .limit(self.ctx.k)
+            .select("ext_id", value)
+        )
+
+
+def _search(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    query,
+    k: int,
+    filter_ext_ids,
+    filter_mode: str,
+    plan: Callable[[_Search], DataFrame],
+    visited_limit: int | None = None,
+    metric: str | None = None,
+    value: str = "score",
+) -> DataFrame:
+    """The single-query search driver every ANN format runs under.
+
+    Resolves the query once: the metric (the index's build metric unless
+    the caller's exact scan names one), the raw and navigation-space
+    query, the acceptDocs PRE-filter (``filter_ext_ids`` and the
+    tombstones, two-tier: closure arrays when small, per-segment blobs
+    joined onto the scans when large), and the per-leaf visit budget.
+    ``k <= 0`` returns the empty frame (S9). ``plan`` then builds the
+    format's per-segment partials from the :class:`_Search` pieces and
+    returns their global top-k → (ext_id, ``value``)."""
+    metric = metric or _index_metric(cat)
+    q = np.asarray(query, dtype=np.float32)
+    if k <= 0:
+        dtype = "double" if value == "score" else "int"
+        return spark.createDataFrame([], f"ext_id long, {value} {dtype}")
+    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
+    tomb, tblobs = _resolve_tombstones(spark, cat)
+    budget = None if visited_limit is None else max(1, int(visited_limit))
+    ctx = _Query(q, _nav_query(q, metric), metric, k, allowed, tomb, budget)
+    return plan(_Search(spark, cat, ctx, fblobs, tblobs))
+
+
+def _listed_bf_segments(cat: IndexCatalog, covering=("ann_ivf",)) -> list[int] | None:
+    """The build-time B2 list (segments with no IVF index), or None when
+    it cannot be trusted: a ``covering`` table out of sync with flat (a
+    crash between a merge's appends) or a pre-v2 index without the list."""
+    if not all(_derived_in_sync(cat, t) for t in covering):
+        return None
+    segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("bf_fallback_segments")
+    return None if segs is None else [int(s) for s in segs]
+
+
+def _bf_fallback(spark: SparkSession, cat: IndexCatalog, flat: DataFrame,
+                 covering=("ann_ivf",)) -> DataFrame | None:
+    """B2 degradation ladder: the rows of ``flat`` whose segments have no
+    rows in every ``covering`` table (None when there are none). The
+    manifest list serves the healthy path; otherwise the covered set is
+    derived with an anti-join, so a stale list can never silently drop
+    the new segments' vectors."""
+    segs = _listed_bf_segments(cat, covering)
+    if segs is not None:
+        return flat.filter(F.col("segment_id").isin(segs)) if segs else None
+    covered = None
+    for t in covering:
+        if not cat.exists(t):
+            return flat
+        s = cat.read(spark, t).select("segment_id")
+        covered = s if covered is None else covered.join(s, "segment_id", "left_semi")
+    return flat.join(covered, "segment_id", "left_anti")
+
+
+def _live_lists(spark: SparkSession, cat: IndexCatalog, lists: DataFrame) -> DataFrame:
+    """A stale ``ann_ivf`` (crash between a merge's appends) may still
+    carry the merged-AWAY segments' lists; anchoring on the live flat
+    segments keeps those from emitting duplicate results (the cogrouped
+    formats are flat-anchored by construction)."""
+    if _derived_in_sync(cat, "ann_ivf"):
+        return lists
+    return lists.join(
+        cat.read(spark, "ann_flat").select("segment_id"), "segment_id", "left_semi"
+    )
+
+
+# ---------------------------------------------------------------------------
+# IVF probe
+# ---------------------------------------------------------------------------
+
 PROBE_DRIVER_MAX_SEGMENTS = 4096  # above this, probe ranking leaves the driver
+PROBE_MODES = ("auto", "driver", "distributed", "shuffle")
+
+
+def _default_nprobe(r, dim: int) -> int:
+    """The reference n_probes heuristic for one centroid row: ``n`` lists,
+    ``ext_ids`` carrying the segment's vector count (absent on pre-v2
+    rows, which assume 2000 vectors per list)."""
+    n_lists = int(r.n)
+    n_total = int(np.frombuffer(r.ext_ids, np.int64)[0]) if r.ext_ids else n_lists * 2000
+    return max(1, min(n_lists, ivf_pq_params(n_total, dim)["n_probes"]))
 
 
 def _probe_select(
@@ -927,8 +1313,7 @@ def _probe_select(
     ``PROBE_DRIVER_MAX_SEGMENTS``. Returns None when no segment has an
     IVF index (caller falls back to brute force)."""
     dim = int(qn.size)
-    if probe_mode not in ("auto", "driver", "distributed", "shuffle"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
+    _check_choice("probe_mode", probe_mode, PROBE_MODES)
     n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
         "n_ivf_segments"
     )
@@ -943,25 +1328,15 @@ def _probe_select(
         and n_segs > PROBE_DRIVER_MAX_SEGMENTS
     )
     if distributed:
-        fixed_npb = nprobe
 
         def probe(it):
             for pdf in it:
-                for r in pdf.itertuples():
-                    n_lists = int(r.n)
-                    cents = np.frombuffer(r.vectors, np.float32).reshape(n_lists, dim)
-                    raw = r.ext_ids
-                    n_total = (
-                        int(np.frombuffer(raw, np.int64)[0])
-                        if raw else n_lists * 2000
-                    )
-                    npb = fixed_npb or max(
-                        1, min(n_lists, ivf_pq_params(n_total, dim)["n_probes"])
-                    )
+                for r in pdf.itertuples(index=False):
+                    cents = np.frombuffer(r.vectors, np.float32).reshape(int(r.n), dim)
                     cd = (
                         (cents.astype(np.float64) - qn.astype(np.float64)[None, :]) ** 2
                     ).sum(1)
-                    take = np.argsort(cd, kind="stable")[:npb]
+                    take = np.argsort(cd, kind="stable")[: nprobe or _default_nprobe(r, dim)]
                     yield pd.DataFrame(
                         {"segment_id": r.segment_id,
                          "list_id": take.astype(np.int32)}
@@ -1007,19 +1382,17 @@ def _probe_select(
 
 
 def _centroid_pack(spark: SparkSession, cat: IndexCatalog) -> dict | None:
-    """Flat numpy pack of every segment's centroids for the vectorized
-    driver-side probe: C (ΣL, dim) float32, row-aligned seg_row / lst_row /
-    n_lists_row / npb_row (default n_probes per the reference heuristic).
+    """Flat numpy pack of every segment's centroids — the ONE driver-side
+    centroid state, shared by the single-query probe and
+    :func:`knn_join_ivf`'s driver tier (budget: one pack ∝ total
+    centroids): C (ΣL, dim) float32 and row-aligned seg_row / lst_row /
+    n_lists_row / npb_row (default n_probes per the reference heuristic);
+    each segment's rows are contiguous, starting at ``lst_row == 0``.
     Memoized per manifest version. None when no segment has an IVF index."""
-    m = cat.read_manifest()
-    ver = max((e.get("committed_at", 0) for e in m["tables"].values()), default=0)
+    ver = _manifest_version(cat)
     memo = getattr(cat, "_centroid_pack_memo", None)
     if memo is not None and memo["ver"] == ver:
         return memo["pack"]
-    # collect WITHOUT the _centroid_rows memo: the pack copies the blobs
-    # into its own contiguous matrix, so also retaining the raw Row list
-    # would double the driver's centroid residency (the driver-mode
-    # memory budget is 'one pack ∝ total centroids', not two)
     rows = (
         cat.read(spark, "ann_ivf")
         .filter(F.col("list_id") == -1)
@@ -1028,71 +1401,19 @@ def _centroid_pack(spark: SparkSession, cat: IndexCatalog) -> dict | None:
     )
     pack = None
     if rows:
-        mats, segs, lsts, nls, npbs = [], [], [], [], []
-        for r in rows:
-            n_lists = int(r["n"])
-            cents = np.frombuffer(r["vectors"], np.float32).reshape(n_lists, -1)
-            raw = r["ext_ids"]
-            n_total = (
-                int(np.frombuffer(raw, np.int64)[0]) if raw else n_lists * 2000
-            )
-            npb = max(
-                1, min(n_lists, ivf_pq_params(n_total, cents.shape[1])["n_probes"])
-            )
-            mats.append(cents)
-            segs.append(np.full(n_lists, int(r["segment_id"]), np.int64))
-            lsts.append(np.arange(n_lists, dtype=np.int32))
-            nls.append(np.full(n_lists, n_lists, np.int32))
-            npbs.append(np.full(n_lists, npb, np.int32))
+        mats = [np.frombuffer(r.vectors, np.float32).reshape(int(r.n), -1) for r in rows]
+        n_lists = np.array([int(r.n) for r in rows])
         pack = {
             "C": np.concatenate(mats),
-            "seg_row": np.concatenate(segs),
-            "lst_row": np.concatenate(lsts),
-            "n_lists_row": np.concatenate(nls),
-            "npb_row": np.concatenate(npbs),
+            "seg_row": np.repeat([int(r.segment_id) for r in rows], n_lists).astype(np.int64),
+            "lst_row": np.concatenate([np.arange(n, dtype=np.int32) for n in n_lists]),
+            "n_lists_row": np.repeat(n_lists, n_lists).astype(np.int32),
+            "npb_row": np.repeat(
+                [_default_nprobe(r, c.shape[1]) for r, c in zip(rows, mats)], n_lists
+            ).astype(np.int32),
         }
     cat._centroid_pack_memo = {"ver": ver, "pack": pack}
     return pack
-
-
-def _centroid_rows(spark: SparkSession, cat: IndexCatalog) -> list:
-    """Collected IVF centroid rows, memoized on the catalog keyed by the
-    manifest commit time (same pattern as the norms broadcast)."""
-    m = cat.read_manifest()
-    ver = max((e.get("committed_at", 0) for e in m["tables"].values()), default=0)
-    memo = getattr(cat, "_centroid_memo", None)
-    if memo is not None and memo["ver"] == ver:
-        return memo["rows"]
-    rows = (
-        cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1)
-        .select("segment_id", "n", "ext_ids", "vectors")
-        .collect()
-    )
-    cat._centroid_memo = {"ver": ver, "rows": rows}
-    return rows
-
-
-def _exact_segment_scan(fp, fr, q, metric, allowed, tomb, k):
-    """Exact per-segment scan from the flat row — the B2 fallback a derived
-    search path takes when its sidecar row is MISSING for a segment (a
-    crash between a merge's flat append and its derived appends, or any
-    partially-rebuilt state): the segment's vectors stay reachable, like
-    the graph path's bf branch, instead of silently dropping from results.
-    Returns None when nothing is accepted."""
-    n, dim = int(fr["n_vecs"]), int(fr["dim"])
-    x = np.frombuffer(fr["vectors"], np.float32).reshape(n, dim)
-    ids = np.frombuffer(fr["ext_ids"], np.int64)
-    m = _row_accept(fp, fr, ids, allowed, tomb)
-    if m is not None:
-        ids, x = ids[m], x[m]
-    if ids.size == 0:
-        return None
-    s = _scores(x, q, metric)
-    top = np.argsort(-s, kind="stable")[:k]
-    return pd.DataFrame(
-        {"segment_id": int(fr["segment_id"]), "ext_id": ids[top], "score": s[top]}
-    )
 
 
 def _validate_metric(cat: IndexCatalog, metric: str) -> None:
@@ -1103,6 +1424,82 @@ def _validate_metric(cat: IndexCatalog, metric: str) -> None:
             f"{built!r} (similarity-function mismatch, "
             "CuVS2510GPUVectorsReader.java:247-255)"
         )
+
+
+# ---------------------------------------------------------------------------
+# Public searches: one thin wrapper per format
+# ---------------------------------------------------------------------------
+
+ANN_MODES = ("auto", "exact", "ivf")
+
+
+def ann_topk(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    query: list[float] | np.ndarray,
+    k: int = 10,
+    metric: str = "l2",
+    cfg: IndexConfig | None = None,
+    mode: str = "auto",
+    nprobe: int | None = None,
+    filter_ext_ids=None,
+    probe_mode: str = "auto",
+    filter_mode: str = "auto",
+) -> DataFrame:
+    """Top-k nearest vectors → DataFrame(ext_id, score), score desc.
+
+    ``mode``: ``exact`` (brute force over flat, S4 — any ``metric``),
+    ``ivf`` (coarse probe, S3 — the index's build metric), or ``auto``
+    (S1 routing: IVF when available and k ≤ max_k_ann). Filters,
+    tombstones and the B2 fallback follow the driver contract
+    (:func:`_search`).
+
+    IVF probing is two small jobs, not one full-table pass: (1) rank lists
+    per segment from the centroid rows only (``list_id = -1`` — pushed to
+    the parquet scan, the list rows' blobs are never read); (2) scan
+    ``ann_ivf`` restricted to the probed (segment_id, list_id) pairs,
+    scoring each selected list row independently (no shuffle).
+    ``probe_mode`` picks where step (1) ranks lists:
+
+    - ``driver`` — centroid rows are collected ONCE (memoized per manifest
+      version) into a flat numpy pack; per query the ranking is ONE
+      vectorized pass over the concatenated centroid matrix (no Python
+      loop over segments), and the probed pairs reach the list scan as a
+      pushed ``list_id IN`` filter + broadcast semi-join. Latency-optimal;
+      driver memory ∝ total centroids.
+    - ``distributed`` — the ranking runs inside a ``mapInPandas`` over the
+      pruned centroid scan and the pairs join the list rows as a
+      left-semi (AQE picks broadcast vs shuffled hash by pair count). NO
+      driver-side state grows with segment count — the 10⁶-segment path.
+    - ``auto`` — ``driver`` while the build-time segment count is at most
+      ``PROBE_DRIVER_MAX_SEGMENTS``, else ``distributed``.
+    """
+    cfg = cfg or IndexConfig()
+    _check_choice("mode", mode, ANN_MODES)
+    use_ivf = mode == "ivf" or (
+        mode == "auto" and k <= cfg.ann.max_k_ann and cat.exists("ann_ivf")
+    )
+
+    def plan(s: _Search) -> DataFrame:
+        lists = None
+        if use_ivf:
+            # similarity-function mismatch guard for derived structures
+            # (CuVS2510GPUVectorsReader.java:247-255): IVF lists are
+            # clustered under the build metric
+            _validate_metric(cat, metric)
+            if cat.exists("ann_ivf"):
+                lists = _probe_select(
+                    spark, cat,
+                    cat.read(spark, "ann_ivf").filter(F.col("list_id") >= 0),
+                    s.ctx.qn, nprobe, probe_mode,
+                )
+        if lists is None:
+            return s.top(s.exact(s.flat()))
+        # blob tiers ride the list rows (filter inner-joins — segments with
+        # zero allowed ids are pruned before scoring; tombstones left-join)
+        return s.top(s.with_fallback(s.exact(s.aux(_live_lists(spark, cat, lists)))))
+
+    return _search(spark, cat, query, k, filter_ext_ids, filter_mode, plan, metric=metric)
 
 
 def ann_topk_sq(
@@ -1116,88 +1513,18 @@ def ann_topk_sq(
     visited_limit: int | None = None,
     filter_mode: str = "auto",
 ) -> DataFrame:
-    """Scalar-quantized search path (B10/B11 read side, mirroring
-    ``LuceneAcceleratedHNSWScalarQuantizedVectorsWriter.java:149-159`` /
-    ``TestQuantizedVectorsFormats.java:38-66``): coarse L2 scan over the
-    dequantized 7-bit codes (signed→unsigned widened, B11, exactly as the
-    device consumes them) selects ``k * rerank_factor`` candidates per
-    segment; candidates are re-scored EXACTLY from the flat storage in the
-    same cogrouped pass. Approximate overall (a true neighbor can fall
-    outside the coarse cut), validated by containment like the reference's
-    quantized-format tests. Returns (ext_id, score) with exact 1/(1+d) L2
-    scores.
-
-    ``filter_ext_ids`` + ANN tombstones apply as a PRE-filter at the coarse
-    stage (candidates are drawn from accepted vectors only — stricter than
-    the reference's k+10 widening, same filtered-search contract on the
-    quantized formats, ``TestCuVSGaps.java:146-170``).
-
-    Searches under the INDEX's build metric (l2 or cosine): cosine indexes
-    store unit-normalized codes (see :func:`_nav_vectors`), coarse ranking
-    scores them directly with the metric (scale-invariant), and the exact
-    rerank from raw flat storage is metric-correct by construction."""
-    cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    q = np.asarray(query, dtype=np.float32)
-    if k <= 0:
-        return spark.createDataFrame([], "ext_id long, score double")
-    m_coarse = k * max(1, rerank_factor)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    budget = None if visited_limit is None else max(1, int(visited_limit))
-
-    def scan(key, sqp: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"segment_id": [], "ext_id": [], "score": []}).astype(
-            {"segment_id": "int64", "ext_id": "int64", "score": "float64"}
-        )
-        if fp.empty:
-            return empty
-        if sqp.empty:  # missing SQ row: exact fallback keeps it reachable
-            out = _exact_segment_scan(
-                fp, fp.iloc[0], q, metric, allowed, tomb, k
-            )
-            return empty if out is None else out
-        r = sqp.iloc[0]
-        n, dim = int(r["n_vecs"]), int(r["dim"])
-        codes = np.frombuffer(r["codes"], np.int8).reshape(n, dim)
-        mins = np.frombuffer(r["mins"], np.float32)
-        maxs = np.frombuffer(r["maxs"], np.float32)
-        # B11 round-trip: unsigned widening is the wire format the device
-        # sees; shift back before dequantizing
-        codes_u = widen_unsigned(codes)
-        codes_i = (codes_u.astype(np.int16) - 64).astype(np.int8)
-        x_deq = scalar_dequantize(codes_i, mins, maxs)
-        coarse = _scores(x_deq, q, metric)
-        fr = fp.iloc[0]
-        x = np.frombuffer(fr["vectors"], np.float32).reshape(n, dim)
-        ids = np.frombuffer(fr["ext_ids"], np.int64)
-        mask = _row_accept(fp, fr, ids, allowed, tomb)
-        ok = np.arange(n) if mask is None else np.flatnonzero(mask)
-        if budget is not None:
-            # visitedLimit contract (GPUPerLeafCuVSKnnCollector.java:26-38):
-            # at most `budget` vectors scored per leaf; a tiny budget
-            # degrades recall, never errors
-            ok = ok[:budget]
-        if ok.size == 0:
-            return empty
-        cand = ok[np.argsort(-coarse[ok], kind="stable")[:m_coarse]]
-        s = _scores(x[cand], q, metric)
-        top = np.argsort(-s, kind="stable")[:k]
-        return pd.DataFrame(
-            {"segment_id": int(r["segment_id"]), "ext_id": ids[cand][top], "score": s[top]}
-        )
-
-    flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-    partials = (
-        cat.read(spark, "ann_sq")
-        .groupby("segment_id")
-        .cogroup(flat.groupby("segment_id"))
-        .applyInPandas(scan, TOPK_SCHEMA)
-    )
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
+    """Scalar-quantized search (B10/B11 read side,
+    ``LuceneAcceleratedHNSWScalarQuantizedVectorsWriter.java:149-159``):
+    the coarse cut scores the dequantized 7-bit codes, and ``k ·
+    rerank_factor`` candidates per segment are rescored exactly from flat
+    in the same cogrouped pass → (ext_id, score), exact scores under the
+    index metric. Approximate overall (a true neighbor can fall outside
+    the coarse cut), validated by containment like
+    ``TestQuantizedVectorsFormats.java:38-66``."""
+    return _search(
+        spark, cat, query, k, filter_ext_ids, filter_mode,
+        lambda s: s.top(s.coarse(FORMATS["sq"], rerank_factor)),
+        visited_limit=visited_limit,
     )
 
 
@@ -1212,174 +1539,115 @@ def ann_topk_bq(
     visited_limit: int | None = None,
     filter_mode: str = "auto",
 ) -> DataFrame:
-    """Top-k over binary-quantized codes by Hamming distance (the
-    coarse/compressed search path of the BQ format). Approximate —
-    validated by containment against the exact oracle, like the
-    reference's quantized-format tests (TestQuantizedVectorsFormats).
-    Pre-filter + tombstones restrict candidates BEFORE the top-k cut.
+    """Binary-quantized search by Hamming distance over the sign-bit codes.
 
     ``rerank_factor=None`` (default): pure compressed-domain search →
     (ext_id, hamming), the fully-SQL-oracled path. With an int: the
-    reference's quantized formats RESCORE candidates against raw vectors
-    (Lucene's quantized readers delegate exact rescoring to the flat
-    storage) — take the ``k·rerank_factor`` hamming-closest per segment,
-    rescore them exactly from ``ann_flat`` under the index metric →
-    (ext_id, score)."""
-    cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    q = np.asarray(query, dtype=np.float32)
-    rerank = rerank_factor is not None
-    out_schema = "ext_id long, score double" if rerank else "ext_id long, hamming int"
-    if k <= 0:
-        return spark.createDataFrame([], out_schema)
-    m_coarse = k * max(1, rerank_factor or 1)
-    bq = cat.read(spark, "ann_bq")
-    # the pure-hamming projection normally carries only ids (the fat blob
-    # column is never read); when the manifest says ann_bq is OUT OF SYNC
-    # with ann_flat (a crash between merge appends), project 'vectors' too
-    # so the in-scan recompute branch keeps every segment reachable
-    need_vecs = rerank or not _derived_in_sync(cat, "ann_bq")
-    flat_cols = ["segment_id", "n_vecs", "ext_ids"] + (
-        ["vectors"] if need_vecs else []
-    )
-    flat = cat.read(spark, "ann_flat").select(*flat_cols)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    flat = _attach_aux(flat, fblobs, tblobs)
-    budget = None if visited_limit is None else max(1, int(visited_limit))
-    from pyspark.sql import functions as F2
+    ``k · rerank_factor`` Hamming-closest per segment are rescored exactly
+    from flat under the index metric → (ext_id, score) (Lucene's
+    quantized readers delegate rescoring to the flat storage).
+    Approximate, containment-validated (TestQuantizedVectorsFormats)."""
+    value = "score" if rerank_factor is not None else "hamming"
 
-    part_schema = (
-        "segment_id long, ext_id long, score double" if rerank
-        else "segment_id long, ext_id long, hamming int"
+    def plan(s: _Search) -> DataFrame:
+        # the pure-Hamming search reads only the flat ids (the fat vector
+        # blobs are never read) — unless ann_bq is out of sync with flat,
+        # when a missing row is recomputed from the vectors
+        need_vecs = rerank_factor is not None or not _derived_in_sync(cat, "ann_bq")
+        cols = ("segment_id", "n_vecs", "ext_ids") + (("vectors",) if need_vecs else ())
+        return s.top(s.coarse(FORMATS["bq"], rerank_factor, cols), value)
+
+    return _search(
+        spark, cat, query, k, filter_ext_ids, filter_mode, plan,
+        visited_limit=visited_limit, value=value,
     )
 
-    def scan(key, bqp: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
-        val = "score" if rerank else "hamming"
-        empty = pd.DataFrame({"segment_id": [], "ext_id": [], val: []}).astype(
-            {"segment_id": "int64", "ext_id": "int64",
-             val: "float64" if rerank else "int32"}
+
+def ann_topk_pq(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    query: list[float] | np.ndarray,
+    k: int = 10,
+    cfg: IndexConfig | None = None,
+    rerank_factor: int = 3,
+    filter_ext_ids=None,
+    visited_limit: int | None = None,
+    filter_mode: str = "auto",
+) -> DataFrame:
+    """PQ ADC search: per segment, one (pq_dim × 2^bits) query lookup
+    table scores all codes; the coarse top ``k · rerank_factor`` are
+    rescored exactly from flat in the same cogrouped pass → (ext_id,
+    score), exact under the index's build metric (codebooks live in
+    navigation space, rerank reads raw flat). Approximate →
+    containment-validated."""
+    return _search(
+        spark, cat, query, k, filter_ext_ids, filter_mode,
+        lambda s: s.top(s.coarse(FORMATS["pq"], rerank_factor)),
+        visited_limit=visited_limit,
+    )
+
+
+def ann_topk_ivfpq(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    query: list[float] | np.ndarray,
+    k: int = 10,
+    cfg: IndexConfig | None = None,
+    nprobe: int | None = None,
+    rerank_factor: int = 3,
+    filter_ext_ids=None,
+    visited_limit: int | None = None,
+    filter_mode: str = "auto",
+    probe_mode: str = "auto",
+) -> DataFrame:
+    """IVF-PQ search — probe ``nprobe`` lists per segment (same probe
+    modes as :func:`ann_topk`), ADC-score ONLY the probed lists' pq codes,
+    take ``k · rerank_factor`` coarse candidates per list (``visited_limit``
+    caps the ADC-scored vectors per list), rescore them EXACTLY from flat
+    in a per-segment cogroup → global top-k. This is the cuVS IVF_PQ
+    search contract (coarse ADC + refinement), and the IO shape that
+    survives 100 TB: probed bytes are ``nprobe · list_len · pq_dim`` vs
+    the raw path's ``nprobe · list_len · 4·dim``. Approximate (probe +
+    ADC recall), containment-validated; scores are exact."""
+
+    def plan(s: _Search) -> DataFrame:
+        ctx = s.ctx
+        m = ctx.k * max(1, rerank_factor)
+        lists = _probe_select(
+            spark, cat, cat.read(spark, "ann_ivfpq"), ctx.qn, nprobe, probe_mode
         )
-        if fp.empty:
-            return empty
-        fr = fp.iloc[0]
-        if bqp.empty:
-            # missing BQ row: recompute codes + centroid from the flat blob
-            # on the fly — binary quantization is a deterministic function
-            # of the stored vectors, so the segment stays reachable with
-            # bit-identical hamming semantics (requires the rerank path's
-            # flat 'vectors' column; the pure-hamming projection carries
-            # only ids, so fall back exactly when we can)
-            from cuvs_lucene_spark.functions.quantize import binary_quantize
+        if lists is None:  # no segment has an IVF index: brute force
+            return s.top(s.exact(s.flat()))
 
-            if "vectors" not in fp.columns:
-                return empty
-            nv = int(fr["n_vecs"])
-            x_all = np.frombuffer(fr["vectors"], np.float32).reshape(nv, -1)
-            codes, cent64 = binary_quantize(_nav_vectors(x_all, metric))
-            dim = x_all.shape[1]
-            centroid = cent64.astype(np.float64)
-        else:
-            r = bqp.iloc[0]
-            codes = np.frombuffer(r["codes"], np.uint8).reshape(r["n_vecs"], -1)
-            # v2 writes the centroid as float64; v1 indexes wrote float32 —
-            # gate on blob length (dim*8 vs dim*4) so pre-v2 indexes open
-            dim = int(r["dim"])
-            raw = bytes(r["centroid"])
-            if len(raw) == dim * 8:
-                centroid = np.frombuffer(raw, np.float64)
-            else:
-                centroid = np.frombuffer(raw, np.float32).astype(np.float64)
-        ids = np.frombuffer(fr["ext_ids"], np.int64)
-        # query bits in the same (navigation) space the codes were built in
-        qbits = np.packbits(_nav_query(q, metric).astype(np.float64) > centroid)
-        ham = np.unpackbits(codes ^ qbits[None, :], axis=1).sum(1)
-        mask = _row_accept(fp, fr, ids, allowed, tomb)
-        idx = np.arange(ids.size)
-        if mask is not None:
-            idx = idx[mask]
-        if budget is not None:
-            idx = idx[:budget]  # visitedLimit: cap vectors scored per leaf
-        if idx.size == 0:
-            return empty
-        top = idx[np.lexsort((ids[idx], ham[idx]))[:m_coarse]]
-        seg = int(fr["segment_id"])
-        if not rerank:
-            return pd.DataFrame(
-                {"segment_id": seg, "ext_id": ids[top],
-                 "hamming": ham[top].astype(np.int32)}
-            )
-        x = np.frombuffer(fr["vectors"], np.float32).reshape(int(fr["n_vecs"]), dim)
-        s = _scores(x[top], q, metric)
-        best = np.argsort(-s, kind="stable")[:k]
-        return pd.DataFrame(
-            {"segment_id": seg, "ext_id": ids[top][best],
-             "score": s[best]}
-        )
-
-    partials = (
-        bq.groupby("segment_id")
-        .cogroup(flat.groupby("segment_id"))
-        .applyInPandas(scan, part_schema)
-    )
-    if rerank:
-        return (
-            partials.orderBy(F2.desc("score"), F2.asc("ext_id"))
-            .limit(k)
-            .select("ext_id", "score")
-        )
-    return (
-        partials.orderBy(F2.asc("hamming"), F2.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "hamming")
-    )
-
-
-def _pq_rows(flat_df: DataFrame, cfg: IndexConfig, metric: str = "l2") -> DataFrame:
-    """Per-segment PQ codebooks + codes from flat blobs (shared by the
-    batch build and the streaming epoch append). Codebooks/codes live in
-    navigation space (unit-normalized for cosine indexes)."""
-    seed = cfg.ann.seed
-    iters = cfg.ann.kmeans_iters
-
-    def build(it):
-        for pdf in it:
-            for r in pdf.itertuples():
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                x = _nav_vectors(x, metric)
-                n, dim = x.shape
-                p = ivf_pq_params(n, dim)
-                pq_dim, bits = p["pq_dim"], p["pq_bits"]
-                if dim % pq_dim:
-                    pq_dim = dim  # fall back to 1-dim subspaces
-                sub = dim // pq_dim
-                k_cb = min(1 << bits, n)
-                books = np.empty((pq_dim, 1 << bits, sub), np.float32)
-                codes = np.empty((n, pq_dim), np.uint8)
-                for s in range(pq_dim):
-                    xs = x[:, s * sub : (s + 1) * sub]
-                    cents = _kmeans(xs, k_cb, iters, seed + s, 1.0)
-                    d = (
-                        -2.0 * xs @ cents.T
-                        + (cents**2).sum(1)[None, :]
+        def adc(it):
+            for pdf in it:
+                for r in pdf.itertuples(index=False):
+                    ids = np.frombuffer(r.ext_ids, np.int64)
+                    cut = _coarse_cut(
+                        ids, _adc_coarse(r, ctx, None), m,
+                        ctx.accept(pdf, r, ids), ctx.budget,
                     )
-                    codes[:, s] = d.argmin(1).astype(np.uint8)
-                    books[s, :k_cb] = cents
-                    if k_cb < (1 << bits):
-                        books[s, k_cb:] = cents[0]  # pad unused slots
-                yield pd.DataFrame(
-                    {
-                        "segment_id": [r.segment_id],
-                        "n_vecs": [np.int32(n)],
-                        "dim": [np.int32(dim)],
-                        "pq_dim": [np.int32(pq_dim)],
-                        "pq_bits": [np.int32(bits)],
-                        "codebook": [books.tobytes()],
-                        "codes": [codes.tobytes()],
-                    }
-                )
+                    if cut.size:
+                        yield pd.DataFrame({"segment_id": r.segment_id, "ext_id": ids[cut]})
 
-    return flat_df.mapInPandas(build, PQ_SCHEMA)
+        def rerank(rows, x, ids, accept):
+            want = np.unique(rows["ext_id"].to_numpy(np.int64))
+            return _exact_topk(x, ids, ctx.q, ctx.metric, ctx.k, _member_mask(ids, want))
+
+        # per-segment codebook meta rides the probed list rows (small: one
+        # codebook per segment, dim·2^bits floats)
+        meta = cat.read(spark, "ann_pq").select(
+            "segment_id", "dim", "pq_dim", "pq_bits", "codebook"
+        )
+        cands = s.aux(lists.join(meta, "segment_id")).mapInPandas(
+            adc, "segment_id long, ext_id long"
+        )
+        return s.top(s.with_fallback(s.cogroup(cands, rerank), ("ann_ivfpq", "ann_pq")))
+
+    return _search(
+        spark, cat, query, k, filter_ext_ids, filter_mode, plan,
+        visited_limit=visited_limit,
+    )
 
 
 def build_ann_pq(
@@ -1396,156 +1664,8 @@ def build_ann_pq(
     split into ``pq_dim`` contiguous subspaces; each subspace gets its own
     deterministic k-means codebook of 2^pq_bits centroids; every vector is
     stored as pq_dim uint8 centroid ids. Search (:func:`ann_topk_pq`) is
-    the classic ADC scan: one (pq_dim × 2^bits) lookup table per query,
-    approximate distance = sum of per-subspace LUT entries."""
-    cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    # a full rebuild derives from the CURRENT flat (epoch/merge appends
-    # included) — record that as covers_tags, else _derived_in_sync would
-    # read the tagless fresh entry as permanently stale
-    cat.write(
-        _pq_rows(cat.read(spark, "ann_flat"), cfg, metric), "ann_pq",
-        extra_entry={"covers_tags": sorted(_covered_tags(cat, "ann_flat"))},
-    )
-    cat.mark_stage("ann_pq")
-
-
-def ann_topk_pq(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    query: list[float] | np.ndarray,
-    k: int = 10,
-    cfg: IndexConfig | None = None,
-    rerank_factor: int = 3,
-    filter_ext_ids=None,
-    visited_limit: int | None = None,
-    filter_mode: str = "auto",
-) -> DataFrame:
-    """PQ ADC search: per segment, build the (pq_dim × 2^bits) query LUT,
-    score all codes with one fancy-index sum, take the coarse top
-    ``k·rerank_factor``, rescore those EXACTLY from the flat storage in
-    the same cogrouped pass. Approximate → containment-validated; returned
-    scores are exact under the index's build metric (1/(1+d) for L2,
-    cosine similarity for cosine indexes — codebooks live in navigation
-    space, the ADC LUT uses the unit query, rerank reads raw flat).
-    Pre-filter + tombstones restrict the coarse candidate pool
-    (filtered-search contract on every format)."""
-    cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    q = np.asarray(query, dtype=np.float32)
-    q_nav = _nav_query(q, metric)
-    if k <= 0:
-        return spark.createDataFrame([], "ext_id long, score double")
-    m_coarse = k * max(1, rerank_factor)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    budget = None if visited_limit is None else max(1, int(visited_limit))
-
-    def scan(key, pqp: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"segment_id": [], "ext_id": [], "score": []}).astype(
-            {"segment_id": "int64", "ext_id": "int64", "score": "float64"}
-        )
-        if fp.empty:
-            return empty
-        if pqp.empty:  # missing PQ row: exact fallback keeps it reachable
-            out = _exact_segment_scan(
-                fp, fp.iloc[0], q, metric, allowed, tomb, k
-            )
-            return empty if out is None else out
-        r = pqp.iloc[0]
-        n, dim = int(r["n_vecs"]), int(r["dim"])
-        pq_dim, bits = int(r["pq_dim"]), int(r["pq_bits"])
-        sub = dim // pq_dim
-        books = np.frombuffer(r["codebook"], np.float32).reshape(pq_dim, 1 << bits, sub)
-        codes = np.frombuffer(r["codes"], np.uint8).reshape(n, pq_dim)
-        q64 = q_nav.astype(np.float64)
-        # ADC lookup table: squared L2 from each query subvector to every
-        # centroid of its subspace (navigation space — L2 on unit vectors
-        # ranks as cosine for cosine indexes)
-        qsub = q64.reshape(pq_dim, sub)
-        lut = ((books.astype(np.float64) - qsub[:, None, :]) ** 2).sum(2)  # (pq_dim, K)
-        approx = lut[np.arange(pq_dim)[None, :], codes].sum(1)  # (n,)
-        fr = fp.iloc[0]
-        x = np.frombuffer(fr["vectors"], np.float32).reshape(n, dim)
-        ids = np.frombuffer(fr["ext_ids"], np.int64)
-        mask = _row_accept(fp, fr, ids, allowed, tomb)
-        ok = np.arange(n) if mask is None else np.flatnonzero(mask)
-        if budget is not None:
-            ok = ok[:budget]  # visitedLimit: cap vectors scored per leaf
-        if ok.size == 0:
-            return empty
-        cand = ok[np.argsort(approx[ok], kind="stable")[:m_coarse]]
-        s = _scores(x[cand], q, metric)
-        top = np.argsort(-s, kind="stable")[:k]
-        return pd.DataFrame(
-            {"segment_id": int(r["segment_id"]), "ext_id": ids[cand][top], "score": s[top]}
-        )
-
-    flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-    partials = (
-        cat.read(spark, "ann_pq")
-        .groupby("segment_id")
-        .cogroup(flat.groupby("segment_id"))
-        .applyInPandas(scan, TOPK_SCHEMA)
-    )
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
-    )
-
-
-IVFPQ_SCHEMA = "segment_id long, list_id int, n int, ext_ids binary, codes binary"
-
-
-def _ivfpq_rows(ivf_df: DataFrame, pq_df: DataFrame, metric: str = "l2") -> DataFrame:
-    """Per-list PQ codes — the combined IVF-PQ structure the reference's
-    parameter factory derives as ONE unit (``CagraIndexParamsFactory.java:
-    31-93`` sets nLists/nProbes AND pqDim/pqBits together; cuVS's IVF_PQ
-    index stores pq-encoded residualless codes per inverted list). Each
-    segment's IVF lists are re-encoded against the segment's existing PQ
-    codebook (navigation space), so a probed list costs ``n·pq_dim`` bytes
-    instead of ``n·4·dim`` — the read-volume shape that works at 100 TB."""
-
-    def enc(key, lists: pd.DataFrame, pqp: pd.DataFrame) -> pd.DataFrame:
-        cols = ["segment_id", "list_id", "n", "ext_ids", "codes"]
-        empty = pd.DataFrame({c: [] for c in cols}).astype(
-            {"segment_id": "int64", "list_id": "int32", "n": "int32",
-             "ext_ids": "object", "codes": "object"}
-        )
-        if lists.empty or pqp.empty:
-            return empty
-        r = pqp.iloc[0]
-        pq_dim, bits = int(r["pq_dim"]), int(r["pq_bits"])
-        dim = int(r["dim"])
-        sub = dim // pq_dim
-        books = np.frombuffer(r["codebook"], np.float32).reshape(
-            pq_dim, 1 << bits, sub
-        )
-        out = []
-        for lr in lists.itertuples():
-            x = np.frombuffer(lr.vectors, np.float32).reshape(int(lr.n), dim)
-            xn = _nav_vectors(x, metric)
-            codes = np.empty((int(lr.n), pq_dim), np.uint8)
-            for s_ in range(pq_dim):
-                xs = xn[:, s_ * sub : (s_ + 1) * sub].astype(np.float64)
-                cb = books[s_].astype(np.float64)
-                d = -2.0 * xs @ cb.T + (cb**2).sum(1)[None, :]
-                codes[:, s_] = d.argmin(1).astype(np.uint8)
-            out.append(
-                (int(lr.segment_id), int(lr.list_id), int(lr.n),
-                 lr.ext_ids, codes.tobytes())
-            )
-        if not out:
-            return empty
-        return pd.DataFrame(out, columns=cols)
-
-    return (
-        ivf_df.filter(F.col("list_id") >= 0)
-        .groupby("segment_id")
-        .cogroup(pq_df.groupby("segment_id"))
-        .applyInPandas(enc, IVFPQ_SCHEMA)
-    )
+    the classic ADC scan."""
+    _write_format(spark, cat, FORMATS["pq"], cfg or IndexConfig())
 
 
 def build_ann_ivfpq(
@@ -1558,190 +1678,7 @@ def build_ann_ivfpq(
     cfg = cfg or IndexConfig()
     if not cat.exists("ann_pq"):
         build_ann_pq(spark, cat, cfg)
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    cat.write(
-        _ivfpq_rows(
-            cat.read(spark, "ann_ivf"), cat.read(spark, "ann_pq"), metric
-        ),
-        "ann_ivfpq",
-        sort_within_partitions=["segment_id", "list_id"],
-        # derived from ann_ivf ∩ ann_pq: the rebuild covers exactly the
-        # tags BOTH inputs cover (see build_ann_pq's covers_tags note)
-        extra_entry={
-            "covers_tags": sorted(
-                _covered_tags(cat, "ann_ivf") & _covered_tags(cat, "ann_pq")
-            )
-        },
-    )
-    cat.mark_stage("ann_ivfpq")
-
-
-def ann_topk_ivfpq(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    query: list[float] | np.ndarray,
-    k: int = 10,
-    cfg: IndexConfig | None = None,
-    nprobe: int | None = None,
-    rerank_factor: int = 3,
-    filter_ext_ids=None,
-    visited_limit: int | None = None,
-    filter_mode: str = "auto",
-    probe_mode: str = "auto",
-) -> DataFrame:
-    """IVF-PQ search — probe ``nprobe`` lists per segment (same two probe
-    modes as :func:`ann_topk`), ADC-score ONLY the probed lists' pq codes
-    (one LUT per segment), take ``k·rerank_factor`` coarse candidates per
-    list, rescore them EXACTLY from the flat storage in a per-segment
-    cogroup → global top-k. This is the cuVS IVF_PQ search contract
-    (coarse ADC + refinement), and the IO shape that survives 100 TB:
-    probed bytes are ``nprobe · list_len · pq_dim`` vs the raw path's
-    ``nprobe · list_len · 4·dim``. Approximate (probe + ADC recall),
-    containment-validated; returned scores are exact under the index's
-    build metric. Pre-filter + tombstones restrict candidates BEFORE the
-    coarse cut (acceptDocs on every format); ``visited_limit`` caps
-    ADC-scored vectors per list."""
-    cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    q = np.asarray(query, dtype=np.float32)
-    qn = _nav_query(q, metric)
-    if k <= 0:
-        return spark.createDataFrame([], "ext_id long, score double")
-    m_coarse = k * max(1, rerank_factor)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    budget = None if visited_limit is None else max(1, int(visited_limit))
-
-    sel = _probe_select(
-        spark, cat, cat.read(spark, "ann_ivfpq"), qn, nprobe, probe_mode
-    )
-    flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-    if sel is None:
-        sel = spark.createDataFrame([], IVFPQ_SCHEMA)  # bf-only catalog
-    else:
-        # per-segment codebook meta rides the selected list rows (small:
-        # one codebook per segment, dim·2^bits floats)
-        pqmeta = cat.read(spark, "ann_pq").select(
-            "segment_id", "dim", "pq_dim", "pq_bits", "codebook"
-        )
-        sel = sel.join(pqmeta, "segment_id")
-        sel = _attach_aux(sel, fblobs, tblobs)
-
-    def adc(it):
-        q64 = qn.astype(np.float64)
-        for pdf in it:
-            for r in pdf.itertuples():
-                pq_dim, bits = int(r.pq_dim), int(r.pq_bits)
-                dim = int(r.dim)
-                sub = dim // pq_dim
-                books = np.frombuffer(r.codebook, np.float32).reshape(
-                    pq_dim, 1 << bits, sub
-                )
-                codes = np.frombuffer(r.codes, np.uint8).reshape(int(r.n), pq_dim)
-                ids = np.frombuffer(r.ext_ids, np.int64)
-                qsub = q64.reshape(pq_dim, sub)
-                lut = ((books.astype(np.float64) - qsub[:, None, :]) ** 2).sum(2)
-                approx = lut[np.arange(pq_dim)[None, :], codes].sum(1)
-                acc = _row_accept(pdf, r, ids, allowed, tomb)
-                ok = np.arange(ids.size) if acc is None else np.flatnonzero(acc)
-                if budget is not None:
-                    ok = ok[:budget]  # visitedLimit per leaf
-                if ok.size == 0:
-                    continue
-                take = ok[np.argsort(approx[ok], kind="stable")[:m_coarse]]
-                yield pd.DataFrame(
-                    {"segment_id": int(r.segment_id), "ext_id": ids[take],
-                     "approx": approx[take]}
-                )
-
-    cands = sel.mapInPandas(adc, "segment_id long, ext_id long, approx double")
-
-    def rerank(key, cp: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"segment_id": [], "ext_id": [], "score": []}).astype(
-            {"segment_id": "int64", "ext_id": "int64", "score": "float64"}
-        )
-        if cp.empty or fp.empty:
-            return empty
-        fr = fp.iloc[0]
-        n, dim = int(fr["n_vecs"]), int(fr["dim"])
-        x = np.frombuffer(fr["vectors"], np.float32).reshape(n, dim)
-        ids = np.frombuffer(fr["ext_ids"], np.int64)
-        want = np.unique(cp["ext_id"].to_numpy(np.int64))
-        hit = np.flatnonzero(_member_mask(ids, want))
-        if hit.size == 0:
-            return empty
-        s = _scores(x[hit], q, metric)
-        top = np.argsort(-s, kind="stable")[:k]
-        return pd.DataFrame(
-            {"segment_id": int(fr["segment_id"]), "ext_id": ids[hit][top],
-             "score": s[top]}
-        )
-
-    partials = (
-        cands.groupby("segment_id")
-        .cogroup(flat.groupby("segment_id"))
-        .applyInPandas(rerank, TOPK_SCHEMA)
-    )
-    # B2 degradation ladder: index-less segments are brute-forced from flat
-    if not (_derived_in_sync(cat, "ann_ivfpq") and _derived_in_sync(cat, "ann_pq")):
-        # a crash between the group-wise merge's per-table appends can leave
-        # a segment in ann_flat/ann_ivf with no ann_ivfpq (or ann_pq) rows —
-        # neither ADC-scanned nor in bf_fallback_segments. Derive the TRUE
-        # covered set with an anti-join so those segments are brute-forced
-        # (reachability contract: every vector reachable in every mode).
-        covered = (
-            cat.read(spark, "ann_ivfpq").select("segment_id")
-            .join(
-                cat.read(spark, "ann_pq").select("segment_id").distinct(),
-                "segment_id", "left_semi",
-            )
-            .distinct()
-        )
-        bf_missing = flat.join(covered, "segment_id", "left_anti")
-    else:
-        bf_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
-            "bf_fallback_segments"
-        )
-        if bf_segs is None:
-            # pre-v2 index without the manifest list: derive with an anti-join
-            # (same fallback derivation as ann_topk — never silently empty)
-            ivf_seg_df = (
-                cat.read(spark, "ann_ivf")
-                .filter(F.col("list_id") == -1)
-                .select("segment_id")
-            )
-            bf_missing = flat.join(ivf_seg_df, "segment_id", "left_anti")
-        elif bf_segs:
-            bf_missing = flat.filter(
-                F.col("segment_id").isin([int(s) for s in bf_segs])
-            )
-        else:
-            bf_missing = None
-    if bf_missing is not None:
-
-        def scan_bf(it):
-            for pdf in it:
-                for r in pdf.itertuples():
-                    x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                    ids = np.frombuffer(r.ext_ids, np.int64)
-                    acc = _row_accept(pdf, r, ids, allowed, tomb)
-                    if acc is not None:
-                        ids, x = ids[acc], x[acc]
-                    if ids.size == 0:
-                        continue
-                    s = _scores(x, q, metric)
-                    top = np.argsort(-s, kind="stable")[:k]
-                    yield pd.DataFrame(
-                        {"segment_id": r.segment_id, "ext_id": ids[top],
-                         "score": s[top]}
-                    )
-
-        partials = partials.unionByName(bf_missing.mapInPandas(scan_bf, TOPK_SCHEMA))
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
-    )
+    _write_format(spark, cat, FORMATS["ivfpq"], cfg)
 
 
 def build_ann_fields(
@@ -1911,7 +1848,7 @@ def merge_ann(
             for r in pdf.itertuples():
                 ids = np.frombuffer(r.ext_ids, np.int64)
                 x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                t = tomb if tomb is not None else _blob_tomb(pdf, r)
+                t = tomb if tomb is not None else _blob(pdf, r, "tomb")
                 if t is not None and t.size:
                     keep = ~_member_mask(ids, t)
                     ids, x = ids[keep], x[keep]
@@ -2002,70 +1939,14 @@ def merge_ann(
     # derived structures for the NEW segments only (read back from the
     # committed flat — M4 discipline; the gen range filter is a pushed
     # parquet predicate, untouched segments' blobs are never read)
-    new_flat_df = cat.read(spark, "ann_flat").filter(
-        (F.col("segment_id") >= gen_base)
-        & (F.col("segment_id") < ANN_MERGE_BASE + ((gen + 1) << 32))
+    in_gen = (F.col("segment_id") >= gen_base) & (
+        F.col("segment_id") < ANN_MERGE_BASE + ((gen + 1) << 32)
     )
-    derived = [
-        ("ann_sq", lambda: _sq_rows(new_flat_df, metric)),
-        ("ann_bq", lambda: _bq_rows(new_flat_df, metric)),
-        ("ann_ivf", lambda: _ivf_rows(new_flat_df, cfg.ann, metric)),
-    ]
-    if cat.exists("ann_graph"):
-        from cuvs_lucene_spark.operators.ann_graph import _graph_rows
-
-        derived.append(
-            ("ann_graph", lambda: _graph_rows(new_flat_df, cfg, metric=metric))
-        )
-    if cat.exists("ann_pq"):
-        derived.append(("ann_pq", lambda: _pq_rows(new_flat_df, cfg, metric)))
-
-    # the derived-table appends are mutually independent (each reads the
-    # committed flat only) — run their Spark jobs concurrently from a
-    # driver thread pool (guide §2.6); manifest commits serialize under
-    # the catalog lock. Crash-consistency is unchanged: _derived_in_sync
-    # already detects ANY subset of missing tags (the appends were never
-    # atomic as a group).
-    def _append_one(table, mk):
-        cat.append(
-            mk(), table, tag=tag,
-            extra_entry={"dropped_segments": _dropped_for(table)},
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(derived)) as pool:
-        for f in [pool.submit(_append_one, t, mk) for t, mk in derived]:
-            f.result()
-    if cat.exists("ann_ivfpq") and cat.exists("ann_pq"):
-        gen_hi = ANN_MERGE_BASE + ((gen + 1) << 32)
-        in_gen = (F.col("segment_id") >= gen_base) & (F.col("segment_id") < gen_hi)
-        cat.append(
-            _ivfpq_rows(
-                cat.read(spark, "ann_ivf").filter(in_gen),
-                cat.read(spark, "ann_pq").filter(in_gen),
-                metric,
-            ),
-            "ann_ivfpq", tag=tag,
-            extra_entry={"dropped_segments": _dropped_for("ann_ivfpq")},
-        )
-
-    # B2 fallback bookkeeping: recompute from post-merge metadata (both
-    # collects are segment-count-sized manifest upkeep, like streaming's)
-    flat_segs = {
-        int(r["segment_id"])
-        for r in cat.read(spark, "ann_flat").select("segment_id").collect()
-    }
-    ivf_segs = {
-        int(r["segment_id"])
-        for r in cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1).select("segment_id").distinct().collect()
-    }
-    prev_stage = cat.read_manifest()["stages"].get("ann_ivf", {})
-    carried = {k: v for k, v in prev_stage.items() if k not in ("status", "at")}
-    carried["bf_fallback_segments"] = sorted(flat_segs - ivf_segs)
-    carried["n_ivf_segments"] = len(ivf_segs)
-    cat.mark_stage("ann_ivf", **carried)
+    _append_formats(
+        cat, cfg, metric, lambda t: cat.read(spark, t).filter(in_gen), tag,
+        extra_entry=lambda t: {"dropped_segments": _dropped_for(t)},
+    )
+    _mark_bf_fallback(spark, cat)
 
     # tombstones whose rows were physically dropped here clear out; those
     # referencing untouched segments stay live (per-segment liveDocs)
@@ -2113,8 +1994,7 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
     gen = int(
         cat.read_manifest()["tables"].get("ann_flat", {}).get("ann_merge_gen", 0)
     )
-    for table in ("ann_flat", "ann_ids", "ann_sq", "ann_bq", "ann_ivf",
-                  "ann_graph", "ann_pq", "ann_ivfpq"):
+    for table in ("ann_flat", "ann_ids", *(f.table for f in FORMATS.values())):
         if not cat.exists(table):
             continue
         extra = {"ann_merge_gen": gen} if table == "ann_flat" else None
@@ -2189,8 +2069,9 @@ def knn_join_ivf(
 
     ``probe_mode`` picks where step (2) runs, mirroring :func:`ann_topk`:
 
-    - ``driver`` — centroid rows are collected ONCE (memoized) and probe
-      ranking runs inside the query-side ``mapInPandas`` closure.
+    - ``driver`` — per-segment slices of the memoized centroid pack (the
+      one :func:`ann_topk` probes with) ride the query-side
+      ``mapInPandas`` closure, where probe ranking runs.
       Latency-optimal; driver/closure memory ∝ total centroids.
     - ``distributed`` — the query side is packed into batch rows
       (:func:`_pack_query_batches`) and broadcast against the pruned
@@ -2214,12 +2095,10 @@ def knn_join_ivf(
 
     Approximate (probe recall), validated by containment against the exact
     oracle like the reference's randomized search tests."""
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
+    _check_choice("probe_mode", probe_mode, PROBE_MODES)
+    metric = _index_metric(cat)
     ivf = cat.read(spark, "ann_ivf") if cat.exists("ann_ivf") else None
-    stage = cat.read_manifest()["stages"].get("ann_ivf", {})
-    n_segs = stage.get("n_ivf_segments")
-    if probe_mode not in ("auto", "driver", "distributed", "shuffle"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
+    n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("n_ivf_segments")
     shuffle = probe_mode == "shuffle" or (
         probe_mode == "auto"
         and n_segs is not None
@@ -2228,30 +2107,16 @@ def knn_join_ivf(
     distributed = probe_mode == "distributed" or shuffle
     # B2 degradation ladder: segments too small for an IVF index are
     # brute-forced — every query probes them as one pseudo-list (-2), so
-    # their vectors are reachable exactly like ann_topk's bf fallback.
-    # A stale manifest list (crash before the ann_ivf append) forces the
-    # anti-join derivation, same reachability healing as ann_topk.
-    bf_segs = stage.get("bf_fallback_segments")
-    if not _derived_in_sync(cat, "ann_ivf"):
-        bf_segs = None
+    # their vectors are reachable exactly like ann_topk's bf fallback
+    bf_segs = _listed_bf_segments(cat)
     if bf_segs is None:
-        flat_seg = {
-            r["segment_id"]
-            for r in cat.read(spark, "ann_flat").select("segment_id").collect()
-        }
-        if ivf is not None:
-            ivf_seg = {
-                int(r["segment_id"])
-                for r in ivf.filter(F.col("list_id") == -1)
-                .select("segment_id").collect()
-            }
-        else:
-            ivf_seg = set()
-        bf_segs = sorted(flat_seg - ivf_seg)
-    bf_segs = [int(s) for s in bf_segs]
+        bf_segs = sorted(
+            int(r[0]) for r in _bf_fallback(
+                spark, cat, cat.read(spark, "ann_flat").select("segment_id")
+            ).collect()
+        )
     tomb, tblobs = _resolve_tombstones(spark, cat)
     allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    fixed_nprobe = nprobe
 
     q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
 
@@ -2264,12 +2129,22 @@ def knn_join_ivf(
         nr[nr == 0] = 1.0
         return qb / nr
 
-    def _rank_lists(qb: np.ndarray, cents: np.ndarray, n_total: int) -> np.ndarray:
-        npb = fixed_nprobe or max(
-            1, min(cents.shape[0], ivf_pq_params(n_total, qb.shape[1])["n_probes"])
-        )
+    def _rank_lists(qb: np.ndarray, cents: np.ndarray, npb: int) -> np.ndarray:
         d = -2.0 * qb @ cents.T + (cents**2).sum(1)[None, :]
         return np.argsort(d, axis=1, kind="stable")[:, :npb]
+
+    def _pairs(seg: int, qi_ids: np.ndarray, qb: np.ndarray, probe=None) -> pd.DataFrame:
+        """Probe pairs of one segment: the ranked lists per query, or the
+        bf pseudo-list -2 for an index-less segment."""
+        npb = 1 if probe is None else probe.shape[1]
+        return pd.DataFrame(
+            {
+                "segment_id": seg,
+                "list_id": np.int32(-2) if probe is None else probe.ravel().astype(np.int32),
+                "q_id": np.repeat(qi_ids, npb),
+                "q_vec": list(np.repeat(qb, npb, axis=0)),
+            }
+        )
 
     if distributed and ivf is not None:
         # probe ranking runs NEXT TO the pruned centroid scan; the query
@@ -2296,33 +2171,20 @@ def knn_join_ivf(
                 return frag.hint("shuffle_hash").join(qpack, "rbkt")
             return scan_df.crossJoin(F.broadcast(qpack))
 
+        def _bundle(r) -> tuple[np.ndarray, np.ndarray]:
+            qb = np.frombuffer(r.q_mat, np.float64).reshape(int(r.qn), -1)
+            return np.frombuffer(r.q_ids, np.int64), _norm_qb(qb)
+
         def probe_dist(it):
             for pdf in it:
-                for r in pdf.itertuples():
-                    qb = _norm_qb(
-                        np.frombuffer(r.q_mat, np.float64).reshape(int(r.qn), -1)
-                    )
-                    qi_ids = np.frombuffer(r.q_ids, np.int64)
-                    n_lists = int(r.n)
+                for r in pdf.itertuples(index=False):
+                    qi_ids, qb = _bundle(r)
                     cents = (
                         np.frombuffer(r.vectors, np.float32)
-                        .reshape(n_lists, qb.shape[1]).astype(np.float64)
+                        .reshape(int(r.n), qb.shape[1]).astype(np.float64)
                     )
-                    raw = r.ext_ids
-                    n_total = (
-                        int(np.frombuffer(raw, np.int64)[0])
-                        if raw else n_lists * 2000
-                    )
-                    probe = _rank_lists(qb, cents, n_total)
-                    npb = probe.shape[1]
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": int(r.segment_id),
-                            "list_id": probe.ravel().astype(np.int32),
-                            "q_id": np.repeat(qi_ids, npb),
-                            "q_vec": list(np.repeat(qb, npb, axis=0)),
-                        }
-                    )
+                    npb = nprobe or _default_nprobe(r, qb.shape[1])
+                    yield _pairs(int(r.segment_id), qi_ids, qb, _rank_lists(qb, cents, npb))
 
         pairs = _meet_queries(
             ivf.filter(F.col("list_id") == -1)
@@ -2332,19 +2194,8 @@ def knn_join_ivf(
 
             def bf_dist(it):
                 for pdf in it:
-                    for r in pdf.itertuples():
-                        qb = _norm_qb(
-                            np.frombuffer(r.q_mat, np.float64).reshape(int(r.qn), -1)
-                        )
-                        qi_ids = np.frombuffer(r.q_ids, np.int64)
-                        yield pd.DataFrame(
-                            {
-                                "segment_id": int(r.segment_id),
-                                "list_id": np.int32(-2),
-                                "q_id": qi_ids,
-                                "q_vec": list(qb),
-                            }
-                        )
+                    for r in pdf.itertuples(index=False):
+                        yield _pairs(int(r.segment_id), *_bundle(r))
 
             bf_df = spark.createDataFrame(
                 [(int(s),) for s in bf_segs], "segment_id long"
@@ -2353,21 +2204,19 @@ def knn_join_ivf(
                 _meet_queries(bf_df).mapInPandas(bf_dist, PAIR_SCHEMA)
             )
     else:
-        crows = _centroid_rows(spark, cat) if ivf is not None else []
-        if not crows and not bf_segs:
+        pack = _centroid_pack(spark, cat) if ivf is not None else None
+        if pack is None and not bf_segs:
             return spark.createDataFrame(
                 [], "q_id long, vec_id long, score double, rank int"
             )
-        # compact centroid pack in the task closure; the query side is
-        # still never collected (latency mode — closure ∝ total segments)
-        cent_pack = []
-        for r in crows:
-            raw = r["ext_ids"]
-            n_lists = int(r["n"])
-            n_total = int(np.frombuffer(raw, np.int64)[0]) if raw else n_lists * 2000
-            cent_pack.append(
-                (int(r["segment_id"]), n_lists, n_total, bytes(r["vectors"]))
-            )
+        # per-segment slices of the memoized centroid pack ride the task
+        # closure; the query side is still never collected (latency mode —
+        # closure ∝ total centroids)
+        C, cuts = (None, []) if pack is None else (pack["C"], [
+            (int(pack["seg_row"][lo]), lo, lo + int(pack["n_lists_row"][lo]),
+             int(pack["npb_row"][lo]))
+            for lo in np.flatnonzero(pack["lst_row"] == 0)
+        ])
 
         def probe_fn(it):
             # per query batch: nprobe closest lists in every segment
@@ -2380,29 +2229,12 @@ def knn_join_ivf(
                         [np.asarray(v, dtype=np.float64) for v in pdf["q_vec"].to_numpy()]
                     )
                 )
-                dim = qb.shape[1]
                 qi_ids = pdf["q_id"].to_numpy(np.int64)
-                for seg, n_lists, n_total, blob in cent_pack:
-                    cents = np.frombuffer(blob, np.float32).reshape(n_lists, dim).astype(np.float64)
-                    probe = _rank_lists(qb, cents, n_total)
-                    npb = probe.shape[1]
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": seg,
-                            "list_id": probe.ravel().astype(np.int32),
-                            "q_id": np.repeat(qi_ids, npb),
-                            "q_vec": list(np.repeat(qb, npb, axis=0)),
-                        }
-                    )
+                for seg, lo, hi, npb in cuts:
+                    cents = C[lo:hi].astype(np.float64)
+                    yield _pairs(seg, qi_ids, qb, _rank_lists(qb, cents, nprobe or npb))
                 for seg in bf_segs:  # every query scans the index-less segments
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": seg,
-                            "list_id": np.int32(-2),
-                            "q_id": qi_ids,
-                            "q_vec": list(qb),
-                        }
-                    )
+                    yield _pairs(seg, qi_ids, qb)
 
         pairs = q.mapInPandas(probe_fn, PAIR_SCHEMA)
     # ONE row per probed bucket carrying its query bundle: the fat list
@@ -2411,13 +2243,9 @@ def knn_join_ivf(
     bundle = pairs.groupBy("segment_id", "list_id").agg(
         F.collect_list(F.struct("q_id", "q_vec")).alias("qs")
     )
-    lists = ivf.filter(F.col("list_id") >= 0) if ivf is not None else None
-    if lists is not None and not _derived_in_sync(cat, "ann_ivf"):
-        # stale ann_ivf: drop merged-away segments' lists (see ann_topk)
-        lists = lists.join(
-            cat.read(spark, "ann_flat").select("segment_id"),
-            "segment_id", "left_semi",
-        )
+    lists = None
+    if ivf is not None:
+        lists = _live_lists(spark, cat, ivf.filter(F.col("list_id") >= 0))
     if bf_segs:
         flat_lists = (
             cat.read(spark, "ann_flat")

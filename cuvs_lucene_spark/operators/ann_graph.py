@@ -43,13 +43,15 @@ from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, choose_build_algo
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
-from cuvs_lucene_spark.sources.catalog import IndexCatalog
-
-GRAPH_SCHEMA = (
-    "segment_id long, layer int, stride int, n_nodes int, degree int, "
-    "offsets binary, graph binary"
+from cuvs_lucene_spark.operators.ann import (
+    GRAPH_SCHEMA,
+    _index_metric,
+    _nav_vectors,
+    _Query,
+    _scores,
+    _search,
 )
-TOPK_SCHEMA = "segment_id long, ext_id long, score double"
+from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 
 def _encode_adjacency(nbrs: list[np.ndarray]) -> tuple[bytes, bytes]:
@@ -275,11 +277,25 @@ def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
     nnd_iters = cfg.ann.nn_descent_iters
     seed = cfg.ann.seed
 
-    def build(it):
-        from cuvs_lucene_spark.operators.ann import _nav_vectors
+    def layer_row(seg, level: int, stride: int, sub: np.ndarray) -> pd.DataFrame:
+        """One (segment, layer) row: the kNN adjacency over ``sub``'s nodes
+        (a single node has none — the B13 single-vector fallback)."""
+        m = sub.shape[0]
+        g = max(0, min(deg, m - 1))
+        offs, blob = np.zeros(m + 1, "<u8").tobytes(), b""
+        if m >= 2:
+            offs, blob = _encode_adjacency(
+                _knn_graph(sub, g, nnd_iters, seed, exact_knn_max)
+            )
+        return pd.DataFrame(
+            {"segment_id": [seg], "layer": [np.int32(level)],
+             "stride": [np.int32(stride)], "n_nodes": [np.int32(m)],
+             "degree": [np.int32(g)], "offsets": [offs], "graph": [blob]}
+        )
 
+    def build(it):
         for pdf in it:
-            for r in pdf.itertuples():
+            for r in pdf.itertuples(index=False):
                 x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
                 x = _nav_vectors(x, metric)
                 n = x.shape[0]
@@ -291,61 +307,15 @@ def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
                 # skip the graph (search falls back per-leaf)
                 if choose_build_algo(n) != "NN_DESCENT":
                     continue
-                if n < 2:
-                    # single-node graph (B13 single-vector fallback)
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": [r.segment_id],
-                            "layer": [np.int32(0)],
-                            "stride": [np.int32(1)],
-                            "n_nodes": [np.int32(n)],
-                            "degree": [np.int32(0)],
-                            "offsets": [np.zeros(n + 1, "<u8").tobytes()],
-                            "graph": [b""],
-                        }
-                    )
-                    continue
-                offs, blob = _encode_adjacency(
-                    _knn_graph(x, deg, nnd_iters, seed, exact_knn_max)
-                )
-                yield pd.DataFrame(
-                    {
-                        "segment_id": [r.segment_id],
-                        "layer": [np.int32(0)],
-                        "stride": [np.int32(1)],
-                        "n_nodes": [np.int32(n)],
-                        "degree": [np.int32(min(deg, n - 1))],
-                        "offsets": [offs],
-                        "graph": [blob],
-                    }
-                )
+                yield layer_row(r.segment_id, 0, 1, x)
                 if n < lmin:
                     continue
-                level = 1
-                while level <= 4:
+                for level in range(1, 5):
                     s = lstride**level
                     sample = np.arange(0, n, s, dtype=np.int64)
                     if sample.size < max(8, lstride):
                         break
-                    sub = x[sample]
-                    offs, blob = _encode_adjacency(
-                        _knn_graph(
-                            sub, min(deg, sample.size - 1), nnd_iters, seed,
-                            exact_knn_max,
-                        )
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "segment_id": [r.segment_id],
-                            "layer": [np.int32(level)],
-                            "stride": [np.int32(s)],
-                            "n_nodes": [np.int32(sample.size)],
-                            "degree": [np.int32(min(deg, sample.size - 1))],
-                            "offsets": [offs],
-                            "graph": [blob],
-                        }
-                    )
-                    level += 1
+                    yield layer_row(r.segment_id, level, s, x[sample])
 
     return flat_df.mapInPandas(build, GRAPH_SCHEMA)
 
@@ -364,10 +334,9 @@ def build_ann_graph(
     ``graph`` = concatenated per-node varint blocks, each node's sorted
     neighbor ids delta-encoded (first value absolute)."""
     cfg = cfg or IndexConfig()
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
     cat.write(
         _graph_rows(
-            cat.read(spark, "ann_flat"), cfg, degree, metric, exact_knn_max
+            cat.read(spark, "ann_flat"), cfg, degree, _index_metric(cat), exact_knn_max
         ),
         "ann_graph",
     )
@@ -492,6 +461,54 @@ def _beam_search(
     return res_n[sel], res_d[sel], early
 
 
+def _graph_segment(ctx: _Query, ef: int):
+    """Per-leaf graph search for the driver's cogroup with flat: the
+    multi-layer entry descent (top layer first — each layer's beam seeds
+    the next with its best nodes mapped through the stride, an O(log n)
+    entry for big segments instead of the √n sweep), then the base-layer
+    beam under acceptDocs and the visit budget. None — the driver's exact
+    scan — for a segment with no graph row (oversized for the NN_DESCENT
+    build, O1) or fewer than two vectors."""
+
+    def segment(gp: pd.DataFrame, x_raw: np.ndarray, ids: np.ndarray, accept):
+        if gp.empty or ids.size < 2:
+            return None
+        if "layer" not in gp.columns:  # pre-multilayer graph tables
+            gp = gp.assign(layer=0, stride=1)
+        else:
+            # mixed old/new snapshots (merge-schema read): pre-upgrade rows
+            # surface layer/stride as NULL — they ARE base-layer rows
+            gp = gp.assign(layer=gp["layer"].fillna(0), stride=gp["stride"].fillna(1))
+        base_rows = gp[gp["layer"] == 0]
+        if base_rows.empty:
+            return ids[:0], np.empty(0)
+        # navigation space: unit vectors for cosine indexes (graph edges
+        # were built there); identical to raw for l2
+        x = _nav_vectors(x_raw, ctx.metric)
+        seeds = None
+        for _, u in gp[gp["layer"] > 0].sort_values("layer", ascending=False).iterrows():
+            s = int(u["stride"])
+            sample = np.arange(int(u["n_nodes"]), dtype=np.int64) * s
+            loc, _d, _e = _beam_search(
+                x[sample], ctx.qn, np.frombuffer(u["offsets"], "<u8"),
+                bytes(u["graph"]), k=4, ef=8,
+                seed_nodes=None if seeds is None else seeds // s,
+            )
+            seeds = sample[loc]  # base-space ids, divisible by lower strides
+        g = base_rows.iloc[0]
+        nodes, d2, _early = _beam_search(
+            x, ctx.qn, np.frombuffer(g["offsets"], "<u8"), bytes(g["graph"]),
+            ctx.k, ef, accept=accept, visited_limit=ctx.budget, seed_nodes=seeds,
+        )
+        if ctx.metric == "l2":
+            return ids[nodes], 1.0 / (1.0 + d2)  # S5 normalization (nav == raw)
+        # beam ORDER is cosine order (unit space); rescore the k survivors
+        # exactly from raw flat so returned scores are true cosine
+        return ids[nodes], _scores(x_raw[nodes], ctx.q, ctx.metric)
+
+    return segment
+
+
 def ann_topk_graph(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -505,8 +522,12 @@ def ann_topk_graph(
     auto_ef: bool = False,
 ) -> DataFrame:
     """Graph top-k under the index's build metric (l2 or cosine):
-    per-segment greedy beam → global top-k.
+    per-segment greedy beam → global top-k, in one cogroup with flat.
     ``ef`` defaults to ``max(k + overfetch, 64)`` (iTopK ≥ topK, O5).
+    Filters and tombstones are acceptDocs in the collector: the beam
+    navigates the full graph, only accepted nodes are collected (S10);
+    ``visited_limit`` is the per-leaf visit budget (see the driver
+    contract, ``ann._search``).
 
     ``auto_ef=True`` — recall-over-latency mode: the beam re-runs with a
     doubled ``ef`` until the returned top-k id set is STABLE between two
@@ -514,151 +535,35 @@ def ann_topk_graph(
     escalation decision reads only the k result ids driver-side; the
     stable run's rows are returned. This is the knob for workloads where
     a recall miss costs more than an extra pass (the reference tunes the
-    same trade through GPUSearchParams iTopK/searchWidth).
-
-    - ``filter_ext_ids`` + ANN tombstones apply as acceptDocs in the
-      collector: the beam navigates the full graph, only accepted nodes
-      are collected (filtered behavior on every format, S10).
-    - ``visited_limit``: per-leaf visit budget — a tiny budget degrades
-      recall but never errors (the reference collector's
-      visitedLimit/earlyTerminated contract).
-    - Segments present in ``ann_flat`` but absent from ``ann_graph``
-      (oversized for the NN_DESCENT build, O1) are brute-forced from the
-      flat storage in the same cogrouped pass — every vector is reachable
-      in graph mode, like ann_topk's B2 fallback ladder."""
+    same trade through GPUSearchParams iTopK/searchWidth)."""
     cfg = cfg or IndexConfig()
-    from cuvs_lucene_spark.operators.ann import (
-        _attach_aux,
-        _nav_query,
-        _nav_vectors,
-        _resolve_filter,
-        _resolve_tombstones,
-        _row_accept,
-        _scores,
-    )
-
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    q = np.asarray(query, dtype=np.float32)
-    q_nav = _nav_query(q, metric)
-    if k <= 0:
-        return spark.createDataFrame([], "ext_id long, score double")
     eff = ef or max(k + cfg.overfetch, 64)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-    tomb, tblobs = _resolve_tombstones(spark, cat)
 
-    def make_scan(eff):
-        def scan(key, gp: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"segment_id": [], "ext_id": [], "score": []}).astype(
-                {"segment_id": "int64", "ext_id": "int64", "score": "float64"}
-            )
-            if fp.empty:
-                return empty
-            fr = fp.iloc[0]
-            n = int(fr["n_vecs"])
-            if n == 0:
-                return empty
-            x_raw = np.frombuffer(fr["vectors"], np.float32).reshape(n, -1)
-            # navigation space: unit vectors for cosine indexes (graph edges
-            # were built there); identical to raw for l2
-            x = _nav_vectors(x_raw, metric)
-            ids = np.frombuffer(fr["ext_ids"], np.int64)
-            accept = _row_accept(fp, fr, ids, allowed, tomb)
-            seg = int(fr["segment_id"])
-            if gp.empty:
-                # B2 fallback: no graph row (segment above the NN_DESCENT
-                # threshold) → exact scan of the flat blob, accept-filtered
-                ok = np.arange(n) if accept is None else np.flatnonzero(accept)
-                if ok.size == 0:
-                    return empty
-                s = _scores(x_raw[ok], q, metric)
-                sel = np.lexsort((ids[ok], -s))[:k]
-                return pd.DataFrame(
-                    {"segment_id": seg, "ext_id": ids[ok][sel], "score": s[sel]}
-                )
-            if "layer" not in gp.columns:  # pre-multilayer graph tables
-                gp = gp.assign(layer=0, stride=1)
-            else:
-                # mixed old/new snapshots (merge-schema read): pre-upgrade rows
-                # surface layer/stride as NULL — they ARE base-layer rows
-                gp = gp.assign(
-                    layer=gp["layer"].fillna(0), stride=gp["stride"].fillna(1)
-                )
-            base_rows = gp[gp["layer"] == 0]
-            if base_rows.empty:
-                return empty
-            g = base_rows.iloc[0]
-            if n == 1:
-                if accept is not None and not accept[0]:
-                    return empty
-                return pd.DataFrame(
-                    {"segment_id": [seg], "ext_id": [int(ids[0])],
-                     "score": [float(_scores(x_raw[:1], q, metric)[0])]}
-                )
-            # multi-layer entry descent (top layer first): each layer's beam
-            # seeds the next with its best nodes mapped through the stride —
-            # O(log n) entry for big segments instead of the √n sweep
-            seeds = None
-            uppers = gp[gp["layer"] > 0].sort_values("layer", ascending=False)
-            for _, u in uppers.iterrows():
-                s = int(u["stride"])
-                sample = np.arange(int(u["n_nodes"]), dtype=np.int64) * s
-                u_off = np.frombuffer(u["offsets"], "<u8")
-                loc, _d, _e = _beam_search(
-                    x[sample], q_nav, u_off, bytes(u["graph"]), k=4, ef=8,
-                    seed_nodes=None if seeds is None else seeds // s,
-                )
-                seeds = sample[loc]  # base-space ids, divisible by lower strides
-            offsets = np.frombuffer(g["offsets"], "<u8")
-            nodes, d2, _early = _beam_search(
-                x, q_nav, offsets, bytes(g["graph"]), k, eff,
-                accept=accept, visited_limit=visited_limit, seed_nodes=seeds,
-            )
-            if metric == "l2":
-                score = 1.0 / (1.0 + d2)  # S5 normalization (d2 exact: nav==raw)
-            else:
-                # beam ORDER is cosine order (unit space); rescore the k
-                # survivors exactly from raw flat so returned scores are true
-                # cosine, not a unit-space distance transform
-                score = _scores(x_raw[nodes], q, metric)
-            return pd.DataFrame(
-                {
-                    "segment_id": seg,
-                    "ext_id": ids[nodes],
-                    "score": score,
-                }
-            )
+    def plan(s) -> DataFrame:
+        def topk(ef_: int) -> DataFrame:
+            graph = cat.read(spark, "ann_graph", merge_schema=True)
+            return s.top(s.cogroup(graph, _graph_segment(s.ctx, ef_)))
 
-        return scan
-
-    flat = _attach_aux(cat.read(spark, "ann_flat"), fblobs, tblobs)
-    def _topk(eff):
-        partials = (
-            cat.read(spark, "ann_graph", merge_schema=True)
-            .groupby("segment_id")
-            .cogroup(flat.groupby("segment_id"))
-            .applyInPandas(make_scan(eff), TOPK_SCHEMA)
-        )
-        return (
-            partials.orderBy(F.desc("score"), F.asc("ext_id"))
-            .limit(k)
-            .select("ext_id", "score")
+        if not auto_ef:
+            return topk(eff)
+        # recall escalation: double ef until the top-k id list is stable
+        # between consecutive widths (≤ 3 doublings); only k ids cross the
+        # driver per round, the stable run's rows are returned
+        rows = topk(eff).collect()
+        ef_cur = eff
+        for _ in range(3):
+            ef_cur *= 2
+            nxt = topk(ef_cur).collect()
+            stable = [r["ext_id"] for r in nxt] == [r["ext_id"] for r in rows]
+            rows = nxt
+            if stable:
+                break
+        return spark.createDataFrame(
+            [(int(r["ext_id"]), float(r["score"])) for r in rows],
+            "ext_id long, score double",
         )
 
-    if not auto_ef:
-        return _topk(eff)
-    # recall escalation: double ef until the top-k id list is stable
-    # between consecutive widths (≤ 3 doublings); only k ids cross the
-    # driver per round, the stable run's rows are returned
-    rows = _topk(eff).collect()
-    ef_cur = eff
-    for _ in range(3):
-        ef_cur *= 2
-        nxt = _topk(ef_cur).collect()
-        stable = [r["ext_id"] for r in nxt] == [r["ext_id"] for r in rows]
-        rows = nxt
-        if stable:
-            break
-    return spark.createDataFrame(
-        [(int(r["ext_id"]), float(r["score"])) for r in rows],
-        "ext_id long, score double",
+    return _search(
+        spark, cat, query, k, filter_ext_ids, filter_mode, plan,
+        visited_limit=visited_limit,
     )

@@ -43,6 +43,19 @@ EPOCH_STRIDE = 1 << 20
 STREAM_BASE = 1 << 41
 
 
+def _epoch_base(epoch: int) -> int:
+    return STREAM_BASE + (epoch + 1) * EPOCH_STRIDE
+
+
+def _with_epoch_segment(df: DataFrame, epoch: int, rows_per_segment: int) -> DataFrame:
+    """``df`` (with an ``ext_id``) plus its epoch-namespaced ``segment_id``
+    (see the module docstring) — the text and vector ingest share it."""
+    seg = (F.col("ext_id") / F.lit(rows_per_segment)).cast("long")
+    return df.withColumn(
+        "segment_id", F.lit(_epoch_base(epoch)) + F.pmod(seg, F.lit(EPOCH_STRIDE))
+    )
+
+
 def incremental_add(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -66,15 +79,7 @@ def incremental_add(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(content_col).cast("string").alias("content"),
     )
-    seg_base = STREAM_BASE + (epoch + 1) * EPOCH_STRIDE
-    base = base.withColumn(
-        "segment_id",
-        F.lit(seg_base)
-        + F.pmod(
-            (F.col("ext_id") / F.lit(cfg.rows_per_segment)).cast("long"),
-            F.lit(EPOCH_STRIDE),
-        ),
-    )
+    base = _with_epoch_segment(base, epoch, cfg.rows_per_segment)
     enriched = base.select(
         "segment_id",
         "ext_id",
@@ -138,20 +143,22 @@ def incremental_add_vectors(
     """Streaming ANN ingest: micro-batch epoch ≙ codec flush. The
     reference's codec builds a fresh per-segment vector index at EVERY
     Lucene commit (SURVEY §3.1); here each epoch's vectors become new ann
-    segments — flat + SQ + BQ + IVF rows — appended to the sidecar tables
+    segments — flat rows plus every maintained format's rows
+    (``ann.FORMATS``) — appended to the sidecar tables
     with the same idempotent epoch tags as the text path (redelivery
     replaces, committed epochs skip). Per-segment structures are
     independent, so appended segments need no rebuild of earlier ones;
     ``merge_ann`` later compacts, exactly like text segments."""
     from cuvs_lucene_spark.operators.ann import (
         ANN_FORMAT_VERSION,
-        BQ_SCHEMA,
         FLAT_SCHEMA,
-        IVF_SCHEMA,
-        SQ_SCHEMA,
-        _bq_rows,
-        _ivf_rows,
-        _sq_rows,
+        FORMATS,
+        IDS_SCHEMA,
+        _ann_ids,
+        _append_formats,
+        _check_index_metric,
+        _index_metric,
+        _mark_bf_fallback,
         build_flat_pdf,
         validate_vectors,
     )
@@ -161,13 +168,7 @@ def incremental_add_vectors(
     validate_vectors(vectors, vector_col, id_col, cfg.ann)
     m = cat.read_manifest()
     if "ann_metric" not in m.get("config", {}):
-        if cfg.ann.metric == "dot":
-            # same guard as build_ann: MIP has no normalize-to-L2
-            # reduction, the derived structures would rank wrong-metric
-            raise ValueError(
-                "metric 'dot' is supported on exact scans only; build the "
-                "index with 'l2' or 'cosine'"
-            )
+        _check_index_metric(cfg.ann.metric)  # same guard as build_ann
         cat.set_config(
             {
                 **m.get("config", {}),
@@ -176,102 +177,50 @@ def incremental_add_vectors(
                 "rows_per_segment": cfg.rows_per_segment,
             }
         )
-    seg_base = STREAM_BASE + (epoch + 1) * EPOCH_STRIDE
-    base = vectors.select(
-        F.col(id_col).cast("long").alias("ext_id"),
-        F.col(vector_col).alias("vector"),
-    ).withColumn(
-        "segment_id",
-        F.lit(seg_base)
-        + F.pmod(
-            (F.col("ext_id") / F.lit(cfg.rows_per_segment)).cast("long"),
-            F.lit(EPOCH_STRIDE),
+    base = _with_epoch_segment(
+        vectors.select(
+            F.col(id_col).cast("long").alias("ext_id"),
+            F.col(vector_col).alias("vector"),
         ),
+        epoch, cfg.rows_per_segment,
     )
 
-    flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA).cache()
     if cat.exists("ann_flat") and not cat.exists("ann_ids"):
         # pre-v3 catalog: materialize the FULL map from the existing flat
         # blobs before this epoch appends — seeding an empty table here
         # would disable the self-heal and silently prune the pre-existing
         # segments from every future DataFrame-filtered query
-        from cuvs_lucene_spark.operators.ann import _ann_ids
-
         _ann_ids(spark, cat)
-    for table, schema in (
-        ("ann_flat", FLAT_SCHEMA),
-        ("ann_ids", "segment_id long, ext_id long"),
-        ("ann_sq", SQ_SCHEMA),
-        ("ann_bq", BQ_SCHEMA),
-        ("ann_ivf", IVF_SCHEMA),
-    ):
+    seeds = [("ann_flat", FLAT_SCHEMA), ("ann_ids", IDS_SCHEMA)] + [
+        (f.table, f.schema) for f in FORMATS.values() if f.default
+    ]
+    for table, schema in seeds:
         if not cat.exists(table):
             cat.write(spark.createDataFrame([], schema), table)
     tag = f"ann_epoch_{epoch}"
-    # derived structures follow the CATALOG's metric (set at first epoch /
-    # batch build), never the per-call cfg — similarity is index state
-    metric = cat.read_manifest().get("config", {}).get("ann_metric", "l2")
-    cat.append(flat, "ann_flat", tag=tag)
+    cat.append(
+        base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA),
+        "ann_flat", tag=tag,
+    )
     # the DataFrame-filter tier's row-level map follows every flat append —
     # a stale ann_ids would silently prune the new segments from filtered
     # queries (its blob join is an inner join)
     cat.append(base.select("segment_id", "ext_id"), "ann_ids", tag=tag)
-    cat.append(_sq_rows(flat, metric), "ann_sq", tag=tag)
-    cat.append(_bq_rows(flat, metric), "ann_bq", tag=tag)
-    cat.append(_ivf_rows(flat, cfg.ann, metric), "ann_ivf", tag=tag)
-    # derived graph/PQ structures (if built on this catalog) get this
-    # epoch's segments too — per-segment independence means we only build
-    # over the NEW flat rows and append
-    if cat.exists("ann_graph"):
-        from cuvs_lucene_spark.operators.ann_graph import _graph_rows
-
-        cat.append(_graph_rows(flat, cfg, metric=metric), "ann_graph", tag=tag)
-    if cat.exists("ann_pq"):
-        from cuvs_lucene_spark.operators.ann import _pq_rows
-
-        cat.append(_pq_rows(flat, cfg, metric), "ann_pq", tag=tag)
-    if cat.exists("ann_ivfpq") and cat.exists("ann_pq"):
-        # combined IVF-PQ lists for the NEW segments only: re-read the
-        # JUST-COMMITTED ivf lists and pq codebooks filtered to this
-        # epoch's segment range — never re-run the k-means clustering that
-        # produced them (it is the dominant CPU cost of ingest)
-        from cuvs_lucene_spark.operators.ann import _ivfpq_rows
-
-        in_epoch = (F.col("segment_id") >= seg_base) & (
-            F.col("segment_id") < seg_base + EPOCH_STRIDE
-        )
-        cat.append(
-            _ivfpq_rows(
-                cat.read(spark, "ann_ivf").filter(in_epoch),
-                cat.read(spark, "ann_pq").filter(in_epoch),
-                metric,
-            ),
-            "ann_ivfpq",
-            tag=tag,
-        )
-    # maintain the B2 brute-force fallback list for sub-min-size segments
-    flat_segs = {int(r["segment_id"]) for r in flat.select("segment_id").collect()}
-    ivf_segs = {
-        int(r["segment_id"])
-        for r in cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1)
-        .select("segment_id")
-        .distinct()
-        .collect()
-    }
-    prev_stage = cat.read_manifest()["stages"].get("ann_ivf", {})
-    prev = set(prev_stage.get("bf_fallback_segments", []))
-    # mark_stage REPLACES the stage dict — carry the other metrics forward
-    # (n_ivf_segments drives probe_mode=auto's driver→distributed
-    # escalation; losing it would pin a streaming-grown catalog to the
-    # driver-side probe forever)
-    carried = {
-        k: v for k, v in prev_stage.items() if k not in ("status", "at")
-    }
-    carried["bf_fallback_segments"] = sorted(prev | (flat_segs - ivf_segs))
-    carried["n_ivf_segments"] = len(ivf_segs)
-    cat.mark_stage("ann_ivf", **carried)
-    flat.unpersist()
+    # every maintained format gets this epoch's segments, built from the
+    # JUST-COMMITTED rows of the epoch's range (per-segment independence:
+    # earlier segments are never rebuilt, and IVF-PQ re-encodes the
+    # committed IVF lists instead of re-running their k-means). Formats
+    # follow the CATALOG's metric (set at first epoch / batch build), never
+    # the per-call cfg — similarity is index state
+    seg_base = _epoch_base(epoch)
+    in_epoch = (F.col("segment_id") >= seg_base) & (
+        F.col("segment_id") < seg_base + EPOCH_STRIDE
+    )
+    _append_formats(
+        cat, cfg, _index_metric(cat),
+        lambda t: cat.read(spark, t).filter(in_epoch), tag,
+    )
+    _mark_bf_fallback(spark, cat)
     cat.mark_stage(f"ann_epoch_{epoch}", n_epoch=epoch)
 
 

@@ -339,9 +339,11 @@ def test_delete_ann_dataframe_requires_ext_id_column(spark, tmp_path):
 
 
 def test_probe_mode_validated_and_shuffle_never_driver(spark, tmp_path, monkeypatch):
-    """Unknown probe_mode raises on both entry points; probe_mode='shuffle'
-    on the single-query path degrades to the DISTRIBUTED probe — never
-    the driver tier it was opting out of (poisoned driver pack)."""
+    """Unknown probe_mode raises on both entry points, as do an unknown
+    ann_topk mode and filter_mode (with or without a filter);
+    probe_mode='shuffle' on the single-query path degrades to the
+    DISTRIBUTED probe — never the driver tier it was opting out of
+    (poisoned driver pack)."""
     cat, df = _build(spark, str(tmp_path / "probemode"))
     with pytest.raises(ValueError, match="probe_mode"):
         A.ann_topk(spark, cat, _vec(1), k=5, cfg=CFG, mode="ivf",
@@ -351,6 +353,14 @@ def test_probe_mode_validated_and_shuffle_never_driver(spark, tmp_path, monkeypa
     )
     with pytest.raises(ValueError, match="probe_mode"):
         A.knn_join_ivf(spark, cat, q, k=3, probe_mode="bogus")
+    # unknown search mode / filter tier raise instead of running a default
+    with pytest.raises(ValueError, match="mode"):
+        A.ann_topk(spark, cat, _vec(1), k=5, cfg=CFG, mode="sq")
+    with pytest.raises(ValueError, match="filter_mode"):
+        A.ann_topk(spark, cat, _vec(1), k=5, cfg=CFG, filter_mode="dff",
+                   filter_ext_ids={1, 2, 3})
+    with pytest.raises(ValueError, match="filter_mode"):
+        A.ann_topk_sq(spark, cat, _vec(1), k=5, cfg=CFG, filter_mode="dff")
 
     def poisoned_pack(*a, **k):
         raise AssertionError("driver centroid pack used under probe_mode='shuffle'")

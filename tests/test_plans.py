@@ -141,7 +141,6 @@ def test_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monkeypatch):
         raise AssertionError("driver-side centroid collect on the distributed path")
 
     monkeypatch.setattr(A, "_centroid_pack", _boom)
-    monkeypatch.setattr(A, "_centroid_rows", _boom)
     got = [(r["ext_id"], round(r["score"], 9)) for r in A.ann_topk(
         spark, cat, q, k=5, cfg=CFG, mode="ivf", probe_mode="distributed").collect()]
     assert got == want
@@ -170,32 +169,20 @@ def test_ivfpq_probe_pushes_list_filter_and_no_cartesian(spark, tmp_path):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_knn_join_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monkeypatch):
+def test_knn_join_ivf_distributed_probe_no_driver_collect(spark, ann_cat, monkeypatch):
     """knn_join_ivf's distributed probe: NO collect whose size grows with
     segment count (the centroid pack must never land in the driver /
     closure) — poison the driver-pack helpers and assert the distributed
     result matches the driver-ranked one, bf-fallback segment included."""
     import cuvs_lucene_spark.operators.ann as A
 
-    n = 301  # segments of 150/150/1 — the last is a bf-fallback pseudo-list
-    rows = [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cat = A.build_ann(
-        spark, df, str(tmp_path / "joinprobe"), CFG,
-        id_col="vec_id", vector_col="embedding", rows_per_segment=150,
-    )
+    cat, df = ann_cat  # segments of 150/150/1 — the last is a bf-fallback pseudo-list
     qdf = df.filter(F.col("vec_id").isin([0, 17, 300])).selectExpr(
         "vec_id AS q_id", "embedding AS q_vec"
     )
     want = sorted(
         (r["q_id"], r["rank"], r["vec_id"], r["score"])
         for r in A.knn_join_ivf(spark, cat, qdf, k=3, probe_mode="driver").collect()
-    )
-    monkeypatch.setattr(
-        A, "_centroid_rows",
-        lambda *a, **k: (_ for _ in ()).throw(
-            AssertionError("driver centroid collect on the distributed join path")
-        ),
     )
     monkeypatch.setattr(
         A, "_centroid_pack",
@@ -210,7 +197,7 @@ def test_knn_join_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monke
     assert got == want
 
 
-def test_knn_join_ivf_shuffle_tier_no_broadcast_no_collect(spark, tmp_path, monkeypatch):
+def test_knn_join_ivf_shuffle_tier_no_broadcast_no_collect(spark, ann_cat, monkeypatch):
     """The many-segments × many-queries cell: probe_mode='shuffle' must
     neither collect centroid state on the driver NOR broadcast a
     DataFrame whose size grows with the query count. Poison both the
@@ -219,13 +206,7 @@ def test_knn_join_ivf_shuffle_tier_no_broadcast_no_collect(spark, tmp_path, monk
     match the driver-ranked tier — bf-fallback pseudo-list included."""
     import cuvs_lucene_spark.operators.ann as A
 
-    n = 301  # segments of 150/150/1 — the last is a bf-fallback pseudo-list
-    rows = [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cat = A.build_ann(
-        spark, df, str(tmp_path / "joinshuffle"), CFG,
-        id_col="vec_id", vector_col="embedding", rows_per_segment=150,
-    )
+    cat, df = ann_cat  # segments of 150/150/1 — the last is a bf-fallback pseudo-list
     qdf = df.filter(F.col("vec_id").isin([0, 17, 300])).selectExpr(
         "vec_id AS q_id", "embedding AS q_vec"
     )
@@ -236,7 +217,6 @@ def test_knn_join_ivf_shuffle_tier_no_broadcast_no_collect(spark, tmp_path, monk
     boom = lambda *a, **k: (_ for _ in ()).throw(  # noqa: E731
         AssertionError("driver/broadcast state on the shuffle join tier")
     )
-    monkeypatch.setattr(A, "_centroid_rows", boom)
     monkeypatch.setattr(A, "_centroid_pack", boom)
     monkeypatch.setattr(A.F, "broadcast", boom)
     got_df = A.knn_join_ivf(spark, cat, qdf, k=3, probe_mode="shuffle")
@@ -283,7 +263,6 @@ def test_probe_ladder_auto_switches_to_distributed(spark, tmp_path, monkeypatch)
         AssertionError("auto mode stayed on the driver above the ladder threshold")
     )
     monkeypatch.setattr(A, "_centroid_pack", boom)
-    monkeypatch.setattr(A, "_centroid_rows", boom)
     got_topk = [(r["ext_id"], round(r["score"], 9)) for r in A.ann_topk(
         spark, cat, q, k=5, cfg=CFG, mode="ivf", probe_mode="auto").collect()]
     got_join = sorted(
@@ -452,3 +431,68 @@ def test_match_all_never_scans_postings(spark, cat):
 
     plan = _plan(match_all_docs(spark, cat, CFG))
     assert "postings" not in plan, "MatchAllDocs must read only the doc map"
+
+
+ANN_JOB_PINS = {  # warm per-query Spark jobs (the query-tail pin)
+    "exact": 1, "ivf": 2, "ivf_set_filter": 2, "sq": 3, "bq": 3,
+    "bq_rerank": 3, "pq": 3, "ivfpq": 5, "graph": 3, "knn_join_ivf": 4,
+}
+
+
+@pytest.fixture(scope="module")
+def ann_cat(spark, tmp_path_factory):
+    """301 8-d vectors in segments of 150/150/1 — the last segment has no
+    IVF index and takes the B2 fallback."""
+    from cuvs_lucene_spark.operators.ann import build_ann, build_ann_ivfpq
+    from cuvs_lucene_spark.operators.ann_graph import build_ann_graph
+
+    rows = [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in range(301)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cat = build_ann(
+        spark, df, str(tmp_path_factory.mktemp("annjobs")), CFG,
+        id_col="vec_id", vector_col="embedding", rows_per_segment=150,
+    )
+    build_ann_ivfpq(spark, cat, CFG)  # builds the PQ codebooks first
+    build_ann_graph(spark, cat, CFG)
+    return cat, df
+
+
+def test_ann_query_job_counts(spark, ann_cat):
+    """Every ANN search mode runs a fixed, small number of Spark jobs per
+    warm query: the second of two identical calls is counted under a job
+    group (memos filled by the first — centroid pack, schemas)."""
+    import cuvs_lucene_spark.operators.ann as A
+    from cuvs_lucene_spark.operators.ann_graph import ann_topk_graph
+
+    cat, df = ann_cat
+    q = [1.0] * 8
+    qdf = df.filter(F.col("vec_id").isin([0, 17, 300])).selectExpr(
+        "vec_id AS q_id", "embedding AS q_vec"
+    )
+    calls = {
+        "exact": lambda: A.ann_topk(spark, cat, q, k=5, cfg=CFG, mode="exact"),
+        "ivf": lambda: A.ann_topk(spark, cat, q, k=5, cfg=CFG, mode="ivf"),
+        "ivf_set_filter": lambda: A.ann_topk(
+            spark, cat, q, k=5, cfg=CFG, mode="ivf", filter_ext_ids=set(range(0, 301, 2))
+        ),
+        "sq": lambda: A.ann_topk_sq(spark, cat, q, k=5, cfg=CFG),
+        "bq": lambda: A.ann_topk_bq(spark, cat, q, k=5, cfg=CFG),
+        "bq_rerank": lambda: A.ann_topk_bq(spark, cat, q, k=5, cfg=CFG, rerank_factor=3),
+        "pq": lambda: A.ann_topk_pq(spark, cat, q, k=5, cfg=CFG),
+        "ivfpq": lambda: A.ann_topk_ivfpq(spark, cat, q, k=5, cfg=CFG),
+        "graph": lambda: ann_topk_graph(spark, cat, q, k=5, cfg=CFG),
+        "knn_join_ivf": lambda: A.knn_join_ivf(spark, cat, qdf, k=3),
+    }
+    sc = spark.sparkContext
+    counts = {}
+    for mode, call in calls.items():
+        assert call().collect()
+        group = f"test_ann_query_job_counts_{mode}"
+        sc.setJobGroup(group, group)
+        try:
+            call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert {m: n for m, n in counts.items() if n > ANN_JOB_PINS[m]} == {}, counts
