@@ -26,9 +26,9 @@ that format knows:
 Build, streaming epochs, merge and compaction all walk this one list, so
 a new format is one entry plus a thin search wrapper.
 
-Search (S1-S6). Each public search function picks a plan shape for its
-format and hands it to the driver (``_search`` / ``_Search``), which
-holds the contract the reference's host supplies around every format:
+Search (S1-S6). Each public search function writes its format's plan
+in the pieces of one search driver (``_search`` / ``_Plan``), which holds
+the contract the reference's host supplies around every format:
 
 - metric: derived formats search under the index's build metric; cosine
   indexes navigate in unit space (``_nav_vectors``) and rescore raw flat
@@ -49,23 +49,44 @@ holds the contract the reference's host supplies around every format:
   candidates per leaf and rescore them exactly from flat;
 - one tie rule: best first, lower ext_id first among equals —
   ``lexsort((ids, key))`` in the numpy kernels (``_exact_topk``,
-  ``_rerank_topk``) and ``orderBy(score desc, ext_id asc)`` in the global
-  top-k.
+  ``_rerank_topk``, ``_top_order``) and ``orderBy(score desc, ext_id
+  asc)`` in a Spark plan's global top-k.
 
-Plan shapes stay per format: exact and IVF are one ``mapInPandas`` over
-flat rows or the probed lists; SQ, PQ, BQ and the graph are one cogroup
-with ``ann_flat``; IVF-PQ is an ADC ``mapInPandas`` over the probed code
-lists, then a rerank cogroup. Routing mirrors S1: ``k > max_k_ann`` or no
-IVF index → brute force.
+Two tiers run a plan, with the same per-leaf kernels, so they return the
+same (ext_id, score) lists bit for bit:
+
+- resident (``_Resident``): the per-leaf search runs in the serving
+  process, as Lucene's stock HNSW reader does for the reference
+  (``Lucene99AcceleratedHNSWVectorsFormat.java:103-110``). Each catalog
+  keeps one pack (``_Pack``): every table read by one ``toArrow()`` at its
+  first use and kept until its own manifest entry changes. The kernels
+  run over the pack's pandas frames in the driver and the top-k comes
+  back as a ``LocalRelation``: a warm query runs no Spark job. It serves
+  single queries while the ANN tables' committed bytes fit
+  ``RESIDENT_MAX_BYTES`` (sized from the measured crossover with the
+  Spark tier);
+- Spark (``_Search``): the plan shapes per format — exact and IVF are one
+  ``mapInPandas`` over flat rows or the probed lists; SQ, PQ, BQ and the
+  graph are one cogroup with ``ann_flat``; IVF-PQ is an ADC
+  ``mapInPandas`` over the probed code lists, then a rerank cogroup. It
+  serves a catalog over the budget, filters and tombstones large enough
+  for the blob tier, the distributed probe modes, and any query that
+  reads a table out of sync with flat (see ``_search``). ``knn_join_ivf``
+  takes a query DataFrame and always runs here.
+
+Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 """
 
 from __future__ import annotations
 
+import os
+import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -104,6 +125,26 @@ GRAPH_SCHEMA = (
     "offsets binary, graph binary"
 )
 TOPK_SCHEMA = "segment_id long, ext_id long, score double"
+
+_TYPES = {"long": (pa.int64(), np.int64), "int": (pa.int32(), np.int32),
+          "double": (pa.float64(), np.float64)}
+
+
+def _fields(schema: str) -> list[tuple[str, str]]:
+    """``"a long, b int"`` → [("a", "long"), ("b", "int")] (flat schemas only)."""
+    return [tuple(f.split()) for f in schema.split(",")]
+
+
+def _local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
+    """A small driver-side frame built from Arrow: a ``LocalRelation``,
+    which Spark scans and collects with no job (a Python list costs one
+    job and a worker round trip). No ``cols`` gives the empty frame."""
+    fields = _fields(schema)
+    cols = cols or [()] * len(fields)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c, _TYPES[t][0]) for (n, t), c in zip(fields, cols)}),
+        schema,
+    )
 
 
 def _unit_rows(x: np.ndarray) -> np.ndarray:
@@ -702,6 +743,13 @@ def _ann_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
     the heal is itself a consistent commit."""
     if cat.exists("ann_ids") and _derived_in_sync(cat, "ann_ids"):
         return cat.read(spark, "ann_ids")
+    return _write_ids(spark, cat)
+
+
+def _write_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
+    """Re-derive the whole ``ann_ids`` map from ``ann_flat`` and commit it
+    covering flat's append tags; a pinned commit-point reader gets the
+    derived frame uncommitted."""
 
     def explode(it):
         for pdf in it:
@@ -782,14 +830,14 @@ def _resolve_filter(
     )
     if filter_mode == "df":
         return None, _filter_blobs(spark, cat, fdf)
-    if filter_mode == "broadcast":
-        # forced closure tier: the caller vouches the set fits the driver
-        head = fdf.collect()
-        return np.sort(np.array([r[0] for r in head], dtype=np.int64)), None
-    head = fdf.limit(FILTER_BROADCAST_MAX + 1).collect()
-    if len(head) > FILTER_BROADCAST_MAX:
+    # one Arrow read (a limit collect() scans partitions incrementally, a
+    # job per round); ``broadcast`` is the forced closure tier: the caller
+    # vouches the set fits the driver
+    head = (fdf if filter_mode == "broadcast" else fdf.limit(FILTER_BROADCAST_MAX + 1))
+    head = head.toArrow().column("ext_id").to_numpy()
+    if head.size > FILTER_BROADCAST_MAX and filter_mode == "auto":
         return None, _filter_blobs(spark, cat, fdf)
-    return np.sort(np.array([r[0] for r in head], dtype=np.int64)), None
+    return np.sort(head.astype(np.int64)), None
 
 
 def _blob(frame: pd.DataFrame, row, col: str) -> np.ndarray | None:
@@ -899,7 +947,7 @@ def delete_ann(
             F.col(id_col).cast("long").alias("ext_id")
         ).distinct()
     else:
-        new = spark.createDataFrame([(int(i),) for i in set(ext_ids)], "ext_id long")
+        new = _local_frame(spark, "ext_id long", sorted({int(i) for i in ext_ids}))
     if cat.exists("ann_tombstones"):
         new = cat.read(spark, "ann_tombstones").unionByName(new).distinct()
     new = new.cache()
@@ -942,32 +990,150 @@ def delete_ann(
     return n
 
 
-def _manifest_version(cat: IndexCatalog) -> float:
-    """Latest table commit time — the key of the per-catalog query memos."""
-    tables = cat.read_manifest()["tables"].values()
-    return max((e.get("committed_at", 0) for e in tables), default=0)
+# ---------------------------------------------------------------------------
+# Resident pack: the driver-side copy of a catalog's ANN tables
+# ---------------------------------------------------------------------------
+
+RESIDENT_MAX_BYTES = 768 << 20  # single queries run in the driver while the
+                                # ANN tables' committed bytes fit (see _search).
+# Measured on fixtures.generate_embeddings corpora (64-d, local[4]): the
+# resident tier was faster in exact, ivf and graph mode at 105k, 420k and
+# 1.01M vectors (75.6, 304 and 734 MB committed) — no crossover, since the
+# Spark tier re-reads the tables per query — so the budget is the largest
+# measured size, rounded up; the pack holds ~0.9x the committed bytes.
+PACK_TABLES = ("ann_flat", *(f.table for f in FORMATS.values()))
+
+
+class _Pack:
+    """One catalog's driver-resident ANN state. Each entry is read once, at
+    its first use, and keyed by its table's own manifest entry, so a commit
+    to another table (a delete's tombstones, a new sidecar) leaves it
+    valid. One lock serializes fills, so concurrent first queries read each
+    table once; a refill drops the superseded entry before reading."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.entries: dict = {}  # name -> (key, value, nbytes)
+
+    def get(self, name, key, fill, usable=lambda value: True):
+        """The entry ``name`` at ``key``; ``fill() -> (value, nbytes)``
+        replaces it when it is missing, superseded or not ``usable``."""
+        with self.lock:
+            hit = self.entries.get(name)
+            if hit is not None and hit[0] == key and usable(hit[1]):
+                return hit[1]
+            self.entries.pop(name, None)
+            value, nbytes = fill()
+            self.entries[name] = (key, value, nbytes)
+            return value
+
+    def drop(self, pred) -> None:
+        with self.lock:
+            for name in [n for n, e in self.entries.items() if pred(n, e[1])]:
+                del self.entries[name]
+
+    def nbytes(self) -> int:
+        """Arrow bytes read into the pack's current entries."""
+        with self.lock:
+            return sum(e[2] for e in self.entries.values())
+
+
+def _pack(cat: IndexCatalog) -> _Pack:
+    return cat.__dict__.get("_ann_pack") or cat.__dict__.setdefault("_ann_pack", _Pack())
+
+
+def _entry_key(cat: IndexCatalog, table: str, tables: dict | None = None) -> tuple:
+    """What a read of ``table`` returns is fixed by its snapshot, its
+    appends and its logically dropped segments (all immutable by name)."""
+    e = (tables or cat.read_manifest()["tables"]).get(table) or {}
+    return (e.get("snapshot"), tuple(e.get("appends", ())),
+            tuple(e.get("dropped_segments", ())))
+
+
+def _read_arrow(spark: SparkSession, cat: IndexCatalog, table: str, where=None) -> pa.Table:
+    """One committed table (optionally filtered) into the driver: one job."""
+    df = cat.read(spark, table, merge_schema=(table == "ann_graph"))
+    return (df if where is None else df.filter(where)).toArrow()
+
+
+def _disk_bytes(cat: IndexCatalog, table: str, tables: dict) -> int:
+    """Committed bytes of ``table``, memoized per entry (no Spark job)."""
+
+    def walk():
+        n = sum(
+            os.path.getsize(os.path.join(d, f))
+            for top in cat.table_dirs(table) for d, _, fs in os.walk(top) for f in fs
+        )
+        return n, 0
+
+    return _pack(cat).get(("bytes", table), _entry_key(cat, table, tables), walk)
+
+
+def _resident_fits(cat: IndexCatalog) -> bool:
+    """Whether the catalog's ANN tables fit ``RESIDENT_MAX_BYTES``. Over
+    it, the resident tables are released (the centroid pack stays)."""
+    tables = cat.read_manifest()["tables"]
+    committed = [t for t in PACK_TABLES if (tables.get(t) or {}).get("snapshot")]
+    if sum(_disk_bytes(cat, t, tables) for t in committed) <= RESIDENT_MAX_BYTES:
+        return True
+    _pack(cat).drop(lambda n, v: n in PACK_TABLES and not (
+        n == "ann_ivf" and v.lists is None))
+    return False
+
+
+class _Ivf(NamedTuple):
+    """The pack's ``ann_ivf`` entry: the centroid pack (the centroid rows'
+    only driver copy) and, when resident, the list rows."""
+
+    cents: dict | None
+    lists: pd.DataFrame | None
+
+
+def _ivf_entry(spark: SparkSession, cat: IndexCatalog, lists: bool) -> _Ivf:
+    """The ``ann_ivf`` entry, with its list rows when ``lists`` is asked
+    for or the catalog is resident (so a resident catalog reads it once);
+    else only the centroid rows (pushed ``list_id = -1`` scan)."""
+    full = lists or _resident_fits(cat)
+
+    def fill():
+        at = _read_arrow(spark, cat, "ann_ivf", None if full else F.col("list_id") == -1)
+        pdf = at.to_pandas()
+        c = pdf["list_id"].to_numpy() == -1
+        rows = pdf[~c].reset_index(drop=True) if full else None
+        return _Ivf(_centroids(pdf[c]), rows), at.nbytes
+
+    return _pack(cat).get("ann_ivf", _entry_key(cat, "ann_ivf"), fill,
+                          lambda v: v.lists is not None or not full)
+
+
+def _resident_rows(spark: SparkSession, cat: IndexCatalog, table: str) -> pd.DataFrame:
+    """Every row of ``table`` (``ann_ivf``: its list rows) from the pack."""
+    if table == "ann_ivf":
+        return _ivf_entry(spark, cat, lists=True).lists
+
+    def fill():
+        at = _read_arrow(spark, cat, table)
+        return at.to_pandas(), at.nbytes
+
+    return _pack(cat).get(table, _entry_key(cat, table), fill)
 
 
 def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | None:
-    """Sorted tombstoned ext_ids (None when empty), memoized per manifest
-    version — the CLOSURE tier, used only when the registered count is at
-    most ``FILTER_BROADCAST_MAX`` (``_resolve_tombstones`` routes bigger
-    sets through per-segment blobs; this array never grows with them)."""
+    """Sorted tombstoned ext_ids (None when empty), kept in the pack — the
+    CLOSURE tier, used only when the registered count is at most
+    ``FILTER_BROADCAST_MAX`` (``_resolve_tombstones`` routes bigger sets
+    through per-segment blobs; this array never grows with them)."""
     if not cat.exists("ann_tombstones"):
         return None
     if cat.table_lineage("ann_tombstones").get("n") == 0:
         return None
-    ver = _manifest_version(cat)
-    memo = getattr(cat, "_ann_tomb_memo", None)
-    if memo is not None and memo["ver"] == ver:
-        return memo["arr"]
-    arr = np.array(
-        sorted(r["ext_id"] for r in cat.read(spark, "ann_tombstones").collect()),
-        dtype=np.int64,
-    )
-    arr = arr if arr.size else None
-    cat._ann_tomb_memo = {"ver": ver, "arr": arr}
-    return arr
+
+    def fill():
+        arr = np.sort(_read_arrow(spark, cat, "ann_tombstones")
+                      .column("ext_id").to_numpy().astype(np.int64))
+        return (arr if arr.size else None), arr.nbytes
+
+    return _pack(cat).get("ann_tombstones", _entry_key(cat, "ann_tombstones"), fill)
 
 
 def _resolve_tombstones(
@@ -1129,21 +1295,54 @@ def _segment_kernel(ctx: _Query, segment, value: str):
     return scan
 
 
-class _Search:
-    """Driver side of one resolved single-query search (see
-    :func:`_search`): the plan pieces every format shares."""
+class _Plan:
+    """The plan pieces one single-query search is written in (see
+    :func:`_search`). Two tiers implement them: :class:`_Search` builds a
+    Spark plan over the committed tables, :class:`_Resident` runs the same
+    kernels over the pack's frames in the driver."""
+
+    def coarse(self, fmt: AnnFormat, rerank_factor: int | None,
+               flat_cols: tuple = ()):
+        """Coarse cut over ``fmt``'s codes, cogrouped with flat. With a
+        rerank factor, the ``k · factor`` coarse-best per leaf are
+        rescored exactly; without one, the coarse distances are the
+        result (BQ's Hamming search)."""
+        ctx, coarse = self.ctx, fmt.coarse
+        m = ctx.k * max(1, rerank_factor or 1)
+
+        def segment(rows, x, ids, accept):
+            approx = coarse(next(rows.itertuples(index=False), None), ctx, x)
+            if approx is None:
+                return None
+            if rerank_factor is None:
+                cut = _coarse_cut(ids, approx, m, accept, ctx.budget)
+                return ids[cut], approx[cut]
+            return _rerank_topk(
+                x, ids, ctx.q, ctx.metric, ctx.k, approx, m, accept, ctx.budget
+            )
+
+        value = "score" if rerank_factor is not None else "hamming"
+        return self.cogroup(self.table(fmt.table), segment, value, flat_cols)
+
+
+class _Search(_Plan):
+    """The Spark tier: the plan pieces as DataFrames over the committed
+    tables, with the acceptDocs blobs (if any) riding the scans."""
 
     def __init__(self, spark, cat, ctx: _Query, fblobs, tblobs):
         self.spark, self.cat, self.ctx = spark, cat, ctx
         self.fblobs, self.tblobs = fblobs, tblobs
+
+    def table(self, name: str, *cols: str) -> DataFrame:
+        df = self.cat.read(self.spark, name, merge_schema=(name == "ann_graph"))
+        return df.select(*cols) if cols else df
 
     def aux(self, df: DataFrame) -> DataFrame:
         """Ride the per-segment acceptDocs blobs (if any) on a scan."""
         return _attach_aux(df, self.fblobs, self.tblobs)
 
     def flat(self, *cols: str) -> DataFrame:
-        df = self.cat.read(self.spark, "ann_flat")
-        return self.aux(df.select(*cols) if cols else df)
+        return self.aux(self.table("ann_flat", *cols))
 
     def exact(self, rows: DataFrame) -> DataFrame:
         """Exact per-row top-k partials of flat or IVF list rows."""
@@ -1169,30 +1368,21 @@ class _Search:
             )
         )
 
-    def coarse(self, fmt: AnnFormat, rerank_factor: int | None,
-               flat_cols: tuple = ()) -> DataFrame:
-        """Coarse cut over ``fmt``'s codes, cogrouped with flat. With a
-        rerank factor, the ``k · factor`` coarse-best per leaf are
-        rescored exactly; without one, the coarse distances are the
-        result (BQ's Hamming search)."""
-        ctx, coarse = self.ctx, fmt.coarse
-        m = ctx.k * max(1, rerank_factor or 1)
-
-        def segment(rows, x, ids, accept):
-            approx = coarse(next(rows.itertuples(index=False), None), ctx, x)
-            if approx is None:
-                return None
-            if rerank_factor is None:
-                cut = _coarse_cut(ids, approx, m, accept, ctx.budget)
-                return ids[cut], approx[cut]
-            return _rerank_topk(
-                x, ids, ctx.q, ctx.metric, ctx.k, approx, m, accept, ctx.budget
-            )
-
-        value = "score" if rerank_factor is not None else "hamming"
-        return self.cogroup(
-            self.cat.read(self.spark, fmt.table), segment, value, flat_cols
+    def probe(self, table: str, nprobe: int | None, probe_mode: str) -> DataFrame | None:
+        """The list rows of ``table`` the query probes (None: no IVF index)."""
+        return _probe_select(
+            self.spark, self.cat, self.table(table).filter(F.col("list_id") >= 0),
+            self.ctx.qn, nprobe, probe_mode,
         )
+
+    def live(self, lists: DataFrame) -> DataFrame:
+        return _live_lists(self.spark, self.cat, lists)
+
+    def join(self, left: DataFrame, right: DataFrame, on: str) -> DataFrame:
+        return left.join(right, on)
+
+    def map(self, rows: DataFrame, fn, schema: str) -> DataFrame:
+        return rows.mapInPandas(fn, schema)
 
     def top(self, partials: DataFrame, value: str = "score") -> DataFrame:
         """Global top-k of the per-segment partials (same tie rule)."""
@@ -1204,6 +1394,99 @@ class _Search:
         )
 
 
+class _SparkTier(Exception):
+    """Raised by :class:`_Resident` when the query must take the Spark tier."""
+
+
+def _frame(parts, schema: str) -> pd.DataFrame:
+    """Concatenate a kernel's output frames (typed and empty when none)."""
+    parts = list(parts)
+    if parts:
+        return pd.concat(parts, ignore_index=True)
+    return pd.DataFrame({n: np.empty(0, _TYPES[t][1]) for n, t in _fields(schema)})
+
+
+class _Resident(_Plan):
+    """The resident tier: the plan pieces over the pack's pandas frames,
+    run in the driver through the same kernel bodies the Spark tier ships
+    (``_scan_exact``, ``_segment_kernel``), so scores are bit-identical; the
+    top-k is one ``LocalRelation``. Raises :class:`_SparkTier` for a table
+    out of sync with flat or a probe that must leave the driver."""
+
+    def __init__(self, spark, cat, ctx: _Query):
+        self.spark, self.cat, self.ctx = spark, cat, ctx
+
+    def table(self, name: str, *cols: str) -> pd.DataFrame:
+        if name != "ann_flat" and not _derived_in_sync(self.cat, name):
+            raise _SparkTier(name)
+        rows = _resident_rows(self.spark, self.cat, name)
+        return rows[list(cols)] if cols else rows
+
+    def aux(self, rows: pd.DataFrame) -> pd.DataFrame:
+        return rows
+
+    def flat(self, *cols: str) -> pd.DataFrame:
+        return self.table("ann_flat", *cols)
+
+    def exact(self, rows: pd.DataFrame) -> pd.DataFrame:
+        return _frame(_scan_exact(self.ctx)(iter([rows])), TOPK_SCHEMA)
+
+    def with_fallback(self, partials: pd.DataFrame, covering=("ann_ivf",)) -> pd.DataFrame:
+        segs = _listed_bf_segments(self.cat, covering)
+        if segs is None:
+            raise _SparkTier("bf_fallback_segments")
+        if not segs:
+            return partials
+        flat = self.flat()
+        bf = self.exact(flat[flat["segment_id"].isin(segs)])
+        return pd.concat([partials, bf], ignore_index=True)
+
+    def cogroup(self, fmt_rows: pd.DataFrame, segment, value: str = "score",
+                flat_cols: tuple = ()) -> pd.DataFrame:
+        kernel = _segment_kernel(self.ctx, segment, value)
+        flat = self.flat(*flat_cols)
+        pos = fmt_rows.groupby("segment_id").indices
+        none = fmt_rows.iloc[:0]
+        dtype = "double" if value == "score" else "int"
+        return _frame(
+            (kernel((s,), fmt_rows.iloc[pos[s]] if s in pos else none, flat.iloc[[i]])
+             for i, s in enumerate(flat["segment_id"].tolist())),
+            f"segment_id long, ext_id long, {value} {dtype}",
+        )
+
+    def probe(self, table: str, nprobe: int | None, probe_mode: str) -> pd.DataFrame | None:
+        if _probe_distributed(self.cat, probe_mode) or not _derived_in_sync(self.cat, "ann_ivf"):
+            raise _SparkTier("probe")
+        rows = self.table(table)
+        pack = _centroid_pack(self.spark, self.cat)
+        if pack is None:
+            return None
+        want = pd.MultiIndex.from_arrays(_probe_pairs(pack, self.ctx.qn, nprobe))
+        have = pd.MultiIndex.from_arrays([rows["segment_id"], rows["list_id"]])
+        return rows[have.isin(want)]
+
+    def live(self, lists: pd.DataFrame) -> pd.DataFrame:
+        return lists
+
+    def join(self, left: pd.DataFrame, right: pd.DataFrame, on: str) -> pd.DataFrame:
+        return left.merge(right, on=on)
+
+    def map(self, rows: pd.DataFrame, fn, schema: str) -> pd.DataFrame:
+        return _frame(fn(iter([rows])), schema)
+
+    def top(self, partials: pd.DataFrame, value: str = "score") -> DataFrame:
+        ids = partials["ext_id"].to_numpy(np.int64)
+        vals = partials[value].to_numpy()
+        o = _top_order(ids, -vals if value == "score" else vals, self.ctx.k)
+        return _topk_frame(self.spark, value, ids[o], vals[o])
+
+
+def _topk_frame(spark: SparkSession, value: str, *cols) -> DataFrame:
+    """A search result (ext_id, ``value``) as a LocalRelation."""
+    dtype = "double" if value == "score" else "int"
+    return _local_frame(spark, f"ext_id long, {value} {dtype}", *cols)
+
+
 def _search(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -1211,7 +1494,7 @@ def _search(
     k: int,
     filter_ext_ids,
     filter_mode: str,
-    plan: Callable[[_Search], DataFrame],
+    plan: Callable[[_Plan], DataFrame],
     visited_limit: int | None = None,
     metric: str | None = None,
     value: str = "score",
@@ -1224,17 +1507,39 @@ def _search(
     tombstones, two-tier: closure arrays when small, per-segment blobs
     joined onto the scans when large), and the per-leaf visit budget.
     ``k <= 0`` returns the empty frame (S9). ``plan`` then builds the
-    format's per-segment partials from the :class:`_Search` pieces and
-    returns their global top-k → (ext_id, ``value``)."""
+    format's per-segment partials from the :class:`_Plan` pieces and
+    returns their global top-k → (ext_id, ``value``).
+
+    Two tiers run ``plan``. The resident tier (:class:`_Resident`) runs it
+    in the driver over the catalog's pack — each table read once, on its
+    first use — and returns a ``LocalRelation``: a warm query runs no Spark
+    job. It serves every query while the ANN tables' committed bytes fit
+    ``RESIDENT_MAX_BYTES``, except that the Spark tier (:class:`_Search`,
+    one Spark plan over the tables) is taken when
+
+    - the filter or the tombstones resolve to per-segment blobs (more than
+      ``FILTER_BROADCAST_MAX`` ids);
+    - the IVF probe leaves the driver (``probe_mode`` ``distributed`` or
+      ``shuffle``, or ``auto`` above ``PROBE_DRIVER_MAX_SEGMENTS``);
+    - a table the query reads is out of sync with flat
+      (``_derived_in_sync``): the Spark tier's anti-join and live-list
+      anchors handle a crashed merge, the resident tier never has to.
+
+    Both tiers run the same kernels under the same tie rule, so they
+    return the same (ext_id, score) lists bit for bit."""
     metric = metric or _index_metric(cat)
     q = np.asarray(query, dtype=np.float32)
     if k <= 0:
-        dtype = "double" if value == "score" else "int"
-        return spark.createDataFrame([], f"ext_id long, {value} {dtype}")
+        return _topk_frame(spark, value)
     allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
     tomb, tblobs = _resolve_tombstones(spark, cat)
     budget = None if visited_limit is None else max(1, int(visited_limit))
     ctx = _Query(q, _nav_query(q, metric), metric, k, allowed, tomb, budget)
+    if fblobs is None and tblobs is None and _resident_fits(cat):
+        try:
+            return plan(_Resident(spark, cat, ctx))
+        except _SparkTier:
+            pass
     return plan(_Search(spark, cat, ctx, fblobs, tblobs))
 
 
@@ -1296,6 +1601,41 @@ def _default_nprobe(r, dim: int) -> int:
     return max(1, min(n_lists, ivf_pq_params(n_total, dim)["n_probes"]))
 
 
+def _probe_distributed(cat: IndexCatalog, probe_mode: str) -> bool:
+    """Whether probe ranking leaves the driver (see :func:`ann_topk`).
+    Single-query search has no query side to fragment, so ``shuffle``
+    (the knn_join_ivf tier) degrades to the distributed probe, which
+    already holds zero driver state ∝ segment count; treating it as
+    ``driver`` would be the memory profile the caller opted out of."""
+    _check_choice("probe_mode", probe_mode, PROBE_MODES)
+    n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
+        "n_ivf_segments"
+    )
+    return probe_mode in ("distributed", "shuffle") or (
+        probe_mode == "auto"
+        and n_segs is not None
+        and n_segs > PROBE_DRIVER_MAX_SEGMENTS
+    )
+
+
+def _probe_pairs(pack: dict, qn: np.ndarray, nprobe: int | None) -> tuple[np.ndarray, np.ndarray]:
+    """The (segment_id, list_id) pairs one query probes, ranked in ONE
+    vectorized pass over the centroid pack — no per-segment Python loop."""
+    cd = ((pack["C"].astype(np.float64) - qn.astype(np.float64)[None, :]) ** 2).sum(1)
+    npb_row = (
+        np.minimum(pack["n_lists_row"], int(nprobe))
+        if nprobe else pack["npb_row"]
+    )
+    o = np.lexsort((cd, pack["seg_row"]))
+    seg_s = pack["seg_row"][o]
+    starts = np.r_[0, np.flatnonzero(seg_s[1:] != seg_s[:-1]) + 1]
+    counts = np.diff(np.r_[starts, seg_s.size])
+    grp = np.repeat(np.arange(starts.size), counts)
+    rank = np.arange(seg_s.size) - starts[grp]
+    keep = rank < npb_row[o]
+    return seg_s[keep], pack["lst_row"][o][keep]
+
+
 def _probe_select(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -1313,21 +1653,7 @@ def _probe_select(
     ``PROBE_DRIVER_MAX_SEGMENTS``. Returns None when no segment has an
     IVF index (caller falls back to brute force)."""
     dim = int(qn.size)
-    _check_choice("probe_mode", probe_mode, PROBE_MODES)
-    n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
-        "n_ivf_segments"
-    )
-    # single-query search has no query side to fragment — 'shuffle' (the
-    # knn_join_ivf tier) degrades to the distributed probe here, which
-    # already holds zero driver state ∝ segment count; silently treating
-    # it as 'driver' would be the exact memory profile the caller opted
-    # out of
-    distributed = probe_mode in ("distributed", "shuffle") or (
-        probe_mode == "auto"
-        and n_segs is not None
-        and n_segs > PROBE_DRIVER_MAX_SEGMENTS
-    )
-    if distributed:
+    if _probe_distributed(cat, probe_mode):
 
         def probe(it):
             for pdf in it:
@@ -1349,31 +1675,12 @@ def _probe_select(
             .mapInPandas(probe, "segment_id long, list_id int")
         )
         return scan_df.join(pairs_df, ["segment_id", "list_id"], "left_semi")
-    # centroid pack collected once (memoized); ranking is ONE vectorized
-    # pass over the concatenated centroid matrix — no per-segment Python
-    # loop on the query path
     pack = _centroid_pack(spark, cat)
     if pack is None:
         return None
-    cd = ((pack["C"].astype(np.float64) - qn.astype(np.float64)[None, :]) ** 2).sum(1)
-    npb_row = (
-        np.minimum(pack["n_lists_row"], int(nprobe))
-        if nprobe else pack["npb_row"]
-    )
-    o = np.lexsort((cd, pack["seg_row"]))
-    seg_s = pack["seg_row"][o]
-    starts = np.r_[0, np.flatnonzero(seg_s[1:] != seg_s[:-1]) + 1]
-    counts = np.diff(np.r_[starts, seg_s.size])
-    grp = np.repeat(np.arange(starts.size), counts)
-    rank = np.arange(seg_s.size) - starts[grp]
-    keep = rank < npb_row[o]
-    segs_keep = seg_s[keep]
-    lists_keep = pack["lst_row"][o][keep]
+    segs_keep, lists_keep = _probe_pairs(pack, qn, nprobe)
     probe_lists = sorted(set(int(x) for x in lists_keep))
-    pairs_df = spark.createDataFrame(
-        list(zip(segs_keep.tolist(), lists_keep.tolist())),
-        "segment_id long, list_id int",
-    )
+    pairs_df = _local_frame(spark, "segment_id long, list_id int", segs_keep, lists_keep)
     # pushed list_id IN (...) prunes row groups at the scan; the broadcast
     # semi-join restricts to the exact pairs
     return scan_df.filter(F.col("list_id").isin(probe_lists)).join(
@@ -1381,39 +1688,34 @@ def _probe_select(
     )
 
 
+def _centroids(rows: pd.DataFrame) -> dict | None:
+    """Flat numpy pack of the centroid rows (``list_id = -1``): C (ΣL,
+    dim) float32 and row-aligned seg_row / lst_row / n_lists_row / npb_row
+    (default n_probes per the reference heuristic); each segment's rows
+    are contiguous, starting at ``lst_row == 0``. None when no segment
+    has an IVF index."""
+    rows = list(rows.itertuples(index=False))
+    if not rows:
+        return None
+    mats = [np.frombuffer(r.vectors, np.float32).reshape(int(r.n), -1) for r in rows]
+    n_lists = np.array([int(r.n) for r in rows])
+    return {
+        "C": np.concatenate(mats),
+        "seg_row": np.repeat([int(r.segment_id) for r in rows], n_lists).astype(np.int64),
+        "lst_row": np.concatenate([np.arange(n, dtype=np.int32) for n in n_lists]),
+        "n_lists_row": np.repeat(n_lists, n_lists).astype(np.int32),
+        "npb_row": np.repeat(
+            [_default_nprobe(r, c.shape[1]) for r, c in zip(rows, mats)], n_lists
+        ).astype(np.int32),
+    }
+
+
 def _centroid_pack(spark: SparkSession, cat: IndexCatalog) -> dict | None:
-    """Flat numpy pack of every segment's centroids — the ONE driver-side
-    centroid state, shared by the single-query probe and
-    :func:`knn_join_ivf`'s driver tier (budget: one pack ∝ total
-    centroids): C (ΣL, dim) float32 and row-aligned seg_row / lst_row /
-    n_lists_row / npb_row (default n_probes per the reference heuristic);
-    each segment's rows are contiguous, starting at ``lst_row == 0``.
-    Memoized per manifest version. None when no segment has an IVF index."""
-    ver = _manifest_version(cat)
-    memo = getattr(cat, "_centroid_pack_memo", None)
-    if memo is not None and memo["ver"] == ver:
-        return memo["pack"]
-    rows = (
-        cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1)
-        .select("segment_id", "n", "ext_ids", "vectors")
-        .collect()
-    )
-    pack = None
-    if rows:
-        mats = [np.frombuffer(r.vectors, np.float32).reshape(int(r.n), -1) for r in rows]
-        n_lists = np.array([int(r.n) for r in rows])
-        pack = {
-            "C": np.concatenate(mats),
-            "seg_row": np.repeat([int(r.segment_id) for r in rows], n_lists).astype(np.int64),
-            "lst_row": np.concatenate([np.arange(n, dtype=np.int32) for n in n_lists]),
-            "n_lists_row": np.repeat(n_lists, n_lists).astype(np.int32),
-            "npb_row": np.repeat(
-                [_default_nprobe(r, c.shape[1]) for r, c in zip(rows, mats)], n_lists
-            ).astype(np.int32),
-        }
-    cat._centroid_pack_memo = {"ver": ver, "pack": pack}
-    return pack
+    """Every segment's centroids (see :func:`_centroids`) — a view of the
+    pack's ``ann_ivf`` entry, the ONE driver-side centroid state, shared
+    by the single-query probe and :func:`knn_join_ivf`'s driver tier
+    (budget: one pack ∝ total centroids)."""
+    return _ivf_entry(spark, cat, lists=False).cents
 
 
 def _validate_metric(cat: IndexCatalog, metric: str) -> None:
@@ -1454,15 +1756,17 @@ def ann_topk(
     tombstones and the B2 fallback follow the driver contract
     (:func:`_search`).
 
-    IVF probing is two small jobs, not one full-table pass: (1) rank lists
-    per segment from the centroid rows only (``list_id = -1`` — pushed to
-    the parquet scan, the list rows' blobs are never read); (2) scan
-    ``ann_ivf`` restricted to the probed (segment_id, list_id) pairs,
-    scoring each selected list row independently (no shuffle).
-    ``probe_mode`` picks where step (1) ranks lists:
+    IVF probing on the Spark tier is two small jobs, not one full-table
+    pass: (1) rank lists per segment from the centroid rows only
+    (``list_id = -1`` — pushed to the parquet scan, the list rows' blobs
+    are never read); (2) scan ``ann_ivf`` restricted to the probed
+    (segment_id, list_id) pairs, scoring each selected list row
+    independently (no shuffle). ``probe_mode`` picks where step (1) ranks
+    lists:
 
-    - ``driver`` — centroid rows are collected ONCE (memoized per manifest
-      version) into a flat numpy pack; per query the ranking is ONE
+    - ``driver`` — centroid rows are read ONCE (kept in the catalog's
+      pack until ``ann_ivf`` changes) into a flat numpy pack; per query the
+      ranking is ONE
       vectorized pass over the concatenated centroid matrix (no Python
       loop over segments), and the probed pairs reach the list scan as a
       pushed ``list_id IN`` filter + broadcast semi-join. Latency-optimal;
@@ -1473,6 +1777,11 @@ def ann_topk(
       driver-side state grows with segment count — the 10⁶-segment path.
     - ``auto`` — ``driver`` while the build-time segment count is at most
       ``PROBE_DRIVER_MAX_SEGMENTS``, else ``distributed``.
+
+    Tiers (every single-query search, see :func:`_search`): on the
+    resident tier the result is computed at call time and returned as a
+    local frame, so a commit made before it is collected does not change
+    it; a Spark-tier result is a lazy plan read when it is collected.
     """
     cfg = cfg or IndexConfig()
     _check_choice("mode", mode, ANN_MODES)
@@ -1480,7 +1789,7 @@ def ann_topk(
         mode == "auto" and k <= cfg.ann.max_k_ann and cat.exists("ann_ivf")
     )
 
-    def plan(s: _Search) -> DataFrame:
+    def plan(s: _Plan) -> DataFrame:
         lists = None
         if use_ivf:
             # similarity-function mismatch guard for derived structures
@@ -1488,16 +1797,12 @@ def ann_topk(
             # clustered under the build metric
             _validate_metric(cat, metric)
             if cat.exists("ann_ivf"):
-                lists = _probe_select(
-                    spark, cat,
-                    cat.read(spark, "ann_ivf").filter(F.col("list_id") >= 0),
-                    s.ctx.qn, nprobe, probe_mode,
-                )
+                lists = s.probe("ann_ivf", nprobe, probe_mode)
         if lists is None:
             return s.top(s.exact(s.flat()))
         # blob tiers ride the list rows (filter inner-joins — segments with
         # zero allowed ids are pruned before scoring; tombstones left-join)
-        return s.top(s.with_fallback(s.exact(s.aux(_live_lists(spark, cat, lists)))))
+        return s.top(s.with_fallback(s.exact(s.aux(s.live(lists)))))
 
     return _search(spark, cat, query, k, filter_ext_ids, filter_mode, plan, metric=metric)
 
@@ -1549,7 +1854,7 @@ def ann_topk_bq(
     Approximate, containment-validated (TestQuantizedVectorsFormats)."""
     value = "score" if rerank_factor is not None else "hamming"
 
-    def plan(s: _Search) -> DataFrame:
+    def plan(s: _Plan) -> DataFrame:
         # the pure-Hamming search reads only the flat ids (the fat vector
         # blobs are never read) — unless ann_bq is out of sync with flat,
         # when a missing row is recomputed from the vectors
@@ -1610,12 +1915,10 @@ def ann_topk_ivfpq(
     the raw path's ``nprobe · list_len · 4·dim``. Approximate (probe +
     ADC recall), containment-validated; scores are exact."""
 
-    def plan(s: _Search) -> DataFrame:
+    def plan(s: _Plan) -> DataFrame:
         ctx = s.ctx
         m = ctx.k * max(1, rerank_factor)
-        lists = _probe_select(
-            spark, cat, cat.read(spark, "ann_ivfpq"), ctx.qn, nprobe, probe_mode
-        )
+        lists = s.probe("ann_ivfpq", nprobe, probe_mode)
         if lists is None:  # no segment has an IVF index: brute force
             return s.top(s.exact(s.flat()))
 
@@ -1636,12 +1939,9 @@ def ann_topk_ivfpq(
 
         # per-segment codebook meta rides the probed list rows (small: one
         # codebook per segment, dim·2^bits floats)
-        meta = cat.read(spark, "ann_pq").select(
-            "segment_id", "dim", "pq_dim", "pq_bits", "codebook"
-        )
-        cands = s.aux(lists.join(meta, "segment_id")).mapInPandas(
-            adc, "segment_id long, ext_id long"
-        )
+        meta = s.table("ann_pq", "segment_id", "dim", "pq_dim", "pq_bits", "codebook")
+        cands = s.map(s.aux(s.join(lists, meta, "segment_id")), adc,
+                      "segment_id long, ext_id long")
         return s.top(s.with_fallback(s.cogroup(cands, rerank), ("ann_ivfpq", "ann_pq")))
 
     return _search(
@@ -1973,7 +2273,7 @@ def merge_ann(
         n for s, n in nvecs_of.items() if s not in gkey_of
     ) + sum(counts.values())
     if dropped_vecs > cfg.compact_dropped_fraction * (dropped_vecs + live_total):
-        compact_ann(spark, cat)
+        compact_ann(spark, cat, cfg)
     cat.mark_stage(
         f"merge_ann_gen_{gen}",
         lineage={
@@ -1984,18 +2284,26 @@ def merge_ann(
     return new_ids
 
 
-def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
+def compact_ann(spark: SparkSession, cat: IndexCatalog,
+                cfg: IndexConfig | None = None) -> None:
     """Compaction: materialize each ANN table's current logical state
     (appends folded in, dropped segments physically removed) into one
     fresh snapshot — reclaims merged-away bytes and resets the drop lists,
     like Iceberg's rewrite_data_files / Lucene's eventual file deletion.
     The merge generation stays monotone so later merges never mint an id a
-    still-live earlier-generation segment holds."""
+    still-live earlier-generation segment holds.
+
+    A derived table out of sync with flat (a crash between a merge's
+    appends, ``_derived_in_sync``) is rebuilt from the compacted flat
+    under ``cfg`` instead: a tagless rewrite of it would read as in sync
+    and keep serving its merged-away rows and missing segments."""
+    derived = ("ann_ids", *(f.table for f in FORMATS.values()))
+    stale = {t for t in derived if cat.exists(t) and not _derived_in_sync(cat, t)}
     gen = int(
         cat.read_manifest()["tables"].get("ann_flat", {}).get("ann_merge_gen", 0)
     )
-    for table in ("ann_flat", "ann_ids", *(f.table for f in FORMATS.values())):
-        if not cat.exists(table):
+    for table in ("ann_flat", *derived):
+        if not cat.exists(table) or table in stale:
             continue
         extra = {"ann_merge_gen": gen} if table == "ann_flat" else None
         cat.write(
@@ -2004,6 +2312,13 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
             table,
             sort_within_partitions=["segment_id"], extra_entry=extra,
         )
+    if "ann_ids" in stale:
+        _write_ids(spark, cat)
+    for f in FORMATS.values():  # registry order: ivfpq after ivf and pq
+        if f.table in stale:
+            _write_format(spark, cat, f, cfg or IndexConfig())
+    if "ann_ivf" in stale:
+        _mark_bf_fallback(spark, cat)
 
 
 QPACK_SCHEMA = "qn int, q_ids binary, q_mat binary"
@@ -2197,18 +2512,14 @@ def knn_join_ivf(
                     for r in pdf.itertuples(index=False):
                         yield _pairs(int(r.segment_id), *_bundle(r))
 
-            bf_df = spark.createDataFrame(
-                [(int(s),) for s in bf_segs], "segment_id long"
-            )
+            bf_df = _local_frame(spark, "segment_id long", bf_segs)
             pairs = pairs.unionByName(
                 _meet_queries(bf_df).mapInPandas(bf_dist, PAIR_SCHEMA)
             )
     else:
         pack = _centroid_pack(spark, cat) if ivf is not None else None
         if pack is None and not bf_segs:
-            return spark.createDataFrame(
-                [], "q_id long, vec_id long, score double, rank int"
-            )
+            return _local_frame(spark, "q_id long, vec_id long, score double, rank int")
         # per-segment slices of the memoized centroid pack ride the task
         # closure; the query side is still never collected (latency mode —
         # closure ∝ total centroids)

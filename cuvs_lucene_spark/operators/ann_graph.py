@@ -45,11 +45,13 @@ from cuvs_lucene_spark.config import IndexConfig, choose_build_algo
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.ann import (
     GRAPH_SCHEMA,
+    _covered_tags,
     _index_metric,
     _nav_vectors,
     _Query,
     _scores,
     _search,
+    _topk_frame,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -332,13 +334,16 @@ def build_ann_graph(
     Blob layout per segment: ``offsets`` = little-endian uint64 cumulative
     byte offsets (n_nodes + 1 entries — the monotonic offset directory),
     ``graph`` = concatenated per-node varint blocks, each node's sorted
-    neighbor ids delta-encoded (first value absolute)."""
+    neighbor ids delta-encoded (first value absolute). Like every full
+    rebuild of a derived table, the write covers flat's append tags
+    (``ann._derived_in_sync``)."""
     cfg = cfg or IndexConfig()
     cat.write(
         _graph_rows(
             cat.read(spark, "ann_flat"), cfg, degree, _index_metric(cat), exact_knn_max
         ),
         "ann_graph",
+        extra_entry={"covers_tags": sorted(_covered_tags(cat, "ann_flat"))},
     )
     cat.mark_stage("ann_graph")
 
@@ -541,8 +546,7 @@ def ann_topk_graph(
 
     def plan(s) -> DataFrame:
         def topk(ef_: int) -> DataFrame:
-            graph = cat.read(spark, "ann_graph", merge_schema=True)
-            return s.top(s.cogroup(graph, _graph_segment(s.ctx, ef_)))
+            return s.top(s.cogroup(s.table("ann_graph"), _graph_segment(s.ctx, ef_)))
 
         if not auto_ef:
             return topk(eff)
@@ -558,9 +562,8 @@ def ann_topk_graph(
             rows = nxt
             if stable:
                 break
-        return spark.createDataFrame(
-            [(int(r["ext_id"]), float(r["score"])) for r in rows],
-            "ext_id long, score double",
+        return _topk_frame(
+            spark, "score", [r["ext_id"] for r in rows], [r["score"] for r in rows]
         )
 
     return _search(

@@ -84,7 +84,6 @@ def test_dataframe_delete_blob_tier_no_driver_array(spark, tmp_path, monkeypatch
     # force the blob tier (count now exceeds the patched threshold) and
     # poison the closure-array tier — it must never be consulted
     monkeypatch.setattr(A, "FILTER_BROADCAST_MAX", 5)
-    cat._ann_tomb_memo = None
     monkeypatch.setattr(
         A, "_tombstone_array",
         lambda *a, **k: (_ for _ in ()).throw(
@@ -113,7 +112,6 @@ def test_merge_ann_drops_blob_tier_tombstones(spark, tmp_path, monkeypatch):
         CFG, auto_merge=False,
     )
     monkeypatch.setattr(A, "FILTER_BROADCAST_MAX", 5)
-    cat._ann_tomb_memo = None
     monkeypatch.setattr(
         A, "_tombstone_array",
         lambda *a, **k: (_ for _ in ()).throw(
@@ -273,6 +271,31 @@ def test_crash_before_any_derived_append_ivf_safe(spark, tmp_path, monkeypatch):
     keys = [(r["q_id"], r["rank"]) for r in rows]
     assert len(keys) == len(set(keys)) == 6
     assert len({(r["q_id"], r["vec_id"]) for r in rows}) == 6  # no dup vecs
+
+
+def test_compaction_rebuilds_stale_ivf(spark, tmp_path, monkeypatch):
+    """A merge whose ann_ivf append was lost, then auto-compaction: the
+    stale ann_ivf must be rebuilt from flat, not rewritten tagless — that
+    would read as in sync and serve the merged-away segment's lists next
+    to the merged segment's exact scan (every hit of segment 0 twice)."""
+    cat, df = _build(spark, str(tmp_path / "compactstale"), n=81, rps=40)
+    real_append = IndexCatalog.append
+
+    def lose_ivf(self, d, table, **kw):
+        return None if table == "ann_ivf" else real_append(self, d, table, **kw)
+
+    monkeypatch.setattr(IndexCatalog, "append", lose_ivf)
+    # 41 of 81 vectors dropped > compact_dropped_fraction 0.3: compacts
+    A.merge_ann(spark, cat, CFG, groups=[[0, 2]])
+    monkeypatch.setattr(IndexCatalog, "append", real_append)
+    assert not cat.read_manifest()["tables"]["ann_flat"].get("append_tags")
+    assert A._derived_in_sync(cat, "ann_ivf")
+
+    def top(mode):
+        return [(r["ext_id"], r["score"]) for r in A.ann_topk(
+            spark, cat, _vec(1), k=20, cfg=CFG, mode=mode, nprobe=1 << 20).collect()]
+
+    assert top("ivf") == top("exact")  # every list probed: exact, no duplicates
 
 
 def test_missing_bq_rows_pure_hamming_reachable(spark, tmp_path):

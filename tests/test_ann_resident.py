@@ -1,0 +1,157 @@
+"""The resident ANN tier against the Spark tier.
+
+Single-query searches run in the driver over the catalog's resident pack
+while it fits ``RESIDENT_MAX_BYTES``. Both tiers run the same kernels under
+the same tie rule, so every mode must return the same (ext_id, score)
+list bit for bit — with no filter, a set filter and a DataFrame filter,
+after a delete and after a merge. Forcing the budget to 0 selects the
+Spark tier (as ``test_components_shuffle_tier_equals_broadcast_tier``
+forces the shuffle tier with cap 0).
+"""
+
+from __future__ import annotations
+
+import sys
+import threading
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
+
+import dataclasses
+
+import numpy as np
+import pytest
+
+import cuvs_lucene_spark.operators.ann as A
+from cuvs_lucene_spark.config import IndexConfig
+from cuvs_lucene_spark.operators.ann_graph import ann_topk_graph, build_ann_graph
+from cuvs_lucene_spark.sources.catalog import IndexCatalog
+
+CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
+# no auto-compaction: the merged-away segments stay as logical drops
+NOCOMPACT = dataclasses.replace(CFG, compact_dropped_fraction=1.0)
+N = 301  # segments of 150/150/1: the last has no IVF index (B2)
+# one decimal: many equal distances, so the tie rule is exercised
+X = np.round(np.random.default_rng(7).normal(size=(N, 8)), 1).astype(np.float32)
+Q = X[5] + 0.05
+
+MODES = {
+    "exact": lambda s, c, f: A.ann_topk(s, c, Q, k=7, cfg=CFG, mode="exact", filter_ext_ids=f),
+    "ivf": lambda s, c, f: A.ann_topk(s, c, Q, k=7, cfg=CFG, mode="ivf", filter_ext_ids=f),
+    "sq": lambda s, c, f: A.ann_topk_sq(s, c, Q, k=7, cfg=CFG, filter_ext_ids=f),
+    "bq": lambda s, c, f: A.ann_topk_bq(s, c, Q, k=7, cfg=CFG, filter_ext_ids=f),
+    "bq_rerank": lambda s, c, f: A.ann_topk_bq(
+        s, c, Q, k=7, cfg=CFG, rerank_factor=2, filter_ext_ids=f),
+    "pq": lambda s, c, f: A.ann_topk_pq(s, c, Q, k=7, cfg=CFG, filter_ext_ids=f),
+    "ivfpq": lambda s, c, f: A.ann_topk_ivfpq(s, c, Q, k=7, cfg=CFG, filter_ext_ids=f),
+    "graph": lambda s, c, f: ann_topk_graph(s, c, Q, k=7, cfg=CFG, filter_ext_ids=f),
+    "graph_auto_ef": lambda s, c, f: ann_topk_graph(
+        s, c, Q, k=7, cfg=CFG, ef=8, auto_ef=True, filter_ext_ids=f),
+}
+FILTERS = {
+    "none": lambda spark: None,
+    "set": lambda spark: set(range(0, N, 2)),
+    "df": lambda spark: spark.range(0, N, 3).withColumnRenamed("id", "ext_id"),
+}
+
+
+@pytest.fixture(scope="module")
+def deleted(spark, tmp_path_factory):
+    df = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(N)], "vec_id long, embedding array<float>"
+    )
+    cat = A.build_ann(spark, df, str(tmp_path_factory.mktemp("resident")), CFG,
+                      id_col="vec_id", vector_col="embedding", rows_per_segment=150)
+    A.build_ann_ivfpq(spark, cat, CFG)  # builds the PQ codebooks first
+    build_ann_graph(spark, cat, CFG)
+    A.delete_ann(spark, cat, {5, 6, 151, 200}, CFG, auto_merge=False)
+    return cat
+
+
+@pytest.fixture(scope="module")
+def merged(spark, deleted):
+    """The same catalog, merged: segments 0 and 1 become two new ones
+    (dropping the tombstoned rows) and stay on disk as logical drops, the
+    B2 segment stays, and a delete after the merge leaves live
+    tombstones."""
+    A.merge_ann(spark, deleted, NOCOMPACT, groups=[[0, 1]])
+    A.delete_ann(spark, deleted, {7, 152}, CFG, auto_merge=False)
+    return deleted
+
+
+def _rows(df) -> list[tuple]:
+    return [tuple(r) for r in df.collect()]
+
+
+def _run(spark, cat, cases) -> dict:
+    """(mode, filter) → rows, four cases at a time (the queries are
+    latency-bound)."""
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futs = {c: pool.submit(lambda c=c: _rows(MODES[c[0]](spark, cat, FILTERS[c[1]](spark))))
+                for c in cases}
+        return {c: f.result(timeout=300) for c, f in futs.items()}
+
+
+def _both_tiers(spark, cat, cases, monkeypatch) -> None:
+    """Run each (mode, filter) case on the resident tier (the Spark tier
+    poisoned, so a silent fallback fails) and on the Spark tier (budget
+    0), and require identical (ext_id, value) lists."""
+    with monkeypatch.context() as m:
+        m.setattr(A, "_Search", lambda *a, **k: pytest.fail("resident query took the Spark tier"))
+        resident = _run(spark, cat, cases)
+    with monkeypatch.context() as m:
+        m.setattr(A, "RESIDENT_MAX_BYTES", 0)
+        tier = _run(spark, cat, cases)
+    assert all(resident.values())
+    assert {c: v for c, v in resident.items() if v != tier[c]} == {}
+
+
+def test_tiers_equal_after_delete(spark, deleted, monkeypatch):
+    _both_tiers(spark, deleted, [(m, f) for m in MODES for f in FILTERS], monkeypatch)
+
+
+def test_tiers_equal_after_merge(spark, merged, monkeypatch):
+    assert A._derived_in_sync(merged, "ann_ivfpq")
+    assert merged.read_manifest()["tables"]["ann_flat"]["dropped_segments"] == [0, 1]
+    names = list(FILTERS)
+    cases = [(m, names[i % len(names)]) for i, m in enumerate(MODES)]
+    _both_tiers(spark, merged, cases, monkeypatch)
+
+
+def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypatch):
+    """Threads querying a fresh catalog object at once read each pack
+    table exactly once, and return the results of a sequential run."""
+    cat = IndexCatalog(deleted.root)  # a fresh, empty pack
+    reads: Counter = Counter()
+    lock = threading.Lock()
+    real = A._read_arrow
+
+    def counted(spark_, cat_, table, where=None):
+        with lock:
+            reads[table] += 1
+        return real(spark_, cat_, table, where)
+
+    monkeypatch.setattr(A, "_read_arrow", counted)
+    modes = ["exact", "ivf", "sq", "bq", "pq", "ivfpq", "graph", "bq_rerank"]
+    got: dict = {}
+    errors: list = []
+
+    def run(mode):
+        try:
+            got[mode] = _rows(MODES[mode](spark, cat, None))
+        except Exception as e:  # reported by the assertion below
+            errors.append((mode, e))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(m,)) for m in modes]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert reads == Counter({t: 1 for t in (*A.PACK_TABLES, "ann_tombstones")})
+    assert A._pack(cat).nbytes() > 0
+    assert got == {m: _rows(MODES[m](spark, cat, None)) for m in modes}

@@ -27,6 +27,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture()
+def spark_tier(monkeypatch):
+    """Single-query ANN searches take the Spark tier (resident budget 0),
+    whose plans and job counts the ANN tests below pin."""
+    import cuvs_lucene_spark.operators.ann as A
+
+    monkeypatch.setattr(A, "RESIDENT_MAX_BYTES", 0)
+
+
 def test_postings_scan_pushes_filters(spark, cat):
     df = _query_postings(spark, cat, ["join", "vector"], CFG)
     plan = _plan(df)
@@ -83,7 +92,7 @@ def test_grouped_dense_rank_no_window_no_single_partition(spark):
     assert "SinglePartition" not in plan
 
 
-def test_ivf_probe_pushes_list_filter(spark, tmp_path):
+def test_ivf_probe_pushes_list_filter(spark, tmp_path, spark_tier):
     """IVF search job 2 scans ann_ivf with a pushed list_id filter — the
     probe prunes at the parquet scan, not inside a pandas pass."""
     from cuvs_lucene_spark.operators.ann import ann_topk, build_ann
@@ -121,7 +130,7 @@ def test_whole_stage_codegen_on_text_ops(spark):
     assert "Project" in plan
 
 
-def test_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monkeypatch):
+def test_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monkeypatch, spark_tier):
     """probe_mode='distributed' must never materialize centroid state on
     the driver (the 10⁶-segment path): poison the driver-pack helpers and
     assert the distributed result matches the driver-ranked one."""
@@ -146,7 +155,7 @@ def test_ivf_distributed_probe_no_driver_collect(spark, tmp_path, monkeypatch):
     assert got == want
 
 
-def test_ivfpq_probe_pushes_list_filter_and_no_cartesian(spark, tmp_path):
+def test_ivfpq_probe_pushes_list_filter_and_no_cartesian(spark, tmp_path, spark_tier):
     """The IVF-PQ search scans its compressed lists with the probe's
     list_id filter pushed to parquet, and never a nested-loop join."""
     from cuvs_lucene_spark.operators.ann import (
@@ -236,7 +245,7 @@ def test_knn_join_ivf_shuffle_tier_no_broadcast_no_collect(spark, ann_cat, monke
     assert "CartesianProduct" not in plan
 
 
-def test_probe_ladder_auto_switches_to_distributed(spark, tmp_path, monkeypatch):
+def test_probe_ladder_auto_switches_to_distributed(spark, tmp_path, monkeypatch, spark_tier):
     """Scale-shape regression: above PROBE_DRIVER_MAX_SEGMENTS the auto
     probe mode must leave the driver — for BOTH ann_topk and knn_join_ivf —
     and return results identical to the driver-ranked mode."""
@@ -273,7 +282,7 @@ def test_probe_ladder_auto_switches_to_distributed(spark, tmp_path, monkeypatch)
     assert got_join == want_join
 
 
-def test_cosine_ivf_plan_shape(spark, tmp_path):
+def test_cosine_ivf_plan_shape(spark, tmp_path, spark_tier):
     """The cosine IVF probe keeps the scale-correct physical shape the L2
     path is pinned to: list_id filter pushed to the parquet scan, a
     broadcast hash join for the probe-pair semi-join, and never a
@@ -433,9 +442,10 @@ def test_match_all_never_scans_postings(spark, cat):
     assert "postings" not in plan, "MatchAllDocs must read only the doc map"
 
 
-ANN_JOB_PINS = {  # warm per-query Spark jobs (the query-tail pin)
-    "exact": 1, "ivf": 2, "ivf_set_filter": 2, "sq": 3, "bq": 3,
-    "bq_rerank": 3, "pq": 3, "ivfpq": 5, "graph": 3, "knn_join_ivf": 4,
+ANN_JOB_PINS = {  # warm per-query Spark jobs on the Spark tier (the query-tail pin)
+    "exact": 1, "ivf": 2, "ivf_set_filter": 2, "ivf_df_filter": 3, "sq": 3, "bq": 3,
+    "bq_rerank": 3, "pq": 3, "ivfpq": 5, "graph": 3, "graph_auto_ef": 6,
+    "knn_join_ivf": 4,
 }
 
 
@@ -457,10 +467,7 @@ def ann_cat(spark, tmp_path_factory):
     return cat, df
 
 
-def test_ann_query_job_counts(spark, ann_cat):
-    """Every ANN search mode runs a fixed, small number of Spark jobs per
-    warm query: the second of two identical calls is counted under a job
-    group (memos filled by the first — centroid pack, schemas)."""
+def _ann_calls(spark, ann_cat):
     import cuvs_lucene_spark.operators.ann as A
     from cuvs_lucene_spark.operators.ann_graph import ann_topk_graph
 
@@ -469,7 +476,7 @@ def test_ann_query_job_counts(spark, ann_cat):
     qdf = df.filter(F.col("vec_id").isin([0, 17, 300])).selectExpr(
         "vec_id AS q_id", "embedding AS q_vec"
     )
-    calls = {
+    return {
         "exact": lambda: A.ann_topk(spark, cat, q, k=5, cfg=CFG, mode="exact"),
         "ivf": lambda: A.ann_topk(spark, cat, q, k=5, cfg=CFG, mode="ivf"),
         "ivf_set_filter": lambda: A.ann_topk(
@@ -482,12 +489,22 @@ def test_ann_query_job_counts(spark, ann_cat):
         "ivfpq": lambda: A.ann_topk_ivfpq(spark, cat, q, k=5, cfg=CFG),
         "graph": lambda: ann_topk_graph(spark, cat, q, k=5, cfg=CFG),
         "knn_join_ivf": lambda: A.knn_join_ivf(spark, cat, qdf, k=3),
+        "ivf_df_filter": lambda: A.ann_topk(
+            spark, cat, q, k=5, cfg=CFG, mode="ivf",
+            filter_ext_ids=df.filter(F.col("vec_id") % 2 == 0).select("vec_id"),
+        ),
+        "graph_auto_ef": lambda: ann_topk_graph(spark, cat, q, k=5, cfg=CFG, auto_ef=True),
     }
+
+
+def _warm_job_counts(spark, calls: dict, tag: str) -> dict:
+    """Spark jobs of the second of two identical calls, counted under a
+    job group (memos and the pack filled by the first)."""
     sc = spark.sparkContext
     counts = {}
     for mode, call in calls.items():
         assert call().collect()
-        group = f"test_ann_query_job_counts_{mode}"
+        group = f"{tag}_{mode}"
         sc.setJobGroup(group, group)
         try:
             call().collect()
@@ -495,4 +512,25 @@ def test_ann_query_job_counts(spark, ann_cat):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         counts[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+    return counts
+
+
+def test_ann_query_job_counts(spark, ann_cat, spark_tier):
+    """Every ANN search mode runs a fixed, small number of Spark jobs per
+    warm query on the Spark tier."""
+    calls = _ann_calls(spark, ann_cat)
+    counts = _warm_job_counts(
+        spark, {m: c for m, c in calls.items() if m in ANN_JOB_PINS}, "spark_tier"
+    )
     assert {m: n for m, n in counts.items() if n > ANN_JOB_PINS[m]} == {}, counts
+
+
+def test_ann_resident_query_job_counts(spark, ann_cat):
+    """Under the default budget every single-query mode is served from the
+    resident pack: 0 warm jobs, 1 with a DataFrame filter (its head
+    collect). knn_join_ivf keeps the Spark tier and its pin."""
+    counts = _warm_job_counts(spark, _ann_calls(spark, ann_cat), "resident")
+    want = {m: 0 for m in counts}
+    want.update(ivf_df_filter=1, knn_join_ivf=counts["knn_join_ivf"])
+    assert counts == want
+    assert counts["knn_join_ivf"] <= ANN_JOB_PINS["knn_join_ivf"]

@@ -28,6 +28,8 @@ def ann_plans(spark, root: str) -> dict:
     from cuvs_lucene_spark.operators import ann as A
     from cuvs_lucene_spark.operators import ann_graph as AG
 
+    # the Spark tier's plans: a resident-tier result is one LocalTableScan
+    A.RESIDENT_MAX_BYTES = 0
     cfg = IndexConfig(rows_per_segment=150)
     rows = [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in range(301)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
