@@ -87,7 +87,9 @@ class IndexConfig:
 
     # --- posting codec (B14/B15 recipe: sort→delta→varint + block directory) ---
     block_size: int = 128               # postings per block
-    prune_range: int = 2048             # doc-range granularity for block-max pruning
+    # still validated because callers pass it, but no longer affects
+    # scoring: the dense BM25 kernel replaced block-max range pruning
+    prune_range: int = 2048
 
     # --- shuffle/skew handling ---
     term_buckets: int = 64              # postings partition column (query-side pruning)

@@ -102,6 +102,7 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
+from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
@@ -125,27 +126,6 @@ GRAPH_SCHEMA = (
     "offsets binary, graph binary"
 )
 TOPK_SCHEMA = "segment_id long, ext_id long, score double"
-
-_TYPES = {"long": (pa.int64(), np.int64), "int": (pa.int32(), np.int32),
-          "double": (pa.float64(), np.float64)}
-
-
-def _fields(schema: str) -> list[tuple[str, str]]:
-    """``"a long, b int"`` → [("a", "long"), ("b", "int")] (flat schemas only)."""
-    return [tuple(f.split()) for f in schema.split(",")]
-
-
-def _local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
-    """A small driver-side frame built from Arrow: a ``LocalRelation``,
-    which Spark scans and collects with no job (a Python list costs one
-    job and a worker round trip). No ``cols`` gives the empty frame."""
-    fields = _fields(schema)
-    cols = cols or [()] * len(fields)
-    return spark.createDataFrame(
-        pa.table({n: pa.array(c, _TYPES[t][0]) for (n, t), c in zip(fields, cols)}),
-        schema,
-    )
-
 
 def _unit_rows(x: np.ndarray) -> np.ndarray:
     """Row-normalize to unit L2 (float64 math, float32 out). Zero rows
@@ -947,7 +927,7 @@ def delete_ann(
             F.col(id_col).cast("long").alias("ext_id")
         ).distinct()
     else:
-        new = _local_frame(spark, "ext_id long", sorted({int(i) for i in ext_ids}))
+        new = local_frame(spark, "ext_id long", sorted({int(i) for i in ext_ids}))
     if cat.exists("ann_tombstones"):
         new = cat.read(spark, "ann_tombstones").unionByName(new).distinct()
     new = new.cache()
@@ -1484,7 +1464,7 @@ class _Resident(_Plan):
 def _topk_frame(spark: SparkSession, value: str, *cols) -> DataFrame:
     """A search result (ext_id, ``value``) as a LocalRelation."""
     dtype = "double" if value == "score" else "int"
-    return _local_frame(spark, f"ext_id long, {value} {dtype}", *cols)
+    return local_frame(spark, f"ext_id long, {value} {dtype}", *cols)
 
 
 def _search(
@@ -1680,7 +1660,7 @@ def _probe_select(
         return None
     segs_keep, lists_keep = _probe_pairs(pack, qn, nprobe)
     probe_lists = sorted(set(int(x) for x in lists_keep))
-    pairs_df = _local_frame(spark, "segment_id long, list_id int", segs_keep, lists_keep)
+    pairs_df = local_frame(spark, "segment_id long, list_id int", segs_keep, lists_keep)
     # pushed list_id IN (...) prunes row groups at the scan; the broadcast
     # semi-join restricts to the exact pairs
     return scan_df.filter(F.col("list_id").isin(probe_lists)).join(
@@ -2512,14 +2492,14 @@ def knn_join_ivf(
                     for r in pdf.itertuples(index=False):
                         yield _pairs(int(r.segment_id), *_bundle(r))
 
-            bf_df = _local_frame(spark, "segment_id long", bf_segs)
+            bf_df = local_frame(spark, "segment_id long", bf_segs)
             pairs = pairs.unionByName(
                 _meet_queries(bf_df).mapInPandas(bf_dist, PAIR_SCHEMA)
             )
     else:
         pack = _centroid_pack(spark, cat) if ivf is not None else None
         if pack is None and not bf_segs:
-            return _local_frame(spark, "q_id long, vec_id long, score double, rank int")
+            return local_frame(spark, "q_id long, vec_id long, score double, rank int")
         # per-segment slices of the memoized centroid pack ride the task
         # closure; the query side is still never collected (latency mode —
         # closure ∝ total centroids)

@@ -3,20 +3,27 @@
 Spark restatement of the reference's search lifecycle
 (``GPUKnnFloatVectorQuery`` → per-leaf ``CuVS2510GPUVectorsReader.search``
 → host top-k merge, SURVEY.md §3.2): *query broadcast → per-segment scorer
-over postings + norms (cogrouped pandas UDF) emitting exact per-segment
-top-k partials → global ``orderBy(score desc, ext_id asc).limit(k)``*.
+over postings + norms (one segment-grouped pandas UDF) emitting exact
+per-segment top-k partials → global ``orderBy(score desc, ext_id asc)
+.limit(k)``*.
+
+One scoring core, as Lucene runs every scored query as a weight over one
+BM25 similarity. Each scored query — a term disjunction or conjunction, a
+boosted query, ``DisjunctionMaxQuery``, ``SynonymQuery``, a scored
+``BooleanQuery``, and every query of a batch — compiles to one normalized
+spec (:func:`_compile`: terms, a combiner, clause constraints, k), bound
+to live statistics as per-term weights idf × boost (:func:`_weigh`). A
+single query is a batch of one. One driver path (:func:`_scored`)
+resolves stats, the filter, the tombstone / norms tier and the
+impact-cache tier once; one UDF body (:func:`_segment_scorer`) runs on
+every tier; one Spark-free numpy kernel (:func:`_score_batch_queries`)
+scores a segment as a dense per-doc accumulation followed by an exact
+tie-broken top-k. There is no block-max pruning: the dense kernel measured
+faster on every query shape tried, on segments of 20k and 100k docs.
 
 Pre-filter semantics (S10, a correctness requirement): filters and
 tombstones restrict the candidate set BEFORE top-k, inside the scorer —
 never as a post-filter of the top-k result.
-
-Pruning: per-block max-tf metadata gives each block a BM25 impact upper
-bound; the scorer partitions the segment's doc-id space into aligned
-ranges, bounds every range by the sum of per-term max overlapping block
-impacts, visits ranges in descending bound order, and stops once the
-running k-th score beats the next bound (block-max pruning over a bounded
-top-k heap, north_star). Exactness is preserved because a skipped range is
-skipped for ALL query terms at once, so every emitted score is complete.
 """
 
 from __future__ import annotations
@@ -27,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, shuffle_partitions
+from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode
 from cuvs_lucene_spark.operators.segments import corpus_stats, term_bucket_py
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
@@ -68,20 +76,24 @@ def _group_postings(postings: pd.DataFrame, wanted) -> dict[str, dict[str, np.nd
     return out
 
 
-def _decode_term(p: dict[str, np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-    """All posting blocks of one term → (doc_ids ascending, tfs)."""
+def _decode_term(
+    p: dict[str, np.ndarray], limit: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """All posting blocks of one term → (doc_ids ascending, tfs). With a
+    ``limit``, blocks whose first doc is at or past it are not decoded."""
+    blocks = range(p["doc_deltas"].size) if limit is None else np.flatnonzero(p["first_doc"] < limit)
+    if not len(blocks):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
     docs = np.concatenate(
-        [np.cumsum(varint_decode(b), dtype=np.int64) for b in p["doc_deltas"]]
+        [np.cumsum(varint_decode(p["doc_deltas"][j]), dtype=np.int64) for j in blocks]
     )
-    tfs = np.concatenate([varint_decode(b) for b in p["tfs"]])
+    tfs = np.concatenate([varint_decode(p["tfs"][j]) for j in blocks])
     return docs, tfs
 
 
-def _aux_arrays(aux: pd.DataFrame, allowed_ext: np.ndarray | None = None):
+def _aux_arrays(aux: pd.DataFrame):
     """Unpack the cogrouped aux side: packed dls / ext_ids / tombstones /
-    allowed. ``allowed_ext`` is the broadcast small-filter fast path:
-    a sorted ext_id array resolved to segment-local doc ids here (searchsorted
-    against this segment's ext_id map) instead of a doc_map shuffle."""
+    allowed."""
     dls = ext_ids = None
     tomb = allowed = None
     for r in aux.itertuples():
@@ -93,14 +105,6 @@ def _aux_arrays(aux: pd.DataFrame, allowed_ext: np.ndarray | None = None):
             tomb = np.frombuffer(r.payload, dtype=np.int32)
         elif r.kind == "allowed":
             allowed = np.frombuffer(r.payload, dtype=np.int32)
-    if allowed_ext is not None and ext_ids is not None:
-        pos = np.searchsorted(allowed_ext, ext_ids)
-        pos = np.minimum(pos, max(allowed_ext.size - 1, 0))
-        in_filter = (
-            (allowed_ext[pos] == ext_ids) if allowed_ext.size else np.zeros(ext_ids.size, bool)
-        )
-        local = np.flatnonzero(in_filter).astype(np.int32)
-        allowed = local if allowed is None else np.intersect1d(allowed, local)
     return dls, ext_ids, tomb, allowed
 
 
@@ -258,8 +262,8 @@ def _hot_postings_broadcast(
 
     Cache key = (manifest version, k1, b): contributions bake the BM25
     params in, so a query under a different ``cfg`` must NOT reuse them —
-    a params change rebuilds the cache (and :func:`bm25_topk`'s
-    opportunistic hit checks the same key).
+    a params change rebuilds the cache (and a single query's read of it,
+    :func:`_impact_tier`, checks the same key).
 
     Admissions ship as DELTA broadcasts (only the newly admitted terms'
     entries cross the wire), consolidated into one broadcast once the
@@ -348,7 +352,9 @@ def _hot_postings_broadcast(
     return tuple(hp["bcs"]), hp["terms"]
 
 
-def _alive_mask(n_docs: int, tomb, allowed) -> np.ndarray:
+def _alive_mask(n_docs: int, tomb, allowed, limit: int | None = None) -> np.ndarray:
+    """Docs a query may return: not tombstoned, in the allowed set (when
+    one is given) and below the ``visited_limit`` doc id."""
     alive = np.ones(n_docs, dtype=bool)
     if tomb is not None and tomb.size:
         alive[tomb] = False
@@ -356,459 +362,138 @@ def _alive_mask(n_docs: int, tomb, allowed) -> np.ndarray:
         m = np.zeros(n_docs, dtype=bool)
         m[allowed] = True
         alive &= m
+    if limit is not None:
+        alive[limit:] = False
     return alive
 
 
-def _score_one_query(
-    per_term: dict[str, dict[str, np.ndarray]],
-    terms: list[str],
-    idf_by_term: dict[str, float],
-    dls: np.ndarray,
-    ext_ids: np.ndarray,
-    alive: np.ndarray,
-    avgdl: float,
-    k: int,
-    mode: str,
-    k1: float,
-    b: float,
-    R: int,
-    decoded: dict,
-    visited_limit: int | None = None,
-    bq: dict | None = None,
-    dismax: float | None = None,
-    synonym: bool = False,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Score one query against one segment with block-max range pruning.
-    ``decoded`` is a shared (term, block) → (docs, tfs) cache so batched
-    queries decode every posting block at most once per segment.
-
-    ``visited_limit`` caps the docs visited per segment (the collector
-    visit budget, ``GPUPerLeafCuVSKnnCollector.java:26-38``): ranges are
-    visited best-bound-first, so an exhausted budget degrades tail recall
-    gracefully — never errors, never drops an already-collected hit.
-
-    ``bq`` turns the scorer into Lucene's scored ``BooleanQuery``
-    (sum of BM25 contributions over the MATCHED positive clauses):
-    ``{"must_set", "should_set", "msm", "exclude"}`` — every must term
-    required, at least ``msm`` should terms required, exclude terms
-    reject the doc and never score. ``terms`` then holds the scoring
-    (must+should) terms only; the range upper bounds stay valid because
-    clause constraints only REMOVE candidate docs.
-
-    ``dismax`` (a tie-breaker in [0, 1]) switches score combination to
-    Lucene's ``DisjunctionMaxQuery``: score = max(per-term BM25) +
-    tie × (sum − max). The SUM-based range bounds stay valid upper
-    bounds because max + tie·(sum − max) ≤ sum for tie ≤ 1, so block-max
-    pruning and the bounded-heap early exit are untouched (merely
-    looser).
-
-    ``synonym`` switches to Lucene's ``SynonymQuery``: the terms score as
-    ONE pseudo-term — per-doc tf is the SUM across synonyms and every
-    entry of ``idf_by_term`` carries the SAME merged idf (caller computes
-    it from the max docFreq, as ``SynonymQuery`` merges TermStatistics),
-    so BM25's tf saturation applies once to the merged frequency. The
-    per-term block bounds stay valid: BM25_tf is concave with f(0)=0,
-    hence subadditive — f(Σtf) ≤ Σf(tf_i) — so the existing sum-of-
-    block-max range bounds only get looser, never wrong."""
-    n_docs = dls.size
-    norm_denom = k1 * (1.0 - b + b * dls / avgdl)  # per-doc BM25 denominator part
-
-    present = [t for t in terms if t in per_term and per_term[t]["block_id"].size]
-    if mode == "and" and len(present) < len(terms):
-        return None
-    if bq is not None:
-        # a must term with no postings in this segment → nothing can match;
-        # fewer present should terms than msm → the count is unreachable
-        if any(t not in per_term or not per_term[t]["block_id"].size
-               for t in bq["must_set"]):
-            return None
-        n_should_present = sum(1 for t in present if t in bq["should_set"])
-        if bq["msm"] > n_should_present:
-            return None
-    if not present:
-        return None
-
-    # ---- block impact upper bounds (dl-independent: dl→(1-b) floor) ----
-    ub_of = {}
-    for t in present:
-        mt = per_term[t]["max_tf"].astype(np.float64)
-        ub_of[t] = idf_by_term[t] * (k1 + 1.0) * mt / (mt + k1 * (1.0 - b))
-
-    # ---- range bounds: sum over terms of max overlapping block ub ----
-    n_ranges = (n_docs + R - 1) // R
-    range_ub = np.zeros(n_ranges, dtype=np.float64)
-    spans = {}
-    for t in present:
-        p = per_term[t]
-        r0 = p["first_doc"].astype(np.int64) // R
-        r1 = p["last_doc"].astype(np.int64) // R
-        spans[t] = (r0, r1)
-        tmax = np.zeros(n_ranges, dtype=np.float64)
-        # vectorized: blocks are doc-sorted, so almost every block spans a
-        # single range (r1 == r0) — scatter-max those in one ufunc call and
-        # loop only the rare multi-range spans (N/32 Python iterations for a
-        # hot term would otherwise dominate per-query latency)
-        ub = ub_of[t]
-        single = r1 == r0
-        if single.any():
-            np.maximum.at(tmax, r0[single], ub[single])
-        for j in np.flatnonzero(~single):
-            np.maximum(tmax[r0[j] : r1[j] + 1], ub[j], out=tmax[r0[j] : r1[j] + 1])
-        range_ub += tmax
-
-    # MUST_NOT spans (bq only): exclude terms never score, they only veto
-    ex_spans = {}
-    if bq is not None:
-        for t in bq["exclude"]:
-            p = per_term.get(t)
-            if p is None or not p["block_id"].size:
-                continue
-            ex_spans[t] = (
-                p["first_doc"].astype(np.int64) // R,
-                p["last_doc"].astype(np.int64) // R,
-            )
-
-    order = np.argsort(-range_ub, kind="stable")
-    cand_docs: list[np.ndarray] = []
-    cand_scores: list[np.ndarray] = []
-    n_collected = 0
-    kth = -np.inf
-
-    n_visited = 0
-    for r in order:
-        if range_ub[r] <= 0.0:
-            break
-        if n_collected >= k and range_ub[r] < kth:
-            break  # bounded-heap early exit: no doc in r can enter top-k
-        if visited_limit is not None and n_visited >= visited_limit:
-            break  # visit budget exhausted mid-collection (earlyTerminated)
-        lo, hi = r * R, min((r + 1) * R, n_docs)
-        n_visited += hi - lo
-        acc = np.zeros(hi - lo, dtype=np.float64)
-        accmax = np.zeros(hi - lo, dtype=np.float64) if dismax is not None else None
-        nterms_hit = np.zeros(hi - lo, dtype=np.int32) if mode == "and" else None
-        nmust_hit = (
-            np.zeros(hi - lo, dtype=np.int32)
-            if bq is not None and bq["must_set"]
-            else None
-        )
-        nshould_hit = (
-            np.zeros(hi - lo, dtype=np.int32)
-            if bq is not None and bq["msm"] > 0
-            else None
-        )
-        for t in present:
-            p = per_term[t]
-            r0, r1 = spans[t]
-            sel = np.flatnonzero((r0 <= r) & (r1 >= r))
-            if sel.size == 0:
-                if mode == "and" or (bq is not None and t in bq["must_set"]):
-                    acc = None  # a required term misses this whole range
-                    break
-                continue
-            t_idf = idf_by_term[t]
-            for j in sel:
-                key = (t, int(p["block_id"][j]))
-                if key not in decoded:
-                    decoded[key] = (
-                        np.cumsum(varint_decode(p["doc_deltas"][j]), dtype=np.int64),
-                        varint_decode(p["tfs"][j]),
-                    )
-                docs, tfs = decoded[key]
-                m = (docs >= lo) & (docs < hi)
-                if not m.any():
-                    continue
-                d = docs[m] - lo
-                tf = tfs[m].astype(np.float64)
-                if synonym:
-                    acc[d] += tf  # merged tf; scored once below
-                    continue
-                contrib = t_idf * tf * (k1 + 1.0) / (tf + norm_denom[docs[m]])
-                acc[d] += contrib
-                if accmax is not None:
-                    # d is duplicate-free here (a doc appears in exactly
-                    # one block per term), so fancy-index max is safe
-                    np.maximum(accmax[d], contrib, out=contrib)
-                    accmax[d] = contrib
-                if mode == "and":
-                    nterms_hit[d] += 1
-                if bq is not None:
-                    # a doc appears in exactly one block per term, so each
-                    # clause is counted at most once per doc
-                    if nmust_hit is not None and t in bq["must_set"]:
-                        nmust_hit[d] += 1
-                    elif nshould_hit is not None and t in bq["should_set"]:
-                        nshould_hit[d] += 1
-        if acc is None:
-            continue
-        if synonym:
-            # acc holds the merged tf — apply BM25 once with the shared idf
-            pos = acc > 0
-            nd = norm_denom[lo:hi]
-            syn_idf = idf_by_term[present[0]]
-            sc = np.zeros_like(acc)
-            sc[pos] = syn_idf * (k1 + 1.0) * acc[pos] / (acc[pos] + nd[pos])
-            acc = sc
-        excl_mask = None
-        for t, (er0, er1) in ex_spans.items():
-            p = per_term[t]
-            for j in np.flatnonzero((er0 <= r) & (er1 >= r)):
-                key = (t, int(p["block_id"][j]))
-                if key not in decoded:
-                    decoded[key] = (
-                        np.cumsum(varint_decode(p["doc_deltas"][j]), dtype=np.int64),
-                        varint_decode(p["tfs"][j]),
-                    )
-                docs, _tfs = decoded[key]
-                m = (docs >= lo) & (docs < hi)
-                if m.any():
-                    if excl_mask is None:
-                        excl_mask = np.zeros(hi - lo, dtype=bool)
-                    excl_mask[docs[m] - lo] = True
-        live = alive[lo:hi]
-        hit = (acc > 0) & live
-        if mode == "and":
-            hit &= nterms_hit == len(present)
-        if bq is not None:
-            if nmust_hit is not None:
-                hit &= nmust_hit == len(bq["must_set"])
-            if nshould_hit is not None:
-                hit &= nshould_hit >= bq["msm"]
-            if excl_mask is not None:
-                hit &= ~excl_mask
-        idxs = np.flatnonzero(hit)
-        if idxs.size == 0:
-            continue
-        cand_docs.append(idxs + lo)
-        if accmax is not None:
-            cand_scores.append(
-                accmax[idxs] + dismax * (acc[idxs] - accmax[idxs])
-            )
-        else:
-            cand_scores.append(acc[idxs])
-        n_collected += idxs.size
-        if n_collected >= k:
-            allsc = np.concatenate(cand_scores)
-            kth = np.partition(allsc, allsc.size - k)[allsc.size - k]
-
-    if not cand_docs:
-        return None
-    docs = np.concatenate(cand_docs)
-    scores = np.concatenate(cand_scores)
-    # per-segment exact top-k with the global tie-break (score desc, ext_id asc)
-    ext = ext_ids[docs]
-    sel = np.lexsort((ext, -scores))[:k]
-    return ext[sel], scores[sel]
-
-
-def make_scorer(
-    query_terms: list[str],
-    idf_by_term: dict[str, float],
-    avgdl: float,
-    k: int,
-    cfg: IndexConfig,
-    mode: str = "or",
-    allowed_ext: np.ndarray | None = None,
-    filter_active: bool = False,
-    norms_bc=None,
-    visited_limit: int | None = None,
-    bq: dict | None = None,
-    dismax: float | None = None,
-    synonym: bool = False,
-):
-    """Build the per-segment scoring UDF (S1 analogue).
-
-    Two wirings: cogrouped with the packed aux side (tombstones / large
-    filters), or — when ``norms_bc`` is set and the caller passes
-    ``aux=None`` — norms resolved from the executor-local broadcast (the
-    hot path: one scan, one shuffle, one job).
-
-    ``filter_active`` marks that a pre-filter (S10) was requested through
-    the packed-blob aux path: a segment with NO ``allowed`` aux row then has
-    an EMPTY allowed set (zero filtered docs live there), never "no filter".
-    """
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    R = cfg.prune_range
-    terms = list(dict.fromkeys(query_terms))  # dedupe, keep order
-    # scored BooleanQuery (bq): exclude terms ride the postings scan for the
-    # veto mask but never enter the scoring term list
-    wanted = set(terms) | (set(bq["exclude"]) if bq is not None else set())
-
-    def score_segment(postings: pd.DataFrame, aux: pd.DataFrame | None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"segment_id": pd.Series([], dtype="int64"),
-             "ext_id": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
-        if postings.empty or k <= 0:  # S9 guard
-            return empty
-        seg = int(postings["segment_id"].iloc[0])
-        if aux is None:
-            blob = norms_bc.value.get(seg)
-            if blob is None:
-                return empty
-            dls = np.frombuffer(blob[0], dtype=np.uint32).astype(np.float64)
-            ext_ids = np.frombuffer(blob[1], dtype=np.int64)
-            tomb = None
-            allowed = (
-                _resolve_allowed(allowed_ext, ext_ids)
-                if allowed_ext is not None
-                else None
-            )
-        else:
-            if aux.empty:
-                return empty
-            dls, ext_ids, tomb, allowed = _aux_arrays(aux, allowed_ext)
-        if dls is None:
-            return empty
-        if filter_active and allowed is None and allowed_ext is None:
-            return empty  # S10: filtered query, no allowed docs in segment
-        alive = _alive_mask(dls.size, tomb, allowed)
-        if not alive.any():
-            return empty
-        per_term = _group_postings(postings, wanted)
-        res = _score_one_query(
-            per_term, terms, idf_by_term, dls, ext_ids, alive, avgdl, k, mode,
-            k1, b, R, {}, visited_limit=visited_limit, bq=bq, dismax=dismax,
-            synonym=synonym,
-        )
-        if res is None:
-            return empty
-        ext, scores = res
-        return pd.DataFrame(
-            {"segment_id": np.full(ext.size, seg, dtype=np.int64),
-             "ext_id": ext,
-             "score": scores}
-        )
-
-    return score_segment
-
-
 def _score_batch_queries(
-    qspecs: dict[str, dict],
-    idf_by_term: dict[str, float],
-    term_post: dict[str, tuple[np.ndarray, np.ndarray]],
+    specs: dict[str, dict],
+    post: dict[str, tuple[np.ndarray, np.ndarray | None]],
+    impacts: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]],
     alive: np.ndarray,
     ext_ids: np.ndarray,
-    n_docs: int,
+    denom: np.ndarray,
+    k1: float,
 ) -> tuple[list, list, list]:
-    """Per-segment batch scoring core shared by the scan path and the
-    impact-cache path: ``term_post`` maps term → (doc ids, per-doc BM25
-    contribution); each query is a fancy-indexed add of its terms'
-    contribution arrays + an exact tie-broken top-k.
+    """The one BM25 segment kernel: score every spec against one segment
+    → (query-id, ext_id, score) arrays, one of each per query with hits.
 
-    A spec with a ``_bq`` entry (normalized by :func:`bm25_topk_batch`)
-    is a scored BooleanQuery: ``terms`` holds the scoring (must+should)
-    terms, ``_bq`` carries ``{"must_set", "should_set", "msm",
-    "exclude"}`` — same clause semantics as :func:`bm25_boolean_topk`."""
+    ``post`` maps each live term with postings here to (doc ids, float64
+    tfs); ``impacts`` memoizes (term, weight) → (doc ids, contribution) and
+    may be pre-seeded from the impact cache, whose terms carry tfs None.
+    ``denom`` is each doc's k1·(1 − b + b·dl/avgdl). A spec (see
+    :func:`_weigh`) has scoring ``terms`` with weights ``w``, a ``comb``
+    (``sum``; ``dismax``: max + ``tie`` × (sum − max); ``synonym``: tf
+    summed across the terms, BM25 applied once with the shared weight),
+    clause constraints ``must`` / ``should`` / ``msm`` / ``exclude`` and
+    ``k``. A doc matches when it is alive, holds a scoring term, every
+    must term, at least msm should terms and no exclude term. The top-k
+    keeps (score desc, ext_id asc). Contributions add term by term in
+    query order in float64, so scores are the same on every tier."""
+
+    def contrib(t: str, w: float):
+        c = impacts.get((t, w))
+        if c is None:
+            docs, tfs = post[t]
+            c = impacts[(t, w)] = (docs, w * tfs * (k1 + 1.0) / (tfs + denom[docs]))
+        return c
+
+    n_docs = alive.size
     q_out: list[np.ndarray] = []
     e_out: list[np.ndarray] = []
     s_out: list[np.ndarray] = []
-    for qid, spec in qspecs.items():
-        terms = [t for t in dict.fromkeys(spec["terms"]) if t in idf_by_term]
-        mode = spec.get("mode", "or")
-        bqs = spec.get("_bq")
-        if mode == "and" and len(terms) < len(set(spec["terms"])):
+    for qid, q in specs.items():
+        k = q["k"]
+        present = [t for t in q["terms"] if t in post]
+        should = [t for t in q["should"] if t in post]
+        if (k <= 0 or not present or q["msm"] > len(should)
+                or any(t not in post for t in q["must"])):
             continue
-        present = [t for t in terms if t in term_post]
-        if not present or (mode == "and" and len(present) < len(terms)):
-            continue
-        if bqs is not None:
-            # every must term needs live postings IN THIS SEGMENT; enough
-            # should terms must be present to reach the msm count
-            if any(t not in term_post or t not in idf_by_term
-                   for t in bqs["must_set"]):
-                continue
-            pres_should = [t for t in present if t in bqs["should_set"]]
-            if bqs["msm"] > len(pres_should):
-                continue
         acc = np.zeros(n_docs, dtype=np.float64)
-        for t in present:
-            d, c = term_post[t]
-            acc[d] += c  # doc ids unique per term → plain fancy add
-        hit = (acc > 0) & alive
-        if mode == "and":
-            # int32: an int8 counter wraps at >127 query terms and the
-            # nh == len(present) test then silently matches nothing
-            nh = np.zeros(n_docs, dtype=np.int32)
+        if q["comb"] == "synonym":
             for t in present:
-                nh[term_post[t][0]] += 1
-            hit &= nh == len(present)
-        if bqs is not None:
-            if bqs["must_set"]:
-                nm = np.zeros(n_docs, dtype=np.int32)
-                for t in bqs["must_set"]:
-                    nm[term_post[t][0]] += 1
-                hit &= nm == len(bqs["must_set"])
-            if bqs["msm"] > 0:
-                ns = np.zeros(n_docs, dtype=np.int32)
-                for t in pres_should:
-                    ns[term_post[t][0]] += 1
-                hit &= ns >= bqs["msm"]
-            for t in bqs["exclude"]:
-                tp = term_post.get(t)
-                if tp is not None:
-                    hit[tp[0]] = False  # MUST_NOT veto, never scored
+                acc[post[t][0]] += post[t][1]
+            hit = acc > 0
+            score = np.zeros(n_docs, dtype=np.float64)
+            w = q["w"][present[0]]
+            score[hit] = w * (k1 + 1.0) * acc[hit] / (acc[hit] + denom[hit])
+        else:
+            mx = np.zeros(n_docs, dtype=np.float64) if q["comb"] == "dismax" else None
+            for t in present:
+                d, c = contrib(t, q["w"][t])
+                acc[d] += c  # doc ids unique per term → plain fancy add
+                if mx is not None:
+                    mx[d] = np.maximum(mx[d], c)
+            hit = acc > 0
+            score = acc if mx is None else mx + q["tie"] * (acc - mx)
+        hit &= alive
+        if q["must"]:
+            # int32: an int8 counter wraps at >127 terms
+            nm = np.zeros(n_docs, dtype=np.int32)
+            for t in q["must"]:
+                nm[post[t][0]] += 1
+            hit &= nm == len(q["must"])
+        if q["msm"] > (0 if q["must"] else 1):  # a pure disjunction needs no count
+            ns = np.zeros(n_docs, dtype=np.int32)
+            for t in should:
+                ns[post[t][0]] += 1
+            hit &= ns >= q["msm"]
+        for t in q["exclude"]:
+            if t in post:
+                hit[post[t][0]] = False  # MUST_NOT veto, never scored
         idxs = np.flatnonzero(hit)
         if idxs.size == 0:
             continue
-        k = int(spec.get("k", 10))
         if idxs.size > k:
             # keep every doc tied at the k-th score so the (score desc,
             # ext_id asc) tie-break below stays exact
-            vals = acc[idxs]
+            vals = score[idxs]
             kth = -np.partition(-vals, k - 1)[k - 1]
             idxs = idxs[vals >= kth]
-        sel = np.lexsort((ext_ids[idxs], -acc[idxs]))[:k]
-        idxs = idxs[sel]
+        idxs = idxs[np.lexsort((ext_ids[idxs], -score[idxs]))[:k]]
         q_out.append(np.full(idxs.size, qid, dtype=object))
         e_out.append(ext_ids[idxs])
-        s_out.append(acc[idxs])
+        s_out.append(score[idxs])
     return q_out, e_out, s_out
 
 
-def make_batch_scorer(
-    qspecs: dict[str, dict],
-    idf_by_term: dict[str, float],
+def _segment_scorer(
+    specs: dict[str, dict],
+    terms: set[str],
     avgdl: float,
     cfg: IndexConfig,
+    with_qid: bool,
     norms_bc=None,
-    hot_bc=None,
-    cached_terms: frozenset = frozenset(),
+    allowed_ext: np.ndarray | None = None,
+    filter_active: bool = False,
+    visited_limit: int | None = None,
+    hot=((), {}),
 ):
-    """Cogrouped UDF scoring MANY queries in one pass per segment.
+    """The one per-segment UDF body of every tier → ``score(postings,
+    aux, seg)`` returning the segment's partial top-k rows.
 
-    qspecs: {query_id: {"terms": [...], "mode": "or"|"and", "k": int}}.
-
-    Throughput algorithm (the batch path's whole point): every needed term
-    is decoded and scored ONCE per segment into a dense per-doc score
-    vector — cost O(total postings of the term union). Each query is then
-    just the sum of its 2-3 term vectors plus an argpartition top-k, a few
-    numpy calls instead of a full pruning pass — per-(query, segment) work
-    drops from ~ms to ~tens of µs, which is what the N→4N query-throughput
-    scaling rides on. Scores accumulate term-by-term in float64 in the
-    same order as the single-query scorer (identical results).
-
-    HYBRID tier (``hot_bc``/``cached_terms`` set): the incoming postings
-    frame carries only the UNCACHED tail terms (plus one null-term marker
-    row per segment so segments whose every query term is cached still
-    form a group); the Zipf-head terms' (docs, contribution) arrays come
-    from the executor-local impact cache — the scan's byte volume shrinks
-    to the tail share."""
+    Norms come from the executor-local broadcast ``norms_bc`` (``aux``
+    None) or from the cogrouped aux side (tombstones, large filters).
+    ``allowed_ext`` is the broadcast small filter (sorted ext_ids);
+    ``filter_active`` marks a packed-blob filter, under which a segment
+    with NO ``allowed`` aux row has no allowed docs (S10). ``hot`` =
+    (impact-cache broadcasts, {term: idf} of the cached terms to read):
+    those terms' (docs, contribution) arrays come from the cache, and
+    the postings frame holds only the other terms plus one null-term
+    marker row per segment (``postings`` is None when every term is
+    cached). ``visited_limit`` restricts scoring to local doc ids below
+    it (Lucene's doc-id visit order) and skips decoding blocks past it."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
+    hot_bc, hot_idf = hot
+    dtypes = {"query_id": "object", "segment_id": "int64", "ext_id": "int64", "score": "float64"}
+    if not with_qid:
+        del dtypes["query_id"]
+    empty = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in dtypes.items()})
 
-    def score_segment(postings: pd.DataFrame, aux: pd.DataFrame | None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": pd.Series([], dtype="object"),
-             "segment_id": pd.Series([], dtype="int64"),
-             "ext_id": pd.Series([], dtype="int64"),
-             "score": pd.Series([], dtype="float64")}
-        )
-        if postings.empty:
+    def score(postings: pd.DataFrame | None, aux: pd.DataFrame | None, seg: int) -> pd.DataFrame:
+        if postings is not None and postings.empty:
             return empty
-        seg = int(postings["segment_id"].iloc[0])
-        if hot_bc:
-            postings = postings[postings["term"].notna()]  # drop marker rows
         if aux is None:
             blob = norms_bc.value.get(seg)
             if blob is None:
@@ -817,56 +502,211 @@ def make_batch_scorer(
             ext_ids = np.frombuffer(blob[1], dtype=np.int64)
             tomb = allowed = None
         else:
-            if aux.empty:
-                return empty
             dls, ext_ids, tomb, allowed = _aux_arrays(aux)
-        if dls is None:
-            return empty
-        alive = _alive_mask(dls.size, tomb, allowed)
+            if dls is None or (filter_active and allowed is None):
+                return empty
+        if allowed_ext is not None:
+            allowed = _resolve_allowed(allowed_ext, ext_ids)
+        alive = _alive_mask(dls.size, tomb, allowed, visited_limit)
         if not alive.any():
             return empty
-        n_docs = dls.size
-        norm_denom = k1 * (1.0 - b + b * dls / avgdl)
-
-        # decode + score every term of the batch union ONCE, kept SPARSE:
-        # (doc ids, per-doc contribution). A query then touches only its
-        # own terms' arrays plus one n_docs accumulator — the working set
-        # stays cache-resident instead of streaming a dense per-term
-        # matrix through DRAM for every query (the memory-bandwidth wall
-        # that capped N→4N query scaling)
-        term_post: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        if len(postings):
-            for t, p in _group_postings(postings, set(idf_by_term)).items():
-                docs, tfs = _decode_term(p)
-                tfs = tfs.astype(np.float64)
-                contrib = idf_by_term[t] * tfs * (k1 + 1.0) / (tfs + norm_denom[docs])
-                term_post[t] = (docs, contrib)
-        if hot_bc:
-            for t in cached_terms:
-                ent = (_cache_get(hot_bc, t) or {}).get(seg)
-                if ent is not None and t not in term_post:
-                    term_post[t] = (
-                        np.frombuffer(ent[0], np.int32),
-                        np.frombuffer(ent[1], np.float64),
-                    )
-        if not term_post:
+        post = {}
+        if postings is not None:
+            if hot_idf:
+                postings = postings[postings["term"].notna()]  # drop marker rows
+            for t, p in _group_postings(postings, terms).items():
+                docs, tfs = _decode_term(p, visited_limit)
+                if docs.size:
+                    post[t] = (docs, tfs.astype(np.float64))
+        impacts = {}
+        for t, w in hot_idf.items():
+            ent = (_cache_get(hot_bc, t) or {}).get(seg)
+            if ent is not None and t not in post:
+                docs = np.frombuffer(ent[0], np.int32)
+                post[t] = (docs, None)
+                impacts[(t, w)] = (docs, np.frombuffer(ent[1], np.float64))
+        if not post:
             return empty
-
-        q_out, e_out, s_out = _score_batch_queries(
-            qspecs, idf_by_term, term_post, alive, ext_ids, n_docs
-        )
-        if not q_out:
+        denom = k1 * (1.0 - b + b * dls / avgdl)
+        q, e, s = _score_batch_queries(specs, post, impacts, alive, ext_ids, denom, k1)
+        if not q:
             return empty
-        # ONE output frame per segment — 256 per-query DataFrame
-        # constructions were a measurable slice of the batch path
-        return pd.DataFrame(
-            {"query_id": np.concatenate(q_out),
-             "segment_id": np.int64(seg),
-             "ext_id": np.concatenate(e_out),
-             "score": np.concatenate(s_out)}
-        )
+        # ONE output frame per segment — per-query frames were a
+        # measurable slice of the batch path
+        out = {"query_id": np.concatenate(q), "segment_id": np.int64(seg),
+               "ext_id": np.concatenate(e), "score": np.concatenate(s)}
+        if not with_qid:
+            del out["query_id"]
+        return pd.DataFrame(out)
 
-    return score_segment
+    return score
+
+
+def _compile(s: dict, label: str = "") -> dict | None:
+    """One query spec → the normalized spec every scored query runs as,
+    or None when Lucene's clause rules say it matches nothing.
+
+    A plain spec ``{"terms", "mode", "k"}``: mode ``or`` (any term) or
+    ``and`` (every term required). A boolean spec ``{"must", "should",
+    "exclude", "min_should_match", "k"}`` (scored ``BooleanQuery``): msm
+    None is 0 with must clauses, else 1; a pure-should query needs at
+    least one match; an msm above the should count matches nothing. The
+    internal keys ``comb`` (sum | dismax | synonym), ``tie`` and
+    ``boosts`` pass through. ``label`` prefixes validation errors."""
+    where = f"{label}: " if label else ""
+    base = {"comb": s.get("comb", "sum"), "tie": float(s.get("tie", 0.0)),
+            "boosts": s.get("boosts") or {}, "k": int(s.get("k", 10))}
+    if not ({"must", "should", "exclude", "min_should_match"} & set(s)):
+        mode = s.get("mode", "or")
+        if mode not in ("or", "and"):
+            raise ValueError(f"{where}unknown mode {mode!r}; expected one of ('or', 'and')")
+        terms = list(dict.fromkeys(s["terms"]))
+        must, should, msm = (terms, [], 0) if mode == "and" else ([], terms, 1)
+        return {**base, "terms": terms, "must": must, "should": should,
+                "msm": msm, "exclude": []}
+    if "terms" in s or "mode" in s:
+        raise ValueError(f"{where}boolean spec must not also carry terms/mode")
+    must, should, exclude = (
+        list(dict.fromkeys(s.get(c, ()))) for c in ("must", "should", "exclude")
+    )
+    overlap = (set(must) | set(should)) & set(exclude) | (set(must) & set(should))
+    if overlap:
+        raise ValueError(f"{where}terms appear in more than one clause list: {sorted(overlap)}")
+    if not must and not should:
+        raise ValueError(f"{where}at least one positive clause (must / should) is required")
+    msm = s.get("min_should_match")
+    msm = (0 if must else 1) if msm is None else int(msm)
+    if not must:
+        msm = max(1, msm)  # pure-SHOULD still needs one match (Lucene)
+    if msm > len(should):
+        return None
+    return {**base, "terms": must + should, "must": must, "should": should,
+            "msm": msm, "exclude": exclude}
+
+
+def _weigh(s: dict, idf_of: dict[str, float], n: int, df: dict[str, int]) -> dict | None:
+    """Bind a compiled spec to the live statistics (``idf_of`` holds the
+    terms with live docs) → the kernel's spec: live terms and per-term
+    weights idf × boost. None when it cannot match: a required term, or
+    too many should terms, have no live doc. Boolean structure restricts
+    candidates, never statistics (``BM25Similarity``)."""
+    terms = [t for t in s["terms"] if t in idf_of]
+    should = [t for t in s["should"] if t in idf_of]
+    if not terms or s["msm"] > len(should) or any(t not in idf_of for t in s["must"]):
+        return None
+    if s["comb"] == "synonym":
+        # SynonymQuery merges TermStatistics: docFreq = max across the
+        # synonyms — one idf for the pseudo-term
+        w = dict.fromkeys(terms, idf(n, max(df[t] for t in terms)))
+    else:
+        w = {t: idf_of[t] * float(s["boosts"].get(t, 1.0)) for t in terms}
+    exclude = [t for t in s["exclude"] if t in idf_of]  # a df-0 MUST_NOT vetoes nothing
+    return {**s, "terms": terms, "should": should, "exclude": exclude, "w": w}
+
+
+def _impact_tier(spark, cat, cfg, specs, idf_of, df, admit: bool):
+    """Impact-cache broadcasts and covered terms these specs may read.
+    Cached contributions are baked at the plain idf and summed per term,
+    so a boosted or synonym spec reads none. A batch (``admit``)
+    demand-fills the cache; a single query only reads what a batch
+    admitted, so commits and first queries never pay for a cache build."""
+    if any(s["comb"] == "synonym" or any(s["w"][t] != idf_of[t] for t in s["terms"])
+           for s in specs.values()):
+        return (), frozenset()
+    if admit:
+        return _hot_postings_broadcast(
+            spark, cat, cfg, want_idf=idf_of, want_df={t: df[t] for t in idf_of}
+        )
+    if getattr(cat, "_hotpost_memo", None) is None:
+        return (), frozenset()
+    return _hot_postings_broadcast(spark, cat, cfg)
+
+
+def _scored(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    specs: dict[str, dict],
+    cfg: IndexConfig,
+    filter_ext_ids: DataFrame | None = None,
+    visited_limit: int | None = None,
+    batch: bool = False,
+) -> DataFrame | None:
+    """The one driver path of every scored query → per-segment partial
+    top-k rows (``query_id`` first when ``batch``, then ``SCORE_SCHEMA``),
+    or None when no spec can match. ``specs`` are :func:`_compile`
+    outputs by query id.
+
+    Done once for the whole batch: one postings scan of every term; live
+    stats, df and idf; the filter head (one Arrow read of at most
+    ``FILTER_BROADCAST_MAX`` + 1 ids: a small filter rides the scorer
+    closure, a larger one the packed-blob cogroup); the norms tier (the
+    executor-local norms broadcast when there are no tombstones and no
+    blob filter, else the aux cogroup); and the impact-cache tier — a
+    full hit scores from executor-local broadcasts over a segment-id
+    frame with no table scan, a batch's partial hit scans only the
+    uncached tail terms (hybrid), otherwise the scan feeds the scorer."""
+    terms = list(dict.fromkeys(t for s in specs.values() for t in (*s["terms"], *s["exclude"])))
+    if batch:
+        terms = sorted(terms)
+    if not terms:
+        return None
+    postings = _query_postings(spark, cat, terms, cfg)
+    n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, filter_ext_ids)
+    if n == 0:
+        return None
+    idf_of = {t: idf(n, d) for t, d in df.items() if d > 0}
+    specs = {q: w for q, s in specs.items() if (w := _weigh(s, idf_of, n, df)) is not None}
+    if not specs:
+        return None
+    allowed_ext = aux_filter = None
+    if filter_ext_ids is not None:
+        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1).toArrow().column(0)
+        if len(head) > FILTER_BROADCAST_MAX:
+            aux_filter = filter_ext_ids
+        else:
+            allowed_ext = np.sort(head.to_numpy(zero_copy_only=False).astype(np.int64))
+    live = {t for s in specs.values() for t in (*s["terms"], *s["exclude"])}
+    schema = f"query_id string, {SCORE_SCHEMA}" if batch else SCORE_SCHEMA
+    args = (specs, live, avgdl, cfg, batch)
+    opts = {"allowed_ext": allowed_ext, "visited_limit": visited_limit}
+    if aux_filter is not None or _has_tombstones(spark, cat) or n > NORMS_BROADCAST_MAX_DOCS:
+        score = _segment_scorer(*args, filter_active=aux_filter is not None, **opts)
+        return (
+            postings.groupby("segment_id")
+            .cogroup(_aux_df(spark, cat, aux_filter).groupby("segment_id"))
+            .applyInPandas(lambda key, p, a: score(p, a, int(key[0])), schema)
+        )
+    norms_bc = _norms_broadcast(spark, cat)
+    hot_bc, hot_terms = _impact_tier(spark, cat, cfg, specs, idf_of, df, batch)
+    cached = live & hot_terms
+    if cached != live and not batch:
+        # a partial hit pays off for a batch's scan only; a single
+        # query's scan is too small to repay the second postings read and
+        # the union (traced: +1 manifest read, ~200 ms more driver time)
+        cached = set()
+    score = _segment_scorer(
+        *args, norms_bc=norms_bc, hot=(hot_bc, {t: idf_of[t] for t in cached}), **opts
+    )
+    segs = sorted(norms_bc.value)
+    if cached == live:
+        # zero table scans: the job parallelizes over the segment ids and
+        # reads postings AND norms from executor-local broadcasts
+        npart = max(1, min(len(segs), shuffle_partitions(spark)))
+        seg_df = local_frame(spark, "segment_id long", segs).repartition(npart, "segment_id")
+        return seg_df.mapInPandas(
+            lambda it: (score(None, None, int(s)) for pdf in it for s in pdf["segment_id"]),
+            schema,
+        )
+    if cached:
+        # HYBRID: scan only the uncached TAIL terms; a null-term marker
+        # row per segment keeps segments whose every term is cached in
+        # the groupby
+        postings = _query_postings(spark, cat, sorted(live - cached), cfg).unionByName(
+            local_frame(spark, "segment_id long", segs), allowMissingColumns=True
+        )
+    return postings.groupby("segment_id").applyInPandas(
+        lambda p: score(p, None, int(p["segment_id"].iloc[0])), schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1096,6 +936,34 @@ def warm_query_path(
     bm25_topk(spark, cat, [hot], k=1, cfg=cfg).collect()
 
 
+def _topk(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    spec: dict | None,
+    cfg: IndexConfig | None,
+    filter_ext_ids: DataFrame | None = None,
+    visited_limit: int | None = None,
+    sort: bool = True,
+) -> DataFrame:
+    """A single scored query: a batch of one through :func:`_scored`,
+    then the global top-k (score desc, ext_id asc) → DataFrame(ext_id,
+    score); unsorted and uncut when ``sort`` is False."""
+    partials = None
+    if spec is not None and spec["k"] > 0:
+        partials = _scored(
+            spark, cat, {"q": spec}, cfg or IndexConfig(), filter_ext_ids, visited_limit
+        )
+    if partials is None:
+        return local_frame(spark, "ext_id long, score double")
+    if not sort:
+        return partials.select("ext_id", "score")
+    return (
+        partials.orderBy(F.desc("score"), F.asc("ext_id"))
+        .limit(spec["k"])
+        .select("ext_id", "score")
+    )
+
+
 def bm25_topk(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -1110,21 +978,22 @@ def bm25_topk(
     _synonym: bool = False,
 ) -> DataFrame:
     """BM25 top-k over the index → DataFrame(ext_id, score), exact scores,
-    deterministic tie-break (score desc, ext_id asc).
+    deterministic tie-break (score desc, ext_id asc). ``mode`` is ``or``
+    (any term matches) or ``and`` (every term required); anything else
+    raises ``ValueError``.
 
     ``visited_limit``: optional per-segment doc-visit budget (collector
-    visitedLimit analogue) — caps worst-case per-leaf latency; a tiny
-    budget degrades recall, never errors.
+    visitedLimit analogue) — each segment scores only its docs with local
+    id below the budget (Lucene's doc-id visit order) and decodes no
+    posting block starting past it; a tiny budget degrades recall, never
+    errors.
 
     ``boosts``: optional term → multiplier map — each clause behaves as
     Lucene's ``BoostQuery(TermQuery, boost)``: its score contribution is
-    multiplied, matching is unchanged. Applied by scaling the term's idf,
-    so the block-max range bounds scale identically and pruning stays
-    exact; the impact cache is bypassed (its cached contributions are
-    fixed at boost 1). Boosts must be > 0; terms absent from the map keep
-    boost 1."""
-    cfg = cfg or IndexConfig()
-    terms = list(dict.fromkeys(query_terms))
+    multiplied, matching is unchanged. Applied as the term's weight
+    (idf × boost); the impact cache is bypassed (its cached contributions
+    are fixed at boost 1). Boosts must be > 0; terms absent from the map
+    keep boost 1."""
     if _synonym and (mode != "or" or boosts):
         raise ValueError("synonym scoring composes only with mode='or', no boosts")
     if boosts:
@@ -1134,98 +1003,14 @@ def bm25_topk(
         }
         if bad:
             raise ValueError(f"boosts must be positive numbers, got {bad}")
-    if k <= 0 or not terms:
-        return spark.createDataFrame([], "ext_id long, score double")
-    postings = _query_postings(spark, cat, terms, cfg)
-    n, avgdl, df_by_term = _live_stats_and_df(spark, cat, terms, cfg, postings, filter_ext_ids)
-    df_by_term = {t: d for t, d in df_by_term.items() if d > 0}
-    if n == 0 or not df_by_term:
-        return spark.createDataFrame([], "ext_id long, score double")
-    if mode == "and" and len(df_by_term) < len(terms):
-        return spark.createDataFrame([], "ext_id long, score double")
-    idf_by_term = {t: idf(n, d) for t, d in df_by_term.items()}
-    if _synonym:
-        # SynonymQuery merges TermStatistics: docFreq = max across the
-        # synonyms, tf summed in the scorer — one idf for the pseudo-term
-        syn_idf = idf(n, max(df_by_term.values()))
-        idf_by_term = {t: syn_idf for t in df_by_term}
-    if boosts:
-        idf_by_term = {
-            t: v * float(boosts.get(t, 1.0)) for t, v in idf_by_term.items()
-        }
-    # small-filter fast path: ship the allowed set into the scorer closure
-    # (one collect; no doc_map shuffle). Large filters fall back to the
-    # per-segment packed-blob cogroup path.
-    allowed_ext = None
-    aux_filter = filter_ext_ids
-    if filter_ext_ids is not None:
-        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1).collect()
-        if len(head) <= FILTER_BROADCAST_MAX:
-            allowed_ext = np.sort(np.array([r[0] for r in head], dtype=np.int64))
-            aux_filter = None
-    # hot path: no tombstones, no blob-side filter, norms fit the broadcast
-    # budget → norms ride an executor-local broadcast; the query is ONE
-    # postings scan + ONE segment shuffle + scoring (one Spark job)
-    fast = (
-        aux_filter is None
-        and not _has_tombstones(spark, cat)
-        and n <= NORMS_BROADCAST_MAX_DOCS
-    )
-    if fast:
-        norms_bc = _norms_broadcast(spark, cat)
-        # opportunistic impact-cache hit: if a prior batch already built a
-        # fresh cache covering every live term, a repeat single query runs
-        # scan-free too (USE-only — single queries never trigger a cache
-        # build, so commit/build latency is unaffected)
-        hp = getattr(cat, "_hotpost_memo", None)
-        if (
-            hp is not None
-            and hp["ver"] == _hot_cache_key(cat, cfg)
-            and hp["terms"]
-            and set(df_by_term) <= hp["terms"]
-            and allowed_ext is None
-            and visited_limit is None
-            and not boosts
-            and not _synonym  # cached contributions are per-term sums
-        ):
-            qspec = {"q": {"terms": list(df_by_term), "mode": mode, "k": k}}
-            partials = _batch_partials_cached(
-                spark, cat, qspec, idf_by_term, tuple(hp["bcs"]), norms_bc,
-                "query_id string, segment_id long, ext_id long, score double",
-            ).select("segment_id", "ext_id", "score")
-        else:
-            scorer = make_scorer(
-                list(df_by_term), idf_by_term, avgdl, k, cfg, mode,
-                allowed_ext=allowed_ext, norms_bc=norms_bc,
-                visited_limit=visited_limit, synonym=_synonym,
-            )
-            partials = postings.groupby("segment_id").applyInPandas(
-                lambda p: scorer(p, None), SCORE_SCHEMA
-            )
-    else:
-        scorer = make_scorer(
-            list(df_by_term), idf_by_term, avgdl, k, cfg, mode,
-            allowed_ext=allowed_ext, filter_active=aux_filter is not None,
-            visited_limit=visited_limit, synonym=_synonym,
-        )
-        aux = _aux_df(spark, cat, aux_filter)
-        partials = (
-            postings.groupby("segment_id")
-            .cogroup(aux.groupby("segment_id"))
-            .applyInPandas(lambda _k, p, a: scorer(p, a), SCORE_SCHEMA)
-        )
-    if _no_global_sort:  # bm25_scored_matches: full match set, unsorted
-        return partials.select("ext_id", "score")
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
-    )
+    spec = _compile({"terms": query_terms, "mode": mode, "k": k, "boosts": boosts,
+                     "comb": "synonym" if _synonym else "sum"})
+    return _topk(spark, cat, spec, cfg, filter_ext_ids, visited_limit, sort=not _no_global_sort)
 
 
-# effectively-unbounded k for the exhaustive collection pass: the scorer's
-# bounded-heap early exit and kth-score partition never fire, so every
-# live match is emitted; per-segment cost stays ∝ the terms' postings
+# effectively-unbounded k for the exhaustive collection pass: the kernel's
+# kth-score partition never fires, so every live match is emitted;
+# per-segment cost stays ∝ the terms' postings
 _ALL_MATCHES_K = 1 << 40
 
 
@@ -1273,66 +1058,35 @@ def dismax_topk(
     (``DisjunctionMaxQuery``'s constructor contract; tie 0 = pure max,
     tie 1 = plain disjunction sum). A doc matches when ≥ 1 term matches.
     Stats (N, avgdl, df→idf) are over live docs, identical to
-    :func:`bm25_topk`.
-
-    Same physical shape as :func:`bm25_topk` — ONE pruned postings scan
-    for all clause terms, per-segment block-max scoring (the sum-based
-    range bounds stay valid upper bounds for tie ≤ 1), global top-k
-    (score desc, ext_id asc). The impact-cache fast path is not taken:
-    its cached partials are sum-combined."""
-    cfg = cfg or IndexConfig()
+    :func:`bm25_topk`, and so is the physical shape: one pruned postings
+    scan for all clause terms, per-segment scoring, global top-k (score
+    desc, ext_id asc)."""
     tie = float(tie_breaker)
     if not 0.0 <= tie <= 1.0:
         raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
-    terms = list(dict.fromkeys(query_terms))
-    empty = spark.createDataFrame([], "ext_id long, score double")
-    if k <= 0 or not terms:
-        return empty
-    postings = _query_postings(spark, cat, terms, cfg)
-    n, avgdl, df_by_term = _live_stats_and_df(
-        spark, cat, terms, cfg, postings, filter_ext_ids
-    )
-    df_by_term = {t: d for t, d in df_by_term.items() if d > 0}
-    if n == 0 or not df_by_term:
-        return empty
-    idf_by_term = {t: idf(n, d) for t, d in df_by_term.items()}
-    allowed_ext = None
-    aux_filter = filter_ext_ids
-    if filter_ext_ids is not None:
-        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1).collect()
-        if len(head) <= FILTER_BROADCAST_MAX:
-            allowed_ext = np.sort(np.array([r[0] for r in head], dtype=np.int64))
-            aux_filter = None
-    fast = (
-        aux_filter is None
-        and not _has_tombstones(spark, cat)
-        and n <= NORMS_BROADCAST_MAX_DOCS
-    )
-    if fast:
-        scorer = make_scorer(
-            list(df_by_term), idf_by_term, avgdl, k, cfg, "or",
-            allowed_ext=allowed_ext, norms_bc=_norms_broadcast(spark, cat),
-            visited_limit=visited_limit, dismax=tie,
-        )
-        partials = postings.groupby("segment_id").applyInPandas(
-            lambda p: scorer(p, None), SCORE_SCHEMA
-        )
-    else:
-        scorer = make_scorer(
-            list(df_by_term), idf_by_term, avgdl, k, cfg, "or",
-            allowed_ext=allowed_ext, filter_active=aux_filter is not None,
-            visited_limit=visited_limit, dismax=tie,
-        )
-        aux = _aux_df(spark, cat, aux_filter)
-        partials = (
-            postings.groupby("segment_id")
-            .cogroup(aux.groupby("segment_id"))
-            .applyInPandas(lambda _k, p, a: scorer(p, a), SCORE_SCHEMA)
-        )
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
+    spec = _compile({"terms": query_terms, "k": k, "comb": "dismax", "tie": tie})
+    return _topk(spark, cat, spec, cfg, filter_ext_ids, visited_limit)
+
+
+def synonym_topk(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    terms: list[str],
+    k: int = 10,
+    cfg: IndexConfig | None = None,
+    filter_ext_ids: DataFrame | None = None,
+) -> DataFrame:
+    """Lucene ``SynonymQuery`` top-k → DataFrame(ext_id, score): the
+    terms score as ONE pseudo-term — per-doc tf is the SUM across the
+    synonyms and docFreq is the MAX across them (``SynonymQuery.
+    createWeight`` merges the TermStatistics exactly so), hence BM25's
+    tf saturation applies once to the merged frequency instead of once
+    per term. Matching is the plain disjunction; same physical shape and
+    filter tiers as :func:`bm25_topk` (the impact cache is bypassed —
+    its cached contributions are per-term-saturated sums)."""
+    return bm25_topk(
+        spark, cat, terms, k=k, mode="or", cfg=cfg,
+        filter_ext_ids=filter_ext_ids, _synonym=True,
     )
 
 
@@ -1361,175 +1115,11 @@ def bm25_boolean_topk(
 
     Same physical shape as :func:`bm25_topk` — one pruned postings scan
     for all clause terms (exclude terms ride the scan as a veto mask),
-    per-segment block-max scoring, global top-k (score desc, ext_id asc).
+    per-segment scoring, global top-k (score desc, ext_id asc).
     Returns DataFrame(ext_id, score)."""
-    cfg = cfg or IndexConfig()
-    must = list(dict.fromkeys(must))
-    should = list(dict.fromkeys(should))
-    exclude = list(dict.fromkeys(exclude))
-    overlap = (set(must) | set(should)) & set(exclude) | (set(must) & set(should))
-    if overlap:
-        raise ValueError(
-            f"terms appear in more than one clause list: {sorted(overlap)}"
-        )
-    if not must and not should:
-        raise ValueError(
-            "at least one positive clause (must / should) is required"
-        )
-    empty = spark.createDataFrame([], "ext_id long, score double")
-    msm = int(min_should_match)
-    if not must:
-        msm = max(1, msm)  # pure-SHOULD still needs one match (Lucene)
-    if k <= 0 or msm > len(should):
-        return empty
-    scoring = must + should
-    postings = _query_postings(spark, cat, scoring + exclude, cfg)
-    # df for the exclude terms too: a df-0 MUST_NOT vetoes nothing, and
-    # the impact-cache fast path below needs to know which excludes must
-    # be cache-covered to run scan-free
-    n, avgdl, df_all = _live_stats_and_df(
-        spark, cat, scoring + exclude, cfg, postings, filter_ext_ids
-    )
-    scoring_set = set(scoring)
-    df_by_term = {t: d for t, d in df_all.items() if d > 0 and t in scoring_set}
-    ex_live = [t for t in exclude if df_all.get(t, 0) > 0]
-    if n == 0:
-        return empty
-    if any(t not in df_by_term for t in must):
-        return empty  # a required term matches no live doc
-    live_should = [t for t in should if t in df_by_term]
-    if msm > len(live_should):
-        return empty  # not enough satisfiable SHOULD clauses
-    if not df_by_term:
-        return empty
-    idf_by_term = {t: idf(n, d) for t, d in df_by_term.items()}
-    scoring_live = [t for t in scoring if t in df_by_term]
-    bqspec = {
-        "must_set": set(must),
-        "should_set": set(live_should),
-        "msm": msm,
-        "exclude": exclude,
-    }
-    allowed_ext = None
-    aux_filter = filter_ext_ids
-    if filter_ext_ids is not None:
-        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1).collect()
-        if len(head) <= FILTER_BROADCAST_MAX:
-            allowed_ext = np.sort(np.array([r[0] for r in head], dtype=np.int64))
-            aux_filter = None
-    fast = (
-        aux_filter is None
-        and not _has_tombstones(spark, cat)
-        and n <= NORMS_BROADCAST_MAX_DOCS
-    )
-    if fast:
-        norms_bc = _norms_broadcast(spark, cat)
-        # opportunistic impact-cache hit (parity with bm25_topk): when a
-        # prior batch's cache covers every live scoring AND exclude term,
-        # the repeat boolean query runs scan-free through the batch core
-        hp = getattr(cat, "_hotpost_memo", None)
-        need = set(df_by_term) | set(ex_live)
-        if (
-            hp is not None
-            and hp["ver"] == _hot_cache_key(cat, cfg)
-            and hp["terms"]
-            and need <= hp["terms"]
-            and allowed_ext is None
-            and visited_limit is None
-        ):
-            idf_q = dict(idf_by_term)
-            for t in ex_live:  # veto-only: docs used, contribution ignored
-                idf_q[t] = idf(n, df_all[t])
-            qspec = {
-                "q": {
-                    "terms": scoring_live, "mode": "or", "k": k,
-                    "_bq": {
-                        "must_set": frozenset(must),
-                        "should_set": frozenset(live_should),
-                        "msm": msm,
-                        "exclude": ex_live,
-                    },
-                }
-            }
-            partials = _batch_partials_cached(
-                spark, cat, qspec, idf_q, tuple(hp["bcs"]), norms_bc,
-                "query_id string, segment_id long, ext_id long, score double",
-            ).select("segment_id", "ext_id", "score")
-        else:
-            scorer = make_scorer(
-                scoring_live, idf_by_term, avgdl, k, cfg, "or",
-                allowed_ext=allowed_ext, norms_bc=norms_bc,
-                visited_limit=visited_limit, bq=bqspec,
-            )
-            partials = postings.groupby("segment_id").applyInPandas(
-                lambda p: scorer(p, None), SCORE_SCHEMA
-            )
-    else:
-        scorer = make_scorer(
-            scoring_live, idf_by_term, avgdl, k, cfg, "or",
-            allowed_ext=allowed_ext, filter_active=aux_filter is not None,
-            visited_limit=visited_limit, bq=bqspec,
-        )
-        aux = _aux_df(spark, cat, aux_filter)
-        partials = (
-            postings.groupby("segment_id")
-            .cogroup(aux.groupby("segment_id"))
-            .applyInPandas(lambda _k, p, a: scorer(p, a), SCORE_SCHEMA)
-        )
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(k)
-        .select("ext_id", "score")
-    )
-
-
-def _normalize_batch_specs(qspecs: dict[str, dict]) -> dict[str, dict]:
-    """Validate and normalize batch query specs. Plain specs
-    (``{"terms", "mode", "k"}``) pass through; boolean specs (any of
-    ``must`` / ``should`` / ``exclude`` / ``min_should_match`` present)
-    become ``{"terms": must+should, "mode": "or", "k", "_bq": {...}}``
-    with Lucene's msm normalization (None default = 0 with MUST present,
-    else 1; explicit msm > #SHOULD matches nothing → the query is
-    dropped from the batch, contributing zero rows)."""
-    out: dict[str, dict] = {}
-    for qid, s in qspecs.items():
-        if not ({"must", "should", "exclude", "min_should_match"} & set(s)):
-            out[qid] = s
-            continue
-        if "terms" in s or "mode" in s:
-            raise ValueError(
-                f"{qid}: boolean spec must not also carry terms/mode"
-            )
-        must = list(dict.fromkeys(s.get("must", ())))
-        should = list(dict.fromkeys(s.get("should", ())))
-        exclude = list(dict.fromkeys(s.get("exclude", ())))
-        overlap = (
-            (set(must) | set(should)) & set(exclude) | (set(must) & set(should))
-        )
-        if overlap:
-            raise ValueError(
-                f"{qid}: terms in more than one clause list: {sorted(overlap)}"
-            )
-        if not must and not should:
-            raise ValueError(f"{qid}: a positive clause is required")
-        msm = s.get("min_should_match")
-        msm = (0 if must else 1) if msm is None else int(msm)
-        if not must:
-            msm = max(1, msm)
-        if msm > len(should):
-            continue  # Lucene: matches nothing
-        out[qid] = {
-            "terms": must + should,
-            "mode": "or",
-            "k": int(s.get("k", 10)),
-            "_bq": {
-                "must_set": frozenset(must),
-                "should_set": frozenset(should),
-                "msm": msm,
-                "exclude": exclude,
-            },
-        }
-    return out
+    spec = _compile({"must": must, "should": should, "exclude": exclude,
+                     "min_should_match": min_should_match, "k": k})
+    return _topk(spark, cat, spec, cfg, filter_ext_ids, visited_limit)
 
 
 def bm25_topk_batch(
@@ -1540,82 +1130,23 @@ def bm25_topk_batch(
 ) -> DataFrame:
     """Answer a BATCH of BM25 queries in one Spark job →
     DataFrame(query_id, ext_id, score, rank). This is the throughput path:
-    one postings scan for the union of all query terms, one cogrouped
-    scoring pass (posting blocks decoded once per segment), one windowed
-    global top-k per query. qspecs as in :func:`make_batch_scorer`;
-    a spec may also be a scored BooleanQuery —
-    ``{"must": [...], "should": [...], "exclude": [...],
-    "min_should_match": m, "k": k}`` with :func:`bm25_boolean_topk`
-    semantics (MUST_NOT terms ride the shared scan/cache as veto masks
-    and never score)."""
+    one postings scan for the union of all query terms (or none, once the
+    impact cache covers them), one scoring pass (posting blocks decoded
+    once per segment), one windowed global top-k per query. qspecs:
+    {query_id: {"terms": [...], "mode": "or"|"and", "k": int}}; a spec
+    may also be a scored BooleanQuery — ``{"must": [...], "should":
+    [...], "exclude": [...], "min_should_match": m, "k": k}`` with
+    :func:`bm25_boolean_topk` semantics (MUST_NOT terms ride the shared
+    scan/cache as veto masks and never score)."""
     from pyspark.sql import Window
 
     cfg = cfg or IndexConfig()
-    qspecs = _normalize_batch_specs(qspecs)
-    all_terms = sorted(
-        {t for s in qspecs.values() for t in s["terms"]}
-        | {t for s in qspecs.values() for t in s.get("_bq", {}).get("exclude", ())}
-    )
-    if not all_terms or not qspecs:
-        return spark.createDataFrame([], "query_id string, ext_id long, score double, rank int")
-    postings = _query_postings(spark, cat, all_terms, cfg)
-    n, avgdl, df_by_term = _live_stats_and_df(spark, cat, all_terms, cfg, postings, None)
-    df_by_term = {t: d for t, d in df_by_term.items() if d > 0}
-    if n == 0 or not df_by_term:
-        return spark.createDataFrame([], "query_id string, ext_id long, score double, rank int")
-    idf_by_term = {t: idf(n, d) for t, d in df_by_term.items()}
-    batch_schema = "query_id string, segment_id long, ext_id long, score double"
-    if not _has_tombstones(spark, cat) and n <= NORMS_BROADCAST_MAX_DOCS:
-        norms_bc = _norms_broadcast(spark, cat)
-        # impact-cache path: when EVERY live query term is in the hot
-        # postings cache, the batch needs no postings scan, no Arrow
-        # transfer and no varint decode — per run, only the cached
-        # (docs, contribution) arrays and the accumulators touch memory
-        hot_bc, hot_terms = _hot_postings_broadcast(
-            spark, cat, cfg, want_idf=idf_by_term, want_df=df_by_term
-        )
-        live = set(df_by_term)
-        cached = (live & hot_terms) if hot_bc else set()
-        if hot_bc and live <= hot_terms:
-            partials = _batch_partials_cached(
-                spark, cat, qspecs, idf_by_term, hot_bc, norms_bc, batch_schema
-            )
-        elif cached:
-            # HYBRID: scan only the uncached TAIL terms; the Zipf-head
-            # terms (the byte-heavy posting lists) come from the impact
-            # cache. A null-term marker row per segment keeps segments
-            # whose every live term is cached in the groupby.
-            tail = sorted(live - cached)
-            scan_df = _query_postings(spark, cat, tail, cfg)
-            marker = spark.createDataFrame(
-                [(int(s),) for s in sorted(norms_bc.value)], "segment_id long"
-            )
-            scan_df = scan_df.unionByName(marker, allowMissingColumns=True)
-            scorer = make_batch_scorer(
-                qspecs, idf_by_term, avgdl, cfg, norms_bc=norms_bc,
-                hot_bc=hot_bc, cached_terms=frozenset(cached),
-            )
-            partials = scan_df.groupby("segment_id").applyInPandas(
-                lambda p: scorer(p, None), batch_schema
-            )
-        else:
-            scorer = make_batch_scorer(
-                qspecs, idf_by_term, avgdl, cfg, norms_bc=norms_bc
-            )
-            partials = postings.groupby("segment_id").applyInPandas(
-                lambda p: scorer(p, None), batch_schema
-            )
-    else:
-        scorer = make_batch_scorer(qspecs, idf_by_term, avgdl, cfg)
-        aux = _aux_df(spark, cat, None)
-        partials = (
-            postings.groupby("segment_id")
-            .cogroup(aux.groupby("segment_id"))
-            .applyInPandas(lambda _k, p, a: scorer(p, a), batch_schema)
-        )
+    specs = {qid: c for qid, s in qspecs.items() if (c := _compile(s, qid)) is not None}
+    partials = _scored(spark, cat, specs, cfg, batch=True) if specs else None
+    if partials is None:
+        return local_frame(spark, "query_id string, ext_id long, score double, rank int")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("ext_id"))
-    k_of = {qid: int(s.get("k", 10)) for qid, s in qspecs.items()}
-    ks = set(k_of.values())
+    ks = {s["k"] for s in specs.values()}
     if len(ks) == 1:
         # homogeneous k (the common batch shape): a constant comparison —
         # a per-query create_map of 2·|batch| literals costs seconds of
@@ -1624,7 +1155,7 @@ def bm25_topk_batch(
         k_cond = F.col("rank") <= next(iter(ks))
     else:
         k_map = F.create_map(
-            *[x for qid, kk in k_of.items() for x in (F.lit(qid), F.lit(kk))]
+            *[x for qid, s in specs.items() for x in (F.lit(qid), F.lit(s["k"]))]
         )
         k_cond = F.col("rank") <= k_map[F.col("query_id")]
     # explicit repartition before the window: the partials are small in
@@ -1639,62 +1170,6 @@ def bm25_topk_batch(
         .filter(k_cond)
         .select("query_id", "ext_id", "score", "rank")
     )
-
-
-def _batch_partials_cached(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    qspecs: dict[str, dict],
-    idf_by_term: dict[str, float],
-    hot_bc,
-    norms_bc,
-    batch_schema: str,
-) -> DataFrame:
-    """Batch partials from the impact cache: the job parallelizes over a
-    tiny segment-id DataFrame (∝ segment count — the same metadata budget
-    as segment_stats) and reads postings AND norms exclusively from
-    executor-local broadcasts. Zero table scans per run."""
-    segs = sorted(norms_bc.value)
-    if not segs:
-        return spark.createDataFrame([], batch_schema)
-    npart = max(1, min(len(segs), shuffle_partitions(spark)))
-    seg_df = spark.createDataFrame(
-        [(int(s),) for s in segs], "segment_id long"
-    ).repartition(npart, "segment_id")
-
-    def score(it):
-        for pdf in it:
-            for seg in pdf["segment_id"].to_numpy():
-                seg = int(seg)
-                blob = norms_bc.value.get(seg)
-                if blob is None:
-                    continue
-                dls = np.frombuffer(blob[0], dtype=np.uint32)
-                ext_ids = np.frombuffer(blob[1], dtype=np.int64)
-                n_docs = dls.size
-                term_post = {}
-                for t in idf_by_term:
-                    ent = (_cache_get(hot_bc, t) or {}).get(seg)
-                    if ent is not None:
-                        term_post[t] = (
-                            np.frombuffer(ent[0], np.int32),
-                            np.frombuffer(ent[1], np.float64),
-                        )
-                if not term_post:
-                    continue
-                alive = np.ones(n_docs, dtype=bool)
-                q_out, e_out, s_out = _score_batch_queries(
-                    qspecs, idf_by_term, term_post, alive, ext_ids, n_docs
-                )
-                if q_out:
-                    yield pd.DataFrame(
-                        {"query_id": np.concatenate(q_out),
-                         "segment_id": np.int64(seg),
-                         "ext_id": np.concatenate(e_out),
-                         "score": np.concatenate(s_out)}
-                    )
-
-    return seg_df.mapInPandas(score, batch_schema)
 
 
 def term_docs(
@@ -1808,7 +1283,7 @@ def boolean_query(
     if not must:
         m_should = max(1, m_should)  # pure-SHOULD still needs one match
     if m_should > len(any_of):
-        return spark.createDataFrame([], "ext_id long")  # Lucene: no hits
+        return local_frame(spark, "ext_id long")  # Lucene: no hits
     all_terms = list(dict.fromkeys([*must, *any_of, *exclude]))
     postings = _query_postings(spark, cat, all_terms, cfg)
     aux = _aux_df(spark, cat, None)
@@ -1911,28 +1386,6 @@ def fetch_stored(
     return source_docs.join(F.broadcast(topk), on=id_col, how="inner")
 
 
-def synonym_topk(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    terms: list[str],
-    k: int = 10,
-    cfg: IndexConfig | None = None,
-    filter_ext_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Lucene ``SynonymQuery`` top-k → DataFrame(ext_id, score): the
-    terms score as ONE pseudo-term — per-doc tf is the SUM across the
-    synonyms and docFreq is the MAX across them (``SynonymQuery.
-    createWeight`` merges the TermStatistics exactly so), hence BM25's
-    tf saturation applies once to the merged frequency instead of once
-    per term. Matching is the plain disjunction; same physical shape and
-    filter tiers as :func:`bm25_topk` (the impact cache is bypassed —
-    its cached contributions are per-term-saturated sums)."""
-    return bm25_topk(
-        spark, cat, terms, k=k, mode="or", cfg=cfg,
-        filter_ext_ids=filter_ext_ids, _synonym=True,
-    )
-
-
 def hit_count(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -1978,7 +1431,7 @@ def sorted_topk(
     shape index-sorted Lucene segments give (B6/H8's sort is the index-
     side half; this is the query-side collector)."""
     if k <= 0:
-        return spark.createDataFrame([], "ext_id long, sort_value double")
+        return local_frame(spark, "ext_id long, sort_value double")
     m = boolean_query(spark, cat, any_of=list(query_terms), cfg=cfg)
     vals = source_docs.filter(F.col(sort_col).isNotNull()).select(
         F.col(id_col).cast("long").alias("ext_id"),

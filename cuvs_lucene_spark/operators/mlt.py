@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
+from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.functions.tokenize import tokenize_expr
 from cuvs_lucene_spark.operators.bm25 import (
     _live_stats_and_df,
@@ -132,7 +133,7 @@ def more_like_this_topk(
         id_col, text_col,
     )
     if not terms:
-        return spark.createDataFrame([], "ext_id long, score double")
+        return local_frame(spark, "ext_id long, score double")
     return bm25_topk(
         spark, cat, terms, k=k, mode="or", cfg=cfg,
         filter_ext_ids=filter_ext_ids,

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
+from ..frames import local_frame
 from .bm25 import bm25_topk, boolean_query
 
 MAX_EXPANSIONS = 1024  # Lucene IndexSearcher.maxClauseCount default
@@ -132,7 +133,7 @@ def wildcard_docs(
 
 def _match_any(spark, cat, terms: list[str], cfg) -> DataFrame:
     if not terms:
-        return spark.createDataFrame([], "ext_id long")
+        return local_frame(spark, "ext_id long")
     return boolean_query(spark, cat, any_of=terms, cfg=cfg or IndexConfig())
 
 
@@ -262,7 +263,7 @@ def fuzzy_topk(
         max_expansions,
     )
     if not terms:
-        return spark.createDataFrame([], "ext_id long, score double")
+        return local_frame(spark, "ext_id long, score double")
     return bm25_topk(
         spark, cat, terms, k=k, mode="or", cfg=cfg or IndexConfig(),
         filter_ext_ids=filter_ext_ids,
@@ -306,9 +307,7 @@ def spell_suggest(
             "LevenshteinAutomata supported distance)"
         )
     if num_suggestions <= 0:
-        return spark.createDataFrame(
-            [], "suggestion string, distance int, df long"
-        )
+        return local_frame(spark, "suggestion string, distance int, df long")
     q = str(term)
     cand = (
         cat.read(spark, "terms")
@@ -395,7 +394,7 @@ def complete(
     if not prefix:
         raise ValueError("complete needs a non-empty prefix")
     if num_suggestions <= 0:
-        return spark.createDataFrame([], "suggestion string, df long")
+        return local_frame(spark, "suggestion string, df long")
     cand = (
         cat.read(spark, "terms")
         .select("term")
@@ -524,7 +523,7 @@ def prefix_topk(
     expanded terms → DataFrame(ext_id, score), top-k."""
     terms = expand_terms(spark, cat, prefix=prefix, max_expansions=max_expansions)
     if not terms:
-        return spark.createDataFrame([], "ext_id long, score double")
+        return local_frame(spark, "ext_id long, score double")
     return bm25_topk(
         spark, cat, terms, k=k, mode="or", cfg=cfg or IndexConfig(),
         filter_ext_ids=filter_ext_ids,

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
+from ..frames import local_frame
 from ..functions.tokenize import tokenize_py
 from ..functions.varint import varint_byte_lengths, varint_decode, varint_encode
 from .bm25 import _live_stats_and_df, _query_postings, idf
@@ -310,7 +311,7 @@ def phrase_match(
     vs post-filtering a match set)."""
     slots = _norm_slots(phrase)
     if not slots:
-        return spark.createDataFrame([], "ext_id long, phrase_tf long")
+        return local_frame(spark, "ext_id long, phrase_tf long")
     uniq = list(dict.fromkeys(t for s in slots for t in s))
     rows = _phrase_rows(spark, cat, uniq)
 
@@ -379,14 +380,14 @@ def phrase_topk(
     cfg = cfg or IndexConfig()
     slots = _norm_slots(phrase)
     if k <= 0 or not slots:
-        return spark.createDataFrame([], "ext_id long, score double")
+        return local_frame(spark, "ext_id long, score double")
     uniq = list(dict.fromkeys(t for s in slots for t in s))
     postings = _query_postings(spark, cat, uniq, cfg)
     n, avgdl, df_by_term = _live_stats_and_df(spark, cat, uniq, cfg, postings, None)
     if n == 0 or any(
         all(df_by_term.get(t, 0) == 0 for t in s) for s in slots
     ):
-        return spark.createDataFrame([], "ext_id long, score double")
+        return local_frame(spark, "ext_id long, score double")
     idf_sum = float(sum(
         idf(n, df_by_term[t])
         for s in slots for t in s if df_by_term.get(t, 0) > 0
@@ -423,7 +424,7 @@ def span_first(
     if not term:
         raise ValueError("span_first needs a term")
     if end <= 0:
-        return spark.createDataFrame([], "ext_id long")
+        return local_frame(spark, "ext_id long")
     rows = _phrase_rows(spark, cat, [term])
     end_i = int(end)
 

@@ -324,26 +324,60 @@ def test_bm25_boolean_rank_identical(spark, cat, must, should, exclude, msm):
     assert got == exp
 
 
-def test_bm25_boolean_cogroup_tier(spark, cat, monkeypatch):
-    """The packed-aux cogroup wiring (the >NORMS_BROADCAST_MAX_DOCS /
-    tombstone tier) scores the boolean query identically to the
-    broadcast-norms fast path."""
-    from cuvs_lucene_spark.operators import bm25 as bm25_mod
-    from cuvs_lucene_spark.operators.bm25 import bm25_boolean_topk
+TIER_CASES = {
+    "topk_or": lambda B, spark, cat: B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
+    "topk_and": lambda B, spark, cat: B.bm25_topk(
+        spark, cat, ["dup", "slow"], k=10, mode="and", cfg=CFG
+    ),
+    "boosts": lambda B, spark, cat: B.bm25_topk(
+        spark, cat, ["join", "vector"], k=10, cfg=CFG, boosts={"vector": 2.0}
+    ),
+    "boolean": lambda B, spark, cat: B.bm25_boolean_topk(
+        spark, cat, must=["join"], should=["vector", "spark", "dup"],
+        exclude=["slow"], min_should_match=1, k=10, cfg=CFG,
+    ),
+    "dismax": lambda B, spark, cat: B.dismax_topk(
+        spark, cat, ["spark", "customer", "dup"], 0.3, k=10, cfg=CFG
+    ),
+    "synonym": lambda B, spark, cat: B.synonym_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
+    "batch": lambda B, spark, cat: B.bm25_topk_batch(spark, cat, {
+        "p": {"terms": ["join", "vector"], "k": 10},
+        "b": {"must": ["join"], "should": ["vector", "spark"], "exclude": ["slow"], "k": 10},
+    }, CFG),
+}
+
+
+@pytest.mark.parametrize("kind", list(TIER_CASES))
+def test_bm25_tier_equality(spark, cat, monkeypatch, kind):
+    """Every scored spec kind gives the same rows on the broadcast-norms
+    tier and on the packed-aux cogroup tier (the >NORMS_BROADCAST_MAX_DOCS
+    / tombstone tier); the boolean case also equals the oracle."""
+    from cuvs_lucene_spark.operators import bm25 as B
     from cuvs_lucene_spark.oracle import bm25_boolean_sql
 
-    monkeypatch.setattr(bm25_mod, "NORMS_BROADCAST_MAX_DOCS", 0)
-    got = [
-        (r["ext_id"], round(r["score"], 6))
-        for r in bm25_boolean_topk(
-            spark, cat, must=["join"], should=["vector", "spark", "dup"],
-            exclude=["slow"], min_should_match=1, k=10, cfg=CFG,
-        ).collect()
-    ]
-    exp = [(i, round(s, 6)) for i, s in _duck(
-        bm25_boolean_sql(["join"], ["vector", "spark", "dup"], ["slow"], 1, k=10)
-    )]
-    assert got == exp
+    def rows():
+        return sorted(tuple(r) for r in TIER_CASES[kind](B, spark, cat).collect())
+
+    monkeypatch.setattr(B, "_hot_postings_broadcast", lambda *a, **k: ((), frozenset()))
+    fast = rows()
+    monkeypatch.setattr(B, "NORMS_BROADCAST_MAX_DOCS", 0)
+    assert rows() == fast and fast
+    if kind == "boolean":
+        got = sorted((e, round(s, 6)) for e, s in fast)
+        exp = sorted((i, round(s, 6)) for i, s in _duck(
+            bm25_boolean_sql(["join"], ["vector", "spark", "dup"], ["slow"], 1, k=10)
+        ))
+        assert got == exp
+
+
+def test_unknown_mode_raises(spark, cat):
+    """A mode other than or/and is rejected, never silently scored as OR."""
+    from cuvs_lucene_spark.operators.bm25 import bm25_topk_batch
+
+    with pytest.raises(ValueError, match="mode"):
+        bm25_topk(spark, cat, ["join", "vector"], k=10, mode="AND", cfg=CFG)
+    with pytest.raises(ValueError, match="mode"):
+        bm25_topk_batch(spark, cat, {"q": {"terms": ["join"], "mode": "xor"}}, CFG).collect()
 
 
 def test_bm25_boolean_input_validation(spark, cat):

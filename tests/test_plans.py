@@ -534,3 +534,51 @@ def test_ann_resident_query_job_counts(spark, ann_cat):
     want.update(ivf_df_filter=1, knn_join_ivf=counts["knn_join_ivf"])
     assert counts == want
     assert counts["knn_join_ivf"] <= ANN_JOB_PINS["knn_join_ivf"]
+
+
+BM25_JOB_PINS = {  # warm per-query Spark jobs of the BM25 family
+    "topk": 2, "topk_and": 2, "boolean": 2, "dismax": 2, "synonym": 2,
+    "batch": 3, "batch_cached": 3, "topk_cached": 2, "set_filter": 3,
+    "df_filter_over_cap": 6, "after_delete": 12,
+}
+
+
+def test_bm25_query_job_counts(spark, cat, monkeypatch):
+    """Every BM25 query kind runs a fixed, small number of Spark jobs per
+    warm query. Runs last in the module: the final case deletes a doc."""
+    import cuvs_lucene_spark.operators.bm25 as B
+    from cuvs_lucene_spark.operators.deletes import delete_docs
+
+    batch = {
+        "q0": {"terms": ["join", "vector"], "k": 5},
+        "q1": {"must": ["dup"], "should": ["slow", "spark"], "k": 5},
+    }
+    small = spark.range(0, 400, 3).select(F.col("id").alias("ext_id"))
+    calls = {
+        "topk": lambda: B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
+        "topk_and": lambda: B.bm25_topk(spark, cat, ["dup", "slow"], k=10, mode="and", cfg=CFG),
+        "boolean": lambda: B.bm25_boolean_topk(
+            spark, cat, must=["join"], should=["vector"], exclude=["slow"], k=10, cfg=CFG
+        ),
+        "dismax": lambda: B.dismax_topk(spark, cat, ["join", "vector"], 0.3, k=10, cfg=CFG),
+        "synonym": lambda: B.synonym_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
+        "set_filter": lambda: B.bm25_topk(
+            spark, cat, ["join", "vector"], k=10, cfg=CFG, filter_ext_ids=small
+        ),
+    }
+    cat._hotpost_memo = None
+    with monkeypatch.context() as mp:
+        mp.setattr(B, "_hot_postings_broadcast", lambda *a, **k: ((), frozenset()))
+        calls["batch"] = lambda: B.bm25_topk_batch(spark, cat, batch, CFG)
+        counts = _warm_job_counts(spark, calls, "bm25")
+    counts.update(_warm_job_counts(spark, {
+        "batch_cached": lambda: B.bm25_topk_batch(spark, cat, batch, CFG),
+        "topk_cached": calls["topk"],
+    }, "bm25"))
+    with monkeypatch.context() as mp:
+        mp.setattr(B, "FILTER_BROADCAST_MAX", 0)
+        counts.update(_warm_job_counts(spark, {"df_filter_over_cap": calls["set_filter"]}, "bm25"))
+    cat._hotpost_memo = None
+    delete_docs(spark, cat, spark.range(1).select(F.col("id").alias("ext_id")))
+    counts.update(_warm_job_counts(spark, {"after_delete": calls["topk"]}, "bm25"))
+    assert {m: n for m, n in counts.items() if n > BM25_JOB_PINS[m]} == {}, counts

@@ -366,8 +366,8 @@ def test_segment_namespaces_disjoint():
 
 
 def test_batch_scorer_equals_single_scorer(spark, cat):
-    """The sparse batch scorer and the block-max single-query scorer are
-    different algorithms over the same postings — they must agree exactly
+    """The batch path and the single-query path (a batch of one, with its
+    own global sort instead of the per-query window) must agree exactly
     (ids AND scores) on a randomized query set including AND/OR modes,
     absent terms, and duplicate terms."""
     import random

@@ -1,9 +1,12 @@
-"""Capture .explain('formatted') plans into plans/r06/<name>_<tag>.txt:
-the dataset-only operators (no index needed), and the ANN single-query
-modes (``ann_*``) over a small generated index built in a temp dir.
+"""Capture .explain('formatted') plans into plans/r07/<name>_<tag>.txt:
+the dataset-only operators (no index needed), the ANN single-query
+modes (``ann_*``) over a small generated index built in a temp dir, and
+the BM25 query family (``bm25_*``) over an index of the sf0.001 corpus
+(the ``sf0.001`` sibling of ``SPARK_GRAFT_SF_DIR``) built in a temp dir.
 
 Usage: python tools/capture_plans.py <before|after> [op ...]
-An op argument ``ann`` selects every ``ann_*`` plan.
+An op argument ``ann`` selects every ``ann_*`` plan, ``bm25`` every
+``bm25_*`` plan.
 """
 
 from __future__ import annotations
@@ -16,7 +19,7 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r06")
+OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r07")
 
 
 def ann_plans(spark, root: str) -> dict:
@@ -54,6 +57,68 @@ def ann_plans(spark, root: str) -> dict:
         "ann_ivfpq": lambda: A.ann_topk_ivfpq(spark, cat, q, k=5, cfg=cfg),
         "ann_graph": lambda: AG.ann_topk_graph(spark, cat, q, k=5, cfg=cfg),
         "ann_knn_join_ivf": lambda: A.knn_join_ivf(spark, cat, qdf, k=3),
+    }
+
+
+def bm25_plans(spark, root: str) -> dict:
+    """Every BM25 query kind, warm: plain/and/boolean/dismax/synonym,
+    the batch on its scan and impact-cache tiers, a small DataFrame
+    filter, one over the broadcast cap (the cogroup tier), and a query
+    after a delete (last: it tombstones a doc)."""
+    from pyspark.sql import functions as F
+
+    from cuvs_lucene_spark.config import IndexConfig
+    from cuvs_lucene_spark.operators import bm25 as B
+    from cuvs_lucene_spark.operators.deletes import delete_docs
+    from cuvs_lucene_spark.operators.segments import build_index
+
+    cfg = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
+    docs = spark.read.parquet(f"{os.path.dirname(SF_DIR)}/sf0.001/documents.parquet")
+    cat = build_index(spark, docs, root, cfg, content_col="text", id_col="doc_id")
+    small = spark.range(0, 400, 3).select(F.col("id").alias("ext_id"))
+    batch = {"q0": {"terms": ["join", "vector"], "k": 5},
+             "q1": {"must": ["dup"], "should": ["slow", "spark"], "k": 5}}
+
+    def scan_batch():
+        cat._hotpost_memo = None
+        cap, B.HOT_POSTINGS_MAX_BYTES = B.HOT_POSTINGS_MAX_BYTES, 0
+        try:
+            return B.bm25_topk_batch(spark, cat, batch, cfg)
+        finally:
+            B.HOT_POSTINGS_MAX_BYTES = cap
+
+    def cached_batch():
+        cat._hotpost_memo = None
+        B.bm25_topk_batch(spark, cat, batch, cfg).collect()
+        return B.bm25_topk_batch(spark, cat, batch, cfg)
+
+    def over_cap():
+        cat._hotpost_memo = None
+        cap, B.FILTER_BROADCAST_MAX = B.FILTER_BROADCAST_MAX, 0
+        try:
+            return B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=cfg, filter_ext_ids=small)
+        finally:
+            B.FILTER_BROADCAST_MAX = cap
+
+    def after_delete():
+        delete_docs(spark, cat, spark.range(1).select(F.col("id").alias("ext_id")))
+        return B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=cfg)
+
+    return {
+        "bm25_topk": lambda: B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=cfg),
+        "bm25_topk_and": lambda: B.bm25_topk(spark, cat, ["dup", "slow"], k=10, mode="and", cfg=cfg),
+        "bm25_boolean": lambda: B.bm25_boolean_topk(
+            spark, cat, must=["join"], should=["vector"], exclude=["slow"], k=10, cfg=cfg
+        ),
+        "bm25_dismax": lambda: B.dismax_topk(spark, cat, ["join", "vector"], 0.3, k=10, cfg=cfg),
+        "bm25_synonym": lambda: B.synonym_topk(spark, cat, ["join", "vector"], k=10, cfg=cfg),
+        "bm25_batch": scan_batch,
+        "bm25_set_filter": lambda: B.bm25_topk(
+            spark, cat, ["join", "vector"], k=10, cfg=cfg, filter_ext_ids=small
+        ),
+        "bm25_df_filter_over_cap": over_cap,
+        "bm25_batch_cached": cached_batch,
+        "bm25_after_delete": after_delete,
     }
 
 
@@ -105,8 +170,11 @@ def main():
     tmp = tempfile.mkdtemp(prefix="plan_capture_ann_")
     if want_ann:
         plans.update(ann_plans(spark, os.path.join(tmp, "index")))
+    if not only or "bm25" in only or any(o.startswith("bm25_") for o in only):
+        plans.update(bm25_plans(spark, os.path.join(tmp, "bm25_index")))
     for name, fn in plans.items():
-        if only and name not in only and not (name.startswith("ann_") and "ann" in only):
+        family = name.split("_")[0]
+        if only and name not in only and not (family in ("ann", "bm25") and family in only):
             continue
         df = fn()
         txt = df._sc._jvm.PythonSQLUtils.explainString(
