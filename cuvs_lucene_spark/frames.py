@@ -14,7 +14,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 _TYPES = {"long": (pa.int64(), np.int64), "int": (pa.int32(), np.int32),
-          "double": (pa.float64(), np.float64), "string": (pa.string(), object)}
+          "double": (pa.float64(), np.float64), "string": (pa.string(), object),
+          "binary": (pa.binary(), object)}
 
 
 def _fields(schema: str) -> list[tuple[str, str]]:

@@ -58,8 +58,10 @@ same (ext_id, score) lists bit for bit:
 - resident (``_Resident``): the per-leaf search runs in the serving
   process, as Lucene's stock HNSW reader does for the reference
   (``Lucene99AcceleratedHNSWVectorsFormat.java:103-110``). Each catalog
-  keeps one pack (``_Pack``): every table read by one ``toArrow()`` at its
-  first use and kept until its own manifest entry changes. The kernels
+  keeps one pack (``resident.Pack``, shared with BM25): every table read
+  by one ``toArrow()`` at its first use and kept until its own manifest
+  entry changes (extended in place when a commit only appended to it or
+  dropped segments). The kernels
   run over the pack's pandas frames in the driver and the top-k comes
   back as a ``LocalRelation``: a warm query runs no Spark job. It serves
   single queries while the ANN tables' committed bytes fit
@@ -80,13 +82,11 @@ Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 from __future__ import annotations
 
 import os
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,6 +103,7 @@ from cuvs_lucene_spark.functions.quantize import (
     widen_unsigned,
 )
 from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame
+from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
@@ -971,82 +972,10 @@ def delete_ann(
 
 
 # ---------------------------------------------------------------------------
-# Resident pack: the driver-side copy of a catalog's ANN tables
+# Resident pack entries: the driver-side copy of a catalog's ANN tables
 # ---------------------------------------------------------------------------
 
-RESIDENT_MAX_BYTES = 768 << 20  # single queries run in the driver while the
-                                # ANN tables' committed bytes fit (see _search).
-# Measured on fixtures.generate_embeddings corpora (64-d, local[4]): the
-# resident tier was faster in exact, ivf and graph mode at 105k, 420k and
-# 1.01M vectors (75.6, 304 and 734 MB committed) — no crossover, since the
-# Spark tier re-reads the tables per query — so the budget is the largest
-# measured size, rounded up; the pack holds ~0.9x the committed bytes.
 PACK_TABLES = ("ann_flat", *(f.table for f in FORMATS.values()))
-
-
-class _Pack:
-    """One catalog's driver-resident ANN state. Each entry is read once, at
-    its first use, and keyed by its table's own manifest entry, so a commit
-    to another table (a delete's tombstones, a new sidecar) leaves it
-    valid. One lock serializes fills, so concurrent first queries read each
-    table once; a refill drops the superseded entry before reading."""
-
-    def __init__(self):
-        self.lock = threading.Lock()
-        self.entries: dict = {}  # name -> (key, value, nbytes)
-
-    def get(self, name, key, fill, usable=lambda value: True):
-        """The entry ``name`` at ``key``; ``fill() -> (value, nbytes)``
-        replaces it when it is missing, superseded or not ``usable``."""
-        with self.lock:
-            hit = self.entries.get(name)
-            if hit is not None and hit[0] == key and usable(hit[1]):
-                return hit[1]
-            self.entries.pop(name, None)
-            value, nbytes = fill()
-            self.entries[name] = (key, value, nbytes)
-            return value
-
-    def drop(self, pred) -> None:
-        with self.lock:
-            for name in [n for n, e in self.entries.items() if pred(n, e[1])]:
-                del self.entries[name]
-
-    def nbytes(self) -> int:
-        """Arrow bytes read into the pack's current entries."""
-        with self.lock:
-            return sum(e[2] for e in self.entries.values())
-
-
-def _pack(cat: IndexCatalog) -> _Pack:
-    return cat.__dict__.get("_ann_pack") or cat.__dict__.setdefault("_ann_pack", _Pack())
-
-
-def _entry_key(cat: IndexCatalog, table: str, tables: dict | None = None) -> tuple:
-    """What a read of ``table`` returns is fixed by its snapshot, its
-    appends and its logically dropped segments (all immutable by name)."""
-    e = (tables or cat.read_manifest()["tables"]).get(table) or {}
-    return (e.get("snapshot"), tuple(e.get("appends", ())),
-            tuple(e.get("dropped_segments", ())))
-
-
-def _read_arrow(spark: SparkSession, cat: IndexCatalog, table: str, where=None) -> pa.Table:
-    """One committed table (optionally filtered) into the driver: one job."""
-    df = cat.read(spark, table, merge_schema=(table == "ann_graph"))
-    return (df if where is None else df.filter(where)).toArrow()
-
-
-def _disk_bytes(cat: IndexCatalog, table: str, tables: dict) -> int:
-    """Committed bytes of ``table``, memoized per entry (no Spark job)."""
-
-    def walk():
-        n = sum(
-            os.path.getsize(os.path.join(d, f))
-            for top in cat.table_dirs(table) for d, _, fs in os.walk(top) for f in fs
-        )
-        return n, 0
-
-    return _pack(cat).get(("bytes", table), _entry_key(cat, table, tables), walk)
 
 
 def _resident_fits(cat: IndexCatalog) -> bool:
@@ -1054,17 +983,34 @@ def _resident_fits(cat: IndexCatalog) -> bool:
     it, the resident tables are released (the centroid pack stays)."""
     tables = cat.read_manifest()["tables"]
     committed = [t for t in PACK_TABLES if (tables.get(t) or {}).get("snapshot")]
-    if sum(_disk_bytes(cat, t, tables) for t in committed) <= RESIDENT_MAX_BYTES:
+    if sum(R.disk_bytes(cat, t, tables) for t in committed) <= R.RESIDENT_MAX_BYTES:
         return True
-    _pack(cat).drop(lambda n, v: n in PACK_TABLES and not (
+    R.pack(cat).drop(lambda n, v: n in PACK_TABLES and not (
         n == "ann_ivf" and v.lists is None))
     return False
 
 
-class _Ivf(NamedTuple):
-    """The pack's ``ann_ivf`` entry: the centroid pack (the centroid rows'
-    only driver copy) and, when resident, the list rows."""
+def _frame_extender(spark: SparkSession, cat: IndexCatalog, table: str, prep=None):
+    """A pack ``extend`` for an entry holding ``table``'s rows as one
+    pandas frame: drop the dropped segments' rows, append the new
+    directories' rows."""
 
+    def extend(rows: pd.DataFrame, snaps: tuple, dropped: tuple):
+        rows = rows[~rows["segment_id"].isin(dropped)]
+        if not snaps:
+            return rows.reset_index(drop=True), 0
+        at = R.read_arrow(spark, cat, table, prep, snaps, dropped)
+        return pd.concat([rows, at.to_pandas()], ignore_index=True), at.nbytes
+
+    return extend
+
+
+class _Ivf(NamedTuple):
+    """The pack's ``ann_ivf`` entry: the centroid rows and the centroid
+    pack derived from them (the centroid rows' only driver copy) and,
+    when resident, the list rows."""
+
+    rows: pd.DataFrame
     cents: dict | None
     lists: pd.DataFrame | None
 
@@ -1074,16 +1020,25 @@ def _ivf_entry(spark: SparkSession, cat: IndexCatalog, lists: bool) -> _Ivf:
     for or the catalog is resident (so a resident catalog reads it once);
     else only the centroid rows (pushed ``list_id = -1`` scan)."""
     full = lists or _resident_fits(cat)
+    prep = None if full else (lambda df: df.filter(F.col("list_id") == -1))
+    rows_of = _frame_extender(spark, cat, "ann_ivf", prep)
+
+    def entry(pdf: pd.DataFrame) -> _Ivf:
+        c = pdf["list_id"].to_numpy() == -1
+        crows = pdf[c].reset_index(drop=True)
+        return _Ivf(crows, _centroids(crows), pdf[~c].reset_index(drop=True) if full else None)
 
     def fill():
-        at = _read_arrow(spark, cat, "ann_ivf", None if full else F.col("list_id") == -1)
-        pdf = at.to_pandas()
-        c = pdf["list_id"].to_numpy() == -1
-        rows = pdf[~c].reset_index(drop=True) if full else None
-        return _Ivf(_centroids(pdf[c]), rows), at.nbytes
+        at = R.read_arrow(spark, cat, "ann_ivf", prep)
+        return entry(at.to_pandas()), at.nbytes
 
-    return _pack(cat).get("ann_ivf", _entry_key(cat, "ann_ivf"), fill,
-                          lambda v: v.lists is not None or not full)
+    def extend(v: _Ivf, snaps: tuple, dropped: tuple):
+        old = v.rows if v.lists is None else pd.concat([v.rows, v.lists], ignore_index=True)
+        pdf, nbytes = rows_of(old, snaps, dropped)
+        return entry(pdf), nbytes
+
+    return R.pack(cat).get("ann_ivf", R.entry_key(cat, "ann_ivf"), fill,
+                           lambda v: v.lists is not None or not full, extend)
 
 
 def _resident_rows(spark: SparkSession, cat: IndexCatalog, table: str) -> pd.DataFrame:
@@ -1092,10 +1047,11 @@ def _resident_rows(spark: SparkSession, cat: IndexCatalog, table: str) -> pd.Dat
         return _ivf_entry(spark, cat, lists=True).lists
 
     def fill():
-        at = _read_arrow(spark, cat, table)
+        at = R.read_arrow(spark, cat, table)
         return at.to_pandas(), at.nbytes
 
-    return _pack(cat).get(table, _entry_key(cat, table), fill)
+    return R.pack(cat).get(table, R.entry_key(cat, table), fill,
+                           extend=_frame_extender(spark, cat, table))
 
 
 def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | None:
@@ -1109,11 +1065,11 @@ def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | Non
         return None
 
     def fill():
-        arr = np.sort(_read_arrow(spark, cat, "ann_tombstones")
+        arr = np.sort(R.read_arrow(spark, cat, "ann_tombstones")
                       .column("ext_id").to_numpy().astype(np.int64))
         return (arr if arr.size else None), arr.nbytes
 
-    return _pack(cat).get("ann_tombstones", _entry_key(cat, "ann_tombstones"), fill)
+    return R.pack(cat).get("ann_tombstones", R.entry_key(cat, "ann_tombstones"), fill)
 
 
 def _resolve_tombstones(

@@ -13,13 +13,31 @@ boosted query, ``DisjunctionMaxQuery``, ``SynonymQuery``, a scored
 ``BooleanQuery``, and every query of a batch — compiles to one normalized
 spec (:func:`_compile`: terms, a combiner, clause constraints, k), bound
 to live statistics as per-term weights idf × boost (:func:`_weigh`). A
-single query is a batch of one. One driver path (:func:`_scored`)
-resolves stats, the filter, the tombstone / norms tier and the
-impact-cache tier once; one UDF body (:func:`_segment_scorer`) runs on
-every tier; one Spark-free numpy kernel (:func:`_score_batch_queries`)
-scores a segment as a dense per-doc accumulation followed by an exact
-tie-broken top-k. There is no block-max pruning: the dense kernel measured
-faster on every query shape tried, on segments of 20k and 100k docs.
+single query is a batch of one. One driver path (:func:`_scored`) reads
+the filter head and picks one of two tiers; one Spark-free numpy kernel
+(:func:`_score_batch_queries`) scores a segment on both as a dense
+per-doc accumulation followed by an exact tie-broken top-k. There is no
+block-max pruning: the dense kernel measured faster on every query shape
+tried, on segments of 20k and 100k docs.
+
+- resident (:func:`_resident_scored`): as Lucene's ``IndexSearcher``
+  scores each leaf inside the serving process (PAPER.md §0, Layer B), the
+  catalog's pack (``resident.Pack``, shared with ANN) holds segdata's
+  postings and norms rows per segment and the tombstoned ext_ids; live
+  N / avgdl / df, every leaf's kernel and the global top-k run in the
+  driver and the result is one ``LocalRelation``, so a warm query or
+  batch runs no Spark job. It serves while segdata's committed bytes fit
+  ``RESIDENT_MAX_BYTES`` and the filter and the tombstones each hold at
+  most ``FILTER_BROADCAST_MAX`` ids;
+- Spark (:func:`_spark_partials`): one postings scan, one UDF body
+  (:func:`_segment_scorer`) per segment over the norms broadcast, the
+  impact cache or the tombstone / filter cogroup, then a global
+  ``orderBy(score desc, ext_id asc).limit(k)`` (a window per query for a
+  batch).
+
+Both tiers compute the same statistics and weights and run the same
+kernel under the same tie rule, so they return the same (ext_id, score)
+lists bit for bit.
 
 Pre-filter semantics (S10, a correctness requirement): filters and
 tombstones restrict the candidate set BEFORE top-k, inside the scorer —
@@ -28,14 +46,19 @@ never as a post-filter of the top-k result.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, shuffle_partitions
 from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode
+from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.operators.segments import corpus_stats, term_bucket_py
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
 
@@ -622,49 +645,37 @@ def _impact_tier(spark, cat, cfg, specs, idf_of, df, admit: bool):
     return _hot_postings_broadcast(spark, cat, cfg)
 
 
-def _scored(
+def _spark_partials(
     spark: SparkSession,
     cat: IndexCatalog,
     specs: dict[str, dict],
+    terms: list[str],
     cfg: IndexConfig,
-    filter_ext_ids: DataFrame | None = None,
-    visited_limit: int | None = None,
-    batch: bool = False,
+    allowed_ext: np.ndarray | None,
+    aux_filter: DataFrame | None,
+    visited_limit: int | None,
+    batch: bool,
 ) -> DataFrame | None:
-    """The one driver path of every scored query → per-segment partial
-    top-k rows (``query_id`` first when ``batch``, then ``SCORE_SCHEMA``),
-    or None when no spec can match. ``specs`` are :func:`_compile`
-    outputs by query id.
+    """The Spark tier → per-segment partial top-k rows (``query_id``
+    first when ``batch``, then ``SCORE_SCHEMA``), or None when no spec
+    can match.
 
     Done once for the whole batch: one postings scan of every term; live
-    stats, df and idf; the filter head (one Arrow read of at most
-    ``FILTER_BROADCAST_MAX`` + 1 ids: a small filter rides the scorer
-    closure, a larger one the packed-blob cogroup); the norms tier (the
-    executor-local norms broadcast when there are no tombstones and no
-    blob filter, else the aux cogroup); and the impact-cache tier — a
-    full hit scores from executor-local broadcasts over a segment-id
-    frame with no table scan, a batch's partial hit scans only the
-    uncached tail terms (hybrid), otherwise the scan feeds the scorer."""
-    terms = list(dict.fromkeys(t for s in specs.values() for t in (*s["terms"], *s["exclude"])))
-    if batch:
-        terms = sorted(terms)
-    if not terms:
-        return None
+    stats, df and idf; the norms tier (the executor-local norms broadcast
+    when there are no tombstones and no blob filter, else the aux
+    cogroup, which also carries a filter above ``FILTER_BROADCAST_MAX``);
+    and the impact-cache tier — a full hit scores from executor-local
+    broadcasts over a segment-id frame with no table scan, a batch's
+    partial hit scans only the uncached tail terms (hybrid), otherwise
+    the scan feeds the scorer."""
     postings = _query_postings(spark, cat, terms, cfg)
-    n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, filter_ext_ids)
+    n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, aux_filter)
     if n == 0:
         return None
     idf_of = {t: idf(n, d) for t, d in df.items() if d > 0}
     specs = {q: w for q, s in specs.items() if (w := _weigh(s, idf_of, n, df)) is not None}
     if not specs:
         return None
-    allowed_ext = aux_filter = None
-    if filter_ext_ids is not None:
-        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1).toArrow().column(0)
-        if len(head) > FILTER_BROADCAST_MAX:
-            aux_filter = filter_ext_ids
-        else:
-            allowed_ext = np.sort(head.to_numpy(zero_copy_only=False).astype(np.int64))
     live = {t for s in specs.values() for t in (*s["terms"], *s["exclude"])}
     schema = f"query_id string, {SCORE_SCHEMA}" if batch else SCORE_SCHEMA
     args = (specs, live, avgdl, cfg, batch)
@@ -709,6 +720,349 @@ def _scored(
     )
 
 
+def _spark_top(partials: DataFrame, specs: dict[str, dict], batch: bool, sort: bool) -> DataFrame:
+    """The Spark tier's global top-k of the partials: (score desc, ext_id
+    asc) with the query's k, or per query with its ``rank`` in a batch."""
+    if not batch:
+        if not sort:
+            return partials.select("ext_id", "score")
+        k = next(iter(specs.values()))["k"]
+        return partials.orderBy(F.desc("score"), F.asc("ext_id")).limit(k).select("ext_id", "score")
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("ext_id"))
+    ks = {s["k"] for s in specs.values()}
+    if len(ks) == 1:
+        # homogeneous k (the common batch shape): a constant comparison —
+        # a per-query create_map of 2·|batch| literals costs seconds of
+        # DRIVER analysis per run at 1024 queries, a pure serial tax that
+        # caps N→4N batch scaling
+        k_cond = F.col("rank") <= next(iter(ks))
+    else:
+        k_map = F.create_map(
+            *[x for qid, s in specs.items() for x in (F.lit(qid), F.lit(s["k"]))]
+        )
+        k_cond = F.col("rank") <= k_map[F.col("query_id")]
+    # explicit repartition before the window: the partials are small in
+    # BYTES (segments × queries × k compact rows), so AQE's advisory-size
+    # coalescing would collapse the window exchange to ONE task — a
+    # constant serial sort that caps N→4N batch scaling (Amdahl). An
+    # explicit numPartitions pins the per-query window work parallel.
+    npart = shuffle_partitions(partials.sparkSession)
+    return (
+        partials.repartition(npart, "query_id")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(k_cond)
+        .select("query_id", "ext_id", "score", "rank")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Resident tier: segdata's postings and norms in the driver
+# ---------------------------------------------------------------------------
+
+
+class _Blobs(NamedTuple):
+    """A binary column as offsets into one byte buffer: row ``i`` holds
+    ``data[off[i]:off[i + 1]]``, so a run of rows is one slice."""
+
+    off: np.ndarray
+    data: np.ndarray
+
+
+def _blobs(col) -> _Blobs:
+    arr = col.cast(pa.large_binary()).combine_chunks()
+    _, off, data = arr.buffers()
+    off = np.frombuffer(off, np.int64)[arr.offset: arr.offset + len(arr) + 1]
+    return _Blobs(off, np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8))
+
+
+class _Leaf(NamedTuple):
+    """One segment in the resident pack: its norms, and its posting
+    blocks sorted by (term, block_id) with ``rows`` mapping each term to
+    its run of blocks."""
+
+    dl: np.ndarray       # doc lengths (uint32), by local doc id
+    dls: np.ndarray      # the same as float64
+    ext_ids: np.ndarray  # int64, by local doc id
+    dl_sum: int
+    rows: dict           # term -> (first block, end block)
+    first_doc: np.ndarray
+    n: np.ndarray        # postings per block
+    deltas: _Blobs
+    tfs: _Blobs
+
+
+def _leaf_postings(leaf: _Leaf, t: str) -> tuple[np.ndarray, np.ndarray]:
+    """All blocks of ``t`` → (doc ids ascending, tfs), one varint decode
+    per column: each block's first delta is absolute, so the running sum
+    restarts at every block."""
+    a, z = leaf.rows[t]
+    d = varint_decode(leaf.deltas.data[leaf.deltas.off[a]:leaf.deltas.off[z]])
+    n = leaf.n[a:z]
+    c = np.cumsum(d)
+    first = np.cumsum(n) - n
+    docs = c - np.repeat(c[first] - d[first], n)
+    return docs, varint_decode(leaf.tfs.data[leaf.tfs.off[a]:leaf.tfs.off[z]])
+
+
+def _leaves(at: pa.Table) -> dict[int, _Leaf]:
+    """segdata ``post`` + ``norms`` rows → {segment_id: leaf}; a segment
+    with no norms row has nothing to score (as on the Spark tier)."""
+    kind = at.column("kind")
+    norms = at.filter(pc.equal(kind, "norms")).to_pydict()
+    post = at.filter(pc.equal(kind, "post")).sort_by(
+        [("segment_id", "ascending"), ("term", "ascending"), ("block_id", "ascending")]
+    )
+    seg = post.column("segment_id").to_numpy()
+    term = post.column("term").to_numpy()
+    first_doc = post.column("first_doc").to_numpy()
+    n = post.column("n").to_numpy().astype(np.int64)
+    deltas, tfs = _blobs(post.column("doc_deltas")), _blobs(post.column("tfs"))
+    # one group per (segment, term): its blocks, in block order
+    starts = np.flatnonzero(np.concatenate(
+        ([True], (seg[1:] != seg[:-1]) | (term[1:] != term[:-1])))) if seg.size else seg
+    ends = np.append(starts[1:], seg.size)
+    gseg = seg[starts]
+    leaves = {}
+    for s, blob_dl, blob_ext in zip(norms["segment_id"], norms["doc_deltas"], norms["tfs"]):
+        lo, hi = np.searchsorted(gseg, s, "left"), np.searchsorted(gseg, s, "right")
+        a, z = (int(starts[lo]), int(ends[hi - 1])) if lo < hi else (0, 0)
+        rows = dict(zip(term[starts[lo:hi]].tolist(),
+                        zip((starts[lo:hi] - a).tolist(), (ends[lo:hi] - a).tolist())))
+        dl = np.frombuffer(blob_dl, np.uint32)
+        leaves[int(s)] = _Leaf(
+            dl, dl.astype(np.float64), np.frombuffer(blob_ext, np.int64),
+            int(dl.sum(dtype=np.int64)), rows, first_doc[a:z], n[a:z],
+            _Blobs(deltas.off[a:z + 1], deltas.data), _Blobs(tfs.off[a:z + 1], tfs.data),
+        )
+    return leaves
+
+
+class _Text:
+    """The pack's ``segdata`` entry: one leaf per live segment, and the
+    sorted dictionary of their terms — the ``terms`` view's distinct
+    terms — built on first use."""
+
+    def __init__(self, leaves: dict[int, _Leaf]):
+        self.leaves = leaves
+        self._vocab = None
+
+    def vocab(self) -> np.ndarray:
+        if self._vocab is None:
+            terms = set().union(*(leaf.rows for leaf in self.leaves.values()))
+            self._vocab = np.array(sorted(terms), dtype=object)
+        return self._vocab
+
+
+_TEXT_COLS = ("segment_id", "kind", "term", "block_id", "first_doc", "n", "doc_deltas", "tfs")
+
+
+def _text_fits(cat: IndexCatalog) -> dict | None:
+    """The manifest's tables when the resident text pack serves the
+    catalog; None for an index without the unified ``segdata`` layout,
+    or one whose segdata committed bytes exceed ``RESIDENT_MAX_BYTES``
+    (the pack is then released)."""
+    tables = cat.read_manifest()["tables"]
+    view = (tables.get("postings") or {}).get("view") or {}
+    if view.get("of") != "segdata" or not (tables.get("segdata") or {}).get("snapshot"):
+        return None
+    if R.disk_bytes(cat, "segdata", tables) > R.RESIDENT_MAX_BYTES:
+        R.pack(cat).drop(lambda name, v: name in ("segdata", "tombstones"))
+        return None
+    return tables
+
+
+def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
+    """The catalog's resident text pack, read on first use (None when it
+    does not serve, see :func:`_text_fits`)."""
+    tables = _text_fits(cat)
+    if tables is None:
+        return None
+
+    def prep(df: DataFrame) -> DataFrame:
+        return df.filter(F.col("kind").isin("post", "norms")).select(*_TEXT_COLS)
+
+    def read():
+        at = R.read_arrow(spark, cat, "segdata", prep)
+        return _Text(_leaves(at)), at.nbytes
+
+    def extend(text: _Text, snaps: tuple, dropped: tuple):
+        leaves = {s: v for s, v in text.leaves.items() if s not in set(dropped)}
+        if not snaps:
+            return _Text(leaves), 0
+        at = R.read_arrow(spark, cat, "segdata", prep, snaps, dropped)
+        new = _leaves(at)
+        if new.keys() & leaves.keys():
+            return None  # a segment in two directories: read the table again
+        return _Text({**leaves, **new}), at.nbytes
+
+    return R.pack(cat).get("segdata", R.entry_key(cat, "segdata", tables), read, extend=extend)
+
+
+def _resident_text(spark: SparkSession, cat: IndexCatalog):
+    """(text pack, sorted tombstoned ext_ids or None) when a query can be
+    served in the driver; None when it takes the Spark tier (no pack, or
+    more than ``FILTER_BROADCAST_MAX`` tombstones)."""
+    text = _text_pack(spark, cat)
+    if text is None or not cat.exists("tombstones"):
+        return None if text is None else (text, None)
+    n = cat.table_lineage("tombstones").get("n")
+    if n == 0:
+        return text, None
+    if n is not None and n > FILTER_BROADCAST_MAX:
+        return None
+
+    def fill():
+        arr = np.sort(R.read_arrow(spark, cat, "tombstones").column("ext_id").to_numpy().astype(np.int64))
+        return arr, arr.nbytes
+
+    tomb = R.pack(cat).get("tombstones", R.entry_key(cat, "tombstones"), fill)
+    if tomb.size > FILTER_BROADCAST_MAX:
+        return None
+    return text, (tomb if tomb.size else None)
+
+
+def _pack_stats(text: _Text, tomb: np.ndarray | None, terms: list[str]):
+    """The Spark tier's live statistics from the pack → (leaves, each
+    leaf's {term: (docs, tfs)}, each leaf's tombstoned local ids or None,
+    N, avgdl, {term: df}): N and the dl sum count the docs not tombstoned,
+    avgdl is their integer sum ÷ N, and df counts live postings."""
+    leaves = list(text.leaves.values())
+    post = [{t: _leaf_postings(leaf, t) for t in terms if t in leaf.rows} for leaf in leaves]
+    if tomb is None:
+        dead = [None] * len(leaves)
+        n = sum(leaf.dl.size for leaf in leaves)
+        total = sum(leaf.dl_sum for leaf in leaves)
+        df = {t: sum(p[t][0].size for p in post if t in p) for t in terms}
+    else:
+        dead = [_resolve_allowed(tomb, leaf.ext_ids) for leaf in leaves]
+        lives = [_alive_mask(leaf.dl.size, d, None) for leaf, d in zip(leaves, dead)]
+        n = sum(int(lv.sum()) for lv in lives)
+        total = sum(int(leaf.dl[lv].sum(dtype=np.int64)) for leaf, lv in zip(leaves, lives))
+        df = {t: sum(int(lv[p[t][0]].sum()) for p, lv in zip(post, lives) if t in p) for t in terms}
+    return leaves, post, dead, n, (total / n if n else 0.0), df
+
+
+def _resident_scored(
+    spark: SparkSession,
+    text: _Text,
+    tomb: np.ndarray | None,
+    specs: dict[str, dict],
+    terms: list[str],
+    cfg: IndexConfig,
+    allowed_ext: np.ndarray | None,
+    visited_limit: int | None,
+    batch: bool,
+    sort: bool,
+) -> DataFrame:
+    """The resident tier: the Spark tier's statistics, weights, per-leaf
+    kernel and global top-k, run in the driver over the pack → one
+    ``LocalRelation`` (see :func:`_scored`)."""
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    leaves, post, dead, n, avgdl, df = _pack_stats(text, tomb, terms)
+    idf_of = {t: idf(n, d) for t, d in df.items() if d > 0}
+    specs = {q: w for q, s in specs.items() if n and (w := _weigh(s, idf_of, n, df)) is not None}
+    live = {t for s in specs.values() for t in (*s["terms"], *s["exclude"])}
+    hits: dict[str, list] = {}
+    for leaf, d, p in zip(leaves, dead, post) if specs else ():
+        allowed = None if allowed_ext is None else _resolve_allowed(allowed_ext, leaf.ext_ids)
+        alive = _alive_mask(leaf.dl.size, d, allowed, visited_limit)
+        if not alive.any():
+            continue
+        lp = {}
+        for t in live & p.keys():
+            docs, tfs = p[t]
+            if visited_limit is not None:
+                a, z = leaf.rows[t]
+                m = int(leaf.n[a:z][leaf.first_doc[a:z] < visited_limit].sum())
+                docs, tfs = docs[:m], tfs[:m]
+            if docs.size:
+                lp[t] = (docs, tfs.astype(np.float64))
+        if not lp:
+            continue
+        denom = k1 * (1.0 - b + b * leaf.dls / avgdl)
+        for q, e, s in zip(*_score_batch_queries(specs, lp, {}, alive, leaf.ext_ids, denom, k1)):
+            hits.setdefault(q[0], []).append((e, s))
+    cols = []
+    for qid, parts in hits.items():
+        e = np.concatenate([x[0] for x in parts])
+        s = np.concatenate([x[1] for x in parts])
+        if sort or batch:
+            o = np.lexsort((e, -s))[: specs[qid]["k"]]
+            e, s = e[o], s[o]
+        cols.append((qid, e, s))
+    if not batch:
+        e, s = cols[0][1:] if cols else ((), ())
+        return local_frame(spark, "ext_id long, score double", e, s)
+    order = {q: i for i, q in enumerate(specs)}
+    cols.sort(key=lambda c: order[c[0]])
+    return local_frame(
+        spark, "query_id string, ext_id long, score double, rank int",
+        [q for q, e, _ in cols for _ in range(e.size)],
+        *(np.concatenate([c[i] for c in cols]) if cols else () for i in (1, 2)),
+        np.concatenate([np.arange(1, c[1].size + 1) for c in cols]) if cols else (),
+    )
+
+
+def _scored(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    specs: dict[str, dict],
+    cfg: IndexConfig,
+    filter_ext_ids: DataFrame | None = None,
+    visited_limit: int | None = None,
+    batch: bool = False,
+    sort: bool = True,
+) -> DataFrame:
+    """The one driver path of every scored query → its result frame:
+    (ext_id, score) in (score desc, ext_id asc) order cut at the query's
+    k (every match, unordered, when not ``sort``), or for a ``batch``
+    (query_id, ext_id, score, rank) with each query cut at its own k.
+    ``specs`` are :func:`_compile` outputs by query id.
+
+    The filter head is read once (at most ``FILTER_BROADCAST_MAX`` + 1
+    ids: one Arrow read, or no job for a ``LocalRelation``): a small
+    filter is a sorted ext_id array, a larger one stays a DataFrame for
+    the Spark tier's packed-blob cogroup. Then one of two tiers runs, with the same statistics (live
+    N, integer-sum avgdl, live df), the same per-term weights
+    (:func:`_weigh`), the same per-segment kernel
+    (:func:`_score_batch_queries`) and the same (score desc, ext_id asc)
+    tie rule, so they return the same (ext_id, score) lists bit for bit:
+
+    - resident (:func:`_resident_scored`): while segdata's committed
+      bytes fit ``RESIDENT_MAX_BYTES``, the filter is small and the
+      tombstones number at most ``FILTER_BROADCAST_MAX``, every leaf is
+      scored in the driver over the catalog's pack and the result is one
+      ``LocalRelation``: a warm query or batch runs no Spark job;
+    - Spark (:func:`_spark_partials`, :func:`_spark_top`): otherwise."""
+    terms = list(dict.fromkeys(t for s in specs.values() for t in (*s["terms"], *s["exclude"])))
+    if batch:
+        terms = sorted(terms)
+    empty = "query_id string, ext_id long, score double, rank int" if batch else "ext_id long, score double"
+    if not terms:
+        return local_frame(spark, empty)
+    allowed_ext = aux_filter = None
+    if filter_ext_ids is not None:
+        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1)
+        # a LocalRelation's rows come back with no job; toArrow runs one
+        head = ([r[0] for r in head.collect()] if filter_ext_ids.isLocal()
+                else head.toArrow().column(0).to_numpy(zero_copy_only=False))
+        if len(head) > FILTER_BROADCAST_MAX:
+            aux_filter = filter_ext_ids
+        else:
+            allowed_ext = np.sort(np.asarray(head).astype(np.int64))
+    resident = None if aux_filter is not None else _resident_text(spark, cat)
+    if resident is not None:
+        return _resident_scored(spark, *resident, specs, terms, cfg, allowed_ext,
+                                visited_limit, batch, sort)
+    partials = _spark_partials(spark, cat, specs, terms, cfg, allowed_ext, aux_filter,
+                               visited_limit, batch)
+    if partials is None:
+        return local_frame(spark, empty)
+    return _spark_top(partials, specs, batch, sort)
+
+
 # ---------------------------------------------------------------------------
 # Driver-side query entry points
 # ---------------------------------------------------------------------------
@@ -744,12 +1098,7 @@ def _aux_df(
     )
     aux_schema = "segment_id long, kind string, payload binary"
     if _has_tombstones(spark, cat):
-        tomb = cat.read(spark, "tombstones")
-        dm = cat.read(spark, "doc_map")
-        tseg = dm.join(tomb, "ext_id", "left_semi").select("segment_id", "doc_id")
-        aux = aux.union(
-            tseg.groupBy("segment_id").applyInPandas(lambda p: pack(p, "tomb"), aux_schema)
-        )
+        aux = aux.union(_tomb_aux(spark, cat, pack, aux_schema))
     if filter_ext_ids is not None:
         dm = cat.read(spark, "doc_map")
         fseg = dm.join(filter_ext_ids, "ext_id", "left_semi").select("segment_id", "doc_id")
@@ -757,6 +1106,21 @@ def _aux_df(
             fseg.groupBy("segment_id").applyInPandas(lambda p: pack(p, "allowed"), aux_schema)
         )
     return aux
+
+
+def _tomb_aux(spark: SparkSession, cat: IndexCatalog, pack, schema: str) -> DataFrame:
+    """The aux side's per-segment packed tombstone rows, collected once
+    per (statistics version, tombstones entry) into a ``LocalRelation``
+    instead of a ``doc_map`` ⋈ ``tombstones`` group-by per query."""
+    key = (stats_version(cat.read_manifest()), R.entry_key(cat, "tombstones"))
+    memo = getattr(cat, "_tomb_aux_memo", None)
+    if memo is None or memo[0] != key:
+        tomb = cat.read(spark, "tombstones")
+        dm = cat.read(spark, "doc_map")
+        tseg = dm.join(tomb, "ext_id", "left_semi").select("segment_id", "doc_id")
+        rows = tseg.groupBy("segment_id").applyInPandas(lambda p: pack(p, "tomb"), schema).collect()
+        memo = cat._tomb_aux_memo = (key, [[r[c] for r in rows] for c in ("segment_id", "kind", "payload")])
+    return local_frame(spark, schema, *memo[1])
 
 
 def _query_postings(spark: SparkSession, cat: IndexCatalog, terms: list[str], cfg: IndexConfig) -> DataFrame:
@@ -781,7 +1145,13 @@ def _live_stats_and_df(
     Lucene itself leaves stats stale until merge — we are stricter so results
     equal a rebuild, matching the reference's merge-as-rebuild semantics M2).
     The pre-filter (S10) does NOT change stats — it restricts candidates only.
+
+    While the resident pack serves the catalog, the statistics come from
+    it with no Spark job (:func:`_pack_stats`, the same integers).
     """
+    resident = _resident_text(spark, cat)
+    if resident is not None:
+        return _pack_stats(*resident, terms)[3:]
     has_tomb = _has_tombstones(spark, cat)
     if not has_tomb:
         n, avgdl = corpus_stats(spark, cat)
@@ -826,14 +1196,28 @@ def _live_stats_and_df(
             for t in missing:
                 memo["df"][t] = found.get(t, 0)
         return n, avgdl, {t: memo["df"][t] for t in terms}
+    # memoized per (statistics version, tombstones entry) like the df memo
+    # above: after a delete, only the first query recomputes N / avgdl and
+    # each term's live df is counted once
+    key = (stats_version(cat.read_manifest()), R.entry_key(cat, "tombstones"))
     dm = cat.read(spark, "doc_map")
     tomb = cat.read(spark, "tombstones")
     live = dm.join(tomb, "ext_id", "left_anti")
-    row = live.agg(F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
-    n = int(row["n"] or 0)
-    avgdl = (int(row["t"] or 0) / n) if n else 0.0
-    rows = _live_df_frame(spark, cat, postings, live).collect()
-    return n, avgdl, {r["term"]: int(r["df"]) for r in rows}
+    memo = getattr(cat, "_live_stats_memo", None)
+    if memo is None or memo["key"] != key:
+        row = live.agg(F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
+        n = int(row["n"] or 0)
+        memo = {"key": key, "n": n, "avgdl": (int(row["t"] or 0) / n) if n else 0.0, "df": {}}
+        cat._live_stats_memo = memo
+    missing = [t for t in terms if t not in memo["df"]]
+    if missing:
+        rows = _live_df_frame(
+            spark, cat, postings.filter(F.col("term").isin(missing)), live
+        ).collect()
+        found = {r["term"]: int(r["df"]) for r in rows}
+        for t in missing:
+            memo["df"][t] = found.get(t, 0)
+    return memo["n"], memo["avgdl"], {t: memo["df"][t] for t in terms}
 
 
 def _live_df_pdf(pdf):
@@ -936,6 +1320,22 @@ def warm_query_path(
     bm25_topk(spark, cat, [hot], k=1, cfg=cfg).collect()
 
 
+def warm_after_commit(
+    spark: SparkSession, cat: IndexCatalog, cfg: IndexConfig | None, n_docs: int
+) -> None:
+    """The query warm-up a build or merge commit folds in. Under the
+    resident budget there is none: the first query fills the pack (one
+    read) and no Spark query path is used. Over it, the Spark tier's
+    first-query costs are paid here: the hot-term df memo, the executor
+    norms broadcast (under its own gate) and one real query."""
+    if _text_fits(cat) is not None:
+        return
+    warm_term_df_memo(spark, cat)  # hot-term df cache (bounded)
+    if n_docs <= NORMS_BROADCAST_MAX_DOCS:  # the query path's own gate
+        _norms_broadcast(spark, cat)
+    warm_query_path(spark, cat, cfg)  # worker/codegen spin-up
+
+
 def _topk(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -945,23 +1345,13 @@ def _topk(
     visited_limit: int | None = None,
     sort: bool = True,
 ) -> DataFrame:
-    """A single scored query: a batch of one through :func:`_scored`,
-    then the global top-k (score desc, ext_id asc) → DataFrame(ext_id,
-    score); unsorted and uncut when ``sort`` is False."""
-    partials = None
-    if spec is not None and spec["k"] > 0:
-        partials = _scored(
-            spark, cat, {"q": spec}, cfg or IndexConfig(), filter_ext_ids, visited_limit
-        )
-    if partials is None:
+    """A single scored query: a batch of one through :func:`_scored` →
+    DataFrame(ext_id, score), top-k in (score desc, ext_id asc) order;
+    every match, unordered, when ``sort`` is False."""
+    if spec is None or spec["k"] <= 0:
         return local_frame(spark, "ext_id long, score double")
-    if not sort:
-        return partials.select("ext_id", "score")
-    return (
-        partials.orderBy(F.desc("score"), F.asc("ext_id"))
-        .limit(spec["k"])
-        .select("ext_id", "score")
-    )
+    return _scored(spark, cat, {"q": spec}, cfg or IndexConfig(), filter_ext_ids,
+                   visited_limit, sort=sort)
 
 
 def bm25_topk(
@@ -1128,48 +1518,20 @@ def bm25_topk_batch(
     qspecs: dict[str, dict],
     cfg: IndexConfig | None = None,
 ) -> DataFrame:
-    """Answer a BATCH of BM25 queries in one Spark job →
+    """Answer a BATCH of BM25 queries in one pass →
     DataFrame(query_id, ext_id, score, rank). This is the throughput path:
-    one postings scan for the union of all query terms (or none, once the
-    impact cache covers them), one scoring pass (posting blocks decoded
-    once per segment), one windowed global top-k per query. qspecs:
+    every term's postings decoded once per segment, one scoring pass, one
+    global top-k per query — in the driver on the resident tier (no Spark
+    job), else one Spark job: one postings scan for the union of all
+    query terms (or none, once the impact cache covers them) and a
+    windowed top-k. qspecs:
     {query_id: {"terms": [...], "mode": "or"|"and", "k": int}}; a spec
     may also be a scored BooleanQuery — ``{"must": [...], "should":
     [...], "exclude": [...], "min_should_match": m, "k": k}`` with
     :func:`bm25_boolean_topk` semantics (MUST_NOT terms ride the shared
     scan/cache as veto masks and never score)."""
-    from pyspark.sql import Window
-
-    cfg = cfg or IndexConfig()
     specs = {qid: c for qid, s in qspecs.items() if (c := _compile(s, qid)) is not None}
-    partials = _scored(spark, cat, specs, cfg, batch=True) if specs else None
-    if partials is None:
-        return local_frame(spark, "query_id string, ext_id long, score double, rank int")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("ext_id"))
-    ks = {s["k"] for s in specs.values()}
-    if len(ks) == 1:
-        # homogeneous k (the common batch shape): a constant comparison —
-        # a per-query create_map of 2·|batch| literals costs seconds of
-        # DRIVER analysis per run at 1024 queries, a pure serial tax that
-        # caps N→4N batch scaling
-        k_cond = F.col("rank") <= next(iter(ks))
-    else:
-        k_map = F.create_map(
-            *[x for qid, s in specs.items() for x in (F.lit(qid), F.lit(s["k"]))]
-        )
-        k_cond = F.col("rank") <= k_map[F.col("query_id")]
-    # explicit repartition before the window: the partials are small in
-    # BYTES (segments × queries × k compact rows), so AQE's advisory-size
-    # coalescing would collapse the window exchange to ONE task — a
-    # constant serial sort that caps N→4N batch scaling (Amdahl). An
-    # explicit numPartitions pins the per-query window work parallel.
-    npart = shuffle_partitions(spark)
-    return (
-        partials.repartition(npart, "query_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(k_cond)
-        .select("query_id", "ext_id", "score", "rank")
-    )
+    return _scored(spark, cat, specs, cfg or IndexConfig(), batch=True)
 
 
 def term_docs(

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
+from ..frames import local_frame
 from .bm25 import bm25_scored_matches
 
 ROUND = 6
@@ -146,9 +147,7 @@ def collapse_topk(
     doc (``CollapsingTopDocsCollector.createKeywordCollector``), then
     heads rank (score desc, ext_id asc)."""
     if k <= 0:
-        return spark.createDataFrame(
-            [], "ext_id long, group_value string, score double"
-        )
+        return local_frame(spark, "ext_id long, group_value string, score double")
     g = _grouped_matches(
         spark, cat, docs, query_terms, group_col, mode, cfg, id_col
     )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
+from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.segments import (
     NORMS_SCHEMA,
@@ -235,9 +236,9 @@ def merge_segments(
     merged_segs = sorted(gkey_of)
     salt = cfg.salt_factor
 
-    gmap = spark.createDataFrame(
-        [(int(s), int(gi), int(s) % salt) for s, gi in gkey_of.items()],
-        "segment_id long, gkey long, salt int",
+    gmap = local_frame(
+        spark, "segment_id long, gkey long, salt int",
+        list(gkey_of), list(gkey_of.values()), [int(s) % salt for s in gkey_of],
     )
 
     # --- new doc order: live docs of merged segments, ext_id asc per group.
@@ -297,9 +298,7 @@ def merge_segments(
     # the merged segments only — untouched segments are never rewritten
     # (the Lucene segment-file / Iceberg delete-manifest model); a later
     # rewrite_segdata() compaction reclaims the dropped bytes.
-    newseg_df = spark.createDataFrame(
-        [(int(g), int(s)) for g, s in newseg.items()], "gkey long, segment_id long"
-    )
+    newseg_df = local_frame(spark, "gkey long, segment_id long", list(newseg), list(newseg.values()))
     new_docmap = (
         ndm.join(F.broadcast(newseg_df), "gkey")
         .select("segment_id", F.col("new_doc_id").alias("doc_id"), "ext_id", "sha256", "dl")
@@ -378,8 +377,8 @@ def merge_segments(
     cat.mark_stage(f"merge_{len(seg_ids)}to{len(groups)}", lineage=lineage)
 
     # fold the first-query-after-merge costs into the merge commit: refresh
-    # the manifest corpus-stats cache and the executor norms broadcast here,
-    # so the next query is the same single Spark job as a steady-state one
+    # the manifest corpus-stats cache here, and (over the resident budget)
+    # the Spark tier's warm-up, so the next query is a steady-state one
     srows = cat.read(spark, "segment_stats").collect()
     n_total = sum(int(r["n_docs"]) for r in srows)
     cat.mark_stage(
@@ -395,20 +394,12 @@ def merge_segments(
             "n_tokens": sum(int(r["n_tokens"]) for r in srows),
         },
     )
-    from cuvs_lucene_spark.operators.bm25 import (
-        NORMS_BROADCAST_MAX_DOCS,
-        _norms_broadcast,
-        warm_query_path,
-        warm_term_df_memo,
-    )
+    from cuvs_lucene_spark.operators.bm25 import warm_after_commit
 
     try:
-        warm_term_df_memo(spark, cat)  # hot-term df cache (bounded)
-        if n_total <= NORMS_BROADCAST_MAX_DOCS:  # the query path's own gate
-            _norms_broadcast(spark, cat)
-        warm_query_path(spark, cat, cfg)  # worker/codegen spin-up
+        warm_after_commit(spark, cat, cfg, n_total)
     except Exception:
-        pass  # broadcast warmup is an optimization, never a merge failure
+        pass  # warmup is an optimization, never a merge failure
 
     ndm.unpersist()
     unpersist_rank()

@@ -13,6 +13,10 @@ semantics mirrored here:
   a kind-pruned parquet scan; for prefixes the match is a pushed
   ``StringStartsWith``, for wildcards the compiled automaton's literal
   prefix is pushed and the regex filters the surviving dictionary rows.
+  While the resident text pack serves the catalog (``bm25._scored``),
+  prefix / wildcard / regexp expansion reads its sorted term array in
+  the driver instead (a ``searchsorted`` prefix range, then the regex);
+  fuzzy and range expansion stay on the scan.
 - expansion is bounded by ``max_expansions`` (Lucene
   ``IndexSearcher.getMaxClauseCount``, default 1024) and EXCEEDING IT
   RAISES (``TooManyClauses``) — no silent truncation.
@@ -47,12 +51,13 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
 from ..frames import local_frame
-from .bm25 import bm25_topk, boolean_query
+from .bm25 import _text_pack, bm25_topk, boolean_query
 
 MAX_EXPANSIONS = 1024  # Lucene IndexSearcher.maxClauseCount default
 
@@ -83,23 +88,43 @@ def expand_terms(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> list[str]:
     """Enumerate dictionary terms matching (prefix[, regex]) — sorted,
-    deduplicated across segments, bounded by ``max_expansions``."""
-    terms = cat.read(spark, "terms").select("term")
-    if prefix:
-        terms = terms.filter(F.col("term").startswith(prefix))
-    if regex is not None:
-        terms = terms.filter(F.col("term").rlike(regex))
-    rows = (
-        terms.distinct()
-        .orderBy("term")
-        .limit(max_expansions + 1)
-        .collect()
-    )
-    if len(rows) > max_expansions:
+    deduplicated across segments, bounded by ``max_expansions``.
+
+    While the resident text pack serves the catalog, the dictionary is
+    its sorted term array: the prefix is a ``searchsorted`` range and the
+    regex (``re.search``, as Spark's ``rlike`` finds) filters it in
+    order, with no Spark job. A regex Python cannot compile takes the
+    dictionary scan, and so does one with a ``[`` inside a character
+    class or a ``&&`` (Java's set union and intersection, which Python
+    reads as literals)."""
+    text = _text_pack(spark, cat)
+    vocab = None if text is None else text.vocab()
+    if regex is not None and ("&&" in regex or re.search(r"\[[^\]]*\[", regex)):
+        vocab = None
+    try:
+        rx = None if vocab is None or regex is None else re.compile(regex)
+    except re.error:
+        vocab = None
+    if vocab is not None:
+        out: list[str] = []
+        for t in vocab[np.searchsorted(vocab, prefix):]:
+            if not t.startswith(prefix) or len(out) > max_expansions:
+                break
+            if rx is None or rx.search(t):
+                out.append(t)
+    else:
+        terms = cat.read(spark, "terms").select("term")
+        if prefix:
+            terms = terms.filter(F.col("term").startswith(prefix))
+        if regex is not None:
+            terms = terms.filter(F.col("term").rlike(regex))
+        rows = terms.distinct().orderBy("term").limit(max_expansions + 1).collect()
+        out = [r["term"] for r in rows]
+    if len(out) > max_expansions:
         raise TooManyClauses(
             f"pattern expands to > {max_expansions} dictionary terms"
         )
-    return [r["term"] for r in rows]
+    return out
 
 
 def prefix_docs(

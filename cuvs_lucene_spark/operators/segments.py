@@ -496,22 +496,13 @@ def build_index(
             lineage=lineage,
             corpus_stats={"n_docs": n, "n_tokens": toks},
         )
-        # fold the first-query warmup into the build commit (exactly what
-        # merge_segments does at its commit): the executor norms broadcast
-        # is the only first-query-only cost left, so a cold first query
-        # runs the same single Spark job as a steady-state one
-        from cuvs_lucene_spark.operators.bm25 import (
-            NORMS_BROADCAST_MAX_DOCS,
-            _norms_broadcast,
-            warm_query_path,
-            warm_term_df_memo,
-        )
+        # fold the first-query warm-up into the build commit (exactly what
+        # merge_segments does at its commit); under the resident budget
+        # there is none — the first query fills the pack
+        from cuvs_lucene_spark.operators.bm25 import warm_after_commit
 
         try:
-            warm_term_df_memo(spark, cat)  # hot-term df cache (bounded)
-            if n <= NORMS_BROADCAST_MAX_DOCS:  # the query path's own gate
-                _norms_broadcast(spark, cat)
-            warm_query_path(spark, cat, cfg)  # worker/codegen spin-up
+            warm_after_commit(spark, cat, cfg, n)
         except Exception:
             pass  # warmup is an optimization, never a build failure
 

@@ -37,3 +37,12 @@ def docs_df(spark):
 @pytest.fixture()
 def index_root(tmp_path):
     return str(tmp_path / "index")
+
+
+@pytest.fixture()
+def spark_tier(monkeypatch):
+    """Single ANN searches and BM25 queries take the Spark tier (resident
+    budget 0), whose plans and job counts the tests using it pin."""
+    import cuvs_lucene_spark.operators.resident as R
+
+    monkeypatch.setattr(R, "RESIDENT_MAX_BYTES", 0)

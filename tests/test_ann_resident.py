@@ -22,6 +22,7 @@ import numpy as np
 import pytest
 
 import cuvs_lucene_spark.operators.ann as A
+import cuvs_lucene_spark.operators.resident as R
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.operators.ann_graph import ann_topk_graph, build_ann_graph
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
@@ -72,10 +73,23 @@ def merged(spark, deleted):
     """The same catalog, merged: segments 0 and 1 become two new ones
     (dropping the tombstoned rows) and stay on disk as logical drops, the
     B2 segment stays, and a delete after the merge leaves live
-    tombstones."""
+    tombstones. The pack is warm before the merge; the reads of the first
+    queries after it are recorded."""
+    cases = [(m, "none") for m in MODES]
+    _run(spark, deleted, cases)
     A.merge_ann(spark, deleted, NOCOMPACT, groups=[[0, 1]])
     A.delete_ann(spark, deleted, {7, 152}, CFG, auto_merge=False)
-    return deleted
+    reads = []
+    real = R.read_arrow
+
+    def counted(spark_, cat_, table, prep=None, snaps=None, dropped=()):
+        reads.append((table, snaps))
+        return real(spark_, cat_, table, prep, snaps, dropped)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(R, "read_arrow", counted)
+        _run(spark, deleted, cases)
+    return deleted, reads
 
 
 def _rows(df) -> list[tuple]:
@@ -99,7 +113,7 @@ def _both_tiers(spark, cat, cases, monkeypatch) -> None:
         m.setattr(A, "_Search", lambda *a, **k: pytest.fail("resident query took the Spark tier"))
         resident = _run(spark, cat, cases)
     with monkeypatch.context() as m:
-        m.setattr(A, "RESIDENT_MAX_BYTES", 0)
+        m.setattr(R, "RESIDENT_MAX_BYTES", 0)
         tier = _run(spark, cat, cases)
     assert all(resident.values())
     assert {c: v for c, v in resident.items() if v != tier[c]} == {}
@@ -109,7 +123,22 @@ def test_tiers_equal_after_delete(spark, deleted, monkeypatch):
     _both_tiers(spark, deleted, [(m, f) for m in MODES for f in FILTERS], monkeypatch)
 
 
+def test_merge_extends_the_pack(spark, merged):
+    """After the merge, each warm table entry reads only the appended
+    directory (the dropped segments are filtered in the driver; the
+    rewritten tombstones are read whole), and the extended pack answers
+    as a cold fill does."""
+    cat, reads = merged
+    tables = cat.read_manifest()["tables"]
+    want = [(t, tuple(tables[t]["appends"][-1:])) for t in A.PACK_TABLES]
+    assert sorted(reads) == sorted(want + [("ann_tombstones", None)])
+    cold = IndexCatalog(cat.root)
+    assert {m: _rows(f(spark, cat, None)) for m, f in MODES.items()} == {
+        m: _rows(f(spark, cold, None)) for m, f in MODES.items()}
+
+
 def test_tiers_equal_after_merge(spark, merged, monkeypatch):
+    merged = merged[0]
     assert A._derived_in_sync(merged, "ann_ivfpq")
     assert merged.read_manifest()["tables"]["ann_flat"]["dropped_segments"] == [0, 1]
     names = list(FILTERS)
@@ -123,14 +152,14 @@ def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypat
     cat = IndexCatalog(deleted.root)  # a fresh, empty pack
     reads: Counter = Counter()
     lock = threading.Lock()
-    real = A._read_arrow
+    real = R.read_arrow
 
-    def counted(spark_, cat_, table, where=None):
+    def counted(spark_, cat_, table, *a, **k):
         with lock:
             reads[table] += 1
-        return real(spark_, cat_, table, where)
+        return real(spark_, cat_, table, *a, **k)
 
-    monkeypatch.setattr(A, "_read_arrow", counted)
+    monkeypatch.setattr(R, "read_arrow", counted)
     modes = ["exact", "ivf", "sq", "bq", "pq", "ivfpq", "graph", "bq_rerank"]
     got: dict = {}
     errors: list = []
@@ -153,5 +182,5 @@ def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypat
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads) and errors == []
     assert reads == Counter({t: 1 for t in (*A.PACK_TABLES, "ann_tombstones")})
-    assert A._pack(cat).nbytes() > 0
+    assert R.pack(cat).nbytes() > 0
     assert got == {m: _rows(MODES[m](spark, cat, None)) for m in modes}

@@ -348,10 +348,11 @@ TIER_CASES = {
 
 
 @pytest.mark.parametrize("kind", list(TIER_CASES))
-def test_bm25_tier_equality(spark, cat, monkeypatch, kind):
-    """Every scored spec kind gives the same rows on the broadcast-norms
-    tier and on the packed-aux cogroup tier (the >NORMS_BROADCAST_MAX_DOCS
-    / tombstone tier); the boolean case also equals the oracle."""
+def test_bm25_tier_equality(spark, cat, monkeypatch, spark_tier, kind):
+    """Every scored spec kind gives the same rows on the Spark tier's
+    broadcast-norms path and on its packed-aux cogroup path (the
+    >NORMS_BROADCAST_MAX_DOCS / tombstone path); the boolean case also
+    equals the oracle."""
     from cuvs_lucene_spark.operators import bm25 as B
     from cuvs_lucene_spark.oracle import bm25_boolean_sql
 

@@ -14,6 +14,8 @@ from cuvs_lucene_spark.operators.segments import build_index
 from tests.conftest import SF_DIR
 
 CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
+# the impact cache belongs to the Spark tier (resident budget 0)
+pytestmark = pytest.mark.usefixtures("spark_tier")
 
 QSPECS = {
     "q0": {"terms": ["join", "vector"], "mode": "or", "k": 5},

@@ -27,15 +27,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.fixture()
-def spark_tier(monkeypatch):
-    """Single-query ANN searches take the Spark tier (resident budget 0),
-    whose plans and job counts the ANN tests below pin."""
-    import cuvs_lucene_spark.operators.ann as A
-
-    monkeypatch.setattr(A, "RESIDENT_MAX_BYTES", 0)
-
-
 def test_postings_scan_pushes_filters(spark, cat):
     df = _query_postings(spark, cat, ["join", "vector"], CFG)
     plan = _plan(df)
@@ -108,7 +99,7 @@ def test_ivf_probe_pushes_list_filter(spark, tmp_path, spark_tier):
     assert any("list_id" in p[:300] for p in pushed), plan[:2000]
 
 
-def test_fast_query_path_single_shuffle_no_cogroup(spark, cat):
+def test_fast_query_path_single_shuffle_no_cogroup(spark, cat, spark_tier):
     """The no-deletes broadcast-norms query path: ONE hash exchange on
     segment_id, no FlatMapCoGroupsInPandas (the aux union + cogroup only
     appear when tombstones or large filters force the blob path)."""
@@ -401,7 +392,7 @@ def test_span_near_scan_pushes_span_terms(spark, cat):
     assert "term" in pushed and "In(" in pushed
 
 
-def test_group_topk_plan_shape(spark, cat):
+def test_group_topk_plan_shape(spark, cat, spark_tier):
     """Grouping: the exhaustive scored collection executes EXACTLY once
     (one pandas scorer node — a branched heads aggregate would re-run
     the whole BM25 pass for its second consumer), the scored-matches
@@ -539,22 +530,19 @@ def test_ann_resident_query_job_counts(spark, ann_cat):
 BM25_JOB_PINS = {  # warm per-query Spark jobs of the BM25 family
     "topk": 2, "topk_and": 2, "boolean": 2, "dismax": 2, "synonym": 2,
     "batch": 3, "batch_cached": 3, "topk_cached": 2, "set_filter": 3,
-    "df_filter_over_cap": 6, "after_delete": 12,
+    "df_filter_over_cap": 6, "after_delete": 3,
 }
 
 
-def test_bm25_query_job_counts(spark, cat, monkeypatch):
-    """Every BM25 query kind runs a fixed, small number of Spark jobs per
-    warm query. Runs last in the module: the final case deletes a doc."""
+def _bm25_calls(spark, cat) -> dict:
     import cuvs_lucene_spark.operators.bm25 as B
-    from cuvs_lucene_spark.operators.deletes import delete_docs
 
     batch = {
         "q0": {"terms": ["join", "vector"], "k": 5},
         "q1": {"must": ["dup"], "should": ["slow", "spark"], "k": 5},
     }
     small = spark.range(0, 400, 3).select(F.col("id").alias("ext_id"))
-    calls = {
+    return {
         "topk": lambda: B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
         "topk_and": lambda: B.bm25_topk(spark, cat, ["dup", "slow"], k=10, mode="and", cfg=CFG),
         "boolean": lambda: B.bm25_boolean_topk(
@@ -565,14 +553,43 @@ def test_bm25_query_job_counts(spark, cat, monkeypatch):
         "set_filter": lambda: B.bm25_topk(
             spark, cat, ["join", "vector"], k=10, cfg=CFG, filter_ext_ids=small
         ),
+        "batch": lambda: B.bm25_topk_batch(spark, cat, batch, CFG),
     }
+
+
+def test_bm25_resident_query_job_counts(spark, cat):
+    """Under the default budget every warm BM25 scored query and batch is
+    served from the resident pack: 0 jobs, 1 with a DataFrame filter (its
+    head read); a filter built in the driver (a LocalRelation) reads its
+    head with none."""
+    from cuvs_lucene_spark.frames import local_frame
+    from cuvs_lucene_spark.operators.bm25 import bm25_topk
+    from cuvs_lucene_spark.operators.multiterm import prefix_topk
+
+    calls = _bm25_calls(spark, cat)
+    local = local_frame(spark, "ext_id long", range(0, 400, 3))
+    calls["local_filter"] = lambda: bm25_topk(
+        spark, cat, ["join", "vector"], k=10, cfg=CFG, filter_ext_ids=local
+    )
+    calls["prefix"] = lambda: prefix_topk(spark, cat, "jo", k=10, cfg=CFG)
+    counts = _warm_job_counts(spark, calls, "bm25_resident")
+    assert counts == {**dict.fromkeys(calls, 0), "set_filter": 1}
+
+
+def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
+    """Every BM25 query kind runs a fixed, small number of Spark jobs per
+    warm query on the Spark tier. Runs last in the module: the final case
+    deletes a doc."""
+    import cuvs_lucene_spark.operators.bm25 as B
+    from cuvs_lucene_spark.operators.deletes import delete_docs
+
+    calls = _bm25_calls(spark, cat)
     cat._hotpost_memo = None
     with monkeypatch.context() as mp:
         mp.setattr(B, "_hot_postings_broadcast", lambda *a, **k: ((), frozenset()))
-        calls["batch"] = lambda: B.bm25_topk_batch(spark, cat, batch, CFG)
         counts = _warm_job_counts(spark, calls, "bm25")
     counts.update(_warm_job_counts(spark, {
-        "batch_cached": lambda: B.bm25_topk_batch(spark, cat, batch, CFG),
+        "batch_cached": calls["batch"],
         "topk_cached": calls["topk"],
     }, "bm25"))
     with monkeypatch.context() as mp:

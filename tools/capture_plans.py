@@ -3,6 +3,7 @@ the dataset-only operators (no index needed), the ANN single-query
 modes (``ann_*``) over a small generated index built in a temp dir, and
 the BM25 query family (``bm25_*``) over an index of the sf0.001 corpus
 (the ``sf0.001`` sibling of ``SPARK_GRAFT_SF_DIR``) built in a temp dir.
+Index plans are the Spark tier's: the resident budget is set to 0.
 
 Usage: python tools/capture_plans.py <before|after> [op ...]
 An op argument ``ann`` selects every ``ann_*`` plan, ``bm25`` every
@@ -31,8 +32,6 @@ def ann_plans(spark, root: str) -> dict:
     from cuvs_lucene_spark.operators import ann as A
     from cuvs_lucene_spark.operators import ann_graph as AG
 
-    # the Spark tier's plans: a resident-tier result is one LocalTableScan
-    A.RESIDENT_MAX_BYTES = 0
     cfg = IndexConfig(rows_per_segment=150)
     rows = [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in range(301)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -166,6 +165,11 @@ def main():
             n=5,
         ),
     }
+    # the Spark tier's plans (resident budget 0): a resident ANN search or
+    # BM25 query result is one LocalTableScan
+    from cuvs_lucene_spark.operators import resident
+
+    resident.RESIDENT_MAX_BYTES = 0
     want_ann = not only or "ann" in only or any(o.startswith("ann_") for o in only)
     tmp = tempfile.mkdtemp(prefix="plan_capture_ann_")
     if want_ann:

@@ -8,8 +8,14 @@ cold and then warm (after a batch admitted every query term); then after
 a delete and after a merge. Scores are written as ``float.hex`` so the
 comparison is bit for bit.
 
+The tier axis: ``--tier resident`` (the default budget, so every scenario
+the resident tier serves runs in the driver) or ``--tier spark`` (the
+resident budget set to 0, so every scenario runs on the Spark tier). A
+checkout without the resident tier dumps its Spark tier either way; diff
+each tier's dump against it and the two tiers against each other.
+
 Usage (from the repo root of each checkout):
-    python tools/compare_bm25.py dump OUT.json SF_DIR   # e.g. a testdata sf0.001 dir
+    python tools/compare_bm25.py dump OUT.json SF_DIR [--tier resident|spark]
     python tools/compare_bm25.py diff A.json B.json [--skip SUBSTR ...]
 """
 
@@ -83,7 +89,7 @@ def _rows(df, batch=False):
     return [[e, s.hex()] for e, s in sorted(rows, key=lambda x: (-x[1], x[0]))]
 
 
-def dump(out_path: str, sf_dir: str) -> None:
+def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -102,6 +108,12 @@ def dump(out_path: str, sf_dir: str) -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if tier == "spark":
+        from cuvs_lucene_spark.operators import resident
+
+        resident.RESIDENT_MAX_BYTES = 0
+    elif tier != "resident":
+        raise ValueError(f"unknown tier {tier!r}; expected resident or spark")
     cfg = IndexConfig(rows_per_segment=64, block_size=16, prune_range=64, term_buckets=8)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     root = tempfile.mkdtemp(prefix="compare_bm25_")
@@ -150,7 +162,7 @@ def dump(out_path: str, sf_dir: str) -> None:
     with open(out_path, "w") as f:
         json.dump(out, f, indent=0, sort_keys=True)
     n_rows = sum(len(v) for v in out.values())
-    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows")
+    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows ({tier} tier)")
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)
 
@@ -171,7 +183,8 @@ def diff(a_path: str, b_path: str, skip: list[str]) -> int:
 
 def main() -> int:
     if sys.argv[1] == "dump":
-        dump(sys.argv[2], sys.argv[3])
+        tier = sys.argv[sys.argv.index("--tier") + 1] if "--tier" in sys.argv else "resident"
+        dump(sys.argv[2], sys.argv[3], tier)
         return 0
     skip = sys.argv[sys.argv.index("--skip") + 1:] if "--skip" in sys.argv else []
     return diff(sys.argv[2], sys.argv[3], skip)
