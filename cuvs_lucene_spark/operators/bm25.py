@@ -27,8 +27,9 @@ tried, on segments of 20k and 100k docs.
   N / avgdl / df, every leaf's kernel and the global top-k run in the
   driver and the result is one ``LocalRelation``, so a warm query or
   batch runs no Spark job. It serves while segdata's committed bytes fit
-  ``RESIDENT_MAX_BYTES`` and the filter and the tombstones each hold at
-  most ``FILTER_BROADCAST_MAX`` ids;
+  ``resident.TEXT_RESIDENT_MAX_BYTES``, the pack could be read, and the
+  filter and the tombstones each hold at most ``FILTER_BROADCAST_MAX``
+  ids;
 - Spark (:func:`_spark_partials`): one postings scan, one UDF body
   (:func:`_segment_scorer`) per segment over the norms broadcast, the
   impact cache or the tombstone / filter cogroup, then a global
@@ -861,13 +862,13 @@ _TEXT_COLS = ("segment_id", "kind", "term", "block_id", "first_doc", "n", "doc_d
 def _text_fits(cat: IndexCatalog) -> dict | None:
     """The manifest's tables when the resident text pack serves the
     catalog; None for an index without the unified ``segdata`` layout,
-    or one whose segdata committed bytes exceed ``RESIDENT_MAX_BYTES``
-    (the pack is then released)."""
+    or one whose segdata committed bytes exceed
+    ``TEXT_RESIDENT_MAX_BYTES`` (the pack is then released)."""
     tables = cat.read_manifest()["tables"]
     view = (tables.get("postings") or {}).get("view") or {}
     if view.get("of") != "segdata" or not (tables.get("segdata") or {}).get("snapshot"):
         return None
-    if R.disk_bytes(cat, "segdata", tables) > R.RESIDENT_MAX_BYTES:
+    if R.disk_bytes(cat, "segdata", tables) > R.TEXT_RESIDENT_MAX_BYTES:
         R.pack(cat).drop(lambda name, v: name in ("segdata", "tombstones"))
         return None
     return tables
@@ -875,7 +876,10 @@ def _text_fits(cat: IndexCatalog) -> dict | None:
 
 def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
     """The catalog's resident text pack, read on first use (None when it
-    does not serve, see :func:`_text_fits`)."""
+    does not serve, see :func:`_text_fits`). A read that fails (say, one
+    over ``spark.driver.maxResultSize`` or the driver's memory) leaves
+    None in the pack, so the catalog takes the Spark tier until segdata
+    next changes."""
     tables = _text_fits(cat)
     if tables is None:
         return None
@@ -884,15 +888,23 @@ def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
         return df.filter(F.col("kind").isin("post", "norms")).select(*_TEXT_COLS)
 
     def read():
-        at = R.read_arrow(spark, cat, "segdata", prep)
-        return _Text(_leaves(at)), at.nbytes
+        try:
+            at = R.read_arrow(spark, cat, "segdata", prep)
+            return _Text(_leaves(at)), at.nbytes
+        except Exception:
+            return None, 0
 
-    def extend(text: _Text, snaps: tuple, dropped: tuple):
+    def extend(text: _Text | None, snaps: tuple, dropped: tuple):
+        if text is None:
+            return None
         leaves = {s: v for s, v in text.leaves.items() if s not in set(dropped)}
         if not snaps:
             return _Text(leaves), 0
-        at = R.read_arrow(spark, cat, "segdata", prep, snaps, dropped)
-        new = _leaves(at)
+        try:
+            at = R.read_arrow(spark, cat, "segdata", prep, snaps, dropped)
+            new = _leaves(at)
+        except Exception:
+            return None
         if new.keys() & leaves.keys():
             return None  # a segment in two directories: read the table again
         return _Text({**leaves, **new}), at.nbytes
@@ -1031,7 +1043,8 @@ def _scored(
     tie rule, so they return the same (ext_id, score) lists bit for bit:
 
     - resident (:func:`_resident_scored`): while segdata's committed
-      bytes fit ``RESIDENT_MAX_BYTES``, the filter is small and the
+      bytes fit ``TEXT_RESIDENT_MAX_BYTES``, the pack could be read, the
+      filter is small and the
       tombstones number at most ``FILTER_BROADCAST_MAX``, every leaf is
       scored in the driver over the catalog's pack and the result is one
       ``LocalRelation``: a warm query or batch runs no Spark job;
@@ -1110,17 +1123,20 @@ def _aux_df(
 
 def _tomb_aux(spark: SparkSession, cat: IndexCatalog, pack, schema: str) -> DataFrame:
     """The aux side's per-segment packed tombstone rows, collected once
-    per (statistics version, tombstones entry) into a ``LocalRelation``
-    instead of a ``doc_map`` ⋈ ``tombstones`` group-by per query."""
-    key = (stats_version(cat.read_manifest()), R.entry_key(cat, "tombstones"))
-    memo = getattr(cat, "_tomb_aux_memo", None)
-    if memo is None or memo[0] != key:
+    per (statistics version, tombstones entry) into the catalog's pack
+    and served as a ``LocalRelation``, instead of a ``doc_map`` ⋈
+    ``tombstones`` group-by per query."""
+
+    def fill():
         tomb = cat.read(spark, "tombstones")
         dm = cat.read(spark, "doc_map")
         tseg = dm.join(tomb, "ext_id", "left_semi").select("segment_id", "doc_id")
         rows = tseg.groupBy("segment_id").applyInPandas(lambda p: pack(p, "tomb"), schema).collect()
-        memo = cat._tomb_aux_memo = (key, [[r[c] for r in rows] for c in ("segment_id", "kind", "payload")])
-    return local_frame(spark, schema, *memo[1])
+        cols = [[r[c] for r in rows] for c in ("segment_id", "kind", "payload")]
+        return cols, sum(len(p) for p in cols[2])
+
+    key = (stats_version(cat.read_manifest()), R.entry_key(cat, "tombstones"))
+    return local_frame(spark, schema, *R.pack(cat).get("tomb_aux", key, fill))
 
 
 def _query_postings(spark: SparkSession, cat: IndexCatalog, terms: list[str], cfg: IndexConfig) -> DataFrame:

@@ -14,9 +14,9 @@ semantics mirrored here:
   ``StringStartsWith``, for wildcards the compiled automaton's literal
   prefix is pushed and the regex filters the surviving dictionary rows.
   While the resident text pack serves the catalog (``bm25._scored``),
-  prefix / wildcard / regexp expansion reads its sorted term array in
-  the driver instead (a ``searchsorted`` prefix range, then the regex);
-  fuzzy and range expansion stay on the scan.
+  prefix expansion reads its sorted term array in the driver instead (a
+  ``searchsorted`` range); wildcard, regexp, fuzzy and range expansion
+  stay on the scan.
 - expansion is bounded by ``max_expansions`` (Lucene
   ``IndexSearcher.getMaxClauseCount``, default 1024) and EXCEEDING IT
   RAISES (``TooManyClauses``) — no silent truncation.
@@ -90,28 +90,15 @@ def expand_terms(
     """Enumerate dictionary terms matching (prefix[, regex]) — sorted,
     deduplicated across segments, bounded by ``max_expansions``.
 
-    While the resident text pack serves the catalog, the dictionary is
-    its sorted term array: the prefix is a ``searchsorted`` range and the
-    regex (``re.search``, as Spark's ``rlike`` finds) filters it in
-    order, with no Spark job. A regex Python cannot compile takes the
-    dictionary scan, and so does one with a ``[`` inside a character
-    class or a ``&&`` (Java's set union and intersection, which Python
-    reads as literals)."""
-    text = _text_pack(spark, cat)
-    vocab = None if text is None else text.vocab()
-    if regex is not None and ("&&" in regex or re.search(r"\[[^\]]*\[", regex)):
-        vocab = None
-    try:
-        rx = None if vocab is None or regex is None else re.compile(regex)
-    except re.error:
-        vocab = None
-    if vocab is not None:
-        out: list[str] = []
-        for t in vocab[np.searchsorted(vocab, prefix):]:
-            if not t.startswith(prefix) or len(out) > max_expansions:
-                break
-            if rx is None or rx.search(t):
-                out.append(t)
+    While the resident text pack serves the catalog, a prefix (no regex)
+    expands over its sorted term array — a ``searchsorted`` range — with
+    no Spark job. A regex (wildcard, regexp) takes the dictionary scan,
+    whose ``rlike`` keeps Java's regex dialect."""
+    text = _text_pack(spark, cat) if regex is None else None
+    if text is not None:
+        vocab = text.vocab()
+        a = np.searchsorted(vocab, prefix)
+        out = [t for t in vocab[a:a + max_expansions + 1] if t.startswith(prefix)]
     else:
         terms = cat.read(spark, "terms").select("term")
         if prefix:

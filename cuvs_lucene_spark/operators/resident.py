@@ -12,7 +12,8 @@ segments are filtered out of what the pack holds. Any other change (a
 rewrite, a compaction, a replayed epoch) reads the table again.
 
 A resident tier serves a catalog while its tables' committed bytes fit
-``RESIDENT_MAX_BYTES``; above it, the Spark tier runs.
+its budget (ANN: ``RESIDENT_MAX_BYTES``, BM25: ``TEXT_RESIDENT_MAX_BYTES``);
+above it, the Spark tier runs.
 """
 
 from __future__ import annotations
@@ -25,15 +26,21 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
-RESIDENT_MAX_BYTES = 768 << 20  # resident tiers serve while a catalog's
-                                # committed bytes fit (ANN: its tables; BM25:
-                                # segdata).
-# Measured on fixtures corpora on local[4]. ANN (generate_embeddings, 64-d):
-# the resident tier was faster in exact, ivf and graph mode at 105k, 420k and
-# 1.01M vectors (75.6, 304 and 734 MB committed). BM25
-# (generate_documents_pdf): faster at 100k and 400k docs (see CHANGES.md).
-# No crossover was found, since the Spark tier re-reads the tables per
-# query, so the budget is the largest measured ANN size, rounded up.
+RESIDENT_MAX_BYTES = 768 << 20  # ANN's resident tier serves while the ANN
+                                # tables' committed bytes fit
+# Measured on fixtures.generate_embeddings (64-d) on local[4]: the resident
+# tier was faster in exact, ivf and graph mode at 105k, 420k and 1.01M
+# vectors (75.6, 304 and 734 MB committed). No crossover was found, since the
+# Spark tier re-reads the tables per query, so the budget is the largest
+# measured size, rounded up.
+TEXT_RESIDENT_MAX_BYTES = 173 << 20  # BM25's resident tier serves while
+                                     # segdata's committed bytes fit
+# The largest text index measured (fixtures.generate_documents_pdf, local[4],
+# see CHANGES.md): 400k docs, 181.5 MB committed, read into a 339.8 MB pack
+# (about 1.85x) with a 2.28 GB driver peak RSS; the resident tier was faster
+# for every query kind there and at 100k docs. Above it the pack's size, its
+# fill (a toArrow() under spark.driver.maxResultSize) and the driver's memory
+# are unmeasured, so the budget stops at that size, rounded down.
 
 
 def _grown(old: tuple, new: tuple) -> tuple | None:
@@ -49,12 +56,15 @@ class Pack:
     """One catalog's driver-resident state. Each entry is read once, at
     its first use, and keyed by its table's own manifest entry, so a commit
     to another table (a delete's tombstones, a new sidecar) leaves it
-    valid. One lock serializes fills, so concurrent first queries read each
-    table once; a refill drops the superseded entry before reading."""
+    valid. Each entry name has its own lock, held while it is read, so
+    concurrent first queries read each table once, and a read of one
+    table does not hold up hits on the others; ``lock`` guards only the
+    two dicts. A refill drops the superseded entry before reading."""
 
     def __init__(self):
         self.lock = threading.Lock()
         self.entries: dict = {}  # name -> (key, value, nbytes)
+        self.locks: dict = {}  # name -> the lock held while it is read
 
     def get(self, name, key, fill, usable=lambda value: True, extend=None):
         """The entry ``name`` at ``key``; ``fill() -> (value, nbytes)``
@@ -65,10 +75,13 @@ class Pack:
         read is extended instead (``nbytes``: what the extension read;
         None: fill after all)."""
         with self.lock:
-            hit = self.entries.pop(name, None)
-            if hit is not None and hit[0] == key and usable(hit[1]):
-                self.entries[name] = hit
-                return hit[1]
+            entry_lock = self.locks.setdefault(name, threading.Lock())
+        with entry_lock:
+            with self.lock:
+                hit = self.entries.get(name)
+                if hit is not None and hit[0] == key and usable(hit[1]):
+                    return hit[1]
+                self.entries.pop(name, None)
             grown = None
             if hit is not None and extend is not None and usable(hit[1]):
                 snaps = _grown(hit[0], key)
@@ -77,7 +90,8 @@ class Pack:
                 value, nbytes = fill()
             else:
                 value, nbytes = grown[0], grown[1] + hit[2]
-            self.entries[name] = (key, value, nbytes)
+            with self.lock:
+                self.entries[name] = (key, value, nbytes)
             return value
 
     def drop(self, pred) -> None:

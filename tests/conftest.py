@@ -46,3 +46,4 @@ def spark_tier(monkeypatch):
     import cuvs_lucene_spark.operators.resident as R
 
     monkeypatch.setattr(R, "RESIDENT_MAX_BYTES", 0)
+    monkeypatch.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)

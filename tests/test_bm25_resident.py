@@ -1,13 +1,14 @@
 """The resident BM25 tier against the Spark tier.
 
 Every scored query and batch runs in the driver over the catalog's
-resident pack while segdata's committed bytes fit ``RESIDENT_MAX_BYTES``.
+resident pack while segdata's committed bytes fit
+``TEXT_RESIDENT_MAX_BYTES``.
 Both tiers compute the same live statistics and weights and run the same
 kernel under the same tie rule, so every query kind must return the same
 (ext_id, score) list bit for bit — with no filter, a set filter (a
 driver-built ``LocalRelation``) and a DataFrame filter, on a fresh index,
-after a delete and after an append and a merge. Forcing the budget to 0
-selects the Spark tier.
+after a delete and after an append and a merge. Forcing the budget to 0,
+or a pack read that fails, selects the Spark tier.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import cuvs_lucene_spark.operators.bm25 as B
+import cuvs_lucene_spark.operators.multiterm as M
 import cuvs_lucene_spark.operators.resident as R
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.frames import local_frame
@@ -96,7 +98,7 @@ def _both_tiers(spark, cat, cases, monkeypatch) -> None:
         m.setattr(B, "_spark_partials", lambda *a, **k: pytest.fail("took the Spark tier"))
         resident = _run(spark, cat, cases)
     with monkeypatch.context() as m:
-        m.setattr(R, "RESIDENT_MAX_BYTES", 0)
+        m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
         tier = _run(spark, cat, cases)
     for c in [c for c in cases if c[0] in ("matches", "batch")]:
         resident[c], tier[c] = sorted(resident[c]), sorted(tier[c])
@@ -184,14 +186,12 @@ def test_concurrent_first_queries_fill_the_pack_once(spark, cat):
 
 
 @pytest.mark.parametrize("args", [
-    {"prefix": ""}, {"prefix": "zzq"}, {"prefix": "s", "max_expansions": 3},
-    {"prefix": "s"}, {"prefix": "sp", "regex": "^sp.*k$"}, {"regex": "^.?a.*s$"},
-    {"prefix": "s", "regex": "^s[a-d[p-t]].*$"},  # a Java set union: the scan
+    {"prefix": ""}, {"prefix": "zzq"}, {"prefix": "s", "max_expansions": 3}, {"prefix": "s"},
 ])
 def test_expand_terms_tier_equality(spark, cat, monkeypatch, args):
-    """The resident dictionary expands a prefix / pattern to the same
-    sorted terms as the dictionary scan, and raises TooManyClauses alike
-    (an empty prefix and a prefix over ``max_expansions``)."""
+    """The resident dictionary expands a prefix to the same sorted terms
+    as the dictionary scan, and raises TooManyClauses alike (an empty
+    prefix and a prefix over ``max_expansions``)."""
 
     def expand():
         try:
@@ -199,12 +199,68 @@ def test_expand_terms_tier_equality(spark, cat, monkeypatch, args):
         except TooManyClauses as e:
             return str(e)
 
+    resident = expand()
     with monkeypatch.context() as m:
-        m.setattr(B, "_spark_partials", lambda *a, **k: pytest.fail("took the Spark tier"))
-        resident = expand()
-    with monkeypatch.context() as m:
-        m.setattr(R, "RESIDENT_MAX_BYTES", 0)
+        m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
         assert expand() == resident
+
+
+def test_regex_expansion_takes_the_scan(spark, cat, monkeypatch):
+    """A wildcard / regexp pattern is matched by Spark's ``rlike`` (Java's
+    dialect) even while the resident dictionary serves prefixes."""
+    monkeypatch.setattr(M, "_text_pack", lambda *a: pytest.fail("read the resident dictionary"))
+    got = expand_terms(spark, cat, prefix="s", regex="^s[a-d[p-t]].*$")  # a Java set union
+    assert got and all(t[1] in "abcdpqrst" for t in got)
+
+
+def test_failed_fill_takes_the_spark_tier(spark, cat, monkeypatch):
+    """A segdata read that fails (say, over ``spark.driver.maxResultSize``)
+    does not fail the query: the catalog answers on the Spark tier, with
+    the resident tier's results, and is not read again until segdata
+    changes."""
+    fresh = IndexCatalog(cat.root)
+    kinds = ["or", "boolean", "batch"]
+    want = {k: _rows(KINDS[k](spark, cat, None)) for k in kinds}
+    tried = []
+    real = R.read_arrow
+
+    def failing(spark_, cat_, table, *a, **kw):
+        if table == "segdata":
+            tried.append(table)
+            raise RuntimeError("Total size of serialized results is bigger than spark.driver.maxResultSize")
+        return real(spark_, cat_, table, *a, **kw)
+
+    monkeypatch.setattr(R, "read_arrow", failing)
+    got = {k: _rows(KINDS[k](spark, fresh, None)) for k in kinds}
+    assert expand_terms(spark, fresh, prefix="sp") == expand_terms(spark, cat, prefix="sp")
+    got["batch"], want["batch"] = sorted(got["batch"]), sorted(want["batch"])
+    assert got == want
+    assert tried == ["segdata"]
+
+
+def test_a_fill_holds_up_only_its_own_entry():
+    """While one entry is being read, a hit or a fill of another entry
+    (say, ``disk_bytes`` of a table) does not wait for it."""
+    pack = R.Pack()
+    started, release = threading.Event(), threading.Event()
+
+    def slow():
+        started.set()
+        assert release.wait(timeout=60)
+        return "segdata", 10
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        first = pool.submit(pack.get, "segdata", ("k",), slow)
+        try:
+            assert started.wait(timeout=60)
+            other = pool.submit(pack.get, ("bytes", "segdata"), ("k",), lambda: (5, 0))
+            assert other.result(timeout=10) == 5
+            assert pack.get(("bytes", "segdata"), ("k",), lambda: pytest.fail("refilled")) == 5
+        finally:
+            release.set()
+        assert first.result(timeout=60) == "segdata"
+    assert pack.get("segdata", ("k",), lambda: pytest.fail("refilled")) == "segdata"
+    assert pack.nbytes() == 10
 
 
 def test_tiers_equal_after_delete(spark, deleted, monkeypatch):

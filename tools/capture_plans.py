@@ -3,7 +3,7 @@ the dataset-only operators (no index needed), the ANN single-query
 modes (``ann_*``) over a small generated index built in a temp dir, and
 the BM25 query family (``bm25_*``) over an index of the sf0.001 corpus
 (the ``sf0.001`` sibling of ``SPARK_GRAFT_SF_DIR``) built in a temp dir.
-Index plans are the Spark tier's: the resident budget is set to 0.
+Index plans are the Spark tier's: the resident budgets are set to 0.
 
 Usage: python tools/capture_plans.py <before|after> [op ...]
 An op argument ``ann`` selects every ``ann_*`` plan, ``bm25`` every
@@ -169,7 +169,7 @@ def main():
     # BM25 query result is one LocalTableScan
     from cuvs_lucene_spark.operators import resident
 
-    resident.RESIDENT_MAX_BYTES = 0
+    resident.RESIDENT_MAX_BYTES = resident.TEXT_RESIDENT_MAX_BYTES = 0
     want_ann = not only or "ann" in only or any(o.startswith("ann_") for o in only)
     tmp = tempfile.mkdtemp(prefix="plan_capture_ann_")
     if want_ann:

@@ -10,7 +10,7 @@ comparison is bit for bit.
 
 The tier axis: ``--tier resident`` (the default budget, so every scenario
 the resident tier serves runs in the driver) or ``--tier spark`` (the
-resident budget set to 0, so every scenario runs on the Spark tier). A
+resident text budget, ``resident.TEXT_RESIDENT_MAX_BYTES``, set to 0, so every scenario runs on the Spark tier). A
 checkout without the resident tier dumps its Spark tier either way; diff
 each tier's dump against it and the two tiers against each other.
 
@@ -111,7 +111,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     if tier == "spark":
         from cuvs_lucene_spark.operators import resident
 
-        resident.RESIDENT_MAX_BYTES = 0
+        resident.TEXT_RESIDENT_MAX_BYTES = 0
     elif tier != "resident":
         raise ValueError(f"unknown tier {tier!r}; expected resident or spark")
     cfg = IndexConfig(rows_per_segment=64, block_size=16, prune_range=64, term_buckets=8)
