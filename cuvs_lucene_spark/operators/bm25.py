@@ -47,6 +47,7 @@ never as a post-filter of the top-k result.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from typing import NamedTuple
 
 import numpy as np
@@ -60,7 +61,7 @@ from cuvs_lucene_spark.config import IndexConfig, shuffle_partitions
 from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode
 from cuvs_lucene_spark.operators import resident as R
-from cuvs_lucene_spark.operators.segments import corpus_stats, term_bucket_py
+from cuvs_lucene_spark.operators.segments import corpus_stats, index_term_buckets, term_bucket_py
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
 
 SCORE_SCHEMA = "segment_id long, ext_id long, score double"
@@ -778,27 +779,56 @@ def _blobs(col) -> _Blobs:
     return _Blobs(off, np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8))
 
 
+def _find(keys: _Blobs, key: bytes) -> tuple[int, int]:
+    """The rows [lo, hi) of the sorted UTF-8 ``keys`` equal to ``key``: a
+    binary search over the byte slices, no per-row Python object. UTF-8
+    byte order is code point order, the order of Spark's and Arrow's
+    string sorts."""
+    rows = range(keys.off.size - 1)
+
+    def at(i: int) -> bytes:
+        return keys.data[keys.off[i]:keys.off[i + 1]].tobytes()
+
+    lo = bisect_left(rows, key, key=at)
+    return lo, bisect_right(rows, key, lo=lo, key=at)
+
+
+def _strings(keys: _Blobs) -> pa.Array:
+    """A ``_Blobs`` of UTF-8 keys as an Arrow string array (no copy)."""
+    return pa.Array.from_buffers(pa.large_string(), keys.off.size - 1,
+                                 [None, pa.py_buffer(keys.off), pa.py_buffer(keys.data)])
+
+
 class _Leaf(NamedTuple):
     """One segment in the resident pack: its norms, and its posting
-    blocks sorted by (term, block_id) with ``rows`` mapping each term to
-    its run of blocks."""
+    blocks sorted by (term, block_id). Its distinct terms are a sorted run
+    index: ``terms`` (UTF-8, ascending) and ``runs``, term ``i``'s blocks
+    being ``runs[i]:runs[i + 1]``."""
 
     dl: np.ndarray       # doc lengths (uint32), by local doc id
     dls: np.ndarray      # the same as float64
     ext_ids: np.ndarray  # int64, by local doc id
+    by_ext: np.ndarray   # local doc ids in ext_id order
     dl_sum: int
-    rows: dict           # term -> (first block, end block)
+    terms: _Blobs
+    runs: np.ndarray
     first_doc: np.ndarray
     n: np.ndarray        # postings per block
     deltas: _Blobs
     tfs: _Blobs
 
 
-def _leaf_postings(leaf: _Leaf, t: str) -> tuple[np.ndarray, np.ndarray]:
-    """All blocks of ``t`` → (doc ids ascending, tfs), one varint decode
-    per column: each block's first delta is absolute, so the running sum
-    restarts at every block."""
-    a, z = leaf.rows[t]
+def _run(leaf: _Leaf, t: str) -> tuple[int, int] | None:
+    """The blocks of ``t`` in ``leaf`` as (first, end), or None."""
+    lo, hi = _find(leaf.terms, t.encode())
+    return (int(leaf.runs[lo]), int(leaf.runs[lo + 1])) if hi > lo else None
+
+
+def _leaf_postings(leaf: _Leaf, run: tuple[int, int]) -> tuple[np.ndarray, np.ndarray]:
+    """One term's blocks ``run`` → (doc ids ascending, tfs), one varint
+    decode per column: each block's first delta is absolute, so the
+    running sum restarts at every block."""
+    a, z = run
     d = varint_decode(leaf.deltas.data[leaf.deltas.off[a]:leaf.deltas.off[z]])
     n = leaf.n[a:z]
     c = np.cumsum(d)
@@ -807,53 +837,74 @@ def _leaf_postings(leaf: _Leaf, t: str) -> tuple[np.ndarray, np.ndarray]:
     return docs, varint_decode(leaf.tfs.data[leaf.tfs.off[a]:leaf.tfs.off[z]])
 
 
+def _segment_runs(seg: np.ndarray, segs) -> dict[int, tuple[int, int]]:
+    """Each of ``segs`` → its rows [a, z) in the ascending ``seg`` column
+    ((0, 0) when it has none)."""
+    lo, hi = np.searchsorted(seg, segs, "left"), np.searchsorted(seg, segs, "right")
+    return {int(s): (int(a), int(z)) for s, a, z in zip(segs, lo, hi)}
+
+
 def _leaves(at: pa.Table) -> dict[int, _Leaf]:
     """segdata ``post`` + ``norms`` rows → {segment_id: leaf}; a segment
-    with no norms row has nothing to score (as on the Spark tier)."""
+    with no norms row has nothing to score (as on the Spark tier). The
+    (segment, term) groups are found by Arrow comparisons of adjacent
+    rows, so no Python string is made per term."""
     kind = at.column("kind")
     norms = at.filter(pc.equal(kind, "norms")).to_pydict()
     post = at.filter(pc.equal(kind, "post")).sort_by(
         [("segment_id", "ascending"), ("term", "ascending"), ("block_id", "ascending")]
     )
     seg = post.column("segment_id").to_numpy()
-    term = post.column("term").to_numpy()
+    term = post.column("term")
     first_doc = post.column("first_doc").to_numpy()
     n = post.column("n").to_numpy().astype(np.int64)
     deltas, tfs = _blobs(post.column("doc_deltas")), _blobs(post.column("tfs"))
     # one group per (segment, term): its blocks, in block order
-    starts = np.flatnonzero(np.concatenate(
-        ([True], (seg[1:] != seg[:-1]) | (term[1:] != term[:-1])))) if seg.size else seg
-    ends = np.append(starts[1:], seg.size)
-    gseg = seg[starts]
+    new = np.ones(seg.size, dtype=bool)
+    if seg.size > 1:
+        new[1:] = (seg[1:] != seg[:-1]) | pc.not_equal(term[1:], term[:-1]).to_numpy()
+    starts = np.flatnonzero(new)
+    bounds = np.append(starts, seg.size)
+    gterms = _blobs(term.take(pa.array(starts)))
+    groups = _segment_runs(seg[starts], norms["segment_id"])
     leaves = {}
     for s, blob_dl, blob_ext in zip(norms["segment_id"], norms["doc_deltas"], norms["tfs"]):
-        lo, hi = np.searchsorted(gseg, s, "left"), np.searchsorted(gseg, s, "right")
-        a, z = (int(starts[lo]), int(ends[hi - 1])) if lo < hi else (0, 0)
-        rows = dict(zip(term[starts[lo:hi]].tolist(),
-                        zip((starts[lo:hi] - a).tolist(), (ends[lo:hi] - a).tolist())))
+        lo, hi = groups[s]
+        a, z = int(bounds[lo]), int(bounds[hi])
         dl = np.frombuffer(blob_dl, np.uint32)
+        ext = np.frombuffer(blob_ext, np.int64)
         leaves[int(s)] = _Leaf(
-            dl, dl.astype(np.float64), np.frombuffer(blob_ext, np.int64),
-            int(dl.sum(dtype=np.int64)), rows, first_doc[a:z], n[a:z],
+            dl, dl.astype(np.float64), ext, np.argsort(ext, kind="stable"),
+            int(dl.sum(dtype=np.int64)), _Blobs(gterms.off[lo:hi + 1], gterms.data),
+            bounds[lo:hi + 1] - a, first_doc[a:z], n[a:z],
             _Blobs(deltas.off[a:z + 1], deltas.data), _Blobs(tfs.off[a:z + 1], tfs.data),
         )
     return leaves
 
 
-class _Text:
-    """The pack's ``segdata`` entry: one leaf per live segment, and the
-    sorted dictionary of their terms — the ``terms`` view's distinct
-    terms — built on first use."""
+class _Text(dict):
+    """The pack's ``segdata`` entry: {segment_id: leaf} for every live
+    segment, and the sorted dictionary of their terms — the ``terms``
+    view's distinct terms — with each term's length in code points,
+    built on first use."""
 
-    def __init__(self, leaves: dict[int, _Leaf]):
-        self.leaves = leaves
-        self._vocab = None
+    _vocab = None
+
+    def _build(self) -> tuple[np.ndarray, np.ndarray]:
+        if self._vocab is None:
+            terms = pc.unique(pa.chunked_array(
+                [_strings(leaf.terms) for leaf in self.values()], pa.large_string()))
+            terms = terms.take(pc.sort_indices(terms))
+            self._vocab = (terms.to_numpy(zero_copy_only=False),
+                           pc.utf8_length(terms).to_numpy().astype(np.int64))
+        return self._vocab
 
     def vocab(self) -> np.ndarray:
-        if self._vocab is None:
-            terms = set().union(*(leaf.rows for leaf in self.leaves.values()))
-            self._vocab = np.array(sorted(terms), dtype=object)
-        return self._vocab
+        return self._build()[0]
+
+    def vocab_lengths(self) -> np.ndarray:
+        """Each ``vocab()`` term's length in code points (Spark's ``length``)."""
+        return self._build()[1]
 
 
 _TEXT_COLS = ("segment_id", "kind", "term", "block_id", "first_doc", "n", "doc_deltas", "tfs")
@@ -869,17 +920,50 @@ def _text_fits(cat: IndexCatalog) -> dict | None:
     if view.get("of") != "segdata" or not (tables.get("segdata") or {}).get("snapshot"):
         return None
     if R.disk_bytes(cat, "segdata", tables) > R.TEXT_RESIDENT_MAX_BYTES:
-        R.pack(cat).drop(lambda name, v: name in ("segdata", "tombstones"))
+        R.pack(cat).drop(lambda name, v: name in ("segdata", "tombstones", "positions"))
         return None
     return tables
 
 
-def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
-    """The catalog's resident text pack, read on first use (None when it
-    does not serve, see :func:`_text_fits`). A read that fails (say, one
-    over ``spark.driver.maxResultSize`` or the driver's memory) leaves
-    None in the pack, so the catalog takes the Spark tier until segdata
+def _leaf_entry(spark: SparkSession, cat: IndexCatalog, table: str, tables: dict, build,
+                prep=None, wrap=dict):
+    """The pack entry of ``table``: ``wrap({segment_id: leaf})``, the
+    leaves ``build(arrow table)`` makes of one ``toArrow()`` read (after
+    ``prep``) at first use, extended by the directories a commit appends
+    (the dropped segments filtered out in the driver). A read that fails
+    (say, one over ``spark.driver.maxResultSize`` or the driver's memory)
+    leaves None, so the catalog takes the Spark tier until the table
     next changes."""
+
+    def read():
+        try:
+            at = R.read_arrow(spark, cat, table, prep)
+            return wrap(build(at)), at.nbytes
+        except Exception:
+            return None, 0
+
+    def extend(value, snaps: tuple, dropped: tuple):
+        if value is None:
+            return None
+        leaves = {s: v for s, v in value.items() if s not in set(dropped)}
+        if not snaps:
+            return wrap(leaves), 0
+        try:
+            at = R.read_arrow(spark, cat, table, prep, snaps, dropped)
+            new = build(at)
+        except Exception:
+            return None
+        if new.keys() & leaves.keys():
+            return None  # a segment in two directories: read the table again
+        return wrap({**leaves, **new}), at.nbytes
+
+    return R.pack(cat).get(table, R.entry_key(cat, table, tables), read, extend=extend)
+
+
+def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
+    """The catalog's resident text pack, segdata's ``post`` and ``norms``
+    rows read on first use (see :func:`_leaf_entry`); None when it does
+    not serve (see :func:`_text_fits`) or could not be read."""
     tables = _text_fits(cat)
     if tables is None:
         return None
@@ -887,29 +971,7 @@ def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
     def prep(df: DataFrame) -> DataFrame:
         return df.filter(F.col("kind").isin("post", "norms")).select(*_TEXT_COLS)
 
-    def read():
-        try:
-            at = R.read_arrow(spark, cat, "segdata", prep)
-            return _Text(_leaves(at)), at.nbytes
-        except Exception:
-            return None, 0
-
-    def extend(text: _Text | None, snaps: tuple, dropped: tuple):
-        if text is None:
-            return None
-        leaves = {s: v for s, v in text.leaves.items() if s not in set(dropped)}
-        if not snaps:
-            return _Text(leaves), 0
-        try:
-            at = R.read_arrow(spark, cat, "segdata", prep, snaps, dropped)
-            new = _leaves(at)
-        except Exception:
-            return None
-        if new.keys() & leaves.keys():
-            return None  # a segment in two directories: read the table again
-        return _Text({**leaves, **new}), at.nbytes
-
-    return R.pack(cat).get("segdata", R.entry_key(cat, "segdata", tables), read, extend=extend)
+    return _leaf_entry(spark, cat, "segdata", tables, _leaves, prep, _Text)
 
 
 def _resident_text(spark: SparkSession, cat: IndexCatalog):
@@ -940,8 +1002,8 @@ def _pack_stats(text: _Text, tomb: np.ndarray | None, terms: list[str]):
     leaf's {term: (docs, tfs)}, each leaf's tombstoned local ids or None,
     N, avgdl, {term: df}): N and the dl sum count the docs not tombstoned,
     avgdl is their integer sum ÷ N, and df counts live postings."""
-    leaves = list(text.leaves.values())
-    post = [{t: _leaf_postings(leaf, t) for t in terms if t in leaf.rows} for leaf in leaves]
+    leaves = list(text.values())
+    post = [{t: _leaf_postings(leaf, r) for t in terms if (r := _run(leaf, t))} for leaf in leaves]
     if tomb is None:
         dead = [None] * len(leaves)
         n = sum(leaf.dl.size for leaf in leaves)
@@ -986,7 +1048,7 @@ def _resident_scored(
         for t in live & p.keys():
             docs, tfs = p[t]
             if visited_limit is not None:
-                a, z = leaf.rows[t]
+                a, z = _run(leaf, t)
                 m = int(leaf.n[a:z][leaf.first_doc[a:z] < visited_limit].sum())
                 docs, tfs = docs[:m], tfs[:m]
             if docs.size:
@@ -1140,9 +1202,11 @@ def _tomb_aux(spark: SparkSession, cat: IndexCatalog, pack, schema: str) -> Data
 
 
 def _query_postings(spark: SparkSession, cat: IndexCatalog, terms: list[str], cfg: IndexConfig) -> DataFrame:
-    """Postings scan for the query terms: term_bucket partition pruning +
-    parquet row-group pruning on the sorted ``term`` column."""
-    buckets = sorted({term_bucket_py(t, cfg.term_buckets) for t in terms})
+    """Postings scan for the query terms: term_bucket partition pruning
+    (with the index's own bucket count) + parquet row-group pruning on the
+    sorted ``term`` column."""
+    n_buckets = index_term_buckets(cat, cfg)
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     p = cat.read(spark, "postings")
     return p.filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms)))
 

@@ -66,7 +66,8 @@ def highlight(
 
     def first_hit(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = np.sort(
-            np.concatenate([_decode_positions(r) for r in pdf.itertuples()])
+            np.concatenate([_decode_positions(r.ext_ids, r.counts, r.pos_blob)
+                            for r in pdf.itertuples()])
         )
         if keys.size == 0:
             return pd.DataFrame({"ext_id": [], "first_pos": []}).astype(

@@ -14,8 +14,9 @@ semantics mirrored here:
   ``StringStartsWith``, for wildcards the compiled automaton's literal
   prefix is pushed and the regex filters the surviving dictionary rows.
   While the resident text pack serves the catalog (``bm25._scored``),
-  prefix expansion reads its sorted term array in the driver instead (a
-  ``searchsorted`` range); wildcard, regexp, fuzzy and range expansion
+  prefix and fuzzy expansion read its sorted term array in the driver
+  instead (a ``searchsorted`` range, then for fuzzy the length window and
+  the batch edit-distance kernel); wildcard, regexp and range expansion
   stay on the scan.
 - expansion is bounded by ``max_expansions`` (Lucene
   ``IndexSearcher.getMaxClauseCount``, default 1024) and EXCEEDING IT
@@ -33,18 +34,24 @@ semantics mirrored here:
   _DISTANCE), the first ``prefix_length`` chars match verbatim and edits
   are measured on the suffix, ``transpositions=True`` counts an adjacent
   swap as ONE edit (Lucene's default, optimal-string-alignment
-  semantics). Pruning is pushed: exact-prefix StartsWith + a ±maxEdits
-  length window reach the parquet dictionary scan, and a JVM-side
-  ``levenshtein(_, _, threshold)`` superset cut (plain distance ≤
-  2·maxEdits bounds OSA ≤ maxEdits) runs before the exact distance.
+  semantics). Every exact OSA distance comes from one numpy kernel,
+  :func:`_edit_distances` (the DP rows of a whole batch of candidates at
+  once). On the resident tier it runs in the driver over the dictionary's
+  prefix range and ±maxEdits length window (Levenshtein too, without
+  transpositions). On the Spark tier, exact-prefix StartsWith + the length
+  window reach the parquet dictionary scan, and a JVM-side
+  ``levenshtein(_, _, threshold)`` (exact without transpositions; with
+  them a superset cut — plain distance ≤ 2·maxEdits bounds OSA ≤
+  maxEdits) runs before the kernel's pandas UDF.
 - ``range_docs`` mirrors TermRangeQuery: binary-UTF8 lexicographic
   bounds (open end = None), both pushed to the dictionary scan.
 - ``regexp_docs`` mirrors RegexpQuery: anchored match over the
   dictionary (Java regex syntax as Spark ``rlike``).
 
 100 TB shape: the dictionary scan is pruned + pushed; the expanded term
-list (≤ max_expansions strings) is the only driver-side state; matching
-and scoring reuse the pruned-postings paths.
+list (≤ max_expansions strings) is the only driver-side state beyond the
+resident pack, which holds the dictionary only while the text index fits
+its budget; matching and scoring reuse the pruned-postings paths.
 """
 
 from __future__ import annotations
@@ -96,9 +103,8 @@ def expand_terms(
     whose ``rlike`` keeps Java's regex dialect."""
     text = _text_pack(spark, cat) if regex is None else None
     if text is not None:
-        vocab = text.vocab()
-        a = np.searchsorted(vocab, prefix)
-        out = [t for t in vocab[a:a + max_expansions + 1] if t.startswith(prefix)]
+        a, z = _prefix_range(text.vocab(), prefix)
+        out = text.vocab()[a:min(z, a + max_expansions + 1)].tolist()
     else:
         terms = cat.read(spark, "terms").select("term")
         if prefix:
@@ -156,7 +162,7 @@ def _osa(a: str, b: str, cap: int) -> int:
     """Optimal-string-alignment distance (Levenshtein + adjacent
     transposition as ONE edit — Lucene ``transpositions=true``
     semantics), capped: returns cap+1 as soon as distance must exceed
-    ``cap``."""
+    ``cap``. The scalar definition :func:`_edit_distances` batches."""
     la, lb = len(a), len(b)
     if abs(la - lb) > cap:
         return cap + 1
@@ -178,6 +184,61 @@ def _osa(a: str, b: str, cap: int) -> int:
     return prev[lb]
 
 
+def _edit_distances(
+    terms, q: str, cap: int, transpositions: bool = True, skip: int = 0
+) -> np.ndarray:
+    """:func:`_osa` of every term (less its first ``skip`` code points)
+    against ``q``, in one batch: the DP rows of all candidates at once,
+    over a code point matrix. Row i is a (candidates × len(q)+1) array
+    whose left-to-right ``cur[j-1] + 1`` dependency is one running
+    minimum: cur[j] − j = min over j' ≤ j of (base[j'] − j'). A
+    candidate leaves the batch when it is done or when its row minimum
+    passes ``cap`` (then cap+1, as :func:`_osa` returns). Without
+    ``transpositions`` it is the plain Levenshtein distance, capped alike."""
+    u = np.asarray(terms, dtype=str)
+    cps = u.view(np.uint32).reshape(u.size, u.dtype.itemsize // 4)[:, skip:]
+    la = np.char.str_len(u).astype(np.int64) - skip
+    b = np.array([ord(c) for c in q], dtype=np.uint32)
+    lb = b.size
+    out = np.full(u.size, cap + 1, np.int64)
+    fits = np.abs(la - lb) <= cap
+    out[fits & (la == 0)] = lb
+    act = np.flatnonzero(fits & (la > 0))
+    j = np.arange(lb + 1, dtype=np.int32)
+    prev = np.broadcast_to(j, (act.size, lb + 1))
+    prev2 = prev
+    i = 0
+    while act.size:
+        i += 1
+        a = cps[act, i - 1]
+        base = np.empty((act.size, lb + 1), np.int32)
+        base[:, 0] = i
+        np.minimum(prev[:, 1:] + 1, prev[:, :-1] + (a[:, None] != b), out=base[:, 1:])
+        if transpositions and i > 1 and lb > 1:
+            swap = (a[:, None] == b[:-1]) & (cps[act, i - 2][:, None] == b[1:])
+            base[:, 2:] = np.where(swap, np.minimum(base[:, 2:], prev2[:, :-2] + 1), base[:, 2:])
+        cur = np.minimum.accumulate(base - j, axis=1) + j
+        live = cur.min(axis=1) <= cap
+        done = live & (la[act] == i)
+        out[act[done]] = cur[done, lb]
+        keep = live & ~done
+        act, prev, prev2 = act[keep], cur[keep], prev[keep]
+    return out
+
+
+def _prefix_range(vocab: np.ndarray, prefix: str) -> tuple[int, int]:
+    """The rows [a, z) of the sorted ``vocab`` that start with ``prefix``."""
+    a = int(np.searchsorted(vocab, prefix))
+    if not prefix:
+        return a, vocab.size
+    if prefix[-1] != "\U0010ffff":
+        return a, int(np.searchsorted(vocab, prefix[:-1] + chr(ord(prefix[-1]) + 1)))
+    z = a
+    while z < vocab.size and vocab[z].startswith(prefix):
+        z += 1
+    return a, z
+
+
 def fuzzy_expand(
     spark: SparkSession,
     cat,
@@ -188,13 +249,19 @@ def fuzzy_expand(
     max_expansions: int = MAX_EXPANSIONS,
 ) -> list[str]:
     """FuzzyQuery rewrite: dictionary terms within ``max_edits`` of
-    ``term``. The first ``min(prefix_length, len(term))`` chars match
-    verbatim (pushed StartsWith) and the distance is measured on the
-    suffixes, exactly as Lucene's FuzzyQuery builds its automaton past
-    the non-fuzzy prefix. Pruning: pushed length window, then
-    JVM-side ``levenshtein`` (exact for ``transpositions=False``; a
-    ≤ 2·max_edits superset cut before the exact OSA pass otherwise —
-    one transposition costs at most two plain edits)."""
+    ``term``, sorted. The first ``min(prefix_length, len(term))`` chars
+    match verbatim and the distance is measured on the suffixes, exactly
+    as Lucene's FuzzyQuery builds its automaton past the non-fuzzy prefix.
+
+    While the resident text pack serves the catalog, the expansion runs
+    in the driver over its sorted dictionary: the prefix's ``searchsorted``
+    range, the ±max_edits window over the code point lengths, then
+    :func:`_edit_distances` over the survivors — no Spark job. Otherwise
+    the dictionary scan: pushed StartsWith and length window, then
+    ``levenshtein(_, _, threshold)`` in the JVM (exact for
+    ``transpositions=False``; a ≤ 2·max_edits superset cut before the
+    exact OSA pass otherwise — one transposition costs at most two plain
+    edits), the OSA pass being :func:`_edit_distances` in a pandas UDF."""
     if not 0 <= max_edits <= MAX_FUZZY_EDITS:
         raise ValueError(
             f"max_edits must be in [0, {MAX_FUZZY_EDITS}] (Lucene "
@@ -203,9 +270,34 @@ def fuzzy_expand(
     term = str(term)
     pl = min(max(0, prefix_length), len(term))
     pfx, suffix = term[:pl], term[pl:]
+    text = _text_pack(spark, cat)
+    if text is not None:
+        vocab = text.vocab()
+        a, z = _prefix_range(vocab, pfx)
+        near = np.abs(text.vocab_lengths()[a:z] - len(term)) <= max_edits
+        cand = vocab[a:z][near]
+        if max_edits == 0:
+            cand = cand[cand == term]
+        elif cand.size:
+            cand = cand[_edit_distances(cand, suffix, max_edits, transpositions, pl) <= max_edits]
+        out = cand[:max_expansions + 1].tolist()
+    else:
+        out = [r["term"] for r in _fuzzy_scan(spark, cat, term, max_edits, pl, transpositions)
+               .limit(max_expansions + 1).collect()]
+    if len(out) > max_expansions:
+        raise TooManyClauses(
+            f"fuzzy term expands to > {max_expansions} dictionary terms"
+        )
+    return out
+
+
+def _fuzzy_scan(spark, cat, term: str, max_edits: int, pl: int, transpositions: bool) -> DataFrame:
+    """The Spark tier of :func:`fuzzy_expand`: the matching dictionary
+    terms, distinct and sorted."""
+    suffix = term[pl:]
     cand = cat.read(spark, "terms").select("term")
-    if pfx:
-        cand = cand.filter(F.col("term").startswith(pfx))
+    if pl:
+        cand = cand.filter(F.col("term").startswith(term[:pl]))
     cand = cand.filter(
         F.length("term").between(len(term) - max_edits, len(term) + max_edits)
     )
@@ -214,28 +306,28 @@ def fuzzy_expand(
     else:
         sfx = F.col("term").substr(F.lit(pl + 1), F.length("term"))
         if transpositions:
-            import pandas as pd  # noqa: F401  (pandas_udf transport)
-            from pyspark.sql.functions import pandas_udf
-
             cand = cand.filter(
                 F.levenshtein(sfx, F.lit(suffix), 2 * max_edits) >= 0
             )
-
-            @pandas_udf("int")
-            def osa_dist(s):
-                return s.map(lambda x: _osa(x, suffix, max_edits))
-
-            cand = cand.filter(osa_dist(sfx) <= max_edits)
+            cand = cand.filter(_osa_udf(suffix, max_edits)(sfx) <= max_edits)
         else:
             cand = cand.filter(
                 F.levenshtein(sfx, F.lit(suffix), max_edits) >= 0
             )
-    rows = cand.distinct().orderBy("term").limit(max_expansions + 1).collect()
-    if len(rows) > max_expansions:
-        raise TooManyClauses(
-            f"fuzzy term expands to > {max_expansions} dictionary terms"
-        )
-    return [r["term"] for r in rows]
+    return cand.distinct().orderBy("term")
+
+
+def _osa_udf(q: str, cap: int):
+    """:func:`_edit_distances` against ``q`` as an Arrow-batched pandas
+    UDF (OSA distance, cap+1 past ``cap``)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("int")
+    def osa_dist(s):
+        return pd.Series(_edit_distances(s.to_numpy(object), q, cap).astype(np.int32))
+
+    return osa_dist
 
 
 def fuzzy_docs(
@@ -333,18 +425,10 @@ def spell_suggest(
     if transpositions:
         # superset cut JVM-side (one swap costs ≤ 2 plain edits), exact
         # OSA distance in an Arrow-batched pandas UDF
-        import pandas as pd  # noqa: F401  (pandas_udf transport)
-        from pyspark.sql.functions import pandas_udf
-
         cand = cand.filter(
             F.levenshtein(F.col("term"), F.lit(q), 2 * max_edits) >= 0
         )
-
-        @pandas_udf("int")
-        def osa_dist(s):
-            return s.map(lambda x: _osa(x, q, max_edits))
-
-        cand = cand.withColumn("distance", osa_dist(F.col("term")))
+        cand = cand.withColumn("distance", _osa_udf(q, max_edits)(F.col("term")))
     else:
         cand = cand.withColumn(
             "distance", F.levenshtein(F.col("term"), F.lit(q))
@@ -358,20 +442,11 @@ def spell_suggest(
         )
         dfs = _live_df_frame(spark, cat, postings)
     else:
-        # the SAME edit-window predicate as `cand`, applied BEFORE the
-        # aggregate: Catalyst cannot push the join filter through a
-        # groupBy, so without this the df aggregate would shuffle the
-        # entire vocabulary (results unchanged — the join keeps only
-        # cand terms either way, and the filter is a cand superset)
-        dfs = (
-            cat.read(spark, "terms")
-            .filter(
-                F.length("term").between(len(q) - max_edits, len(q) + max_edits)
-            )
-            .filter(F.col("term") != q)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
+        # constraint inference carries `cand`'s edit window (length range,
+        # term != q) across the join on term and below this aggregate:
+        # the captured plan filters this dictionary scan exactly as when
+        # the window was also written here
+        dfs = cat.read(spark, "terms").groupBy("term").agg(F.sum("df").alias("df"))
     return (
         cand.join(dfs, "term")
         .filter(F.col("df") > 0)

@@ -14,31 +14,50 @@ GPUKnnFloatVectorQuery.java:21-58). Spark-first equivalent:
   (``varint_byte_lengths``) — no vocabulary-sized re-encode loop.
 - ``phrase_match``: pruned scan of the L phrase terms' rows (pushed
   ``term IN``), per-segment vectorized anchor intersection
-  (key = doc·2²⁰ + shifted position, ``np.intersect1d`` per slot) →
-  (ext_id, phrase_tf). No corpus scan, no driver-side doc state.
-  A slot may be a LIST of terms (Lucene ``MultiPhraseQuery`` — the slot
-  matches any member, e.g. a prefix-expanded position): the slot's key
-  sets union before the intersection.
+  (:func:`_phrase_segment`: key = doc·2²⁰ + shifted position,
+  ``np.intersect1d`` per slot) → (ext_id, phrase_tf). No corpus scan, no
+  driver-side doc state. A slot may be a LIST of terms (Lucene
+  ``MultiPhraseQuery`` — the slot matches any member, e.g. a
+  prefix-expanded position): the slot's key sets union before the
+  intersection.
 - ``phrase_topk``: Lucene ``PhraseWeight`` scoring — idf is the SUM of
   the constituent terms' BM25 idfs (duplicated slots count twice, as
   ``PhraseQuery.getTerms()`` feeds every slot's termStats into
   ``BM25Similarity``), tf is the phrase frequency, norm is the full doc
-  length. Stats come from the live-doc machinery bm25_topk uses.
+  length. Stats come from the live-doc machinery bm25_topk uses. Two
+  tiers, bit for bit the same:
+
+  - resident: as Lucene runs ``PhraseQuery`` per leaf inside the serving
+    process, the catalog's pack (``resident.Pack``) holds the sidecar's
+    rows as one ``positions`` entry beside segdata's leaves — per
+    segment, byte-offset columns with a sorted term index, read by one
+    ``toArrow()`` and extended by appended directories. Each live leaf
+    runs :func:`_phrase_segment` in the driver, tombstoned docs drop,
+    ``dl`` comes from the leaf's norms, and the top-k is one
+    ``LocalRelation``: a warm phrase query runs no Spark job. It serves
+    while the resident text tier does and segdata's and the sidecar's
+    committed bytes together fit ``TEXT_RESIDENT_MAX_BYTES``;
+  - Spark: ``phrase_match``'s ``applyInPandas``, joined with ``doc_map``
+    and sorted.
 
 Positions are an OPT-IN sidecar (like Lucene's per-field IndexOptions):
 ``build_positions`` derives them from the source docs + the committed
 ``doc_map``; after a merge/append changes the segment set, phrase queries
 raise ``PositionsStaleError`` until ``refresh_positions`` re-derives the
 missing segments (group-wise incremental — untouched segments are never
-re-read; dead segments' rows are ignored via a live-segment semi-join).
+re-read; dead segments' rows are ignored via a live-segment semi-join, or
+on the resident tier by visiting only live leaves). ``span_near``,
+``span_first`` and ``highlight`` run on Spark only.
 """
 
 from __future__ import annotations
 
 import itertools
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,7 +65,19 @@ from ..config import IndexConfig
 from ..frames import local_frame
 from ..functions.tokenize import tokenize_py
 from ..functions.varint import varint_byte_lengths, varint_decode, varint_encode
-from .bm25 import _live_stats_and_df, _query_postings, idf
+from . import resident as R
+from .bm25 import (
+    _Blobs,
+    _blobs,
+    _find,
+    _leaf_entry,
+    _live_stats_and_df,
+    _pack_stats,
+    _query_postings,
+    _resident_text,
+    _segment_runs,
+    idf,
+)
 
 POS_SCHEMA = (
     "segment_id long, term string, ext_ids binary, counts binary, pos_blob binary"
@@ -137,11 +168,12 @@ def build_positions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _decode_positions(row) -> np.ndarray:
-    """One positions row → keys = ext·SHIFT + absolute position, ascending."""
-    ext = np.frombuffer(row.ext_ids, dtype=np.int64)
-    counts = varint_decode(row.counts)
-    vals = varint_decode(row.pos_blob)
+def _decode_positions(ext_ids, counts, pos_blob) -> np.ndarray:
+    """One positions row's blobs → keys = ext·SHIFT + absolute position,
+    ascending."""
+    ext = np.frombuffer(ext_ids, dtype=np.int64)
+    counts = varint_decode(counts)
+    vals = varint_decode(pos_blob)
     if vals.size == 0:
         return np.empty(0, np.int64)
     cum = np.cumsum(vals)
@@ -149,6 +181,57 @@ def _decode_positions(row) -> np.ndarray:
     base = cum[starts] - vals[starts]
     absolute = cum - np.repeat(base, counts)
     return np.repeat(ext, counts) * POS_SHIFT + absolute
+
+
+def _term_keys(parts: list[np.ndarray]) -> np.ndarray:
+    """One term's decoded rows in a segment → its keys, ascending and
+    unique: np.unique (not a sort) when there are several rows, so a
+    duplicated sidecar row — e.g. a crash-repair overlap — cannot break
+    the ``assume_unique`` intersections."""
+    keys = np.concatenate(parts)
+    return np.unique(keys) if len(parts) > 1 else keys
+
+
+def _udf_by_term(pdf: pd.DataFrame) -> dict[str, np.ndarray]:
+    """A segment's positions rows (one UDF group) → {term: keys}."""
+    return {
+        term: _term_keys([_decode_positions(r.ext_ids, r.counts, r.pos_blob)
+                          for r in grp.itertuples()])
+        for term, grp in pdf.groupby("term")
+    }
+
+
+def _phrase_segment(by_term: dict[str, np.ndarray], slots: list[list[str]]):
+    """The phrase kernel of one segment → (ext_ids ascending, phrase_tf).
+
+    Decoded keys of each term, unioned per slot (a ``MultiPhraseQuery``
+    slot matches any member), then for slot j the anchor sets keyed
+    ext·SHIFT + (pos − j) are intersected — all numpy, no per-doc loop.
+    Both tiers call it: the Spark tier's UDF per segment group, the
+    resident tier per leaf."""
+    empty = np.empty(0, np.int64)
+    anchors = None
+    for j, slot_terms in enumerate(slots):
+        present = [by_term[t] for t in slot_terms if t in by_term]
+        if not present:
+            return empty, empty
+        if len(present) == 1:
+            keys = present[0]
+        else:
+            # union slot (MultiPhraseQuery): distinct terms can't share
+            # a (doc, position) key, so the union stays duplicate-free
+            keys = np.unique(np.concatenate(present))
+        if j:
+            shifted = keys - j
+            # a shifted position must stay inside its own doc's space
+            shifted = shifted[(keys % POS_SHIFT) >= j]
+            anchors = np.intersect1d(anchors, shifted, assume_unique=True)
+        else:
+            anchors = keys
+        if anchors.size == 0:
+            return empty, empty
+    docs, tfs = np.unique(anchors // POS_SHIFT, return_counts=True)
+    return docs, tfs.astype(np.int64)
 
 
 def _live_segs(spark: SparkSession, cat) -> DataFrame:
@@ -316,42 +399,8 @@ def phrase_match(
     rows = _phrase_rows(spark, cat, uniq)
 
     def match(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term: dict[str, np.ndarray] = {}
-        for term, grp in pdf.groupby("term"):
-            parts = [_decode_positions(r) for r in grp.itertuples()]
-            keys = np.concatenate(parts)
-            if len(parts) > 1:
-                # np.unique (not sort): a duplicated sidecar row — e.g. a
-                # crash-repair overlap — must not break assume_unique below
-                keys = np.unique(keys)
-            by_term[term] = keys
-        empty = pd.DataFrame({"ext_id": [], "phrase_tf": []}).astype(
-            {"ext_id": "int64", "phrase_tf": "int64"}
-        )
-        anchors = None
-        for j, slot_terms in enumerate(slots):
-            present = [by_term[t] for t in slot_terms if t in by_term]
-            if not present:
-                return empty
-            if len(present) == 1:
-                keys = present[0]
-            else:
-                # union slot (MultiPhraseQuery): distinct terms can't share
-                # a (doc, position) key, so the union stays duplicate-free
-                keys = np.unique(np.concatenate(present))
-            if j:
-                shifted = keys - j
-                # a shifted position must stay inside its own doc's space
-                shifted = shifted[(keys % POS_SHIFT) >= j]
-                anchors = np.intersect1d(anchors, shifted, assume_unique=True)
-            else:
-                anchors = keys
-            if anchors.size == 0:
-                break
-        if anchors is None or anchors.size == 0:
-            return empty
-        docs, tfs = np.unique(anchors // POS_SHIFT, return_counts=True)
-        return pd.DataFrame({"ext_id": docs, "phrase_tf": tfs.astype(np.int64)})
+        docs, tfs = _phrase_segment(_udf_by_term(pdf), slots)
+        return pd.DataFrame({"ext_id": docs, "phrase_tf": tfs})
 
     out = rows.groupby("segment_id").applyInPandas(
         lambda p: match(p), "ext_id long, phrase_tf long"
@@ -359,6 +408,95 @@ def phrase_match(
     if cat.exists("tombstones"):
         out = out.join(cat.read(spark, "tombstones"), "ext_id", "left_anti")
     return out
+
+
+class _PosLeaf(NamedTuple):
+    """One segment's positions rows in the resident pack, sorted by term
+    (a duplicated row repeats its term): each column a ``_Blobs``."""
+
+    terms: _Blobs  # UTF-8
+    ext_ids: _Blobs
+    counts: _Blobs
+    pos_blob: _Blobs
+
+
+def _pos_leaves(at: pa.Table) -> dict[int, _PosLeaf]:
+    """positions rows → {segment_id: leaf}, no per-row Python object."""
+    at = at.sort_by([("segment_id", "ascending"), ("term", "ascending")])
+    seg = at.column("segment_id").to_numpy()
+    cols = [_blobs(at.column(c)) for c in ("term", "ext_ids", "counts", "pos_blob")]
+    return {s: _PosLeaf(*(_Blobs(c.off[a:z + 1], c.data) for c in cols))
+            for s, (a, z) in _segment_runs(seg, np.unique(seg)).items()}
+
+
+def _resident_positions(spark: SparkSession, cat):
+    """(text pack, tombstones, positions entry) when a phrase query is
+    served in the driver: the resident text tier serves
+    (:func:`bm25._resident_text`), and segdata's and the sidecar's
+    committed bytes together fit ``TEXT_RESIDENT_MAX_BYTES`` — the driver
+    then never holds more than was measured. The entry is
+    {segment_id: :class:`_PosLeaf`}, read and extended as segdata's
+    (:func:`bm25._leaf_entry`: one ``toArrow()``, then the directories an
+    epoch or ``refresh_positions`` appends). None otherwise — no sidecar
+    included, the Spark tier raising its error — and after a read that
+    failed, until the sidecar next changes."""
+    resident = _resident_text(spark, cat)
+    if resident is None or not cat.exists("positions"):
+        return None
+    tables = cat.read_manifest()["tables"]
+    if (R.disk_bytes(cat, "segdata", tables) + R.disk_bytes(cat, "positions", tables)
+            > R.TEXT_RESIDENT_MAX_BYTES):
+        R.pack(cat).drop(lambda name, v: name == "positions")
+        return None
+    pos = _leaf_entry(spark, cat, "positions", tables, _pos_leaves)
+    return None if pos is None else (*resident, pos)
+
+
+def _row(blobs: _Blobs, i: int) -> np.ndarray:
+    return blobs.data[blobs.off[i]:blobs.off[i + 1]]
+
+
+def _resident_phrase(
+    spark: SparkSession, text, tomb, pos: dict, slots: list[list[str]],
+    idf_sum: float, avgdl: float, k: int, cfg: IndexConfig,
+) -> DataFrame:
+    """The resident phrase tier: :func:`_phrase_segment` per live leaf
+    over the pack's positions rows, tombstoned docs dropped, ``dl`` from
+    the leaf's norms, scored in the Spark tier's float64 operation order,
+    then the (score desc, ext_id asc) top-k → one ``LocalRelation``."""
+    if any(s not in pos for s in text):
+        raise PositionsStaleError(
+            "positions sidecar missing live segments — "
+            "run refresh_positions(spark, cat, docs)"
+        )
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    keys = {t: t.encode() for s in slots for t in s}
+    exts, scores = [], []
+    for s, leaf in text.items():
+        pl = pos[s]
+        by_term = {}
+        for t, key in keys.items():
+            lo, hi = _find(pl.terms, key)
+            if hi > lo:
+                by_term[t] = _term_keys([
+                    _decode_positions(_row(pl.ext_ids, i), _row(pl.counts, i), _row(pl.pos_blob, i))
+                    for i in range(lo, hi)
+                ])
+        docs, tfs = _phrase_segment(by_term, slots)
+        if tomb is not None and docs.size:
+            at = np.minimum(np.searchsorted(tomb, docs), tomb.size - 1)
+            keep = tomb[at] != docs
+            docs, tfs = docs[keep], tfs[keep]
+        if not docs.size:
+            continue
+        dl = leaf.dls[leaf.by_ext[np.searchsorted(leaf.ext_ids, docs, sorter=leaf.by_ext)]]
+        tf = tfs.astype(np.float64)
+        exts.append(docs)
+        scores.append(idf_sum * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl)))
+    e = np.concatenate(exts) if exts else np.empty(0, np.int64)
+    sc = np.concatenate(scores) if scores else np.empty(0, np.float64)
+    o = np.lexsort((e, -sc))[:k]
+    return local_frame(spark, "ext_id long, score double", e[o], sc[o])
 
 
 def phrase_topk(
@@ -376,14 +514,25 @@ def phrase_topk(
     counts, and terms with df = 0 are skipped — ``IndexSearcher.
     termStatistics`` returns null for them), tf = phrase frequency, norm =
     full doc length; stats over live docs (fresh-reader strictness, as
-    bm25_topk)."""
+    bm25_topk).
+
+    Two tiers with the same statistics, kernel (:func:`_phrase_segment`),
+    score expression and tie rule, so they return the same (ext_id,
+    score) lists bit for bit: while :func:`_resident_positions` serves,
+    the resident tier (:func:`_resident_phrase`, no Spark job once warm);
+    otherwise :func:`phrase_match` joined with ``doc_map`` and sorted on
+    Spark."""
     cfg = cfg or IndexConfig()
     slots = _norm_slots(phrase)
     if k <= 0 or not slots:
         return local_frame(spark, "ext_id long, score double")
     uniq = list(dict.fromkeys(t for s in slots for t in s))
-    postings = _query_postings(spark, cat, uniq, cfg)
-    n, avgdl, df_by_term = _live_stats_and_df(spark, cat, uniq, cfg, postings, None)
+    resident = _resident_positions(spark, cat)
+    if resident is None:
+        postings = _query_postings(spark, cat, uniq, cfg)
+        n, avgdl, df_by_term = _live_stats_and_df(spark, cat, uniq, cfg, postings, None)
+    else:
+        n, avgdl, df_by_term = _pack_stats(*resident[:2], uniq)[3:]
     if n == 0 or any(
         all(df_by_term.get(t, 0) == 0 for t in s) for s in slots
     ):
@@ -392,6 +541,8 @@ def phrase_topk(
         idf(n, df_by_term[t])
         for s in slots for t in s if df_by_term.get(t, 0) > 0
     ))
+    if resident is not None:
+        return _resident_phrase(spark, *resident, slots, idf_sum, avgdl, k, cfg)
     matches = phrase_match(spark, cat, slots, cfg)
     dl = cat.read(spark, "doc_map").select("ext_id", "dl")
     k1, b = cfg.bm25.k1, cfg.bm25.b
@@ -429,9 +580,8 @@ def span_first(
     end_i = int(end)
 
     def match(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = np.concatenate([_decode_positions(r) for r in pdf.itertuples()])
-        if keys.size and len(pdf) > 1:
-            keys = np.unique(keys)
+        keys = _term_keys([_decode_positions(r.ext_ids, r.counts, r.pos_blob)
+                           for r in pdf.itertuples()])
         hits = keys[keys % POS_SHIFT < end_i]
         return pd.DataFrame({"ext_id": np.unique(hits // POS_SHIFT)})
 
@@ -488,13 +638,7 @@ def span_near(
 
     def match(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"ext_id": pd.Series([], dtype="int64")})
-        by_term: dict[str, np.ndarray] = {}
-        for term, grp in pdf.groupby("term"):
-            parts = [_decode_positions(r) for r in grp.itertuples()]
-            keys = np.concatenate(parts)
-            if len(parts) > 1:
-                keys = np.unique(keys)
-            by_term[term] = keys
+        by_term = _udf_by_term(pdf)
         if any(t not in by_term for t in term_order):
             return empty  # a clause has no position in this segment
         A = [by_term[t] for t in term_order]

@@ -2,8 +2,17 @@
 
 Lucene's ``IndexSearcher`` scores each leaf inside the serving process
 (PAPER.md §0, Layer B); the engine's resident tiers do the same over one
-pack per catalog — ANN's flat vectors and format rows (``ann._Resident``)
-and BM25's postings and norms (``bm25._resident_scored``). Each entry is
+pack per catalog. Its entries:
+
+- ANN: ``ann_flat``, ``ann_sq``, ``ann_bq``, ``ann_ivf``, ``ann_pq``,
+  ``ann_ivfpq``, ``ann_graph`` (``ann._Resident``);
+- text: ``segdata`` — postings and norms per leaf, and the sorted
+  dictionary (``bm25._resident_scored``, prefix and fuzzy expansion) —
+  and ``positions`` (``positions._resident_phrase``);
+- both: ``tombstones``, ``tomb_aux`` (the Spark tier's packed tombstone
+  rows) and the ``("bytes", table)`` committed-size memos.
+
+Each entry is
 read into the driver by one ``toArrow()`` at its first use and kept until
 its table's own manifest entry changes. When a commit only appended
 directories to the table or dropped segments from it (an epoch, a merge),
@@ -12,8 +21,9 @@ segments are filtered out of what the pack holds. Any other change (a
 rewrite, a compaction, a replayed epoch) reads the table again.
 
 A resident tier serves a catalog while its tables' committed bytes fit
-its budget (ANN: ``RESIDENT_MAX_BYTES``, BM25: ``TEXT_RESIDENT_MAX_BYTES``);
-above it, the Spark tier runs.
+its budget (ANN: ``RESIDENT_MAX_BYTES``; text: ``TEXT_RESIDENT_MAX_BYTES``
+over segdata, and over segdata plus positions for phrase queries); above
+it, the Spark tier runs.
 """
 
 from __future__ import annotations

@@ -659,6 +659,12 @@ def verify_integrity(
     )
 
 
+def index_term_buckets(cat: IndexCatalog, cfg: IndexConfig) -> int:
+    """The ``term_buckets`` the index's postings were written with: the
+    one ``build_index`` records in the manifest config, else ``cfg``'s."""
+    return int(cat.read_manifest().get("config", {}).get("term_buckets") or cfg.term_buckets)
+
+
 def corpus_stats(spark: SparkSession, cat: IndexCatalog) -> tuple[int, float]:
     """(N, avgdl) over all indexed docs. Served from the manifest cache
     when the index is unchanged since finalize (zero Spark jobs per

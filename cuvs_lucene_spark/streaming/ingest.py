@@ -27,6 +27,8 @@ skipped via its manifest stage checkpoint.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,6 +38,7 @@ from cuvs_lucene_spark.operators.segments import (
     SEGDATA_SCHEMA,
     SEGDATA_VIEWS,
     build_segment_pdf,
+    index_term_buckets,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -75,6 +78,8 @@ def incremental_add(
     """
     if cat.stage_done(f"epoch_{epoch}"):
         return  # epoch fully committed earlier — redelivery is a no-op
+    # postings are bucketed as the index's existing ones (query pruning)
+    cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat, cfg))
     base = docs.select(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(content_col).cast("string").alias("content"),

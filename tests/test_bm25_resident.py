@@ -293,3 +293,17 @@ def test_refill_reads_only_new_directories(spark, merged):
 
 def test_tiers_equal_after_merge(spark, merged, monkeypatch):
     _both_tiers(spark, merged[0], _cases(rotate=2), monkeypatch)
+
+
+def test_spark_tier_buckets_by_the_index_term_buckets(spark, cat, monkeypatch):
+    """The postings scan prunes by the ``term_buckets`` the index was
+    built with (8 here), not the caller's: a query with the default
+    config finds the same 10 docs on both tiers."""
+    default = IndexConfig(rows_per_segment=100)
+    assert default.term_buckets != CFG.term_buckets
+    resident = _rows(B.bm25_topk(spark, cat, T, k=10, cfg=default))
+    with monkeypatch.context() as m:
+        m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
+        tier = _rows(B.bm25_topk(spark, cat, T, k=10, cfg=default))
+    assert len(resident) == 10
+    assert tier == resident

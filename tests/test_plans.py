@@ -530,12 +530,18 @@ def test_ann_resident_query_job_counts(spark, ann_cat):
 BM25_JOB_PINS = {  # warm per-query Spark jobs of the BM25 family
     "topk": 2, "topk_and": 2, "boolean": 2, "dismax": 2, "synonym": 2,
     "batch": 3, "batch_cached": 3, "topk_cached": 2, "set_filter": 3,
-    "df_filter_over_cap": 6, "after_delete": 3,
+    "df_filter_over_cap": 6, "after_delete": 3, "phrase": 5, "fuzzy": 4,
 }
 
 
 def _bm25_calls(spark, cat) -> dict:
+    """The BM25 family's warm calls, phrase and fuzzy included (the
+    positions sidecar is built first)."""
     import cuvs_lucene_spark.operators.bm25 as B
+    from cuvs_lucene_spark.operators.multiterm import fuzzy_topk
+    from cuvs_lucene_spark.operators.positions import build_positions, phrase_topk
+
+    build_positions(spark, cat, spark.read.parquet(f"{SF_DIR}/documents.parquet"), CFG)
 
     batch = {
         "q0": {"terms": ["join", "vector"], "k": 5},
@@ -554,14 +560,16 @@ def _bm25_calls(spark, cat) -> dict:
             spark, cat, ["join", "vector"], k=10, cfg=CFG, filter_ext_ids=small
         ),
         "batch": lambda: B.bm25_topk_batch(spark, cat, batch, CFG),
+        "phrase": lambda: phrase_topk(spark, cat, ["order", "fast"], k=10, cfg=CFG),
+        "fuzzy": lambda: fuzzy_topk(spark, cat, "ordre", k=10, max_edits=1, cfg=CFG),
     }
 
 
 def test_bm25_resident_query_job_counts(spark, cat):
-    """Under the default budget every warm BM25 scored query and batch is
-    served from the resident pack: 0 jobs, 1 with a DataFrame filter (its
-    head read); a filter built in the driver (a LocalRelation) reads its
-    head with none."""
+    """Under the default budget every warm BM25 scored query and batch,
+    phrase and fuzzy queries included, is served from the resident pack:
+    0 jobs, 1 with a DataFrame filter (its head read); a filter built in
+    the driver (a LocalRelation) reads its head with none."""
     from cuvs_lucene_spark.frames import local_frame
     from cuvs_lucene_spark.operators.bm25 import bm25_topk
     from cuvs_lucene_spark.operators.multiterm import prefix_topk

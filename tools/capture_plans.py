@@ -62,18 +62,23 @@ def ann_plans(spark, root: str) -> dict:
 def bm25_plans(spark, root: str) -> dict:
     """Every BM25 query kind, warm: plain/and/boolean/dismax/synonym,
     the batch on its scan and impact-cache tiers, a small DataFrame
-    filter, one over the broadcast cap (the cogroup tier), and a query
-    after a delete (last: it tombstones a doc)."""
+    filter, one over the broadcast cap (the cogroup tier), phrase and
+    multi-phrase, fuzzy (its dictionary scan, where the checkout has
+    ``multiterm._fuzzy_scan``, and the scored query), spell suggestions,
+    and a query after a delete (last: it tombstones a doc)."""
     from pyspark.sql import functions as F
 
     from cuvs_lucene_spark.config import IndexConfig
     from cuvs_lucene_spark.operators import bm25 as B
+    from cuvs_lucene_spark.operators import multiterm as M
     from cuvs_lucene_spark.operators.deletes import delete_docs
+    from cuvs_lucene_spark.operators.positions import build_positions, phrase_topk
     from cuvs_lucene_spark.operators.segments import build_index
 
     cfg = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
     docs = spark.read.parquet(f"{os.path.dirname(SF_DIR)}/sf0.001/documents.parquet")
     cat = build_index(spark, docs, root, cfg, content_col="text", id_col="doc_id")
+    build_positions(spark, cat, docs, cfg)
     small = spark.range(0, 400, 3).select(F.col("id").alias("ext_id"))
     batch = {"q0": {"terms": ["join", "vector"], "k": 5},
              "q1": {"must": ["dup"], "should": ["slow", "spark"], "k": 5}}
@@ -117,6 +122,16 @@ def bm25_plans(spark, root: str) -> dict:
         ),
         "bm25_df_filter_over_cap": over_cap,
         "bm25_batch_cached": cached_batch,
+        "bm25_phrase": lambda: phrase_topk(spark, cat, ["order", "fast"], k=10, cfg=cfg),
+        "bm25_multi_phrase": lambda: phrase_topk(
+            spark, cat, [["data", "group"], "slow"], k=10, cfg=cfg
+        ),
+        **({"bm25_fuzzy_scan": lambda: M._fuzzy_scan(spark, cat, "ordre", 1, 0, True)}
+           if hasattr(M, "_fuzzy_scan") else {}),
+        "bm25_fuzzy": lambda: M.fuzzy_topk(spark, cat, "ordre", k=10, max_edits=1, cfg=cfg),
+        "bm25_spell_suggest": lambda: M.spell_suggest(spark, cat, "ordre", max_edits=2,
+                                                      transpositions=True),
+        "bm25_spell_suggest_plain": lambda: M.spell_suggest(spark, cat, "ordre", max_edits=2),
         "bm25_after_delete": after_delete,
     }
 

@@ -1,12 +1,14 @@
-"""Dump the (ext_id, score) lists of every public BM25 scoring function
-over one small index, so two checkouts can be compared result for result.
+"""Dump the (ext_id, score) lists of every public BM25 scoring function,
+phrase (plain and multi-phrase) and fuzzy queries included, and the fuzzy
+expansions' term lists, over one small index with a positions sidecar,
+so two checkouts can be compared result for result.
 
 Scenarios: no filter, a small set filter, a DataFrame filter over the
 broadcast cap (``FILTER_BROADCAST_MAX`` patched to 0), the cogroup tier
 (``NORMS_BROADCAST_MAX_DOCS`` patched to 0), each with the impact cache
 cold and then warm (after a batch admitted every query term); then after
-a delete and after a merge. Scores are written as ``float.hex`` so the
-comparison is bit for bit.
+a delete and after a merge (the sidecar refreshed). Scores are written
+as ``float.hex`` so the comparison is bit for bit.
 
 The tier axis: ``--tier resident`` (the default budget, so every scenario
 the resident tier serves runs in the driver) or ``--tier spark`` (the
@@ -38,6 +40,29 @@ BATCH = {
     "b_msm": {"should": ["spark", "customer", "dup"], "min_should_match": 2, "k": 10},
     "b_ex": {"must": ["join", "vector"], "exclude": ["slow"], "k": 10},
 }
+
+
+def _text_calls(spark, cat, cfg):
+    """Phrase (plain and multi-phrase) and fuzzy queries: their
+    (ext_id, score) lists, and the fuzzy expansions as term lists."""
+    from cuvs_lucene_spark.operators import multiterm as M
+    from cuvs_lucene_spark.operators.positions import phrase_topk
+
+    return {
+        "phrase": lambda: phrase_topk(spark, cat, ["order", "fast"], k=10, cfg=cfg),
+        "phrase_trigram": lambda: phrase_topk(spark, cat, ["big", "order", "scan"], k=10, cfg=cfg),
+        "phrase_repeat": lambda: phrase_topk(spark, cat, ["order", "order"], k=10, cfg=cfg),
+        "multi_phrase": lambda: phrase_topk(spark, cat, [["data", "group"], "slow"], k=10, cfg=cfg),
+        "fuzzy_topk": lambda: M.fuzzy_topk(spark, cat, "ordre", k=10, max_edits=1, cfg=cfg),
+        "fuzzy_topk_e2": lambda: M.fuzzy_topk(spark, cat, "sprak", k=10, max_edits=2,
+                                              prefix_length=1, cfg=cfg),
+        "fuzzy_expand_e1": lambda: M.fuzzy_expand(spark, cat, "ordre", max_edits=1),
+        "fuzzy_expand_e1_plain": lambda: M.fuzzy_expand(spark, cat, "ordre", max_edits=1,
+                                                        transpositions=False),
+        "fuzzy_expand_e2": lambda: M.fuzzy_expand(spark, cat, "sprak", max_edits=2),
+        "fuzzy_expand_e2_prefix": lambda: M.fuzzy_expand(spark, cat, "sprak", max_edits=2,
+                                                         prefix_length=2),
+    }
 
 
 def _calls(spark, cat, cfg, filt):
@@ -97,6 +122,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     from cuvs_lucene_spark.operators import bm25 as B
     from cuvs_lucene_spark.operators.deletes import delete_docs
     from cuvs_lucene_spark.operators.merge import merge_segments
+    from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
     from cuvs_lucene_spark.operators.segments import build_index
 
     spark = (
@@ -119,6 +145,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     root = tempfile.mkdtemp(prefix="compare_bm25_")
     cat = build_index(spark, docs, os.path.join(root, "idx"), cfg,
                       content_col="text", id_col="doc_id")
+    build_positions(spark, cat, docs, cfg)
     small = docs.filter(F.col("doc_id") % 3 != 0).select(F.col("doc_id").alias("ext_id"))
     caps = {"FILTER_BROADCAST_MAX": B.FILTER_BROADCAST_MAX,
             "NORMS_BROADCAST_MAX_DOCS": B.NORMS_BROADCAST_MAX_DOCS}
@@ -139,6 +166,9 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
                 for call, fn in _calls(spark, cat, cfg, filt).items():
                     out[f"{stage}/{name}/{call}"] = _rows(fn())
                 if filt is None:
+                    for call, fn in _text_calls(spark, cat, cfg).items():
+                        got = fn()
+                        out[f"{stage}/{name}/{call}"] = got if isinstance(got, list) else _rows(got)
                     out[f"{stage}/{name}/batch"] = _rows(
                         B.bm25_topk_batch(spark, cat, BATCH, cfg), batch=True
                     )
@@ -155,6 +185,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
                 .select(F.col("doc_id").alias("ext_id")))
     run("deleted", ["nofilter", "setfilter", "overcap"])
     merge_segments(spark, cat, cfg, groups=[[0, 1, 2], [3, 4]])
+    refresh_positions(spark, cat, docs, cfg)
     run("merged", ["nofilter", "setfilter"])
     for _ in range(2):
         B.bm25_topk_batch(spark, cat, {"all": {"terms": TERMS, "k": 3}}, cfg).collect()
