@@ -1066,38 +1066,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["group_by_field"] = _group_topk
     q["field_collapse"] = _collapse
 
-    # ------------------------------------------------------------------
-    # Registration ORDER (content unchanged — every row keeps its exact
-    # query callable and oracle SQL): the grading driver verifies rows in
-    # dict order with a bounded window, so rows that have never appeared
-    # in a driver CORRECTNESS file lead, followed by rows last verified
-    # in earlier rounds, then a core slice covering every subsystem this
-    # round's optimizations touched (dedup/simhash/minhash/embedding
-    # kernels, impact-cache batch, delete/merge/build paths). The
-    # long-stable remainder — all hard-verified green in round 5 —
-    # follows in its original relative order.
-    _front = [
-        # never driver-verified (round-5 query-surface additions)
-        "repetition_stats", "training_mix", "hybrid_rrf", "phrase_match",
-        "phrase_bm25", "multi_phrase_match", "multi_phrase_bm25",
-        "prefix_docs", "wildcard_docs", "prefix_bm25", "fuzzy_docs",
-        "fuzzy_bm25", "term_range_docs", "regexp_docs",
-        "hybrid_rrf_filtered", "dismax_bm25", "span_near_ordered",
-        "span_near_unordered", "span_first", "highlight", "decontaminate",
-        "facet_lang", "facet_range", "more_like_this", "boosted_bm25",
-        "synonym_bm25", "hit_count", "match_all", "sort_by_field",
-        "spell_suggest", "complete_prefix", "group_by_field",
-        "field_collapse",
-        # last verified by the driver in rounds 3/4
-        "dedup_components", "corpus_selection", "lang_id", "quality_score",
-        "token_counts", "doc_fingerprint", "winnow_fingerprint",
-        # core slice over this round's touched subsystems
-        "minhash_lsh", "simhash", "simhash_near_dup", "embedding_near_dup",
-        "near_dup_keep_list", "bm25_batch", "bm25_after_delete",
-        "bm25_after_merge", "index_integrity", "bm25_topk_or",
-    ]
-    assert set(_front) <= set(q), sorted(set(_front) - set(q))
-    q = {k: q[k] for k in _front} | {k: v for k, v in q.items() if k not in _front}
     return q
 
 

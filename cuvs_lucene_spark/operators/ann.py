@@ -73,8 +73,13 @@ same (ext_id, score) lists bit for bit:
   ``mapInPandas`` over the probed code lists, then a rerank cogroup. It
   serves a catalog over the budget, filters and tombstones large enough
   for the blob tier, the distributed probe modes, and any query that
-  reads a table out of sync with flat (see ``_search``). ``knn_join_ivf``
-  takes a query DataFrame and always runs here.
+  reads a table out of sync with flat (see ``_search``).
+
+``knn_join_ivf`` takes a query DataFrame. Under the same conditions, and
+while the query side holds at most ``QPACK_CHUNK`` rows, it reads the
+query side once and runs its probe and per-list kernels over the pack
+(``_join_resident``): one Spark job, the read. Otherwise it is one Spark
+plan that never collects the query side.
 
 Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 """
@@ -87,6 +92,7 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1158,6 +1164,59 @@ def _rerank_topk(x: np.ndarray, ids: np.ndarray, q: np.ndarray, metric: str,
     return _exact_topk(x[cand], ids[cand], q, metric, k)
 
 
+def _norm_qb(qb: np.ndarray, metric: str) -> np.ndarray:
+    """A float64 query bundle (Q, dim) in navigation space: cosine rows
+    unit-normalized (centroids and lists live in unit space; cosine is
+    scale-invariant in q, so the normalized bundle also scores exactly)."""
+    if metric != "cosine":
+        return qb
+    nr = np.linalg.norm(qb, axis=1, keepdims=True)
+    nr[nr == 0] = 1.0
+    return qb / nr
+
+
+def _rank_lists(qb: np.ndarray, cents: np.ndarray, npb: int) -> np.ndarray:
+    """(Q, npb) ids of each query's ``npb`` closest lists of one segment."""
+    d = -2.0 * qb @ cents.T + (cents**2).sum(1)[None, :]
+    return np.argsort(d, axis=1, kind="stable")[:, :npb]
+
+
+def _bundle_topk(x: np.ndarray, ids: np.ndarray, qids: np.ndarray, qs: np.ndarray,
+                 metric: str, k: int, accept: np.ndarray | None = None):
+    """Exact top-k of one list for every query of the bundle ``qs`` that
+    probes it → (q_ids, vec_ids, scores), each query's best first."""
+    if accept is not None and not accept.all():
+        x, ids = x[accept], ids[accept]
+    x64 = x.astype(np.float64)
+    if metric == "l2":
+        d = -2.0 * qs @ x64.T + (x64**2).sum(1)[None, :] + (qs**2).sum(1)[:, None]
+        s = 1.0 / (1.0 + np.maximum(d, 0.0))  # (Q_here, n)
+    elif metric == "cosine":
+        num = qs @ x64.T
+        den = np.linalg.norm(qs, axis=1)[:, None] * np.linalg.norm(x64, axis=1)[None, :]
+        den[den == 0] = 1.0
+        s = num / den
+    else:
+        s = qs @ x64.T
+    m = min(k, ids.size)
+    top = np.array([_top_order(ids, -s[i], m) for i in range(qids.size)], np.int64).ravel()
+    rows = np.repeat(np.arange(qids.size), m)
+    return qids[rows], ids[top], s[rows, top]
+
+
+def _rank_joined(qids: np.ndarray, vids: np.ndarray, scores: np.ndarray, k: int):
+    """Each query's top-k of the merged per-list candidates, ranked as
+    ``row_number()`` over ``partitionBy(q_id).orderBy(score desc, vec_id
+    asc)`` → (q_ids, vec_ids, scores, ranks), ordered by q_id then rank.
+    Candidates of duplicate q_ids merge."""
+    o = np.lexsort((vids, -scores, qids))
+    qids, vids, scores = qids[o], vids[o], scores[o]
+    starts = np.flatnonzero(np.r_[True, qids[1:] != qids[:-1]])
+    rank = np.arange(qids.size) - np.repeat(starts, np.diff(np.r_[starts, qids.size])) + 1
+    keep = rank <= k
+    return qids[keep], vids[keep], scores[keep], rank[keep].astype(np.int32)
+
+
 # ---------------------------------------------------------------------------
 # Search driver
 # ---------------------------------------------------------------------------
@@ -2070,9 +2129,7 @@ def merge_ann(
         seen.update(g)
     gkey_of = {s: gi for gi, g in enumerate(groups) for s in g}
     merged_segs = sorted(gkey_of)
-    gmap = spark.createDataFrame(
-        [(int(s), int(gi)) for s, gi in gkey_of.items()], "segment_id long, gkey long"
-    )
+    gmap = local_frame(spark, "segment_id long, gkey long", list(gkey_of), list(gkey_of.values()))
 
     def explode_flat(it):
         # distributed un-packing of the merging segments' flat blobs — the
@@ -2128,9 +2185,7 @@ def merge_ann(
         base_of[gi] = gen_base + seq
         new_ids[gi] = [gen_base + seq + j for j in range(n_chunks)]
         seq += n_chunks
-    base_df = spark.createDataFrame(
-        [(int(g), int(b)) for g, b in base_of.items()], "gkey long, seg_base long"
-    )
+    base_df = local_frame(spark, "gkey long, seg_base long", list(base_of), list(base_of.values()))
     assigned = ranked.join(F.broadcast(base_df), "gkey").select(
         (F.col("seg_base") + F.floor(F.col("rk") / F.lit(rps))).cast("long")
         .alias("segment_id"),
@@ -2258,7 +2313,8 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog,
 
 
 QPACK_SCHEMA = "qn int, q_ids binary, q_mat binary"
-QPACK_CHUNK = 1024  # queries per packed row (bounds probe-pair row size)
+QPACK_CHUNK = 1024  # queries per packed row (bounds probe-pair row size);
+                    # also the most query rows a resident join reads
 PAIR_SCHEMA = "segment_id long, list_id int, q_id long, q_vec array<double>"
 
 
@@ -2284,6 +2340,57 @@ def _pack_query_batches(q: DataFrame) -> DataFrame:
                 )
 
     return q.mapInPandas(pack, QPACK_SCHEMA)
+
+
+def _join_frame(spark: SparkSession, *cols) -> DataFrame:
+    """A kNN join result (q_id, vec_id, score, rank) as a LocalRelation,
+    with the Spark tier's 6-dp rounding (a projection the optimizer folds
+    into the relation: no job)."""
+    return local_frame(spark, "q_id long, vec_id long, score double, rank int", *cols).select(
+        "q_id", "vec_id", F.round("score", 6).alias("score"), "rank"
+    )
+
+
+def _join_resident(spark: SparkSession, cat: IndexCatalog, head, k: int,
+                   nprobe: int | None, metric: str, bf_segs: list[int],
+                   allowed: np.ndarray | None, tomb: np.ndarray | None) -> DataFrame:
+    """:func:`knn_join_ivf`'s resident tier over the query rows ``head``
+    (an Arrow table of q_id, q_vec): the Spark tier's probe and per-list
+    kernels run over the pack in the driver, each probed list scored once
+    for the bundle of queries probing it (in query-row order), every B2
+    segment for all queries."""
+    if not head.num_rows:
+        return _join_frame(spark)
+    vecs = head.column("q_vec").combine_chunks()
+    if len(set(pc.list_value_length(vecs).to_pylist())) > 1 or vecs.null_count:
+        raise ValueError("knn_join_ivf: query vectors must all have one dimension")
+    qids = head.column("q_id").to_numpy().astype(np.int64)
+    qb = _norm_qb(vecs.flatten().to_numpy().astype(np.float64).reshape(qids.size, -1), metric)
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+
+    def score(x_blob, ids_blob, n: int, who: np.ndarray) -> None:
+        ids = np.frombuffer(ids_blob, np.int64)
+        x = np.frombuffer(x_blob, np.float32).reshape(n, qb.shape[1])
+        parts.append(_bundle_topk(x, ids, qids[who], qb[who], metric, k,
+                                  _accept_mask(ids, allowed, tomb)))
+
+    pack = _centroid_pack(spark, cat)
+    if pack is not None:
+        lists = _ivf_entry(spark, cat, lists=True).lists
+        at = dict(zip(zip(lists["segment_id"].tolist(), lists["list_id"].tolist()),
+                      lists[["vectors", "ext_ids", "n"]].itertuples(index=False)))
+        for lo in np.flatnonzero(pack["lst_row"] == 0):
+            seg, hi = int(pack["seg_row"][lo]), lo + int(pack["n_lists_row"][lo])
+            probe = _rank_lists(qb, pack["C"][lo:hi].astype(np.float64),
+                                nprobe or int(pack["npb_row"][lo]))
+            for lst in np.unique(probe):  # a centroid whose list is empty has no row
+                if (seg, int(lst)) in at:
+                    score(*at[(seg, int(lst))], np.flatnonzero((probe == lst).any(1)))
+    if bf_segs:
+        flat = _resident_rows(spark, cat, "ann_flat")
+        for r in flat[flat["segment_id"].isin(bf_segs)].itertuples(index=False):
+            score(r.vectors, r.ext_ids, int(r.n_vecs), np.arange(qids.size))
+    return _join_frame(spark, *_rank_joined(*(np.concatenate(c) for c in zip(*parts)), k))
 
 
 def knn_join_ivf(
@@ -2320,16 +2427,25 @@ def knn_join_ivf(
 
     ``probe_mode`` picks where step (2) runs, mirroring :func:`ann_topk`:
 
-    - ``driver`` — per-segment slices of the memoized centroid pack (the
-      one :func:`ann_topk` probes with) ride the query-side
-      ``mapInPandas`` closure, where probe ranking runs.
-      Latency-optimal; driver/closure memory ∝ total centroids.
+    - ``driver`` — probe ranking over the memoized centroid pack (the one
+      :func:`ann_topk` probes with). Under the resident tier's conditions
+      (:func:`_search`'s: the catalog fits ``RESIDENT_MAX_BYTES``, no
+      filter or tombstone blobs, ``ann_ivf`` in sync with flat) and with
+      at most ``QPACK_CHUNK`` query rows, the join reads the query side
+      once (``limit(QPACK_CHUNK + 1).toArrow()``, one job) and runs steps
+      (2)-(4) in the driver over the pack with the same kernels
+      (:func:`_join_resident`). Its result is computed at call time and
+      returned as a local frame, so a commit made before it is collected
+      does not change it. Otherwise the pack's per-segment slices ride
+      the query-side ``mapInPandas`` closure and the query side is never
+      collected. Latency-optimal; driver/closure memory ∝ total
+      centroids.
     - ``distributed`` — the query side is packed into batch rows
       (:func:`_pack_query_batches`) and broadcast against the pruned
       ``list_id = -1`` centroid scan; ranking runs next to the scan. NO
-      state anywhere grows with segment count, but the packed query
-      matrix must fit one broadcast — the many-segments × FEW-queries
-      cell.
+      state anywhere grows with segment count and the query side is never
+      collected, but the packed query matrix must fit one broadcast — the
+      many-segments × FEW-queries cell.
     - ``shuffle`` — fragment-and-replicate: centroid rows are hashed into
       ``R = spark.sql.shuffle.partitions`` buckets, each packed query
       chunk is replicated once per bucket, and the two sides meet in a
@@ -2347,6 +2463,8 @@ def knn_join_ivf(
     Approximate (probe recall), validated by containment against the exact
     oracle like the reference's randomized search tests."""
     _check_choice("probe_mode", probe_mode, PROBE_MODES)
+    if k <= 0:
+        return _join_frame(spark)
     metric = _index_metric(cat)
     ivf = cat.read(spark, "ann_ivf") if cat.exists("ann_ivf") else None
     n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("n_ivf_segments")
@@ -2360,29 +2478,23 @@ def knn_join_ivf(
     # brute-forced — every query probes them as one pseudo-list (-2), so
     # their vectors are reachable exactly like ann_topk's bf fallback
     bf_segs = _listed_bf_segments(cat)
+    tomb, tblobs = _resolve_tombstones(spark, cat)
+    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
+
+    q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
+    # the resident tier: the conditions of _search's, plus a bounded query
+    # side (a listed B2 set implies ann_ivf is in sync with flat)
+    if (not distributed and bf_segs is not None and fblobs is None and tblobs is None
+            and _resident_fits(cat)):
+        head = q.limit(QPACK_CHUNK + 1).toArrow()
+        if head.num_rows <= QPACK_CHUNK:
+            return _join_resident(spark, cat, head, k, nprobe, metric, bf_segs, allowed, tomb)
     if bf_segs is None:
         bf_segs = sorted(
             int(r[0]) for r in _bf_fallback(
                 spark, cat, cat.read(spark, "ann_flat").select("segment_id")
             ).collect()
         )
-    tomb, tblobs = _resolve_tombstones(spark, cat)
-    allowed, fblobs = _resolve_filter(spark, cat, filter_ext_ids, filter_mode)
-
-    q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
-
-    def _norm_qb(qb: np.ndarray) -> np.ndarray:
-        if metric != "cosine":
-            return qb
-        # centroids/lists live in unit space; cosine is scale-invariant
-        # in q, so the normalized bundle is also score-exact downstream
-        nr = np.linalg.norm(qb, axis=1, keepdims=True)
-        nr[nr == 0] = 1.0
-        return qb / nr
-
-    def _rank_lists(qb: np.ndarray, cents: np.ndarray, npb: int) -> np.ndarray:
-        d = -2.0 * qb @ cents.T + (cents**2).sum(1)[None, :]
-        return np.argsort(d, axis=1, kind="stable")[:, :npb]
 
     def _pairs(seg: int, qi_ids: np.ndarray, qb: np.ndarray, probe=None) -> pd.DataFrame:
         """Probe pairs of one segment: the ranked lists per query, or the
@@ -2424,7 +2536,7 @@ def knn_join_ivf(
 
         def _bundle(r) -> tuple[np.ndarray, np.ndarray]:
             qb = np.frombuffer(r.q_mat, np.float64).reshape(int(r.qn), -1)
-            return np.frombuffer(r.q_ids, np.int64), _norm_qb(qb)
+            return np.frombuffer(r.q_ids, np.int64), _norm_qb(qb, metric)
 
         def probe_dist(it):
             for pdf in it:
@@ -2455,7 +2567,7 @@ def knn_join_ivf(
     else:
         pack = _centroid_pack(spark, cat) if ivf is not None else None
         if pack is None and not bf_segs:
-            return local_frame(spark, "q_id long, vec_id long, score double, rank int")
+            return _join_frame(spark)
         # per-segment slices of the memoized centroid pack ride the task
         # closure; the query side is still never collected (latency mode —
         # closure ∝ total centroids)
@@ -2474,7 +2586,8 @@ def knn_join_ivf(
                 qb = _norm_qb(
                     np.stack(
                         [np.asarray(v, dtype=np.float64) for v in pdf["q_vec"].to_numpy()]
-                    )
+                    ),
+                    metric,
                 )
                 qi_ids = pdf["q_id"].to_numpy(np.int64)
                 for seg, lo, hi, npb in cuts:
@@ -2517,31 +2630,12 @@ def knn_join_ivf(
                 dim = len(r.qs[0]["q_vec"])
                 x = np.frombuffer(r.vectors, np.float32).reshape(r.n, dim)
                 ids = np.frombuffer(r.ext_ids, np.int64)
-                acc = _row_accept(pdf, r, ids, allowed, tomb)
-                if acc is not None:
-                    if not acc.any():
-                        continue
-                    if not acc.all():
-                        ids, x = ids[acc], x[acc]
-                qids_h = np.array([s["q_id"] for s in r.qs], dtype=np.int64)
-                qs = np.array([s["q_vec"] for s in r.qs], dtype=np.float64)
-                x64 = x.astype(np.float64)
-                if metric == "l2":
-                    d = -2.0 * qs @ x64.T + (x64**2).sum(1)[None, :] + (qs**2).sum(1)[:, None]
-                    s = 1.0 / (1.0 + np.maximum(d, 0.0))  # (Q_here, n)
-                elif metric == "cosine":
-                    num = qs @ x64.T
-                    den = np.linalg.norm(qs, axis=1)[:, None] * np.linalg.norm(x64, axis=1)[None, :]
-                    den[den == 0] = 1.0
-                    s = num / den
-                else:
-                    s = qs @ x64.T
-                m = min(k, ids.size)
-                for qi in range(qids_h.size):
-                    top = np.lexsort((ids, -s[qi]))[:m]
-                    yield pd.DataFrame(
-                        {"q_id": int(qids_h[qi]), "vec_id": ids[top], "score": s[qi][top]}
-                    )
+                qids, vids, s = _bundle_topk(
+                    x, ids, np.array([e["q_id"] for e in r.qs], dtype=np.int64),
+                    np.array([e["q_vec"] for e in r.qs], dtype=np.float64), metric, k,
+                    _row_accept(pdf, r, ids, allowed, tomb),
+                )
+                yield pd.DataFrame({"q_id": qids, "vec_id": vids, "score": s})
 
     from pyspark.sql import Window
 

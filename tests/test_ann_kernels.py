@@ -1,13 +1,16 @@
-"""The two numpy search kernels every ANN format shares, tested on local
+"""The numpy search kernels every ANN format shares, tested on local
 arrays without Spark: the exact per-segment top-k and the coarse cut with
-exact rerank, both against numpy brute force."""
+exact rerank, both against numpy brute force, and the kNN join's per-list
+bundle top-k and per-query ranking against Python sorts."""
 
 import numpy as np
 import pytest
 
 from cuvs_lucene_spark.operators.ann import (
     _accept_mask,
+    _bundle_topk,
     _exact_topk,
+    _rank_joined,
     _rerank_topk,
     _scores,
 )
@@ -102,3 +105,40 @@ def test_all_rejected_segment_yields_no_rows():
         _exact_topk(x, ids, q, "l2", 10, _accept_mask(ids, None, ids)),
     ):
         assert top.size == 0 and s.size == 0
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
+def test_bundle_topk_vs_per_query_sort(metric):
+    """Each query of a bundle keeps its k best of the accepted list rows,
+    ties to the lower ext_id: the cut a full sort per query gives."""
+    rng = np.random.default_rng(3)
+    x = np.round(rng.normal(size=(60, 4)), 0).astype(np.float32)  # many equal scores
+    ids = np.sort(rng.choice(1000, size=60, replace=False)).astype(np.int64)
+    qs = np.round(rng.normal(size=(5, 4)), 0)
+    qids = np.array([7, 3, 7, 9, 1], np.int64)
+    accept = _accept_mask(ids, None, np.sort(ids[::4]))
+    got_q, got_v, got_s = (a.reshape(5, 6) for a in _bundle_topk(x, ids, qids, qs, metric, 6, accept))
+    keep = np.flatnonzero(accept)
+    # every accepted row's score, from a cut that keeps them all
+    _, all_v, all_s = (a.reshape(5, -1) for a in _bundle_topk(
+        x[keep], ids[keep], qids, qs, metric, keep.size))
+    for i, q in enumerate(qids):
+        want = sorted(zip(all_v[i].tolist(), all_s[i].tolist()), key=lambda r: (-r[1], r[0]))[:6]
+        assert list(zip(got_v[i].tolist(), got_s[i].tolist())) == want
+        assert (got_q[i] == q).all()
+
+
+def test_rank_joined_is_row_number_per_q_id():
+    """Ranks as ``row_number()`` over q_id ordered by score desc, vec_id
+    asc; duplicate q_ids merge their candidates; ``k`` cuts each q_id."""
+    rng = np.random.default_rng(4)
+    qids = rng.integers(0, 4, size=80).astype(np.int64)
+    vids = rng.integers(0, 30, size=80).astype(np.int64)
+    scores = np.round(rng.random(80), 1)
+    got = list(zip(*(a.tolist() for a in _rank_joined(qids, vids, scores, 5))))
+    want = []
+    for q in sorted(set(qids.tolist())):
+        rows = sorted((-s, v) for qq, v, s in zip(qids, vids, scores) if qq == q)[:5]
+        want += [(q, v, -ns, r) for r, (ns, v) in enumerate(rows, 1)]
+    assert got == [(q, v, float(s), r) for q, v, s, r in want]
+    assert all(len(a) == 0 for a in _rank_joined(*(np.empty(0),) * 3, 5))

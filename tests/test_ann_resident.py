@@ -1,12 +1,14 @@
 """The resident ANN tier against the Spark tier.
 
-Single-query searches run in the driver over the catalog's resident pack
-while it fits ``RESIDENT_MAX_BYTES``. Both tiers run the same kernels under
-the same tie rule, so every mode must return the same (ext_id, score)
-list bit for bit — with no filter, a set filter and a DataFrame filter,
-after a delete and after a merge. Forcing the budget to 0 selects the
-Spark tier (as ``test_components_shuffle_tier_equals_broadcast_tier``
-forces the shuffle tier with cap 0).
+Single-query searches and ``knn_join_ivf`` batches run in the driver over
+the catalog's resident pack while it fits ``RESIDENT_MAX_BYTES``. Both
+tiers run the same kernels under the same tie rule, so every mode must
+return the same (ext_id, score) list bit for bit, and every join the same
+(q_id, rank, vec_id, score) rows — with no filter, a set filter and a
+DataFrame filter, after a delete and after a merge. Forcing the budget to
+0 selects the Spark tier (as
+``test_components_shuffle_tier_equals_broadcast_tier`` forces the shuffle
+tier with cap 0).
 """
 
 from __future__ import annotations
@@ -184,3 +186,94 @@ def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypat
     assert reads == Counter({t: 1 for t in (*A.PACK_TABLES, "ann_tombstones")})
     assert R.pack(cat).nbytes() > 0
     assert got == {m: _rows(MODES[m](spark, cat, None)) for m in modes}
+
+
+# q_id 1 twice (its candidates merge), vector 300 is the B2 segment's, 151
+# is tombstoned in ``deleted``
+JOIN_QUERIES = [(0, 5), (1, 17), (1, 200), (2, 300), (3, 151)]
+JOINS = {
+    "none": {},
+    "set": {"filter_ext_ids": set(range(0, N, 2))},
+    "df": {"filter_ext_ids": "df"},
+    "nprobe": {"nprobe": 1},
+    "k_over_list": {"k": 160},  # more than a 150-vector list holds
+    "k0": {"k": 0},
+    "empty": {"queries": []},
+}
+
+
+def _join(spark, cat, case: str, x=X) -> list[tuple]:
+    kw = {"k": 7, **JOINS[case]}
+    rows = [(q, x[i].tolist()) for q, i in kw.pop("queries", JOIN_QUERIES)]
+    qdf = spark.createDataFrame(rows, "q_id long, q_vec array<float>")
+    if kw.get("filter_ext_ids") == "df":
+        kw["filter_ext_ids"] = FILTERS["df"](spark)
+    return sorted(tuple(r) for r in A.knn_join_ivf(spark, cat, qdf, **kw).collect())
+
+
+def _joins_both_tiers(spark, cat, cases, monkeypatch, x=X) -> None:
+    """Each join case on the resident tier (the Spark tier's list scan
+    poisoned) and on the Spark tier (budget 0): identical rows."""
+
+    def run():
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futs = {c: pool.submit(_join, spark, cat, c, x) for c in cases}
+            return {c: f.result(timeout=300) for c, f in futs.items()}
+
+    with monkeypatch.context() as m:
+        m.setattr(A, "_live_lists", lambda *a, **k: pytest.fail("join took the Spark tier"))
+        resident = run()
+    with monkeypatch.context() as m:
+        m.setattr(R, "RESIDENT_MAX_BYTES", 0)
+        tier = run()
+    assert {c: v for c, v in resident.items() if v != tier[c]} == {}
+    assert all(resident[c] for c in cases if c not in ("k0", "empty"))
+    assert not any(resident[c] for c in cases if c in ("k0", "empty"))
+
+
+def test_join_tiers_equal_after_delete(spark, deleted, monkeypatch):
+    _joins_both_tiers(spark, deleted, list(JOINS), monkeypatch)
+    rows = _join(spark, deleted, "none")
+    assert {r[0] for r in rows} == {0, 1, 2, 3}
+    assert 151 not in {r[1] for r in rows} and 300 in {r[1] for r in rows}
+    assert len([r for r in rows if r[0] == 1]) == 7  # the duplicate q_ids merge
+
+
+def test_join_tiers_equal_after_merge(spark, merged, monkeypatch):
+    _joins_both_tiers(spark, merged[0], ["none", "set", "df"], monkeypatch)
+
+
+@pytest.fixture(scope="module")
+def cosine(spark, tmp_path_factory):
+    """A cosine index whose segments hold two IVF lists each (the probe
+    ranks lists, an ``nprobe`` of 1 skips one), plus a B2 segment."""
+    x = np.round(np.random.default_rng(11).normal(size=(8001, 8)), 1).astype(np.float32)
+    df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(x)],
+                               "vec_id long, embedding array<float>")
+    cfg = dataclasses.replace(CFG, ann=dataclasses.replace(CFG.ann, metric="cosine"))
+    cat = A.build_ann(spark, df, str(tmp_path_factory.mktemp("cosine")), cfg,
+                      id_col="vec_id", vector_col="embedding", rows_per_segment=4000)
+    return cat, x
+
+
+def test_join_tiers_equal_cosine(spark, cosine, monkeypatch):
+    cat, x = cosine
+    assert A._centroid_pack(spark, cat)["n_lists_row"].min() == 2
+    _joins_both_tiers(spark, cat, ["none", "set", "nprobe"], monkeypatch, x)
+    assert _join(spark, cat, "nprobe", x) != _join(spark, cat, "none", x)
+
+
+def test_join_over_query_bound_takes_spark_tier(spark, deleted, monkeypatch):
+    """A query side of more than ``QPACK_CHUNK`` rows runs on Spark and
+    returns the resident tier's rows."""
+    want = _join(spark, deleted, "none")
+    monkeypatch.setattr(A, "QPACK_CHUNK", len(JOIN_QUERIES) - 1)
+    monkeypatch.setattr(A, "_join_resident", lambda *a, **k: pytest.fail("resident over the bound"))
+    assert _join(spark, deleted, "none") == want
+
+
+def test_join_rejects_ragged_query_vectors(spark, deleted):
+    qdf = spark.createDataFrame([(0, [1.0] * 8), (1, [1.0] * 4), (2, [1.0] * 4)],
+                                "q_id long, q_vec array<float>")
+    with pytest.raises(ValueError, match="one dimension"):
+        A.knn_join_ivf(spark, deleted, qdf, k=3)
