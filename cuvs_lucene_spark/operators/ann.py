@@ -75,11 +75,13 @@ same (ext_id, score) lists bit for bit:
   for the blob tier, the distributed probe modes, and any query that
   reads a table out of sync with flat (see ``_search``).
 
-``knn_join_ivf`` takes a query DataFrame. Under the same conditions, and
-while the query side holds at most ``QPACK_CHUNK`` rows, it reads the
-query side once and runs its probe and per-list kernels over the pack
-(``_join_resident``): one Spark job, the read. Otherwise it is one Spark
-plan that never collects the query side.
+``knn_join_ivf`` takes a query DataFrame. Under the same conditions, when
+a limit reads only a head of the query side (``frames.reads_head``: no
+aggregate, join, sort or shuffle in its plan) and that side holds at most
+``resident.RESIDENT_JOIN_MAX_QUERIES`` rows (the measured crossover with
+the Spark tier), it reads the query side once and runs its probe and
+per-list kernels over the pack (``_join_resident``): one Spark job, the
+read. Otherwise it is one Spark plan that never collects the query side.
 
 Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 """
@@ -108,7 +110,7 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
-from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame
+from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame, reads_head
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -2313,8 +2315,7 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog,
 
 
 QPACK_SCHEMA = "qn int, q_ids binary, q_mat binary"
-QPACK_CHUNK = 1024  # queries per packed row (bounds probe-pair row size);
-                    # also the most query rows a resident join reads
+QPACK_CHUNK = 1024  # queries per packed row (bounds probe-pair row size)
 PAIR_SCHEMA = "segment_id long, list_id int, q_id long, q_vec array<double>"
 
 
@@ -2430,15 +2431,17 @@ def knn_join_ivf(
     - ``driver`` — probe ranking over the memoized centroid pack (the one
       :func:`ann_topk` probes with). Under the resident tier's conditions
       (:func:`_search`'s: the catalog fits ``RESIDENT_MAX_BYTES``, no
-      filter or tombstone blobs, ``ann_ivf`` in sync with flat) and with
-      at most ``QPACK_CHUNK`` query rows, the join reads the query side
-      once (``limit(QPACK_CHUNK + 1).toArrow()``, one job) and runs steps
-      (2)-(4) in the driver over the pack with the same kernels
-      (:func:`_join_resident`). Its result is computed at call time and
-      returned as a local frame, so a commit made before it is collected
-      does not change it. Otherwise the pack's per-segment slices ride
-      the query-side ``mapInPandas`` closure and the query side is never
-      collected. Latency-optimal; driver/closure memory ∝ total
+      filter or tombstone blobs, ``ann_ivf`` in sync with flat), over a
+      query side whose plan a limit reads only a head of
+      (``frames.reads_head``) and with at most
+      ``resident.RESIDENT_JOIN_MAX_QUERIES`` query rows, the join reads the
+      query side once (``limit(RESIDENT_JOIN_MAX_QUERIES + 1).toArrow()``,
+      one job) and runs steps (2)-(4) in the driver over the pack with
+      the same kernels (:func:`_join_resident`). Its result is computed
+      at call time and returned as a local frame, so a commit made before
+      it is collected does not change it. Otherwise the pack's
+      per-segment slices ride the query-side ``mapInPandas`` closure and
+      the query side is never collected. Latency-optimal; driver/closure memory ∝ total
       centroids.
     - ``distributed`` — the query side is packed into batch rows
       (:func:`_pack_query_batches`) and broadcast against the pruned
@@ -2483,11 +2486,12 @@ def knn_join_ivf(
 
     q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
     # the resident tier: the conditions of _search's, plus a bounded query
-    # side (a listed B2 set implies ann_ivf is in sync with flat)
+    # side that a limit reads without running its plan twice (a listed B2
+    # set implies ann_ivf is in sync with flat)
     if (not distributed and bf_segs is not None and fblobs is None and tblobs is None
-            and _resident_fits(cat)):
-        head = q.limit(QPACK_CHUNK + 1).toArrow()
-        if head.num_rows <= QPACK_CHUNK:
+            and _resident_fits(cat) and reads_head(q)):
+        head = q.limit(R.RESIDENT_JOIN_MAX_QUERIES + 1).toArrow()
+        if head.num_rows <= R.RESIDENT_JOIN_MAX_QUERIES:
             return _join_resident(spark, cat, head, k, nprobe, metric, bf_segs, allowed, tomb)
     if bf_segs is None:
         bf_segs = sorted(

@@ -43,6 +43,16 @@ RESIDENT_MAX_BYTES = 768 << 20  # ANN's resident tier serves while the ANN
 # vectors (75.6, 304 and 734 MB committed). No crossover was found, since the
 # Spark tier re-reads the tables per query, so the budget is the largest
 # measured size, rounded up.
+RESIDENT_JOIN_MAX_QUERIES = 512  # knn_join_ivf's resident tier serves
+                                 # query sides of at most this many rows
+# The driver scores a join on one core, the Spark tier over the executors.
+# Measured on fixtures.generate_embeddings_pdf vectors (64-d, default
+# IndexConfig, k=10, local[4], BLAS pools of one thread, warm medians of 3-5
+# batches, resident/Spark s, identical rows): at the largest catalog the ANN
+# budget admits (1,014,523 vectors, 15 segments) 32 queries 0.71/2.64, 256
+# 1.71/2.95, 512 2.76/3.80, 768 4.02/3.36, 1,024 5.35/4.05; at 104,757
+# vectors (2 segments) 512 0.83/1.79, 1,024 1.10/2.05. The crossover at the
+# largest catalog lies between 512 and 768 queries, so the bound is 512.
 TEXT_RESIDENT_MAX_BYTES = 173 << 20  # BM25's resident tier serves while
                                      # segdata's committed bytes fit
 # The largest text index measured (fixtures.generate_documents_pdf, local[4],

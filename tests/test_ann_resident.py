@@ -264,12 +264,23 @@ def test_join_tiers_equal_cosine(spark, cosine, monkeypatch):
 
 
 def test_join_over_query_bound_takes_spark_tier(spark, deleted, monkeypatch):
-    """A query side of more than ``QPACK_CHUNK`` rows runs on Spark and
-    returns the resident tier's rows."""
+    """A query side of more than ``RESIDENT_JOIN_MAX_QUERIES`` rows runs on
+    Spark and returns the resident tier's rows."""
     want = _join(spark, deleted, "none")
-    monkeypatch.setattr(A, "QPACK_CHUNK", len(JOIN_QUERIES) - 1)
+    monkeypatch.setattr(R, "RESIDENT_JOIN_MAX_QUERIES", len(JOIN_QUERIES) - 1)
     monkeypatch.setattr(A, "_join_resident", lambda *a, **k: pytest.fail("resident over the bound"))
     assert _join(spark, deleted, "none") == want
+
+
+def test_join_over_shuffled_query_side_takes_spark_tier(spark, deleted, monkeypatch):
+    """A query side behind a shuffle (here a distinct) is not read ahead:
+    the limit would run the shuffle in full before the Spark plan runs it
+    again. It takes the Spark tier and returns the resident tier's rows."""
+    want = _join(spark, deleted, "none")
+    rows = [(q, X[i].tolist()) for q, i in JOIN_QUERIES]
+    qdf = spark.createDataFrame(rows + rows, "q_id long, q_vec array<float>").distinct()
+    monkeypatch.setattr(A, "_join_resident", lambda *a, **k: pytest.fail("resident read ahead"))
+    assert sorted(tuple(r) for r in A.knn_join_ivf(spark, deleted, qdf, k=7).collect()) == want
 
 
 def test_join_rejects_ragged_query_vectors(spark, deleted):

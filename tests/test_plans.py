@@ -526,6 +526,43 @@ def test_ann_resident_query_job_counts(spark, ann_cat):
     assert counts == want
 
 
+def test_reads_head_only_over_row_wise_plans(spark, tmp_path):
+    """A limit reads only a head of a frame built by scans and row-wise
+    operators; not of one behind an aggregate, join, sort, repartition,
+    scalar subquery or an RDD lineage with a shuffle (they would run in
+    full for the limit, and again for a full read)."""
+    from cuvs_lucene_spark.frames import local_frame, reads_head
+
+    rows = spark.createDataFrame([(i, [0.5, 1.0]) for i in range(6)],
+                                 "q_id long, q_vec array<float>")
+    rows.write.parquet(str(tmp_path / "q"))
+    scan = spark.read.parquet(str(tmp_path / "q"))
+    rows.createOrReplaceTempView("reads_head_q")
+    shuffled = rows.rdd.map(lambda r: (r[0], r)).reduceByKey(lambda a, b: a).values()
+    head = {
+        "local": local_frame(spark, "q_id long", range(3)),
+        "rows": rows,
+        "scan_filter": scan.filter("q_id > 2"),
+        "range": spark.range(5).select("id", F.array(F.lit(1.0)).alias("v")),
+        "union": rows.unionByName(scan),
+        "python_udf": rows.select("q_id", F.udf(lambda v: v, "array<float>")("q_vec")),
+        "map_in_pandas": rows.mapInPandas(lambda it: it, rows.schema),
+        "limit": rows.limit(4),
+    }
+    full = {
+        "group_by": rows.groupBy("q_id").agg(F.first("q_vec")),
+        "distinct": rows.distinct(),
+        "order_by": rows.orderBy("q_id"),
+        "join": rows.join(scan.select("q_id"), "q_id"),
+        "repartition": rows.repartition(3),
+        "scalar_subquery": spark.sql(
+            "select * from reads_head_q where q_id > (select max(q_id) - 3 from reads_head_q)"),
+        "rdd_shuffle": spark.createDataFrame(shuffled, rows.schema),
+    }
+    assert {n: reads_head(df) for n, df in {**head, **full}.items()} == {
+        **dict.fromkeys(head, True), **dict.fromkeys(full, False)}
+
+
 BM25_JOB_PINS = {  # warm per-query Spark jobs of the BM25 family
     "topk": 2, "topk_and": 2, "boolean": 2, "dismax": 2, "synonym": 2,
     "batch": 3, "batch_cached": 3, "topk_cached": 2, "set_filter": 3,
