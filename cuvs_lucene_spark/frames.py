@@ -7,7 +7,8 @@ most of a query's cost when the frame is an empty result or a handful of
 segment ids.
 
 :func:`reads_head` tells, from the plan alone, whether a ``limit`` over a
-caller's frame reads only its first rows.
+caller's frame reads only its first rows; :func:`small_arrow` reads a
+caller's frame into the driver when it holds at most a bound of rows.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _TYPES = {"long": (pa.int64(), np.int64), "int": (pa.int32(), np.int32),
           "double": (pa.float64(), np.float64), "string": (pa.string(), object),
@@ -26,6 +28,12 @@ def _fields(schema: str) -> list[tuple[str, str]]:
     return [tuple(f.split()) for f in schema.split(",")]
 
 
+def arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a flat DDL schema string, every field nullable
+    (as Spark writes and reads it)."""
+    return pa.schema([(n, _TYPES[t][0]) for n, t in _fields(schema)])
+
+
 def local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
     """A small frame of the given flat schema from column sequences, as a
     ``LocalRelation``. No ``cols`` gives the empty frame."""
@@ -35,6 +43,33 @@ def local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
         pa.table({n: pa.array(c, _TYPES[t][0]) for (n, t), c in zip(fields, cols)}),
         schema,
     )
+
+
+def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df``'s rows as one Arrow table when it holds at most ``max_rows``
+    rows, else None (the caller's Spark path reads it then). Reads:
+
+    - none when the optimized plan knows its row count (a
+      ``LocalRelation``, a materialized cache) and it is over the bound;
+    - a ``LocalRelation``'s rows through ``collect()``: no job;
+    - else one head read, ``limit(max_rows + 1).toArrow()``, and only over
+      a plan :func:`reads_head` accepts (None otherwise: the head read
+      would run the plan in full, and the Spark path again)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    rows = plan.stats().rowCount()
+    if rows.isDefined() and int(str(rows.get())) > max_rows:
+        return None
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        got = df.limit(max_rows + 1).collect()
+        if len(got) > max_rows:
+            return None
+        schema = to_arrow_schema(df.schema)
+        return pa.table([pa.array([r[i] for r in got], f.type) for i, f in enumerate(schema)],
+                        schema=schema)
+    if not reads_head(df):
+        return None
+    head = df.limit(max_rows + 1).toArrow()
+    return head if head.num_rows <= max_rows else None
 
 
 # the logical operators a limit reads a head through: scans and row-wise

@@ -43,6 +43,12 @@ def doclen_expr(col: str | Column) -> Column:
     return F.size(tokenize_expr(col))
 
 
+def doclen_py(texts: pd.Series) -> pd.Series:
+    """The driver's ``doclen_expr``: |tokens(text)| as ``Int32``, null for
+    a null text (Spark's ``size(null)`` under ANSI)."""
+    return tokenize_py(texts).str.len().astype("Int32").mask(texts.isna())
+
+
 def tokenize_py(texts: pd.Series) -> pd.Series:
     """Batch tokenizer for use inside pandas UDFs.
 

@@ -76,12 +76,14 @@ same (ext_id, score) lists bit for bit:
   reads a table out of sync with flat (see ``_search``).
 
 ``knn_join_ivf`` takes a query DataFrame. Under the same conditions, when
-a limit reads only a head of the query side (``frames.reads_head``: no
-aggregate, join, sort or shuffle in its plan) and that side holds at most
-``resident.RESIDENT_JOIN_MAX_QUERIES`` rows (the measured crossover with
-the Spark tier), it reads the query side once and runs its probe and
-per-list kernels over the pack (``_join_resident``): one Spark job, the
-read. Otherwise it is one Spark plan that never collects the query side.
+``frames.small_arrow`` reads the query side into the driver — it holds at
+most ``resident.RESIDENT_JOIN_MAX_QUERIES`` rows (the measured crossover
+with the Spark tier), and is a ``LocalRelation`` (no job) or a plan a
+limit reads only a head of (one job; no aggregate, join, sort or shuffle
+in it) — it runs its probe and per-list kernels over the pack
+(``_join_resident``). Otherwise it is one Spark plan that never collects
+the query side; a plan that knows its row count is over the bound goes
+there with no head read.
 
 Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 """
@@ -110,7 +112,7 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
-from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame, reads_head
+from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame, small_arrow
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -1737,7 +1739,7 @@ def ann_topk(
     cat: IndexCatalog,
     query: list[float] | np.ndarray,
     k: int = 10,
-    metric: str = "l2",
+    metric: str | None = None,
     cfg: IndexConfig | None = None,
     mode: str = "auto",
     nprobe: int | None = None,
@@ -1749,7 +1751,9 @@ def ann_topk(
 
     ``mode``: ``exact`` (brute force over flat, S4 — any ``metric``),
     ``ivf`` (coarse probe, S3 — the index's build metric), or ``auto``
-    (S1 routing: IVF when available and k ≤ max_k_ann). Filters,
+    (S1 routing: IVF when available and k ≤ max_k_ann). ``metric``
+    defaults to the index's build metric, as in every other search entry
+    point. Filters,
     tombstones and the B2 fallback follow the driver contract
     (:func:`_search`).
 
@@ -1791,8 +1795,9 @@ def ann_topk(
         if use_ivf:
             # similarity-function mismatch guard for derived structures
             # (CuVS2510GPUVectorsReader.java:247-255): IVF lists are
-            # clustered under the build metric
-            _validate_metric(cat, metric)
+            # clustered under the build metric (the default)
+            if metric is not None:
+                _validate_metric(cat, metric)
             if cat.exists("ann_ivf"):
                 lists = s.probe("ann_ivf", nprobe, probe_mode)
         if lists is None:
@@ -2432,11 +2437,10 @@ def knn_join_ivf(
       :func:`ann_topk` probes with). Under the resident tier's conditions
       (:func:`_search`'s: the catalog fits ``RESIDENT_MAX_BYTES``, no
       filter or tombstone blobs, ``ann_ivf`` in sync with flat), over a
-      query side whose plan a limit reads only a head of
-      (``frames.reads_head``) and with at most
-      ``resident.RESIDENT_JOIN_MAX_QUERIES`` query rows, the join reads the
-      query side once (``limit(RESIDENT_JOIN_MAX_QUERIES + 1).toArrow()``,
-      one job) and runs steps (2)-(4) in the driver over the pack with
+      query side of at most ``resident.RESIDENT_JOIN_MAX_QUERIES`` rows
+      that ``frames.small_arrow`` reads (a ``LocalRelation``'s rows with
+      no job, else one head read of a plan a limit reads only a head of),
+      the join runs steps (2)-(4) in the driver over the pack with
       the same kernels (:func:`_join_resident`). Its result is computed
       at call time and returned as a local frame, so a commit made before
       it is collected does not change it. Otherwise the pack's
@@ -2489,9 +2493,9 @@ def knn_join_ivf(
     # side that a limit reads without running its plan twice (a listed B2
     # set implies ann_ivf is in sync with flat)
     if (not distributed and bf_segs is not None and fblobs is None and tblobs is None
-            and _resident_fits(cat) and reads_head(q)):
-        head = q.limit(R.RESIDENT_JOIN_MAX_QUERIES + 1).toArrow()
-        if head.num_rows <= R.RESIDENT_JOIN_MAX_QUERIES:
+            and _resident_fits(cat)):
+        head = small_arrow(q, R.RESIDENT_JOIN_MAX_QUERIES)
+        if head is not None:
             return _join_resident(spark, cat, head, k, nprobe, metric, bf_segs, allowed, tomb)
     if bf_segs is None:
         bf_segs = sorted(

@@ -7,20 +7,36 @@ physically drops them (M5). Spark-first equivalent: a ``tombstones(ext_id)``
 table; queries apply it as a pre-filter mask inside the scorer
 (never post-filter — S10 semantics); merges drop tombstoned docs and
 clear their tombstones.
+
+A delete of at most ``segments.DRIVER_FLUSH_MAX_DOCS`` ids runs in the
+driver: the id frame is read once (``frames.small_arrow``), unioned with
+the committed tombstones read by pyarrow, written as one file through
+``IndexCatalog.write_arrow``, and the live count is a set difference over
+doc_map's ``ext_id``s — no other Spark job. A larger (or unbounded) id
+frame runs the Spark union, write and anti-join.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cuvs_lucene_spark.frames import arrow_schema, small_arrow
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 
 def delete_docs(spark: SparkSession, cat: IndexCatalog, ext_ids: DataFrame) -> int:
     """Tombstone the given docs (DataFrame with an ``ext_id`` column).
     Idempotent: re-deleting is a no-op. Returns live doc count after."""
-    new = ext_ids.select(F.col("ext_id").cast("long")).distinct()
+    from cuvs_lucene_spark.operators.segments import DRIVER_FLUSH_MAX_DOCS
+
+    ids = ext_ids.select(F.col("ext_id").cast("long"))
+    small = small_arrow(ids, DRIVER_FLUSH_MAX_DOCS)
+    if small is not None:
+        return _delete_in_driver(cat, small.column(0))
+    new = ids.distinct()
     if cat.exists("tombstones"):
         new = cat.read(spark, "tombstones").union(new).distinct()
     new = new.cache()
@@ -31,6 +47,21 @@ def delete_docs(spark: SparkSession, cat: IndexCatalog, ext_ids: DataFrame) -> i
     new.unpersist()
     dm = cat.read(spark, "doc_map")
     return dm.join(cat.read(spark, "tombstones"), "ext_id", "left_anti").count()
+
+
+def _delete_in_driver(cat: IndexCatalog, ids: pa.ChunkedArray) -> int:
+    """:func:`delete_docs` on ids in hand: the same distinct union (a null
+    id kept once, as ``distinct`` keeps it), the same lineage, and the
+    live count of ``left_anti`` (a null ext_id matches nothing)."""
+    if cat.exists("tombstones"):
+        ids = pa.chunked_array(
+            cat.read_arrow("tombstones", ["ext_id"]).column(0).chunks + ids.chunks, pa.int64()
+        )
+    tomb = pc.unique(ids)
+    cat.write_arrow(pa.table([tomb], schema=arrow_schema("ext_id long")), "tombstones",
+                    lineage={"n": len(tomb)})
+    dm = cat.read_arrow("doc_map", ["ext_id"]).column(0)
+    return len(dm) - (pc.sum(pc.is_in(dm, value_set=tomb, skip_nulls=True)).as_py() or 0)
 
 
 def delete_by_term(spark: SparkSession, cat: IndexCatalog, term: str, cfg=None) -> int:

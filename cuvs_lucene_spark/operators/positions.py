@@ -42,11 +42,19 @@ GPUKnnFloatVectorQuery.java:21-58). Spark-first equivalent:
 
 Positions are an OPT-IN sidecar (like Lucene's per-field IndexOptions):
 ``build_positions`` derives them from the source docs + the committed
-``doc_map``; after a merge/append changes the segment set, phrase queries
-raise ``PositionsStaleError`` until ``refresh_positions`` re-derives the
-missing segments (group-wise incremental — untouched segments are never
-re-read; dead segments' rows are ignored via a live-segment semi-join, or
-on the resident tier by visiting only live leaves). ``span_near``,
+``doc_map``. It flushes on the two tiers of ``segments.build_index``: a
+source the driver flush takes (``segments.small_docs``: at most
+``segments.DRIVER_FLUSH_MAX_DOCS`` rows, string text, no null id or text)
+is read once into the driver, joined with doc_map read by pyarrow
+(``IndexCatalog.read_arrow``), checked for coverage, built per segment by
+:func:`build_positions_pdf` and written by pyarrow — no other Spark job;
+any other source runs the Spark join and ``applyInPandas``. Both raise the
+same coverage ``ValueError``. After a merge/append changes the segment
+set, phrase queries raise ``PositionsStaleError`` until
+``refresh_positions`` re-derives the missing segments (group-wise
+incremental — untouched segments are never re-read; dead segments' rows
+are ignored via a live-segment semi-join, or on the resident tier by
+visiting only live leaves). ``span_near``,
 ``span_first`` and ``highlight`` run on Spark only.
 """
 
@@ -62,7 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..frames import local_frame
+from ..frames import arrow_schema, local_frame
 from ..functions.tokenize import tokenize_py
 from ..functions.varint import varint_byte_lengths, varint_decode, varint_encode
 from . import resident as R
@@ -165,6 +173,19 @@ def build_positions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
                 for a, b in zip(tok_bounds[:-1], tok_bounds[1:])
             ],
         }
+    )
+
+
+POS_ARROW = arrow_schema(POS_SCHEMA)
+
+
+def positions_arrow(pdf: pd.DataFrame) -> pa.Table:
+    """(segment_id, ext_id, text) rows → positions rows in the driver,
+    :func:`build_positions_pdf` per segment."""
+    return pa.concat_tables(
+        [POS_ARROW.empty_table()]
+        + [pa.Table.from_pandas(build_positions_pdf(g), POS_ARROW, preserve_index=False)
+           for _, g in pdf.groupby("segment_id", sort=True)]
     )
 
 
@@ -275,15 +296,55 @@ def _build_segments(
     )
     row = bad.select("segment_id", "n_exp", "n_got").first()
     if row is not None:
-        raise ValueError(
-            f"positions build: segment {row['segment_id']} has "
-            f"{row['n_got'] or 0} source docs for {row['n_exp']} indexed "
-            "docs — the docs DataFrame must contain every indexed doc "
-            "exactly once"
-        )
+        raise _coverage_error(row["segment_id"], row["n_got"], row["n_exp"])
     return joined.groupBy("segment_id").applyInPandas(
         lambda p: build_positions_pdf(p), POS_SCHEMA
     )
+
+
+def _coverage_error(seg, n_got, n_exp) -> ValueError:
+    return ValueError(
+        f"positions build: segment {seg} has {n_got or 0} source docs for "
+        f"{n_exp} indexed docs — the docs DataFrame must contain every "
+        "indexed doc exactly once"
+    )
+
+
+def _small_source(docs: DataFrame, content_col: str, id_col: str) -> pd.DataFrame | None:
+    """A string-text source the driver flush takes (``segments.small_docs``)
+    as (ext_id, text) rows; None sends the build to the Spark tier."""
+    from .segments import small_docs
+
+    if docs.schema[content_col].dataType.typeName() != "string":
+        return None
+    src = small_docs(docs.select(F.col(id_col).cast("long").alias("ext_id"),
+                                 F.col(content_col).alias("content")))
+    return None if src is None else src.rename(columns={"content": "text"})
+
+
+def _driver_missing(cat) -> tuple[pd.DataFrame, np.ndarray]:
+    """(doc_map's (segment_id, ext_id) rows, the live segments the
+    sidecar does not cover), read by pyarrow."""
+    dm = cat.read_arrow("doc_map", ["segment_id", "ext_id"]).to_pandas()
+    live = np.unique(dm["segment_id"].to_numpy())
+    if cat.exists("positions"):
+        covered = cat.read_arrow("positions", ["segment_id"]).column(0).to_numpy()
+        live = np.setdiff1d(live, covered)
+    return dm, live
+
+
+def _driver_segments(src: pd.DataFrame, dm: pd.DataFrame, segments: np.ndarray) -> pa.Table:
+    """:func:`_build_segments` in the driver: the source joined with the
+    given segments' doc_map rows, the same coverage check, then
+    :func:`positions_arrow`."""
+    dm = dm[dm["segment_id"].isin(segments)]
+    joined = src.merge(dm, on="ext_id")
+    exp = dm.groupby("segment_id").size()
+    got = joined.groupby("segment_id").size().reindex(exp.index, fill_value=0)
+    bad = exp.index[(got != exp).to_numpy()]
+    if len(bad):
+        raise _coverage_error(bad[0], got[bad[0]], exp[bad[0]])
+    return positions_arrow(joined)
 
 
 def build_positions(
@@ -296,6 +357,14 @@ def build_positions(
 ) -> None:
     """Derive the positions sidecar for every live segment (opt-in, like
     enabling positions in a Lucene field's IndexOptions). Idempotent."""
+    src = _small_source(docs, content_col, id_col)
+    if src is not None:
+        dm, missing = _driver_missing(cat)
+        if cat.exists("positions") and missing.size == 0:
+            return
+        out = _driver_segments(src, dm, np.unique(dm["segment_id"].to_numpy()))
+        cat.write_arrow(out, "positions", sort_by=["term"])
+        return
     if cat.exists("positions") and _missing_segs(spark, cat).limit(1).count() == 0:
         return
     out = _build_segments(spark, cat, docs, None, content_col, id_col)
@@ -314,6 +383,17 @@ def refresh_positions(
     segments missing from the sidecar and append their rows; untouched
     segments are never re-read (rows of dead segments are ignored at query
     time by the live-segment semi-join). Returns #segments built."""
+    src = _small_source(docs, content_col, id_col)
+    if src is not None:
+        dm, missing = _driver_missing(cat)
+        if missing.size == 0:
+            return 0
+        out = _driver_segments(src, dm, missing)
+        if cat.exists("positions"):
+            cat.append_arrow(out, "positions")
+        else:
+            cat.write_arrow(out, "positions", sort_by=["term"])
+        return int(missing.size)
     missing = _missing_segs(spark, cat)
     n_missing = missing.count()  # merge-bounded metadata job
     if n_missing == 0:

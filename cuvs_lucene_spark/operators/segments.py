@@ -22,6 +22,20 @@ Tables emitted (all committed through :class:`IndexCatalog` snapshots):
 - ``terms(segment_id, term, df, cf)`` — sorted term dictionary (H3).
 - ``segment_stats(segment_id, n_docs, n_tokens, avgdl)``.
 
+Two flush tiers write the same rows. For at most
+``DRIVER_FLUSH_MAX_DOCS`` input docs (the measured crossover), with the
+``range`` segmenter, the driver flushes (as Lucene's
+``IndexWriter`` flushes each segment in-process,
+``CuVS2510GPUVectorsWriter.java:128-148``): the caller's frame is read once
+into Arrow (``frames.small_arrow``), ``sha256`` and ``dl`` come from
+:func:`sha256_py` and ``tokenize.doclen_py``, each segment runs
+:func:`build_segment_pdf`, and segdata and ``terms_global`` are written by
+pyarrow through ``IndexCatalog.write_arrow`` (the same snapshot commit);
+``terms_global``, the corpus stats and the lineage fold from the table in
+hand. A build then runs no Spark job beyond that read. Otherwise, and for
+the ``hash`` / ``partition`` segmenters, the Spark flush runs: one shuffle
+by segment, the same kernel per group, one parquet write.
+
 DocID assignment rule (frozen; merge and query depend on it):
 within a segment, docs sorted by ``ext_id`` ascending get ``doc_id`` 0..n-1.
 This is also the index-sort hook (H8/B6): sorting by a key column first
@@ -30,16 +44,20 @@ simply permutes ext_id order upstream.
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
-from cuvs_lucene_spark.functions.tokenize import doclen_expr, tokenize_py
+from cuvs_lucene_spark.frames import arrow_schema, small_arrow
+from cuvs_lucene_spark.functions.tokenize import doclen_expr, doclen_py, tokenize_py
 from cuvs_lucene_spark.functions.varint import varint_encode
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
 
@@ -66,6 +84,26 @@ SEGDATA_SCHEMA = (
     "first_doc int, last_doc int, n int, max_tf int, sum_tf long, "
     "doc_deltas binary, tfs binary, doc_id int, ext_id long, sha256 string, dl int"
 )
+SEGDATA_ARROW = arrow_schema(SEGDATA_SCHEMA)
+
+# the write order: kind + term leading, so parquet row-group min/max stats
+# prune the two query-side scans — postings lookups (kind='post',
+# term_bucket/term IN ...) and the doc_map/norms/stats views each touch
+# only their kind's row groups
+SEGDATA_SORT = ["kind", "term_bucket", "term", "segment_id", "block_id", "doc_id"]
+
+DRIVER_FLUSH_MAX_DOCS = 8_000  # builds, epochs, deletes and positions
+                               # builds of at most this many input rows
+                               # flush in the driver
+# The driver flushes on one core, the Spark flush over the executors.
+# Measured on fixtures.generate_documents_pdf docs (20-400 tokens each) on
+# local[4], rows_per_segment = n/4 (four segments, so the Spark flush runs
+# four-way), a cached input frame, medians of 3 warm runs, driver/Spark s,
+# identical rows: build_index 5k 0.95/1.75, 8k 1.22/1.69, 10k 1.62/1.36,
+# 12k 1.91/1.60, 15k 2.23/1.80, 20k 2.84/2.15, 50k 6.64/4.15, 100k
+# 14.73/8.37; build_positions 5k 0.53/1.16, 8k 0.78/0.91, 10k 0.95/0.91,
+# 20k 2.00/1.36, 100k 10.89/5.89. The crossover lies between 8k and 10k
+# docs, so the bound is 8,000.
 
 SEGDATA_VIEWS: dict[str, tuple[str, list[str]]] = {
     "postings": (
@@ -344,9 +382,135 @@ def build_norms_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def sha256_py(texts: pd.Series) -> list:
+    """The driver's ``F.sha2(content, 256)``: hex SHA-256 of the UTF-8
+    text, null for a null text."""
+    return [None if pd.isna(t) else hashlib.sha256(t.encode("utf-8")).hexdigest()
+            for t in texts]
+
+
+def small_docs(docs: DataFrame) -> pd.DataFrame | None:
+    """A caller's (ext_id, content) frame read into the driver when the
+    driver flush takes it: at most ``DRIVER_FLUSH_MAX_DOCS`` rows, no null
+    id or content (the Spark flush keeps its own handling of those).
+    None otherwise."""
+    at = small_arrow(docs, DRIVER_FLUSH_MAX_DOCS)
+    if at is None or at.column("ext_id").null_count or at.column("content").null_count:
+        return None
+    return at.to_pandas()
+
+
+def range_segments(ext_id: np.ndarray, rows_per_segment: int) -> np.ndarray:
+    """The ``range`` segmenter in the driver: Spark's
+    ``CAST(ext_id / rows_per_segment AS BIGINT)`` (a double division
+    truncated toward zero)."""
+    return (ext_id.astype(np.float64) / rows_per_segment).astype(np.int64)
+
+
+def flush_segdata(pdf: pd.DataFrame, cfg: IndexConfig) -> pa.Table:
+    """The driver flush: (segment_id, ext_id, content) docs → segdata rows,
+    :func:`build_segment_pdf` per segment, with ``sha256`` and ``dl``
+    computed as the Spark flush's JVM side computes them."""
+    pdf = pdf.assign(sha256=sha256_py(pdf["content"]), dl=doclen_py(pdf["content"]))
+    return pa.concat_tables(
+        [SEGDATA_ARROW.empty_table()]
+        + [pa.Table.from_pandas(build_segment_pdf(g, cfg), SEGDATA_ARROW, preserve_index=False)
+           for _, g in pdf.groupby("segment_id", sort=True)]
+    )
+
+
+def _fold_terms_global(segdata: pa.Table) -> pa.Table:
+    """``terms_global`` (term, df, cf) from segdata's term rows in hand —
+    the Spark flush's ``groupBy("term").agg(sum(df), sum(cf))``."""
+    terms = segdata.filter(pc.equal(segdata.column("kind"), "term"))
+    g = terms.group_by("term").aggregate([("n", "sum"), ("sum_tf", "sum")])
+    return pa.table([g.column("term"), g.column("n_sum").cast(pa.int64()),
+                     g.column("sum_tf_sum").cast(pa.int64())],
+                    schema=arrow_schema("term string, df long, cf long"))
+
+
 # ---------------------------------------------------------------------------
 # Driver-side orchestration
 # ---------------------------------------------------------------------------
+
+
+def _spark_flush(
+    spark: SparkSession, docs: DataFrame, base: DataFrame, cat: IndexCatalog,
+    cfg: IndexConfig, segmenter: str,
+) -> None:
+    """The Spark flush of segdata. ONE shuffle (groupBy segment), ONE
+    pandas pass per segment emitting postings + doc_map + norms + term
+    dictionary + stats, ONE plain parquet write. Mirrors a Lucene flush
+    writing all per-segment files together — and keeps the serial
+    (driver-side) fraction of the build near zero, which is what the N→4N
+    scaling efficiency lives on. sha256/dl are computed JVM-side in the map
+    stage (codegen'd), not in Python. Hot-term skew cannot bite: work is
+    partitioned by segment, never by term. Dynamic-partition (partitionBy)
+    writes are NOT used anywhere — their rename-based commit degrades ~4x
+    from 2→32 concurrent writers (measured); sorted row-group min/max stats
+    give kind/term pruning instead."""
+    # a single small parquet file would serialize the whole build into one
+    # task; spread the scan before the segment shuffle. File count proxies
+    # scan parallelism without forcing an RDD conversion of the plan.
+    try:
+        n_parts = len(docs.inputFiles())
+    except Exception:
+        n_parts = 0
+    if n_parts == 0:
+        n_parts = base.rdd.getNumPartitions()
+    base = assign_segments(base, cfg, segmenter)
+    if n_parts < spark.sparkContext.defaultParallelism:
+        if segmenter == "partition":
+            # the zero-shuffle builder chunks by input partition — spread
+            # by ext_id so the chunking itself parallelizes
+            base = base.repartition(spark.sparkContext.defaultParallelism, "ext_id")
+        else:
+            # repartition directly ON segment_id (deterministic from
+            # ext_id): the flush's groupBy(segment_id) below reuses this
+            # hash partitioning, so the fat `content` column crosses the
+            # wire ONCE — previously an even-spread repartition(ext_id)
+            # was followed by the groupBy's own exchange, shuffling every
+            # document text twice (guide §2.4 share one exchange)
+            base = base.repartition(
+                spark.sparkContext.defaultParallelism, "segment_id"
+            )
+    enriched = base.select(
+        "segment_id",
+        "ext_id",
+        "content",
+        F.sha2(F.col("content"), 256).alias("sha256"),
+        doclen_expr("content").cast("int").alias("dl"),
+    )
+    if segmenter == "partition":
+        # ZERO-shuffle build: input partition ≙ flush batch, exactly the
+        # reference's model (SURVEY §3.1: "input partition ≙ flush
+        # batch; executor task ≙ writer thread"). segment_id derives
+        # from the task partition id; oversized partitions are chunked.
+        # The fat `content` column never crosses the wire. Query results
+        # are segmentation-invariant (property-tested), but resume
+        # determinism requires a stable input layout — use the default
+        # "range" segmenter when ids must map to fixed segments.
+        rps = cfg.rows_per_segment
+
+        def per_partition(batches):
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            pdfs = [b for b in batches if len(b)]
+            if not pdfs:
+                return
+            pdf = pd.concat(pdfs, ignore_index=True).sort_values("ext_id")
+            for i in range(0, len(pdf), rps):
+                chunk = pdf.iloc[i : i + rps].copy()
+                chunk["segment_id"] = PARTITION_BASE + pid * 100_000 + i // rps
+                yield build_segment_pdf(chunk, cfg)
+
+        segdata = enriched.mapInPandas(per_partition, SEGDATA_SCHEMA)
+    else:
+        segdata = enriched.groupBy("segment_id").applyInPandas(
+            lambda pdf: build_segment_pdf(pdf, cfg), SEGDATA_SCHEMA
+        )
+    cat.write(segdata, "segdata", sort_within_partitions=SEGDATA_SORT)
 
 
 def build_index(
@@ -381,110 +545,46 @@ def build_index(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(content_col).cast("string").alias("content"),
     )
-    # a single small parquet file would serialize the whole build into one
-    # task; spread the scan before the segment shuffle. File count proxies
-    # scan parallelism without forcing an RDD conversion of the plan.
-    try:
-        n_parts = len(docs.inputFiles())
-    except Exception:
-        n_parts = 0
-    if n_parts == 0:
-        n_parts = base.rdd.getNumPartitions()
-    base = assign_segments(base, cfg, segmenter)
-    if n_parts < spark.sparkContext.defaultParallelism:
-        if segmenter == "partition":
-            # the zero-shuffle builder chunks by input partition — spread
-            # by ext_id so the chunking itself parallelizes
-            base = base.repartition(spark.sparkContext.defaultParallelism, "ext_id")
-        else:
-            # repartition directly ON segment_id (deterministic from
-            # ext_id): the flush's groupBy(segment_id) below reuses this
-            # hash partitioning, so the fat `content` column crosses the
-            # wire ONCE — previously an even-spread repartition(ext_id)
-            # was followed by the groupBy's own exchange, shuffling every
-            # document text twice (guide §2.4 share one exchange)
-            base = base.repartition(
-                spark.sparkContext.defaultParallelism, "segment_id"
-            )
-
-    # -- stage: the fused segment flush. ONE shuffle (groupBy segment), ONE
-    #    pandas pass per segment emitting postings + doc_map + norms +
-    #    term dictionary + stats, ONE plain parquet write. Mirrors a Lucene
-    #    flush writing all per-segment files together — and keeps the
-    #    serial (driver-side) fraction of the build near zero, which is
-    #    what the N→4N scaling efficiency lives on. sha256/dl are computed
-    #    JVM-side in the map stage (codegen'd), not in Python.
-    #    Hot-term skew cannot bite: work is partitioned by segment, never
-    #    by term. Dynamic-partition (partitionBy) writes are NOT used
-    #    anywhere — their rename-based commit degrades ~4x from 2→32
-    #    concurrent writers (measured); sorted row-group min/max stats
-    #    give kind/term pruning instead.
+    # segdata in hand when this call flushed it in the driver: the later
+    # stages fold from it instead of reading it back
+    segdata = None
     if not (resume and cat.stage_done("segdata")):
-        enriched = base.select(
-            "segment_id",
-            "ext_id",
-            "content",
-            F.sha2(F.col("content"), 256).alias("sha256"),
-            doclen_expr("content").cast("int").alias("dl"),
-        )
-        if segmenter == "partition":
-            # ZERO-shuffle build: input partition ≙ flush batch, exactly the
-            # reference's model (SURVEY §3.1: "input partition ≙ flush
-            # batch; executor task ≙ writer thread"). segment_id derives
-            # from the task partition id; oversized partitions are chunked.
-            # The fat `content` column never crosses the wire. Query results
-            # are segmentation-invariant (property-tested), but resume
-            # determinism requires a stable input layout — use the default
-            # "range" segmenter when ids must map to fixed segments.
-            rps = cfg.rows_per_segment
-
-            def per_partition(batches):
-                from pyspark import TaskContext
-
-                pid = TaskContext.get().partitionId()
-                pdfs = [b for b in batches if len(b)]
-                if not pdfs:
-                    return
-                pdf = pd.concat(pdfs, ignore_index=True).sort_values("ext_id")
-                for i in range(0, len(pdf), rps):
-                    chunk = pdf.iloc[i : i + rps].copy()
-                    chunk["segment_id"] = PARTITION_BASE + pid * 100_000 + i // rps
-                    yield build_segment_pdf(chunk, cfg)
-
-            segdata = enriched.mapInPandas(per_partition, SEGDATA_SCHEMA)
-        else:
-            segdata = enriched.groupBy("segment_id").applyInPandas(
-                lambda pdf: build_segment_pdf(pdf, cfg), SEGDATA_SCHEMA
+        small = small_docs(base) if segmenter == "range" else None
+        if small is not None:
+            small["segment_id"] = range_segments(
+                small["ext_id"].to_numpy(np.int64), cfg.rows_per_segment
             )
-        # sort with kind + term leading so parquet row-group min/max stats
-        # prune the two query-side scans: postings lookups (kind='post',
-        # term_bucket/term IN ...) and the doc_map/norms/stats views each
-        # touch only their kind's row groups
-        cat.write(
-            segdata,
-            "segdata",
-            sort_within_partitions=["kind", "term_bucket", "term", "segment_id", "block_id", "doc_id"],
-        )
-        for name, (where, select) in SEGDATA_VIEWS.items():
-            cat.define_view(name, "segdata", where, select)
+            segdata = flush_segdata(small, cfg)
+            cat.write_arrow(segdata, "segdata", sort_by=SEGDATA_SORT)
+        else:
+            _spark_flush(spark, docs, base, cat, cfg, segmenter)
+        cat.define_views(SEGDATA_VIEWS, "segdata")
         cat.mark_stage("segdata")
 
     # -- stage: global term dictionary (df/cf summed across segments,
     #    sorted by term → a query's idf lookup is one pruned scan of a
     #    compact table instead of an aggregation over per-segment rows)
     if not (resume and cat.stage_done("terms_global")):
-        tg = (
-            cat.read(spark, "terms")
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        )
-        cat.write(tg, "terms_global", sort_within_partitions=["term"])
+        if segdata is not None:
+            cat.write_arrow(_fold_terms_global(segdata), "terms_global", sort_by=["term"])
+        else:
+            tg = (
+                cat.read(spark, "terms")
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            )
+            cat.write(tg, "terms_global", sort_within_partitions=["term"])
         cat.mark_stage("terms_global")
 
     # -- stage: corpus stats + per-partition lineage (tiny scan of the
     #    stats rows; cached in the manifest so queries pay zero jobs)
     if not (resume and cat.stage_done("finalize")):
-        rows = cat.read(spark, "segment_stats").collect()
+        if segdata is not None:
+            rows = (segdata.filter(pc.equal(segdata.column("kind"), "stats"))
+                    .select(["segment_id", "n", "sum_tf"])
+                    .rename_columns(["segment_id", "n_docs", "n_tokens"]).to_pylist())
+        else:
+            rows = cat.read(spark, "segment_stats").collect()
         n = sum(int(r["n_docs"]) for r in rows)
         toks = sum(int(r["n_tokens"]) for r in rows)
         lineage = {

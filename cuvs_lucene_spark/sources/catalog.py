@@ -19,14 +19,21 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import threading
 import time
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "manifest.json"
+
+ROW_GROUP_BYTES = 4 * 1024 * 1024  # parquet row-group target of every write
 
 # manifest format versioning (O12/I5: the reference checks codec
 # header versions on open, CuVS2510GPUVectorsReader.checkVersion:589-601)
@@ -57,6 +64,19 @@ def stats_version(manifest: dict) -> float:
         ),
         default=0,
     )
+
+
+def _put_arrow(at: pa.Table, out: str, sort_by: list[str] | None) -> None:
+    """Write ``at`` as the one parquet file of the new directory ``out``
+    (replacing what a failed earlier attempt left there), sorted as Spark's
+    ``sortWithinPartitions`` sorts (ascending, nulls first), in row groups
+    of about ``ROW_GROUP_BYTES``."""
+    if sort_by:
+        at = at.sort_by([(c, "ascending") for c in sort_by], null_placement="at_start")
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    rows = max(1, ROW_GROUP_BYTES * at.num_rows // max(at.nbytes, 1))
+    pq.write_table(at, os.path.join(out, "part-00000.parquet"), row_group_size=rows)
 
 
 class IndexCatalog:
@@ -169,6 +189,43 @@ class IndexCatalog:
         extra_entry: dict | None = None,
     ) -> str:
         """Write ``df`` as a NEW snapshot of ``table`` and commit atomically."""
+
+        def put(out: str) -> None:
+            w = df
+            if sort_within_partitions:
+                w = w.sortWithinPartitions(*sort_within_partitions)
+            writer = w.write.mode("overwrite")
+            # small row groups: with sorted-within-partition data, parquet
+            # row-group min/max stats become an effective skip index for
+            # the pushed term/kind/segment filters — a selective query then
+            # reads a few MB instead of decompressing whole files (the same
+            # role file-level stats play in Iceberg)
+            writer = writer.option("parquet.block.size", ROW_GROUP_BYTES)
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(out)
+
+        return self._commit_snapshot(table, put, lineage, extra_entry)
+
+    def write_arrow(
+        self,
+        at: pa.Table,
+        table: str,
+        sort_by: list[str] | None = None,
+        lineage: dict[str, Any] | None = None,
+        extra_entry: dict | None = None,
+    ) -> str:
+        """:meth:`write` of a driver-held Arrow table: one parquet file
+        written by pyarrow, then the same commit."""
+        return self._commit_snapshot(
+            table, lambda out: _put_arrow(at, out, sort_by), lineage, extra_entry
+        )
+
+    def _commit_snapshot(self, table: str, put, lineage, extra_entry) -> str:
+        """``put(out)`` writes the new snapshot directory; then one manifest
+        swap makes it the table's snapshot, and snapshots past the retained
+        history are pruned. A failure before the swap leaves nothing
+        visible."""
         with self._mlock:
             m = self.read_manifest()
             prev = m["tables"].get(table)
@@ -177,19 +234,7 @@ class IndexCatalog:
             snap_n = (prev["n"] + 1) if prev else (m["tables"].get(table, {}).get("n", 0) + 1)
         snap = f"snap-{snap_n:06d}"
         out = os.path.join(self.root, table, snap)
-        w = df
-        if sort_within_partitions:
-            w = w.sortWithinPartitions(*sort_within_partitions)
-        writer = w.write.mode("overwrite")
-        # small row groups: with sorted-within-partition data, parquet
-        # row-group min/max stats become an effective skip index for the
-        # pushed term/kind/segment filters — a selective query then reads
-        # a few MB instead of decompressing whole files (the same role
-        # file-level stats play in Iceberg)
-        writer = writer.option("parquet.block.size", 4 * 1024 * 1024)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
+        put(out)
         hist = (prev.get("history", []) if prev else [])
         if prev:
             hist = hist + [prev["snapshot"]]
@@ -214,21 +259,6 @@ class IndexCatalog:
             if d.startswith("snap-") and d not in keep:
                 shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
         return out
-
-    def define_view(self, table: str, of_table: str, where: str, select: list[str]) -> None:
-        """Register ``table`` as a filtered/projected view of another table
-        (the fused single-pass segment build writes ONE unified table; the
-        logical tables — postings, doc_map, norms, terms, segment_stats —
-        are kind-filtered views of it). A later ``write(table)`` (e.g. by a
-        merge) materializes the table and replaces the view."""
-        with self._mlock:
-            m = self.read_manifest()
-            m["tables"][table] = {
-                "view": {"of": of_table, "where": where, "select": select},
-                "snapshot": None,
-                "n": m["tables"].get(table, {}).get("n", 0),
-            }
-            self._write_manifest(m)
 
     def read(
         self, spark: SparkSession, table: str, merge_schema: bool = False
@@ -284,8 +314,13 @@ class IndexCatalog:
         return df
 
     def define_views(self, views: dict, of_table: str) -> None:
-        """Register several views in ONE atomic manifest commit (used by
-        merge so the view set can never be observed half-updated)."""
+        """Register ``views`` ({name: (where, select)}) as filtered /
+        projected views of ``of_table`` in ONE atomic manifest commit, so
+        the view set can never be observed half-updated. The fused segment
+        flush writes ONE unified table; the logical tables — postings,
+        doc_map, norms, terms, segment_stats — are kind-filtered views of
+        it. A later ``write`` of a view's name (e.g. by a merge)
+        materializes the table and replaces the view."""
         with self._mlock:
             m = self.read_manifest()
             for name, (where, select) in views.items():
@@ -312,6 +347,34 @@ class IndexCatalog:
         REPLACES the previous increment instead of duplicating it. The new
         increment is written and committed BEFORE the old directory is
         removed, so a crash at any point leaves a readable snapshot."""
+
+        def put(out: str) -> None:
+            df.write.mode("overwrite").option(
+                "parquet.block.size", ROW_GROUP_BYTES
+            ).parquet(out)
+
+        return self._commit_append(table, put, lambda: self.write(df, table), tag, extra_entry)
+
+    def append_arrow(
+        self,
+        at: pa.Table,
+        table: str,
+        sort_by: list[str] | None = None,
+        tag: str | None = None,
+        extra_entry: dict | None = None,
+    ) -> str:
+        """:meth:`append` of a driver-held Arrow table: one parquet file
+        written by pyarrow, then the same commit."""
+        return self._commit_append(
+            table, lambda out: _put_arrow(at, out, sort_by),
+            lambda: self.write_arrow(at, table, sort_by), tag, extra_entry,
+        )
+
+    def _commit_append(self, table: str, put, first, tag, extra_entry) -> str:
+        """``put(out)`` writes the increment's directory, then one manifest
+        swap adds it (replacing the increment of the same ``tag``) and the
+        replaced directory is removed; ``first()`` writes the table instead
+        when it does not exist yet."""
         with self._mlock:
             m = self.read_manifest()
             ent = m["tables"].get(table)
@@ -321,14 +384,12 @@ class IndexCatalog:
                 )
             n = (ent["n"] + 1) if ent is not None else 0
         if ent is None:
-            return self.write(df, table)
+            return first()
         snap = f"snap-{n:06d}"
         out = os.path.join(self.root, table, snap)
-        df.write.mode("overwrite").option(
-            "parquet.block.size", 4 * 1024 * 1024
-        ).parquet(out)
+        put(out)
         with self._mlock:
-            # RE-READ at commit time (see write()): keep entries a
+            # RE-READ at commit time (see _commit_snapshot): keep entries a
             # concurrent writer of another table committed meanwhile
             m = self.read_manifest()
             ent = m["tables"][table]
@@ -349,6 +410,41 @@ class IndexCatalog:
         if prev:
             shutil.rmtree(os.path.join(self.root, table, prev), ignore_errors=True)
         return out
+
+    def read_arrow(self, table: str, columns: list[str] | None = None) -> pa.Table:
+        """The committed rows of ``table`` read by ``pyarrow.dataset`` over
+        its live directories — no Spark job. Honours dropped segments and
+        views whose filter is ``kind = '<kind>'`` and whose select items
+        are columns or ``column AS alias``; ``columns`` projects (by output
+        name)."""
+        tables = self.read_manifest()["tables"]
+        ent, where, names = tables.get(table), None, columns
+        if ent is not None and ent.get("view"):
+            v = ent["view"]
+            kind = re.fullmatch(r"kind = '(\w+)'", v["where"])
+            items = [re.fullmatch(r"(\w+)(?: AS (\w+))?", c) for c in v["select"]]
+            if kind is None or None in items:
+                raise ValueError(f"read_arrow: view {table!r} is not a kind filter "
+                                 f"with a plain projection: {v}")
+            src = {(m[2] or m[1]): m[1] for m in items}
+            names = columns or list(src)
+            columns = [src[c] for c in names]
+            where = pc.field("kind") == kind[1]
+            table, ent = v["of"], tables.get(v["of"])
+        if ent is None or ent.get("snapshot") is None:
+            raise FileNotFoundError(f"table {table!r} not committed in {self.root}")
+        dropped = [int(s) for s in ent.get("dropped_segments") or ()]
+        if dropped:
+            keep = ~pc.field("segment_id").isin(dropped)
+            where = keep if where is None else where & keep
+        dirs = [os.path.join(self.root, table, d)
+                for d in [ent["snapshot"], *ent.get("appends", [])]]
+        files = sorted(
+            os.path.join(d, f) for d in dirs for f in os.listdir(d)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+        at = ds.dataset(files, format="parquet").to_table(columns=columns, filter=where)
+        return at if names is None else at.rename_columns(names)
 
     def table_lineage(self, table: str) -> dict:
         """Per-table lineage metrics recorded at write time (e.g. row
@@ -400,6 +496,9 @@ class CommitPointReader(IndexCatalog):
 
     def append(self, *a, **kw):
         raise PermissionError("commit-point reader is read-only")
+
+    write_arrow = write
+    append_arrow = append
 
     def mark_stage(self, *a, **kw):
         raise PermissionError("commit-point reader is read-only")

@@ -23,11 +23,21 @@ Exactly-once: foreachBatch is AT-LEAST-once, so every epoch append is
 tagged ``epoch_N`` and :meth:`IndexCatalog.append` replaces (not
 duplicates) the increment on redelivery; a fully committed epoch is
 skipped via its manifest stage checkpoint.
+
+A text epoch flushes on the same two tiers as ``segments.build_index``:
+in the driver when its frame holds at most
+``segments.DRIVER_FLUSH_MAX_DOCS`` rows (one read of the frame, then
+``segments.flush_segdata`` and, when the index has a positions sidecar,
+``positions.build_positions_pdf`` per uncovered segment, appended by
+pyarrow through ``IndexCatalog.append_arrow`` — no other Spark job), else
+as Spark ``applyInPandas`` jobs. Vector epochs run on Spark.
 """
 
 from __future__ import annotations
 
 import dataclasses
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,10 +45,15 @@ from pyspark.sql import functions as F
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.functions.tokenize import doclen_expr
 from cuvs_lucene_spark.operators.segments import (
+    SEGDATA_ARROW,
     SEGDATA_SCHEMA,
+    SEGDATA_SORT,
     SEGDATA_VIEWS,
     build_segment_pdf,
+    flush_segdata,
     index_term_buckets,
+    range_segments,
+    small_docs,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -59,31 +74,11 @@ def _with_epoch_segment(df: DataFrame, epoch: int, rows_per_segment: int) -> Dat
     )
 
 
-def incremental_add(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    docs: DataFrame,
-    cfg: IndexConfig,
-    epoch: int,
-    content_col: str = "content",
-    id_col: str = "ext_id",
+def _spark_epoch(
+    spark: SparkSession, cat: IndexCatalog, base: DataFrame, cfg: IndexConfig, epoch: int
 ) -> None:
-    """Build one epoch's segments from a (micro-)batch and append them.
-
-    Same kernels as the batch build (B1-B8); only the segment namespace and
-    the commit mode (tagged append vs overwrite) differ. Idempotent per
-    epoch: a redelivered epoch replaces its own increment (see module
-    docstring), so a crash between manifest commit and streaming
-    checkpoint commit cannot double postings/norms rows.
-    """
-    if cat.stage_done(f"epoch_{epoch}"):
-        return  # epoch fully committed earlier — redelivery is a no-op
-    # postings are bucketed as the index's existing ones (query pruning)
-    cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat, cfg))
-    base = docs.select(
-        F.col(id_col).cast("long").alias("ext_id"),
-        F.col(content_col).cast("string").alias("content"),
-    )
+    """An epoch's flush on Spark: ``base`` (ext_id, content) → segdata (and
+    positions) appends, tagged ``epoch_N``."""
     base = _with_epoch_segment(base, epoch, cfg.rows_per_segment)
     enriched = base.select(
         "segment_id",
@@ -94,13 +89,7 @@ def incremental_add(
     )
     segdata = enriched.groupBy("segment_id").applyInPandas(
         lambda pdf: build_segment_pdf(pdf, cfg), SEGDATA_SCHEMA
-    ).sortWithinPartitions("kind", "term_bucket", "term", "segment_id", "block_id", "doc_id")
-    if not cat.exists("segdata"):
-        # empty base snapshot + views, so every epoch (including the first)
-        # lands as a tagged, replace-on-redelivery increment
-        cat.write(spark.createDataFrame([], SEGDATA_SCHEMA), "segdata")
-        for name, (where, select) in SEGDATA_VIEWS.items():
-            cat.define_view(name, "segdata", where, select)
+    ).sortWithinPartitions(*SEGDATA_SORT)
     cat.append(segdata, "segdata", tag=f"epoch_{epoch}")
     # positions sidecar maintenance: when the index opted into positions
     # (build_positions ran), every epoch appends its segments' position
@@ -133,6 +122,58 @@ def incremental_add(
                 .applyInPandas(lambda p: build_positions_pdf(p), POS_SCHEMA)
             )
             cat.append(pos, "positions", tag=f"epoch_{epoch}")
+
+
+def incremental_add(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    docs: DataFrame,
+    cfg: IndexConfig,
+    epoch: int,
+    content_col: str = "content",
+    id_col: str = "ext_id",
+) -> None:
+    """Build one epoch's segments from a (micro-)batch and append them.
+
+    Same kernels as the batch build (B1-B8); only the segment namespace and
+    the commit mode (tagged append vs overwrite) differ. Idempotent per
+    epoch: a redelivered epoch replaces its own increment (see module
+    docstring), so a crash between manifest commit and streaming
+    checkpoint commit cannot double postings/norms rows.
+    """
+    if cat.stage_done(f"epoch_{epoch}"):
+        return  # epoch fully committed earlier — redelivery is a no-op
+    # postings are bucketed as the index's existing ones (query pruning)
+    cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat, cfg))
+    base = docs.select(
+        F.col(id_col).cast("long").alias("ext_id"),
+        F.col(content_col).cast("string").alias("content"),
+    )
+    if not cat.exists("segdata"):
+        # empty base snapshot + views, so every epoch (including the first)
+        # lands as a tagged, replace-on-redelivery increment
+        cat.write_arrow(SEGDATA_ARROW.empty_table(), "segdata")
+        cat.define_views(SEGDATA_VIEWS, "segdata")
+    small = small_docs(base)
+    if small is None:
+        _spark_epoch(spark, cat, base, cfg, epoch)
+    else:
+        small["segment_id"] = _epoch_base(epoch) + np.mod(
+            range_segments(small["ext_id"].to_numpy(np.int64), cfg.rows_per_segment),
+            EPOCH_STRIDE,
+        )
+        tag = f"epoch_{epoch}"
+        cat.append_arrow(flush_segdata(small, cfg), "segdata", sort_by=SEGDATA_SORT, tag=tag)
+        if cat.exists("positions"):
+            # as in _spark_epoch: only segments the sidecar does
+            # not cover yet, and no append when every one is covered
+            from cuvs_lucene_spark.operators.positions import positions_arrow
+
+            covered = cat.read_arrow("positions", ["segment_id"]).column(0).to_numpy()
+            todo = small[~small["segment_id"].isin(covered)]
+            if len(todo):
+                cat.append_arrow(positions_arrow(todo.rename(columns={"content": "text"})),
+                                 "positions", tag=tag)
     cat.mark_stage(f"epoch_{epoch}", n_epoch=epoch)
 
 

@@ -126,6 +126,15 @@ def test_bq_rerank_cosine(spark, ccat):
         assert sc == pytest.approx(float(s[i]), abs=1e-9)
 
 
+@pytest.mark.parametrize("mode", ["auto", "ivf", "exact"])
+def test_ann_topk_defaults_to_the_build_metric(spark, ccat, mode):
+    """A plain ``ann_topk`` on a cosine index searches by cosine, as the
+    other search entry points do: it equals the explicit call."""
+    plain = ann_topk(spark, ccat, X[42], k=5, mode=mode, cfg=CFG).collect()
+    explicit = ann_topk(spark, ccat, X[42], k=5, metric="cosine", mode=mode, cfg=CFG).collect()
+    assert plain == explicit
+
+
 def test_metric_mismatch_rejected(spark, ccat):
     with pytest.raises(ValueError, match="does not match index build metric"):
         ann_topk(spark, ccat, X[0], k=5, metric="l2", mode="ivf", cfg=CFG).collect()

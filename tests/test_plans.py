@@ -519,8 +519,24 @@ def test_ann_query_job_counts(spark, ann_cat, spark_tier):
 def test_ann_resident_query_job_counts(spark, ann_cat):
     """Under the default budget every ANN search is served from the
     resident pack: 0 warm jobs, 1 with a DataFrame filter (its head
-    collect) and 1 for knn_join_ivf (the read of its query side)."""
-    counts = _warm_job_counts(spark, _ann_calls(spark, ann_cat), "resident")
+    collect) and 1 for knn_join_ivf (the read of its query side); a query
+    side built in the driver (a LocalRelation) is read with none, and
+    joins as the same rows read by a job."""
+    import cuvs_lucene_spark.operators.ann as A
+
+    calls = _ann_calls(spark, ann_cat)
+    cat, _ = ann_cat
+    ids = [0, 17, 300]
+    local = spark.createDataFrame(
+        [(i, [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2) for i in ids],
+        "q_id long, q_vec array<float>").select("q_id", "q_vec")
+    local = spark.createDataFrame(local.toArrow())
+    assert local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == \
+        "LocalRelation"
+    calls["knn_join_ivf_local"] = lambda: A.knn_join_ivf(spark, cat, local, k=3)
+    assert (sorted(calls["knn_join_ivf_local"]().collect())
+            == sorted(calls["knn_join_ivf"]().collect()))
+    counts = _warm_job_counts(spark, calls, "resident")
     want = {m: 0 for m in counts}
     want.update(ivf_df_filter=1, knn_join_ivf=1)
     assert counts == want

@@ -43,6 +43,14 @@ def test_incremental_epochs_equal_batch(spark, tmp_path):
     assert _topk(spark, cat, ["join", "vector"]) == _topk(spark, batch_cat, ["join", "vector"])
 
 
+def test_incremental_epochs_equal_batch_on_the_spark_flush(spark, tmp_path, monkeypatch):
+    """The same, with the epochs and the batch build on the Spark flush."""
+    import cuvs_lucene_spark.operators.segments as S
+
+    monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_DOCS", 0)
+    test_incremental_epochs_equal_batch(spark, tmp_path)
+
+
 def test_structured_streaming_ingest(spark, tmp_path):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     src = str(tmp_path / "src")

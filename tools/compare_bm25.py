@@ -10,6 +10,14 @@ cold and then warm (after a batch admitted every query term); then after
 a delete and after a merge (the sidecar refreshed). Scores are written
 as ``float.hex`` so the comparison is bit for bit.
 
+The index goes through a build, the positions build, one epoch
+(``incremental_add`` of 40 re-keyed docs, with its positions append), a
+delete and a merge. ``--flush driver`` (the default) runs the write path
+as a small index runs it, in the driver; ``--flush spark`` sets
+``segments.DRIVER_FLUSH_MAX_DOCS`` to 0, so every write runs the Spark
+flush (a checkout without the driver flush runs its Spark flush either
+way).
+
 The tier axis: ``--tier resident`` (the default budget, so every scenario
 the resident tier serves runs in the driver) or ``--tier spark`` (the
 resident text budget, ``resident.TEXT_RESIDENT_MAX_BYTES``, set to 0, so every scenario runs on the Spark tier). A
@@ -18,6 +26,7 @@ each tier's dump against it and the two tiers against each other.
 
 Usage (from the repo root of each checkout):
     python tools/compare_bm25.py dump OUT.json SF_DIR [--tier resident|spark]
+                                  [--flush driver|spark]
     python tools/compare_bm25.py diff A.json B.json [--skip SUBSTR ...]
 """
 
@@ -114,7 +123,7 @@ def _rows(df, batch=False):
     return [[e, s.hex()] for e, s in sorted(rows, key=lambda x: (-x[1], x[0]))]
 
 
-def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
+def dump(out_path: str, sf_dir: str, tier: str = "resident", flush: str = "driver") -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -123,7 +132,9 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     from cuvs_lucene_spark.operators.deletes import delete_docs
     from cuvs_lucene_spark.operators.merge import merge_segments
     from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
+    from cuvs_lucene_spark.operators import segments
     from cuvs_lucene_spark.operators.segments import build_index
+    from cuvs_lucene_spark.streaming.ingest import incremental_add
 
     spark = (
         SparkSession.builder.master("local[2]")
@@ -140,6 +151,10 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
         resident.TEXT_RESIDENT_MAX_BYTES = 0
     elif tier != "resident":
         raise ValueError(f"unknown tier {tier!r}; expected resident or spark")
+    if flush == "spark":
+        segments.DRIVER_FLUSH_MAX_DOCS = 0
+    elif flush != "driver":
+        raise ValueError(f"unknown flush {flush!r}; expected driver or spark")
     cfg = IndexConfig(rows_per_segment=64, block_size=16, prune_range=64, term_buckets=8)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     root = tempfile.mkdtemp(prefix="compare_bm25_")
@@ -181,6 +196,9 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     for _ in range(2):  # admits every batch term into the impact cache
         B.bm25_topk_batch(spark, cat, {"all": {"terms": TERMS, "k": 3}}, cfg).collect()
     run("warm", ["nofilter", "setfilter", "overcap"])
+    epoch = docs.filter(F.col("doc_id") < 40).select(
+        (F.col("doc_id") + 100_000).alias("doc_id"), "text")
+    incremental_add(spark, cat, epoch, cfg, epoch=0, content_col="text", id_col="doc_id")
     delete_docs(spark, cat, docs.filter(F.col("doc_id") % 7 == 0)
                 .select(F.col("doc_id").alias("ext_id")))
     run("deleted", ["nofilter", "setfilter", "overcap"])
@@ -193,7 +211,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident") -> None:
     with open(out_path, "w") as f:
         json.dump(out, f, indent=0, sort_keys=True)
     n_rows = sum(len(v) for v in out.values())
-    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows ({tier} tier)")
+    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows ({tier} tier, {flush} flush)")
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)
 
@@ -214,8 +232,9 @@ def diff(a_path: str, b_path: str, skip: list[str]) -> int:
 
 def main() -> int:
     if sys.argv[1] == "dump":
-        tier = sys.argv[sys.argv.index("--tier") + 1] if "--tier" in sys.argv else "resident"
-        dump(sys.argv[2], sys.argv[3], tier)
+        opt = {o: sys.argv[sys.argv.index(f"--{o}") + 1]
+               for o in ("tier", "flush") if f"--{o}" in sys.argv}
+        dump(sys.argv[2], sys.argv[3], **opt)
         return 0
     skip = sys.argv[sys.argv.index("--skip") + 1:] if "--skip" in sys.argv else []
     return diff(sys.argv[2], sys.argv[3], skip)
