@@ -8,12 +8,13 @@ table; queries apply it as a pre-filter mask inside the scorer
 (never post-filter — S10 semantics); merges drop tombstoned docs and
 clear their tombstones.
 
-A delete of at most ``segments.DRIVER_FLUSH_MAX_DOCS`` ids runs in the
+A delete of at most ``segments.DRIVER_FLUSH_MAX_DOCS`` ids on an index
+whose segdata fits ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES`` runs in the
 driver: the id frame is read once (``frames.small_arrow``), unioned with
 the committed tombstones read by pyarrow, written as one file through
 ``IndexCatalog.write_arrow``, and the live count is a set difference over
 doc_map's ``ext_id``s — no other Spark job. A larger (or unbounded) id
-frame runs the Spark union, write and anti-join.
+frame, or a larger index, runs the Spark union, write and anti-join.
 """
 
 from __future__ import annotations
@@ -30,10 +31,10 @@ from cuvs_lucene_spark.sources.catalog import IndexCatalog
 def delete_docs(spark: SparkSession, cat: IndexCatalog, ext_ids: DataFrame) -> int:
     """Tombstone the given docs (DataFrame with an ``ext_id`` column).
     Idempotent: re-deleting is a no-op. Returns live doc count after."""
-    from cuvs_lucene_spark.operators.segments import DRIVER_FLUSH_MAX_DOCS
+    from cuvs_lucene_spark.operators.segments import DRIVER_FLUSH_MAX_DOCS, driver_index
 
     ids = ext_ids.select(F.col("ext_id").cast("long"))
-    small = small_arrow(ids, DRIVER_FLUSH_MAX_DOCS)
+    small = small_arrow(ids, DRIVER_FLUSH_MAX_DOCS) if driver_index(cat) else None
     if small is not None:
         return _delete_in_driver(cat, small.column(0))
     new = ids.distinct()
@@ -60,7 +61,7 @@ def _delete_in_driver(cat: IndexCatalog, ids: pa.ChunkedArray) -> int:
     tomb = pc.unique(ids)
     cat.write_arrow(pa.table([tomb], schema=arrow_schema("ext_id long")), "tombstones",
                     lineage={"n": len(tomb)})
-    dm = cat.read_arrow("doc_map", ["ext_id"]).column(0)
+    dm = cat.read_arrow("segdata", ["ext_id"], where=pc.field("kind") == "doc").column(0)
     return len(dm) - (pc.sum(pc.is_in(dm, value_set=tomb, skip_nulls=True)).as_py() or 0)
 
 

@@ -45,12 +45,14 @@ Positions are an OPT-IN sidecar (like Lucene's per-field IndexOptions):
 ``doc_map``. It flushes on the two tiers of ``segments.build_index``: a
 source the driver flush takes (``segments.small_docs``: at most
 ``segments.DRIVER_FLUSH_MAX_DOCS`` rows, string text, no null id or text)
-is read once into the driver, joined with doc_map read by pyarrow
+on an index whose segdata fits ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``
+(the driver reads doc_map and the sidecar's segment ids whole) is read
+once into the driver, joined with doc_map read by pyarrow
 (``IndexCatalog.read_arrow``), checked for coverage, built per segment by
 :func:`build_positions_pdf` and written by pyarrow — no other Spark job;
-any other source runs the Spark join and ``applyInPandas``. Both raise the
-same coverage ``ValueError``. After a merge/append changes the segment
-set, phrase queries raise ``PositionsStaleError`` until
+any other source or index runs the Spark join and ``applyInPandas``.
+Both raise the same coverage ``ValueError``. After a merge/append changes
+the segment set, phrase queries raise ``PositionsStaleError`` until
 ``refresh_positions`` re-derives the missing segments (group-wise
 incremental — untouched segments are never re-read; dead segments' rows
 are ignored via a live-segment semi-join, or on the resident tier by
@@ -66,6 +68,7 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,7 +265,8 @@ def _live_segs(spark: SparkSession, cat) -> DataFrame:
 def _missing_segs(spark: SparkSession, cat) -> DataFrame:
     """Live segments the sidecar does not cover (DataFrame — never a
     driver-side set; at 10⁶ segments this stays a metadata-scale
-    anti-join)."""
+    anti-join). The driver flush's :func:`_driver_missing` reads the same
+    set into the driver, only under ``DRIVER_FLUSH_MAX_INDEX_BYTES``."""
     live = _live_segs(spark, cat)
     if not cat.exists("positions"):
         return live
@@ -310,12 +314,16 @@ def _coverage_error(seg, n_got, n_exp) -> ValueError:
     )
 
 
-def _small_source(docs: DataFrame, content_col: str, id_col: str) -> pd.DataFrame | None:
+def _small_source(
+    cat, docs: DataFrame, content_col: str, id_col: str
+) -> pd.DataFrame | None:
     """A string-text source the driver flush takes (``segments.small_docs``)
-    as (ext_id, text) rows; None sends the build to the Spark tier."""
-    from .segments import small_docs
+    as (ext_id, text) rows, on an index small enough for the driver to
+    read its doc_map (``segments.driver_index``); None sends the build to
+    the Spark tier."""
+    from .segments import driver_index, small_docs
 
-    if docs.schema[content_col].dataType.typeName() != "string":
+    if docs.schema[content_col].dataType.typeName() != "string" or not driver_index(cat):
         return None
     src = small_docs(docs.select(F.col(id_col).cast("long").alias("ext_id"),
                                  F.col(content_col).alias("content")))
@@ -325,7 +333,8 @@ def _small_source(docs: DataFrame, content_col: str, id_col: str) -> pd.DataFram
 def _driver_missing(cat) -> tuple[pd.DataFrame, np.ndarray]:
     """(doc_map's (segment_id, ext_id) rows, the live segments the
     sidecar does not cover), read by pyarrow."""
-    dm = cat.read_arrow("doc_map", ["segment_id", "ext_id"]).to_pandas()
+    dm = cat.read_arrow("segdata", ["segment_id", "ext_id"],
+                        where=pc.field("kind") == "doc").to_pandas()
     live = np.unique(dm["segment_id"].to_numpy())
     if cat.exists("positions"):
         covered = cat.read_arrow("positions", ["segment_id"]).column(0).to_numpy()
@@ -357,7 +366,7 @@ def build_positions(
 ) -> None:
     """Derive the positions sidecar for every live segment (opt-in, like
     enabling positions in a Lucene field's IndexOptions). Idempotent."""
-    src = _small_source(docs, content_col, id_col)
+    src = _small_source(cat, docs, content_col, id_col)
     if src is not None:
         dm, missing = _driver_missing(cat)
         if cat.exists("positions") and missing.size == 0:
@@ -383,7 +392,7 @@ def refresh_positions(
     segments missing from the sidecar and append their rows; untouched
     segments are never re-read (rows of dead segments are ignored at query
     time by the live-segment semi-join). Returns #segments built."""
-    src = _small_source(docs, content_col, id_col)
+    src = _small_source(cat, docs, content_col, id_col)
     if src is not None:
         dm, missing = _driver_missing(cat)
         if missing.size == 0:

@@ -164,11 +164,6 @@ def disk_bytes(cat: IndexCatalog, table: str, tables: dict | None = None) -> int
     """Committed bytes of ``table``, memoized per entry (no Spark job)."""
     tables = tables or cat.read_manifest()["tables"]
 
-    def walk():
-        n = sum(
-            os.path.getsize(os.path.join(d, f))
-            for top in cat.table_dirs(table) for d, _, fs in os.walk(top) for f in fs
-        )
-        return n, 0
-
-    return pack(cat).get(("bytes", table), entry_key(cat, table, tables), walk)
+    return pack(cat).get(
+        ("bytes", table), entry_key(cat, table, tables), lambda: (cat.committed_bytes(table), 0)
+    )

@@ -34,7 +34,10 @@ pyarrow through ``IndexCatalog.write_arrow`` (the same snapshot commit);
 ``terms_global``, the corpus stats and the lineage fold from the table in
 hand. A build then runs no Spark job beyond that read. Otherwise, and for
 the ``hash`` / ``partition`` segmenters, the Spark flush runs: one shuffle
-by segment, the same kernel per group, one parquet write.
+by segment, the same kernel per group, one parquet write. Writes whose
+driver work grows with the index, not the input — a delete, a positions
+build or refresh — take the driver flush only while the index's segdata
+fits ``DRIVER_FLUSH_MAX_INDEX_BYTES`` (:func:`driver_index`).
 
 DocID assignment rule (frozen; merge and query depend on it):
 within a segment, docs sorted by ``ext_id`` ascending get ``doc_id`` 0..n-1.
@@ -104,6 +107,26 @@ DRIVER_FLUSH_MAX_DOCS = 8_000  # builds, epochs, deletes and positions
 # 14.73/8.37; build_positions 5k 0.53/1.16, 8k 0.78/0.91, 10k 0.95/0.91,
 # 20k 2.00/1.36, 100k 10.89/5.89. The crossover lies between 8k and 10k
 # docs, so the bound is 8,000.
+
+DRIVER_FLUSH_MAX_INDEX_BYTES = 350 << 20  # deletes and positions builds /
+                                          # refreshes flush in the driver
+                                          # only while segdata's committed
+                                          # bytes fit this
+# Those three read index-wide columns into the driver (a delete doc_map's
+# ext_ids, a positions build or refresh doc_map's (segment_id, ext_id) and
+# the sidecar's segment ids), so their driver work grows with the index,
+# not with the input. Measured with 150-doc refreshes and 15-id deletes on
+# fixtures.generate_documents_pdf indexes (rows_per_segment 25k, positions
+# on) on local[4], medians of 3 warm runs, driver/Spark s: 100k docs
+# (46.1 MB segdata, 66.1 MB positions) refresh 0.146/1.482, delete
+# 0.093/0.580; 400k (168.3 / 262.1 MB) 0.160/1.437, 0.089/0.574; 1M
+# (368.6 / 647.9 MB) 0.232/2.246, 0.110/0.498. At 1M the driver reads
+# 16.1 MB of doc_map and 92.9 MB of sidecar segment ids (11.4M rows) in
+# 10 + 13 ms. No crossover was found; the bound is the largest index
+# measured, rounded down. An epoch reads only its own segment range of
+# the sidecar (row-group statistics prune the rest), so it is not gated:
+# a 150-doc epoch took 0.195 s at 100k and 0.247 s at 1M, against 0.899 /
+# 0.981 s on Spark.
 
 SEGDATA_VIEWS: dict[str, tuple[str, list[str]]] = {
     "postings": (
@@ -398,6 +421,13 @@ def small_docs(docs: DataFrame) -> pd.DataFrame | None:
     if at is None or at.column("ext_id").null_count or at.column("content").null_count:
         return None
     return at.to_pandas()
+
+
+def driver_index(cat: IndexCatalog) -> bool:
+    """Whether a write that reads index-wide columns into the driver may
+    flush there: segdata's committed bytes (file sizes, no Spark job) fit
+    ``DRIVER_FLUSH_MAX_INDEX_BYTES``."""
+    return cat.committed_bytes("segdata") <= DRIVER_FLUSH_MAX_INDEX_BYTES
 
 
 def range_segments(ext_id: np.ndarray, rows_per_segment: int) -> np.ndarray:

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import threading
 import time
@@ -170,14 +169,12 @@ class IndexCatalog:
     def table_dirs(self, table: str) -> list[str]:
         """All live directories of a table: base snapshot + appended
         increments (streaming micro-batch segments land as appends)."""
-        m = self.read_manifest()
-        ent = m["tables"].get(table)
-        if ent is None:
-            return []
-        base = os.path.join(self.root, table, ent["snapshot"])
-        return [base] + [
-            os.path.join(self.root, table, s) for s in ent.get("appends", [])
-        ]
+        ent = self.read_manifest()["tables"].get(table)
+        return [] if ent is None else self._entry_dirs(table, ent)
+
+    def _entry_dirs(self, table: str, ent: dict) -> list[str]:
+        return [os.path.join(self.root, table, s)
+                for s in [ent["snapshot"], *ent.get("appends", [])]]
 
     def write(
         self,
@@ -411,40 +408,39 @@ class IndexCatalog:
             shutil.rmtree(os.path.join(self.root, table, prev), ignore_errors=True)
         return out
 
-    def read_arrow(self, table: str, columns: list[str] | None = None) -> pa.Table:
-        """The committed rows of ``table`` read by ``pyarrow.dataset`` over
-        its live directories — no Spark job. Honours dropped segments and
-        views whose filter is ``kind = '<kind>'`` and whose select items
-        are columns or ``column AS alias``; ``columns`` projects (by output
-        name)."""
-        tables = self.read_manifest()["tables"]
-        ent, where, names = tables.get(table), None, columns
-        if ent is not None and ent.get("view"):
-            v = ent["view"]
-            kind = re.fullmatch(r"kind = '(\w+)'", v["where"])
-            items = [re.fullmatch(r"(\w+)(?: AS (\w+))?", c) for c in v["select"]]
-            if kind is None or None in items:
-                raise ValueError(f"read_arrow: view {table!r} is not a kind filter "
-                                 f"with a plain projection: {v}")
-            src = {(m[2] or m[1]): m[1] for m in items}
-            names = columns or list(src)
-            columns = [src[c] for c in names]
-            where = pc.field("kind") == kind[1]
-            table, ent = v["of"], tables.get(v["of"])
+    def read_arrow(
+        self, table: str, columns: list[str] | None = None, where: pc.Expression | None = None
+    ) -> pa.Table:
+        """The committed rows of the stored table ``table`` read by
+        ``pyarrow.dataset`` over its live directories — no Spark job — less
+        its dropped segments. ``where`` filters (parquet row-group
+        statistics prune on it: segdata's ``kind`` leads its sort, so
+        ``pc.field("kind") == "doc"`` reads doc_map's rows only),
+        ``columns`` projects. Views are not resolved: callers name the
+        stored table and the kind a view filters on."""
+        ent = self.read_manifest()["tables"].get(table)
         if ent is None or ent.get("snapshot") is None:
             raise FileNotFoundError(f"table {table!r} not committed in {self.root}")
         dropped = [int(s) for s in ent.get("dropped_segments") or ()]
         if dropped:
             keep = ~pc.field("segment_id").isin(dropped)
             where = keep if where is None else where & keep
-        dirs = [os.path.join(self.root, table, d)
-                for d in [ent["snapshot"], *ent.get("appends", [])]]
         files = sorted(
-            os.path.join(d, f) for d in dirs for f in os.listdir(d)
+            os.path.join(d, f) for d in self._entry_dirs(table, ent) for f in os.listdir(d)
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
-        at = ds.dataset(files, format="parquet").to_table(columns=columns, filter=where)
-        return at if names is None else at.rename_columns(names)
+        return ds.dataset(files, format="parquet").to_table(columns=columns, filter=where)
+
+    def committed_bytes(self, table: str) -> int:
+        """Bytes of ``table``'s live directories on disk (0 for a view or
+        an absent table) — file sizes only, no Spark job."""
+        ent = self.read_manifest()["tables"].get(table)
+        if ent is None or ent.get("snapshot") is None:
+            return 0
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for top in self._entry_dirs(table, ent) for d, _, fs in os.walk(top) for f in fs
+        )
 
     def table_lineage(self, table: str) -> dict:
         """Per-table lineage metrics recorded at write time (e.g. row

@@ -30,7 +30,11 @@ in the driver when its frame holds at most
 ``segments.flush_segdata`` and, when the index has a positions sidecar,
 ``positions.build_positions_pdf`` per uncovered segment, appended by
 pyarrow through ``IndexCatalog.append_arrow`` — no other Spark job), else
-as Spark ``applyInPandas`` jobs. Vector epochs run on Spark.
+as Spark ``applyInPandas`` jobs. The driver epoch's coverage check reads
+only the sidecar rows of the epoch's own segment range, so its work does
+not grow with the index and, unlike a delete or a positions refresh, it
+is not gated by ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. Vector epochs
+run on Spark.
 """
 
 from __future__ import annotations
@@ -38,6 +42,7 @@ from __future__ import annotations
 import dataclasses
 
 import numpy as np
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,12 +169,17 @@ def incremental_add(
         )
         tag = f"epoch_{epoch}"
         cat.append_arrow(flush_segdata(small, cfg), "segdata", sort_by=SEGDATA_SORT, tag=tag)
-        if cat.exists("positions"):
-            # as in _spark_epoch: only segments the sidecar does
-            # not cover yet, and no append when every one is covered
+        if len(small) and cat.exists("positions"):
+            # as in _spark_epoch: only segments the sidecar does not cover
+            # yet, and no append when every one is covered. Only the
+            # epoch's own segment range is read: row-group statistics
+            # prune the rest of the sidecar, so the read does not grow
+            # with the index
             from cuvs_lucene_spark.operators.positions import positions_arrow
 
-            covered = cat.read_arrow("positions", ["segment_id"]).column(0).to_numpy()
+            seg = pc.field("segment_id")
+            span = (seg >= int(small["segment_id"].min())) & (seg <= int(small["segment_id"].max()))
+            covered = cat.read_arrow("positions", ["segment_id"], where=span).column(0).to_numpy()
             todo = small[~small["segment_id"].isin(covered)]
             if len(todo):
                 cat.append_arrow(positions_arrow(todo.rename(columns={"content": "text"})),

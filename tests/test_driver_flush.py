@@ -7,6 +7,7 @@ read back through Spark with the same types, raise the same errors and
 return the same live counts."""
 
 import pandas as pd
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,15 +106,19 @@ def test_flush_tiers_read_back_with_the_same_types(spark, tiers):
 
 
 def test_read_arrow_equals_spark_read(spark, tiers):
+    """``IndexCatalog.read_arrow`` of a stored table, filtered to a view's
+    kind, holds the view's rows; a view name is not resolved."""
     (d, _), (s, _) = tiers
+    doc = pc.field("kind") == "doc"
     for cat in (d, s):
-        for table, cols in (("doc_map", ["segment_id", "ext_id", "dl"]),
-                            ("terms", ["segment_id", "term", "df"]), ("tombstones", None)):
-            got = cat.read_arrow(table, cols).to_pylist()
-            want = [r.asDict() for r in cat.read(spark, table).select(*(cols or ["*"])).collect()]
-            assert sorted(got, key=repr) == sorted(want, key=repr), table
-    with pytest.raises(ValueError, match="segment_stats"):
-        d.read_arrow("segment_stats")
+        for table, view, cols, where in (
+                ("segdata", "doc_map", ["segment_id", "ext_id", "dl"], doc),
+                ("tombstones", "tombstones", None, None)):
+            got = cat.read_arrow(table, cols, where=where).to_pylist()
+            want = [r.asDict() for r in cat.read(spark, view).select(*(cols or ["*"])).collect()]
+            assert sorted(got, key=repr) == sorted(want, key=repr), view
+    with pytest.raises(FileNotFoundError, match="doc_map"):
+        d.read_arrow("doc_map")
 
 
 @pytest.mark.parametrize("flush", ["driver", "spark"])
@@ -221,3 +226,40 @@ def test_crash_before_the_manifest_swap_leaves_nothing_visible(spark, tmp_path, 
     assert [r[0] for r in cat.read(spark, "tombstones").collect()] == [5]
     fail.clear()
     assert delete_docs(spark, cat, local_frame(spark, "ext_id long", [6, 7])) == 527
+
+
+def test_index_bound_sends_deletes_and_refreshes_to_spark(spark, tmp_path, monkeypatch):
+    """Over ``DRIVER_FLUSH_MAX_INDEX_BYTES`` a small delete and a positions
+    refresh run on Spark (their driver work grows with the index) with the
+    same results; an epoch still flushes in the driver, and its coverage
+    check reads no sidecar row outside its own segment range."""
+    pdf = pd.read_parquet(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
+    local = spark.createDataFrame(pdf[pdf.doc_id < 300])
+    cat = S.build_index(spark, local, str(tmp_path / "idx"), CFG, content_col="text",
+                        id_col="doc_id")
+    build_positions(spark, cat, local, CFG)
+    assert S.driver_index(cat)
+    monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_INDEX_BYTES", 0)
+    assert not S.driver_index(cat)
+    reads = []
+    real = IndexCatalog.read_arrow
+
+    def spy(self, table, columns=None, where=None):
+        out = real(self, table, columns, where)
+        reads.append((table, out.num_rows))
+        return out
+
+    monkeypatch.setattr(IndexCatalog, "read_arrow", spy)
+    epoch = spark.createDataFrame(pdf[pdf.doc_id >= 300].assign(doc_id=lambda p: p.doc_id + 10**5))
+    jobs = {"epoch": _count_jobs(spark, "bound_epoch", lambda: incremental_add(
+        spark, cat, epoch, CFG, epoch=0, content_col="text", id_col="doc_id"))}
+    assert reads == [("positions", 0)]
+    live = []
+    jobs["delete"] = _count_jobs(spark, "bound_delete", lambda: live.append(delete_docs(
+        spark, cat, local_frame(spark, "ext_id long", [3, 4, 100300]))))
+    jobs["refresh"] = _count_jobs(spark, "bound_refresh", lambda: live.append(
+        refresh_positions(spark, cat, local, CFG)))
+    assert reads == [("positions", 0)]
+    assert jobs["epoch"] == 0 and jobs["delete"] > 0 and jobs["refresh"] > 0
+    assert live == [497, 0]
+    assert cat.read_manifest()["tables"]["tombstones"]["lineage"] == {"n": 3}
