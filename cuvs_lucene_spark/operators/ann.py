@@ -2059,6 +2059,12 @@ ANN_MERGE_BASE = 1 << 42  # merged-ann segment namespace: base + (gen << 32)
                           # never reused (merged-away segments drop logically)
 
 
+def _literal_map(m: dict[int, int]):
+    """A long → long map literal: looks values up by key inside the plan,
+    with no join and no job."""
+    return F.create_map(*[F.lit(v).cast("long") for kv in m.items() for v in kv])
+
+
 def merge_ann(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -2136,7 +2142,6 @@ def merge_ann(
         seen.update(g)
     gkey_of = {s: gi for gi, g in enumerate(groups) for s in g}
     merged_segs = sorted(gkey_of)
-    gmap = local_frame(spark, "segment_id long, gkey long", list(gkey_of), list(gkey_of.values()))
 
     def explode_flat(it):
         # distributed un-packing of the merging segments' flat blobs — the
@@ -2158,12 +2163,12 @@ def merge_ann(
                     {"gkey": int(r.gkey), "ext_id": ids, "vector": list(map(list, x))}
                 )
 
-    # pushed isin prunes untouched segments at the parquet scan; the
-    # broadcast join only attaches the gkey
+    # pushed isin prunes untouched segments at the parquet scan; a literal
+    # map attaches the gkey (a broadcast join would run one more job)
     merging = (
         cat.read(spark, "ann_flat")
         .filter(F.col("segment_id").isin(merged_segs))
-        .join(F.broadcast(gmap), "segment_id")
+        .withColumn("gkey", _literal_map(gkey_of)[F.col("segment_id")])
     )
     if tblobs is not None:
         merging = merging.join(tblobs, "segment_id", "left")
@@ -2192,9 +2197,8 @@ def merge_ann(
         base_of[gi] = gen_base + seq
         new_ids[gi] = [gen_base + seq + j for j in range(n_chunks)]
         seq += n_chunks
-    base_df = local_frame(spark, "gkey long, seg_base long", list(base_of), list(base_of.values()))
-    assigned = ranked.join(F.broadcast(base_df), "gkey").select(
-        (F.col("seg_base") + F.floor(F.col("rk") / F.lit(rps))).cast("long")
+    assigned = ranked.select(
+        (_literal_map(base_of)[F.col("gkey")] + F.floor(F.col("rk") / F.lit(rps))).cast("long")
         .alias("segment_id"),
         "ext_id",
         "vector",

@@ -31,8 +31,8 @@ tried, on segments of 20k and 100k docs.
   filter and the tombstones each hold at most ``FILTER_BROADCAST_MAX``
   ids;
 - Spark (:func:`_spark_partials`): one postings scan, one UDF body
-  (:func:`_segment_scorer`) per segment over the norms broadcast, the
-  impact cache or the tombstone / filter cogroup, then a global
+  (:func:`_segment_scorer`) per segment over the norms broadcast or the
+  tombstone / filter cogroup, then a global
   ``orderBy(score desc, ext_id asc).limit(k)`` (a window per query for a
   batch).
 
@@ -81,7 +81,7 @@ def idf(n_docs: int, df: int) -> float:
 _POST_COLS = ("block_id", "first_doc", "last_doc", "n", "max_tf", "doc_deltas", "tfs")
 
 
-def _group_postings(postings: pd.DataFrame, wanted) -> dict[str, dict[str, np.ndarray]]:
+def _group_postings(postings: pd.DataFrame, wanted: set[str]) -> dict[str, dict[str, np.ndarray]]:
     """Posting rows → {term: {col: numpy array}} without pandas groupby /
     itertuples — profiling showed row boxing dominated the scorer (70% of
     the batch path); raw object arrays keep the hot loop in numpy."""
@@ -96,7 +96,7 @@ def _group_postings(postings: pd.DataFrame, wanted) -> dict[str, dict[str, np.nd
     out: dict[str, dict[str, np.ndarray]] = {}
     for a, z in zip(starts, ends):
         t = t_s[a]
-        if wanted is None or t in wanted:
+        if t in wanted:
             out[t] = {c: cols[c][a:z] for c in _POST_COLS}
     return out
 
@@ -167,216 +167,6 @@ def _norms_broadcast(spark: SparkSession, cat: IndexCatalog):
     return bc
 
 
-HOT_POSTINGS_MAX_BYTES = 512 << 20  # per-executor byte budget for the cache
-                                    # (a fraction of executor memory: the
-                                    # working set of a repeated batch in
-                                    # impact form is ~12 bytes per posting)
-HOT_POSTINGS_MAX_LAYERS = 8     # delta broadcasts before consolidation
-
-
-def _hot_cache_key(cat: IndexCatalog, cfg) -> tuple:
-    """Impact-cache identity: manifest version AND the BM25 params the
-    cached contributions were baked with — a different (k1, b) must miss."""
-    m = cat.read_manifest()
-    return (stats_version(m), float(cfg.bm25.k1), float(cfg.bm25.b))
-
-
-def _cache_get(bcs, term: str):
-    """Look a term up across the cache's broadcast layers, newest first
-    (admission is whole-term, so the first hit is the complete
-    per-segment entry dict). ``bcs`` is the tuple returned by
-    :func:`_hot_postings_broadcast`."""
-    for bc in reversed(bcs):
-        d = bc.value.get(term)
-        if d is not None:
-            return d
-    return None
-
-
-def _precompute_entries(
-    spark: SparkSession, cat: IndexCatalog, cfg, idf_of: dict[str, float]
-) -> tuple[dict, dict]:
-    """Impact-cache entries for the given terms (one pruned postings scan):
-    → ({term: {segment: (docs blob, contrib blob)}}, {term: total bytes})."""
-    n, avgdl = corpus_stats(spark, cat)
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    norms_bc = _norms_broadcast(spark, cat)
-    idf_of = dict(idf_of)
-
-    def precompute(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["term", "segment_id", "docs", "contrib"]
-        rows = []
-        if len(pdf):
-            seg = int(pdf["segment_id"].iloc[0])
-            blob = norms_bc.value.get(seg)
-            if blob is not None:
-                dls = np.frombuffer(blob[0], dtype=np.uint32).astype(np.float64)
-                norm_denom = k1 * (1.0 - b + b * dls / avgdl)
-                for t, p in _group_postings(pdf, set(idf_of)).items():
-                    docs, tfs = _decode_term(p)
-                    tfs = tfs.astype(np.float64)
-                    contrib = (
-                        idf_of[t] * tfs * (k1 + 1.0)
-                        / (tfs + norm_denom[docs])
-                    )
-                    rows.append(
-                        (t, seg, docs.astype(np.int32).tobytes(),
-                         contrib.tobytes())
-                    )
-        out = pd.DataFrame(rows, columns=cols)
-        return out.astype({"segment_id": "int64"}) if rows else out.astype(
-            {"term": "object", "segment_id": "int64",
-             "docs": "object", "contrib": "object"}
-        )
-
-    collected = (
-        _query_postings(spark, cat, sorted(idf_of), cfg)
-        .groupby("segment_id")
-        .applyInPandas(
-            precompute, "term string, segment_id long, docs binary, contrib binary"
-        )
-        .collect()
-    )
-    entries: dict[str, dict[int, tuple[bytes, bytes]]] = {}
-    bytes_of: dict[str, int] = {}
-    for r in collected:
-        entries.setdefault(r["term"], {})[int(r["segment_id"])] = (
-            bytes(r["docs"]), bytes(r["contrib"])
-        )
-        bytes_of[r["term"]] = (
-            bytes_of.get(r["term"], 0) + len(r["docs"]) + len(r["contrib"])
-        )
-    return entries, bytes_of
-
-def _hot_postings_broadcast(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    cfg,
-    want_idf: dict[str, float] | None = None,
-    want_df: dict[str, int] | None = None,
-):
-    """Commit-versioned IMPACT CACHE: per (term, segment), the decoded doc
-    ids (int32) and each doc's fully-evaluated BM25 contribution (float64)
-    — idf, tf and the length norm are all FIXED at commit time, so the
-    per-query work left is a fancy-indexed add + top-k. Shipped once per
-    executor as a broadcast (memoized per manifest version, superseded
-    snapshots unpersisted), byte-budgeted (``HOT_POSTINGS_MAX_BYTES``),
-    whole-term admission.
-
-    Admission is purely ACCESS-DRIVEN (demand fill, like a real block
-    cache): terms a batch actually requests (``want_idf``) are admitted
-    on first access while budget remains — each admission round costs
-    ONE pruned scan of exactly the requested terms' postings, so a
-    REPEATED batch over any term set converges to the zero-scan path and
-    the cache converges to the live traffic's working set. Over-budget
-    terms land in a ``denied`` set and stay on the hybrid scan without
-    re-attempting admission. (An earlier design pre-admitted the df-head
-    Zipf terms at first use; that made the first batch after every
-    commit pay a corpus-proportional head scan — linear in corpus size,
-    regardless of what the batch asked for — for terms no query may ever
-    touch. Demand fill bounds every scan by the requesting batch's own
-    term set.)
-
-    This is the block-cache attack on the DRAM-bound repeat-batch path:
-    without it every batch run re-reads the postings parquet, re-ships it
-    through Arrow and re-decodes varint blocks — the bytes that dominate
-    the N→4N query-scaling measurement (the role Lucene's impact/block
-    caches and the OS page cache play for a hot query set; at 100 TB the
-    byte budget keeps it to the working set, which is exactly where batch
-    traffic concentrates).
-
-    Cache key = (manifest version, k1, b): contributions bake the BM25
-    params in, so a query under a different ``cfg`` must NOT reuse them —
-    a params change rebuilds the cache (and a single query's read of it,
-    :func:`_impact_tier`, checks the same key).
-
-    Admissions ship as DELTA broadcasts (only the newly admitted terms'
-    entries cross the wire), consolidated into one broadcast once the
-    layer count exceeds ``HOT_POSTINGS_MAX_LAYERS`` — re-broadcasting the
-    whole half-GB cache to admit a few KB of new terms would make the
-    driver→executor transfer, not the scan, the repeat-batch bottleneck.
-
-    Returns (tuple of broadcasts newest-last, covered_terms frozenset) or
-    ((), frozenset()) when unavailable; look entries up with
-    :func:`_cache_get`."""
-    ver = _hot_cache_key(cat, cfg)
-    hp = getattr(cat, "_hotpost_memo", None)
-    if hp is None or hp["ver"] != ver:
-        if not want_idf:
-            # no requester: nothing to admit (demand fill only) — leave
-            # any stale snapshot in place for the next admitting call to
-            # retire, and report no coverage
-            return (), frozenset()
-        if hp is not None:  # superseded snapshot: drop its broadcasts
-            for old in hp["bcs"]:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-        hp = {
-            "ver": ver, "bcs": [], "terms": frozenset(),
-            "budget": HOT_POSTINGS_MAX_BYTES, "denied": set(),
-        }
-        cat._hotpost_memo = hp
-    if want_idf:
-        missing = {
-            t: v for t, v in want_idf.items()
-            if t not in hp["terms"] and t not in hp["denied"]
-        }
-        if missing and hp["budget"] > 0:
-            # estimated-size pre-filter (df × ~13B): over-budget terms are
-            # denied WITHOUT a scan, and the cumulative estimate bounds
-            # the driver-side assembly of one admission round
-            est_of = want_df or {}
-            cand: dict[str, float] = {}
-            cum = 0
-            for t in sorted(missing):
-                est = int(est_of.get(t, 0)) * 13
-                if est > hp["budget"] or cum + est > 2 * hp["budget"]:
-                    hp["denied"].add(t)
-                    continue
-                cand[t] = missing[t]
-                cum += est
-            missing = cand
-        if missing and hp["budget"] > 0:
-            entries, bytes_of = _precompute_entries(spark, cat, cfg, missing)
-            delta: dict[str, dict[int, tuple[bytes, bytes]]] = {}
-            budget = hp["budget"]
-            for t in sorted(missing):
-                nb = bytes_of.get(t)
-                if nb is None:
-                    hp["denied"].add(t)  # df>0 but no postings rows: never
-                    continue             # retry the scan for it
-                if nb <= budget:
-                    delta[t] = entries[t]
-                    budget -= nb
-                else:
-                    hp["denied"].add(t)
-            if delta:
-                # delta-only broadcast: admitted bytes cross the wire, not
-                # the whole cache; layers consolidate past the cap
-                hp["bcs"].append(spark.sparkContext.broadcast(delta))
-                hp.update(
-                    terms=hp["terms"] | frozenset(delta), budget=budget
-                )
-                if len(hp["bcs"]) > HOT_POSTINGS_MAX_LAYERS:
-                    merged: dict = {}
-                    for layer in hp["bcs"]:
-                        merged.update(layer.value)
-                    bc = spark.sparkContext.broadcast(merged)
-                    for old in hp["bcs"]:
-                        try:
-                            old.unpersist()
-                        except Exception:
-                            pass
-                    hp["bcs"] = [bc]
-        elif missing:
-            hp["denied"].update(missing)
-    if not hp["terms"]:
-        return (), frozenset()
-    return tuple(hp["bcs"]), hp["terms"]
-
-
 def _alive_mask(n_docs: int, tomb, allowed, limit: int | None = None) -> np.ndarray:
     """Docs a query may return: not tombstoned, in the allowed set (when
     one is given) and below the ``visited_limit`` doc id."""
@@ -394,8 +184,7 @@ def _alive_mask(n_docs: int, tomb, allowed, limit: int | None = None) -> np.ndar
 
 def _score_batch_queries(
     specs: dict[str, dict],
-    post: dict[str, tuple[np.ndarray, np.ndarray | None]],
-    impacts: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]],
+    post: dict[str, tuple[np.ndarray, np.ndarray]],
     alive: np.ndarray,
     ext_ids: np.ndarray,
     denom: np.ndarray,
@@ -405,9 +194,7 @@ def _score_batch_queries(
     → (query-id, ext_id, score) arrays, one of each per query with hits.
 
     ``post`` maps each live term with postings here to (doc ids, float64
-    tfs); ``impacts`` memoizes (term, weight) → (doc ids, contribution) and
-    may be pre-seeded from the impact cache, whose terms carry tfs None.
-    ``denom`` is each doc's k1·(1 − b + b·dl/avgdl). A spec (see
+    tfs). ``denom`` is each doc's k1·(1 − b + b·dl/avgdl). A spec (see
     :func:`_weigh`) has scoring ``terms`` with weights ``w``, a ``comb``
     (``sum``; ``dismax``: max + ``tie`` × (sum − max); ``synonym``: tf
     summed across the terms, BM25 applied once with the shared weight),
@@ -416,12 +203,14 @@ def _score_batch_queries(
     must term, at least msm should terms and no exclude term. The top-k
     keeps (score desc, ext_id asc). Contributions add term by term in
     query order in float64, so scores are the same on every tier."""
+    # (term, weight) → (doc ids, contributions), shared by the specs here
+    memo: dict[tuple[str, float], tuple[np.ndarray, np.ndarray]] = {}
 
     def contrib(t: str, w: float):
-        c = impacts.get((t, w))
+        c = memo.get((t, w))
         if c is None:
             docs, tfs = post[t]
-            c = impacts[(t, w)] = (docs, w * tfs * (k1 + 1.0) / (tfs + denom[docs]))
+            c = memo[(t, w)] = (docs, w * tfs * (k1 + 1.0) / (tfs + denom[docs]))
         return c
 
     n_docs = alive.size
@@ -493,7 +282,6 @@ def _segment_scorer(
     allowed_ext: np.ndarray | None = None,
     filter_active: bool = False,
     visited_limit: int | None = None,
-    hot=((), {}),
 ):
     """The one per-segment UDF body of every tier → ``score(postings,
     aux, seg)`` returning the segment's partial top-k rows.
@@ -502,22 +290,17 @@ def _segment_scorer(
     None) or from the cogrouped aux side (tombstones, large filters).
     ``allowed_ext`` is the broadcast small filter (sorted ext_ids);
     ``filter_active`` marks a packed-blob filter, under which a segment
-    with NO ``allowed`` aux row has no allowed docs (S10). ``hot`` =
-    (impact-cache broadcasts, {term: idf} of the cached terms to read):
-    those terms' (docs, contribution) arrays come from the cache, and
-    the postings frame holds only the other terms plus one null-term
-    marker row per segment (``postings`` is None when every term is
-    cached). ``visited_limit`` restricts scoring to local doc ids below
-    it (Lucene's doc-id visit order) and skips decoding blocks past it."""
+    with NO ``allowed`` aux row has no allowed docs (S10).
+    ``visited_limit`` restricts scoring to local doc ids below it
+    (Lucene's doc-id visit order) and skips decoding blocks past it."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    hot_bc, hot_idf = hot
     dtypes = {"query_id": "object", "segment_id": "int64", "ext_id": "int64", "score": "float64"}
     if not with_qid:
         del dtypes["query_id"]
     empty = pd.DataFrame({c: pd.Series([], dtype=t) for c, t in dtypes.items()})
 
-    def score(postings: pd.DataFrame | None, aux: pd.DataFrame | None, seg: int) -> pd.DataFrame:
-        if postings is not None and postings.empty:
+    def score(postings: pd.DataFrame, aux: pd.DataFrame | None, seg: int) -> pd.DataFrame:
+        if postings.empty:
             return empty
         if aux is None:
             blob = norms_bc.value.get(seg)
@@ -536,24 +319,14 @@ def _segment_scorer(
         if not alive.any():
             return empty
         post = {}
-        if postings is not None:
-            if hot_idf:
-                postings = postings[postings["term"].notna()]  # drop marker rows
-            for t, p in _group_postings(postings, terms).items():
-                docs, tfs = _decode_term(p, visited_limit)
-                if docs.size:
-                    post[t] = (docs, tfs.astype(np.float64))
-        impacts = {}
-        for t, w in hot_idf.items():
-            ent = (_cache_get(hot_bc, t) or {}).get(seg)
-            if ent is not None and t not in post:
-                docs = np.frombuffer(ent[0], np.int32)
-                post[t] = (docs, None)
-                impacts[(t, w)] = (docs, np.frombuffer(ent[1], np.float64))
+        for t, p in _group_postings(postings, terms).items():
+            docs, tfs = _decode_term(p, visited_limit)
+            if docs.size:
+                post[t] = (docs, tfs.astype(np.float64))
         if not post:
             return empty
         denom = k1 * (1.0 - b + b * dls / avgdl)
-        q, e, s = _score_batch_queries(specs, post, impacts, alive, ext_ids, denom, k1)
+        q, e, s = _score_batch_queries(specs, post, alive, ext_ids, denom, k1)
         if not q:
             return empty
         # ONE output frame per segment — per-query frames were a
@@ -629,24 +402,6 @@ def _weigh(s: dict, idf_of: dict[str, float], n: int, df: dict[str, int]) -> dic
     return {**s, "terms": terms, "should": should, "exclude": exclude, "w": w}
 
 
-def _impact_tier(spark, cat, cfg, specs, idf_of, df, admit: bool):
-    """Impact-cache broadcasts and covered terms these specs may read.
-    Cached contributions are baked at the plain idf and summed per term,
-    so a boosted or synonym spec reads none. A batch (``admit``)
-    demand-fills the cache; a single query only reads what a batch
-    admitted, so commits and first queries never pay for a cache build."""
-    if any(s["comb"] == "synonym" or any(s["w"][t] != idf_of[t] for t in s["terms"])
-           for s in specs.values()):
-        return (), frozenset()
-    if admit:
-        return _hot_postings_broadcast(
-            spark, cat, cfg, want_idf=idf_of, want_df={t: df[t] for t in idf_of}
-        )
-    if getattr(cat, "_hotpost_memo", None) is None:
-        return (), frozenset()
-    return _hot_postings_broadcast(spark, cat, cfg)
-
-
 def _spark_partials(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -665,11 +420,8 @@ def _spark_partials(
     Done once for the whole batch: one postings scan of every term; live
     stats, df and idf; the norms tier (the executor-local norms broadcast
     when there are no tombstones and no blob filter, else the aux
-    cogroup, which also carries a filter above ``FILTER_BROADCAST_MAX``);
-    and the impact-cache tier — a full hit scores from executor-local
-    broadcasts over a segment-id frame with no table scan, a batch's
-    partial hit scans only the uncached tail terms (hybrid), otherwise
-    the scan feeds the scorer."""
+    cogroup, which also carries a filter above ``FILTER_BROADCAST_MAX``).
+    The scan feeds the scorer, grouped by segment."""
     postings = _query_postings(spark, cat, terms, cfg)
     n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, aux_filter)
     if n == 0:
@@ -689,34 +441,7 @@ def _spark_partials(
             .cogroup(_aux_df(spark, cat, aux_filter).groupby("segment_id"))
             .applyInPandas(lambda key, p, a: score(p, a, int(key[0])), schema)
         )
-    norms_bc = _norms_broadcast(spark, cat)
-    hot_bc, hot_terms = _impact_tier(spark, cat, cfg, specs, idf_of, df, batch)
-    cached = live & hot_terms
-    if cached != live and not batch:
-        # a partial hit pays off for a batch's scan only; a single
-        # query's scan is too small to repay the second postings read and
-        # the union (traced: +1 manifest read, ~200 ms more driver time)
-        cached = set()
-    score = _segment_scorer(
-        *args, norms_bc=norms_bc, hot=(hot_bc, {t: idf_of[t] for t in cached}), **opts
-    )
-    segs = sorted(norms_bc.value)
-    if cached == live:
-        # zero table scans: the job parallelizes over the segment ids and
-        # reads postings AND norms from executor-local broadcasts
-        npart = max(1, min(len(segs), shuffle_partitions(spark)))
-        seg_df = local_frame(spark, "segment_id long", segs).repartition(npart, "segment_id")
-        return seg_df.mapInPandas(
-            lambda it: (score(None, None, int(s)) for pdf in it for s in pdf["segment_id"]),
-            schema,
-        )
-    if cached:
-        # HYBRID: scan only the uncached TAIL terms; a null-term marker
-        # row per segment keeps segments whose every term is cached in
-        # the groupby
-        postings = _query_postings(spark, cat, sorted(live - cached), cfg).unionByName(
-            local_frame(spark, "segment_id long", segs), allowMissingColumns=True
-        )
+    score = _segment_scorer(*args, norms_bc=_norms_broadcast(spark, cat), **opts)
     return postings.groupby("segment_id").applyInPandas(
         lambda p: score(p, None, int(p["segment_id"].iloc[0])), schema
     )
@@ -1056,7 +781,7 @@ def _resident_scored(
         if not lp:
             continue
         denom = k1 * (1.0 - b + b * leaf.dls / avgdl)
-        for q, e, s in zip(*_score_batch_queries(specs, lp, {}, alive, leaf.ext_ids, denom, k1)):
+        for q, e, s in zip(*_score_batch_queries(specs, lp, alive, leaf.ext_ids, denom, k1)):
             hits.setdefault(q[0], []).append((e, s))
     cols = []
     for qid, parts in hits.items():
@@ -1356,66 +1081,6 @@ def _live_df_frame(
     )
 
 
-def warm_term_df_memo(
-    spark: SparkSession, cat: IndexCatalog, top_n: int = 10_000
-) -> None:
-    """Prefill the per-catalog term-df memo with the TOP-N hottest terms
-    (df desc, then term) from the global dictionary, so a first query for
-    a hot term pays zero df-lookup jobs — bounded driver memory (top_n
-    entries) at any corpus scale. Called from build/merge finalize; cold
-    terms still fall back to the per-term pruned lookup."""
-    m = cat.read_manifest()
-    tg = m["tables"].get("terms_global", {})
-    if not tg.get("snapshot"):
-        return
-    # same freshness gate as _live_stats_and_df: never stamp dfs from a
-    # dictionary older than the newest statistics-bearing table commit
-    latest = stats_version(m)
-    if tg.get("committed_at", 0) < latest:
-        return  # stale dictionary: let queries take the live-df path
-    rows = (
-        cat.read(spark, "terms_global")
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(top_n)
-        .select("term", "df")
-        .collect()
-    )
-    cat._term_df_memo = {
-        "ver": latest, "df": {r["term"]: int(r["df"]) for r in rows}
-    }
-
-
-def warm_query_path(
-    spark: SparkSession, cat: IndexCatalog, cfg: IndexConfig | None = None
-) -> None:
-    """Run one real top-1 query for the hottest known term — spins up the
-    executor Python-UDF workers and the whole-stage codegen for the scorer
-    path, so the FIRST user query after a build/merge commit pays
-    steady-state latency (the service-warmup request, folded into the
-    commit)."""
-    memo = getattr(cat, "_term_df_memo", None)
-    if not memo or not memo.get("df"):
-        return
-    hot = max(memo["df"].items(), key=lambda kv: (kv[1], kv[0]))[0]
-    bm25_topk(spark, cat, [hot], k=1, cfg=cfg).collect()
-
-
-def warm_after_commit(
-    spark: SparkSession, cat: IndexCatalog, cfg: IndexConfig | None, n_docs: int
-) -> None:
-    """The query warm-up a build or merge commit folds in. Under the
-    resident budget there is none: the first query fills the pack (one
-    read) and no Spark query path is used. Over it, the Spark tier's
-    first-query costs are paid here: the hot-term df memo, the executor
-    norms broadcast (under its own gate) and one real query."""
-    if _text_fits(cat) is not None:
-        return
-    warm_term_df_memo(spark, cat)  # hot-term df cache (bounded)
-    if n_docs <= NORMS_BROADCAST_MAX_DOCS:  # the query path's own gate
-        _norms_broadcast(spark, cat)
-    warm_query_path(spark, cat, cfg)  # worker/codegen spin-up
-
-
 def _topk(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -1461,9 +1126,8 @@ def bm25_topk(
     ``boosts``: optional term → multiplier map — each clause behaves as
     Lucene's ``BoostQuery(TermQuery, boost)``: its score contribution is
     multiplied, matching is unchanged. Applied as the term's weight
-    (idf × boost); the impact cache is bypassed (its cached contributions
-    are fixed at boost 1). Boosts must be > 0; terms absent from the map
-    keep boost 1."""
+    (idf × boost). Boosts must be > 0; terms absent from the map keep
+    boost 1."""
     if _synonym and (mode != "or" or boosts):
         raise ValueError("synonym scoring composes only with mode='or', no boosts")
     if boosts:
@@ -1552,8 +1216,7 @@ def synonym_topk(
     createWeight`` merges the TermStatistics exactly so), hence BM25's
     tf saturation applies once to the merged frequency instead of once
     per term. Matching is the plain disjunction; same physical shape and
-    filter tiers as :func:`bm25_topk` (the impact cache is bypassed —
-    its cached contributions are per-term-saturated sums)."""
+    filter tiers as :func:`bm25_topk`."""
     return bm25_topk(
         spark, cat, terms, k=k, mode="or", cfg=cfg,
         filter_ext_ids=filter_ext_ids, _synonym=True,
@@ -1603,13 +1266,12 @@ def bm25_topk_batch(
     every term's postings decoded once per segment, one scoring pass, one
     global top-k per query — in the driver on the resident tier (no Spark
     job), else one Spark job: one postings scan for the union of all
-    query terms (or none, once the impact cache covers them) and a
-    windowed top-k. qspecs:
+    query terms and a windowed top-k. qspecs:
     {query_id: {"terms": [...], "mode": "or"|"and", "k": int}}; a spec
     may also be a scored BooleanQuery — ``{"must": [...], "should":
     [...], "exclude": [...], "min_should_match": m, "k": k}`` with
     :func:`bm25_boolean_topk` semantics (MUST_NOT terms ride the shared
-    scan/cache as veto masks and never score)."""
+    scan as veto masks and never score)."""
     specs = {qid: c for qid, s in qspecs.items() if (c := _compile(s, qid)) is not None}
     return _scored(spark, cat, specs, cfg or IndexConfig(), batch=True)
 

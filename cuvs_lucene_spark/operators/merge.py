@@ -376,9 +376,8 @@ def merge_segments(
     lineage = {str(newseg[g]): {"merged_from": [int(s) for s in grp]} for g, grp in enumerate(groups)}
     cat.mark_stage(f"merge_{len(seg_ids)}to{len(groups)}", lineage=lineage)
 
-    # fold the first-query-after-merge costs into the merge commit: refresh
-    # the manifest corpus-stats cache here, and (over the resident budget)
-    # the Spark tier's warm-up, so the next query is a steady-state one
+    # refresh the manifest corpus-stats cache at the merge commit, so the
+    # next query reads N and avgdl with no stats job
     srows = cat.read(spark, "segment_stats").collect()
     n_total = sum(int(r["n_docs"]) for r in srows)
     cat.mark_stage(
@@ -394,12 +393,6 @@ def merge_segments(
             "n_tokens": sum(int(r["n_tokens"]) for r in srows),
         },
     )
-    from cuvs_lucene_spark.operators.bm25 import warm_after_commit
-
-    try:
-        warm_after_commit(spark, cat, cfg, n_total)
-    except Exception:
-        pass  # warmup is an optimization, never a merge failure
 
     ndm.unpersist()
     unpersist_rank()

@@ -626,15 +626,6 @@ def build_index(
             lineage=lineage,
             corpus_stats={"n_docs": n, "n_tokens": toks},
         )
-        # fold the first-query warm-up into the build commit (exactly what
-        # merge_segments does at its commit); under the resident budget
-        # there is none — the first query fills the pack
-        from cuvs_lucene_spark.operators.bm25 import warm_after_commit
-
-        try:
-            warm_after_commit(spark, cat, cfg, n)
-        except Exception:
-            pass  # warmup is an optimization, never a build failure
 
     cat.mark_stage("build", status="done")
     return cat
@@ -740,29 +731,6 @@ def grouped_dense_rank(
             pass
 
     return ranked, _release
-
-
-def with_index_sort(
-    docs: DataFrame,
-    sort_cols: list[str],
-    n_partitions: int = 64,
-    rank_col: str = "sort_ext_id",
-) -> DataFrame:
-    """Index sort (H8/B6: ``IndexWriterConfig.setIndexSort``,
-    ``TestMerge.java:284``): assign a global dense rank over ``sort_cols``
-    so building with ``id_col=rank_col`` yields segments (and merges,
-    M6) physically ordered by the sort key.
-
-    Scalable global rank via :func:`grouped_dense_rank` with a constant
-    group — one pinned range shuffle, offsets broadcast, all else
-    map-side. The intermediate stays persisted until evicted (the build
-    consuming the rank runs immediately after).
-    """
-    tagged = docs.withColumn("_g", F.lit(0))
-    ranked, _unpersist = grouped_dense_rank(
-        tagged, ["_g"], sort_cols, rank_col, n_partitions
-    )
-    return ranked.drop("_g")
 
 
 def verify_integrity(

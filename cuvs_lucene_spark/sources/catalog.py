@@ -45,7 +45,7 @@ VERSION_CURRENT = 1
 # whenever either could be stale, segdata/tombstones were rewritten too
 # (and bump the version themselves). Excluding them from the statistics
 # version keeps the query-side caches (corpus stats, term-df memo, norms
-# broadcast, impact cache) valid across e.g. a build_positions commit —
+# broadcast) valid across e.g. a build_positions commit —
 # without this, every query after a positions build re-ran the full
 # corpus-stats aggregate and per-term df lookups (2+ extra Spark jobs
 # per query, measured at sf1.0).

@@ -85,7 +85,7 @@ def _brute(q, tf, dls, ext_ids, alive):
 
 def _run(specs, tf, dls, ext_ids, alive):
     denom = K1 * (1.0 - B + B * dls / dls.mean())
-    q, e, s = _score_batch_queries(specs, _post(tf), {}, alive, ext_ids, denom, K1)
+    q, e, s = _score_batch_queries(specs, _post(tf), alive, ext_ids, denom, K1)
     got = {}
     for qa, ea, sa in zip(q, e, s):
         got[qa[0]] = [(float(x), float(y)) for x, y in zip(ea, sa)]
@@ -147,27 +147,6 @@ def test_dismax_tie1_is_the_sum_and_synonym_single_term_is_the_term():
     for a, b in (("sum", "dm1"), ("t", "syn")):
         assert [e for e, _ in got[a]] == [e for e, _ in got[b]]
         assert np.allclose([s for _, s in got[a]], [s for _, s in got[b]], rtol=1e-12)
-
-
-def test_impact_entries_stand_in_for_postings():
-    """Terms whose (docs, contribution) arrays come from the impact cache
-    (no tfs) score bit for bit as decoded postings do."""
-    tf, dls, ext_ids = _segment(5)
-    raw = {k: RAW[k] for k in ("or", "and", "full_bool", "dismax03")}
-    specs = _specs(raw, tf, dls.size)
-    denom = K1 * (1.0 - B + B * dls / dls.mean())
-    alive = np.ones(dls.size, bool)
-    post = _post(tf)
-    want = _score_batch_queries(specs, post, {}, alive, ext_ids, denom, K1)
-    idf_of = {t: idf(dls.size, len(tf[t])) for t in VOCAB}
-    impacts = {
-        (t, idf_of[t]): (d, idf_of[t] * x * (K1 + 1.0) / (x + denom[d]))
-        for t, (d, x) in post.items()
-    }
-    cached = {t: (d, None) for t, (d, _) in post.items()}
-    got = _score_batch_queries(specs, cached, impacts, alive, ext_ids, denom, K1)
-    for g, w in zip(got, want):
-        assert len(g) == len(w) and all(np.array_equal(x, y) for x, y in zip(g, w))
 
 
 def test_equal_scores_break_ties_by_lower_ext_id():

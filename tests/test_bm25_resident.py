@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 import cuvs_lucene_spark.operators.bm25 as B
 import cuvs_lucene_spark.operators.multiterm as M
 import cuvs_lucene_spark.operators.resident as R
-from cuvs_lucene_spark.config import IndexConfig
+from cuvs_lucene_spark.config import BM25Params, IndexConfig
 from cuvs_lucene_spark.frames import local_frame
 from cuvs_lucene_spark.operators.deletes import delete_docs
 from cuvs_lucene_spark.operators.merge import merge_segments
@@ -39,7 +39,15 @@ from tests.conftest import SF_DIR
 CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
 # no auto-compaction: the merged-away segments stay as logical drops
 NOCOMPACT = dataclasses.replace(CFG, compact_dropped_fraction=1.0)
+# non-default BM25 params: k1 and b reach every norm and contribution
+PARAMS = dataclasses.replace(CFG, bm25=BM25Params(k1=0.5, b=0.3))
 T = ["join", "vector", "spark"]
+BATCH = {
+    "p": {"terms": ["join", "vector"], "k": 10},
+    "a": {"terms": ["dup", "slow"], "mode": "and", "k": 4},
+    "b": {"must": ["join"], "should": ["vector", "spark"], "exclude": ["slow"], "k": 10},
+    "none": {"terms": ["zzz_not_in_corpus"], "k": 10},
+}
 
 KINDS = {
     "or": lambda s, c, f: B.bm25_topk(s, c, T, k=10, cfg=CFG, filter_ext_ids=f),
@@ -57,12 +65,8 @@ KINDS = {
     "matches": lambda s, c, f: B.bm25_scored_matches(s, c, T, cfg=CFG, filter_ext_ids=f),
     "visited_limit": lambda s, c, f: B.bm25_topk(s, c, T, k=10, cfg=CFG, visited_limit=30,
                                                  filter_ext_ids=f),
-    "batch": lambda s, c, f: B.bm25_topk_batch(s, c, {
-        "p": {"terms": ["join", "vector"], "k": 10},
-        "a": {"terms": ["dup", "slow"], "mode": "and", "k": 4},
-        "b": {"must": ["join"], "should": ["vector", "spark"], "exclude": ["slow"], "k": 10},
-        "none": {"terms": ["zzz_not_in_corpus"], "k": 10},
-    }, CFG),
+    "batch": lambda s, c, f: B.bm25_topk_batch(s, c, BATCH, CFG),
+    "batch_params": lambda s, c, f: B.bm25_topk_batch(s, c, BATCH, PARAMS),
 }
 FILTERS = {
     "none": lambda spark: None,
@@ -73,10 +77,10 @@ FILTERS = {
 
 def _cases(rotate: int | None = None) -> list[tuple[str, str]]:
     """Every (kind, filter) pair, or each kind with one filter in turn,
-    starting ``rotate`` filters on (the batch takes no filter)."""
+    starting ``rotate`` filters on (a batch takes no filter)."""
     names = list(FILTERS)
     return [(k, f) for i, k in enumerate(KINDS) for f in names if (
-        f == "none" if k == "batch" else rotate is None or f == names[(i + rotate) % len(names)])]
+        f == "none" if k.startswith("batch") else rotate is None or f == names[(i + rotate) % len(names)])]
 
 
 def _rows(df) -> list[tuple]:
@@ -100,7 +104,7 @@ def _both_tiers(spark, cat, cases, monkeypatch) -> None:
     with monkeypatch.context() as m:
         m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
         tier = _run(spark, cat, cases)
-    for c in [c for c in cases if c[0] in ("matches", "batch")]:
+    for c in [c for c in cases if c[0] == "matches" or c[0].startswith("batch")]:
         resident[c], tier[c] = sorted(resident[c]), sorted(tier[c])
     assert all(resident.values())
     assert {c: v for c, v in resident.items() if v != tier[c]} == {}

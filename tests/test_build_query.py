@@ -359,7 +359,6 @@ def test_bm25_tier_equality(spark, cat, monkeypatch, spark_tier, kind):
     def rows():
         return sorted(tuple(r) for r in TIER_CASES[kind](B, spark, cat).collect())
 
-    monkeypatch.setattr(B, "_hot_postings_broadcast", lambda *a, **k: ((), frozenset()))
     fast = rows()
     monkeypatch.setattr(B, "NORMS_BROADCAST_MAX_DOCS", 0)
     assert rows() == fast and fast
@@ -399,8 +398,7 @@ def test_bm25_boolean_input_validation(spark, cat):
 def test_bm25_batch_boolean_specs(spark, cat):
     """Batch specs may be scored BooleanQueries: each must agree with the
     single-query bm25_boolean_topk (and thus the oracle), mixed freely
-    with plain or/and specs in one batch — including on a repeat run
-    (impact-cache path, if admitted)."""
+    with plain or/and specs in one batch — including on a repeat run."""
     from cuvs_lucene_spark.operators.bm25 import bm25_boolean_topk, bm25_topk_batch
 
     batch = {
@@ -413,7 +411,7 @@ def test_bm25_batch_boolean_specs(spark, cat):
         "b3": {"must": ["join", "vector"], "exclude": ["slow"], "k": 10},
         "b4": {"should": ["join"], "min_should_match": 2, "k": 10},  # -> 0 rows
     }
-    for _run in range(2):  # second run may ride the impact cache
+    for _run in range(2):  # a warm repeat answers the same
         rows = bm25_topk_batch(spark, cat, batch, CFG).collect()
         by_q = {}
         for r in rows:

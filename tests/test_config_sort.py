@@ -1,5 +1,5 @@
-"""Param validation (SURVEY.md §5.6, TestGPUSearchParams analogue),
-manifest version gate (O12), and index sort (H8/B6/M6)."""
+"""Param validation (SURVEY.md §5.6, TestGPUSearchParams analogue) and
+the manifest version gate (O12)."""
 
 import dataclasses
 import json
@@ -37,34 +37,3 @@ def test_manifest_version_gate(tmp_path):
     with pytest.raises(ValueError, match="version 99 unsupported"):
         IndexCatalog(str(tmp_path)).read_manifest()
 
-
-def test_index_sort(spark, tmp_path):
-    """Docs re-keyed by a sort field build segments physically ordered by
-    that field; queries still work (setIndexSort analogue)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from cuvs_lucene_spark.operators.bm25 import bm25_topk
-    from cuvs_lucene_spark.operators.segments import build_index, with_index_sort
-    from tests.conftest import SF_DIR
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sorted_docs = with_index_sort(docs, ["n_chars", "doc_id"], n_partitions=4)
-    rows = sorted_docs.select("doc_id", "n_chars", "sort_ext_id").collect()
-    by_rank = sorted(rows, key=lambda r: r["sort_ext_id"])
-    # rank is a dense permutation ordered by the sort key
-    assert [r["sort_ext_id"] for r in by_rank] == list(range(len(rows)))
-    keys = [(r["n_chars"], r["doc_id"]) for r in by_rank]
-    assert keys == sorted(keys)
-
-    cfg = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
-    cat = build_index(
-        spark, sorted_docs, str(tmp_path / "sorted_idx"), cfg,
-        content_col="text", id_col="sort_ext_id",
-    )
-    # norms ext_ids (= sort ranks) ascending per segment → index is sorted
-    for r in cat.read(spark, "norms").collect():
-        ext = np.frombuffer(r["ext_ids"], dtype=np.int64)
-        assert np.all(np.diff(ext) > 0)
-    res = bm25_topk(spark, cat, ["join"], k=5, cfg=cfg).collect()
-    assert len(res) == 5

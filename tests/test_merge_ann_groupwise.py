@@ -158,3 +158,23 @@ def test_full_merge_compacts_and_matches_rebuild(spark, cat, xdata):
         spark, cat, q, k=5, cfg=CFG, mode="exact",
         filter_ext_ids=fdf, filter_mode="df").collect()]
     assert flt == [i for i in _exact_ids(xdata, q, N, dead=dead) if i % 2 == 0][:5]
+
+
+MERGE_ANN_JOBS = 16  # Spark jobs of a warm group-wise merge_ann
+
+
+def test_warm_merge_ann_job_count(spark, cat):
+    """A warm group-wise merge runs a pinned number of Spark jobs: the
+    group key and each group's segment-id base reach the rows through
+    literal maps, not broadcast joins (one job per broadcast)."""
+    nc = IndexConfig(compact_dropped_fraction=0.99)
+    merge_ann(spark, cat, nc, groups=[[0, 1]], rows_per_segment=RPS)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge_ann_warm", "merge_ann_warm")
+    try:
+        new_ids = merge_ann(spark, cat, nc, groups=[[2, 3]], rows_per_segment=RPS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(new_ids[0]) == 2  # 100 live rows → two segments of 50
+    assert len(sc.statusTracker().getJobIdsForGroup("merge_ann_warm")) <= MERGE_ANN_JOBS

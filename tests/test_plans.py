@@ -644,10 +644,7 @@ def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
     from cuvs_lucene_spark.operators.deletes import delete_docs
 
     calls = _bm25_calls(spark, cat)
-    cat._hotpost_memo = None
-    with monkeypatch.context() as mp:
-        mp.setattr(B, "_hot_postings_broadcast", lambda *a, **k: ((), frozenset()))
-        counts = _warm_job_counts(spark, calls, "bm25")
+    counts = _warm_job_counts(spark, calls, "bm25")
     counts.update(_warm_job_counts(spark, {
         "batch_cached": calls["batch"],
         "topk_cached": calls["topk"],
@@ -655,7 +652,6 @@ def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
     with monkeypatch.context() as mp:
         mp.setattr(B, "FILTER_BROADCAST_MAX", 0)
         counts.update(_warm_job_counts(spark, {"df_filter_over_cap": calls["set_filter"]}, "bm25"))
-    cat._hotpost_memo = None
     delete_docs(spark, cat, spark.range(1).select(F.col("id").alias("ext_id")))
     counts.update(_warm_job_counts(spark, {"after_delete": calls["topk"]}, "bm25"))
     assert {m: n for m, n in counts.items() if n > BM25_JOB_PINS[m]} == {}, counts
