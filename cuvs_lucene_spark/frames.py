@@ -1,10 +1,27 @@
 """Small driver-side DataFrames built from Arrow.
 
-``spark.createDataFrame(pyarrow.Table, schema)`` is a ``LocalRelation``:
-Spark scans and collects it with no job. A Python list (or a pandas frame
-with the Arrow conf off) costs one job and a worker round trip, which is
-most of a query's cost when the frame is an empty result or a handful of
-segment ids.
+Every small frame the engine builds in the driver (a resident query's
+result, an empty result, a handful of segment ids) comes from
+:func:`local_frame` as a :class:`LocalResult`: a DataFrame that owns its
+rows as one ``pyarrow.Table`` and builds its JVM side only when it is
+first needed. Until then it makes no Py4J call:
+
+- ``collect()`` answers from the table, with the field names and Python
+  types Spark's collect gives (``long``/``int`` → int, ``double`` →
+  float, ``string`` → str, ``binary`` → bytes (bytearray with
+  ``spark.sql.execution.pyspark.binaryAsBytes`` off, read only for a
+  frame with a binary column), null → None);
+- ``schema``, ``columns`` and ``dtypes`` read a ``StructType`` parsed
+  once per schema string;
+- :func:`small_arrow` and :func:`head_arrow` take the table in hand.
+
+Anything else (``select``, ``join``, ``filter``, ``limit``, ``count``,
+``write``, ``explain``, ``toPandas``, ``isLocal``, plan inspection)
+forces the JVM side: ``spark.createDataFrame(table, struct)``, a
+``LocalRelation`` that Spark scans and collects with no job, built once
+per frame, so every derived plan is the one an eager frame gives. (A
+Python list, or a pandas frame with the Arrow conf off, costs one job and
+a worker round trip.)
 
 :func:`reads_head` tells, from the plan alone, whether a ``limit`` over a
 caller's frame reads only its first rows; :func:`small_arrow` reads a
@@ -13,14 +30,24 @@ caller's frame into the driver when it holds at most a bound of rows.
 
 from __future__ import annotations
 
+import functools
+from urllib.parse import unquote, urlparse
+
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType, StringType,
+                               StructField, StructType)
 
-_TYPES = {"long": (pa.int64(), np.int64), "int": (pa.int32(), np.int32),
-          "double": (pa.float64(), np.float64), "string": (pa.string(), object),
-          "binary": (pa.binary(), object)}
+# DDL type → (Arrow type, numpy dtype, Spark type)
+_TYPES = {"long": (pa.int64(), np.int64, LongType()),
+          "int": (pa.int32(), np.int32, IntegerType()),
+          "double": (pa.float64(), np.float64, DoubleType()),
+          "string": (pa.string(), object, StringType()),
+          "binary": (pa.binary(), object, BinaryType())}
 
 
 def _fields(schema: str) -> list[tuple[str, str]]:
@@ -28,48 +55,146 @@ def _fields(schema: str) -> list[tuple[str, str]]:
     return [tuple(f.split()) for f in schema.split(",")]
 
 
+@functools.cache
 def arrow_schema(schema: str) -> pa.Schema:
     """The Arrow schema of a flat DDL schema string, every field nullable
     (as Spark writes and reads it)."""
     return pa.schema([(n, _TYPES[t][0]) for n, t in _fields(schema)])
 
 
+@functools.cache
+def _struct(schema: str) -> StructType:
+    """The ``StructType`` Spark parses a flat DDL schema string to, built
+    in Python (no JVM parse) once per string."""
+    return StructType([StructField(n, _TYPES[t][2], True) for n, t in _fields(schema)])
+
+
+_BINARY_AS_BYTES = "spark.sql.execution.pyspark.binaryAsBytes"
+
+
+class LocalResult(ClassicDataFrame):
+    """A DataFrame over rows the driver holds: ``table`` is the result,
+    the JVM ``LocalRelation`` is built at the first use that needs it
+    (see the module docstring)."""
+
+    def __new__(cls, *args, **kwargs):
+        # DataFrame.__new__ runs __init__ with a built JVM frame
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table, schema: StructType):
+        # the fields DataFrame.__init__ sets, less _jdf (the property below)
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self.table = table
+        # DataFrame.schema is a cached_property: pre-set, it is never read
+        # from the JVM; a copy, as the cached one is shared
+        self.__dict__["schema"] = StructType(list(schema.fields))
+        self._built = None
+
+    @property
+    def _jdf(self):
+        if self._built is None:
+            self._built = self._session.createDataFrame(self.table, self.schema)._jdf
+        return self._built
+
+    def collect(self) -> list[Row]:
+        """The rows from the table, as Spark's collect returns them."""
+        cols = [c.to_pylist() for c in self.table.columns]
+        binary = [i for i, f in enumerate(self.table.schema) if pa.types.is_binary(f.type)]
+        # Spark's collect gives binary as bytes, or bytearray with this conf off
+        if binary and self._session.conf.get(_BINARY_AS_BYTES, "true") != "true":
+            for i in binary:
+                cols[i] = [None if v is None else bytearray(v) for v in cols[i]]
+        row = Row(*self.table.column_names)
+        return [row(*v) for v in zip(*cols)]
+
+
+def _owned(c):
+    """A column sequence ``pa.array`` will not wrap zero-copy: a numpy
+    array (or anything exposing one) is copied, so a later write to the
+    caller's buffer never reaches a frame's rows."""
+    return np.array(c, copy=True) if hasattr(c, "__array__") else c
+
+
 def local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
     """A small frame of the given flat schema from column sequences, as a
-    ``LocalRelation``. No ``cols`` gives the empty frame."""
-    fields = _fields(schema)
-    cols = cols or [()] * len(fields)
-    return spark.createDataFrame(
-        pa.table({n: pa.array(c, _TYPES[t][0]) for (n, t), c in zip(fields, cols)}),
-        schema,
-    )
+    :class:`LocalResult`. No ``cols`` gives the empty frame."""
+    at = arrow_schema(schema)
+    cols = cols or [()] * len(at)
+    table = pa.Table.from_arrays([pa.array(_owned(c), f.type) for f, c in zip(at, cols)],
+                                 schema=at)
+    return LocalResult(spark, table, _struct(schema))
+
+
+def head_arrow(df: DataFrame, n: int) -> pa.Table:
+    """At most the first ``n`` rows of ``df`` as one Arrow table: a
+    :class:`LocalResult`'s own table (no JVM call), a ``LocalRelation``'s
+    rows through ``collect()`` (no job), else one ``limit(n).toArrow()``
+    read (one job)."""
+    if isinstance(df, LocalResult):
+        return df.table.slice(0, n)
+    if _jclass(df._jdf.queryExecution().optimizedPlan()) == "LocalRelation":
+        got = df.limit(n).collect()
+        schema = to_arrow_schema(df.schema)
+        return pa.table([pa.array([r[i] for r in got], f.type) for i, f in enumerate(schema)],
+                        schema=schema)
+    return df.limit(n).toArrow()
 
 
 def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
     """``df``'s rows as one Arrow table when it holds at most ``max_rows``
-    rows, else None (the caller's Spark path reads it then). Reads:
+    rows, else None (the caller's Spark path reads it then). Reads
+    (:func:`head_arrow`):
 
-    - none when the optimized plan knows its row count (a
-      ``LocalRelation``, a materialized cache) and it is over the bound;
+    - a :class:`LocalResult`'s table: no JVM call;
+    - none when the row count is known and over the bound: the optimized
+      plan knows it (a ``LocalRelation``, a materialized cache), or the
+      frame is a bare parquet scan and its files' footers give it;
     - a ``LocalRelation``'s rows through ``collect()``: no job;
     - else one head read, ``limit(max_rows + 1).toArrow()``, and only over
       a plan :func:`reads_head` accepts (None otherwise: the head read
       would run the plan in full, and the Spark path again)."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    rows = plan.stats().rowCount()
-    if rows.isDefined() and int(str(rows.get())) > max_rows:
-        return None
-    if plan.getClass().getSimpleName() == "LocalRelation":
-        got = df.limit(max_rows + 1).collect()
-        if len(got) > max_rows:
+    if not isinstance(df, LocalResult):
+        plan = df._jdf.queryExecution().optimizedPlan()
+        rows = plan.stats().rowCount()
+        if (int(str(rows.get())) > max_rows if rows.isDefined()
+                else _parquet_over(df, plan, max_rows)):
             return None
-        schema = to_arrow_schema(df.schema)
-        return pa.table([pa.array([r[i] for r in got], f.type) for i, f in enumerate(schema)],
-                        schema=schema)
-    if not reads_head(df):
-        return None
-    head = df.limit(max_rows + 1).toArrow()
+        if not reads_head(df):
+            return None
+    head = head_arrow(df, max_rows + 1)
     return head if head.num_rows <= max_rows else None
+
+
+def _jclass(obj) -> str:
+    """A JVM object's simple class name."""
+    return obj.getClass().getSimpleName()
+
+
+def _parquet_over(df: DataFrame, plan, max_rows: int) -> bool:
+    """Whether ``df`` is a bare scan of local parquet files (the optimized
+    plan a ``LogicalRelation``, at most under a ``Project``: no filter)
+    whose footers hold more than ``max_rows`` rows. Reads footers until
+    the sum passes the bound: no job."""
+    if _jclass(plan) == "Project":
+        plan = plan.child()
+    if _jclass(plan) != "LogicalRelation":
+        return False
+    rel = plan.relation()
+    if (_jclass(rel) != "HadoopFsRelation"
+            or _jclass(rel.fileFormat()) != "ParquetFileFormat"):
+        return False
+    uris = [urlparse(f) for f in df.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return False
+    rows = 0
+    for u in uris:
+        rows += pq.read_metadata(unquote(u.path)).num_rows
+        if rows > max_rows:
+            return True
+    return False
 
 
 # the logical operators a limit reads a head through: scans and row-wise

@@ -112,7 +112,7 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
-from cuvs_lucene_spark.frames import _TYPES, _fields, local_frame, small_arrow
+from cuvs_lucene_spark.frames import _TYPES, _fields, head_arrow, local_frame, small_arrow
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -809,23 +809,25 @@ def _resolve_filter(
 
     Small sets/arrays keep the closure fast path; a DataFrame filter stays
     a DataFrame above ``FILTER_BROADCAST_MAX`` ids (``filter_mode``:
-    ``auto`` probes the size with one limit(N+1) collect, ``broadcast`` /
-    ``df`` force a tier)."""
+    ``auto`` probes the size with one ``frames.head_arrow`` read of N+1
+    ids, ``broadcast`` / ``df`` force a tier)."""
     _check_choice("filter_mode", filter_mode, FILTER_MODES)
     if filter_ext_ids is None:
         return None, None
     if not isinstance(filter_ext_ids, DataFrame):
         return _sorted_ids(filter_ext_ids), None
-    fdf = filter_ext_ids.select(
-        F.col(filter_ext_ids.columns[0]).cast("long").alias("ext_id")
-    )
+    # (a local_frame of ext_id long is read with no JVM call: not projected)
+    fdf = (filter_ext_ids if filter_ext_ids.dtypes == [("ext_id", "bigint")]
+           else filter_ext_ids.select(F.col(filter_ext_ids.columns[0]).cast("long")
+                                      .alias("ext_id")))
     if filter_mode == "df":
         return None, _filter_blobs(spark, cat, fdf)
     # one Arrow read (a limit collect() scans partitions incrementally, a
     # job per round); ``broadcast`` is the forced closure tier: the caller
     # vouches the set fits the driver
-    head = (fdf if filter_mode == "broadcast" else fdf.limit(FILTER_BROADCAST_MAX + 1))
-    head = head.toArrow().column("ext_id").to_numpy()
+    head = (fdf.toArrow() if filter_mode == "broadcast"
+            else head_arrow(fdf, FILTER_BROADCAST_MAX + 1))
+    head = head.column("ext_id").to_numpy()
     if head.size > FILTER_BROADCAST_MAX and filter_mode == "auto":
         return None, _filter_blobs(spark, cat, fdf)
     return np.sort(head.astype(np.int64)), None

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, shuffle_partitions
-from cuvs_lucene_spark.frames import local_frame
+from cuvs_lucene_spark.frames import head_arrow, local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.operators.segments import corpus_stats, index_term_buckets, term_bucket_py
@@ -821,7 +821,8 @@ def _scored(
     ``specs`` are :func:`_compile` outputs by query id.
 
     The filter head is read once (at most ``FILTER_BROADCAST_MAX`` + 1
-    ids: one Arrow read, or no job for a ``LocalRelation``): a small
+    ids through ``frames.head_arrow``: one Arrow read, no job for a
+    ``LocalRelation``, no JVM call for a ``local_frame``): a small
     filter is a sorted ext_id array, a larger one stays a DataFrame for
     the Spark tier's packed-blob cogroup. Then one of two tiers runs, with the same statistics (live
     N, integer-sum avgdl, live df), the same per-term weights
@@ -844,14 +845,11 @@ def _scored(
         return local_frame(spark, empty)
     allowed_ext = aux_filter = None
     if filter_ext_ids is not None:
-        head = filter_ext_ids.limit(FILTER_BROADCAST_MAX + 1)
-        # a LocalRelation's rows come back with no job; toArrow runs one
-        head = ([r[0] for r in head.collect()] if filter_ext_ids.isLocal()
-                else head.toArrow().column(0).to_numpy(zero_copy_only=False))
+        head = head_arrow(filter_ext_ids, FILTER_BROADCAST_MAX + 1).column(0)
         if len(head) > FILTER_BROADCAST_MAX:
             aux_filter = filter_ext_ids
-        else:
-            allowed_ext = np.sort(np.asarray(head).astype(np.int64))
+        else:  # a null id matches no doc
+            allowed_ext = np.sort(head.drop_null().to_numpy().astype(np.int64))
     resident = None if aux_filter is not None else _resident_text(spark, cat)
     if resident is not None:
         return _resident_scored(spark, *resident, specs, terms, cfg, allowed_ext,

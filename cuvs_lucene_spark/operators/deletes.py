@@ -33,7 +33,9 @@ def delete_docs(spark: SparkSession, cat: IndexCatalog, ext_ids: DataFrame) -> i
     Idempotent: re-deleting is a no-op. Returns live doc count after."""
     from cuvs_lucene_spark.operators.segments import DRIVER_FLUSH_MAX_DOCS, driver_index
 
-    ids = ext_ids.select(F.col("ext_id").cast("long"))
+    # (a local_frame of ext_id long is read with no JVM call: not projected)
+    ids = (ext_ids if ext_ids.dtypes == [("ext_id", "bigint")]
+           else ext_ids.select(F.col("ext_id").cast("long")))
     small = small_arrow(ids, DRIVER_FLUSH_MAX_DOCS) if driver_index(cat) else None
     if small is not None:
         return _delete_in_driver(cat, small.column(0))

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
 
@@ -47,3 +49,21 @@ def spark_tier(monkeypatch):
 
     monkeypatch.setattr(R, "RESIDENT_MAX_BYTES", 0)
     monkeypatch.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Counts the Py4J commands this thread sends to the JVM inside the
+    block (``n[0]`` of the yielded list); py4j's finalizer thread, which
+    releases dead JVM references, is not counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    n, me, send = [0], threading.get_ident(), ClientServerConnection.send_command
+
+    def counted(self, command):
+        n[0] += threading.get_ident() == me
+        return send(self, command)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counted)
+        yield n

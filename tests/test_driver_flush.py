@@ -15,14 +15,14 @@ import cuvs_lucene_spark.operators.segments as S
 import cuvs_lucene_spark.sources.catalog as C
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.fixtures import generate_documents_pdf
-from cuvs_lucene_spark.frames import local_frame
+from cuvs_lucene_spark.frames import local_frame, small_arrow
 from cuvs_lucene_spark.functions.tokenize import doclen_expr, doclen_py
 from cuvs_lucene_spark.operators.deletes import delete_docs
 from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 from cuvs_lucene_spark.streaming.ingest import incremental_add
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, py4j_round_trips
 
 CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
 TABLES = ("segdata", "terms_global", "positions", "tombstones")
@@ -177,6 +177,33 @@ def test_driver_flush_runs_no_job_beyond_the_input_read(spark, tmp_path):
     assert jobs == {"build": 0, "positions": 0, "epoch": 0, "delete": 0, "build_from_scan": 1}
     assert cat.read(spark, "doc_map").count() == 500
     assert cat.read_manifest()["tables"]["tombstones"]["lineage"] == {"n": 3}
+    # a local_frame's ids are read from its own table: the whole delete
+    # makes no Py4J call
+    ids = local_frame(spark, "ext_id long", [5])
+    with py4j_round_trips() as n:
+        assert delete_docs(spark, cat, ids) == 496
+    assert n[0] == 0
+
+
+def test_parquet_scan_over_the_bound_runs_no_head_read(spark, tmp_path, monkeypatch):
+    """A bare parquet scan (under at most a projection) over the bound is
+    sent to the Spark flush by its files' footer row counts, with no head
+    read: a build over it runs 6 jobs, not 7. A filtered scan still reads
+    its head."""
+    scan = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    n = scan.count()
+    got = {}
+    for name, df in {"scan": scan, "project": scan.selectExpr("doc_id + 1 AS ext_id"),
+                     "filter": scan.where("doc_id >= 0")}.items():
+        out = []
+        jobs = _count_jobs(spark, f"footer_{name}", lambda: out.append(small_arrow(df, n - 1)))
+        got[name] = (out[0], jobs)
+    assert got == {"scan": (None, 0), "project": (None, 0), "filter": (None, 1)}
+    assert small_arrow(scan, n).num_rows == n
+    monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_DOCS", 0)
+    jobs = _count_jobs(spark, "footer_build", lambda: S.build_index(
+        spark, scan, str(tmp_path / "scan"), CFG, content_col="text", id_col="doc_id"))
+    assert jobs == 6
 
 
 def test_crash_before_the_manifest_swap_leaves_nothing_visible(spark, tmp_path, monkeypatch):

@@ -9,7 +9,7 @@ from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.operators.bm25 import _query_postings, fetch_stored
 from cuvs_lucene_spark.operators.segments import build_index
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, py4j_round_trips
 
 CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
 
@@ -634,6 +634,33 @@ def test_bm25_resident_query_job_counts(spark, cat):
     calls["prefix"] = lambda: prefix_topk(spark, cat, "jo", k=10, cfg=CFG)
     counts = _warm_job_counts(spark, calls, "bm25_resident")
     assert counts == {**dict.fromkeys(calls, 0), "set_filter": 1}
+
+
+def test_resident_query_py4j_round_trips(spark, cat, ann_cat):
+    """A warm resident query of every BM25 kind and ANN mode, plus its
+    ``collect()``, makes no Py4J call: the search runs in the driver and
+    the result frame answers ``collect()`` from its own Arrow table (a
+    DataFrame filter's head read and knn_join_ivf's query side are JVM
+    reads, pinned above)."""
+    from cuvs_lucene_spark.frames import local_frame
+    from cuvs_lucene_spark.operators.bm25 import bm25_topk
+    from cuvs_lucene_spark.operators.multiterm import prefix_topk
+
+    calls = {f"bm25_{m}": c for m, c in _bm25_calls(spark, cat).items() if m != "set_filter"}
+    local = local_frame(spark, "ext_id long", range(0, 400, 3))
+    calls["bm25_local_filter"] = lambda: bm25_topk(
+        spark, cat, ["join", "vector"], k=10, cfg=CFG, filter_ext_ids=local
+    )
+    calls["bm25_prefix"] = lambda: prefix_topk(spark, cat, "jo", k=10, cfg=CFG)
+    calls.update({f"ann_{m}": c for m, c in _ann_calls(spark, ann_cat).items()
+                  if m not in ("knn_join_ivf", "ivf_df_filter")})
+    trips = {}
+    for mode, call in calls.items():
+        assert call().collect()
+        with py4j_round_trips() as n:
+            call().collect()
+        trips[mode] = n[0]
+    assert trips == dict.fromkeys(calls, 0)
 
 
 def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
