@@ -24,7 +24,11 @@ that format knows:
   graph navigates by beam search).
 
 Build, streaming epochs, merge and compaction all walk this one list, so
-a new format is one entry plus a thin search wrapper.
+a new format is one entry plus a thin search wrapper. Each of them is one
+catalog transaction (``IndexCatalog.transaction``): flat, ids, every
+format and the B2 bookkeeping of a build, epoch, merge or compaction
+become visible in one manifest swap, so every committed table covers the
+same segments as ``ann_flat``.
 
 Search (S1-S6). Each public search function writes its format's plan
 in the pieces of one search driver (``_search`` / ``_Plan``), which holds
@@ -42,9 +46,9 @@ the contract the reference's host supplies around every format:
   ext_id order; a tiny budget degrades recall, never errors
   (``GPUPerLeafCuVSKnnCollector.java:26-38``);
 - B2 fallback: a segment with no index rows (below
-  ``min_ann_index_size``, oversized for the graph, or missing after a
-  crashed merge) is scanned exactly from flat — every vector is reachable
-  in every mode, like the reference's per-leaf routing;
+  ``min_ann_index_size``, or oversized for the graph) is scanned exactly
+  from flat — every vector is reachable in every mode, like the
+  reference's per-leaf routing;
 - exact rerank: compressed formats cut ``k · rerank_factor`` coarse
   candidates per leaf and rescore them exactly from flat;
 - one tie rule: best first, lower ext_id first among equals —
@@ -72,8 +76,7 @@ same (ext_id, score) lists bit for bit:
   graph are one cogroup with ``ann_flat``; IVF-PQ is an ADC
   ``mapInPandas`` over the probed code lists, then a rerank cogroup. It
   serves a catalog over the budget, filters and tombstones large enough
-  for the blob tier, the distributed probe modes, and any query that
-  reads a table out of sync with flat (see ``_search``).
+  for the blob tier, and the distributed probe modes (see ``_search``).
 
 ``knn_join_ivf`` takes a query DataFrame. Under the same conditions, when
 ``frames.small_arrow`` reads the query side into the driver — it holds at
@@ -114,11 +117,11 @@ from cuvs_lucene_spark.functions.quantize import (
 )
 from cuvs_lucene_spark.frames import _TYPES, _fields, head_arrow, local_frame, small_arrow
 from cuvs_lucene_spark.operators import resident as R
-from cuvs_lucene_spark.sources.catalog import IndexCatalog
+from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
 ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
                         # manifest. v3: thin ann_ids map (DataFrame filter tier);
-                        # pre-v3 indexes self-heal the map on first large filter
+                        # pre-v3 indexes derive the map on first large filter
 
 FLAT_SCHEMA = "segment_id long, n_vecs int, dim int, ext_ids binary, vectors binary"
 IDS_SCHEMA = "segment_id long, ext_id long"
@@ -401,16 +404,14 @@ def validate_vectors(df: DataFrame, vector_col: str, id_col: str, ann: AnnParams
 
 # ---------------------------------------------------------------------------
 # Coarse scorers (executor side): approximate distance per vector of one
-# segment or list row, lower = closer; None when the format row is missing
+# segment or list row, lower = closer
 # ---------------------------------------------------------------------------
 
 
-def _sq_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+def _sq_coarse(r, ctx: "_Query") -> np.ndarray:
     """SQ: the index metric over the dequantized 7-bit codes. B11
     round-trip: unsigned widening is the wire format the device sees, so
     shift back before dequantizing."""
-    if r is None:
-        return None
     codes = np.frombuffer(r.codes, np.int8).reshape(int(r.n_vecs), int(r.dim))
     codes_i = (widen_unsigned(codes).astype(np.int16) - 64).astype(np.int8)
     x_deq = scalar_dequantize(
@@ -419,12 +420,10 @@ def _sq_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
     return -_scores(x_deq, ctx.q, ctx.metric)
 
 
-def _adc_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+def _adc_coarse(r, ctx: "_Query") -> np.ndarray:
     """PQ / IVF-PQ asymmetric distance: one (pq_dim × 2^bits) lookup table
     of squared L2 from each navigation-space query subvector to every
     centroid of its subspace, summed over each vector's codes."""
-    if r is None:
-        return None
     pq_dim, bits = int(r.pq_dim), int(r.pq_bits)
     sub = int(r.dim) // pq_dim
     books = np.frombuffer(r.codebook, np.float32).reshape(pq_dim, 1 << bits, sub)
@@ -434,26 +433,17 @@ def _adc_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
     return lut[np.arange(pq_dim)[None, :], codes].sum(1)
 
 
-def _bq_coarse(r, ctx: "_Query", x: np.ndarray | None) -> np.ndarray | None:
+def _bq_coarse(r, ctx: "_Query") -> np.ndarray:
     """BQ: Hamming distance between the query's and each vector's sign
-    bits about the segment centroid (navigation space). A missing row is
-    recomputed from the flat vectors — binary quantization is a
-    deterministic function of them — so the segment keeps bit-identical
-    Hamming semantics."""
-    if r is None:
-        if x is None:
-            return None
-        codes, centroid = binary_quantize(_nav_vectors(x, ctx.metric))
-        centroid = centroid.astype(np.float64)
+    bits about the segment centroid (navigation space)."""
+    codes = np.frombuffer(r.codes, np.uint8).reshape(int(r.n_vecs), -1)
+    # v2 writes the centroid as float64; v1 indexes wrote float32 — gate on
+    # blob length (dim*8 vs dim*4) so pre-v2 indexes open
+    raw = bytes(r.centroid)
+    if len(raw) == int(r.dim) * 8:
+        centroid = np.frombuffer(raw, np.float64)
     else:
-        codes = np.frombuffer(r.codes, np.uint8).reshape(int(r.n_vecs), -1)
-        # v2 writes the centroid as float64; v1 indexes wrote float32 —
-        # gate on blob length (dim*8 vs dim*4) so pre-v2 indexes open
-        raw = bytes(r.centroid)
-        if len(raw) == int(r.dim) * 8:
-            centroid = np.frombuffer(raw, np.float64)
-        else:
-            centroid = np.frombuffer(raw, np.float32).astype(np.float64)
+        centroid = np.frombuffer(raw, np.float32).astype(np.float64)
     qbits = np.packbits(ctx.qn.astype(np.float64) > centroid)
     return np.unpackbits(codes ^ qbits[None, :], axis=1).sum(1)
 
@@ -520,33 +510,37 @@ def _index_metric(cat: IndexCatalog) -> str:
     return cat.read_manifest().get("config", {}).get("ann_metric", "l2")
 
 
+def _concurrently(*writes: Callable[[], object]) -> None:
+    """Run mutually independent table writes from a small driver thread
+    pool, so their Spark jobs overlap (guide §2.6) and the caller pays the
+    slowest write instead of the sum; each writes a distinct table, and
+    the first failure is raised once all have finished."""
+    with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
+        for fut in [pool.submit(w) for w in writes]:
+            fut.result()
+
+
 def _write_format(spark: SparkSession, cat: IndexCatalog, fmt: AnnFormat,
                   cfg: IndexConfig, src=None) -> None:
-    """Full (re)build of one format from the committed tables it derives
-    from (``src(table)``, default a fresh read). The write covers exactly
-    the append tags all its inputs cover (else ``_derived_in_sync`` would
-    read the tagless fresh entry as stale once flat carries epoch/merge
-    appends)."""
-    covers = set.intersection(*(_covered_tags(cat, t) for t in fmt.inputs))
-    cat.write(
-        fmt.rows(src or (lambda t: cat.read(spark, t)), cfg, _index_metric(cat)),
-        fmt.table,
-        sort_within_partitions=list(fmt.keys) or None,
-        extra_entry={"covers_tags": sorted(covers)},
-    )
-    cat.mark_stage(fmt.table)
+    """Full (re)build of one format from the tables it derives from
+    (``src(table)``, default a fresh read), and its stage, in one
+    transaction (the caller's, if any)."""
+    with cat.transaction() as tx:
+        tx.write(
+            fmt.rows(src or (lambda t: tx.read(spark, t)), cfg, _index_metric(tx)),
+            fmt.table,
+            sort_within_partitions=list(fmt.keys) or None,
+        )
+        tx.mark_stage(fmt.table)
 
 
 def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
                     tag: str, extra_entry=lambda table: None) -> None:
     """Append every maintained format's rows for the new segments ``src``
     serves, under one shared tag (a streaming epoch or a merge
-    generation). Formats built from flat are mutually independent, so
-    their Spark jobs run concurrently from a driver thread pool (guide
-    §2.6; manifest commits serialize under the catalog lock); formats
-    built from other derived tables (IVF-PQ) follow once those are
-    committed. A crash leaves any subset of tables without the tag —
-    ``_derived_in_sync`` detects that per table."""
+    generation), inside the caller's transaction. Formats built from flat
+    are mutually independent (:func:`_concurrently`); formats built from
+    other derived tables (IVF-PQ) follow once those are staged."""
     fmts = [
         f for f in FORMATS.values()
         if f.default or all(cat.exists(t) for t in (f.table, *f.inputs))
@@ -558,9 +552,7 @@ def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
 
     first = [f for f in fmts if f.inputs == ("ann_flat",)]
     flat = src("ann_flat")  # one read shared by the pool (see build_ann)
-    with ThreadPoolExecutor(max_workers=len(first)) as pool:
-        for fut in [pool.submit(one, f, lambda t: flat) for f in first]:
-            fut.result()
+    _concurrently(*(lambda f=f: one(f, lambda t: flat) for f in first))
     for f in fmts:
         if f not in first:
             one(f, src)
@@ -607,61 +599,54 @@ def build_ann(
     rows_per_segment: int | None = None,
 ) -> IndexCatalog:
     """Build the ANN sidecar tables (flat, ids and the default formats)
-    from (id, array<float>) rows."""
+    from (id, array<float>) rows, committed in one transaction."""
     cfg = cfg or IndexConfig()
     ann = cfg.ann
     _check_index_metric(ann.metric)
     cat = IndexCatalog(index_root)
     validate_vectors(vectors, vector_col, id_col, ann)
     rps = rows_per_segment or cfg.rows_per_segment
-    cat.set_config(
-        {
-            "ann_metric": ann.metric,
-            "ann_format": ANN_FORMAT_VERSION,
-            "rows_per_segment": rps,
-            # merge-pressure knobs are INDEX state (delete_ann reads them
-            # from here, not from the deleting caller's cfg)
-            "delete_merge_fraction": ann.delete_merge_fraction,
-            "delete_merge_max_count": ann.delete_merge_max_count,
-        }
-    )
     base = vectors.select(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(vector_col).alias("vector"),
     ).withColumn("segment_id", (F.col("ext_id") / F.lit(rps)).cast("long"))
-
-    flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
-    cat.write(flat, "ann_flat")
-    cat.mark_stage("ann_flat")
-
-    # the remaining tables are mutually independent (ids derives from the
-    # input, the default formats from the committed flat — merge reads
-    # flat only, M4) — write them from a small driver thread pool so their
-    # Spark jobs overlap (guide §2.6): the build commit pays the SLOWEST
-    # write instead of the sum. Manifest commits serialize under the
-    # catalog's lock; each thread writes a distinct table.
-    def _w_ids():
-        # thin row-level (segment_id, ext_id) map — the DataFrame-filter
-        # tier's join target (and the merge policy's id→segment resolver)
-        cat.write(
-            base.select("segment_id", "ext_id"),
-            "ann_ids",
-            sort_within_partitions=["segment_id", "ext_id"],
+    with cat.transaction() as tx:
+        tx.set_config(
+            {
+                "ann_metric": ann.metric,
+                "ann_format": ANN_FORMAT_VERSION,
+                "rows_per_segment": rps,
+                # merge-pressure knobs are INDEX state (delete_ann reads
+                # them from here, not from the deleting caller's cfg)
+                "delete_merge_fraction": ann.delete_merge_fraction,
+                "delete_merge_max_count": ann.delete_merge_max_count,
+            }
         )
-        cat.mark_stage("ann_ids")
+        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
+        tx.write(flat, "ann_flat")
+        tx.mark_stage("ann_flat")
 
-    # one flat read shared by the pool (concurrent first reads would each
-    # infer the parquet schema)
-    flat_df = cat.read(spark, "ann_flat")
-    jobs = [_w_ids] + [
-        (lambda f=f: _write_format(spark, cat, f, cfg, lambda t: flat_df))
-        for f in FORMATS.values() if f.default
-    ]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        for f in [pool.submit(fn) for fn in jobs]:
-            f.result()
-    _mark_bf_fallback(spark, cat)
-    cat.mark_stage("ann_build")
+        def _w_ids():
+            # thin row-level (segment_id, ext_id) map — the DataFrame-filter
+            # tier's join target (and the merge policy's id→segment resolver)
+            tx.write(
+                base.select("segment_id", "ext_id"),
+                "ann_ids",
+                sort_within_partitions=["segment_id", "ext_id"],
+            )
+            tx.mark_stage("ann_ids")
+
+        # the remaining tables are mutually independent (ids derives from
+        # the input, the default formats from the staged flat — merge reads
+        # flat only, M4); one flat read is shared by the pool (concurrent
+        # first reads would each infer the parquet schema)
+        flat_df = tx.read(spark, "ann_flat")
+        _concurrently(_w_ids, *(
+            (lambda f=f: _write_format(spark, tx, f, cfg, lambda t: flat_df))
+            for f in FORMATS.values() if f.default
+        ))
+        _mark_bf_fallback(spark, tx)
+        tx.mark_stage("ann_build")
     return cat
 
 
@@ -690,57 +675,15 @@ def _check_choice(name: str, value: str, allowed: tuple) -> None:
         raise ValueError(f"unknown {name} {value!r}; expected one of {allowed}")
 
 
-def _derived_in_sync(cat: IndexCatalog, table: str) -> bool:
-    """Manifest-level (zero-job) consistency check of a derived ANN table
-    against ``ann_flat``: every append tag the flat table carries must be
-    covered by the derived table's own appends (merge generations and
-    streaming epochs commit BOTH sides under ONE shared tag) or by a
-    recorded ``covers_tags`` heal marker. A crash between merge_ann's
-    per-table appends leaves the derived table missing the new tag — this
-    detects that staleness from metadata alone, so the healthy path pays
-    nothing and a crashed state is healed (ann_ids) or routed through the
-    exact-from-flat fallback (bq/ivfpq) instead of silently dropping the
-    new segments' vectors."""
-    m = cat.read_manifest()
-    fe = m["tables"].get("ann_flat", {})
-    de = m["tables"].get(table, {})
-    if not de or de.get("snapshot") is None:
-        return False
-    flat_tags = set(fe.get("append_tags", {}))
-    covered = set(de.get("append_tags", {})) | set(de.get("covers_tags", []))
-    return not (flat_tags - covered)
-
-
-def _covered_tags(cat: IndexCatalog, table: str) -> set:
-    """Append tags a table's committed state covers (its own appends plus
-    any recorded ``covers_tags`` heal/rebuild marker)."""
-    de = cat.read_manifest()["tables"].get(table, {})
-    return set(de.get("append_tags", {})) | set(de.get("covers_tags", []))
-
-
 def _ann_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
     """Thin (segment_id, ext_id) map of the ANN sidecar — the row-level
     ord→doc table (S6) that lets a DataFrame filter resolve to per-segment
     masks with one equi-join (the role doc_map plays for the bm25 filter
-    tier). Written at build; lazily derived + committed once for pre-v4
-    indexes (commit-point readers derive without persisting).
-
-    STALENESS guard: a crash between merge_ann's ann_flat append and its
-    ann_ids append would otherwise leave the map permanently missing the
-    merged segments — and the blob-tier inner join would silently exclude
-    every merged vector from filtered queries. ``_derived_in_sync``
-    detects the gap from the manifest's append tags (no Spark job) and
-    re-derives + rewrites the whole map once, recording ``covers_tags`` so
-    the heal is itself a consistent commit."""
-    if cat.exists("ann_ids") and _derived_in_sync(cat, "ann_ids"):
+    tier). Written by every build, epoch and merge in the transaction that
+    writes flat; derived and committed once for a pre-v3 index, which has
+    none (a commit-point reader derives it per query without persisting)."""
+    if cat.exists("ann_ids"):
         return cat.read(spark, "ann_ids")
-    return _write_ids(spark, cat)
-
-
-def _write_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
-    """Re-derive the whole ``ann_ids`` map from ``ann_flat`` and commit it
-    covering flat's append tags; a pinned commit-point reader gets the
-    derived frame uncommitted."""
 
     def explode(it):
         for pdf in it:
@@ -757,14 +700,8 @@ def _write_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
         .select("segment_id", "ext_ids")
         .mapInPandas(explode, "segment_id long, ext_id long")
     )
-    flat_tags = sorted(
-        cat.read_manifest()["tables"].get("ann_flat", {}).get("append_tags", {})
-    )
     try:
-        cat.write(
-            ids, "ann_ids", sort_within_partitions=["segment_id", "ext_id"],
-            extra_entry={"covers_tags": flat_tags},
-        )
+        cat.write(ids, "ann_ids", sort_within_partitions=["segment_id", "ext_id"])
         return cat.read(spark, "ann_ids")
     except PermissionError:  # pinned commit-point reader: derive per query
         return ids
@@ -892,6 +829,7 @@ def _attach_aux(df: DataFrame, fblobs: DataFrame | None,
     return df
 
 
+@transactional
 def delete_ann(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -921,7 +859,8 @@ def delete_ann(
     bounded (Lucene's deletesPctAllowed merge pressure, applied
     per-segment). Both thresholds read from the catalog's PERSISTED
     config first (merge pressure is index state, not caller state),
-    falling back to the passed cfg."""
+    falling back to the passed cfg. The tombstones and the merge they
+    trigger commit in one transaction."""
     cfg = cfg or IndexConfig()
     if isinstance(ext_ids, DataFrame):
         # delete_docs parity: a named ext_id column is required unless the
@@ -1275,8 +1214,9 @@ def _segment_kernel(ctx: _Query, segment, value: str):
     """``applyInPandas`` kernel of a format table cogrouped with flat, one
     segment per call. ``segment(rows, x, ids, accept)`` is the format's
     per-leaf search → (ext_ids, values), or None when the leaf has no
-    format row — then the exact scan keeps it reachable (B2). Format rows
-    of merged-away segments have no flat row and are skipped."""
+    format row (oversized for the graph) — then the exact scan keeps it
+    reachable (B2). Format rows of a segment a filter blob pruned from
+    flat have no flat row and are skipped."""
     dtype = np.float64 if value == "score" else np.int32
 
     def scan(key, rows: pd.DataFrame, fp: pd.DataFrame) -> pd.DataFrame:
@@ -1312,9 +1252,10 @@ class _Plan:
         m = ctx.k * max(1, rerank_factor or 1)
 
         def segment(rows, x, ids, accept):
-            approx = coarse(next(rows.itertuples(index=False), None), ctx, x)
-            if approx is None:
+            row = next(rows.itertuples(index=False), None)
+            if row is None:
                 return None
+            approx = coarse(row, ctx)
             if rerank_factor is None:
                 cut = _coarse_cut(ids, approx, m, accept, ctx.budget)
                 return ids[cut], approx[cut]
@@ -1376,9 +1317,6 @@ class _Search(_Plan):
             self.ctx.qn, nprobe, probe_mode,
         )
 
-    def live(self, lists: DataFrame) -> DataFrame:
-        return _live_lists(self.spark, self.cat, lists)
-
     def join(self, left: DataFrame, right: DataFrame, on: str) -> DataFrame:
         return left.join(right, on)
 
@@ -1411,15 +1349,13 @@ class _Resident(_Plan):
     """The resident tier: the plan pieces over the pack's pandas frames,
     run in the driver through the same kernel bodies the Spark tier ships
     (``_scan_exact``, ``_segment_kernel``), so scores are bit-identical; the
-    top-k is one ``LocalRelation``. Raises :class:`_SparkTier` for a table
-    out of sync with flat or a probe that must leave the driver."""
+    top-k is one ``LocalRelation``. Raises :class:`_SparkTier` for a probe
+    that must leave the driver, or a pre-v2 index with no B2 list."""
 
     def __init__(self, spark, cat, ctx: _Query):
         self.spark, self.cat, self.ctx = spark, cat, ctx
 
     def table(self, name: str, *cols: str) -> pd.DataFrame:
-        if name != "ann_flat" and not _derived_in_sync(self.cat, name):
-            raise _SparkTier(name)
         rows = _resident_rows(self.spark, self.cat, name)
         return rows[list(cols)] if cols else rows
 
@@ -1433,7 +1369,7 @@ class _Resident(_Plan):
         return _frame(_scan_exact(self.ctx)(iter([rows])), TOPK_SCHEMA)
 
     def with_fallback(self, partials: pd.DataFrame, covering=("ann_ivf",)) -> pd.DataFrame:
-        segs = _listed_bf_segments(self.cat, covering)
+        segs = _listed_bf_segments(self.cat)
         if segs is None:
             raise _SparkTier("bf_fallback_segments")
         if not segs:
@@ -1456,7 +1392,7 @@ class _Resident(_Plan):
         )
 
     def probe(self, table: str, nprobe: int | None, probe_mode: str) -> pd.DataFrame | None:
-        if _probe_distributed(self.cat, probe_mode) or not _derived_in_sync(self.cat, "ann_ivf"):
+        if _probe_distributed(self.cat, probe_mode):
             raise _SparkTier("probe")
         rows = self.table(table)
         pack = _centroid_pack(self.spark, self.cat)
@@ -1465,9 +1401,6 @@ class _Resident(_Plan):
         want = pd.MultiIndex.from_arrays(_probe_pairs(pack, self.ctx.qn, nprobe))
         have = pd.MultiIndex.from_arrays([rows["segment_id"], rows["list_id"]])
         return rows[have.isin(want)]
-
-    def live(self, lists: pd.DataFrame) -> pd.DataFrame:
-        return lists
 
     def join(self, left: pd.DataFrame, right: pd.DataFrame, on: str) -> pd.DataFrame:
         return left.merge(right, on=on)
@@ -1522,9 +1455,10 @@ def _search(
       ``FILTER_BROADCAST_MAX`` ids);
     - the IVF probe leaves the driver (``probe_mode`` ``distributed`` or
       ``shuffle``, or ``auto`` above ``PROBE_DRIVER_MAX_SEGMENTS``);
-    - a table the query reads is out of sync with flat
-      (``_derived_in_sync``): the Spark tier's anti-join and live-list
-      anchors handle a crashed merge, the resident tier never has to.
+    - a pre-v2 index has no B2 list (``_bf_fallback``'s anti-join).
+
+    Every ANN write commits all its tables in one transaction, so each
+    table the plan reads covers the segments flat holds.
 
     Both tiers run the same kernels under the same tie rule, so they
     return the same (ext_id, score) lists bit for bit."""
@@ -1544,12 +1478,9 @@ def _search(
     return plan(_Search(spark, cat, ctx, fblobs, tblobs))
 
 
-def _listed_bf_segments(cat: IndexCatalog, covering=("ann_ivf",)) -> list[int] | None:
-    """The build-time B2 list (segments with no IVF index), or None when
-    it cannot be trusted: a ``covering`` table out of sync with flat (a
-    crash between a merge's appends) or a pre-v2 index without the list."""
-    if not all(_derived_in_sync(cat, t) for t in covering):
-        return None
+def _listed_bf_segments(cat: IndexCatalog) -> list[int] | None:
+    """The build-time B2 list (segments with no IVF index, hence no IVF-PQ
+    lists either), or None for a pre-v2 index without it."""
     segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("bf_fallback_segments")
     return None if segs is None else [int(s) for s in segs]
 
@@ -1557,11 +1488,9 @@ def _listed_bf_segments(cat: IndexCatalog, covering=("ann_ivf",)) -> list[int] |
 def _bf_fallback(spark: SparkSession, cat: IndexCatalog, flat: DataFrame,
                  covering=("ann_ivf",)) -> DataFrame | None:
     """B2 degradation ladder: the rows of ``flat`` whose segments have no
-    rows in every ``covering`` table (None when there are none). The
-    manifest list serves the healthy path; otherwise the covered set is
-    derived with an anti-join, so a stale list can never silently drop
-    the new segments' vectors."""
-    segs = _listed_bf_segments(cat, covering)
+    rows in every ``covering`` table (None when there are none): the
+    manifest's list, or for a pre-v2 index an anti-join."""
+    segs = _listed_bf_segments(cat)
     if segs is not None:
         return flat.filter(F.col("segment_id").isin(segs)) if segs else None
     covered = None
@@ -1571,18 +1500,6 @@ def _bf_fallback(spark: SparkSession, cat: IndexCatalog, flat: DataFrame,
         s = cat.read(spark, t).select("segment_id")
         covered = s if covered is None else covered.join(s, "segment_id", "left_semi")
     return flat.join(covered, "segment_id", "left_anti")
-
-
-def _live_lists(spark: SparkSession, cat: IndexCatalog, lists: DataFrame) -> DataFrame:
-    """A stale ``ann_ivf`` (crash between a merge's appends) may still
-    carry the merged-AWAY segments' lists; anchoring on the live flat
-    segments keeps those from emitting duplicate results (the cogrouped
-    formats are flat-anchored by construction)."""
-    if _derived_in_sync(cat, "ann_ivf"):
-        return lists
-    return lists.join(
-        cat.read(spark, "ann_flat").select("segment_id"), "segment_id", "left_semi"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1806,7 +1723,7 @@ def ann_topk(
             return s.top(s.exact(s.flat()))
         # blob tiers ride the list rows (filter inner-joins — segments with
         # zero allowed ids are pruned before scoring; tombstones left-join)
-        return s.top(s.with_fallback(s.exact(s.aux(s.live(lists)))))
+        return s.top(s.with_fallback(s.exact(s.aux(lists))))
 
     return _search(spark, cat, query, k, filter_ext_ids, filter_mode, plan, metric=metric)
 
@@ -1858,16 +1775,15 @@ def ann_topk_bq(
     Approximate, containment-validated (TestQuantizedVectorsFormats)."""
     value = "score" if rerank_factor is not None else "hamming"
 
-    def plan(s: _Plan) -> DataFrame:
-        # the pure-Hamming search reads only the flat ids (the fat vector
-        # blobs are never read) — unless ann_bq is out of sync with flat,
-        # when a missing row is recomputed from the vectors
-        need_vecs = rerank_factor is not None or not _derived_in_sync(cat, "ann_bq")
-        cols = ("segment_id", "n_vecs", "ext_ids") + (("vectors",) if need_vecs else ())
-        return s.top(s.coarse(FORMATS["bq"], rerank_factor, cols), value)
+    # the pure-Hamming search reads only the flat ids (the fat vector
+    # blobs are never read)
+    cols = ("segment_id", "n_vecs", "ext_ids")
+    if rerank_factor is not None:
+        cols += ("vectors",)
 
     return _search(
-        spark, cat, query, k, filter_ext_ids, filter_mode, plan,
+        spark, cat, query, k, filter_ext_ids, filter_mode,
+        lambda s: s.top(s.coarse(FORMATS["bq"], rerank_factor, cols), value),
         visited_limit=visited_limit, value=value,
     )
 
@@ -1931,7 +1847,7 @@ def ann_topk_ivfpq(
                 for r in pdf.itertuples(index=False):
                     ids = np.frombuffer(r.ext_ids, np.int64)
                     cut = _coarse_cut(
-                        ids, _adc_coarse(r, ctx, None), m,
+                        ids, _adc_coarse(r, ctx), m,
                         ctx.accept(pdf, r, ids), ctx.budget,
                     )
                     if cut.size:
@@ -1972,13 +1888,14 @@ def build_ann_pq(
     _write_format(spark, cat, FORMATS["pq"], cfg or IndexConfig())
 
 
+@transactional
 def build_ann_ivfpq(
     spark: SparkSession, cat: IndexCatalog, cfg: IndexConfig | None = None
 ) -> None:
     """Build the combined IVF-PQ lists (probed, compressed — see
     :func:`_ivfpq_rows`). Requires the PQ codebooks; builds them first if
-    absent. Centroid rows are shared with ``ann_ivf`` (one coarse
-    quantizer per segment, two list payloads)."""
+    absent, in the same transaction. Centroid rows are shared with
+    ``ann_ivf`` (one coarse quantizer per segment, two list payloads)."""
     cfg = cfg or IndexConfig()
     if not cat.exists("ann_pq"):
         build_ann_pq(spark, cat, cfg)
@@ -1999,8 +1916,9 @@ def build_ann_fields(
     (``CuVS2510GPUVectorsWriter.java:69`` per-field writer list, exercised
     by ``TestCuVSVectorsFormat.java:82-119``). Spark-first restatement:
     one ANN sidecar catalog per field under ``root/field=<name>``, each
-    built by the same flush kernel; a parent manifest records the field
-    list and per-field metric.
+    built by the same flush kernel in its own transaction; once every
+    field is built, a parent manifest records the field list and
+    per-field metric in one more.
 
     ``fields``: list of vector column names, or {column: metric} for
     per-field similarity functions. Rows where a field is NULL are skipped
@@ -2028,8 +1946,9 @@ def build_ann_fields(
             vector_col=name,
             rows_per_segment=rows_per_segment,
         )
-    cat.set_config({"ann_fields": metric_of, "ann_format": ANN_FORMAT_VERSION})
-    cat.mark_stage("ann_build_fields")
+    with cat.transaction() as tx:
+        tx.set_config({"ann_fields": metric_of, "ann_format": ANN_FORMAT_VERSION})
+        tx.mark_stage("ann_build_fields")
     return cat
 
 
@@ -2067,6 +1986,7 @@ def _literal_map(m: dict[int, int]):
     return F.create_map(*[F.lit(v).cast("long") for kv in m.items() for v in kv])
 
 
+@transactional
 def merge_ann(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -2096,7 +2016,11 @@ def merge_ann(
     untouched segments remain (M5, per-segment liveDocs envelope).
 
     A dropped-fraction compaction trigger (``cfg.compact_dropped_fraction``)
-    rewrites the ann tables once logically-dropped rows dominate."""
+    rewrites the ann tables once logically-dropped rows dominate.
+
+    One transaction: the appends to flat, ids and every format, the
+    tombstone clearing, the stage marks and the compaction become visible
+    in one manifest swap; a failure leaves the pre-merge index."""
     import dataclasses
 
     cfg = cfg or IndexConfig()
@@ -2237,7 +2161,7 @@ def merge_ann(
             extra_entry={"dropped_segments": _dropped_for("ann_ids")},
         )
     else:
-        _ann_ids(spark, cat)  # pre-v3 self-heal: derive from post-merge flat
+        _ann_ids(spark, cat)  # pre-v3: derive from the staged post-merge flat
     release()
 
     # derived structures for the NEW segments only (read back from the
@@ -2277,7 +2201,7 @@ def merge_ann(
         n for s, n in nvecs_of.items() if s not in gkey_of
     ) + sum(counts.values())
     if dropped_vecs > cfg.compact_dropped_fraction * (dropped_vecs + live_total):
-        compact_ann(spark, cat, cfg)
+        compact_ann(spark, cat)
     cat.mark_stage(
         f"merge_ann_gen_{gen}",
         lineage={
@@ -2288,41 +2212,30 @@ def merge_ann(
     return new_ids
 
 
-def compact_ann(spark: SparkSession, cat: IndexCatalog,
-                cfg: IndexConfig | None = None) -> None:
+@transactional
+def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
     """Compaction: materialize each ANN table's current logical state
     (appends folded in, dropped segments physically removed) into one
     fresh snapshot — reclaims merged-away bytes and resets the drop lists,
     like Iceberg's rewrite_data_files / Lucene's eventual file deletion.
     The merge generation stays monotone so later merges never mint an id a
-    still-live earlier-generation segment holds.
-
-    A derived table out of sync with flat (a crash between a merge's
-    appends, ``_derived_in_sync``) is rebuilt from the compacted flat
-    under ``cfg`` instead: a tagless rewrite of it would read as in sync
-    and keep serving its merged-away rows and missing segments."""
-    derived = ("ann_ids", *(f.table for f in FORMATS.values()))
-    stale = {t for t in derived if cat.exists(t) and not _derived_in_sync(cat, t)}
+    still-live earlier-generation segment holds. The rewrites are
+    independent (:func:`_concurrently`) and commit in one transaction."""
     gen = int(
         cat.read_manifest()["tables"].get("ann_flat", {}).get("ann_merge_gen", 0)
     )
-    for table in ("ann_flat", *derived):
-        if not cat.exists(table) or table in stale:
-            continue
-        extra = {"ann_merge_gen": gen} if table == "ann_flat" else None
+
+    def rewrite(table: str) -> None:
         cat.write(
             # merge_schema: pre-upgrade graph snapshots may lack layer/stride
             cat.read(spark, table, merge_schema=(table == "ann_graph")),
             table,
-            sort_within_partitions=["segment_id"], extra_entry=extra,
+            sort_within_partitions=["segment_id"],
+            extra_entry={"ann_merge_gen": gen} if table == "ann_flat" else None,
         )
-    if "ann_ids" in stale:
-        _write_ids(spark, cat)
-    for f in FORMATS.values():  # registry order: ivfpq after ivf and pq
-        if f.table in stale:
-            _write_format(spark, cat, f, cfg or IndexConfig())
-    if "ann_ivf" in stale:
-        _mark_bf_fallback(spark, cat)
+
+    tables = ("ann_flat", "ann_ids", *(f.table for f in FORMATS.values()))
+    _concurrently(*(lambda t=t: rewrite(t) for t in tables if cat.exists(t)))
 
 
 QPACK_SCHEMA = "qn int, q_ids binary, q_mat binary"
@@ -2442,7 +2355,7 @@ def knn_join_ivf(
     - ``driver`` — probe ranking over the memoized centroid pack (the one
       :func:`ann_topk` probes with). Under the resident tier's conditions
       (:func:`_search`'s: the catalog fits ``RESIDENT_MAX_BYTES``, no
-      filter or tombstone blobs, ``ann_ivf`` in sync with flat), over a
+      filter or tombstone blobs, a B2 list in the manifest), over a
       query side of at most ``resident.RESIDENT_JOIN_MAX_QUERIES`` rows
       that ``frames.small_arrow`` reads (a ``LocalRelation``'s rows with
       no job, else one head read of a plan a limit reads only a head of),
@@ -2496,8 +2409,8 @@ def knn_join_ivf(
 
     q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
     # the resident tier: the conditions of _search's, plus a bounded query
-    # side that a limit reads without running its plan twice (a listed B2
-    # set implies ann_ivf is in sync with flat)
+    # side that a limit reads without running its plan twice (a pre-v2
+    # index, with no listed B2 set, takes the Spark tier)
     if (not distributed and bf_segs is not None and fblobs is None and tblobs is None
             and _resident_fits(cat)):
         head = small_arrow(q, R.RESIDENT_JOIN_MAX_QUERIES)
@@ -2619,7 +2532,7 @@ def knn_join_ivf(
     )
     lists = None
     if ivf is not None:
-        lists = _live_lists(spark, cat, ivf.filter(F.col("list_id") >= 0))
+        lists = ivf.filter(F.col("list_id") >= 0)
     if bf_segs:
         flat_lists = (
             cat.read(spark, "ann_flat")

@@ -45,7 +45,6 @@ from cuvs_lucene_spark.config import IndexConfig, choose_build_algo
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.ann import (
     GRAPH_SCHEMA,
-    _covered_tags,
     _index_metric,
     _nav_vectors,
     _Query,
@@ -53,7 +52,7 @@ from cuvs_lucene_spark.operators.ann import (
     _search,
     _topk_frame,
 )
-from cuvs_lucene_spark.sources.catalog import IndexCatalog
+from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
 
 def _encode_adjacency(nbrs: list[np.ndarray]) -> tuple[bytes, bytes]:
@@ -322,6 +321,7 @@ def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
     return flat_df.mapInPandas(build, GRAPH_SCHEMA)
 
 
+@transactional
 def build_ann_graph(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -334,16 +334,14 @@ def build_ann_graph(
     Blob layout per segment: ``offsets`` = little-endian uint64 cumulative
     byte offsets (n_nodes + 1 entries — the monotonic offset directory),
     ``graph`` = concatenated per-node varint blocks, each node's sorted
-    neighbor ids delta-encoded (first value absolute). Like every full
-    rebuild of a derived table, the write covers flat's append tags
-    (``ann._derived_in_sync``)."""
+    neighbor ids delta-encoded (first value absolute). The table and its
+    stage commit in one transaction."""
     cfg = cfg or IndexConfig()
     cat.write(
         _graph_rows(
             cat.read(spark, "ann_flat"), cfg, degree, _index_metric(cat), exact_knn_max
         ),
         "ann_graph",
-        extra_entry={"covers_tags": sorted(_covered_tags(cat, "ann_flat"))},
     )
     cat.mark_stage("ann_graph")
 

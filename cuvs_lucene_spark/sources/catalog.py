@@ -10,6 +10,15 @@ snapshot commit without needing the Iceberg runtime jars (not present in
 this image; a real deployment would swap this class for
 ``spark.read.format("iceberg")`` with zero changes elsewhere).
 
+A commit can span tables: inside ``with cat.transaction() as tx:`` every
+write, append, stage mark and config change lands in a working copy of
+the manifest (reads through ``tx`` see it), and the block's end swaps the
+manifest once — the Delta Lake one-log-version-per-transaction model, and
+the reference's per-segment format files sealed together at commit. A bare
+``cat.write`` is a transaction of one action. A failure inside the block
+swaps nothing: the directories its puts wrote are referenced by no
+manifest, a retry overwrites them, and the table's next write prunes them.
+
 The manifest also records per-stage checkpoints and per-partition lineage
 (north rule: "resumable from checkpoint with per-partition lineage +
 metrics").
@@ -17,6 +26,9 @@ metrics").
 
 from __future__ import annotations
 
+import contextlib
+import copy
+import functools
 import json
 import os
 import shutil
@@ -78,19 +90,43 @@ def _put_arrow(at: pa.Table, out: str, sort_by: list[str] | None) -> None:
     pq.write_table(at, os.path.join(out, "part-00000.parquet"), row_group_size=rows)
 
 
+def transactional(op):
+    """Run ``op(spark, cat, ...)`` over ``cat.transaction()``: every write
+    it makes, through ``cat``, commits in one manifest swap (or joins the
+    caller's transaction)."""
+
+    @functools.wraps(op)
+    def run(spark, cat: "IndexCatalog", *args, **kwargs):
+        with cat.transaction() as tx:
+            return op(spark, tx, *args, **kwargs)
+
+    return run
+
+
 class IndexCatalog:
     """One index root directory holding versioned parquet tables + manifest."""
 
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
-        # serializes manifest read-modify-write sections so INDEPENDENT
-        # tables can be written from concurrent driver threads (guide
-        # §2.6 overlap independent jobs — the ANN build/merge commit
-        # several derived tables whose Spark jobs can run at once); the
-        # parquet writes themselves run OUTSIDE the lock. Concurrent
-        # writers of the SAME table remain unsupported.
+        # serializes manifest swaps: each re-reads the live manifest and
+        # applies only its own transaction's entries, so transactions over
+        # INDEPENDENT tables may run from concurrent driver threads.
+        # Concurrent writers of the SAME table remain unsupported.
         self._mlock = threading.RLock()
+
+    @contextlib.contextmanager
+    def transaction(self):
+        """A catalog over a working copy of the manifest: ``write`` /
+        ``write_arrow`` / ``append`` / ``append_arrow`` / ``mark_stage`` /
+        ``set_config`` / ``define_views`` stage into it, and ``read`` /
+        ``exists`` / ``read_manifest`` see what is staged. The block's end
+        swaps the manifest once (one commit point) and then prunes the
+        directories no entry references any more; an exception swaps
+        nothing. A transaction inside a transaction joins it."""
+        tx = _Transaction(self)
+        yield tx
+        tx._publish()
 
     # ------------------------------------------------------------- manifest
     def _manifest_path(self) -> str:
@@ -113,9 +149,9 @@ class IndexCatalog:
     COMMIT_RETENTION = 8  # commit points kept (IndexDeletionPolicy analogue)
 
     def _write_manifest(self, m: dict) -> None:
-        # every manifest swap IS a commit point (Lucene: each IndexWriter
-        # commit creates an IndexCommit); keep a numbered copy so readers
-        # can be pinned to a past commit (reader_at)
+        # every manifest swap — one per transaction — IS a commit point
+        # (Lucene: each IndexWriter commit creates an IndexCommit); keep a
+        # numbered copy so readers can be pinned to a past commit (reader_at)
         m["commit_n"] = int(m.get("commit_n", 0)) + 1
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
@@ -202,7 +238,8 @@ class IndexCatalog:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(out)
 
-        return self._commit_snapshot(table, put, lineage, extra_entry)
+        with self.transaction() as tx:
+            return tx._put_snapshot(table, put, lineage, extra_entry)
 
     def write_arrow(
         self,
@@ -214,48 +251,10 @@ class IndexCatalog:
     ) -> str:
         """:meth:`write` of a driver-held Arrow table: one parquet file
         written by pyarrow, then the same commit."""
-        return self._commit_snapshot(
-            table, lambda out: _put_arrow(at, out, sort_by), lineage, extra_entry
-        )
-
-    def _commit_snapshot(self, table: str, put, lineage, extra_entry) -> str:
-        """``put(out)`` writes the new snapshot directory; then one manifest
-        swap makes it the table's snapshot, and snapshots past the retained
-        history are pruned. A failure before the swap leaves nothing
-        visible."""
-        with self._mlock:
-            m = self.read_manifest()
-            prev = m["tables"].get(table)
-            if prev is not None and prev.get("view"):
-                prev = None if prev.get("snapshot") is None else prev
-            snap_n = (prev["n"] + 1) if prev else (m["tables"].get(table, {}).get("n", 0) + 1)
-        snap = f"snap-{snap_n:06d}"
-        out = os.path.join(self.root, table, snap)
-        put(out)
-        hist = (prev.get("history", []) if prev else [])
-        if prev:
-            hist = hist + [prev["snapshot"]]
-        with self._mlock:
-            # RE-READ at commit time: a concurrent writer of another
-            # table may have advanced the manifest while our parquet job
-            # ran — committing the stale copy would drop its entry
-            m = self.read_manifest()
-            m["tables"][table] = {
-                "snapshot": snap,
-                "n": snap_n,
-                "history": hist[-5:],
-                "committed_at": time.time(),
-                "lineage": lineage or {},
-                **(extra_entry or {}),
-            }
-            self._write_manifest(m)
-        # prune snapshots that fell off the retained history
-        keep = set(hist[-5:]) | {snap}
-        tdir = os.path.join(self.root, table)
-        for d in os.listdir(tdir):
-            if d.startswith("snap-") and d not in keep:
-                shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
-        return out
+        with self.transaction() as tx:
+            return tx._put_snapshot(
+                table, lambda out: _put_arrow(at, out, sort_by), lineage, extra_entry
+            )
 
     def read(
         self, spark: SparkSession, table: str, merge_schema: bool = False
@@ -318,15 +317,14 @@ class IndexCatalog:
         doc_map, norms, terms, segment_stats — are kind-filtered views of
         it. A later ``write`` of a view's name (e.g. by a merge)
         materializes the table and replaces the view."""
-        with self._mlock:
-            m = self.read_manifest()
+        with self.transaction() as tx, tx._mlock:
+            tables = tx._work["tables"]
             for name, (where, select) in views.items():
-                m["tables"][name] = {
+                tables[name] = {
                     "view": {"of": of_table, "where": where, "select": select},
                     "snapshot": None,
-                    "n": m["tables"].get(name, {}).get("n", 0),
+                    "n": tables.get(name, {}).get("n", 0),
                 }
-            self._write_manifest(m)
 
     def append(
         self,
@@ -350,7 +348,8 @@ class IndexCatalog:
                 "parquet.block.size", ROW_GROUP_BYTES
             ).parquet(out)
 
-        return self._commit_append(table, put, lambda: self.write(df, table), tag, extra_entry)
+        with self.transaction() as tx:
+            return tx._put_append(table, put, lambda: tx.write(df, table), tag, extra_entry)
 
     def append_arrow(
         self,
@@ -362,51 +361,11 @@ class IndexCatalog:
     ) -> str:
         """:meth:`append` of a driver-held Arrow table: one parquet file
         written by pyarrow, then the same commit."""
-        return self._commit_append(
-            table, lambda out: _put_arrow(at, out, sort_by),
-            lambda: self.write_arrow(at, table, sort_by), tag, extra_entry,
-        )
-
-    def _commit_append(self, table: str, put, first, tag, extra_entry) -> str:
-        """``put(out)`` writes the increment's directory, then one manifest
-        swap adds it (replacing the increment of the same ``tag``) and the
-        replaced directory is removed; ``first()`` writes the table instead
-        when it does not exist yet."""
-        with self._mlock:
-            m = self.read_manifest()
-            ent = m["tables"].get(table)
-            if ent is not None and ent.get("view") and ent.get("snapshot") is None:
-                raise ValueError(
-                    f"{table!r} is a view; append to {ent['view']['of']!r}"
-                )
-            n = (ent["n"] + 1) if ent is not None else 0
-        if ent is None:
-            return first()
-        snap = f"snap-{n:06d}"
-        out = os.path.join(self.root, table, snap)
-        put(out)
-        with self._mlock:
-            # RE-READ at commit time (see _commit_snapshot): keep entries a
-            # concurrent writer of another table committed meanwhile
-            m = self.read_manifest()
-            ent = m["tables"][table]
-            tags = ent.get("append_tags", {})
-            prev = tags.get(tag) if tag is not None else None
-            ent["n"] = n
-            ent["appends"] = [s for s in ent.get("appends", []) if s != prev] + [snap]
-            if tag is not None:
-                tags[tag] = snap
-                ent["append_tags"] = tags
-            if extra_entry:
-                # e.g. dropped_segments: committed in the SAME manifest
-                # write as the new increment, so merged data and its
-                # drops flip together
-                ent.update(extra_entry)
-            ent["committed_at"] = time.time()
-            self._write_manifest(m)  # commit point: new increment visible, old gone
-        if prev:
-            shutil.rmtree(os.path.join(self.root, table, prev), ignore_errors=True)
-        return out
+        with self.transaction() as tx:
+            return tx._put_append(
+                table, lambda out: _put_arrow(at, out, sort_by),
+                lambda: tx.write_arrow(at, table, sort_by), tag, extra_entry,
+            )
 
     def read_arrow(
         self, table: str, columns: list[str] | None = None, where: pc.Expression | None = None
@@ -459,16 +418,123 @@ class IndexCatalog:
         return self.read_manifest()["stages"].get(stage, {}).get("status") == "done"
 
     def mark_stage(self, stage: str, status: str = "done", **metrics: Any) -> None:
-        with self._mlock:
-            m = self.read_manifest()
-            m["stages"][stage] = {"status": status, "at": time.time(), **metrics}
-            self._write_manifest(m)
+        with self.transaction() as tx, tx._mlock:
+            tx._work["stages"][stage] = {"status": status, "at": time.time(), **metrics}
 
     def set_config(self, cfg: dict) -> None:
+        with self.transaction() as tx, tx._mlock:
+            tx._work["config"] = cfg
+
+
+class _Transaction(IndexCatalog):
+    """The catalog :meth:`IndexCatalog.transaction` yields: reads see the
+    working manifest ``_work``; puts write their directories at once and
+    stage the entries that name them; :meth:`_publish` commits."""
+
+    def __init__(self, cat: IndexCatalog):
+        self.root = cat.root
+        self._cat = cat
+        self._mlock = threading.RLock()  # guards _work (concurrent puts)
+        self._base = cat.read_manifest()
+        self._work = copy.deepcopy(self._base)
+        self._schema_memo = cat.__dict__.setdefault("_schema_memo", {})
+
+    def transaction(self):
+        return contextlib.nullcontext(self)
+
+    def read_manifest(self) -> dict:
         with self._mlock:
-            m = self.read_manifest()
-            m["config"] = cfg
-            self._write_manifest(m)
+            return copy.deepcopy(self._work)
+
+    def _put_snapshot(self, table: str, put, lineage, extra_entry) -> str:
+        """``put(out)`` writes the new snapshot directory, then the table's
+        staged entry names it, keeping the last 5 snapshots as history."""
+        with self._mlock:
+            ent = self._work["tables"].get(table)
+            prev = None if ent is None or ent.get("snapshot") is None else ent
+            snap_n = (ent or {}).get("n", 0) + 1
+        snap = f"snap-{snap_n:06d}"
+        out = os.path.join(self.root, table, snap)
+        put(out)
+        hist = (prev.get("history", []) + [prev["snapshot"]]) if prev else []
+        with self._mlock:
+            self._work["tables"][table] = {
+                "snapshot": snap,
+                "n": snap_n,
+                "history": hist[-5:],
+                "lineage": lineage or {},
+                **(extra_entry or {}),
+            }
+        return out
+
+    def _put_append(self, table: str, put, first, tag, extra_entry) -> str:
+        """``put(out)`` writes the increment's directory, then the table's
+        staged entry adds it (replacing the increment of the same ``tag``);
+        ``first()`` writes the table instead when it does not exist yet."""
+        with self._mlock:
+            ent = self._work["tables"].get(table)
+            if ent is not None and ent.get("view") and ent.get("snapshot") is None:
+                raise ValueError(
+                    f"{table!r} is a view; append to {ent['view']['of']!r}"
+                )
+            n = (ent["n"] + 1) if ent is not None else 0
+        if ent is None:
+            return first()
+        snap = f"snap-{n:06d}"
+        out = os.path.join(self.root, table, snap)
+        put(out)
+        with self._mlock:
+            ent = self._work["tables"][table]
+            tags = ent.get("append_tags", {})
+            prev = tags.get(tag) if tag is not None else None
+            ent["n"] = n
+            ent["appends"] = [s for s in ent.get("appends", []) if s != prev] + [snap]
+            if tag is not None:
+                tags[tag] = snap
+                ent["append_tags"] = tags
+            if extra_entry:
+                # e.g. dropped_segments: committed in the SAME manifest
+                # swap as the new increment, so merged data and its drops
+                # flip together
+                ent.update(extra_entry)
+        return out
+
+    def _publish(self) -> None:
+        """The commit: under the catalog's lock, re-read the live manifest
+        (a concurrent transaction over other tables may have advanced it),
+        apply this transaction's changed table, stage and config entries
+        (each stored table's ``committed_at`` the swap's time, so
+        ``stats_version`` grows with every swap), and swap once; nothing
+        changed, nothing swaps. Then remove the
+        directories of the changed tables their entries no longer name:
+        snapshots past the retained history, tag-replaced increments, and
+        what a failed transaction or this one's superseded puts left."""
+        def changed(key: str) -> dict:
+            return {k: v for k, v in self._work[key].items() if self._base[key].get(k) != v}
+
+        tables, stages = changed("tables"), changed("stages")
+        config = self._work["config"] != self._base["config"]
+        if not (tables or stages or config):
+            return
+        with self._cat._mlock:
+            now = time.time()
+            for ent in tables.values():
+                if ent.get("snapshot") is not None:
+                    ent["committed_at"] = now
+            m = self._cat.read_manifest()
+            m["tables"].update(tables)
+            m["stages"].update(stages)
+            if config:
+                m["config"] = self._work["config"]
+            self._cat._write_manifest(m)
+        for table, ent in tables.items():
+            tdir = os.path.join(self.root, table)
+            if ent.get("snapshot") is None or not os.path.isdir(tdir):
+                continue  # a view
+            keep = {ent["snapshot"], *ent.get("history", []), *ent.get("appends", [])}
+            for d in os.listdir(tdir):
+                if d.startswith("snap-") and d not in keep:
+                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
 
 
 class CommitPointReader(IndexCatalog):
@@ -484,20 +550,7 @@ class CommitPointReader(IndexCatalog):
     def read_manifest(self) -> dict:
         return self._pinned
 
-    def _write_manifest(self, m: dict) -> None:
+    def transaction(self, *_):
         raise PermissionError("commit-point reader is read-only")
 
-    def write(self, *a, **kw):
-        raise PermissionError("commit-point reader is read-only")
-
-    def append(self, *a, **kw):
-        raise PermissionError("commit-point reader is read-only")
-
-    write_arrow = write
-    append_arrow = append
-
-    def mark_stage(self, *a, **kw):
-        raise PermissionError("commit-point reader is read-only")
-
-    def set_config(self, cfg: dict) -> None:
-        raise PermissionError("commit-point reader is read-only")
+    _write_manifest = transaction

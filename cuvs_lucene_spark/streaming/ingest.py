@@ -19,10 +19,13 @@ ext_id/rows_per_segment) and the zero-shuffle partition segmenter
 index with streaming appends can never alias two different segments onto
 one id (which would silently merge their per-segment blobs).
 
-Exactly-once: foreachBatch is AT-LEAST-once, so every epoch append is
-tagged ``epoch_N`` and :meth:`IndexCatalog.append` replaces (not
-duplicates) the increment on redelivery; a fully committed epoch is
-skipped via its manifest stage checkpoint.
+Exactly-once: foreachBatch is AT-LEAST-once. Every epoch is one catalog
+transaction — its appends to every table and its stage checkpoint become
+visible in one manifest swap — so a crash leaves none of it visible and
+the redelivered epoch runs whole, while a fully committed epoch is skipped
+via its stage checkpoint. The appends are also tagged ``epoch_N``, and
+:meth:`IndexCatalog.append` replaces (not duplicates) an increment of the
+same tag.
 
 A text epoch flushes on the same two tiers as ``segments.build_index``:
 in the driver when its frame holds at most
@@ -30,11 +33,10 @@ in the driver when its frame holds at most
 ``segments.flush_segdata`` and, when the index has a positions sidecar,
 ``positions.build_positions_pdf`` per uncovered segment, appended by
 pyarrow through ``IndexCatalog.append_arrow`` — no other Spark job), else
-as Spark ``applyInPandas`` jobs. The driver epoch's coverage check reads
-only the sidecar rows of the epoch's own segment range, so its work does
-not grow with the index and, unlike a delete or a positions refresh, it
-is not gated by ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. Vector epochs
-run on Spark.
+as Spark ``applyInPandas`` jobs. The driver epoch reads nothing of the
+index, so its work does not grow with it and, unlike a delete or a
+positions refresh, it is not gated by
+``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. Vector epochs run on Spark.
 """
 
 from __future__ import annotations
@@ -42,12 +44,12 @@ from __future__ import annotations
 import dataclasses
 
 import numpy as np
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
+from cuvs_lucene_spark.frames import arrow_schema
 from cuvs_lucene_spark.functions.tokenize import doclen_expr
 from cuvs_lucene_spark.operators.segments import (
     SEGDATA_ARROW,
@@ -60,7 +62,7 @@ from cuvs_lucene_spark.operators.segments import (
     range_segments,
     small_docs,
 )
-from cuvs_lucene_spark.sources.catalog import IndexCatalog
+from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
 EPOCH_STRIDE = 1 << 20
 STREAM_BASE = 1 << 41
@@ -98,37 +100,23 @@ def _spark_epoch(
     cat.append(segdata, "segdata", tag=f"epoch_{epoch}")
     # positions sidecar maintenance: when the index opted into positions
     # (build_positions ran), every epoch appends its segments' position
-    # rows too — same idempotent tag discipline, so phrase queries never
-    # see a streamed segment the sidecar doesn't cover. A crash between
-    # the two appends is healed by redelivery (tag replaces); a permanent
-    # gap degrades to PositionsStaleError, never to wrong results.
+    # rows too, in the epoch's transaction — so phrase queries never see a
+    # streamed segment the sidecar doesn't cover
     if cat.exists("positions"):
         from cuvs_lucene_spark.operators.positions import (
             POS_SCHEMA,
             build_positions_pdf,
         )
 
-        # build only segments the sidecar does not cover yet: a crash
-        # between the two appends followed by a manual refresh_positions
-        # (untagged rows) must not be doubled by this epoch's redelivery —
-        # coverage, not the tag, is the idempotency authority. And when
-        # everything is already covered, do NOT re-append: an empty
-        # tag-replace would wipe the earlier increment's rows.
-        covered = cat.read(spark, "positions").select("segment_id").distinct()
-        missing = (
-            base.select("segment_id").distinct()
-            .join(covered, "segment_id", "left_anti")
+        pos = (
+            base.select("segment_id", "ext_id", F.col("content").alias("text"))
+            .groupBy("segment_id")
+            .applyInPandas(lambda p: build_positions_pdf(p), POS_SCHEMA)
         )
-        if missing.limit(1).count() > 0:
-            pos = (
-                base.select("segment_id", "ext_id", F.col("content").alias("text"))
-                .join(F.broadcast(missing), "segment_id", "left_semi")
-                .groupBy("segment_id")
-                .applyInPandas(lambda p: build_positions_pdf(p), POS_SCHEMA)
-            )
-            cat.append(pos, "positions", tag=f"epoch_{epoch}")
+        cat.append(pos, "positions", tag=f"epoch_{epoch}")
 
 
+@transactional
 def incremental_add(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -141,10 +129,10 @@ def incremental_add(
     """Build one epoch's segments from a (micro-)batch and append them.
 
     Same kernels as the batch build (B1-B8); only the segment namespace and
-    the commit mode (tagged append vs overwrite) differ. Idempotent per
-    epoch: a redelivered epoch replaces its own increment (see module
-    docstring), so a crash between manifest commit and streaming
-    checkpoint commit cannot double postings/norms rows.
+    the commit mode (tagged append vs overwrite) differ. One transaction,
+    idempotent per epoch (see module docstring): a crash between the
+    manifest commit and the streaming checkpoint commit cannot double
+    postings/norms rows.
     """
     if cat.stage_done(f"epoch_{epoch}"):
         return  # epoch fully committed earlier — redelivery is a no-op
@@ -169,24 +157,15 @@ def incremental_add(
         )
         tag = f"epoch_{epoch}"
         cat.append_arrow(flush_segdata(small, cfg), "segdata", sort_by=SEGDATA_SORT, tag=tag)
-        if len(small) and cat.exists("positions"):
-            # as in _spark_epoch: only segments the sidecar does not cover
-            # yet, and no append when every one is covered. Only the
-            # epoch's own segment range is read: row-group statistics
-            # prune the rest of the sidecar, so the read does not grow
-            # with the index
+        if len(small) and cat.exists("positions"):  # as in _spark_epoch
             from cuvs_lucene_spark.operators.positions import positions_arrow
 
-            seg = pc.field("segment_id")
-            span = (seg >= int(small["segment_id"].min())) & (seg <= int(small["segment_id"].max()))
-            covered = cat.read_arrow("positions", ["segment_id"], where=span).column(0).to_numpy()
-            todo = small[~small["segment_id"].isin(covered)]
-            if len(todo):
-                cat.append_arrow(positions_arrow(todo.rename(columns={"content": "text"})),
-                                 "positions", tag=tag)
+            cat.append_arrow(positions_arrow(small.rename(columns={"content": "text"})),
+                             "positions", tag=tag)
     cat.mark_stage(f"epoch_{epoch}", n_epoch=epoch)
 
 
+@transactional
 def incremental_add_vectors(
     spark: SparkSession,
     cat: IndexCatalog,
@@ -204,7 +183,9 @@ def incremental_add_vectors(
     with the same idempotent epoch tags as the text path (redelivery
     replaces, committed epochs skip). Per-segment structures are
     independent, so appended segments need no rebuild of earlier ones;
-    ``merge_ann`` later compacts, exactly like text segments."""
+    ``merge_ann`` later compacts, exactly like text segments. One
+    transaction: flat, ids, every format, the B2 bookkeeping and the
+    epoch's stage commit together."""
     from cuvs_lucene_spark.operators.ann import (
         ANN_FORMAT_VERSION,
         FLAT_SCHEMA,
@@ -244,26 +225,25 @@ def incremental_add_vectors(
     if cat.exists("ann_flat") and not cat.exists("ann_ids"):
         # pre-v3 catalog: materialize the FULL map from the existing flat
         # blobs before this epoch appends — seeding an empty table here
-        # would disable the self-heal and silently prune the pre-existing
-        # segments from every future DataFrame-filtered query
+        # would silently prune the pre-existing segments from every future
+        # DataFrame-filtered query
         _ann_ids(spark, cat)
     seeds = [("ann_flat", FLAT_SCHEMA), ("ann_ids", IDS_SCHEMA)] + [
         (f.table, f.schema) for f in FORMATS.values() if f.default
     ]
     for table, schema in seeds:
         if not cat.exists(table):
-            cat.write(spark.createDataFrame([], schema), table)
+            cat.write_arrow(arrow_schema(schema).empty_table(), table)
     tag = f"ann_epoch_{epoch}"
     cat.append(
         base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA),
         "ann_flat", tag=tag,
     )
-    # the DataFrame-filter tier's row-level map follows every flat append —
-    # a stale ann_ids would silently prune the new segments from filtered
-    # queries (its blob join is an inner join)
+    # the DataFrame-filter tier's row-level map follows every flat append
+    # (its blob join is an inner join)
     cat.append(base.select("segment_id", "ext_id"), "ann_ids", tag=tag)
     # every maintained format gets this epoch's segments, built from the
-    # JUST-COMMITTED rows of the epoch's range (per-segment independence:
+    # JUST-STAGED rows of the epoch's range (per-segment independence:
     # earlier segments are never rebuilt, and IVF-PQ re-encodes the
     # committed IVF lists instead of re-running their k-means). Formats
     # follow the CATALOG's metric (set at first epoch / batch build), never

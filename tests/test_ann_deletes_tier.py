@@ -1,4 +1,4 @@
-"""Round-5 delete/crash-consistency surface:
+"""Round-5 delete surface:
 
 - DataFrame-native ``delete_ann`` with the blob tombstone tier: above
   ``FILTER_BROADCAST_MAX`` registered deletes, NO driver-side id array is
@@ -7,30 +7,20 @@
   (``TestCuVSDeletedDocuments.java:83``) at mass-delete scale.
 - Absolute tombstone-count merge trigger (a fraction is not a size), read
   from the catalog's PERSISTED config, not the deleting caller's cfg.
-- merge_ann crash states: stale ``ann_ids`` self-heals from manifest tags
-  (ADVICE: a crash between the flat and ids appends must not silently
-  exclude merged vectors from filtered queries); segments whose
-  ``ann_ivfpq`` / ``ann_bq`` rows are missing stay reachable.
 - merge_ann refuses overlapping groups (lineage corruption guard).
 """
 
 from __future__ import annotations
 
 import dataclasses
-import shutil
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 import cuvs_lucene_spark.operators.ann as A
 from cuvs_lucene_spark.config import IndexConfig
-from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
 CFG = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
-# crash-state tests need the merge appends to SURVIVE (auto-compaction
-# rewrites tables and clears the append tags being doctored)
-NOCOMPACT = dataclasses.replace(CFG, compact_dropped_fraction=1.0)
 
 
 def _vec(i: int) -> list[float]:
@@ -160,186 +150,6 @@ def test_merge_ann_overlapping_groups_raise(spark, tmp_path):
         A.merge_ann(spark, cat, CFG, groups=[[segs[0], segs[1]], [segs[1], segs[0]]])
     with pytest.raises(ValueError, match="overlap"):
         A.merge_ann(spark, cat, CFG, groups=[[segs[0], segs[0], segs[1]]])
-
-
-def _doctor_drop_append(cat: IndexCatalog, table: str, tag: str) -> None:
-    """Simulate a crash BEFORE ``table``'s merge append committed: remove
-    the tagged increment from the manifest (and disk), leaving ann_flat's
-    commit in place — the exact state ADVICE flags."""
-    import os
-
-    m = cat.read_manifest()
-    ent = m["tables"][table]
-    snap = ent["append_tags"].pop(tag)
-    ent["appends"] = [s for s in ent.get("appends", []) if s != snap]
-    cat._write_manifest(m)
-    shutil.rmtree(os.path.join(cat.root, table, snap), ignore_errors=True)
-
-
-def test_stale_ann_ids_self_heals(spark, tmp_path):
-    """Crash between merge_ann's ann_flat append and its ann_ids append:
-    the manifest tag gap must be detected (zero-job) and the map
-    re-derived, so a DataFrame-filtered query still sees merged vectors."""
-    cat, df = _build(spark, str(tmp_path / "staleids"), cfg=NOCOMPACT)
-    A.merge_ann(spark, cat, NOCOMPACT)
-    tag = "ann_merge_gen_1"
-    assert tag in cat.read_manifest()["tables"]["ann_ids"].get("append_tags", {})
-    _doctor_drop_append(cat, "ann_ids", tag)
-    assert not A._derived_in_sync(cat, "ann_ids")
-
-    fdf = df.filter(F.col("vec_id") % 2 == 0).select("vec_id")
-    got = A.ann_topk(
-        spark, cat, _vec(1), k=8, cfg=CFG, mode="exact",
-        filter_ext_ids=fdf, filter_mode="df",
-    ).collect()
-    assert len(got) == 8 and all(r["ext_id"] % 2 == 0 for r in got)
-    # the heal committed a consistent map (covers_tags recorded)
-    assert A._derived_in_sync(cat, "ann_ids")
-
-
-def test_missing_ivfpq_rows_stay_reachable(spark, tmp_path):
-    """Crash before the merge's ann_ivfpq append (it is appended last):
-    the merged segments have flat/ivf rows but no ivfpq rows — the search
-    must brute-force them (anti-join derivation), not silently drop them."""
-    cat, df = _build(spark, str(tmp_path / "ivfpqcrash"), cfg=NOCOMPACT)
-    A.build_ann_pq(spark, cat, CFG)
-    A.build_ann_ivfpq(spark, cat, CFG)
-    A.merge_ann(spark, cat, NOCOMPACT)
-    for t in ("ann_ivfpq", "ann_pq"):
-        if "ann_merge_gen_1" in cat.read_manifest()["tables"][t].get(
-            "append_tags", {}
-        ):
-            _doctor_drop_append(cat, t, "ann_merge_gen_1")
-    assert not A._derived_in_sync(cat, "ann_ivfpq")
-    got = [
-        (r["ext_id"], round(r["score"], 9))
-        for r in A.ann_topk_ivfpq(spark, cat, _vec(1), k=8, cfg=CFG).collect()
-    ]
-    want = [
-        (r["ext_id"], round(r["score"], 9))
-        for r in A.ann_topk(
-            spark, cat, _vec(1), k=8, cfg=CFG, mode="exact"
-        ).collect()
-    ]
-    assert got == want  # all-bf equals exact
-
-
-def test_crash_before_any_derived_append_ivf_safe(spark, tmp_path, monkeypatch):
-    """Crash during the (now concurrent) derived appends, failing ann_sq:
-    the crashed table must be detected stale, any sibling table that DID
-    commit must be genuinely complete, and IVF search / the kNN join must
-    neither drop the merged vectors NOR emit duplicates from the
-    merged-away segments' stale lists. (ann_ivfpq runs after the
-    concurrent batch, so a batch crash always leaves it stale too.)"""
-    cat, df = _build(spark, str(tmp_path / "ivfcrash"), cfg=NOCOMPACT)
-    real_append = IndexCatalog.append
-
-    def crashing_append(self, d, table, **kw):
-        if table == "ann_sq":
-            raise RuntimeError("simulated crash before derived appends")
-        return real_append(self, d, table, **kw)
-
-    monkeypatch.setattr(IndexCatalog, "append", crashing_append)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        A.merge_ann(spark, cat, NOCOMPACT)
-    monkeypatch.setattr(IndexCatalog, "append", real_append)
-    assert not A._derived_in_sync(cat, "ann_sq")
-    if cat.exists("ann_ivfpq"):
-        assert not A._derived_in_sync(cat, "ann_ivfpq")
-
-    want = [
-        (r["ext_id"], round(r["score"], 9))
-        for r in A.ann_topk(spark, cat, _vec(1), k=10, cfg=CFG, mode="exact").collect()
-    ]
-    got = [
-        (r["ext_id"], round(r["score"], 9))
-        for r in A.ann_topk(spark, cat, _vec(1), k=10, cfg=CFG, mode="ivf").collect()
-    ]
-    assert got == want  # complete AND duplicate-free
-    # SQ path: stale rows (old segs, no flat → skipped) + missing rows
-    # (new segs → exact fallback) — still exact
-    got_sq = [
-        (r["ext_id"], round(r["score"], 9))
-        for r in A.ann_topk_sq(spark, cat, _vec(1), k=10, cfg=CFG).collect()
-    ]
-    assert got_sq == want
-    # the bucketed join: per-query unique ranks, containment vs exact
-    qdf = df.filter(F.col("vec_id").isin([1, 5])).selectExpr(
-        "vec_id AS q_id", "embedding AS q_vec"
-    )
-    rows = A.knn_join_ivf(spark, cat, qdf, k=3).collect()
-    keys = [(r["q_id"], r["rank"]) for r in rows]
-    assert len(keys) == len(set(keys)) == 6
-    assert len({(r["q_id"], r["vec_id"]) for r in rows}) == 6  # no dup vecs
-
-
-def test_compaction_rebuilds_stale_ivf(spark, tmp_path, monkeypatch):
-    """A merge whose ann_ivf append was lost, then auto-compaction: the
-    stale ann_ivf must be rebuilt from flat, not rewritten tagless — that
-    would read as in sync and serve the merged-away segment's lists next
-    to the merged segment's exact scan (every hit of segment 0 twice)."""
-    cat, df = _build(spark, str(tmp_path / "compactstale"), n=81, rps=40)
-    real_append = IndexCatalog.append
-
-    def lose_ivf(self, d, table, **kw):
-        return None if table == "ann_ivf" else real_append(self, d, table, **kw)
-
-    monkeypatch.setattr(IndexCatalog, "append", lose_ivf)
-    # 41 of 81 vectors dropped > compact_dropped_fraction 0.3: compacts
-    A.merge_ann(spark, cat, CFG, groups=[[0, 2]])
-    monkeypatch.setattr(IndexCatalog, "append", real_append)
-    assert not cat.read_manifest()["tables"]["ann_flat"].get("append_tags")
-    assert A._derived_in_sync(cat, "ann_ivf")
-
-    def top(mode):
-        return [(r["ext_id"], r["score"]) for r in A.ann_topk(
-            spark, cat, _vec(1), k=20, cfg=CFG, mode=mode, nprobe=1 << 20).collect()]
-
-    assert top("ivf") == top("exact")  # every list probed: exact, no duplicates
-
-
-def test_missing_bq_rows_pure_hamming_reachable(spark, tmp_path):
-    """Crash before the merge's ann_bq append: the pure-hamming path must
-    recompute codes from flat for the uncovered segments (numpy oracle)."""
-    cat, df = _build(spark, str(tmp_path / "bqcrash"), cfg=NOCOMPACT)
-    A.merge_ann(spark, cat, NOCOMPACT)
-    _doctor_drop_append(cat, "ann_bq", "ann_merge_gen_1")
-    assert not A._derived_in_sync(cat, "ann_bq")
-
-    got = [
-        (r["ext_id"], r["hamming"])
-        for r in A.ann_topk_bq(spark, cat, _vec(1), k=10, cfg=CFG).collect()
-    ]
-    # numpy oracle over the (single) merged segment
-    from cuvs_lucene_spark.functions.quantize import binary_quantize
-
-    rows = cat.read(spark, "ann_flat").collect()
-    pairs = []
-    q = np.asarray(_vec(1), np.float32)
-    for r in rows:
-        x = np.frombuffer(r["vectors"], np.float32).reshape(r["n_vecs"], r["dim"])
-        ids = np.frombuffer(r["ext_ids"], np.int64)
-        codes, cent = binary_quantize(x)
-        qbits = np.packbits(q.astype(np.float64) > cent.astype(np.float64))
-        ham = np.unpackbits(codes ^ qbits[None, :], axis=1).sum(1)
-        pairs += [(int(i), int(h)) for i, h in zip(ids, ham)]
-    want = sorted(pairs, key=lambda t: (t[1], t[0]))[:10]
-    assert got == want
-
-
-def test_full_rebuild_records_covers_tags(spark, tmp_path):
-    """A FULL rebuild of a derived table (build_ann_pq / build_ann_ivfpq
-    after streaming/merge appends tagged ann_flat) derives from the
-    CURRENT flat — it must record covers_tags, else _derived_in_sync
-    reads the fresh tagless entry as permanently stale and every later
-    query pays the crash-healing path forever."""
-    cat, df = _build(spark, str(tmp_path / "coverstags"), cfg=NOCOMPACT)
-    A.merge_ann(spark, cat, NOCOMPACT)  # tags ann_flat with ann_merge_gen_1
-    assert cat.read_manifest()["tables"]["ann_flat"].get("append_tags")
-    A.build_ann_pq(spark, cat, CFG)       # full rebuild (entry replaced)
-    A.build_ann_ivfpq(spark, cat, CFG)    # full rebuild from ivf ∩ pq
-    assert A._derived_in_sync(cat, "ann_pq")
-    assert A._derived_in_sync(cat, "ann_ivfpq")
 
 
 def test_delete_ann_dataframe_requires_ext_id_column(spark, tmp_path):

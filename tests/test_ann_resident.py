@@ -141,7 +141,6 @@ def test_merge_extends_the_pack(spark, merged):
 
 def test_tiers_equal_after_merge(spark, merged, monkeypatch):
     merged = merged[0]
-    assert A._derived_in_sync(merged, "ann_ivfpq")
     assert merged.read_manifest()["tables"]["ann_flat"]["dropped_segments"] == [0, 1]
     names = list(FILTERS)
     cases = [(m, names[i % len(names)]) for i, m in enumerate(MODES)]
@@ -221,7 +220,7 @@ def _joins_both_tiers(spark, cat, cases, monkeypatch, x=X) -> None:
             return {c: f.result(timeout=300) for c, f in futs.items()}
 
     with monkeypatch.context() as m:
-        m.setattr(A, "_live_lists", lambda *a, **k: pytest.fail("join took the Spark tier"))
+        m.setattr(A, "_attach_aux", lambda *a, **k: pytest.fail("join took the Spark tier"))
         resident = run()
     with monkeypatch.context() as m:
         m.setattr(R, "RESIDENT_MAX_BYTES", 0)

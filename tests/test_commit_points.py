@@ -152,3 +152,52 @@ def test_pinned_reader_derives_filter_map_without_persisting(spark, tmp_path):
     assert not pinned.exists("ann_ids")
     snaps = os.listdir(os.path.join(cat.root, "ann_ids"))
     assert len([s for s in snaps if s.startswith("snap-")]) == 1  # build's own
+
+
+def test_each_ann_write_is_one_commit_point(spark, tmp_path):
+    """Every ANN write, and a text epoch, commits all its tables in one
+    transaction: each advances the last commit point by exactly 1, so a
+    reader pinned before a merge that auto-compacts stays retained and
+    answers the pre-merge results."""
+    from cuvs_lucene_spark.operators.ann import build_ann_pq, compact_ann, merge_ann
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+    from cuvs_lucene_spark.streaming.ingest import incremental_add, incremental_add_vectors
+
+    x = np.random.default_rng(9).normal(size=(120, 8)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(120)], "vec_id long, embedding array<float>"
+    )
+    root = str(tmp_path / "one")
+    steps = {}
+
+    def step(name, fn, at=root):
+        before = (IndexCatalog(at).commit_points() or [0])[-1]
+        fn()
+        steps[name] = IndexCatalog(at).commit_points()[-1] - before
+
+    step("build_ann", lambda: build_ann(spark, df, root, CFG, id_col="vec_id",
+                                        vector_col="embedding", rows_per_segment=40))
+    cat = IndexCatalog(root)
+    step("build_ann_pq", lambda: build_ann_pq(spark, cat, CFG))
+    c0 = cat.commit_points()[-1]
+
+    def top(c, mode):
+        return [tuple(r) for r in ann_topk(spark, c, x[7], k=5, cfg=CFG, mode=mode).collect()]
+
+    want = {mode: top(cat, mode) for mode in ("exact", "ivf")}
+    # 80 of 120 vectors move: over compact_dropped_fraction, so it compacts
+    step("merge_ann", lambda: merge_ann(spark, cat, CFG, tombstone_ext_ids={7},
+                                        groups=[[0, 1]], rows_per_segment=40))
+    assert not cat.read_manifest()["tables"]["ann_flat"].get("appends")
+    assert 7 not in [r[0] for r in top(cat, "exact")]
+    pinned = cat.reader_at(c0)
+    assert {mode: top(pinned, mode) for mode in want} == want
+    step("compact_ann", lambda: compact_ann(spark, cat))
+    step("incremental_add_vectors", lambda: incremental_add_vectors(
+        spark, cat, df.limit(10), CFG, 0, id_col="vec_id", vector_col="embedding"))
+    text = str(tmp_path / "text")
+    step("incremental_add", lambda: incremental_add(
+        spark, IndexCatalog(text),
+        spark.createDataFrame([(1, "red fox")], "doc_id long, text string"),
+        CFG, 0, content_col="text", id_col="doc_id"), at=text)
+    assert steps == dict.fromkeys(steps, 1) and len(steps) == 6

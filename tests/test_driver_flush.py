@@ -258,8 +258,8 @@ def test_crash_before_the_manifest_swap_leaves_nothing_visible(spark, tmp_path, 
 def test_index_bound_sends_deletes_and_refreshes_to_spark(spark, tmp_path, monkeypatch):
     """Over ``DRIVER_FLUSH_MAX_INDEX_BYTES`` a small delete and a positions
     refresh run on Spark (their driver work grows with the index) with the
-    same results; an epoch still flushes in the driver, and its coverage
-    check reads no sidecar row outside its own segment range."""
+    same results; an epoch still flushes in the driver and reads nothing
+    of the index."""
     pdf = pd.read_parquet(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     local = spark.createDataFrame(pdf[pdf.doc_id < 300])
     cat = S.build_index(spark, local, str(tmp_path / "idx"), CFG, content_col="text",
@@ -280,13 +280,13 @@ def test_index_bound_sends_deletes_and_refreshes_to_spark(spark, tmp_path, monke
     epoch = spark.createDataFrame(pdf[pdf.doc_id >= 300].assign(doc_id=lambda p: p.doc_id + 10**5))
     jobs = {"epoch": _count_jobs(spark, "bound_epoch", lambda: incremental_add(
         spark, cat, epoch, CFG, epoch=0, content_col="text", id_col="doc_id"))}
-    assert reads == [("positions", 0)]
+    assert reads == []
     live = []
     jobs["delete"] = _count_jobs(spark, "bound_delete", lambda: live.append(delete_docs(
         spark, cat, local_frame(spark, "ext_id long", [3, 4, 100300]))))
     jobs["refresh"] = _count_jobs(spark, "bound_refresh", lambda: live.append(
         refresh_positions(spark, cat, local, CFG)))
-    assert reads == [("positions", 0)]
+    assert reads == []
     assert jobs["epoch"] == 0 and jobs["delete"] > 0 and jobs["refresh"] > 0
     assert live == [497, 0]
     assert cat.read_manifest()["tables"]["tombstones"]["lineage"] == {"n": 3}

@@ -663,6 +663,37 @@ def test_resident_query_py4j_round_trips(spark, cat, ann_cat):
     assert trips == dict.fromkeys(calls, 0)
 
 
+ANN_MANIFEST_READS = {  # IndexCatalog.read_manifest calls per warm resident query
+    "exact": 4, "ivf": 10, "ivf_set_filter": 10, "sq": 5, "bq": 5, "bq_rerank": 5,
+    "pq": 5, "ivfpq": 11, "graph": 5, "graph_auto_ef": 7,
+}
+
+
+def test_ann_resident_query_manifest_reads(spark, ann_cat, monkeypatch):
+    """A warm resident ANN query reads the manifest a pinned number of
+    times: no per-table consistency check re-reads it (every ANN write
+    commits its tables in one transaction). The parent of that change read
+    it 4 / 13 / 6 / 7 / 6 times for exact / ivf / sq / bq / pq."""
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+
+    calls = _ann_calls(spark, ann_cat)
+    real, n = IndexCatalog.read_manifest, [0]
+
+    def counted(self):
+        n[0] += 1
+        return real(self)
+
+    reads = {}
+    for mode in ANN_MANIFEST_READS:
+        assert calls[mode]().collect()
+        with monkeypatch.context() as m:
+            m.setattr(IndexCatalog, "read_manifest", counted)
+            n[0] = 0
+            calls[mode]().collect()
+        reads[mode] = n[0]
+    assert {m: r for m, r in reads.items() if r > ANN_MANIFEST_READS[m]} == {}, reads
+
+
 def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
     """Every BM25 query kind runs a fixed, small number of Spark jobs per
     warm query on the Spark tier. Runs last in the module: the final case

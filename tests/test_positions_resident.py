@@ -31,6 +31,7 @@ from cuvs_lucene_spark.operators.positions import (
     refresh_positions,
 )
 from cuvs_lucene_spark.operators.segments import build_index
+from cuvs_lucene_spark.sources.catalog import IndexCatalog
 from cuvs_lucene_spark.streaming.ingest import incremental_add
 
 from tests.conftest import SF_DIR
@@ -106,10 +107,9 @@ def pdeleted(spark, pcat):
 
 @pytest.fixture(scope="module")
 def pmerged(spark, pdeleted, monkeypatch_module):
-    """An epoch whose positions append was lost (the gap between the two
-    appends that ``incremental_add`` documents), repaired by
-    ``refresh_positions``; then segments 0 and 1 merged and the sidecar
-    refreshed again. Records what a phrase query did on each tier while
+    """An epoch run while the sidecar was hidden from it, so it appended
+    no position rows (a stale sidecar), repaired by ``refresh_positions``;
+    then segments 0 and 1 merged and the sidecar refreshed again. Records what a phrase query did on each tier while
     the sidecar was stale, and the pack reads of the query after the
     last refresh."""
     cat = pdeleted
@@ -117,9 +117,9 @@ def pmerged(spark, pdeleted, monkeypatch_module):
     query()  # the pack is warm before each commit
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     epoch = docs.filter(F.col("doc_id") < 60).withColumn("doc_id", F.col("doc_id") + 1000)
-    exists = cat.exists
+    exists = IndexCatalog.exists  # (the epoch's transaction calls it)
     with monkeypatch_module.context() as m:
-        m.setattr(cat, "exists", lambda t: t != "positions" and exists(t))
+        m.setattr(IndexCatalog, "exists", lambda self, t: t != "positions" and exists(self, t))
         incremental_add(spark, cat, epoch, CFG, epoch=0, content_col="text", id_col="doc_id")
     stale = {"epoch": _both(spark, cat, monkeypatch_module, query)}
     all_docs = docs.unionByName(epoch)
