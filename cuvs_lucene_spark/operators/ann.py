@@ -15,10 +15,12 @@ Formats (``FORMATS``). One entry per derived table supplies what only
 that format knows:
 
 - its table, row schema and sort keys;
-- its row builder for a set of segments — ``_sq_rows`` (B10),
-  ``_bq_rows`` (B9), ``_ivf_rows`` (k-means lists with the
-  ``CagraIndexParamsFactory.java:31-93,149-178`` heuristics, O1/O2),
-  ``_graph_rows`` (B12), ``_pq_rows``, ``_ivfpq_rows``;
+- its kernel, one module-level function from the rows of its input
+  tables (pandas frames: flat rows, or IVF lists plus PQ codebooks) to
+  its own rows — ``_sq_rows`` (B10), ``_bq_rows`` (B9), ``_ivf_rows``
+  (k-means lists with the ``CagraIndexParamsFactory.java:31-93,149-178``
+  heuristics, O1/O2), ``ann_graph._graph_rows`` (B12), ``_pq_rows``,
+  ``_ivfpq_rows``;
 - its coarse scorer, if it is compressed: SQ dequantize, PQ / IVF-PQ ADC
   lookup table, BQ Hamming (raw IVF lists and exact scans have none; the
   graph navigates by beam search).
@@ -29,6 +31,19 @@ catalog transaction (``IndexCatalog.transaction``): flat, ids, every
 format and the B2 bookkeeping of a build, epoch, merge or compaction
 become visible in one manifest swap, so every committed table covers the
 same segments as ``ann_flat``.
+
+Writes. Each kernel has two transports (``_format_rows``), as the text
+flush's ``build_segment_pdf`` has. Builds, format builds and epochs of at
+most ``ANN_DRIVER_MAX_VALUES`` vector values run in the driver, as the
+reference builds each segment's index in-process at flush
+(``CuVS2510GPUVectorsWriter.java:128-148``): the caller's frame is read
+once (``small_vectors``), flat rows come from ``build_flat_pdf``
+(``flush_flat``), a format build reads its inputs by pyarrow
+(``IndexCatalog.read_arrow``), the kernels are called directly and every
+table is written by pyarrow — no Spark job beyond the read of the
+caller's frame. Larger writes, merges and compactions run on Spark, where
+each kernel is one ``mapInPandas`` over flat rows (a cogroup by segment
+for IVF-PQ).
 
 Search (S1-S6). Each public search function writes its format's plan
 in the pieces of one search driver (``_search`` / ``_Plan``), which holds
@@ -93,12 +108,14 @@ Routing mirrors S1: ``k > max_k_ann`` or no IVF index → brute force.
 
 from __future__ import annotations
 
+import functools
 import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -115,13 +132,36 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
-from cuvs_lucene_spark.frames import _TYPES, _fields, head_arrow, local_frame, small_arrow
+from cuvs_lucene_spark.frames import (_TYPES, _fields, arrow_schema, head_arrow, local_frame,
+                                      small_arrow)
 from cuvs_lucene_spark.operators import resident as R
+from cuvs_lucene_spark.operators import segments as S
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
 ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
                         # manifest. v3: thin ann_ids map (DataFrame filter tier);
                         # pre-v3 indexes derive the map on first large filter
+
+ANN_DRIVER_MAX_VALUES = 384_000  # builds, format builds and epochs of at
+                                 # most this many vector values (vectors ×
+                                 # dim) run in the driver
+# The driver tier runs the kernels on one core, the Spark tier over the
+# executors. Measured on fixtures.generate_embeddings_pdf vectors on
+# local[4], rows_per_segment = n/4, a cached input frame, BLAS pools of one
+# thread, medians of 3 warm runs, driver/Spark s, identical rows. At 64-d:
+# build_ann 2k 0.08/0.55, 8k 0.09/0.69, 20k 0.12/0.81, 50k 0.34/1.05;
+# build_ann_pq 2k 0.29/0.41, 4k 0.34/0.48, 6k 0.40/0.54, 8k 0.47/0.37, 20k
+# 0.87/0.57, 50k 1.82/1.11; build_ann_ivfpq 2k 0.08/0.30, 50k 0.23/0.45;
+# build_ann_graph 2k 0.13/0.25, 6k 0.27/0.43, 8k 0.44/0.38, 20k 4.05/2.17,
+# 50k 10.6/5.5; an epoch (every format) 2k 0.48/1.42, 8k 0.90/1.74, 20k
+# 4.15/4.27, 50k 11.1/6.7. At 256-d: build_ann_pq 1,250 0.46/0.57, 2k
+# 0.58/0.43, 8k 1.71/1.03; build_ann_graph 8k 0.46/0.40. PQ and the graph
+# cross over first, between 6k and 8k vectors at 64-d (384k-512k values)
+# and between 1,250 and 2k at 256-d (320k-512k), so the bound is 6k × 64.
+# Below 33-d, PQ's 8-bit codebooks tie (32-d: 3k 2.07/2.16, 6k 2.36/2.43)
+# and 8k × 8 and 8k × 16 are faster in the driver for every write. The
+# caller's frame is read in at most segments.DRIVER_FLUSH_MAX_DOCS rows,
+# which binds first below 48-d.
 
 FLAT_SCHEMA = "segment_id long, n_vecs int, dim int, ext_ids binary, vectors binary"
 IDS_SCHEMA = "segment_id long, ext_id long"
@@ -190,36 +230,60 @@ def _kmeans(x: np.ndarray, n_lists: int, iters: int, seed: int, trainset_fractio
     return cents
 
 
-def _per_segment(flat_df: DataFrame, metric: str, encode, schema: str) -> DataFrame:
+def _frame(parts, schema: str) -> pd.DataFrame:
+    """Concatenate a kernel's output frames (typed and empty when none)."""
+    parts = list(parts)
+    if parts:
+        return pd.concat(parts, ignore_index=True)
+    return pd.DataFrame({n: np.empty(0, _TYPES[t][1]) for n, t in _fields(schema)})
+
+
+def _rows(rows: list, schema: str) -> pd.DataFrame:
+    """A kernel's output rows (tuples, or dicts keyed by column) as one
+    frame of ``schema``'s columns, typed and empty when there are none."""
+    cols = [n for n, _ in _fields(schema)]
+    return _frame([pd.DataFrame(rows, columns=cols)] if rows else [], schema)
+
+
+def _arrow(pdf: pd.DataFrame, schema: str) -> pa.Table:
+    """A driver-built frame as an Arrow table of ``schema`` (every field
+    nullable, as Spark writes it)."""
+    return pa.Table.from_pandas(pdf, arrow_schema(schema), preserve_index=False)
+
+
+# ---------------------------------------------------------------------------
+# Format kernels: flat rows (or IVF lists plus PQ codebooks) → one format's
+# rows, pandas in and pandas out. The Spark tier ships each through one
+# mapInPandas (a cogroup by segment for IVF-PQ), the driver tier calls it
+# on the frames in hand (:func:`_format_rows`).
+# ---------------------------------------------------------------------------
+
+
+def _per_segment(flat: pd.DataFrame, metric: str, encode, schema: str) -> pd.DataFrame:
     """One format row per flat segment row: ``encode(x)`` maps the
     segment's vectors in navigation space (unit-normalized for cosine
-    indexes) to the format's own columns."""
-
-    def build(it):
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                cols = encode(_nav_vectors(x, metric))
-                yield pd.DataFrame(
-                    {"segment_id": [r.segment_id], "n_vecs": [r.n_vecs], "dim": [r.dim],
-                     **{c: [v] for c, v in cols.items()}}
-                )
-
-    return flat_df.mapInPandas(build, schema)
+    indexes) to the format's own columns. The kernels of the per-segment
+    formats (SQ, BQ, PQ) are this loop over their encoder."""
+    rows = []
+    for r in flat.itertuples(index=False):
+        x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
+        rows.append({"segment_id": r.segment_id, "n_vecs": r.n_vecs, "dim": r.dim,
+                     **encode(_nav_vectors(x, metric))})
+    return _rows(rows, schema)
 
 
-def _sq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
-    """Per-segment scalar-quantized codes (B10) from flat blobs."""
+def _sq_rows(flat: pd.DataFrame, cfg: IndexConfig, metric: str = "l2") -> pd.DataFrame:
+    """Per-segment scalar-quantized codes (B10) from flat rows."""
 
     def encode(x):
         q, mins, maxs = scalar_quantize(x)
         return {"mins": mins.astype(np.float32).tobytes(),
                 "maxs": maxs.astype(np.float32).tobytes(), "codes": q.tobytes()}
 
-    return _per_segment(flat_df, metric, encode, SQ_SCHEMA)
+    return _per_segment(flat, metric, encode, SQ_SCHEMA)
 
 
-def _bq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
+def _bq_rows(flat: pd.DataFrame, cfg: IndexConfig, metric: str = "l2") -> pd.DataFrame:
     """Per-segment binary-quantized codes (B9): mean-centroid sign bits
     packed 8/byte — the LuceneAcceleratedHNSWBinaryQuantized analogue.
     Quantizing in navigation space is the Lucene normalize-before-quantize
@@ -231,66 +295,43 @@ def _bq_rows(flat_df: DataFrame, metric: str = "l2") -> DataFrame:
         # float64 so query-side bits reproduce build-side bits
         return {"centroid": centroid.astype(np.float64).tobytes(), "codes": packed.tobytes()}
 
-    return _per_segment(flat_df, metric, encode, BQ_SCHEMA)
+    return _per_segment(flat, metric, encode, BQ_SCHEMA)
 
 
-def _ivf_rows(flat_df: DataFrame, ann: AnnParams, metric: str = "l2") -> DataFrame:
+def _ivf_rows(flat: pd.DataFrame, cfg: IndexConfig, metric: str = "l2") -> pd.DataFrame:
     """Per-segment IVF lists (deterministic k-means, O2 parameter
     heuristics); segments below min_ann_index_size emit nothing (B2).
     For cosine indexes, k-means and list ASSIGNMENT run in unit space
     (spherical k-means; centroids are probed against the normalized
     query), but the lists store the RAW vectors — cosine scoring is
     scale-invariant, so stored-copy scores stay bit-equal to flat."""
-    seed = ann.seed
-    kmeans_iters = ann.kmeans_iters
-    min_sz = ann.min_ann_index_size
-
-    def build_ivf(it):
-        for pdf in it:
-            for r in pdf.itertuples():
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                xn = _nav_vectors(x, metric)
-                ids = np.frombuffer(r.ext_ids, np.int64)
-                n = x.shape[0]
-                if n < min_sz:
-                    continue  # B2 fallback: brute force only for tiny segments
-                p = ivf_pq_params(n, x.shape[1])
-                n_lists = min(p["n_lists"], n)
-                cents = _kmeans(xn, n_lists, kmeans_iters, seed, p["kmeans_trainset_fraction"])
-                d = -2.0 * xn @ cents.T + (cents**2).sum(1)[None, :]
-                assign = d.argmin(1)
-                rows = []
-                for c in range(n_lists):
-                    m = np.flatnonzero(assign == c)
-                    if m.size == 0:
-                        continue
-                    rows.append(
-                        (
-                            r.segment_id, c, m.size,
-                            ids[m].tobytes(), x[m].tobytes(),
-                        )
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["segment_id", "list_id", "n", "ext_ids", "vectors"]
-                )
-                # centroid row: list_id = -1; ext_ids carries the segment's
-                # total vector count (int64) so the query-side probe can
-                # resolve n_probes without scanning the list rows
-                yield pd.DataFrame(
-                    {
-                        "segment_id": [r.segment_id],
-                        "list_id": [-1],
-                        "n": [n_lists],
-                        "ext_ids": [np.asarray([n], np.int64).tobytes()],
-                        "vectors": [cents.astype(np.float32).tobytes()],
-                    }
-                )
-
-    return flat_df.mapInPandas(build_ivf, IVF_SCHEMA)
+    ann = cfg.ann
+    rows = []
+    for r in flat.itertuples(index=False):
+        x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
+        n = x.shape[0]
+        if n < ann.min_ann_index_size:
+            continue  # B2 fallback: brute force only for tiny segments
+        xn = _nav_vectors(x, metric)
+        ids = np.frombuffer(r.ext_ids, np.int64)
+        p = ivf_pq_params(n, x.shape[1])
+        n_lists = min(p["n_lists"], n)
+        cents = _kmeans(xn, n_lists, ann.kmeans_iters, ann.seed, p["kmeans_trainset_fraction"])
+        assign = (-2.0 * xn @ cents.T + (cents**2).sum(1)[None, :]).argmin(1)
+        for c in range(n_lists):
+            m = np.flatnonzero(assign == c)
+            if m.size:
+                rows.append((r.segment_id, c, m.size, ids[m].tobytes(), x[m].tobytes()))
+        # centroid row: list_id = -1; ext_ids carries the segment's total
+        # vector count (int64) so the query-side probe can resolve
+        # n_probes without scanning the list rows
+        rows.append((r.segment_id, -1, n_lists, np.asarray([n], np.int64).tobytes(),
+                     cents.astype(np.float32).tobytes()))
+    return _rows(rows, IVF_SCHEMA)
 
 
-def _pq_rows(flat_df: DataFrame, cfg: IndexConfig, metric: str = "l2") -> DataFrame:
-    """Per-segment PQ codebooks + codes from flat blobs: ``pq_dim``
+def _pq_rows(flat: pd.DataFrame, cfg: IndexConfig, metric: str = "l2") -> pd.DataFrame:
+    """Per-segment PQ codebooks + codes from flat rows: ``pq_dim``
     contiguous subspaces, each with its own deterministic k-means codebook
     of 2^pq_bits centroids."""
     seed = cfg.ann.seed
@@ -317,63 +358,48 @@ def _pq_rows(flat_df: DataFrame, cfg: IndexConfig, metric: str = "l2") -> DataFr
         return {"pq_dim": np.int32(pq_dim), "pq_bits": np.int32(bits),
                 "codebook": books.tobytes(), "codes": codes.tobytes()}
 
-    return _per_segment(flat_df, metric, encode, PQ_SCHEMA)
+    return _per_segment(flat, metric, encode, PQ_SCHEMA)
 
 
-def _ivfpq_rows(ivf_df: DataFrame, pq_df: DataFrame, metric: str = "l2") -> DataFrame:
+def _ivfpq_rows(ivf: pd.DataFrame, pq: pd.DataFrame, cfg: IndexConfig,
+                metric: str = "l2") -> pd.DataFrame:
     """Per-list PQ codes — the combined IVF-PQ structure the reference's
     parameter factory derives as ONE unit (``CagraIndexParamsFactory.java:
     31-93`` sets nLists/nProbes AND pqDim/pqBits together; cuVS's IVF_PQ
     index stores pq-encoded residualless codes per inverted list). Each
-    segment's IVF lists are re-encoded against the segment's existing PQ
-    codebook (navigation space), so a probed list costs ``n·pq_dim`` bytes
-    instead of ``n·4·dim`` — the read-volume shape that works at 100 TB."""
-
-    def enc(key, lists: pd.DataFrame, pqp: pd.DataFrame) -> pd.DataFrame:
-        cols = ["segment_id", "list_id", "n", "ext_ids", "codes"]
-        empty = pd.DataFrame({c: [] for c in cols}).astype(
-            {"segment_id": "int64", "list_id": "int32", "n": "int32",
-             "ext_ids": "object", "codes": "object"}
-        )
-        if lists.empty or pqp.empty:
-            return empty
-        r = pqp.iloc[0]
-        pq_dim, bits = int(r["pq_dim"]), int(r["pq_bits"])
-        dim = int(r["dim"])
-        sub = dim // pq_dim
-        books = np.frombuffer(r["codebook"], np.float32).reshape(
-            pq_dim, 1 << bits, sub
-        )
-        out = []
-        for lr in lists.itertuples():
-            x = np.frombuffer(lr.vectors, np.float32).reshape(int(lr.n), dim)
-            xn = _nav_vectors(x, metric)
-            codes = np.empty((int(lr.n), pq_dim), np.uint8)
-            for s_ in range(pq_dim):
-                xs = xn[:, s_ * sub : (s_ + 1) * sub].astype(np.float64)
-                cb = books[s_].astype(np.float64)
-                d = -2.0 * xs @ cb.T + (cb**2).sum(1)[None, :]
-                codes[:, s_] = d.argmin(1).astype(np.uint8)
-            out.append(
-                (int(lr.segment_id), int(lr.list_id), int(lr.n),
-                 lr.ext_ids, codes.tobytes())
-            )
-        if not out:
-            return empty
-        return pd.DataFrame(out, columns=cols)
-
-    return (
-        ivf_df.filter(F.col("list_id") >= 0)
-        .groupby("segment_id")
-        .cogroup(pq_df.groupby("segment_id"))
-        .applyInPandas(enc, IVFPQ_SCHEMA)
-    )
+    segment's IVF lists (``ivf``'s rows with ``list_id >= 0``) are
+    re-encoded against the segment's PQ codebook (``pq``'s row; navigation
+    space), so a probed list costs ``n·pq_dim`` bytes instead of
+    ``n·4·dim`` — the read-volume shape that works at 100 TB. A segment
+    with lists but no codebook, or a codebook but no lists, emits
+    nothing."""
+    books = {}
+    for r in pq.itertuples(index=False):
+        pq_dim, bits, dim = int(r.pq_dim), int(r.pq_bits), int(r.dim)
+        books[int(r.segment_id)] = (dim, np.frombuffer(r.codebook, np.float32).reshape(
+            pq_dim, 1 << bits, dim // pq_dim))
+    out = []
+    for lr in ivf.itertuples(index=False):
+        if lr.list_id < 0 or int(lr.segment_id) not in books:
+            continue
+        dim, book = books[int(lr.segment_id)]
+        pq_dim, sub = book.shape[0], book.shape[2]
+        x = np.frombuffer(lr.vectors, np.float32).reshape(int(lr.n), dim)
+        xn = _nav_vectors(x, metric)
+        codes = np.empty((int(lr.n), pq_dim), np.uint8)
+        for s_ in range(pq_dim):
+            xs = xn[:, s_ * sub : (s_ + 1) * sub].astype(np.float64)
+            cb = book[s_].astype(np.float64)
+            d = -2.0 * xs @ cb.T + (cb**2).sum(1)[None, :]
+            codes[:, s_] = d.argmin(1).astype(np.uint8)
+        out.append((int(lr.segment_id), int(lr.list_id), int(lr.n), lr.ext_ids, codes.tobytes()))
+    return _rows(out, IVFPQ_SCHEMA)
 
 
 def build_flat_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """One (segment_id, ext_id, vector) group → one packed flat-storage row
     (the Utils.createFloatMatrix dense-matrix analogue) — shared by the
-    batch build and the group-wise ANN merge."""
+    batch build, the epochs (either tier) and the group-wise ANN merge."""
     pdf = pdf.sort_values("ext_id")
     x = np.stack(pdf["vector"].to_numpy()).astype(np.float32)
     return pd.DataFrame(
@@ -387,19 +413,61 @@ def build_flat_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def flush_flat(pdf: pd.DataFrame) -> tuple[pd.DataFrame, pa.Table, pa.Table]:
+    """The driver tier's flat flush: (segment_id, ext_id, vector) rows →
+    the flat rows (:func:`build_flat_pdf` per segment, as a frame and as
+    an Arrow table) and the ``ann_ids`` map."""
+    flat = _frame([build_flat_pdf(g) for _, g in pdf.groupby("segment_id", sort=True)],
+                  FLAT_SCHEMA)
+    return flat, _arrow(flat, FLAT_SCHEMA), _arrow(pdf[["segment_id", "ext_id"]], IDS_SCHEMA)
+
+
+def _check_vectors(maxd, mind, dups: int, ann: AnnParams) -> None:
+    """I1/I2 analogues over a frame's largest and smallest vector length
+    (None when empty) and its duplicate id count."""
+    if maxd is not None and maxd > ann.max_dims:
+        raise ValueError(f"vector dim {maxd} exceeds max {ann.max_dims}")
+    if maxd != mind:
+        raise ValueError("ragged vector dimensions")
+    if dups:
+        raise ValueError("multiple vectors per doc id (GPUFieldWriter.addValue guard)")
+
+
 def validate_vectors(df: DataFrame, vector_col: str, id_col: str, ann: AnnParams) -> None:
-    """I1/I2 analogues: reject >max_dims and duplicate vectors per doc."""
+    """I1/I2 analogues: reject >max_dims and duplicate vectors per doc (one
+    aggregate job; the driver tier checks its frame in numpy)."""
     row = df.select(
         F.max(F.size(vector_col)).alias("maxd"),
         F.min(F.size(vector_col)).alias("mind"),
         (F.count("*") - F.countDistinct(id_col)).alias("dups"),
     ).collect()[0]
-    if row["maxd"] is not None and row["maxd"] > ann.max_dims:
-        raise ValueError(f"vector dim {row['maxd']} exceeds max {ann.max_dims}")
-    if row["maxd"] != row["mind"]:
-        raise ValueError("ragged vector dimensions")
-    if row["dups"]:
-        raise ValueError("multiple vectors per doc id (GPUFieldWriter.addValue guard)")
+    _check_vectors(row["maxd"], row["mind"], row["dups"], ann)
+
+
+def small_vectors(df: DataFrame, id_col: str, vector_col: str,
+                  ann: AnnParams) -> pd.DataFrame | None:
+    """A caller's (id, vector) frame read into the driver when the driver
+    tier takes it (``frames.small_arrow``): at most
+    ``ANN_DRIVER_MAX_VALUES`` vector values in at most
+    ``segments.DRIVER_FLUSH_MAX_DOCS`` rows, integer ids, and no null id,
+    vector or element (the Spark path keeps its own handling of those).
+    Returns it as (ext_id int64, vector) after :func:`validate_vectors`'
+    checks in numpy, or None."""
+    at = small_arrow(df.select(id_col, vector_col), S.DRIVER_FLUSH_MAX_DOCS)
+    if at is None:
+        return None
+    ids, vecs = at.column(0), at.column(1)
+    if (not pa.types.is_integer(ids.type) or ids.null_count or vecs.null_count
+            or pc.list_flatten(vecs).null_count):
+        return None
+    dims = pc.list_value_length(vecs).to_numpy()
+    if dims.sum() > ANN_DRIVER_MAX_VALUES:
+        return None
+    ext = ids.to_numpy().astype(np.int64)
+    _check_vectors(int(dims.max()) if dims.size else None,
+                   int(dims.min()) if dims.size else None,
+                   ext.size - np.unique(ext).size, ann)
+    return pd.DataFrame({"ext_id": ext, "vector": vecs.to_pandas()})
 
 
 # ---------------------------------------------------------------------------
@@ -454,56 +522,55 @@ def _bq_coarse(r, ctx: "_Query") -> np.ndarray:
 
 
 class AnnFormat(NamedTuple):
-    """One derived vector format. ``rows(src, cfg, metric)`` builds the
-    rows for the segments ``src`` serves (``src(table)`` reads one of
-    ``inputs`` restricted to those segments); ``default`` formats are
-    written by every build, epoch and merge, the others are maintained
-    once built. ``keys`` order a full write (list-keyed tables prune the
-    probe's ``list_id IN`` scan by row-group statistics)."""
+    """One derived vector format. ``kernel(*inputs, cfg=, metric=)`` maps
+    the rows of its ``inputs`` tables (pandas frames) to its own rows: one
+    kernel per format, run on either transport by :func:`_format_rows` — a
+    Spark ``mapInPandas`` (a cogroup by segment for two inputs) or a direct
+    call in the driver. ``default`` formats are written by every build,
+    epoch and merge, the others are maintained once built. ``keys`` order
+    a full write (list-keyed tables prune the probe's ``list_id IN`` scan
+    by row-group statistics)."""
 
     table: str
     schema: str
-    rows: Callable[[Callable[[str], DataFrame], IndexConfig, str], DataFrame]
+    kernel: Callable[..., pd.DataFrame]
     coarse: Callable | None = None
     default: bool = False
     inputs: tuple[str, ...] = ("ann_flat",)
     keys: tuple[str, ...] = ()
 
 
-def _graph_format_rows(src, cfg: IndexConfig, metric: str) -> DataFrame:
+def _graph_kernel(flat: pd.DataFrame, cfg: IndexConfig, metric: str, **kw) -> pd.DataFrame:
     from cuvs_lucene_spark.operators.ann_graph import _graph_rows  # imports this module
 
-    return _graph_rows(src("ann_flat"), cfg, metric=metric)
+    return _graph_rows(flat, cfg, metric, **kw)
 
 
 FORMATS: dict[str, AnnFormat] = {
-    "sq": AnnFormat(
-        "ann_sq", SQ_SCHEMA,
-        lambda src, cfg, metric: _sq_rows(src("ann_flat"), metric),
-        _sq_coarse, default=True,
-    ),
-    "bq": AnnFormat(
-        "ann_bq", BQ_SCHEMA,
-        lambda src, cfg, metric: _bq_rows(src("ann_flat"), metric),
-        _bq_coarse, default=True,
-    ),
-    "ivf": AnnFormat(
-        "ann_ivf", IVF_SCHEMA,
-        lambda src, cfg, metric: _ivf_rows(src("ann_flat"), cfg.ann, metric),
-        default=True, keys=("segment_id", "list_id"),
-    ),
-    "graph": AnnFormat("ann_graph", GRAPH_SCHEMA, _graph_format_rows),
-    "pq": AnnFormat(
-        "ann_pq", PQ_SCHEMA,
-        lambda src, cfg, metric: _pq_rows(src("ann_flat"), cfg, metric),
-        _adc_coarse,
-    ),
-    "ivfpq": AnnFormat(
-        "ann_ivfpq", IVFPQ_SCHEMA,
-        lambda src, cfg, metric: _ivfpq_rows(src("ann_ivf"), src("ann_pq"), metric),
-        _adc_coarse, inputs=("ann_ivf", "ann_pq"), keys=("segment_id", "list_id"),
-    ),
+    "sq": AnnFormat("ann_sq", SQ_SCHEMA, _sq_rows, _sq_coarse, default=True),
+    "bq": AnnFormat("ann_bq", BQ_SCHEMA, _bq_rows, _bq_coarse, default=True),
+    "ivf": AnnFormat("ann_ivf", IVF_SCHEMA, _ivf_rows, default=True,
+                     keys=("segment_id", "list_id")),
+    "graph": AnnFormat("ann_graph", GRAPH_SCHEMA, _graph_kernel),
+    "pq": AnnFormat("ann_pq", PQ_SCHEMA, _pq_rows, _adc_coarse),
+    "ivfpq": AnnFormat("ann_ivfpq", IVFPQ_SCHEMA, _ivfpq_rows, _adc_coarse,
+                       inputs=("ann_ivf", "ann_pq"), keys=("segment_id", "list_id")),
 }
+
+
+def _format_rows(fmt: AnnFormat, src, cfg: IndexConfig, metric: str, **kw):
+    """``fmt``'s rows for the segments ``src(table)`` serves, by its kernel
+    on the transport its inputs come on: pandas frames (the driver tier)
+    give an Arrow table; Spark DataFrames give a ``mapInPandas`` over the
+    flat rows, or a cogroup by segment for a two-input format (IVF-PQ)."""
+    kernel = functools.partial(fmt.kernel, cfg=cfg, metric=metric, **kw)
+    ins = [src(t) for t in fmt.inputs]
+    if isinstance(ins[0], pd.DataFrame):
+        return _arrow(kernel(*ins), fmt.schema)
+    if len(ins) == 1:
+        return ins[0].mapInPandas(lambda it: map(kernel, it), fmt.schema)
+    first, second = (d.groupby("segment_id") for d in ins)
+    return first.cogroup(second).applyInPandas(lambda _, a, b: kernel(a, b), fmt.schema)
 
 
 def _index_metric(cat: IndexCatalog) -> str:
@@ -520,34 +587,45 @@ def _concurrently(*writes: Callable[[], object]) -> None:
             fut.result()
 
 
+def _flat_fits(cat: IndexCatalog) -> bool:
+    """Whether ``ann_flat`` holds at most ``ANN_DRIVER_MAX_VALUES`` vector
+    values (its ``n_vecs`` · ``dim`` pairs, read by pyarrow: no job)."""
+    t = cat.read_arrow("ann_flat", ["n_vecs", "dim"])
+    n = pc.multiply(pc.cast(t["n_vecs"], pa.int64()), pc.cast(t["dim"], pa.int64()))
+    return (pc.sum(n).as_py() or 0) <= ANN_DRIVER_MAX_VALUES
+
+
 def _write_format(spark: SparkSession, cat: IndexCatalog, fmt: AnnFormat,
-                  cfg: IndexConfig, src=None) -> None:
-    """Full (re)build of one format from the tables it derives from
-    (``src(table)``, default a fresh read), and its stage, in one
-    transaction (the caller's, if any)."""
+                  cfg: IndexConfig, src=None, **kw) -> None:
+    """Full (re)build of one format from the tables it derives from, and
+    its stage, in one transaction (the caller's, if any). ``src(table)``
+    defaults to a read of the committed table: by pyarrow into the driver
+    while ``ann_flat`` fits the driver tier (:func:`_flat_fits`), by Spark
+    otherwise. ``kw`` reaches the kernel."""
     with cat.transaction() as tx:
-        tx.write(
-            fmt.rows(src or (lambda t: tx.read(spark, t)), cfg, _index_metric(tx)),
-            fmt.table,
-            sort_within_partitions=list(fmt.keys) or None,
-        )
+        if src is None:
+            src = ((lambda t: tx.read_arrow(t).to_pandas()) if _flat_fits(tx)
+                   else (lambda t: tx.read(spark, t)))
+        tx.write(_format_rows(fmt, src, cfg, _index_metric(tx), **kw), fmt.table,
+                 sort_within_partitions=list(fmt.keys) or None)
         tx.mark_stage(fmt.table)
 
 
 def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
                     tag: str, extra_entry=lambda table: None) -> None:
     """Append every maintained format's rows for the new segments ``src``
-    serves, under one shared tag (a streaming epoch or a merge
-    generation), inside the caller's transaction. Formats built from flat
-    are mutually independent (:func:`_concurrently`); formats built from
-    other derived tables (IVF-PQ) follow once those are staged."""
+    serves (Spark DataFrames, or pandas frames on the driver tier), under
+    one shared tag (a streaming epoch or a merge generation), inside the
+    caller's transaction. Formats built from flat are mutually independent
+    (:func:`_concurrently`); formats built from other derived tables
+    (IVF-PQ) follow once those are staged."""
     fmts = [
         f for f in FORMATS.values()
         if f.default or all(cat.exists(t) for t in (f.table, *f.inputs))
     ]
 
     def one(f: AnnFormat, src) -> None:
-        cat.append(f.rows(src, cfg, metric), f.table, tag=tag,
+        cat.append(_format_rows(f, src, cfg, metric), f.table, tag=tag,
                    extra_entry=extra_entry(f.table))
 
     first = [f for f in fmts if f.inputs == ("ann_flat",)]
@@ -558,18 +636,17 @@ def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
             one(f, src)
 
 
-def _mark_bf_fallback(spark: SparkSession, cat: IndexCatalog) -> None:
+def _mark_bf_fallback(cat: IndexCatalog) -> None:
     """B2 bookkeeping on the ``ann_ivf`` stage, recomputed after every
     build, epoch and merge: the segments with no IVF index (brute-forced
     by every IVF search without re-deriving the set per query) and the
     indexed-segment count (``probe_mode='auto'``'s driver→distributed
-    switch). Both collects are segment-count-sized manifest upkeep.
+    switch). Both are segment-count-sized reads of the segment ids by
+    pyarrow (inside a transaction, of its staged directories): no job.
     ``mark_stage`` replaces the stage dict, so other entries carry over."""
-    flat = {int(r[0]) for r in cat.read(spark, "ann_flat").select("segment_id").collect()}
-    ivf = {
-        int(r[0]) for r in cat.read(spark, "ann_ivf")
-        .filter(F.col("list_id") == -1).select("segment_id").collect()
-    }
+    flat = set(cat.read_arrow("ann_flat", ["segment_id"]).column(0).to_pylist())
+    ivf = set(cat.read_arrow("ann_ivf", ["segment_id"],
+                             where=pc.field("list_id") == -1).column(0).to_pylist())
     stage = {
         k: v for k, v in cat.read_manifest()["stages"].get("ann_ivf", {}).items()
         if k not in ("status", "at")
@@ -599,17 +676,33 @@ def build_ann(
     rows_per_segment: int | None = None,
 ) -> IndexCatalog:
     """Build the ANN sidecar tables (flat, ids and the default formats)
-    from (id, array<float>) rows, committed in one transaction."""
+    from (id, array<float>) rows, committed in one transaction.
+
+    Two tiers write the same rows with the same kernels. When
+    :func:`small_vectors` reads the caller's frame into the driver (at most
+    ``ANN_DRIVER_MAX_VALUES`` vector values), the driver tier flushes flat
+    and ids (:func:`flush_flat`), calls each default format's kernel on
+    the flat rows in hand and writes every table by pyarrow: no Spark job
+    beyond that read (none for a ``LocalRelation``). Otherwise the Spark
+    tier shuffles by segment into ``build_flat_pdf``, and ships the
+    kernels through ``mapInPandas`` over the staged flat rows."""
     cfg = cfg or IndexConfig()
     ann = cfg.ann
     _check_index_metric(ann.metric)
     cat = IndexCatalog(index_root)
-    validate_vectors(vectors, vector_col, id_col, ann)
     rps = rows_per_segment or cfg.rows_per_segment
-    base = vectors.select(
-        F.col(id_col).cast("long").alias("ext_id"),
-        F.col(vector_col).alias("vector"),
-    ).withColumn("segment_id", (F.col("ext_id") / F.lit(rps)).cast("long"))
+    small = small_vectors(vectors, id_col, vector_col, ann)
+    if small is None:
+        validate_vectors(vectors, vector_col, id_col, ann)
+        base = vectors.select(
+            F.col(id_col).cast("long").alias("ext_id"),
+            F.col(vector_col).alias("vector"),
+        ).withColumn("segment_id", (F.col("ext_id") / F.lit(rps)).cast("long"))
+        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
+        ids = base.select("segment_id", "ext_id")
+    else:
+        flat_pdf, flat, ids = flush_flat(
+            small.assign(segment_id=S.range_segments(small["ext_id"].to_numpy(), rps)))
     with cat.transaction() as tx:
         tx.set_config(
             {
@@ -622,30 +715,25 @@ def build_ann(
                 "delete_merge_max_count": ann.delete_merge_max_count,
             }
         )
-        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
         tx.write(flat, "ann_flat")
         tx.mark_stage("ann_flat")
 
         def _w_ids():
             # thin row-level (segment_id, ext_id) map — the DataFrame-filter
             # tier's join target (and the merge policy's id→segment resolver)
-            tx.write(
-                base.select("segment_id", "ext_id"),
-                "ann_ids",
-                sort_within_partitions=["segment_id", "ext_id"],
-            )
+            tx.write(ids, "ann_ids", sort_within_partitions=["segment_id", "ext_id"])
             tx.mark_stage("ann_ids")
 
         # the remaining tables are mutually independent (ids derives from
         # the input, the default formats from the staged flat — merge reads
         # flat only, M4); one flat read is shared by the pool (concurrent
         # first reads would each infer the parquet schema)
-        flat_df = tx.read(spark, "ann_flat")
+        flat_src = tx.read(spark, "ann_flat") if small is None else flat_pdf
         _concurrently(_w_ids, *(
-            (lambda f=f: _write_format(spark, tx, f, cfg, lambda t: flat_df))
+            (lambda f=f: _write_format(spark, tx, f, cfg, lambda t: flat_src))
             for f in FORMATS.values() if f.default
         ))
-        _mark_bf_fallback(spark, tx)
+        _mark_bf_fallback(tx)
         tx.mark_stage("ann_build")
     return cat
 
@@ -1337,14 +1425,6 @@ class _SparkTier(Exception):
     """Raised by :class:`_Resident` when the query must take the Spark tier."""
 
 
-def _frame(parts, schema: str) -> pd.DataFrame:
-    """Concatenate a kernel's output frames (typed and empty when none)."""
-    parts = list(parts)
-    if parts:
-        return pd.concat(parts, ignore_index=True)
-    return pd.DataFrame({n: np.empty(0, _TYPES[t][1]) for n, t in _fields(schema)})
-
-
 class _Resident(_Plan):
     """The resident tier: the plan pieces over the pack's pandas frames,
     run in the driver through the same kernel bodies the Spark tier ships
@@ -1883,8 +1963,10 @@ def build_ann_pq(
     Per segment (from the committed flat storage, M4): the vector space is
     split into ``pq_dim`` contiguous subspaces; each subspace gets its own
     deterministic k-means codebook of 2^pq_bits centroids; every vector is
-    stored as pq_dim uint8 centroid ids. Search (:func:`ann_topk_pq`) is
-    the classic ADC scan."""
+    stored as pq_dim uint8 centroid ids (:func:`_pq_rows`; in the driver
+    while ``ann_flat`` fits ``ANN_DRIVER_MAX_VALUES``, see
+    :func:`_write_format`). Search (:func:`ann_topk_pq`) is the classic
+    ADC scan."""
     _write_format(spark, cat, FORMATS["pq"], cfg or IndexConfig())
 
 
@@ -2174,7 +2256,7 @@ def merge_ann(
         cat, cfg, metric, lambda t: cat.read(spark, t).filter(in_gen), tag,
         extra_entry=lambda t: {"dropped_segments": _dropped_for(t)},
     )
-    _mark_bf_fallback(spark, cat)
+    _mark_bf_fallback(cat)
 
     # tombstones whose rows were physically dropped here clear out; those
     # referencing untouched segments stay live (per-segment liveDocs)

@@ -39,18 +39,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, choose_build_algo
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.ann import (
+    FORMATS,
     GRAPH_SCHEMA,
-    _index_metric,
     _nav_vectors,
     _Query,
+    _rows,
     _scores,
     _search,
     _topk_frame,
+    _write_format,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
@@ -262,10 +263,11 @@ def _knn_graph(
     return _nn_descent_graph(x, degree, iters, seed)
 
 
-def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
-                metric: str = "l2", exact_knn_max: int | None = None):
-    """Per-segment graph rows from flat blobs (shared by the batch build
-    and the streaming epoch append). One row per (segment, layer): layer 0
+def _graph_rows(flat: pd.DataFrame, cfg: IndexConfig, metric: str = "l2",
+                degree: int | None = None, exact_knn_max: int | None = None) -> pd.DataFrame:
+    """The graph format's kernel (``ann.FORMATS["graph"]``): per-segment
+    graph rows from flat rows, shared by the format build, the epochs and
+    the merges on either transport. One row per (segment, layer): layer 0
     is the full kNN graph; layers ≥ 1 are deterministic 1/M stride samples
     with their own kNN sub-graphs (the multi-layer HNSW entry structure,
     ``createMultiLayerHnswGraph:101-117,176-229`` — built only for
@@ -278,7 +280,7 @@ def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
     nnd_iters = cfg.ann.nn_descent_iters
     seed = cfg.ann.seed
 
-    def layer_row(seg, level: int, stride: int, sub: np.ndarray) -> pd.DataFrame:
+    def layer_row(seg, level: int, stride: int, sub: np.ndarray) -> tuple:
         """One (segment, layer) row: the kNN adjacency over ``sub``'s nodes
         (a single node has none — the B13 single-vector fallback)."""
         m = sub.shape[0]
@@ -288,37 +290,31 @@ def _graph_rows(flat_df, cfg: IndexConfig, degree: int | None = None,
             offs, blob = _encode_adjacency(
                 _knn_graph(sub, g, nnd_iters, seed, exact_knn_max)
             )
-        return pd.DataFrame(
-            {"segment_id": [seg], "layer": [np.int32(level)],
-             "stride": [np.int32(stride)], "n_nodes": [np.int32(m)],
-             "degree": [np.int32(g)], "offsets": [offs], "graph": [blob]}
-        )
+        return (seg, level, stride, m, g, offs, blob)
 
-    def build(it):
-        for pdf in it:
-            for r in pdf.itertuples(index=False):
-                x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
-                x = _nav_vectors(x, metric)
-                n = x.shape[0]
-                # O1 size-based algorithm switch (CagraIndexParamsFactory
-                # heuristic): below the threshold the dense exact kNN graph
-                # is the NN_DESCENT stand-in; at/above it the reference
-                # routes the build through IVF_PQ — served here by the
-                # ann_ivf/ann_pq sidecars, so oversized segments simply
-                # skip the graph (search falls back per-leaf)
-                if choose_build_algo(n) != "NN_DESCENT":
-                    continue
-                yield layer_row(r.segment_id, 0, 1, x)
-                if n < lmin:
-                    continue
-                for level in range(1, 5):
-                    s = lstride**level
-                    sample = np.arange(0, n, s, dtype=np.int64)
-                    if sample.size < max(8, lstride):
-                        break
-                    yield layer_row(r.segment_id, level, s, x[sample])
-
-    return flat_df.mapInPandas(build, GRAPH_SCHEMA)
+    rows = []
+    for r in flat.itertuples(index=False):
+        x = np.frombuffer(r.vectors, np.float32).reshape(r.n_vecs, r.dim)
+        x = _nav_vectors(x, metric)
+        n = x.shape[0]
+        # O1 size-based algorithm switch (CagraIndexParamsFactory
+        # heuristic): below the threshold the dense exact kNN graph
+        # is the NN_DESCENT stand-in; at/above it the reference
+        # routes the build through IVF_PQ — served here by the
+        # ann_ivf/ann_pq sidecars, so oversized segments simply
+        # skip the graph (search falls back per-leaf)
+        if choose_build_algo(n) != "NN_DESCENT":
+            continue
+        rows.append(layer_row(r.segment_id, 0, 1, x))
+        if n < lmin:
+            continue
+        for level in range(1, 5):
+            s = lstride**level
+            sample = np.arange(0, n, s, dtype=np.int64)
+            if sample.size < max(8, lstride):
+                break
+            rows.append(layer_row(r.segment_id, level, s, x[sample]))
+    return _rows(rows, GRAPH_SCHEMA)
 
 
 @transactional
@@ -329,21 +325,17 @@ def build_ann_graph(
     degree: int | None = None,
     exact_knn_max: int | None = None,
 ) -> None:
-    """Build the per-segment graph sidecar from ``ann_flat``.
+    """Build the per-segment graph sidecar from ``ann_flat`` with
+    :func:`_graph_rows` (``ann._write_format``: in the driver while the
+    flat rows fit ``ann.ANN_DRIVER_MAX_VALUES``, else on Spark).
 
     Blob layout per segment: ``offsets`` = little-endian uint64 cumulative
     byte offsets (n_nodes + 1 entries — the monotonic offset directory),
     ``graph`` = concatenated per-node varint blocks, each node's sorted
     neighbor ids delta-encoded (first value absolute). The table and its
     stage commit in one transaction."""
-    cfg = cfg or IndexConfig()
-    cat.write(
-        _graph_rows(
-            cat.read(spark, "ann_flat"), cfg, degree, _index_metric(cat), exact_knn_max
-        ),
-        "ann_graph",
-    )
-    cat.mark_stage("ann_graph")
+    _write_format(spark, cat, FORMATS["graph"], cfg or IndexConfig(),
+                  degree=degree, exact_knn_max=exact_knn_max)
 
 
 def _beam_search(

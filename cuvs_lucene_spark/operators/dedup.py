@@ -39,9 +39,10 @@ from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.functions.tokenize import tokenize_expr
 
-# row cap on the spanning forest duplicate_components collects to the
-# driver for its in-memory union-find: 2M (root, node) rows ≈ 32 MB of
-# int64 arrays; a longer forest takes the shuffle tier (Spark rounds)
+# row cap on the edge list, or else the spanning forest,
+# duplicate_components collects to the driver for its in-memory
+# union-find: 2M (a, b) rows ≈ 32 MB of int64 arrays; a longer forest
+# takes the shuffle tier (Spark rounds)
 COMPONENTS_BCAST_MAX_NODES = 2_000_000
 
 
@@ -776,27 +777,32 @@ def duplicate_components(
     under-delete: A~B and B~C must collapse to ONE survivor even when A~C
     was never emitted as a candidate).
 
-    Algorithm: spanning forests, then one union-find.
+    Algorithm: one union-find in the driver, over the edges or their
+    spanning forests.
 
-    1. **On the executors**: one ``mapInPandas`` pass over the canonical
-       (min, max) pair list runs the numpy min-label union-find
-       (:func:`_min_label`) inside each partition — no shuffle — and
-       emits the partition's spanning forest as (root, node) rows. The
-       forest has at most one row per node per partition, however dense
-       the duplicate clusters (|E| grows quadratically in cluster size,
-       the forest linearly).
-    2. **On the driver**: the forest is collected, capped at
-       ``COMPONENTS_BCAST_MAX_NODES`` rows, and the same kernel unions
-       the partition forests into global components, which become the
-       ``(id, component)`` frame through one ``createDataFrame``. Merging
-       forests preserves connectivity, so the result is the component
-       minimum, exactly.
+    1. The canonical (min, max) pair list is cached and read into the
+       driver, capped at ``COMPONENTS_BCAST_MAX_NODES`` rows. Within the
+       cap, the numpy min-label union-find (:func:`_min_label`) unions it
+       there: no Python worker runs (a small job's first pandas UDF pays
+       their start-up).
+    2. **On the executors**, for a longer list: one ``mapInPandas`` pass
+       over the cached pairs runs the same kernel inside each partition
+       — no shuffle — and emits the partition's spanning forest as
+       (root, node) rows. The forest has at most one row per node per
+       partition, however dense the duplicate clusters (|E| grows
+       quadratically in cluster size, the forest linearly). It is
+       collected under the same cap and the kernel unions the partition
+       forests into global components. Merging forests preserves
+       connectivity, so the result is the component minimum, exactly.
+
+    Either way the components become the ``(id, component)`` frame
+    through one ``createDataFrame``, and the cache is released.
 
     A forest longer than the cap takes the shuffle tier instead
     (:func:`_components_rounds`): Spark rounds of min-label propagation
     over the forest edges, which are never more than the raw pairs.
     ``max_iterations`` is that tier's convergence backstop. The in-memory
-    tier runs a handful of Spark jobs and persists nothing.
+    tier runs a handful of Spark jobs and leaves nothing persisted.
     Deterministic: min is order-independent. Pairs with both ids null
     are ignored; a pair with one null id keeps the other as a node.
 
@@ -810,19 +816,25 @@ def duplicate_components(
     edges = pairs.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b")).filter(
         F.col("a").isNotNull()
     )
-    forest = edges.mapInPandas(_spanning_forest, "root long, node long")
     cap = COMPONENTS_BCAST_MAX_NODES
-    rows = forest.limit(cap + 1).toArrow()
-    if rows.num_rows <= cap:
-        nodes, labels = _min_label(
-            rows.column("root").to_numpy(), rows.column("node").to_numpy()
-        )
-        comp = spark.createDataFrame(pa.table({"id": nodes, "component": labels}))
-    else:
-        comp = _components_rounds(
-            forest.select(F.col("root").alias("a"), F.col("node").alias("b")),
-            max_iterations,
-        )
+    # cached: a list over the cap feeds the forest pass without running
+    # the pairs' plan again
+    edges = edges.cache()
+    try:
+        rows = edges.limit(cap + 1).toArrow()
+        if rows.num_rows > cap:
+            forest = edges.mapInPandas(_spanning_forest, "root long, node long")
+            rows = forest.limit(cap + 1).toArrow()
+        if rows.num_rows <= cap:
+            nodes, labels = _min_label(rows.column(0).to_numpy(), rows.column(1).to_numpy())
+            comp = spark.createDataFrame(pa.table({"id": nodes, "component": labels}))
+        else:
+            comp = _components_rounds(
+                forest.select(F.col("root").alias("a"), F.col("node").alias("b")),
+                max_iterations,
+            )
+    finally:
+        edges.unpersist()
     if all_ids is not None:
         comp = (
             all_ids.select(F.col(all_ids.columns[0]).cast("long").alias("id"))

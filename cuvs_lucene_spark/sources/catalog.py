@@ -221,7 +221,11 @@ class IndexCatalog:
         lineage: dict[str, Any] | None = None,
         extra_entry: dict | None = None,
     ) -> str:
-        """Write ``df`` as a NEW snapshot of ``table`` and commit atomically."""
+        """Write ``df`` as a NEW snapshot of ``table`` and commit atomically.
+        An Arrow table goes to :meth:`write_arrow` (one file, sorted by
+        ``sort_within_partitions``)."""
+        if isinstance(df, pa.Table):
+            return self.write_arrow(df, table, sort_within_partitions, lineage, extra_entry)
 
         def put(out: str) -> None:
             w = df
@@ -341,7 +345,10 @@ class IndexCatalog:
         (a replayed streaming epoch — foreachBatch is at-least-once)
         REPLACES the previous increment instead of duplicating it. The new
         increment is written and committed BEFORE the old directory is
-        removed, so a crash at any point leaves a readable snapshot."""
+        removed, so a crash at any point leaves a readable snapshot. An
+        Arrow table goes to :meth:`append_arrow`."""
+        if isinstance(df, pa.Table):
+            return self.append_arrow(df, table, tag=tag, extra_entry=extra_entry)
 
         def put(out: str) -> None:
             df.write.mode("overwrite").option(

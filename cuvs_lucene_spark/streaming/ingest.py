@@ -36,7 +36,11 @@ pyarrow through ``IndexCatalog.append_arrow`` — no other Spark job), else
 as Spark ``applyInPandas`` jobs. The driver epoch reads nothing of the
 index, so its work does not grow with it and, unlike a delete or a
 positions refresh, it is not gated by
-``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. Vector epochs run on Spark.
+``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. A vector epoch takes the ANN
+build's two tiers: in the driver when ``ann.small_vectors`` reads its
+frame (at most ``ann.ANN_DRIVER_MAX_VALUES`` vector values), its flat and
+id rows flushed by ``ann.flush_flat`` and every maintained format's kernel
+called on its staged rows (read back by pyarrow), else on Spark.
 """
 
 from __future__ import annotations
@@ -44,7 +48,7 @@ from __future__ import annotations
 import dataclasses
 
 import numpy as np
-
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -185,7 +189,9 @@ def incremental_add_vectors(
     independent, so appended segments need no rebuild of earlier ones;
     ``merge_ann`` later compacts, exactly like text segments. One
     transaction: flat, ids, every format, the B2 bookkeeping and the
-    epoch's stage commit together."""
+    epoch's stage commit together. A small epoch runs in the driver (see
+    the module docstring), with no Spark job beyond the read of
+    ``vectors``."""
     from cuvs_lucene_spark.operators.ann import (
         ANN_FORMAT_VERSION,
         FLAT_SCHEMA,
@@ -197,12 +203,16 @@ def incremental_add_vectors(
         _index_metric,
         _mark_bf_fallback,
         build_flat_pdf,
+        flush_flat,
+        small_vectors,
         validate_vectors,
     )
 
     if cat.stage_done(f"ann_epoch_{epoch}"):
         return
-    validate_vectors(vectors, vector_col, id_col, cfg.ann)
+    small = small_vectors(vectors, id_col, vector_col, cfg.ann)
+    if small is None:
+        validate_vectors(vectors, vector_col, id_col, cfg.ann)
     m = cat.read_manifest()
     if "ann_metric" not in m.get("config", {}):
         _check_index_metric(cfg.ann.metric)  # same guard as build_ann
@@ -214,14 +224,6 @@ def incremental_add_vectors(
                 "rows_per_segment": cfg.rows_per_segment,
             }
         )
-    base = _with_epoch_segment(
-        vectors.select(
-            F.col(id_col).cast("long").alias("ext_id"),
-            F.col(vector_col).alias("vector"),
-        ),
-        epoch, cfg.rows_per_segment,
-    )
-
     if cat.exists("ann_flat") and not cat.exists("ann_ids"):
         # pre-v3 catalog: materialize the FULL map from the existing flat
         # blobs before this epoch appends — seeding an empty table here
@@ -235,28 +237,42 @@ def incremental_add_vectors(
         if not cat.exists(table):
             cat.write_arrow(arrow_schema(schema).empty_table(), table)
     tag = f"ann_epoch_{epoch}"
-    cat.append(
-        base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA),
-        "ann_flat", tag=tag,
-    )
+    seg_base = _epoch_base(epoch)
+    if small is None:
+        base = _with_epoch_segment(
+            vectors.select(
+                F.col(id_col).cast("long").alias("ext_id"),
+                F.col(vector_col).alias("vector"),
+            ),
+            epoch, cfg.rows_per_segment,
+        )
+        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
+        ids = base.select("segment_id", "ext_id")
+        in_epoch = (F.col("segment_id") >= seg_base) & (
+            F.col("segment_id") < seg_base + EPOCH_STRIDE
+        )
+        src = lambda t: cat.read(spark, t).filter(in_epoch)
+    else:
+        small["segment_id"] = seg_base + np.mod(
+            range_segments(small["ext_id"].to_numpy(), cfg.rows_per_segment), EPOCH_STRIDE
+        )
+        _, flat, ids = flush_flat(small)
+        in_epoch = (pc.field("segment_id") >= seg_base) & (
+            pc.field("segment_id") < seg_base + EPOCH_STRIDE
+        )
+        src = lambda t: cat.read_arrow(t, where=in_epoch).to_pandas()
+    cat.append(flat, "ann_flat", tag=tag)
     # the DataFrame-filter tier's row-level map follows every flat append
     # (its blob join is an inner join)
-    cat.append(base.select("segment_id", "ext_id"), "ann_ids", tag=tag)
+    cat.append(ids, "ann_ids", tag=tag)
     # every maintained format gets this epoch's segments, built from the
     # JUST-STAGED rows of the epoch's range (per-segment independence:
     # earlier segments are never rebuilt, and IVF-PQ re-encodes the
     # committed IVF lists instead of re-running their k-means). Formats
     # follow the CATALOG's metric (set at first epoch / batch build), never
     # the per-call cfg — similarity is index state
-    seg_base = _epoch_base(epoch)
-    in_epoch = (F.col("segment_id") >= seg_base) & (
-        F.col("segment_id") < seg_base + EPOCH_STRIDE
-    )
-    _append_formats(
-        cat, cfg, _index_metric(cat),
-        lambda t: cat.read(spark, t).filter(in_epoch), tag,
-    )
-    _mark_bf_fallback(spark, cat)
+    _append_formats(cat, cfg, _index_metric(cat), src, tag)
+    _mark_bf_fallback(cat)
     cat.mark_stage(f"ann_epoch_{epoch}", n_epoch=epoch)
 
 

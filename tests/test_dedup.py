@@ -175,6 +175,31 @@ def test_duplicate_components_random_vs_union_find(spark):
         assert got == exp_comp, f"seed {seed} mismatch"
 
 
+def test_duplicate_components_tiers(spark, monkeypatch):
+    """An edge list within ``COMPONENTS_BCAST_MAX_NODES`` is unioned in
+    the driver with no pandas UDF planned; a longer one is first cut to
+    spanning forests on the executors (unioned in the driver, or by the
+    shuffle tier when the forest is over the cap too): same components."""
+    import cuvs_lucene_spark.operators.dedup as dd
+
+    edges = [(a, b) for a in range(10) for b in range(a + 1, 10)]  # a 10-clique
+    edges += [(20, 21), (21, 22), (30, 30)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long").coalesce(1)
+    want = {**{i: 0 for i in range(10)}, 20: 20, 21: 20, 22: 20, 30: 30}
+
+    def components():
+        return {r["id"]: r["component"] for r in dd.duplicate_components(pairs).collect()}
+
+    with monkeypatch.context() as m:
+        m.setattr(type(pairs), "mapInPandas",
+                  lambda *a, **k: pytest.fail("planned a pandas UDF"))
+        assert components() == want
+    # the forest (12 rows) fits a cap under the 48 edges; then neither fits
+    for cap in (len(edges) - 1, 0):
+        monkeypatch.setattr(dd, "COMPONENTS_BCAST_MAX_NODES", cap)
+        assert components() == want
+
+
 def test_simhash_rejects_unfillable_widths(spark):
     """The fingerprint folds a 32-bit md5 prefix, so wider fingerprints
     would carry always-zero high bits: widths outside 1..32 are rejected

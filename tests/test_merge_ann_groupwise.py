@@ -160,7 +160,7 @@ def test_full_merge_compacts_and_matches_rebuild(spark, cat, xdata):
     assert flt == [i for i in _exact_ids(xdata, q, N, dead=dead) if i % 2 == 0][:5]
 
 
-MERGE_ANN_JOBS = 16  # Spark jobs of a warm group-wise merge_ann
+MERGE_ANN_JOBS = 13  # Spark jobs of a warm group-wise merge_ann
 
 
 def test_warm_merge_ann_job_count(spark, cat):

@@ -542,6 +542,60 @@ def test_ann_resident_query_job_counts(spark, ann_cat):
     assert counts == want
 
 
+def test_ann_driver_writes_job_counts(spark, tmp_path):
+    """Below ``ann.ANN_DRIVER_MAX_VALUES`` the ANN writes run in the
+    driver: a build over a LocalRelation runs no Spark job, over a cached
+    frame one (the head read of its rows); the PQ, IVF-PQ and graph builds
+    and an epoch over a LocalRelation run none."""
+    import numpy as np
+    import pandas as pd
+
+    from cuvs_lucene_spark.operators.ann import build_ann, build_ann_ivfpq, build_ann_pq
+    from cuvs_lucene_spark.operators.ann_graph import build_ann_graph
+    from cuvs_lucene_spark.streaming.ingest import incremental_add_vectors
+
+    def frame(ids):
+        pdf = pd.DataFrame({"vec_id": np.asarray(ids, np.int64), "embedding": [
+            [float(i % 13), float(i % 7), float(i % 5), 1.0] * 2 for i in ids]})
+        return spark.createDataFrame(pdf, "vec_id long, embedding array<float>")
+
+    local = frame(range(301))
+    assert local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == \
+        "LocalRelation"
+    cached = frame(range(1, 302)).cache()  # not local's rows: a cache would serve those
+    cached.count()
+    epoch = frame(range(1000, 1040))
+    sc = spark.sparkContext
+    holder = {}
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            holder[group] = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    kw = dict(cfg=CFG, id_col="vec_id", vector_col="embedding", rows_per_segment=150)
+    counts = {
+        "build_local": jobs("drv_build_local", lambda: build_ann(
+            spark, local, str(tmp_path / "local"), **kw)),
+        "build_cached": jobs("drv_build_cached", lambda: build_ann(
+            spark, cached, str(tmp_path / "cached"), **kw)),
+    }
+    cat = holder["drv_build_local"]
+    counts["pq"] = jobs("drv_pq", lambda: build_ann_pq(spark, cat, CFG))
+    counts["ivfpq"] = jobs("drv_ivfpq", lambda: build_ann_ivfpq(spark, cat, CFG))
+    counts["graph"] = jobs("drv_graph", lambda: build_ann_graph(spark, cat, CFG))
+    counts["epoch"] = jobs("drv_epoch", lambda: incremental_add_vectors(
+        spark, cat, epoch, CFG, 0, id_col="vec_id", vector_col="embedding"))
+    cached.unpersist()
+    assert counts == {"build_local": 0, "build_cached": 1, "pq": 0, "ivfpq": 0, "graph": 0,
+                      "epoch": 0}
+    assert sorted(cat.read_arrow("ann_flat", ["n_vecs"]).column(0).to_pylist()) == [1, 40, 150, 150]
+
+
 def test_reads_head_only_over_row_wise_plans(spark, tmp_path):
     """A limit reads only a head of a frame built by scans and row-wise
     operators; not of one behind an aggregate, join, sort, repartition,

@@ -26,8 +26,15 @@ join runs on the Spark tier). A checkout without a resident join tier
 dumps its Spark tier for the joins either way; diff each tier's dump
 against it and the two tiers against each other.
 
+The flush axis: ``--flush driver`` (the default) raises
+``ann.ANN_DRIVER_MAX_VALUES`` and ``segments.DRIVER_FLUSH_MAX_DOCS`` over
+the 8,001 × 8 index, so its build, format builds and epochs run in the
+driver; ``--flush spark`` sets ``ann.ANN_DRIVER_MAX_VALUES`` to 0, so
+they run on Spark. A checkout without the driver tier runs its Spark
+writes for either ``--flush``. Merges and deletes run on Spark either way.
+
 Usage (from the repo root of each checkout):
-    python tools/compare_ann.py dump OUT.json [--tier resident|spark]
+    python tools/compare_ann.py dump OUT.json [--tier resident|spark] [--flush driver|spark]
     python tools/compare_ann.py diff A.json B.json [--skip SUBSTR ...]
 """
 
@@ -94,13 +101,13 @@ def _join_rows(df):
                   for r in df.collect())
 
 
-def dump(out_path: str, tier: str = "resident") -> None:
+def dump(out_path: str, tier: str = "resident", flush: str = "driver") -> None:
     import numpy as np
     from pyspark.sql import SparkSession
 
     from cuvs_lucene_spark.config import IndexConfig
     from cuvs_lucene_spark.operators import ann as A
-    from cuvs_lucene_spark.operators import resident
+    from cuvs_lucene_spark.operators import resident, segments
     from cuvs_lucene_spark.operators.ann_graph import build_ann_graph
 
     spark = (
@@ -116,6 +123,13 @@ def dump(out_path: str, tier: str = "resident") -> None:
         resident.RESIDENT_MAX_BYTES = 0
     elif tier != "resident":
         raise ValueError(f"unknown tier {tier!r}; expected resident or spark")
+    if flush == "driver":
+        A.ANN_DRIVER_MAX_VALUES = max(getattr(A, "ANN_DRIVER_MAX_VALUES", 0), N * DIM)
+        segments.DRIVER_FLUSH_MAX_DOCS = max(segments.DRIVER_FLUSH_MAX_DOCS, N)
+    elif flush == "spark":
+        A.ANN_DRIVER_MAX_VALUES = 0
+    else:
+        raise ValueError(f"unknown flush {flush!r}; expected driver or spark")
     base = IndexConfig(rows_per_segment=RPS, compact_dropped_fraction=1.0)
     x = np.round(np.random.default_rng(5).normal(size=(N, DIM)), 1).astype(np.float32)
     vdf = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(x)],
@@ -163,7 +177,7 @@ def dump(out_path: str, tier: str = "resident") -> None:
     with open(out_path, "w") as f:
         json.dump(out, f, indent=0, sort_keys=True)
     n_rows = sum(len(v) for v in out.values())
-    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows ({tier} tier)")
+    print(f"wrote {out_path}: {len(out)} lists, {n_rows} rows ({tier} tier, {flush} flush)")
     spark.stop()
     shutil.rmtree(root, ignore_errors=True)
 
@@ -184,8 +198,9 @@ def diff(a_path: str, b_path: str, skip: list[str]) -> int:
 
 def main() -> int:
     if sys.argv[1] == "dump":
-        tier = sys.argv[sys.argv.index("--tier") + 1] if "--tier" in sys.argv else "resident"
-        dump(sys.argv[2], tier)
+        opts = {o: sys.argv[sys.argv.index(f"--{o}") + 1]
+                for o in ("tier", "flush") if f"--{o}" in sys.argv}
+        dump(sys.argv[2], **opts)
         return 0
     skip = sys.argv[sys.argv.index("--skip") + 1:] if "--skip" in sys.argv else []
     return diff(sys.argv[2], sys.argv[3], skip)
