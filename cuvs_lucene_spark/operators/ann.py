@@ -9,7 +9,11 @@ its ext_id map, sorted by ext_id (the delegated ``FlatVectorsFormat``, I3)
 map. Every other table is a derived FORMAT built per segment from flat
 blobs by the flush kernel (``CuVS2510GPUVectorsWriter.writeFieldInternal:
 181-234``; the dense matrix is the ``Utils.createFloatMatrix:56-72``
-analogue).
+analogue). The tables have one layout, ``ANN_FORMAT_VERSION``, which
+every first write records in the catalog config (:func:`ann_config`); the
+catalog refuses any other when it opens (``catalog.check_format``, as the
+reference's ``checkVersion:589-601``), so no reader here sniffs an older
+layout.
 
 Formats (``FORMATS``). One entry per derived table supplies what only
 that format knows:
@@ -136,11 +140,7 @@ from cuvs_lucene_spark.frames import (_TYPES, _fields, arrow_schema, head_arrow,
                                       small_arrow)
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.operators import segments as S
-from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
-
-ANN_FORMAT_VERSION = 3  # v2: centroid rows carry n_total; bf-fallback list in
-                        # manifest. v3: thin ann_ids map (DataFrame filter tier);
-                        # pre-v3 indexes derive the map on first large filter
+from cuvs_lucene_spark.sources.catalog import ANN_FORMAT_VERSION, IndexCatalog, transactional
 
 ANN_DRIVER_MAX_VALUES = 384_000  # builds, format builds and epochs of at
                                  # most this many vector values (vectors ×
@@ -505,13 +505,7 @@ def _bq_coarse(r, ctx: "_Query") -> np.ndarray:
     """BQ: Hamming distance between the query's and each vector's sign
     bits about the segment centroid (navigation space)."""
     codes = np.frombuffer(r.codes, np.uint8).reshape(int(r.n_vecs), -1)
-    # v2 writes the centroid as float64; v1 indexes wrote float32 — gate on
-    # blob length (dim*8 vs dim*4) so pre-v2 indexes open
-    raw = bytes(r.centroid)
-    if len(raw) == int(r.dim) * 8:
-        centroid = np.frombuffer(raw, np.float64)
-    else:
-        centroid = np.frombuffer(raw, np.float32).astype(np.float64)
+    centroid = np.frombuffer(r.centroid, np.float64)
     qbits = np.packbits(ctx.qn.astype(np.float64) > centroid)
     return np.unpackbits(codes ^ qbits[None, :], axis=1).sum(1)
 
@@ -574,7 +568,7 @@ def _format_rows(fmt: AnnFormat, src, cfg: IndexConfig, metric: str, **kw):
 
 
 def _index_metric(cat: IndexCatalog) -> str:
-    return cat.read_manifest().get("config", {}).get("ann_metric", "l2")
+    return cat.read_manifest()["config"]["ann_metric"]
 
 
 def _concurrently(*writes: Callable[[], object]) -> None:
@@ -655,6 +649,20 @@ def _mark_bf_fallback(cat: IndexCatalog) -> None:
     cat.mark_stage("ann_ivf", **stage)
 
 
+def ann_config(ann: AnnParams, rows_per_segment: int) -> dict:
+    """The manifest config an ANN catalog's first write (a build or an
+    epoch) records: the format and the build metric every reader trusts,
+    the segment size later rebuilds keep, and the merge-pressure knobs
+    :func:`delete_ann` reads — INDEX state, never a later caller's cfg."""
+    return {
+        "ann_metric": ann.metric,
+        "ann_format": ANN_FORMAT_VERSION,
+        "rows_per_segment": rows_per_segment,
+        "delete_merge_fraction": ann.delete_merge_fraction,
+        "delete_merge_max_count": ann.delete_merge_max_count,
+    }
+
+
 def _check_index_metric(metric: str) -> None:
     """MIP has no normalize-to-L2 reduction; derived structures (IVF/SQ/
     PQ/graph) would rank wrong-metric. Exact scans (ann_topk
@@ -704,17 +712,7 @@ def build_ann(
         flat_pdf, flat, ids = flush_flat(
             small.assign(segment_id=S.range_segments(small["ext_id"].to_numpy(), rps)))
     with cat.transaction() as tx:
-        tx.set_config(
-            {
-                "ann_metric": ann.metric,
-                "ann_format": ANN_FORMAT_VERSION,
-                "rows_per_segment": rps,
-                # merge-pressure knobs are INDEX state (delete_ann reads
-                # them from here, not from the deleting caller's cfg)
-                "delete_merge_fraction": ann.delete_merge_fraction,
-                "delete_merge_max_count": ann.delete_merge_max_count,
-            }
-        )
+        tx.set_config(ann_config(ann, rps))
         tx.write(flat, "ann_flat")
         tx.mark_stage("ann_flat")
 
@@ -763,44 +761,15 @@ def _check_choice(name: str, value: str, allowed: tuple) -> None:
         raise ValueError(f"unknown {name} {value!r}; expected one of {allowed}")
 
 
-def _ann_ids(spark: SparkSession, cat: IndexCatalog) -> DataFrame:
-    """Thin (segment_id, ext_id) map of the ANN sidecar — the row-level
-    ord→doc table (S6) that lets a DataFrame filter resolve to per-segment
-    masks with one equi-join (the role doc_map plays for the bm25 filter
-    tier). Written by every build, epoch and merge in the transaction that
-    writes flat; derived and committed once for a pre-v3 index, which has
-    none (a commit-point reader derives it per query without persisting)."""
-    if cat.exists("ann_ids"):
-        return cat.read(spark, "ann_ids")
-
-    def explode(it):
-        for pdf in it:
-            for r in pdf.itertuples():
-                yield pd.DataFrame(
-                    {
-                        "segment_id": int(r.segment_id),
-                        "ext_id": np.frombuffer(r.ext_ids, np.int64),
-                    }
-                )
-
-    ids = (
-        cat.read(spark, "ann_flat")
-        .select("segment_id", "ext_ids")
-        .mapInPandas(explode, "segment_id long, ext_id long")
-    )
-    try:
-        cat.write(ids, "ann_ids", sort_within_partitions=["segment_id", "ext_id"])
-        return cat.read(spark, "ann_ids")
-    except PermissionError:  # pinned commit-point reader: derive per query
-        return ids
-
-
 def _filter_blobs(spark: SparkSession, cat: IndexCatalog, ids: DataFrame,
                   col: str = "allowed") -> DataFrame:
     """Per-segment packed blobs (sorted int64 ext_ids) of the indexed ids
     in ``ids``, resolved EXECUTOR-side through the thin ``ann_ids`` map —
     the large-set transport of both acceptDocs inputs, the bm25 large-filter
-    tier (bm25._aux_df) applied to the ANN paths. ``allowed``: the query
+    tier (bm25._aux_df) applied to the ANN paths. ``ann_ids`` is the thin
+    (segment_id, ext_id) map every build, epoch and merge writes beside
+    flat — the row-level ord→doc table (S6), the role doc_map plays for
+    the bm25 filter tier. ``allowed``: the query
     filter's bits derive from the index per leaf, never shipped from the
     caller (``GPUKnnFloatVectorQuery.java:43-51``). ``tomb``: deletes are
     leaf-local liveDocs bits, never a global driver array
@@ -816,7 +785,7 @@ def _filter_blobs(spark: SparkSession, cat: IndexCatalog, ids: DataFrame,
         )
 
     return (
-        _ann_ids(spark, cat)
+        cat.read(spark, "ann_ids")
         .join(ids, "ext_id", "left_semi")
         .groupBy("segment_id")
         .applyInPandas(pack, f"segment_id long, {col} binary")
@@ -945,10 +914,10 @@ def delete_ann(
     ``ann_ids`` map), physically dropping the deleted rows and clearing
     their tombstones — so the query-time tombstone set is provably
     bounded (Lucene's deletesPctAllowed merge pressure, applied
-    per-segment). Both thresholds read from the catalog's PERSISTED
-    config first (merge pressure is index state, not caller state),
-    falling back to the passed cfg. The tombstones and the merge they
-    trigger commit in one transaction."""
+    per-segment). Both thresholds, and the segment size the merge
+    rebuilds at, are read from the catalog's config (:func:`ann_config`:
+    merge pressure is index state, not caller state). The tombstones and
+    the merge they trigger commit in one transaction."""
     cfg = cfg or IndexConfig()
     if isinstance(ext_ids, DataFrame):
         # delete_docs parity: a named ext_id column is required unless the
@@ -975,20 +944,16 @@ def delete_ann(
     cat.write(new, "ann_tombstones", lineage={"n": n})
     new.unpersist()
     if auto_merge and n:
-        pcfg = cat.read_manifest().get("config", {})
-        frac = float(
-            pcfg.get("delete_merge_fraction", cfg.ann.delete_merge_fraction)
-        )
-        max_n = int(
-            pcfg.get("delete_merge_max_count", cfg.ann.delete_merge_max_count)
-        )
+        pcfg = cat.read_manifest()["config"]
+        frac = float(pcfg["delete_merge_fraction"])
+        max_n = int(pcfg["delete_merge_max_count"])
         total = cat.read(spark, "ann_flat").agg(
             F.sum("n_vecs").alias("t")
         ).collect()[0]["t"] or 0
         if total and (n > frac * total or n >= max_n):
             affected = sorted(
                 int(r["segment_id"])
-                for r in _ann_ids(spark, cat)
+                for r in cat.read(spark, "ann_ids")
                 .join(cat.read(spark, "ann_tombstones"), "ext_id", "left_semi")
                 .select("segment_id").distinct().collect()
             )
@@ -997,15 +962,9 @@ def delete_ann(
                 groups = [
                     affected[i : i + fanin] for i in range(0, len(affected), fanin)
                 ]
-                # segment layout is INDEX state: rebuild at the catalog's
-                # persisted rows_per_segment, never the caller cfg's default
-                # (a bare delete must not restructure the index)
-                idx_rps = cat.read_manifest().get("config", {}).get(
-                    "rows_per_segment"
-                ) or cfg.rows_per_segment
-                merge_ann(
-                    spark, cat, cfg, groups=groups, rows_per_segment=idx_rps
-                )
+                # a bare delete must not restructure the index
+                merge_ann(spark, cat, cfg, groups=groups,
+                          rows_per_segment=int(pcfg["rows_per_segment"]))
                 n = int(cat.table_lineage("ann_tombstones").get("n", 0))
     return n
 
@@ -1364,7 +1323,7 @@ class _Search(_Plan):
         self.fblobs, self.tblobs = fblobs, tblobs
 
     def table(self, name: str, *cols: str) -> DataFrame:
-        df = self.cat.read(self.spark, name, merge_schema=(name == "ann_graph"))
+        df = self.cat.read(self.spark, name)
         return df.select(*cols) if cols else df
 
     def aux(self, df: DataFrame) -> DataFrame:
@@ -1378,11 +1337,14 @@ class _Search(_Plan):
         """Exact per-row top-k partials of flat or IVF list rows."""
         return rows.mapInPandas(_scan_exact(self.ctx), TOPK_SCHEMA)
 
-    def with_fallback(self, partials: DataFrame, covering=("ann_ivf",)) -> DataFrame:
+    def with_fallback(self, partials: DataFrame) -> DataFrame:
         """``partials`` plus the exact scan of the segments that have no
-        index rows in ``covering`` (B2)."""
-        bf = _bf_fallback(self.spark, self.cat, self.flat(), covering)
-        return partials if bf is None else partials.unionByName(self.exact(bf))
+        IVF index (B2, :func:`_listed_bf_segments`)."""
+        segs = _listed_bf_segments(self.cat)
+        if not segs:
+            return partials
+        bf = self.flat().filter(F.col("segment_id").isin(segs))
+        return partials.unionByName(self.exact(bf))
 
     def cogroup(self, fmt_rows: DataFrame, segment, value: str = "score",
                 flat_cols: tuple = ()) -> DataFrame:
@@ -1430,7 +1392,7 @@ class _Resident(_Plan):
     run in the driver through the same kernel bodies the Spark tier ships
     (``_scan_exact``, ``_segment_kernel``), so scores are bit-identical; the
     top-k is one ``LocalRelation``. Raises :class:`_SparkTier` for a probe
-    that must leave the driver, or a pre-v2 index with no B2 list."""
+    that must leave the driver."""
 
     def __init__(self, spark, cat, ctx: _Query):
         self.spark, self.cat, self.ctx = spark, cat, ctx
@@ -1448,10 +1410,8 @@ class _Resident(_Plan):
     def exact(self, rows: pd.DataFrame) -> pd.DataFrame:
         return _frame(_scan_exact(self.ctx)(iter([rows])), TOPK_SCHEMA)
 
-    def with_fallback(self, partials: pd.DataFrame, covering=("ann_ivf",)) -> pd.DataFrame:
+    def with_fallback(self, partials: pd.DataFrame) -> pd.DataFrame:
         segs = _listed_bf_segments(self.cat)
-        if segs is None:
-            raise _SparkTier("bf_fallback_segments")
         if not segs:
             return partials
         flat = self.flat()
@@ -1534,8 +1494,7 @@ def _search(
     - the filter or the tombstones resolve to per-segment blobs (more than
       ``FILTER_BROADCAST_MAX`` ids);
     - the IVF probe leaves the driver (``probe_mode`` ``distributed`` or
-      ``shuffle``, or ``auto`` above ``PROBE_DRIVER_MAX_SEGMENTS``);
-    - a pre-v2 index has no B2 list (``_bf_fallback``'s anti-join).
+      ``shuffle``, or ``auto`` above ``PROBE_DRIVER_MAX_SEGMENTS``).
 
     Every ANN write commits all its tables in one transaction, so each
     table the plan reads covers the segments flat holds.
@@ -1558,28 +1517,11 @@ def _search(
     return plan(_Search(spark, cat, ctx, fblobs, tblobs))
 
 
-def _listed_bf_segments(cat: IndexCatalog) -> list[int] | None:
-    """The build-time B2 list (segments with no IVF index, hence no IVF-PQ
-    lists either), or None for a pre-v2 index without it."""
-    segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("bf_fallback_segments")
-    return None if segs is None else [int(s) for s in segs]
-
-
-def _bf_fallback(spark: SparkSession, cat: IndexCatalog, flat: DataFrame,
-                 covering=("ann_ivf",)) -> DataFrame | None:
-    """B2 degradation ladder: the rows of ``flat`` whose segments have no
-    rows in every ``covering`` table (None when there are none): the
-    manifest's list, or for a pre-v2 index an anti-join."""
-    segs = _listed_bf_segments(cat)
-    if segs is not None:
-        return flat.filter(F.col("segment_id").isin(segs)) if segs else None
-    covered = None
-    for t in covering:
-        if not cat.exists(t):
-            return flat
-        s = cat.read(spark, t).select("segment_id")
-        covered = s if covered is None else covered.join(s, "segment_id", "left_semi")
-    return flat.join(covered, "segment_id", "left_anti")
+def _listed_bf_segments(cat: IndexCatalog) -> list[int]:
+    """The B2 list every build, epoch and merge records
+    (:func:`_mark_bf_fallback`): the segments with no IVF index, hence no
+    IVF-PQ lists either."""
+    return [int(s) for s in cat.read_manifest()["stages"]["ann_ivf"]["bf_fallback_segments"]]
 
 
 # ---------------------------------------------------------------------------
@@ -1592,10 +1534,9 @@ PROBE_MODES = ("auto", "driver", "distributed", "shuffle")
 
 def _default_nprobe(r, dim: int) -> int:
     """The reference n_probes heuristic for one centroid row: ``n`` lists,
-    ``ext_ids`` carrying the segment's vector count (absent on pre-v2
-    rows, which assume 2000 vectors per list)."""
+    ``ext_ids`` carrying the segment's vector count."""
     n_lists = int(r.n)
-    n_total = int(np.frombuffer(r.ext_ids, np.int64)[0]) if r.ext_ids else n_lists * 2000
+    n_total = int(np.frombuffer(r.ext_ids, np.int64)[0])
     return max(1, min(n_lists, ivf_pq_params(n_total, dim)["n_probes"]))
 
 
@@ -1606,14 +1547,15 @@ def _probe_distributed(cat: IndexCatalog, probe_mode: str) -> bool:
     already holds zero driver state ∝ segment count; treating it as
     ``driver`` would be the memory profile the caller opted out of."""
     _check_choice("probe_mode", probe_mode, PROBE_MODES)
-    n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get(
-        "n_ivf_segments"
-    )
     return probe_mode in ("distributed", "shuffle") or (
-        probe_mode == "auto"
-        and n_segs is not None
-        and n_segs > PROBE_DRIVER_MAX_SEGMENTS
-    )
+        probe_mode == "auto" and _many_segments(cat))
+
+
+def _many_segments(cat: IndexCatalog) -> bool:
+    """Whether more than ``PROBE_DRIVER_MAX_SEGMENTS`` segments have an IVF
+    index (the count :func:`_mark_bf_fallback` records): ``auto``'s switch
+    off the driver probe."""
+    return cat.read_manifest()["stages"]["ann_ivf"]["n_ivf_segments"] > PROBE_DRIVER_MAX_SEGMENTS
 
 
 def _probe_pairs(pack: dict, qn: np.ndarray, nprobe: int | None) -> tuple[np.ndarray, np.ndarray]:
@@ -1717,8 +1659,8 @@ def _centroid_pack(spark: SparkSession, cat: IndexCatalog) -> dict | None:
 
 
 def _validate_metric(cat: IndexCatalog, metric: str) -> None:
-    built = cat.read_manifest().get("config", {}).get("ann_metric")
-    if built is not None and metric != built:
+    built = _index_metric(cat)
+    if metric != built:
         raise ValueError(
             f"query metric {metric!r} does not match index build metric "
             f"{built!r} (similarity-function mismatch, "
@@ -1942,7 +1884,7 @@ def ann_topk_ivfpq(
         meta = s.table("ann_pq", "segment_id", "dim", "pq_dim", "pq_bits", "codebook")
         cands = s.map(s.aux(s.join(lists, meta, "segment_id")), adc,
                       "segment_id long, ext_id long")
-        return s.top(s.with_fallback(s.cogroup(cands, rerank), ("ann_ivfpq", "ann_pq")))
+        return s.top(s.with_fallback(s.cogroup(cands, rerank)))
 
     return _search(
         spark, cat, query, k, filter_ext_ids, filter_mode, plan,
@@ -2038,7 +1980,7 @@ def field_catalog(cat: IndexCatalog, field: str) -> IndexCatalog:
     """Resolve the per-field sub-catalog of a multi-field ANN index."""
     import os
 
-    fields = cat.read_manifest().get("config", {}).get("ann_fields", {})
+    fields = cat.read_manifest()["config"].get("ann_fields", {})
     if field not in fields:
         raise ValueError(f"unknown vector field {field!r}; have {sorted(fields)}")
     return IndexCatalog(os.path.join(cat.root, f"field={field}"))
@@ -2110,8 +2052,8 @@ def merge_ann(
     # default — a cosine index merged with a default cfg must stay cosine
     # (similarity function is per-field index state, never per-call:
     # CuVS2510GPUVectorsWriter.java:360-367 persists it in meta)
-    built = cat.read_manifest().get("config", {}).get("ann_metric")
-    if built and built != cfg.ann.metric:
+    built = _index_metric(cat)
+    if built != cfg.ann.metric:
         cfg = dataclasses.replace(
             cfg, ann=dataclasses.replace(cfg.ann, metric=built)
         )
@@ -2235,15 +2177,12 @@ def merge_ann(
             "ann_merge_gen": gen,
         },
     )
-    if cat.exists("ann_ids"):
-        cat.append(
-            assigned.select("segment_id", "ext_id"),
-            "ann_ids",
-            tag=tag,
-            extra_entry={"dropped_segments": _dropped_for("ann_ids")},
-        )
-    else:
-        _ann_ids(spark, cat)  # pre-v3: derive from the staged post-merge flat
+    cat.append(
+        assigned.select("segment_id", "ext_id"),
+        "ann_ids",
+        tag=tag,
+        extra_entry={"dropped_segments": _dropped_for("ann_ids")},
+    )
     release()
 
     # derived structures for the NEW segments only (read back from the
@@ -2261,20 +2200,18 @@ def merge_ann(
     # tombstones whose rows were physically dropped here clear out; those
     # referencing untouched segments stay live (per-segment liveDocs)
     if (tomb is not None or tblobs is not None) and cat.exists("ann_tombstones"):
-        live_ids = _ann_ids(spark, cat)
         remaining = (
             cat.read(spark, "ann_tombstones")
-            .join(live_ids, "ext_id", "left_semi")
+            .join(cat.read(spark, "ann_ids"), "ext_id", "left_semi")
             .cache()
         )
         n_rem = remaining.count()
         cat.write(remaining, "ann_tombstones", lineage={"n": n_rem})
         remaining.unpersist()
 
-    if rps != cat.read_manifest().get("config", {}).get("rows_per_segment"):
-        cat.set_config(
-            {**cat.read_manifest().get("config", {}), "rows_per_segment": rps}
-        )
+    config = cat.read_manifest()["config"]
+    if rps != config["rows_per_segment"]:
+        cat.set_config({**config, "rows_per_segment": rps})
 
     # auto-compaction: once logically-dropped rows dominate the physical
     # tables, every read scans mostly dead data — rewrite to one compact
@@ -2309,8 +2246,7 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
 
     def rewrite(table: str) -> None:
         cat.write(
-            # merge_schema: pre-upgrade graph snapshots may lack layer/stride
-            cat.read(spark, table, merge_schema=(table == "ann_graph")),
+            cat.read(spark, table),
             table,
             sort_within_partitions=["segment_id"],
             extra_entry={"ann_merge_gen": gen} if table == "ann_flat" else None,
@@ -2437,7 +2373,7 @@ def knn_join_ivf(
     - ``driver`` — probe ranking over the memoized centroid pack (the one
       :func:`ann_topk` probes with). Under the resident tier's conditions
       (:func:`_search`'s: the catalog fits ``RESIDENT_MAX_BYTES``, no
-      filter or tombstone blobs, a B2 list in the manifest), over a
+      filter or tombstone blobs), over a
       query side of at most ``resident.RESIDENT_JOIN_MAX_QUERIES`` rows
       that ``frames.small_arrow`` reads (a ``LocalRelation``'s rows with
       no job, else one head read of a plan a limit reads only a head of),
@@ -2475,12 +2411,7 @@ def knn_join_ivf(
         return _join_frame(spark)
     metric = _index_metric(cat)
     ivf = cat.read(spark, "ann_ivf") if cat.exists("ann_ivf") else None
-    n_segs = cat.read_manifest()["stages"].get("ann_ivf", {}).get("n_ivf_segments")
-    shuffle = probe_mode == "shuffle" or (
-        probe_mode == "auto"
-        and n_segs is not None
-        and n_segs > PROBE_DRIVER_MAX_SEGMENTS
-    )
+    shuffle = probe_mode == "shuffle" or (probe_mode == "auto" and _many_segments(cat))
     distributed = probe_mode == "distributed" or shuffle
     # B2 degradation ladder: segments too small for an IVF index are
     # brute-forced — every query probes them as one pseudo-list (-2), so
@@ -2491,19 +2422,11 @@ def knn_join_ivf(
 
     q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
     # the resident tier: the conditions of _search's, plus a bounded query
-    # side that a limit reads without running its plan twice (a pre-v2
-    # index, with no listed B2 set, takes the Spark tier)
-    if (not distributed and bf_segs is not None and fblobs is None and tblobs is None
-            and _resident_fits(cat)):
+    # side that a limit reads without running its plan twice
+    if not distributed and fblobs is None and tblobs is None and _resident_fits(cat):
         head = small_arrow(q, R.RESIDENT_JOIN_MAX_QUERIES)
         if head is not None:
             return _join_resident(spark, cat, head, k, nprobe, metric, bf_segs, allowed, tomb)
-    if bf_segs is None:
-        bf_segs = sorted(
-            int(r[0]) for r in _bf_fallback(
-                spark, cat, cat.read(spark, "ann_flat").select("segment_id")
-            ).collect()
-        )
 
     def _pairs(seg: int, qi_ids: np.ndarray, qb: np.ndarray, probe=None) -> pd.DataFrame:
         """Probe pairs of one segment: the ranked lists per query, or the

@@ -468,12 +468,6 @@ def _graph_segment(ctx: _Query, ef: int):
     def segment(gp: pd.DataFrame, x_raw: np.ndarray, ids: np.ndarray, accept):
         if gp.empty or ids.size < 2:
             return None
-        if "layer" not in gp.columns:  # pre-multilayer graph tables
-            gp = gp.assign(layer=0, stride=1)
-        else:
-            # mixed old/new snapshots (merge-schema read): pre-upgrade rows
-            # surface layer/stride as NULL — they ARE base-layer rows
-            gp = gp.assign(layer=gp["layer"].fillna(0), stride=gp["stride"].fillna(1))
         base_rows = gp[gp["layer"] == 0]
         if base_rows.empty:
             return ids[:0], np.empty(0)

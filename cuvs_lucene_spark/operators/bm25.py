@@ -422,7 +422,7 @@ def _spark_partials(
     when there are no tombstones and no blob filter, else the aux
     cogroup, which also carries a filter above ``FILTER_BROADCAST_MAX``).
     The scan feeds the scorer, grouped by segment."""
-    postings = _query_postings(spark, cat, terms, cfg)
+    postings = _query_postings(spark, cat, terms)
     n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, aux_filter)
     if n == 0:
         return None
@@ -637,13 +637,9 @@ _TEXT_COLS = ("segment_id", "kind", "term", "block_id", "first_doc", "n", "doc_d
 
 def _text_fits(cat: IndexCatalog) -> dict | None:
     """The manifest's tables when the resident text pack serves the
-    catalog; None for an index without the unified ``segdata`` layout,
-    or one whose segdata committed bytes exceed
+    catalog; None when its segdata committed bytes exceed
     ``TEXT_RESIDENT_MAX_BYTES`` (the pack is then released)."""
     tables = cat.read_manifest()["tables"]
-    view = (tables.get("postings") or {}).get("view") or {}
-    if view.get("of") != "segdata" or not (tables.get("segdata") or {}).get("snapshot"):
-        return None
     if R.disk_bytes(cat, "segdata", tables) > R.TEXT_RESIDENT_MAX_BYTES:
         R.pack(cat).drop(lambda name, v: name in ("segdata", "tombstones", "positions"))
         return None
@@ -924,11 +920,11 @@ def _tomb_aux(spark: SparkSession, cat: IndexCatalog, pack, schema: str) -> Data
     return local_frame(spark, schema, *R.pack(cat).get("tomb_aux", key, fill))
 
 
-def _query_postings(spark: SparkSession, cat: IndexCatalog, terms: list[str], cfg: IndexConfig) -> DataFrame:
+def _query_postings(spark: SparkSession, cat: IndexCatalog, terms: list[str]) -> DataFrame:
     """Postings scan for the query terms: term_bucket partition pruning
     (with the index's own bucket count) + parquet row-group pruning on the
     sorted ``term`` column."""
-    n_buckets = index_term_buckets(cat, cfg)
+    n_buckets = index_term_buckets(cat)
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     p = cat.read(spark, "postings")
     return p.filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(list(terms)))
@@ -1298,7 +1294,7 @@ def boolean_and(
     """
     cfg = cfg or IndexConfig()
     terms = list(dict.fromkeys(terms))
-    postings = _query_postings(spark, cat, terms, cfg)
+    postings = _query_postings(spark, cat, terms)
     aux = _aux_df(spark, cat, None)
     n_terms = len(terms)
 
@@ -1387,7 +1383,7 @@ def boolean_query(
     if m_should > len(any_of):
         return local_frame(spark, "ext_id long")  # Lucene: no hits
     all_terms = list(dict.fromkeys([*must, *any_of, *exclude]))
-    postings = _query_postings(spark, cat, all_terms, cfg)
+    postings = _query_postings(spark, cat, all_terms)
     aux = _aux_df(spark, cat, None)
 
     def ev(p: pd.DataFrame, a: pd.DataFrame) -> pd.DataFrame:

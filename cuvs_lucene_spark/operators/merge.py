@@ -209,13 +209,7 @@ def merge_segments(
     a hierarchical merge down to one segment). Returns {gkey: new_segment_id}.
     """
     cfg = cfg or IndexConfig()
-    m0 = cat.read_manifest()
-    sd_ent = m0["tables"].get("segdata")
-    if sd_ent is None or not m0["tables"].get("postings", {}).get("view"):
-        raise ValueError(
-            "incremental merge requires the unified segdata layout "
-            "(postings/doc_map/... as views of segdata)"
-        )
+    sd_ent = cat.read_manifest()["tables"]["segdata"]
     stats_rows = (
         cat.read(spark, "segment_stats").select("segment_id", "n_docs").collect()
     )

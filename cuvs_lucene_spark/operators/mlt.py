@@ -87,7 +87,7 @@ def interesting_terms(
     )
     if not cand:
         return []
-    postings = _query_postings(spark, cat, cand, cfg)
+    postings = _query_postings(spark, cat, cand)
     n, _avgdl, df_by_term = _live_stats_and_df(
         spark, cat, cand, cfg, postings, None
     )

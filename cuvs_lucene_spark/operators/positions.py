@@ -618,7 +618,7 @@ def phrase_topk(
     uniq = list(dict.fromkeys(t for s in slots for t in s))
     resident = _resident_positions(spark, cat)
     if resident is None:
-        postings = _query_postings(spark, cat, uniq, cfg)
+        postings = _query_postings(spark, cat, uniq)
         n, avgdl, df_by_term = _live_stats_and_df(spark, cat, uniq, cfg, postings, None)
     else:
         n, avgdl, df_by_term = _pack_stats(*resident[:2], uniq)[3:]

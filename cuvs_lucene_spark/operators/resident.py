@@ -151,10 +151,9 @@ def read_arrow(
     less the ``dropped`` segments. ``prep(df)`` filters / projects before
     the read."""
     if snaps is None:
-        df = cat.read(spark, table, merge_schema=(table == "ann_graph"))
+        df = cat.read(spark, table)
     else:
-        reader = spark.read.option("mergeSchema", "true") if table == "ann_graph" else spark.read
-        df: DataFrame = reader.parquet(*[os.path.join(cat.root, table, s) for s in snaps])
+        df: DataFrame = spark.read.parquet(*[os.path.join(cat.root, table, s) for s in snaps])
         if dropped:
             df = df.filter(~df["segment_id"].isin([int(s) for s in dropped]))
     return (df if prep is None else prep(df)).toArrow()

@@ -543,6 +543,19 @@ def _spark_flush(
     cat.write(segdata, "segdata", sort_within_partitions=SEGDATA_SORT)
 
 
+def text_config(cfg: IndexConfig, segmenter: str = "range") -> dict:
+    """The manifest config a text catalog's first write (a build or an
+    epoch) records — the ``term_buckets`` its postings are bucketed by is
+    read back by every later epoch and query (:func:`index_term_buckets`)."""
+    return {
+        "rows_per_segment": cfg.rows_per_segment,
+        "block_size": cfg.block_size,
+        "term_buckets": cfg.term_buckets,
+        "bm25": {"k1": cfg.bm25.k1, "b": cfg.bm25.b},
+        "segmenter": segmenter,
+    }
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -562,15 +575,7 @@ def build_index(
     """
     cfg = cfg or IndexConfig()
     cat = IndexCatalog(index_root)
-    cat.set_config(
-        {
-            "rows_per_segment": cfg.rows_per_segment,
-            "block_size": cfg.block_size,
-            "term_buckets": cfg.term_buckets,
-            "bm25": {"k1": cfg.bm25.k1, "b": cfg.bm25.b},
-            "segmenter": segmenter,
-        }
-    )
+    cat.set_config(text_config(cfg, segmenter))
     base = docs.select(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(content_col).cast("string").alias("content"),
@@ -757,10 +762,10 @@ def verify_integrity(
     )
 
 
-def index_term_buckets(cat: IndexCatalog, cfg: IndexConfig) -> int:
-    """The ``term_buckets`` the index's postings were written with: the
-    one ``build_index`` records in the manifest config, else ``cfg``'s."""
-    return int(cat.read_manifest().get("config", {}).get("term_buckets") or cfg.term_buckets)
+def index_term_buckets(cat: IndexCatalog) -> int:
+    """The ``term_buckets`` the index's postings were written with, as its
+    first write recorded it (:func:`text_config`)."""
+    return int(cat.read_manifest()["config"]["term_buckets"])
 
 
 def corpus_stats(spark: SparkSession, cat: IndexCatalog) -> tuple[int, float]:

@@ -51,6 +51,12 @@ ROW_GROUP_BYTES = 4 * 1024 * 1024  # parquet row-group target of every write
 VERSION_START = 1
 VERSION_CURRENT = 1
 
+ANN_FORMAT_VERSION = 3  # the ANN tables' layout: centroid rows carry the
+                        # segment's vector count, BQ centroids are float64,
+                        # graph rows carry layer/stride, the manifest lists
+                        # the segments with no IVF index, and every write
+                        # keeps the thin ann_ids map beside ann_flat
+
 # DERIVED sidecar tables whose commits cannot change corpus/posting
 # statistics: the positional sidecar is built FROM the committed docs,
 # and the global dictionary is an aggregate OF the per-segment terms —
@@ -75,6 +81,32 @@ def stats_version(manifest: dict) -> float:
         ),
         default=0,
     )
+
+
+def check_format(m: dict, where: str) -> dict:
+    """Refuse a manifest whose tables an older writer laid out (Lucene's
+    ``IndexFormatTooOldException``): an ANN catalog (any ``ann_`` table or
+    config key) must record ``ann_format`` = ``ANN_FORMAT_VERSION``, and a
+    text catalog must keep ``postings`` as a view of the unified
+    ``segdata`` table and record the ``term_buckets`` its postings were
+    written with. Returns ``m``."""
+    tables, config = m["tables"], m.get("config", {})
+    if any(k.startswith("ann_") for k in (*tables, *config)):
+        found = config.get("ann_format")
+        if found != ANN_FORMAT_VERSION:
+            raise ValueError(
+                f"ANN index format {found} is not supported (this version reads "
+                f"format {ANN_FORMAT_VERSION}); delete the index and rebuild it: {where}"
+            )
+    if "postings" in tables or "segdata" in tables:
+        view = (tables.get("postings") or {}).get("view") or {}
+        if ("postings" in tables and view.get("of") != "segdata") or "term_buckets" not in config:
+            raise ValueError(
+                "text index layout is not supported (this version reads postings as a "
+                "view of segdata, with term_buckets in the config); delete the index and "
+                f"rebuild it: {where}"
+            )
+    return m
 
 
 def _put_arrow(at: pa.Table, out: str, sort_by: list[str] | None) -> None:
@@ -144,7 +176,7 @@ class IndexCatalog:
                 f"index manifest version {v} unsupported "
                 f"(expected {VERSION_START}..{VERSION_CURRENT}): {p}"
             )
-        return m
+        return check_format(m, p)
 
     COMMIT_RETENTION = 8  # commit points kept (IndexDeletionPolicy analogue)
 
@@ -191,7 +223,7 @@ class IndexCatalog:
                 f"commit point {commit_n} not retained (have {self.commit_points()})"
             )
         with open(p) as f:
-            return CommitPointReader(self.root, json.load(f))
+            return CommitPointReader(self.root, check_format(json.load(f), p))
 
     # --------------------------------------------------------------- tables
     def table_dir(self, table: str) -> str | None:
@@ -260,15 +292,12 @@ class IndexCatalog:
                 table, lambda out: _put_arrow(at, out, sort_by), lineage, extra_entry
             )
 
-    def read(
-        self, spark: SparkSession, table: str, merge_schema: bool = False
-    ) -> DataFrame:
-        """``merge_schema``: resolve the UNION schema across the base
-        snapshot and appended increments (needed when a format upgrade
-        added columns — e.g. ann_graph's layer/stride — and pre-upgrade
-        snapshots coexist with new appends; old rows surface the new
-        columns as NULL instead of the schema being whichever file Spark
-        sampled first)."""
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """The committed rows of ``table`` (a view resolved over the table
+        it views) less its dropped segments, as one Spark scan of its live
+        directories. Every directory of a table holds one schema — the
+        catalog reads one format (:func:`check_format`) — so the scan
+        takes it from any one file."""
         ent = self.read_manifest()["tables"].get(table)
         if ent is not None and ent.get("view"):
             v = ent["view"]
@@ -286,17 +315,10 @@ class IndexCatalog:
         # self-joined reads into ambiguous-column errors. Snapshot dirs
         # are immutable once committed (appends/rewrites mint NEW dirs →
         # new key), so a cached schema can never go stale.
-        key = (
-            spark.sparkContext.applicationId, table, tuple(dirs),
-            bool(merge_schema),
-        )
+        key = (spark.sparkContext.applicationId, table, tuple(dirs))
         memo = self.__dict__.setdefault("_schema_memo", {})
         schema = memo.get(key)
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        if schema is not None:
-            reader = reader.schema(schema)
+        reader = spark.read if schema is None else spark.read.schema(schema)
         df = reader.parquet(*dirs)
         if schema is None:
             # superseded snapshot states of the same table can never be

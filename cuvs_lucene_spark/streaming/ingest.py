@@ -65,6 +65,7 @@ from cuvs_lucene_spark.operators.segments import (
     index_term_buckets,
     range_segments,
     small_docs,
+    text_config,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, transactional
 
@@ -140,17 +141,19 @@ def incremental_add(
     """
     if cat.stage_done(f"epoch_{epoch}"):
         return  # epoch fully committed earlier — redelivery is a no-op
+    if not cat.exists("segdata"):
+        # a fresh root: the config build_index records, an empty base
+        # snapshot and the views, so every epoch (including the first)
+        # lands as a tagged, replace-on-redelivery increment
+        cat.set_config(text_config(cfg))
+        cat.write_arrow(SEGDATA_ARROW.empty_table(), "segdata")
+        cat.define_views(SEGDATA_VIEWS, "segdata")
     # postings are bucketed as the index's existing ones (query pruning)
-    cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat, cfg))
+    cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat))
     base = docs.select(
         F.col(id_col).cast("long").alias("ext_id"),
         F.col(content_col).cast("string").alias("content"),
     )
-    if not cat.exists("segdata"):
-        # empty base snapshot + views, so every epoch (including the first)
-        # lands as a tagged, replace-on-redelivery increment
-        cat.write_arrow(SEGDATA_ARROW.empty_table(), "segdata")
-        cat.define_views(SEGDATA_VIEWS, "segdata")
     small = small_docs(base)
     if small is None:
         _spark_epoch(spark, cat, base, cfg, epoch)
@@ -193,15 +196,14 @@ def incremental_add_vectors(
     the module docstring), with no Spark job beyond the read of
     ``vectors``."""
     from cuvs_lucene_spark.operators.ann import (
-        ANN_FORMAT_VERSION,
         FLAT_SCHEMA,
         FORMATS,
         IDS_SCHEMA,
-        _ann_ids,
         _append_formats,
         _check_index_metric,
         _index_metric,
         _mark_bf_fallback,
+        ann_config,
         build_flat_pdf,
         flush_flat,
         small_vectors,
@@ -213,23 +215,11 @@ def incremental_add_vectors(
     small = small_vectors(vectors, id_col, vector_col, cfg.ann)
     if small is None:
         validate_vectors(vectors, vector_col, id_col, cfg.ann)
-    m = cat.read_manifest()
-    if "ann_metric" not in m.get("config", {}):
+    config = cat.read_manifest()["config"]
+    if "ann_format" not in config:
+        # a fresh root: record the config build_ann records
         _check_index_metric(cfg.ann.metric)  # same guard as build_ann
-        cat.set_config(
-            {
-                **m.get("config", {}),
-                "ann_metric": cfg.ann.metric,
-                "ann_format": ANN_FORMAT_VERSION,
-                "rows_per_segment": cfg.rows_per_segment,
-            }
-        )
-    if cat.exists("ann_flat") and not cat.exists("ann_ids"):
-        # pre-v3 catalog: materialize the FULL map from the existing flat
-        # blobs before this epoch appends — seeding an empty table here
-        # would silently prune the pre-existing segments from every future
-        # DataFrame-filtered query
-        _ann_ids(spark, cat)
+        cat.set_config({**config, **ann_config(cfg.ann, cfg.rows_per_segment)})
     seeds = [("ann_flat", FLAT_SCHEMA), ("ann_ids", IDS_SCHEMA)] + [
         (f.table, f.schema) for f in FORMATS.values() if f.default
     ]

@@ -111,9 +111,7 @@ def main(argv=None):
         # the same TieredMergePolicy invariants as the text side
         from cuvs_lucene_spark.operators.merge import tier_groups
 
-        rps = args.rows_per_segment or cat.read_manifest().get("config", {}).get(
-            "rows_per_segment", cfg.rows_per_segment
-        )
+        rps = args.rows_per_segment or cat.read_manifest()["config"]["rows_per_segment"]
         sizes = [
             (int(r["n_vecs"]), int(r["segment_id"]))
             for r in cat.read(spark, "ann_flat")
@@ -126,11 +124,9 @@ def main(argv=None):
         if cat.exists("ann_tombstones") and cat.table_lineage(
             "ann_tombstones"
         ).get("n"):
-            from cuvs_lucene_spark.operators.ann import _ann_ids
-
             n_of = {s: n for n, s in sizes}
             dead = (
-                _ann_ids(spark, cat)
+                cat.read(spark, "ann_ids")
                 .join(cat.read(spark, "ann_tombstones"), "ext_id", "left_semi")
                 .groupBy("segment_id")
                 .agg(F.count("*").alias("nd"))

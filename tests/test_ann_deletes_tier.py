@@ -111,7 +111,7 @@ def test_merge_ann_drops_blob_tier_tombstones(spark, tmp_path, monkeypatch):
     A.merge_ann(spark, cat, CFG)
     live = sorted(
         r["ext_id"]
-        for r in A._ann_ids(spark, cat).select("ext_id").collect()
+        for r in cat.read(spark, "ann_ids").select("ext_id").collect()
     )
     assert live == [i for i in range(120) if i % 2 == 1]
     # physical drop cleared the registered tombstones
@@ -134,6 +134,31 @@ def test_absolute_delete_trigger_from_persisted_config(spark, tmp_path):
     # the caller passes a default cfg whose cap is 2M; persisted wins
     remaining = A.delete_ann(spark, cat, list(range(0, 12, 2)), IndexConfig())
     assert remaining == 0  # auto-merge dropped the rows + cleared tombstones
+    got = {r["ext_id"] for r in A.ann_topk(
+        spark, cat, _vec(1), k=120, cfg=CFG, mode="exact").collect()}
+    assert got == {i for i in range(120) if not (i < 12 and i % 2 == 0)}
+
+
+def test_epoch_records_the_delete_trigger(spark, tmp_path):
+    """A vector epoch on a fresh root records the ANN config build_ann
+    records, merge-pressure knobs included, so a delete called with a
+    DEFAULT cfg auto-merges once the epoch's absolute cap is crossed."""
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+    from cuvs_lucene_spark.streaming.ingest import incremental_add_vectors
+
+    tight = dataclasses.replace(
+        CFG, rows_per_segment=40,
+        ann=dataclasses.replace(CFG.ann, delete_merge_fraction=1.0, delete_merge_max_count=5),
+    )
+    df = spark.createDataFrame(
+        [(i, _vec(i)) for i in range(120)], "vec_id long, embedding array<float>"
+    )
+    cat = IndexCatalog(str(tmp_path / "epochtrig"))
+    incremental_add_vectors(spark, cat, df, tight, 0, id_col="vec_id", vector_col="embedding")
+    built = A.build_ann(spark, df, str(tmp_path / "built"), tight, id_col="vec_id",
+                        vector_col="embedding")
+    assert cat.read_manifest()["config"] == built.read_manifest()["config"]
+    assert A.delete_ann(spark, cat, list(range(0, 12, 2)), IndexConfig()) == 0
     got = {r["ext_id"] for r in A.ann_topk(
         spark, cat, _vec(1), k=120, cfg=CFG, mode="exact").collect()}
     assert got == {i for i in range(120) if not (i < 12 and i % 2 == 0)}

@@ -139,12 +139,29 @@ def test_merge_extends_the_pack(spark, merged):
         m: _rows(f(spark, cold, None)) for m, f in MODES.items()}
 
 
-def test_tiers_equal_after_merge(spark, merged, monkeypatch):
+def test_tiers_equal_after_merge(spark, merged, monkeypatch, tmp_path):
+    """Also over a compacted copy. ``ann_graph`` holds a pyarrow-written
+    base (the driver build) and a Spark-written merge append, and is read,
+    on both tiers and by ``compact_ann``, with one schema."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
     merged = merged[0]
     assert merged.read_manifest()["tables"]["ann_flat"]["dropped_segments"] == [0, 1]
+    assert {
+        pq.ParquetFile(os.path.join(d, f)).metadata.created_by.split()[0]
+        for d in merged.table_dirs("ann_graph") for f in os.listdir(d) if f.endswith(".parquet")
+    } == {"parquet-cpp-arrow", "parquet-mr"}
     names = list(FILTERS)
     cases = [(m, names[i % len(names)]) for i, m in enumerate(MODES)]
     _both_tiers(spark, merged, cases, monkeypatch)
+    compacted = IndexCatalog(shutil.copytree(merged.root, str(tmp_path / "compacted")))
+    A.compact_ann(spark, compacted)
+    assert not compacted.read_manifest()["tables"]["ann_graph"].get("appends")
+    _both_tiers(spark, compacted, cases, monkeypatch)
+    assert _run(spark, compacted, cases) == _run(spark, merged, cases)
 
 
 def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypatch):

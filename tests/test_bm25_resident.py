@@ -311,3 +311,23 @@ def test_spark_tier_buckets_by_the_index_term_buckets(spark, cat, monkeypatch):
         tier = _rows(B.bm25_topk(spark, cat, T, k=10, cfg=default))
     assert len(resident) == 10
     assert tier == resident
+
+
+def test_first_epoch_records_the_index_term_buckets(spark, tmp_path, monkeypatch):
+    """A first epoch on a fresh root records the config build_index
+    records, so a later query with a different ``term_buckets`` prunes the
+    postings by the epoch's 8 buckets and finds the same docs on both
+    tiers."""
+    cat = IndexCatalog(str(tmp_path / "epoch"))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(300)
+    incremental_add(spark, cat, docs, CFG, epoch=0, content_col="text", id_col="doc_id")
+    built = build_index(spark, docs, str(tmp_path / "built"), CFG, content_col="text",
+                        id_col="doc_id")
+    assert cat.read_manifest()["config"] == built.read_manifest()["config"]
+    default = IndexConfig(rows_per_segment=100)
+    resident = _rows(B.bm25_topk(spark, cat, T, k=10, cfg=default))
+    with monkeypatch.context() as m:
+        m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
+        tier = _rows(B.bm25_topk(spark, cat, T, k=10, cfg=default))
+    assert len(resident) == 10
+    assert tier == resident

@@ -114,18 +114,16 @@ def test_searcher_manager_analogue_concurrent(spark, docs_df, tmp_path):
     assert again == baseline
 
 
-def test_pinned_reader_derives_filter_map_without_persisting(spark, tmp_path):
-    """A commit-point reader pinned BEFORE the ann_ids map existed must
-    still answer DataFrame-filtered queries: _ann_ids derives the map per
-    query (read-only — the PermissionError branch) and never writes."""
-    import json
+def _tree(root: str) -> list[str]:
     import os
 
-    from pyspark.sql import functions as F
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
 
-    from cuvs_lucene_spark.operators.ann import build_ann
-    from cuvs_lucene_spark.sources.catalog import CommitPointReader
 
+def test_pinned_reader_df_filter_writes_nothing(spark, tmp_path):
+    """A reader pinned by ``reader_at`` answers a ``filter_mode="df"``
+    query (the per-segment blob tier, resolved through the pinned commit's
+    ``ann_ids`` map) with the closure tier's results, and writes nothing."""
     rng = np.random.default_rng(8)
     x = rng.normal(size=(120, 8)).astype(np.float32)
     df = spark.createDataFrame(
@@ -135,23 +133,70 @@ def test_pinned_reader_derives_filter_map_without_persisting(spark, tmp_path):
         spark, df, str(tmp_path / "pin"), CFG,
         id_col="vec_id", vector_col="embedding", rows_per_segment=60,
     )
-    # simulate a pre-v3 commit: pin the current manifest minus ann_ids
-    m = json.loads(json.dumps(cat.read_manifest()))
-    m["tables"].pop("ann_ids")
-    pinned = CommitPointReader(cat.root, m)
-    assert not pinned.exists("ann_ids")
+    c0 = cat.commit_points()[-1]
+    delete_ann(spark, cat, [8])
+    pinned = cat.reader_at(c0)
+    before = _tree(cat.root)
     fdf = spark.createDataFrame([(i,) for i in range(0, 120, 2)], "ext_id long")
     got = [r["ext_id"] for r in ann_topk(
-        spark, pinned, x[7], k=5, cfg=CFG, mode="exact",
+        spark, pinned, x[8], k=5, cfg=CFG, mode="exact",
         filter_ext_ids=fdf, filter_mode="df").collect()]
     want = [r["ext_id"] for r in ann_topk(
-        spark, cat, x[7], k=5, cfg=CFG, mode="exact",
-        filter_ext_ids={i for i in range(0, 120, 2)}).collect()]
-    assert got == want
-    # nothing was persisted through the read-only reader
-    assert not pinned.exists("ann_ids")
-    snaps = os.listdir(os.path.join(cat.root, "ann_ids"))
-    assert len([s for s in snaps if s.startswith("snap-")]) == 1  # build's own
+        spark, pinned, x[8], k=5, cfg=CFG, mode="exact",
+        filter_ext_ids=set(range(0, 120, 2))).collect()]
+    assert got == want and got[0] == 8  # the later delete is invisible
+    assert _tree(cat.root) == before
+
+
+def test_old_format_catalog_raises(spark, docs_df, tmp_path):
+    """A catalog an older writer laid out is refused on open, by the live
+    catalog and by ``reader_at``: an ANN manifest with ``ann_format`` 2
+    or none, and a text manifest whose ``postings`` is a stored table
+    rather than a view of ``segdata``. The undoctored manifests open."""
+    import json
+    import os
+
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+
+    x = np.random.default_rng(3).normal(size=(20, 4)).astype(np.float32)
+    ann = build_ann(spark, spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(20)], "vec_id long, embedding array<float>"
+    ), str(tmp_path / "ann"), CFG, id_col="vec_id", vector_col="embedding").read_manifest()
+    text = build_index(spark, docs_df.limit(20), str(tmp_path / "text"), CFG,
+                       content_col="text", id_col="doc_id").read_manifest()
+
+    def v2(m):
+        m["config"]["ann_format"] = 2
+
+    def unversioned(m):
+        del m["config"]["ann_format"]
+
+    def stored_postings(m):
+        m["tables"]["postings"] = {"snapshot": "snap-000001", "n": 1, "history": []}
+
+    def opened(name, m, doctor=None):
+        m = json.loads(json.dumps(m))
+        if doctor is not None:
+            doctor(m)
+        root = str(tmp_path / name)
+        os.makedirs(os.path.join(root, "_commits"))
+        for p in ("manifest.json", "_commits/manifest-000001.json"):
+            with open(os.path.join(root, p), "w") as f:
+                json.dump(m, f)
+        return IndexCatalog(root)
+
+    assert opened("ann_ok", ann).reader_at(1).exists("ann_ids")
+    assert opened("text_ok", text).reader_at(1).exists("postings")
+    for name, m, doctor, found in (("v2", ann, v2, "format 2 "),
+                                   ("none", ann, unversioned, "format None "),
+                                   ("stored", text, stored_postings, "text index layout")):
+        cat = opened(name, m, doctor)
+        for open_ in (cat.read_manifest, lambda: cat.reader_at(1)):
+            with pytest.raises(ValueError, match=found) as e:
+                open_()
+            assert "delete the index and rebuild it" in str(e.value)
+            if doctor is not stored_postings:
+                assert "this version reads format 3" in str(e.value)
 
 
 def test_each_ann_write_is_one_commit_point(spark, tmp_path):

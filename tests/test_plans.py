@@ -28,7 +28,7 @@ def _plan(df) -> str:
 
 
 def test_postings_scan_pushes_filters(spark, cat):
-    df = _query_postings(spark, cat, ["join", "vector"], CFG)
+    df = _query_postings(spark, cat, ["join", "vector"])
     plan = _plan(df)
     assert "PushedFilters" in plan
     # both the bucket and the term predicate reach the parquet scan
@@ -37,7 +37,7 @@ def test_postings_scan_pushes_filters(spark, cat):
 
 
 def test_postings_scan_prunes_columns(spark, cat):
-    df = _query_postings(spark, cat, ["join"], CFG).select("segment_id", "term", "n")
+    df = _query_postings(spark, cat, ["join"]).select("segment_id", "term", "n")
     plan = _plan(df)
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     # the fat binary columns must NOT be read for a count-style projection
