@@ -82,11 +82,11 @@ same (ext_id, score) lists bit for bit:
   process, as Lucene's stock HNSW reader does for the reference
   (``Lucene99AcceleratedHNSWVectorsFormat.java:103-110``). Each catalog
   keeps one pack (``resident.Pack``, shared with BM25): every table read
-  by one ``toArrow()`` at its first use and kept until its own manifest
-  entry changes (extended in place when a commit only appended to it or
-  dropped segments). The kernels
-  run over the pack's pandas frames in the driver and the top-k comes
-  back as a ``LocalRelation``: a warm query runs no Spark job. It serves
+  by ``IndexCatalog.read_arrow`` (no Spark job) at its first use and kept
+  until its own manifest entry changes (extended in place when a commit
+  only appended to it or dropped segments). The kernels run over the
+  pack's pandas frames in the driver and the top-k comes back as a
+  ``LocalRelation``: a warm query runs no Spark job. It serves
   single queries while the ANN tables' committed bytes fit
   ``RESIDENT_MAX_BYTES`` (sized from the measured crossover with the
   Spark tier);
@@ -947,9 +947,7 @@ def delete_ann(
         pcfg = cat.read_manifest()["config"]
         frac = float(pcfg["delete_merge_fraction"])
         max_n = int(pcfg["delete_merge_max_count"])
-        total = cat.read(spark, "ann_flat").agg(
-            F.sum("n_vecs").alias("t")
-        ).collect()[0]["t"] or 0
+        total = pc.sum(cat.read_arrow("ann_flat", ["n_vecs"])["n_vecs"]).as_py() or 0
         if total and (n > frac * total or n >= max_n):
             affected = sorted(
                 int(r["segment_id"])
@@ -976,28 +974,29 @@ def delete_ann(
 PACK_TABLES = ("ann_flat", *(f.table for f in FORMATS.values()))
 
 
-def _resident_fits(cat: IndexCatalog) -> bool:
-    """Whether the catalog's ANN tables fit ``RESIDENT_MAX_BYTES``. Over
-    it, the resident tables are released (the centroid pack stays)."""
+def _resident_fits(cat: IndexCatalog) -> dict | None:
+    """The manifest's tables when the catalog's ANN tables fit
+    ``RESIDENT_MAX_BYTES``; None over it, and the resident tables are
+    released (the centroid pack stays)."""
     tables = cat.read_manifest()["tables"]
     committed = [t for t in PACK_TABLES if (tables.get(t) or {}).get("snapshot")]
     if sum(R.disk_bytes(cat, t, tables) for t in committed) <= R.RESIDENT_MAX_BYTES:
-        return True
+        return tables
     R.pack(cat).drop(lambda n, v: n in PACK_TABLES and not (
         n == "ann_ivf" and v.lists is None))
-    return False
+    return None
 
 
-def _frame_extender(spark: SparkSession, cat: IndexCatalog, table: str, prep=None):
-    """A pack ``extend`` for an entry holding ``table``'s rows as one
-    pandas frame: drop the dropped segments' rows, append the new
-    directories' rows."""
+def _frame_extender(cat: IndexCatalog, table: str, tables: dict, where=None):
+    """A pack ``extend`` for an entry holding ``table``'s rows (``where``)
+    in the manifest ``tables`` as one pandas frame: drop the dropped
+    segments' rows, append the new directories' rows."""
 
     def extend(rows: pd.DataFrame, snaps: tuple, dropped: tuple):
         rows = rows[~rows["segment_id"].isin(dropped)]
         if not snaps:
             return rows.reset_index(drop=True), 0
-        at = R.read_arrow(spark, cat, table, prep, snaps, dropped)
+        at = cat.read_arrow(table, where=where, tables=tables, appends=snaps)
         return pd.concat([rows, at.to_pandas()], ignore_index=True), at.nbytes
 
     return extend
@@ -1013,13 +1012,17 @@ class _Ivf(NamedTuple):
     lists: pd.DataFrame | None
 
 
-def _ivf_entry(spark: SparkSession, cat: IndexCatalog, lists: bool) -> _Ivf:
-    """The ``ann_ivf`` entry, with its list rows when ``lists`` is asked
-    for or the catalog is resident (so a resident catalog reads it once);
-    else only the centroid rows (pushed ``list_id = -1`` scan)."""
-    full = lists or _resident_fits(cat)
-    prep = None if full else (lambda df: df.filter(F.col("list_id") == -1))
-    rows_of = _frame_extender(spark, cat, "ann_ivf", prep)
+def _ivf_entry(cat: IndexCatalog, tables: dict | None = None) -> _Ivf:
+    """The ``ann_ivf`` entry, with its list rows when the catalog is
+    resident (``tables``: the manifest's tables :func:`_resident_fits`
+    returned; without them, it is asked), so a resident catalog reads it
+    once; else only the centroid rows (a pruned ``list_id = -1`` read)."""
+    if tables is None:
+        tables = _resident_fits(cat)
+    full = tables is not None
+    tables = tables or cat.read_manifest()["tables"]
+    where = None if full else pc.field("list_id") == -1
+    rows_of = _frame_extender(cat, "ann_ivf", tables, where)
 
     def entry(pdf: pd.DataFrame) -> _Ivf:
         c = pdf["list_id"].to_numpy() == -1
@@ -1027,7 +1030,7 @@ def _ivf_entry(spark: SparkSession, cat: IndexCatalog, lists: bool) -> _Ivf:
         return _Ivf(crows, _centroids(crows), pdf[~c].reset_index(drop=True) if full else None)
 
     def fill():
-        at = R.read_arrow(spark, cat, "ann_ivf", prep)
+        at = cat.read_arrow("ann_ivf", where=where, tables=tables)
         return entry(at.to_pandas()), at.nbytes
 
     def extend(v: _Ivf, snaps: tuple, dropped: tuple):
@@ -1035,39 +1038,36 @@ def _ivf_entry(spark: SparkSession, cat: IndexCatalog, lists: bool) -> _Ivf:
         pdf, nbytes = rows_of(old, snaps, dropped)
         return entry(pdf), nbytes
 
-    return R.pack(cat).get("ann_ivf", R.entry_key(cat, "ann_ivf"), fill,
+    return R.pack(cat).get("ann_ivf", R.entry_key(cat, "ann_ivf", tables), fill,
                            lambda v: v.lists is not None or not full, extend)
 
 
-def _resident_rows(spark: SparkSession, cat: IndexCatalog, table: str) -> pd.DataFrame:
-    """Every row of ``table`` (``ann_ivf``: its list rows) from the pack."""
+def _resident_rows(cat: IndexCatalog, table: str, tables: dict) -> pd.DataFrame:
+    """Every row of ``table`` (``ann_ivf``: its list rows) in the manifest
+    ``tables``, from the pack."""
     if table == "ann_ivf":
-        return _ivf_entry(spark, cat, lists=True).lists
+        return _ivf_entry(cat, tables).lists
 
     def fill():
-        at = R.read_arrow(spark, cat, table)
+        at = cat.read_arrow(table, tables=tables)
         return at.to_pandas(), at.nbytes
 
-    return R.pack(cat).get(table, R.entry_key(cat, table), fill,
-                           extend=_frame_extender(spark, cat, table))
+    return R.pack(cat).get(table, R.entry_key(cat, table, tables), fill,
+                           extend=_frame_extender(cat, table, tables))
 
 
-def _tombstone_array(spark: SparkSession, cat: IndexCatalog) -> np.ndarray | None:
+def _tombstone_array(cat: IndexCatalog, tables: dict) -> np.ndarray | None:
     """Sorted tombstoned ext_ids (None when empty), kept in the pack — the
     CLOSURE tier, used only when the registered count is at most
     ``FILTER_BROADCAST_MAX`` (``_resolve_tombstones`` routes bigger sets
     through per-segment blobs; this array never grows with them)."""
-    if not cat.exists("ann_tombstones"):
-        return None
-    if cat.table_lineage("ann_tombstones").get("n") == 0:
-        return None
 
     def fill():
-        arr = np.sort(R.read_arrow(spark, cat, "ann_tombstones")
-                      .column("ext_id").to_numpy().astype(np.int64))
+        at = cat.read_arrow("ann_tombstones", ["ext_id"], tables=tables)
+        arr = np.sort(at.column(0).to_numpy().astype(np.int64))
         return (arr if arr.size else None), arr.nbytes
 
-    return R.pack(cat).get("ann_tombstones", R.entry_key(cat, "ann_tombstones"), fill)
+    return R.pack(cat).get("ann_tombstones", R.entry_key(cat, "ann_tombstones", tables), fill)
 
 
 def _resolve_tombstones(
@@ -1078,16 +1078,16 @@ def _resolve_tombstones(
     The tier switch reads the count from the manifest lineage (no job):
     at most ``FILTER_BROADCAST_MAX`` registered deletes keep the memoized
     closure array; above it the set stays a DataFrame end-to-end."""
-    if not cat.exists("ann_tombstones"):
-        return None, None
-    n = cat.table_lineage("ann_tombstones").get("n")
-    if n == 0:
+    tables = cat.read_manifest()["tables"]
+    ent = tables.get("ann_tombstones") or {}
+    n = (ent.get("lineage") or {}).get("n")
+    if ent.get("snapshot") is None or n == 0:
         return None, None
     if n is not None and n > FILTER_BROADCAST_MAX:
         return None, _filter_blobs(
             spark, cat, cat.read(spark, "ann_tombstones"), "tomb"
         )
-    return _tombstone_array(spark, cat), None
+    return _tombstone_array(cat, tables), None
 
 
 def _scores(x: np.ndarray, q: np.ndarray, metric: str) -> np.ndarray:
@@ -1391,14 +1391,15 @@ class _Resident(_Plan):
     """The resident tier: the plan pieces over the pack's pandas frames,
     run in the driver through the same kernel bodies the Spark tier ships
     (``_scan_exact``, ``_segment_kernel``), so scores are bit-identical; the
-    top-k is one ``LocalRelation``. Raises :class:`_SparkTier` for a probe
-    that must leave the driver."""
+    top-k is one ``LocalRelation``. ``tables``: the manifest's tables
+    every pack entry is read and keyed from. Raises :class:`_SparkTier`
+    for a probe that must leave the driver."""
 
-    def __init__(self, spark, cat, ctx: _Query):
-        self.spark, self.cat, self.ctx = spark, cat, ctx
+    def __init__(self, spark, cat, ctx: _Query, tables: dict):
+        self.spark, self.cat, self.ctx, self.tables = spark, cat, ctx, tables
 
     def table(self, name: str, *cols: str) -> pd.DataFrame:
-        rows = _resident_rows(self.spark, self.cat, name)
+        rows = _resident_rows(self.cat, name, self.tables)
         return rows[list(cols)] if cols else rows
 
     def aux(self, rows: pd.DataFrame) -> pd.DataFrame:
@@ -1435,7 +1436,7 @@ class _Resident(_Plan):
         if _probe_distributed(self.cat, probe_mode):
             raise _SparkTier("probe")
         rows = self.table(table)
-        pack = _centroid_pack(self.spark, self.cat)
+        pack = _centroid_pack(self.cat, self.tables)
         if pack is None:
             return None
         want = pd.MultiIndex.from_arrays(_probe_pairs(pack, self.ctx.qn, nprobe))
@@ -1509,9 +1510,9 @@ def _search(
     tomb, tblobs = _resolve_tombstones(spark, cat)
     budget = None if visited_limit is None else max(1, int(visited_limit))
     ctx = _Query(q, _nav_query(q, metric), metric, k, allowed, tomb, budget)
-    if fblobs is None and tblobs is None and _resident_fits(cat):
+    if fblobs is None and tblobs is None and (tables := _resident_fits(cat)) is not None:
         try:
-            return plan(_Resident(spark, cat, ctx))
+            return plan(_Resident(spark, cat, ctx, tables))
         except _SparkTier:
             pass
     return plan(_Search(spark, cat, ctx, fblobs, tblobs))
@@ -1615,7 +1616,7 @@ def _probe_select(
             .mapInPandas(probe, "segment_id long, list_id int")
         )
         return scan_df.join(pairs_df, ["segment_id", "list_id"], "left_semi")
-    pack = _centroid_pack(spark, cat)
+    pack = _centroid_pack(cat)
     if pack is None:
         return None
     segs_keep, lists_keep = _probe_pairs(pack, qn, nprobe)
@@ -1650,12 +1651,13 @@ def _centroids(rows: pd.DataFrame) -> dict | None:
     }
 
 
-def _centroid_pack(spark: SparkSession, cat: IndexCatalog) -> dict | None:
+def _centroid_pack(cat: IndexCatalog, tables: dict | None = None) -> dict | None:
     """Every segment's centroids (see :func:`_centroids`) — a view of the
-    pack's ``ann_ivf`` entry, the ONE driver-side centroid state, shared
-    by the single-query probe and :func:`knn_join_ivf`'s driver tier
-    (budget: one pack ∝ total centroids)."""
-    return _ivf_entry(spark, cat, lists=False).cents
+    pack's ``ann_ivf`` entry (see :func:`_ivf_entry`), the ONE driver-side
+    centroid state, shared by the single-query probe and
+    :func:`knn_join_ivf`'s driver tier (budget: one pack ∝ total
+    centroids)."""
+    return _ivf_entry(cat, tables).cents
 
 
 def _validate_metric(cat: IndexCatalog, metric: str) -> None:
@@ -2064,10 +2066,10 @@ def merge_ann(
         delete_ann(spark, cat, tombstone_ext_ids, cfg, auto_merge=False)
     tomb, tblobs = _resolve_tombstones(spark, cat)
 
-    # segment-level metadata (∝ segment count, same scale budget as the
-    # text merge's segment_stats collect — never the blobs)
-    meta = cat.read(spark, "ann_flat").select("segment_id", "n_vecs").collect()
-    nvecs_of = {int(r["segment_id"]): int(r["n_vecs"]) for r in meta}
+    # segment-level metadata, read by pyarrow (∝ segment count, as the
+    # text merge's segment_stats read — never the blobs)
+    meta = cat.read_arrow("ann_flat", ["segment_id", "n_vecs"]).to_pydict()
+    nvecs_of = dict(zip(meta["segment_id"], meta["n_vecs"]))
     if groups is None:
         groups = [sorted(nvecs_of)]
     groups = [
@@ -2294,14 +2296,15 @@ def _join_frame(spark: SparkSession, *cols) -> DataFrame:
     )
 
 
-def _join_resident(spark: SparkSession, cat: IndexCatalog, head, k: int,
+def _join_resident(spark: SparkSession, cat: IndexCatalog, tables: dict, head, k: int,
                    nprobe: int | None, metric: str, bf_segs: list[int],
                    allowed: np.ndarray | None, tomb: np.ndarray | None) -> DataFrame:
     """:func:`knn_join_ivf`'s resident tier over the query rows ``head``
-    (an Arrow table of q_id, q_vec): the Spark tier's probe and per-list
-    kernels run over the pack in the driver, each probed list scored once
-    for the bundle of queries probing it (in query-row order), every B2
-    segment for all queries."""
+    (an Arrow table of q_id, q_vec) and the pack entries of the manifest
+    ``tables``: the Spark tier's probe and per-list kernels run over the
+    pack in the driver, each probed list scored once for the bundle of
+    queries probing it (in query-row order), every B2 segment for all
+    queries."""
     if not head.num_rows:
         return _join_frame(spark)
     vecs = head.column("q_vec").combine_chunks()
@@ -2317,9 +2320,9 @@ def _join_resident(spark: SparkSession, cat: IndexCatalog, head, k: int,
         parts.append(_bundle_topk(x, ids, qids[who], qb[who], metric, k,
                                   _accept_mask(ids, allowed, tomb)))
 
-    pack = _centroid_pack(spark, cat)
+    pack = _centroid_pack(cat, tables)
     if pack is not None:
-        lists = _ivf_entry(spark, cat, lists=True).lists
+        lists = _ivf_entry(cat, tables).lists
         at = dict(zip(zip(lists["segment_id"].tolist(), lists["list_id"].tolist()),
                       lists[["vectors", "ext_ids", "n"]].itertuples(index=False)))
         for lo in np.flatnonzero(pack["lst_row"] == 0):
@@ -2330,7 +2333,7 @@ def _join_resident(spark: SparkSession, cat: IndexCatalog, head, k: int,
                 if (seg, int(lst)) in at:
                     score(*at[(seg, int(lst))], np.flatnonzero((probe == lst).any(1)))
     if bf_segs:
-        flat = _resident_rows(spark, cat, "ann_flat")
+        flat = _resident_rows(cat, "ann_flat", tables)
         for r in flat[flat["segment_id"].isin(bf_segs)].itertuples(index=False):
             score(r.vectors, r.ext_ids, int(r.n_vecs), np.arange(qids.size))
     return _join_frame(spark, *_rank_joined(*(np.concatenate(c) for c in zip(*parts)), k))
@@ -2410,7 +2413,6 @@ def knn_join_ivf(
     if k <= 0:
         return _join_frame(spark)
     metric = _index_metric(cat)
-    ivf = cat.read(spark, "ann_ivf") if cat.exists("ann_ivf") else None
     shuffle = probe_mode == "shuffle" or (probe_mode == "auto" and _many_segments(cat))
     distributed = probe_mode == "distributed" or shuffle
     # B2 degradation ladder: segments too small for an IVF index are
@@ -2423,10 +2425,14 @@ def knn_join_ivf(
     q = queries.select(F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"))
     # the resident tier: the conditions of _search's, plus a bounded query
     # side that a limit reads without running its plan twice
-    if not distributed and fblobs is None and tblobs is None and _resident_fits(cat):
+    if (not distributed and fblobs is None and tblobs is None
+            and (tables := _resident_fits(cat)) is not None):
         head = small_arrow(q, R.RESIDENT_JOIN_MAX_QUERIES)
         if head is not None:
-            return _join_resident(spark, cat, head, k, nprobe, metric, bf_segs, allowed, tomb)
+            return _join_resident(spark, cat, tables, head, k, nprobe, metric, bf_segs,
+                                  allowed, tomb)
+    ivf = cat.read(spark, "ann_ivf") if cat.exists("ann_ivf") else None
+
 
     def _pairs(seg: int, qi_ids: np.ndarray, qb: np.ndarray, probe=None) -> pd.DataFrame:
         """Probe pairs of one segment: the ranked lists per query, or the
@@ -2497,7 +2503,7 @@ def knn_join_ivf(
                 _meet_queries(bf_df).mapInPandas(bf_dist, PAIR_SCHEMA)
             )
     else:
-        pack = _centroid_pack(spark, cat) if ivf is not None else None
+        pack = _centroid_pack(cat) if ivf is not None else None
         if pack is None and not bf_segs:
             return _join_frame(spark)
         # per-segment slices of the memoized centroid pack ride the task

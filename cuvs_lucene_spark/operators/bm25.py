@@ -142,21 +142,21 @@ def _resolve_allowed(allowed_ext: np.ndarray, ext_ids: np.ndarray) -> np.ndarray
 
 
 def _norms_broadcast(spark: SparkSession, cat: IndexCatalog):
-    """Packed per-segment norms (dls + ext_ids blobs) shipped ONCE per
-    executor as a Spark broadcast, memoized on the catalog keyed by the
-    manifest commit time. Lets the no-deletes hot query path skip the
-    second segdata scan and the cogroup shuffle entirely — a repeat query
-    is a single Spark job. Gated by NORMS_BROADCAST_MAX_DOCS (12 bytes per
-    doc); larger corpora stay on the cogroup path."""
+    """Packed per-segment norms (dls + ext_ids blobs, segdata's ``norms``
+    rows read by pyarrow) shipped ONCE per executor as a Spark broadcast,
+    memoized on the catalog keyed by the manifest commit time. Lets the
+    no-deletes hot query path skip the second segdata scan and the
+    cogroup shuffle entirely — a repeat query is a single Spark job.
+    Gated by NORMS_BROADCAST_MAX_DOCS (12 bytes per doc); larger corpora
+    stay on the cogroup path."""
     m = cat.read_manifest()
     ver = stats_version(m)
     memo = getattr(cat, "_norms_memo", None)
     if memo is not None and memo["ver"] == ver:
         return memo["bc"]
-    rows = cat.read(spark, "norms").collect()
-    blobs = {
-        int(r["segment_id"]): (bytes(r["dls"]), bytes(r["ext_ids"])) for r in rows
-    }
+    norms = cat.read_arrow("segdata", ["segment_id", "doc_deltas", "tfs"],
+                           where=pc.field("kind") == "norms", tables=m["tables"]).to_pydict()
+    blobs = {s: (dls, ext) for s, dls, ext in zip(*norms.values())}
     bc = spark.sparkContext.broadcast(blobs)
     if memo is not None:  # drop the superseded snapshot's broadcast blocks
         try:
@@ -646,19 +646,20 @@ def _text_fits(cat: IndexCatalog) -> dict | None:
     return tables
 
 
-def _leaf_entry(spark: SparkSession, cat: IndexCatalog, table: str, tables: dict, build,
-                prep=None, wrap=dict):
+def _leaf_entry(cat: IndexCatalog, table: str, tables: dict, build,
+                columns=None, where=None, wrap=dict):
     """The pack entry of ``table``: ``wrap({segment_id: leaf})``, the
-    leaves ``build(arrow table)`` makes of one ``toArrow()`` read (after
-    ``prep``) at first use, extended by the directories a commit appends
-    (the dropped segments filtered out in the driver). A read that fails
-    (say, one over ``spark.driver.maxResultSize`` or the driver's memory)
-    leaves None, so the catalog takes the Spark tier until the table
-    next changes."""
+    leaves ``build(arrow table)`` makes of its rows (``columns``,
+    ``where``) in the manifest ``tables``, read by
+    ``IndexCatalog.read_arrow`` at first use and extended by the
+    directories a commit appends (the dropped segments filtered out in
+    the driver). A read that fails (say, one over the driver's memory)
+    leaves None, so the catalog takes the Spark tier until the table next
+    changes."""
 
     def read():
         try:
-            at = R.read_arrow(spark, cat, table, prep)
+            at = cat.read_arrow(table, columns, where, tables)
             return wrap(build(at)), at.nbytes
         except Exception:
             return None, 0
@@ -670,7 +671,7 @@ def _leaf_entry(spark: SparkSession, cat: IndexCatalog, table: str, tables: dict
         if not snaps:
             return wrap(leaves), 0
         try:
-            at = R.read_arrow(spark, cat, table, prep, snaps, dropped)
+            at = cat.read_arrow(table, columns, where, tables, appends=snaps)
             new = build(at)
         except Exception:
             return None
@@ -681,38 +682,38 @@ def _leaf_entry(spark: SparkSession, cat: IndexCatalog, table: str, tables: dict
     return R.pack(cat).get(table, R.entry_key(cat, table, tables), read, extend=extend)
 
 
-def _text_pack(spark: SparkSession, cat: IndexCatalog) -> _Text | None:
+def _text_pack(cat: IndexCatalog) -> _Text | None:
     """The catalog's resident text pack, segdata's ``post`` and ``norms``
     rows read on first use (see :func:`_leaf_entry`); None when it does
     not serve (see :func:`_text_fits`) or could not be read."""
     tables = _text_fits(cat)
     if tables is None:
         return None
-
-    def prep(df: DataFrame) -> DataFrame:
-        return df.filter(F.col("kind").isin("post", "norms")).select(*_TEXT_COLS)
-
-    return _leaf_entry(spark, cat, "segdata", tables, _leaves, prep, _Text)
+    return _leaf_entry(cat, "segdata", tables, _leaves, list(_TEXT_COLS),
+                       pc.field("kind").isin(["post", "norms"]), _Text)
 
 
-def _resident_text(spark: SparkSession, cat: IndexCatalog):
+def _resident_text(cat: IndexCatalog):
     """(text pack, sorted tombstoned ext_ids or None) when a query can be
     served in the driver; None when it takes the Spark tier (no pack, or
     more than ``FILTER_BROADCAST_MAX`` tombstones)."""
-    text = _text_pack(spark, cat)
-    if text is None or not cat.exists("tombstones"):
-        return None if text is None else (text, None)
-    n = cat.table_lineage("tombstones").get("n")
-    if n == 0:
+    text = _text_pack(cat)
+    if text is None:
+        return None
+    tables = cat.read_manifest()["tables"]
+    ent = tables.get("tombstones") or {}
+    n = (ent.get("lineage") or {}).get("n")
+    if ent.get("snapshot") is None or n == 0:
         return text, None
     if n is not None and n > FILTER_BROADCAST_MAX:
         return None
 
     def fill():
-        arr = np.sort(R.read_arrow(spark, cat, "tombstones").column("ext_id").to_numpy().astype(np.int64))
+        at = cat.read_arrow("tombstones", ["ext_id"], tables=tables)
+        arr = np.sort(at.column(0).to_numpy().astype(np.int64))
         return arr, arr.nbytes
 
-    tomb = R.pack(cat).get("tombstones", R.entry_key(cat, "tombstones"), fill)
+    tomb = R.pack(cat).get("tombstones", R.entry_key(cat, "tombstones", tables), fill)
     if tomb.size > FILTER_BROADCAST_MAX:
         return None
     return text, (tomb if tomb.size else None)
@@ -846,7 +847,7 @@ def _scored(
             aux_filter = filter_ext_ids
         else:  # a null id matches no doc
             allowed_ext = np.sort(head.drop_null().to_numpy().astype(np.int64))
-    resident = None if aux_filter is not None else _resident_text(spark, cat)
+    resident = None if aux_filter is not None else _resident_text(cat)
     if resident is not None:
         return _resident_scored(spark, *resident, specs, terms, cfg, allowed_ext,
                                 visited_limit, batch, sort)
@@ -948,12 +949,12 @@ def _live_stats_and_df(
     While the resident pack serves the catalog, the statistics come from
     it with no Spark job (:func:`_pack_stats`, the same integers).
     """
-    resident = _resident_text(spark, cat)
+    resident = _resident_text(cat)
     if resident is not None:
         return _pack_stats(*resident, terms)[3:]
     has_tomb = _has_tombstones(spark, cat)
     if not has_tomb:
-        n, avgdl = corpus_stats(spark, cat)
+        n, avgdl = corpus_stats(cat)
         # fast path: the build-time global dictionary (one pruned scan of a
         # term-sorted compact table) when it is still fresh; otherwise
         # aggregate the per-segment term rows. Per-term dfs are memoized on

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
@@ -43,6 +43,7 @@ from cuvs_lucene_spark.operators.segments import (
     SEGDATA_VIEWS,
     build_norms_pdf,
     grouped_dense_rank,
+    segment_stats,
     to_segdata,
 )
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
@@ -210,9 +211,7 @@ def merge_segments(
     """
     cfg = cfg or IndexConfig()
     sd_ent = cat.read_manifest()["tables"]["segdata"]
-    stats_rows = (
-        cat.read(spark, "segment_stats").select("segment_id", "n_docs").collect()
-    )
+    stats_rows = segment_stats(cat)
     seg_ids = sorted(int(r["segment_id"]) for r in stats_rows)
     ndocs_of = {int(r["segment_id"]): int(r["n_docs"]) for r in stats_rows}
     if groups is None:
@@ -372,7 +371,7 @@ def merge_segments(
 
     # refresh the manifest corpus-stats cache at the merge commit, so the
     # next query reads N and avgdl with no stats job
-    srows = cat.read(spark, "segment_stats").collect()
+    srows = segment_stats(cat)
     n_total = sum(int(r["n_docs"]) for r in srows)
     cat.mark_stage(
         "finalize",
@@ -494,7 +493,7 @@ def pick_merge_groups(
         if groups:
             merge_segments(spark, cat, cfg, groups=groups)
 
-    Inputs are segment-level METADATA only (one segment_stats collect +
+    Inputs are segment-level METADATA only (one segment_stats read +
     one per-segment tombstone count aggregate — ∝ segment count, never
     doc blobs); the decision core is :func:`tier_groups`.
     """
@@ -502,7 +501,7 @@ def pick_merge_groups(
     cap = max_segment_docs or cfg.rows_per_segment
     rows = [
         (int(r["n_docs"]), int(r["segment_id"]))
-        for r in cat.read(spark, "segment_stats").collect()
+        for r in segment_stats(cat)
     ]
     dfrac: dict[int, float] = {}
     if cat.exists("tombstones") and cat.table_lineage("tombstones").get("n"):
@@ -535,7 +534,7 @@ def force_merge(spark: SparkSession, cat: IndexCatalog, cfg: IndexConfig | None 
     cfg = cfg or IndexConfig()
     merged_any = False
     while True:
-        n = cat.read(spark, "segment_stats").count()
+        n = len(segment_stats(cat))
         if n <= 1:
             break
         merge_segments(spark, cat, cfg)

@@ -101,7 +101,7 @@ def expand_terms(
     expands over its sorted term array — a ``searchsorted`` range — with
     no Spark job. A regex (wildcard, regexp) takes the dictionary scan,
     whose ``rlike`` keeps Java's regex dialect."""
-    text = _text_pack(spark, cat) if regex is None else None
+    text = _text_pack(cat) if regex is None else None
     if text is not None:
         a, z = _prefix_range(text.vocab(), prefix)
         out = text.vocab()[a:min(z, a + max_expansions + 1)].tolist()
@@ -270,7 +270,7 @@ def fuzzy_expand(
     term = str(term)
     pl = min(max(0, prefix_length), len(term))
     pfx, suffix = term[:pl], term[pl:]
-    text = _text_pack(spark, cat)
+    text = _text_pack(cat)
     if text is not None:
         vocab = text.vocab()
         a, z = _prefix_range(vocab, pfx)

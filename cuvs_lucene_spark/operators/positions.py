@@ -30,9 +30,10 @@ GPUKnnFloatVectorQuery.java:21-58). Spark-first equivalent:
   - resident: as Lucene runs ``PhraseQuery`` per leaf inside the serving
     process, the catalog's pack (``resident.Pack``) holds the sidecar's
     rows as one ``positions`` entry beside segdata's leaves — per
-    segment, byte-offset columns with a sorted term index, read by one
-    ``toArrow()`` and extended by appended directories. Each live leaf
-    runs :func:`_phrase_segment` in the driver, tombstoned docs drop,
+    segment, byte-offset columns with a sorted term index, read by
+    ``IndexCatalog.read_arrow`` (no Spark job) and extended by appended
+    directories. Each live leaf runs :func:`_phrase_segment` in the
+    driver, tombstoned docs drop,
     ``dl`` comes from the leaf's norms, and the top-k is one
     ``LocalRelation``: a warm phrase query runs no Spark job. It serves
     while the resident text tier does and segdata's and the sidecar's
@@ -518,26 +519,26 @@ def _pos_leaves(at: pa.Table) -> dict[int, _PosLeaf]:
             for s, (a, z) in _segment_runs(seg, np.unique(seg)).items()}
 
 
-def _resident_positions(spark: SparkSession, cat):
+def _resident_positions(cat):
     """(text pack, tombstones, positions entry) when a phrase query is
     served in the driver: the resident text tier serves
     (:func:`bm25._resident_text`), and segdata's and the sidecar's
     committed bytes together fit ``TEXT_RESIDENT_MAX_BYTES`` — the driver
     then never holds more than was measured. The entry is
     {segment_id: :class:`_PosLeaf`}, read and extended as segdata's
-    (:func:`bm25._leaf_entry`: one ``toArrow()``, then the directories an
-    epoch or ``refresh_positions`` appends). None otherwise — no sidecar
-    included, the Spark tier raising its error — and after a read that
-    failed, until the sidecar next changes."""
-    resident = _resident_text(spark, cat)
-    if resident is None or not cat.exists("positions"):
-        return None
+    (:func:`bm25._leaf_entry`: one ``IndexCatalog.read_arrow``, then the
+    directories an epoch or ``refresh_positions`` appends). None
+    otherwise — no sidecar included, the Spark tier raising its error —
+    and after a read that failed, until the sidecar next changes."""
+    resident = _resident_text(cat)
     tables = cat.read_manifest()["tables"]
+    if resident is None or (tables.get("positions") or {}).get("snapshot") is None:
+        return None
     if (R.disk_bytes(cat, "segdata", tables) + R.disk_bytes(cat, "positions", tables)
             > R.TEXT_RESIDENT_MAX_BYTES):
         R.pack(cat).drop(lambda name, v: name == "positions")
         return None
-    pos = _leaf_entry(spark, cat, "positions", tables, _pos_leaves)
+    pos = _leaf_entry(cat, "positions", tables, _pos_leaves)
     return None if pos is None else (*resident, pos)
 
 
@@ -616,7 +617,7 @@ def phrase_topk(
     if k <= 0 or not slots:
         return local_frame(spark, "ext_id long, score double")
     uniq = list(dict.fromkeys(t for s in slots for t in s))
-    resident = _resident_positions(spark, cat)
+    resident = _resident_positions(cat)
     if resident is None:
         postings = _query_postings(spark, cat, uniq)
         n, avgdl, df_by_term = _live_stats_and_df(spark, cat, uniq, cfg, postings, None)

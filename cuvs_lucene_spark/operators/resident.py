@@ -13,12 +13,14 @@ pack per catalog. Its entries:
   rows) and the ``("bytes", table)`` committed-size memos.
 
 Each entry is
-read into the driver by one ``toArrow()`` at its first use and kept until
-its table's own manifest entry changes. When a commit only appended
-directories to the table or dropped segments from it (an epoch, a merge),
-the entry is extended: only the new directories are read, and the dropped
-segments are filtered out of what the pack holds. Any other change (a
-rewrite, a compaction, a replayed epoch) reads the table again.
+read into the driver by ``IndexCatalog.read_arrow`` (pyarrow, no Spark
+job) at its first use, from the directories of the manifest entry it is
+keyed by (:func:`entry_key`), and kept until that entry changes. When a
+commit only appended directories to the table or dropped segments from it
+(an epoch, a merge), the entry is extended: only the new directories are
+read, and the dropped segments are filtered out of what the pack holds.
+Any other change (a rewrite, a compaction, a replayed epoch) reads the
+table again.
 
 A resident tier serves a catalog while its tables' committed bytes fit
 its budget (ANN: ``RESIDENT_MAX_BYTES``; text: ``TEXT_RESIDENT_MAX_BYTES``
@@ -28,11 +30,7 @@ it, the Spark tier runs.
 
 from __future__ import annotations
 
-import os
 import threading
-
-import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
 
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
@@ -59,8 +57,8 @@ TEXT_RESIDENT_MAX_BYTES = 173 << 20  # BM25's resident tier serves while
 # see CHANGES.md): 400k docs, 181.5 MB committed, read into a 339.8 MB pack
 # (about 1.85x) with a 2.28 GB driver peak RSS; the resident tier was faster
 # for every query kind there and at 100k docs. Above it the pack's size, its
-# fill (a toArrow() under spark.driver.maxResultSize) and the driver's memory
-# are unmeasured, so the budget stops at that size, rounded down.
+# fill and the driver's memory are unmeasured, so the budget stops at that
+# size, rounded down.
 
 
 def _grown(old: tuple, new: tuple) -> tuple | None:
@@ -138,31 +136,9 @@ def entry_key(cat: IndexCatalog, table: str, tables: dict | None = None) -> tupl
             tuple(e.get("dropped_segments", ())))
 
 
-def read_arrow(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    table: str,
-    prep=None,
-    snaps: tuple | None = None,
-    dropped: tuple = (),
-) -> pa.Table:
-    """The committed rows of ``table`` into the driver in one
-    ``toArrow()``; with ``snaps``, only those append directories' rows,
-    less the ``dropped`` segments. ``prep(df)`` filters / projects before
-    the read."""
-    if snaps is None:
-        df = cat.read(spark, table)
-    else:
-        df: DataFrame = spark.read.parquet(*[os.path.join(cat.root, table, s) for s in snaps])
-        if dropped:
-            df = df.filter(~df["segment_id"].isin([int(s) for s in dropped]))
-    return (df if prep is None else prep(df)).toArrow()
-
-
 def disk_bytes(cat: IndexCatalog, table: str, tables: dict | None = None) -> int:
     """Committed bytes of ``table``, memoized per entry (no Spark job)."""
     tables = tables or cat.read_manifest()["tables"]
-
     return pack(cat).get(
         ("bytes", table), entry_key(cat, table, tables), lambda: (cat.committed_bytes(table), 0)
     )

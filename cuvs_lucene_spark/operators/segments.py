@@ -614,12 +614,7 @@ def build_index(
     # -- stage: corpus stats + per-partition lineage (tiny scan of the
     #    stats rows; cached in the manifest so queries pay zero jobs)
     if not (resume and cat.stage_done("finalize")):
-        if segdata is not None:
-            rows = (segdata.filter(pc.equal(segdata.column("kind"), "stats"))
-                    .select(["segment_id", "n", "sum_tf"])
-                    .rename_columns(["segment_id", "n_docs", "n_tokens"]).to_pylist())
-        else:
-            rows = cat.read(spark, "segment_stats").collect()
+        rows = segment_stats(cat, segdata)
         n = sum(int(r["n_docs"]) for r in rows)
         toks = sum(int(r["n_tokens"]) for r in rows)
         lineage = {
@@ -768,21 +763,29 @@ def index_term_buckets(cat: IndexCatalog) -> int:
     return int(cat.read_manifest()["config"]["term_buckets"])
 
 
-def corpus_stats(spark: SparkSession, cat: IndexCatalog) -> tuple[int, float]:
+def segment_stats(cat: IndexCatalog, segdata: pa.Table | None = None) -> list[dict]:
+    """The ``segment_stats`` view's rows as {segment_id, n_docs, n_tokens}
+    dicts: segdata's ``stats`` rows, read by pyarrow (no Spark job), or
+    taken from the ``segdata`` table in hand."""
+    stats = pc.field("kind") == "stats"
+    cols = ["segment_id", "n", "sum_tf"]
+    at = (cat.read_arrow("segdata", cols, where=stats) if segdata is None
+          else segdata.filter(stats).select(cols))
+    return at.rename_columns(["segment_id", "n_docs", "n_tokens"]).to_pylist()
+
+
+def corpus_stats(cat: IndexCatalog) -> tuple[int, float]:
     """(N, avgdl) over all indexed docs. Served from the manifest cache
     when the index is unchanged since finalize (zero Spark jobs per
-    query); recomputed from segment_stats otherwise (e.g. post-merge)."""
+    query); summed from :func:`segment_stats` otherwise (e.g.
+    post-merge)."""
     m = cat.read_manifest()
     fin = m["stages"].get("finalize", {})
     cached = fin.get("corpus_stats")
     if cached and fin.get("at", 0) >= stats_version(m):
         n = cached["n_docs"]
         return n, (cached["n_tokens"] / n if n else 0.0)
-    row = (
-        cat.read(spark, "segment_stats")
-        .agg(F.sum("n_docs").alias("n"), F.sum("n_tokens").alias("t"))
-        .collect()[0]
-    )
-    n = int(row["n"] or 0)
-    t = int(row["t"] or 0)
+    rows = segment_stats(cat)
+    n = sum(r["n_docs"] for r in rows)
+    t = sum(r["n_tokens"] for r in rows)
     return n, (t / n if n else 0.0)

@@ -396,25 +396,30 @@ class IndexCatalog:
                 lambda: tx.write_arrow(at, table, sort_by), tag, extra_entry,
             )
 
-    def read_arrow(
-        self, table: str, columns: list[str] | None = None, where: pc.Expression | None = None
-    ) -> pa.Table:
+    def read_arrow(self, table: str, columns: list[str] | None = None,
+                   where: pc.Expression | None = None, tables: dict | None = None,
+                   appends: tuple | None = None) -> pa.Table:
         """The committed rows of the stored table ``table`` read by
         ``pyarrow.dataset`` over its live directories — no Spark job — less
         its dropped segments. ``where`` filters (parquet row-group
         statistics prune on it: segdata's ``kind`` leads its sort, so
         ``pc.field("kind") == "doc"`` reads doc_map's rows only),
-        ``columns`` projects. Views are not resolved: callers name the
+        ``columns`` projects. ``tables`` is a manifest's ``tables`` the
+        caller already read: the rows are that manifest's, whatever commit
+        has swapped it since. ``appends`` reads only those append
+        directories of the entry. Views are not resolved: callers name the
         stored table and the kind a view filters on."""
-        ent = self.read_manifest()["tables"].get(table)
+        ent = (self.read_manifest()["tables"] if tables is None else tables).get(table)
         if ent is None or ent.get("snapshot") is None:
             raise FileNotFoundError(f"table {table!r} not committed in {self.root}")
         dropped = [int(s) for s in ent.get("dropped_segments") or ()]
         if dropped:
             keep = ~pc.field("segment_id").isin(dropped)
             where = keep if where is None else where & keep
+        dirs = (self._entry_dirs(table, ent) if appends is None
+                else [os.path.join(self.root, table, s) for s in appends])
         files = sorted(
-            os.path.join(d, f) for d in self._entry_dirs(table, ent) for f in os.listdir(d)
+            os.path.join(d, f) for d in dirs for f in os.listdir(d)
             if f.endswith(".parquet") and not f.startswith(("_", "."))
         )
         return ds.dataset(files, format="parquet").to_table(columns=columns, filter=where)

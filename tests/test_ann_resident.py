@@ -82,14 +82,14 @@ def merged(spark, deleted):
     A.merge_ann(spark, deleted, NOCOMPACT, groups=[[0, 1]])
     A.delete_ann(spark, deleted, {7, 152}, CFG, auto_merge=False)
     reads = []
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def counted(spark_, cat_, table, prep=None, snaps=None, dropped=()):
-        reads.append((table, snaps))
-        return real(spark_, cat_, table, prep, snaps, dropped)
+    def counted(self, table, *a, **k):
+        reads.append((table, k.get("appends")))
+        return real(self, table, *a, **k)
 
     with pytest.MonkeyPatch.context() as m:
-        m.setattr(R, "read_arrow", counted)
+        m.setattr(IndexCatalog, "read_arrow", counted)
         _run(spark, deleted, cases)
     return deleted, reads
 
@@ -170,14 +170,14 @@ def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypat
     cat = IndexCatalog(deleted.root)  # a fresh, empty pack
     reads: Counter = Counter()
     lock = threading.Lock()
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def counted(spark_, cat_, table, *a, **k):
+    def counted(self, table, *a, **k):
         with lock:
             reads[table] += 1
-        return real(spark_, cat_, table, *a, **k)
+        return real(self, table, *a, **k)
 
-    monkeypatch.setattr(R, "read_arrow", counted)
+    monkeypatch.setattr(IndexCatalog, "read_arrow", counted)
     modes = ["exact", "ivf", "sq", "bq", "pq", "ivfpq", "graph", "bq_rerank"]
     got: dict = {}
     errors: list = []
@@ -202,6 +202,39 @@ def test_concurrent_first_queries_fill_each_table_once(spark, deleted, monkeypat
     assert reads == Counter({t: 1 for t in (*A.PACK_TABLES, "ann_tombstones")})
     assert R.pack(cat).nbytes() > 0
     assert got == {m: _rows(MODES[m](spark, cat, None)) for m in modes}
+
+
+def test_fill_reads_the_manifest_its_key_came_from(spark, tmp_path, monkeypatch):
+    """An epoch that commits between a fill's key (its table's manifest
+    entry) and its read: the fill reads the directories of that entry, so
+    the next query extends the entry by the epoch once and answers as a
+    cold catalog does, with no vector held twice."""
+    from cuvs_lucene_spark.streaming.ingest import incremental_add_vectors
+
+    def frame(ids, rows):
+        return spark.createDataFrame([(int(i), X[r].tolist()) for i, r in zip(ids, rows)],
+                                     "vec_id long, embedding array<float>")
+
+    root = str(tmp_path / "race")
+    A.build_ann(spark, frame(range(N), range(N)), root, CFG, id_col="vec_id",
+                vector_col="embedding", rows_per_segment=150)
+    cat = IndexCatalog(root)
+    real, raced = R.Pack.get, []
+
+    def racing(self, name, key, *a, **k):
+        if name == "ann_flat" and not raced:  # the key is taken: an epoch commits
+            raced.append(key)
+            incremental_add_vectors(spark, IndexCatalog(root), frame([1005], [5]), CFG, 0,
+                                    id_col="vec_id", vector_col="embedding")
+        return real(self, name, key, *a, **k)
+
+    with monkeypatch.context() as m:
+        m.setattr(R.Pack, "get", racing)
+        _rows(MODES["exact"](spark, cat, None))
+    assert raced
+    got = _rows(MODES["exact"](spark, cat, None))
+    assert [r[0] for r in got].count(1005) == 1
+    assert got == _rows(MODES["exact"](spark, IndexCatalog(root), None))
 
 
 # q_id 1 twice (its candidates merge), vector 300 is the B2 segment's, 151
@@ -274,7 +307,7 @@ def cosine(spark, tmp_path_factory):
 
 def test_join_tiers_equal_cosine(spark, cosine, monkeypatch):
     cat, x = cosine
-    assert A._centroid_pack(spark, cat)["n_lists_row"].min() == 2
+    assert A._centroid_pack(cat)["n_lists_row"].min() == 2
     _joins_both_tiers(spark, cat, ["none", "set", "nprobe"], monkeypatch, x)
     assert _join(spark, cat, "nprobe", x) != _join(spark, cat, "none", x)
 

@@ -114,14 +114,14 @@ def _reads(spark, cat, fn) -> list:
     """The pack reads (table, appended directories or None) that ``fn``
     makes, and its result."""
     seen = []
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def counted(spark_, cat_, table, prep=None, snaps=None, dropped=()):
-        seen.append((table, snaps))
-        return real(spark_, cat_, table, prep, snaps, dropped)
+    def counted(self, table, *a, **k):
+        seen.append((table, k.get("appends")))
+        return real(self, table, *a, **k)
 
     with pytest.MonkeyPatch.context() as m:
-        m.setattr(R, "read_arrow", counted)
+        m.setattr(IndexCatalog, "read_arrow", counted)
         out = fn()
     return seen, out
 
@@ -218,7 +218,7 @@ def test_regex_expansion_takes_the_scan(spark, cat, monkeypatch):
 
 
 def test_failed_fill_takes_the_spark_tier(spark, cat, monkeypatch):
-    """A segdata read that fails (say, over ``spark.driver.maxResultSize``)
+    """A segdata read that fails (say, over the driver's memory)
     does not fail the query: the catalog answers on the Spark tier, with
     the resident tier's results, and is not read again until segdata
     changes."""
@@ -226,15 +226,15 @@ def test_failed_fill_takes_the_spark_tier(spark, cat, monkeypatch):
     kinds = ["or", "boolean", "batch"]
     want = {k: _rows(KINDS[k](spark, cat, None)) for k in kinds}
     tried = []
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def failing(spark_, cat_, table, *a, **kw):
-        if table == "segdata":
+    def failing(self, table, columns=None, *a, **kw):
+        if table == "segdata" and columns == list(B._TEXT_COLS):  # the pack's read
             tried.append(table)
-            raise RuntimeError("Total size of serialized results is bigger than spark.driver.maxResultSize")
-        return real(spark_, cat_, table, *a, **kw)
+            raise MemoryError("segdata does not fit the driver")
+        return real(self, table, columns, *a, **kw)
 
-    monkeypatch.setattr(R, "read_arrow", failing)
+    monkeypatch.setattr(IndexCatalog, "read_arrow", failing)
     got = {k: _rows(KINDS[k](spark, fresh, None)) for k in kinds}
     assert expand_terms(spark, fresh, prefix="sp") == expand_terms(spark, cat, prefix="sp")
     got["batch"], want["batch"] = sorted(got["batch"]), sorted(want["batch"])

@@ -109,7 +109,7 @@ def test_stored_field_fetch(spark, cat):
 
 
 def test_corpus_stats_match_oracle(spark, cat):
-    n, avgdl = corpus_stats(spark, cat)
+    n, avgdl = corpus_stats(cat)
     (exp_n, exp_avgdl) = _duck(
         "SELECT count(*), sum(len(regexp_extract_all(lower(text),'[a-z0-9_]+')))*1.0/count(*) FROM documents"
     )[0]

@@ -188,7 +188,7 @@ def test_driver_flush_runs_no_job_beyond_the_input_read(spark, tmp_path):
 def test_parquet_scan_over_the_bound_runs_no_head_read(spark, tmp_path, monkeypatch):
     """A bare parquet scan (under at most a projection) over the bound is
     sent to the Spark flush by its files' footer row counts, with no head
-    read: a build over it runs 6 jobs, not 7. A filtered scan still reads
+    read: a build over it runs 5 jobs, not 6. A filtered scan still reads
     its head."""
     scan = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     n = scan.count()
@@ -203,7 +203,7 @@ def test_parquet_scan_over_the_bound_runs_no_head_read(spark, tmp_path, monkeypa
     monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_DOCS", 0)
     jobs = _count_jobs(spark, "footer_build", lambda: S.build_index(
         spark, scan, str(tmp_path / "scan"), CFG, content_col="text", id_col="doc_id"))
-    assert jobs == 6
+    assert jobs == 5
 
 
 def test_crash_before_the_manifest_swap_leaves_nothing_visible(spark, tmp_path, monkeypatch):

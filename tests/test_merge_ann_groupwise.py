@@ -160,13 +160,14 @@ def test_full_merge_compacts_and_matches_rebuild(spark, cat, xdata):
     assert flt == [i for i in _exact_ids(xdata, q, N, dead=dead) if i % 2 == 0][:5]
 
 
-MERGE_ANN_JOBS = 13  # Spark jobs of a warm group-wise merge_ann
+MERGE_ANN_JOBS = 12  # Spark jobs of a warm group-wise merge_ann
 
 
 def test_warm_merge_ann_job_count(spark, cat):
     """A warm group-wise merge runs a pinned number of Spark jobs: the
     group key and each group's segment-id base reach the rows through
-    literal maps, not broadcast joins (one job per broadcast)."""
+    literal maps, not broadcast joins (one job per broadcast), and
+    ``ann_flat``'s segment sizes are read by pyarrow (no job)."""
     nc = IndexConfig(compact_dropped_fraction=0.99)
     merge_ann(spark, cat, nc, groups=[[0, 1]], rows_per_segment=RPS)
     sc = spark.sparkContext

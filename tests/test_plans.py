@@ -488,21 +488,25 @@ def _ann_calls(spark, ann_cat):
     }
 
 
-def _warm_job_counts(spark, calls: dict, tag: str) -> dict:
-    """Spark jobs of the second of two identical calls, counted under a
-    job group (memos and the pack filled by the first)."""
+def _job_count(spark, call, group: str) -> int:
+    """Spark jobs of one ``call().collect()``, counted under a job group."""
     sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        assert call().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _warm_job_counts(spark, calls: dict, tag: str) -> dict:
+    """Spark jobs of the second of two identical calls (memos and the pack
+    filled by the first)."""
     counts = {}
     for mode, call in calls.items():
         assert call().collect()
-        group = f"{tag}_{mode}"
-        sc.setJobGroup(group, group)
-        try:
-            call().collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        counts[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+        counts[mode] = _job_count(spark, call, f"{tag}_{mode}")
     return counts
 
 
@@ -718,16 +722,18 @@ def test_resident_query_py4j_round_trips(spark, cat, ann_cat):
 
 
 ANN_MANIFEST_READS = {  # IndexCatalog.read_manifest calls per warm resident query
-    "exact": 4, "ivf": 10, "ivf_set_filter": 10, "sq": 5, "bq": 5, "bq_rerank": 5,
-    "pq": 5, "ivfpq": 11, "graph": 5, "graph_auto_ef": 7,
+    "exact": 3, "ivf": 6, "ivf_set_filter": 6, "sq": 3, "bq": 3, "bq_rerank": 3,
+    "pq": 3, "ivfpq": 5, "graph": 3, "graph_auto_ef": 3,
 }
 
 
 def test_ann_resident_query_manifest_reads(spark, ann_cat, monkeypatch):
     """A warm resident ANN query reads the manifest a pinned number of
     times: no per-table consistency check re-reads it (every ANN write
-    commits its tables in one transaction). The parent of that change read
-    it 4 / 13 / 6 / 7 / 6 times for exact / ivf / sq / bq / pq."""
+    commits its tables in one transaction), and every pack entry is keyed
+    and read from the one manifest the tier check read. Before the pack's
+    entries took that manifest, exact / ivf / sq / ivfpq / graph_auto_ef
+    read it 4 / 10 / 5 / 11 / 7 times."""
     from cuvs_lucene_spark.sources.catalog import IndexCatalog
 
     calls = _ann_calls(spark, ann_cat)
@@ -746,6 +752,58 @@ def test_ann_resident_query_manifest_reads(spark, ann_cat, monkeypatch):
             calls[mode]().collect()
         reads[mode] = n[0]
     assert {m: r for m, r in reads.items() if r > ANN_MANIFEST_READS[m]} == {}, reads
+
+
+def test_cold_fills_run_no_job(spark, cat, ann_cat, tmp_path):
+    """The pack is filled and extended by pyarrow: the first query on a
+    fresh catalog object runs no Spark job for a BM25 query, a batch, a
+    phrase query or any ANN mode, and neither does the first query after
+    a driver-flushed epoch (on copies of the module's indexes). As warm,
+    a DataFrame filter's head and knn_join_ivf's query side are read by
+    one job each."""
+    import shutil
+
+    import cuvs_lucene_spark.operators.bm25 as B
+    from cuvs_lucene_spark.operators.positions import phrase_topk
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+    from cuvs_lucene_spark.streaming.ingest import incremental_add, incremental_add_vectors
+
+    _bm25_calls(spark, cat)  # builds the positions sidecar
+    batch = {"q0": {"terms": ["join", "vector"], "k": 5}, "q1": {"terms": ["dup"], "k": 5}}
+    text = {
+        "or": lambda c: B.bm25_topk(spark, c, ["join", "vector"], k=10, cfg=CFG),
+        "batch": lambda c: B.bm25_topk_batch(spark, c, batch, CFG),
+        "phrase": lambda c: phrase_topk(spark, c, ["order", "fast"], k=10, cfg=CFG),
+    }
+    acat, df = ann_cat
+    modes = list(_ann_calls(spark, ann_cat))
+
+    def ann(c, mode):
+        return lambda: _ann_calls(spark, (c, df))[mode]()
+
+    cold = {k: _job_count(spark, lambda: q(IndexCatalog(cat.root)), f"cold_{k}")
+            for k, q in text.items()}
+    cold.update({m: _job_count(spark, ann(IndexCatalog(acat.root), m), f"cold_{m}")
+                 for m in modes})
+    want = {**dict.fromkeys(cold, 0), "ivf_df_filter": 1, "knn_join_ivf": 1}
+    assert cold == want
+
+    tcopy = IndexCatalog(shutil.copytree(cat.root, str(tmp_path / "text")))
+    acopy = IndexCatalog(shutil.copytree(acat.root, str(tmp_path / "ann")))
+    for q in text.values():
+        assert q(tcopy).collect()
+    for m in modes:
+        assert ann(acopy, m)().collect()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(20)
+    incremental_add(spark, tcopy, docs.withColumn("doc_id", F.col("doc_id") + 100_000), CFG,
+                    epoch=0, content_col="text", id_col="doc_id")
+    incremental_add_vectors(spark, acopy, df.filter(F.col("vec_id") < 40).withColumn(
+        "vec_id", F.col("vec_id") + 1000), CFG, 0, id_col="vec_id", vector_col="embedding")
+    assert tcopy.read_manifest()["tables"]["segdata"]["appends"]
+    assert acopy.read_manifest()["tables"]["ann_flat"]["appends"]
+    fresh = {k: _job_count(spark, lambda: q(tcopy), f"epoch_{k}") for k, q in text.items()}
+    fresh.update({m: _job_count(spark, ann(acopy, m), f"epoch_{m}") for m in modes})
+    assert fresh == want
 
 
 def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):

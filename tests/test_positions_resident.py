@@ -130,14 +130,14 @@ def pmerged(spark, pdeleted, monkeypatch_module):
         query()  # refills what the budget-0 pass released: the refresh below only appends
     assert refresh_positions(spark, cat, all_docs, CFG) == 1
     seen = []
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def counted(spark_, cat_, table, prep=None, snaps=None, dropped=()):
-        seen.append((table, snaps))
-        return real(spark_, cat_, table, prep, snaps, dropped)
+    def counted(self, table, *a, **k):
+        seen.append((table, k.get("appends")))
+        return real(self, table, *a, **k)
 
     with monkeypatch_module.context() as m:
-        m.setattr(R, "read_arrow", counted)
+        m.setattr(IndexCatalog, "read_arrow", counted)
         query()
     return cat, stale, seen
 
@@ -176,20 +176,18 @@ def test_failed_positions_read_takes_the_spark_tier(spark, pcat, monkeypatch):
     """A positions read that fails leaves the catalog's phrase queries on
     the Spark tier, with the resident tier's results; the sidecar is not
     read again until it changes."""
-    from cuvs_lucene_spark.sources.catalog import IndexCatalog
-
     want = _phrase_rows(spark, pcat)
     fresh = IndexCatalog(pcat.root)
     tried = []
-    real = R.read_arrow
+    real = IndexCatalog.read_arrow
 
-    def failing(spark_, cat_, table, *a, **kw):
+    def failing(self, table, *a, **kw):
         if table == "positions":
             tried.append(table)
-            raise RuntimeError("Total size of serialized results is bigger than spark.driver.maxResultSize")
-        return real(spark_, cat_, table, *a, **kw)
+            raise MemoryError("positions do not fit the driver")
+        return real(self, table, *a, **kw)
 
-    monkeypatch.setattr(R, "read_arrow", failing)
+    monkeypatch.setattr(IndexCatalog, "read_arrow", failing)
     assert _phrase_rows(spark, fresh) == want
     assert tried == ["positions"]
 

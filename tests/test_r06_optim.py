@@ -130,9 +130,9 @@ def test_stats_version_ignores_sidecar_commits(spark, docs, tmp_path):
         content_col="text", id_col="doc_id",
     )
     v0 = stats_version(cat.read_manifest())
-    n0, avgdl0 = corpus_stats(spark, cat)
+    n0, avgdl0 = corpus_stats(cat)
     build_positions(spark, cat, sample, cfg)
     assert stats_version(cat.read_manifest()) == v0  # sidecar-invisible
-    assert corpus_stats(spark, cat) == (n0, avgdl0)
+    assert corpus_stats(cat) == (n0, avgdl0)
     delete_docs(spark, cat, sample.limit(5).selectExpr("doc_id AS ext_id"))
     assert stats_version(cat.read_manifest()) > v0  # stats-bearing commit
