@@ -26,19 +26,26 @@ a worker round trip.)
 :func:`reads_head` tells, from the plan alone, whether a ``limit`` over a
 caller's frame reads only its first rows; :func:`small_arrow` reads a
 caller's frame into the driver when it holds at most a bound of rows.
+
+A driver tier that takes a keyed frame (one row per id: the dedup and
+text-statistics stages) reads its columns with :func:`small_keyed`,
+returns its rows with :func:`arrow_frame` and rounds as Spark's
+``round`` does with :func:`round_half_up`.
 """
 
 from __future__ import annotations
 
+import decimal
 import functools
 from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
@@ -128,6 +135,12 @@ def local_frame(spark: SparkSession, schema: str, *cols) -> DataFrame:
     return LocalResult(spark, table, _struct(schema))
 
 
+def arrow_frame(spark: SparkSession, table: pa.Table) -> LocalResult:
+    """A :class:`LocalResult` over ``table``, its Spark schema read from
+    the Arrow one (every field nullable)."""
+    return LocalResult(spark, table, from_arrow_schema(table.schema))
+
+
 def head_arrow(df: DataFrame, n: int) -> pa.Table:
     """At most the first ``n`` rows of ``df`` as one Arrow table: a
     :class:`LocalResult`'s own table (no JVM call), a ``LocalRelation``'s
@@ -166,6 +179,65 @@ def small_arrow(df: DataFrame, max_rows: int) -> pa.Table | None:
             return None
     head = head_arrow(df, max_rows + 1)
     return head if head.num_rows <= max_rows else None
+
+
+def small_columns(df: DataFrame, cols: list[str], max_rows: int) -> pa.Table | None:
+    """``df``'s ``cols`` as one Arrow table when it holds at most
+    ``max_rows`` rows, else None: a :class:`LocalResult`'s own columns (no
+    JVM call), else :func:`small_arrow` over ``df.select(*cols)``."""
+    if isinstance(df, LocalResult):
+        t = df.table
+        ok = t.num_rows <= max_rows and set(cols) <= set(t.column_names)
+        return t.select(cols) if ok else None
+    return small_arrow(df.select(*cols), max_rows)
+
+
+def small_keyed(df: DataFrame, id_col: str | None, cols: list[str], max_rows: int,
+                nullable: tuple = ()) -> tuple | None:
+    """``df``'s ``id_col`` and string ``cols`` in the driver when a keyed
+    driver tier takes them (:func:`small_columns`): at most ``max_rows``
+    rows, ``long`` ids none null or repeated (no id column read when
+    ``id_col`` is None), and no null in a column outside ``nullable``.
+    Returns ``(ids, *texts)`` (``texts`` alone with no id column) as an
+    int64 array and pandas Series, or None: the caller's Spark plan keeps
+    its own handling of other inputs."""
+    keyed = [id_col] if id_col is not None else []
+    at = small_columns(df, keyed + list(cols), max_rows)
+    if at is None:
+        return None
+    ids = at.columns[:len(keyed)]
+    if any(not pa.types.is_int64(c.type) or c.null_count
+           or pc.count_distinct(c).as_py() != len(c) for c in ids):
+        return None
+    texts = at.columns[len(keyed):]
+    if any(not (pa.types.is_string(c.type) or pa.types.is_large_string(c.type))
+           or (c.null_count and name not in nullable) for name, c in zip(cols, texts)):
+        return None
+    return (*(c.to_numpy() for c in ids), *(c.to_pandas() for c in texts))
+
+
+_HALF_UP = decimal.Context(prec=400, rounding=decimal.ROUND_HALF_UP)
+
+
+def round_half_up(x, scale: int) -> np.ndarray:
+    """Spark's ``round(x, scale)`` of doubles, in numpy. Spark rounds
+    ``BigDecimal.valueOf(x)`` HALF_UP: the decimal ``x`` prints as, so
+    0.0078125 → 0.007813 where numpy's half-even on the binary value gives
+    0.007812, and a result rounding to zero is +0.0. The products that fall
+    near a half (or past the range where ``x · 10^scale`` keeps its
+    fraction) are decided on that decimal string; NaN and ±inf pass
+    through."""
+    x = np.asarray(x, np.float64)
+    finite = np.isfinite(x)
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = np.abs(np.where(finite, x, 0.0)) * 10.0 ** scale
+        r = np.floor(y + 0.5)
+        out = np.where(finite, np.where(x < 0, -r, r) / 10.0 ** scale + 0.0, x)
+        slow = finite & ((np.abs(y - np.floor(y) - 0.5) <= 1e-6) | ~(y < 2.0 ** 26))
+    q = decimal.Decimal(1).scaleb(-scale)
+    for i in np.flatnonzero(slow):
+        out[i] = float(_HALF_UP.quantize(decimal.Decimal(repr(float(x[i]))), q)) + 0.0
+    return out
 
 
 def _jclass(obj) -> str:

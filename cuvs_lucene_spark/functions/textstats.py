@@ -5,14 +5,28 @@ All are pure Catalyst expressions (codegen'd, no Python in the hot path)
 with exact DuckDB-SQL oracle equivalents. Heuristics are deliberately
 simple and FROZEN — deterministic outputs matter more than linguistic
 sophistication for pipeline correctness testing.
+
+:func:`quality_score` and :func:`repetition_stats` have a driver tier:
+on at most ``segments.DRIVER_FLUSH_MAX_DOCS`` rows with ``long`` ids none
+null or repeated and no null text, the input is read once
+(``frames.small_keyed``) and one numpy kernel computes the same rows
+(``tokenize_py``, Spark's HALF_UP ``round``), returned as a
+``frames.LocalResult`` with no Spark job.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuvs_lucene_spark.functions.tokenize import doclen_expr, tokenize_expr
+from cuvs_lucene_spark.frames import arrow_frame, round_half_up, small_keyed
+from cuvs_lucene_spark.functions.tokenize import doclen_expr, ngrams_py, tokenize_expr, tokenize_py
+from cuvs_lucene_spark.operators import segments as S
 
 # Frozen per-language marker token lists (top function words). A token
 # votes for every language whose list contains it; argmax wins, ties break
@@ -66,7 +80,11 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     quality ∈ [0,1]: 0.25·len_ok + 0.25·mean_token_len_ok +
     0.25·stopword_presence + 0.25·alnum_ratio — a frozen, deterministic
     document-quality heuristic (length/punctuation/stopword mix).
+    Small inputs take the driver tier (:func:`_quality_rows`).
     """
+    small = small_keyed(docs, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if small is not None:
+        return arrow_frame(docs.sparkSession, _quality_rows(*small))
     toks = tokenize_expr(text_col)
     n_tok = F.size(toks)
     txt_len = F.length(F.col(text_col))
@@ -88,6 +106,30 @@ def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         F.round(alnum_ratio, 6).alias("alnum_ratio"),
         F.round(quality, 6).alias("quality"),
     )
+
+
+def _quality_rows(ids: np.ndarray, texts: pd.Series) -> pa.Table:
+    """:func:`quality_score`'s driver kernel: the same ratios and sum, in
+    the Spark plan's order of operations."""
+    toks = tokenize_py(texts)
+    n_tok = np.fromiter(map(len, toks), np.int64, len(toks))
+    alnum = np.fromiter((sum(map(len, t)) for t in toks), np.int64, len(toks))
+    stops = frozenset(EN_STOPWORDS)
+    n_stop = np.fromiter((sum(w in stops for w in t) for t in toks), np.int64, len(toks))
+    txt_len = np.fromiter(map(len, texts), np.int64, len(texts))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = np.where(n_tok > 0, alnum / n_tok, 0.0)
+        stop = np.where(n_tok > 0, n_stop / n_tok, 0.0)
+        alnum_ratio = np.where(txt_len > 0, alnum / txt_len, 0.0)
+    len_ok = ((n_tok >= 10) & (n_tok <= 100_000)).astype(np.float64)
+    tl_ok = ((mean >= 2.0) & (mean <= 12.0)).astype(np.float64)
+    stop_ok = (stop > 0.0).astype(np.float64)
+    quality = 0.25 * len_ok + 0.25 * tl_ok + 0.25 * stop_ok + 0.25 * alnum_ratio
+    return pa.table({
+        "id": ids, "n_tokens": n_tok.astype(np.int32),
+        "mean_token_len": round_half_up(mean, 6), "stopword_ratio": round_half_up(stop, 6),
+        "alnum_ratio": round_half_up(alnum_ratio, 6), "quality": round_half_up(quality, 6),
+    })
 
 
 def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -143,6 +185,10 @@ def repetition_stats(
     corpus grams ever hits the wire."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
+    small = small_keyed(docs, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if small is not None:
+        return arrow_frame(docs.sparkSession,
+                           _repetition_rows(*small, n, min_grams, top_frac_max))
     tok = f"regexp_extract_all(lower({text_col}), '[a-z0-9_]+', 0)"
     # token array bound once (single-element transform wrapper) with O(1)
     # element_at per slot: the old slice-in-lambda spelling re-ran the
@@ -192,6 +238,25 @@ def repetition_stats(
             "repetitive"
         ),
     )
+
+
+def _repetition_rows(ids: np.ndarray, texts: pd.Series, n: int, min_grams: int,
+                     top_frac_max: float) -> pa.Table:
+    """:func:`repetition_stats`' driver kernel: each doc's n-gram counts
+    give its gram total, top count and distinct count."""
+    counts = [Counter(ngrams_py(t, n)).values() for t in tokenize_py(texts)]
+    total = np.fromiter(map(sum, counts), np.int64, len(counts))
+    best = np.fromiter((max(c, default=0) for c in counts), np.int64, len(counts))
+    dist = np.fromiter(map(len, counts), np.int64, len(counts))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        top_frac = np.where(total > 0, best / total, 0.0)
+        dist_frac = np.where(total > 0, dist / total, 0.0)
+    return pa.table({
+        "id": ids, "n_grams": total,
+        "top_gram_frac": round_half_up(top_frac, 6),
+        "distinct_gram_frac": round_half_up(dist_frac, 6),
+        "repetitive": (total >= int(min_grams)) & (top_frac > float(top_frac_max)),
+    })
 
 
 def winnow_fingerprints(

@@ -57,3 +57,10 @@ def tokenize_py(texts: pd.Series) -> pd.Series:
     (O9 / ``input_hint``: no per-row Python).
     """
     return texts.fillna("").str.lower().str.findall(TOKEN_PATTERN)
+
+
+def ngrams_py(tokens: list, n: int) -> list:
+    """A token list's n-grams, each ``n`` consecutive tokens joined by one
+    space (the Catalyst ``concat_ws(' ', element_at(tk, i + j)...)`` gram
+    spellings); none for a list shorter than ``n``."""
+    return [" ".join(tokens[i:i + n]) for i in range(len(tokens) - n + 1)]

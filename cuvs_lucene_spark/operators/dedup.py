@@ -28,22 +28,54 @@ never crossJoin:
                  ``COMPONENTS_BCAST_MAX_NODES`` rows falls back to Spark
                  rounds of min-label propagation over its edges
 
+Driver tier: on at most ``segments.DRIVER_FLUSH_MAX_DOCS`` rows with
+``long`` ids none null or repeated and no null text, the stages a
+training-data job runs (:func:`dedup_keep_list`,
+:func:`ngram_jaccard_pairs`, :func:`duplicate_components`,
+:func:`ngram_contamination`, and :func:`simhash`) read their input once
+(``frames.small_keyed``), run one module-level numpy/pandas kernel with
+the Spark plan's tokenizer, md5 and HALF_UP rounding, and return their
+rows as a ``frames.LocalResult``: no Spark job, no Python worker. Other
+inputs run the Spark plans below unchanged.
+
 Determinism: every hash is md5 of an explicit string — bit-stable across
 Spark (JVM md5), hashlib, DuckDB, and re-runs (resumability).
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
-from cuvs_lucene_spark.functions.tokenize import tokenize_expr
+from cuvs_lucene_spark.frames import arrow_frame, round_half_up, small_columns, small_keyed
+from cuvs_lucene_spark.functions.tokenize import ngrams_py, tokenize_expr, tokenize_py
+from cuvs_lucene_spark.operators import segments as S
 
 # row cap on the edge list, or else the spanning forest,
 # duplicate_components collects to the driver for its in-memory
 # union-find: 2M (a, b) rows ≈ 32 MB of int64 arrays; a longer forest
 # takes the shuffle tier (Spark rounds)
 COMPONENTS_BCAST_MAX_NODES = 2_000_000
+
+# tokens per step of the SimHash bit fold: the (tokens × bits) bit matrix
+# is built a chunk at a time, at most 4096 × 32 × 8 B = 1 MiB per doc
+SIMHASH_CHUNK_TOKENS = 4096
+
+
+def _require_integer_id(docs: DataFrame, id_col: str, op: str) -> None:
+    """Raise a ValueError naming ``id_col`` and its type unless it is an
+    integer column: ``op``'s kernel emits a ``long`` id. Reads the schema
+    only (no job)."""
+    dt = docs.select(id_col).schema[0].dataType
+    if not isinstance(dt, IntegralType):
+        raise ValueError(f"{op}: id column {id_col!r} has type {dt.simpleString()}; "
+                         "its kernel needs an integer (long) id")
 
 
 def _canon_text(text_col: str):
@@ -97,9 +129,13 @@ def dedup_keep_list(
     with a keep flag — the minimum id of each exact-content group
     survives, all other members drop. (id, keep, group_size). One
     hash-partitioned window over the content fingerprint; fingerprints
-    are uniformly distributed, so no skew handling is needed."""
+    are uniformly distributed, so no skew handling is needed. Small inputs
+    take the driver tier (:func:`_keep_list_rows`)."""
     from pyspark.sql import Window
 
+    small = small_keyed(docs, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if small is not None:
+        return arrow_frame(docs.sparkSession, _keep_list_rows(*small))
     w = Window.partitionBy("fingerprint")
     return (
         docs.select(
@@ -110,6 +146,17 @@ def dedup_keep_list(
         .withColumn("group_size", F.count("*").over(w).cast("int"))
         .select("id", "keep", "group_size")
     )
+
+
+def _keep_list_rows(ids: np.ndarray, texts: pd.Series) -> pa.Table:
+    """:func:`dedup_keep_list`'s driver kernel: the md5 of each doc's
+    canonical text groups it, and each group's minimum id keeps."""
+    fp = [hashlib.md5(" ".join(t).encode()).hexdigest() for t in tokenize_py(texts)]
+    grp, uniq = pd.factorize(pd.Series(fp, dtype=object))
+    first = np.full(len(uniq), np.iinfo(np.int64).max)
+    np.minimum.at(first, grp, ids)
+    size = np.bincount(grp, minlength=len(uniq)).astype(np.int32)
+    return pa.table({"id": ids, "keep": ids == first[grp], "group_size": size[grp]})
 
 
 def _shingles(text_col: str, n: int = 3):
@@ -161,19 +208,15 @@ def _minhash_wide(
     evaluator with per-call allocation (~4s at sf1.0, and strongly
     sensitive to JVM heap state). Values are identical: hashlib md5 hex
     == Spark md5, and lowercase-hex strings order the same under Python
-    str and UTF8String binary comparison (ASCII)."""
-    import pandas as pd
-
+    str and UTF8String binary comparison (ASCII). A non-integer id raises
+    a ValueError before any Spark work."""
+    _require_integer_id(docs, id_col, "minhash")
     schema = "id long, " + ", ".join(f"mh_{p} string" for p in range(n_perm))
     prefixes = [f"{p}|".encode() for p in range(n_perm)]
     bare = [str(p).encode() for p in range(n_perm)]
     n_sh = int(shingle_n)
 
     def kernel(batches):
-        import hashlib
-
-        from cuvs_lucene_spark.functions.tokenize import tokenize_py
-
         md5 = hashlib.md5
         for pdf in batches:
             null_mask = pdf["_t"].isna().to_numpy()
@@ -189,11 +232,7 @@ def _minhash_wide(
                         cols[f"mh_{p}"].append(md5(bare[p]).hexdigest())
                     continue
                 if len(tl) >= n_sh:
-                    sh = {
-                        " ".join(tl[i : i + n_sh])
-                        for i in range(len(tl) - n_sh + 1)
-                    }
-                    enc = [s.encode() for s in sh]
+                    enc = [s.encode() for s in set(ngrams_py(tl, n_sh))]
                 else:
                     enc = [" ".join(tl).encode()]
                 for p, pref in enumerate(prefixes):
@@ -292,7 +331,14 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
 ) -> DataFrame:
     """Exact Jaccard near-dup pairs via shingle equi-join (never crossJoin):
-    pairs sharing zero shingles are never materialized."""
+    pairs sharing zero shingles are never materialized. Small inputs take
+    the driver tier (:func:`_jaccard_rows`) unless their shingle join
+    would expand to more than ``COMPONENTS_BCAST_MAX_NODES`` pairs."""
+    small = small_keyed(docs, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if small is not None and shingle_n >= 1:
+        rows = _jaccard_rows(*small, shingle_n, threshold, COMPONENTS_BCAST_MAX_NODES)
+        if rows is not None:
+            return arrow_frame(docs.sparkSession, rows)
     sh = doc_shingles(docs, id_col, text_col, shingle_n)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
@@ -315,6 +361,36 @@ def ngram_jaccard_pairs(
     )
 
 
+def _jaccard_rows(ids: np.ndarray, texts: pd.Series, n: int, threshold: float,
+                  max_pairs: int) -> pa.Table | None:
+    """:func:`ngram_jaccard_pairs`' driver kernel, or None when its shingle
+    join would expand to more than ``max_pairs`` (doc, doc) rows: Σ
+    g(g−1)/2 over the shingles g docs share, counted before any row is
+    built. The (doc, shingle) entries are sorted by shingle, each group's
+    i < j pairs are expanded with ``repeat``, and the pairs' shared
+    shingles are counted by ``unique``."""
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    sh = [set(ngrams_py(t, n)) if len(t) >= n else {" ".join(t)}
+          for t in tokenize_py(texts).to_numpy()[order]]
+    sz = np.fromiter(map(len, sh), np.int64, len(sh))
+    code = pd.factorize(pd.Series([g for s in sh for g in s], dtype=object))[0]
+    g = np.bincount(code)
+    if int((g * (g - 1) // 2).sum()) > max_pairs:
+        return None
+    by = np.argsort(code, kind="stable")  # docs stay in id order within a shingle
+    doc, code = np.repeat(np.arange(len(sh)), sz)[by], code[by]
+    later = g[code] - (np.arange(code.size) - (np.cumsum(g) - g)[code]) - 1
+    a = np.repeat(np.arange(code.size), later)
+    b = a + 1 + np.arange(a.size) - np.repeat(np.cumsum(later) - later, later)
+    key, inter = np.unique(doc[a] * len(sh) + doc[b], return_counts=True)
+    da, db = np.divmod(key, len(sh))
+    jac = inter / (sz[da] + sz[db] - inter)
+    hit = jac >= threshold
+    return pa.table({"id_a": ids[da[hit]], "id_b": ids[db[hit]],
+                     "jaccard": round_half_up(jac[hit], 6)})
+
+
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32) -> DataFrame:
     """SimHash fingerprints (32 bits by default): per-token md5-derived
     hash, tf-weighted sign aggregation per bit. (id, simhash long).
@@ -333,49 +409,23 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
     (explode semantics of the original — preserved exactly).
 
     ``bits`` must be in 1..32: each token hash is a 32-bit md5 prefix, so
-    any wider fingerprint would carry always-zero high bits."""
-    import numpy as np
-    import pandas as pd
-
+    any wider fingerprint would carry always-zero high bits. A non-integer
+    id raises a ValueError before any Spark work. Small inputs take the
+    driver tier: the same kernel, :func:`_simhash_rows`, on the driver's
+    rows."""
     n_bits = int(bits)
     if not 1 <= n_bits <= 32:
         raise ValueError(f"simhash bits must be in 1..32 (the token hash has 32), got {bits}")
+    small = small_keyed(docs, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if small is not None:
+        rows = _simhash_rows(pd.DataFrame({"id": small[0], "_t": small[1]}), n_bits, {})
+        return arrow_frame(docs.sparkSession, pa.Table.from_pandas(rows, preserve_index=False))
+    _require_integer_id(docs, id_col, "simhash")
 
     def kernel(batches):
-        import hashlib
-
-        from cuvs_lucene_spark.functions.tokenize import tokenize_py
-
-        md5 = hashlib.md5
-        shift = np.arange(n_bits, dtype=np.uint64)
-        memo = {}
-
-        def h_of(t):
-            v = memo.get(t)
-            if v is None:
-                v = int(md5(t.encode()).hexdigest()[:8], 16)
-                memo[t] = v
-            return v
-
+        memo = {}  # token → hash, per task
         for pdf in batches:
-            toks = tokenize_py(pdf["_t"])
-            ids_in = pdf["id"].to_numpy()
-            ids, sims = [], []
-            for i, tl in zip(ids_in, toks):
-                if not len(tl):
-                    continue  # zero-token/null docs drop (explode semantics)
-                hs = np.fromiter((h_of(t) for t in tl), np.uint64, count=len(tl))
-                ones = ((hs[:, None] >> shift) & 1).sum(axis=0).astype(np.int64)
-                s = 2 * ones - len(tl)  # Σ over occurrences of ±1 per bit
-                sim = int(((s > 0).astype(np.uint64) << shift).sum())
-                ids.append(int(i))
-                sims.append(sim)
-            yield pd.DataFrame(
-                {
-                    "id": np.array(ids, dtype=np.int64),
-                    "simhash": np.array(sims, dtype=np.int64),
-                }
-            )
+            yield _simhash_rows(pdf, n_bits, memo)
 
     base = _spread(
         docs.select(
@@ -383,6 +433,36 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
         )
     )
     return base.mapInPandas(kernel, "id long, simhash long")
+
+
+def _simhash_rows(pdf: pd.DataFrame, bits: int, memo: dict) -> pd.DataFrame:
+    """:func:`simhash`'s kernel, for ``mapInPandas`` and the driver tier:
+    (id, _t) rows → (id, simhash) rows, zero-token and null docs dropped.
+    ``memo`` caches each token's hash across calls. A doc's per-bit sum of
+    ±1 over its token occurrences is folded ``SIMHASH_CHUNK_TOKENS`` tokens
+    at a time, so its bit matrix stays bounded however long the doc."""
+    shift = np.arange(bits, dtype=np.uint64)
+
+    def h_of(t):
+        v = memo.get(t)
+        if v is None:
+            v = memo[t] = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
+        return v
+
+    ids, sims = [], []
+    for i, tl in zip(pdf["id"].to_numpy(), tokenize_py(pdf["_t"])):
+        if not len(tl):
+            continue  # zero-token/null docs drop (explode semantics)
+        hs = np.fromiter((h_of(t) for t in tl), np.uint64, count=len(tl))
+        ones = np.zeros(bits, np.int64)
+        for c in range(0, hs.size, SIMHASH_CHUNK_TOKENS):
+            chunk = hs[c:c + SIMHASH_CHUNK_TOKENS, None]
+            ones += ((chunk >> shift) & 1).sum(axis=0, dtype=np.int64)
+        s = 2 * ones - len(tl)  # Σ over occurrences of ±1 per bit
+        ids.append(int(i))
+        sims.append(int(((s > 0).astype(np.uint64) << shift).sum()))
+    return pd.DataFrame({"id": np.array(ids, dtype=np.int64),
+                         "simhash": np.array(sims, dtype=np.int64)})
 
 
 def simhash_near_dup(
@@ -808,10 +888,16 @@ def duplicate_components(
 
     ``all_ids`` (one ``id`` column, optional): include singletons with
     ``component = id`` so the output is a TOTAL decision table.
-    """
-    import pyarrow as pa
 
+    Driver tier: pairs and ``all_ids`` of at most
+    ``segments.DRIVER_FLUSH_MAX_DOCS`` rows, integer ids and no null are
+    read once and unioned by :func:`_components_rows`, with no Spark job.
+    """
     spark = pairs.sparkSession
+    edge = _small_ints(pairs, [id_a, id_b])
+    ids = None if edge is None or all_ids is None else _small_ints(all_ids, all_ids.columns[:1])
+    if edge is not None and (all_ids is None or ids is not None):
+        return arrow_frame(spark, _components_rows(*edge, None if ids is None else ids[0]))
     a, b = F.col(id_a).cast("long"), F.col(id_b).cast("long")
     edges = pairs.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b")).filter(
         F.col("a").isNotNull()
@@ -844,6 +930,31 @@ def duplicate_components(
     return comp.withColumn("keep", F.col("id") == F.col("component"))
 
 
+def _small_ints(df: DataFrame, cols: list[str]) -> list[np.ndarray] | None:
+    """``df``'s ``cols`` as int64 arrays when the driver tier takes them: at
+    most ``segments.DRIVER_FLUSH_MAX_DOCS`` rows, integer columns, no null."""
+    at = small_columns(df, cols, S.DRIVER_FLUSH_MAX_DOCS)
+    if at is None or any(not pa.types.is_integer(c.type) or c.null_count for c in at.columns):
+        return None
+    return [c.to_numpy().astype(np.int64) for c in at.columns]
+
+
+def _components_rows(a: np.ndarray, b: np.ndarray, ids: np.ndarray | None) -> pa.Table:
+    """:func:`duplicate_components`' driver kernel: the (a, b) edges'
+    components by :func:`_min_label`, for each of ``ids`` (each node when
+    None), a node in no edge its own component."""
+    nodes, labels = _min_label(a, b)
+    if ids is None:
+        ids, comp = nodes, labels
+    else:
+        comp = ids.copy()
+        if nodes.size:
+            pos = np.minimum(np.searchsorted(nodes, ids), nodes.size - 1)
+            hit = nodes[pos] == ids
+            comp[hit] = labels[pos[hit]]
+    return pa.table({"id": ids, "component": comp, "keep": ids == comp})
+
+
 def ngram_contamination(
     train: DataFrame,
     evals: DataFrame,
@@ -864,9 +975,17 @@ def ngram_contamination(
     all-pairs step anywhere. At extreme gram cardinality the join key can
     be xxhash64(g) (8-byte shuffle keys, 2^-64 collision odds); the
     string key is kept here for bit-exact oracle parity.
+
+    Small inputs (both sides within the driver tier's bound, the eval
+    side's text non-null) take the driver tier (:func:`_contamination_rows`).
     """
     if n < 1:
         raise ValueError("n must be >= 1")
+    small = small_keyed(train, id_col, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    ev = small and small_keyed(evals, None, [text_col], S.DRIVER_FLUSH_MAX_DOCS)
+    if ev:
+        rows = _contamination_rows(*small, *ev, n)
+        return arrow_frame(train.sparkSession, rows.rename_columns([id_col, *rows.column_names[1:]]))
 
     def grams(df: DataFrame):
         # token array bound ONCE via the single-element transform wrapper
@@ -902,3 +1021,15 @@ def ngram_contamination(
             (F.coalesce("o", F.lit(0)) > 0).alias("contaminated"),
         )
     )
+
+
+def _contamination_rows(ids: np.ndarray, texts: pd.Series, eval_texts: pd.Series,
+                        n: int) -> pa.Table:
+    """:func:`ngram_contamination`'s driver kernel: each train doc's count
+    of distinct n-grams found in the eval docs' n-gram set."""
+    grams = set()
+    for t in tokenize_py(eval_texts):
+        grams.update(ngrams_py(t, n))
+    overlap = np.fromiter((len(grams.intersection(ngrams_py(t, n))) for t in tokenize_py(texts)),
+                          np.int64, len(ids))
+    return pa.table({"id": ids, "overlap_ngrams": overlap, "contaminated": overlap > 0})

@@ -10,7 +10,11 @@ to-cluster-size (no RNG state, no ``sample()`` seed coupling to
 partitioning), auditable row-by-row, and stable under retries/preemption.
 
 Physical shape: one projection, pure Catalyst codegen — NO shuffle, no
-UDF, no driver state. Changing the mix re-runs a map-only job.
+UDF, no driver state. Changing the mix re-runs a map-only job. On at most
+``segments.DRIVER_FLUSH_MAX_DOCS`` rows with ``long`` ids none null or
+repeated and a string stratum, the driver reads the frame once
+(``frames.small_keyed``) and computes the same table in numpy
+(:func:`_mix_rows`), returned as a ``frames.LocalResult`` with no job.
 
 The hash here is a small Knuth-style multiplicative map kept inside
 exact int64 arithmetic so the DuckDB oracle can reproduce it bit-for-bit
@@ -21,8 +25,14 @@ constant changes, none of the scaling properties.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from cuvs_lucene_spark.frames import arrow_frame, small_keyed
+from cuvs_lucene_spark.operators import segments as S
 
 # u = ((id mod P) * A mod M) / M — P prime below 2^20, every product
 # < 2^51, exact in int64 AND in a float64-only SQL engine
@@ -58,6 +68,10 @@ def training_mix(
             raise ValueError(f"rate for {k!r} must be in [0, 1], got {v}")
     if not 0.0 <= float(default_rate) <= 1.0:
         raise ValueError(f"default_rate must be in [0, 1], got {default_rate}")
+    small = small_keyed(docs, id_col, [strat_col], S.DRIVER_FLUSH_MAX_DOCS,
+                        nullable=(strat_col,))
+    if small is not None:
+        return arrow_frame(docs.sparkSession, _mix_rows(*small, rates, default_rate))
     u = mix_hash_expr(id_col)
     rate = F.lit(float(default_rate))
     for k in sorted(rates):
@@ -70,3 +84,16 @@ def training_mix(
         u.alias("u"),
         (u < rate).alias("keep"),
     )
+
+
+def _mix_rows(ids: np.ndarray, strata: pd.Series, rates: dict[str, float],
+              default_rate: float) -> pa.Table:
+    """:func:`training_mix`'s driver kernel: :func:`mix_hash_expr` in
+    int64 numpy (``%`` by a positive modulus is ``pmod``), the stratum's
+    rate, a null or unlisted stratum the default."""
+    u = (ids % _P) * _A % _M / float(_M)
+    rate = np.full(len(ids), float(default_rate))
+    for k in sorted(rates):
+        rate[(strata == k).to_numpy(bool)] = float(rates[k])
+    return pa.table({"id": ids, "stratum": pa.array(strata, pa.string()), "u": u,
+                     "keep": u < rate})

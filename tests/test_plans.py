@@ -111,9 +111,12 @@ def test_fast_query_path_single_shuffle_no_cogroup(spark, cat, spark_tier):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_whole_stage_codegen_on_text_ops(spark):
+def test_whole_stage_codegen_on_text_ops(spark, monkeypatch):
     from cuvs_lucene_spark.functions.textstats import quality_score
+    from cuvs_lucene_spark.operators import segments
 
+    # the Spark tier's plan: a small input runs in the driver
+    monkeypatch.setattr(segments, "DRIVER_FLUSH_MAX_DOCS", 0)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(quality_score(docs))
     # pure Catalyst expressions: no Python eval nodes anywhere in the plan
@@ -322,10 +325,14 @@ def test_fuzzy_dictionary_scan_pushes_prefix_and_length(spark, cat):
     assert "Exchange" not in plan.split("FileScan")[0]
 
 
-def test_decontamination_plan_semi_join_no_cartesian(spark):
+def test_decontamination_plan_semi_join_no_cartesian(spark, monkeypatch):
     """ngram_contamination must meet train and eval grams in ONE equi-join
-    (semi), never a nested-loop/cartesian pairing of docs."""
+    (semi), never a nested-loop/cartesian pairing of docs (the Spark
+    tier's plan: a small input runs in the driver)."""
+    from cuvs_lucene_spark.operators import segments
     from cuvs_lucene_spark.operators.dedup import ngram_contamination
+
+    monkeypatch.setattr(segments, "DRIVER_FLUSH_MAX_DOCS", 0)
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     df = ngram_contamination(

@@ -3,7 +3,12 @@
 DuckDB on the same parquet dir, compare row count, sorted column names,
 and an order-insensitive value hash. Usage:
 
-    python tools/check_oracles.py [sf_dir] [only_query_substr]
+    python tools/check_oracles.py [sf_dir] [only_query_substr] [--flush driver|spark]
+
+``--flush driver`` (the default) runs every query as it runs by default:
+the dedup, text-statistics and training-mix stages and the small writes
+run in the driver below ``segments.DRIVER_FLUSH_MAX_DOCS``. ``--flush
+spark`` sets that bound to 0 in-process, so they run their Spark tier.
 """
 
 from __future__ import annotations
@@ -40,11 +45,22 @@ def _norm(v):
 
 
 def main():
+    flush = "driver"
+    if "--flush" in sys.argv:
+        i = sys.argv.index("--flush")
+        flush = sys.argv[i + 1]
+        del sys.argv[i:i + 2]
+    if flush not in ("driver", "spark"):
+        raise SystemExit(f"unknown flush {flush!r}; expected driver or spark")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = sys.argv[2] if len(sys.argv) > 2 else ""
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
+    from cuvs_lucene_spark.operators import segments
+
+    if flush == "spark":
+        segments.DRIVER_FLUSH_MAX_DOCS = 0
 
     spark = (
         SparkSession.builder.master("local[4]")
