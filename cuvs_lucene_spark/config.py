@@ -83,7 +83,6 @@ class IndexConfig:
 
     # --- segmentation (a segment ≙ one Lucene flush unit, SURVEY §1.1) ---
     rows_per_segment: int = 100_000     # target docs per segment
-    n_segments: int | None = None       # explicit override (tests)
 
     # --- posting codec (B14/B15 recipe: sort→delta→varint + block directory) ---
     block_size: int = 128               # postings per block

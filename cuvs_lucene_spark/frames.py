@@ -31,15 +31,24 @@ A driver tier that takes a keyed frame (one row per id: the dedup and
 text-statistics stages) reads its columns with :func:`small_keyed`,
 returns its rows with :func:`arrow_frame` and rounds as Spark's
 ``round`` does with :func:`round_half_up`.
+
+Every per-segment writer (the text flush, positions, the ANN flat rows
+and formats) runs its pandas kernel through :func:`run_kernel`, which
+picks the transport from its inputs: pandas frames run the kernel in the
+driver and give an Arrow table, Spark DataFrames give the Spark plan that
+runs it on the executors. ``IndexCatalog.write`` / ``append`` take
+either.
 """
 
 from __future__ import annotations
 
 import decimal
 import functools
+from typing import Callable
 from urllib.parse import unquote, urlparse
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -77,6 +86,59 @@ def _struct(schema: str) -> StructType:
 
 
 _BINARY_AS_BYTES = "spark.sql.execution.pyspark.binaryAsBytes"
+
+
+def _frame(parts, schema: str) -> pd.DataFrame:
+    """Concatenate a kernel's output frames (typed and empty when none)."""
+    parts = list(parts)
+    if parts:
+        return pd.concat(parts, ignore_index=True)
+    return pd.DataFrame({n: np.empty(0, _TYPES[t][1]) for n, t in _fields(schema)})
+
+
+def _rows(rows: list, schema: str) -> pd.DataFrame:
+    """A kernel's output rows (tuples, or dicts keyed by column) as one
+    frame of ``schema``'s columns, typed and empty when there are none."""
+    cols = [n for n, _ in _fields(schema)]
+    return _frame([pd.DataFrame(rows, columns=cols)] if rows else [], schema)
+
+
+def _arrow(pdf: pd.DataFrame, schema: str) -> pa.Table:
+    """A driver-built frame as an Arrow table of ``schema`` (every field
+    nullable, as Spark writes it)."""
+    return pa.Table.from_pandas(pdf, arrow_schema(schema), preserve_index=False)
+
+
+def run_kernel(kernel: Callable[..., pd.DataFrame], schema: str, *inputs,
+               by: str | None = None):
+    """``kernel``'s rows of the flat DDL ``schema`` over ``inputs``, on the
+    transport they come on (a grouped-map UDF's function is the same
+    function on local pandas):
+
+    - pandas frames run it in the driver and give one Arrow table:
+      ``kernel(*inputs)`` once, or with ``by`` once per key of the inputs'
+      union, ascending, on each input's rows of that key (an empty frame
+      where an input has none);
+    - Spark DataFrames give the plan that runs it on the executors: a
+      ``mapInPandas`` calling it per Arrow batch when ``by`` is None, else
+      a ``groupBy(by).applyInPandas``, or for two inputs their cogroup by
+      ``by``."""
+    if isinstance(inputs[0], DataFrame):
+        if by is None:
+            return inputs[0].mapInPandas(lambda it: map(kernel, it), schema)
+        if len(inputs) == 1:
+            return inputs[0].groupBy(by).applyInPandas(lambda pdf: kernel(pdf), schema)
+        left, right = (d.groupby(by) for d in inputs)
+        return left.cogroup(right).applyInPandas(lambda _, a, b: kernel(a, b), schema)
+    if by is None:
+        parts = [kernel(*inputs)]
+    else:
+        groups = [dict(list(p.groupby(by, sort=True))) for p in inputs]
+        keys = sorted(set().union(*groups))
+        parts = [kernel(*(g[k] if k in g else p.iloc[:0] for g, p in zip(groups, inputs)))
+                 for k in keys]
+    return pa.concat_tables([arrow_schema(schema).empty_table()]
+                            + [_arrow(part, schema) for part in parts])
 
 
 class LocalResult(ClassicDataFrame):

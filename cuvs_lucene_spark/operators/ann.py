@@ -36,18 +36,17 @@ format and the B2 bookkeeping of a build, epoch, merge or compaction
 become visible in one manifest swap, so every committed table covers the
 same segments as ``ann_flat``.
 
-Writes. Each kernel has two transports (``_format_rows``), as the text
-flush's ``build_segment_pdf`` has. Builds, format builds and epochs of at
-most ``ANN_DRIVER_MAX_VALUES`` vector values run in the driver, as the
-reference builds each segment's index in-process at flush
+Writes. Every kernel — the flat flush's ``build_flat_pdf``
+(:func:`flat_rows`) and each format's (:meth:`AnnFormat.rows`) — runs
+through ``frames.run_kernel``, as the text flush's ``build_segment_pdf``
+does; the gate only chooses its source's transport. Builds, format builds
+and epochs of at most ``ANN_DRIVER_MAX_VALUES`` vector values run in the
+driver, as the reference builds each segment's index in-process at flush
 (``CuVS2510GPUVectorsWriter.java:128-148``): the caller's frame is read
-once (``small_vectors``), flat rows come from ``build_flat_pdf``
-(``flush_flat``), a format build reads its inputs by pyarrow
-(``IndexCatalog.read_arrow``), the kernels are called directly and every
-table is written by pyarrow — no Spark job beyond the read of the
-caller's frame. Larger writes, merges and compactions run on Spark, where
-each kernel is one ``mapInPandas`` over flat rows (a cogroup by segment
-for IVF-PQ).
+once (``small_vectors``), a format build reads its inputs by pyarrow
+(``IndexCatalog.read_arrow``) and every table is written by pyarrow — no
+Spark job beyond the read of the caller's frame. Larger writes, merges
+and compactions run the same kernels on Spark.
 
 Search (S1-S6). Each public search function writes its format's plan
 in the pieces of one search driver (``_search`` / ``_Plan``), which holds
@@ -136,7 +135,7 @@ from cuvs_lucene_spark.functions.quantize import (
     scalar_quantize,
     widen_unsigned,
 )
-from cuvs_lucene_spark.frames import (_TYPES, _fields, arrow_schema, head_arrow, local_frame,
+from cuvs_lucene_spark.frames import (_arrow, _frame, _rows, head_arrow, local_frame, run_kernel,
                                       small_arrow)
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.operators import segments as S
@@ -230,32 +229,10 @@ def _kmeans(x: np.ndarray, n_lists: int, iters: int, seed: int, trainset_fractio
     return cents
 
 
-def _frame(parts, schema: str) -> pd.DataFrame:
-    """Concatenate a kernel's output frames (typed and empty when none)."""
-    parts = list(parts)
-    if parts:
-        return pd.concat(parts, ignore_index=True)
-    return pd.DataFrame({n: np.empty(0, _TYPES[t][1]) for n, t in _fields(schema)})
-
-
-def _rows(rows: list, schema: str) -> pd.DataFrame:
-    """A kernel's output rows (tuples, or dicts keyed by column) as one
-    frame of ``schema``'s columns, typed and empty when there are none."""
-    cols = [n for n, _ in _fields(schema)]
-    return _frame([pd.DataFrame(rows, columns=cols)] if rows else [], schema)
-
-
-def _arrow(pdf: pd.DataFrame, schema: str) -> pa.Table:
-    """A driver-built frame as an Arrow table of ``schema`` (every field
-    nullable, as Spark writes it)."""
-    return pa.Table.from_pandas(pdf, arrow_schema(schema), preserve_index=False)
-
-
 # ---------------------------------------------------------------------------
 # Format kernels: flat rows (or IVF lists plus PQ codebooks) → one format's
-# rows, pandas in and pandas out. The Spark tier ships each through one
-# mapInPandas (a cogroup by segment for IVF-PQ), the driver tier calls it
-# on the frames in hand (:func:`_format_rows`).
+# rows, pandas in and pandas out, run by ``frames.run_kernel`` on the frames
+# in hand or on Spark (:meth:`AnnFormat.rows`).
 # ---------------------------------------------------------------------------
 
 
@@ -413,13 +390,14 @@ def build_flat_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def flush_flat(pdf: pd.DataFrame) -> tuple[pd.DataFrame, pa.Table, pa.Table]:
-    """The driver tier's flat flush: (segment_id, ext_id, vector) rows →
-    the flat rows (:func:`build_flat_pdf` per segment, as a frame and as
-    an Arrow table) and the ``ann_ids`` map."""
-    flat = _frame([build_flat_pdf(g) for _, g in pdf.groupby("segment_id", sort=True)],
-                  FLAT_SCHEMA)
-    return flat, _arrow(flat, FLAT_SCHEMA), _arrow(pdf[["segment_id", "ext_id"]], IDS_SCHEMA)
+def flat_rows(src) -> tuple:
+    """The flat flush: ``src``'s (segment_id, ext_id, vector) rows → (the
+    flat rows, :func:`build_flat_pdf` per segment by ``frames.run_kernel``;
+    the ``ann_ids`` map), Arrow tables for a pandas ``src`` and Spark plans
+    for a DataFrame."""
+    ids = (src.select("segment_id", "ext_id") if isinstance(src, DataFrame)
+           else _arrow(src[["segment_id", "ext_id"]], IDS_SCHEMA))
+    return run_kernel(build_flat_pdf, FLAT_SCHEMA, src, by="segment_id"), ids
 
 
 def _check_vectors(maxd, mind, dups: int, ann: AnnParams) -> None:
@@ -518,12 +496,11 @@ def _bq_coarse(r, ctx: "_Query") -> np.ndarray:
 class AnnFormat(NamedTuple):
     """One derived vector format. ``kernel(*inputs, cfg=, metric=)`` maps
     the rows of its ``inputs`` tables (pandas frames) to its own rows: one
-    kernel per format, run on either transport by :func:`_format_rows` — a
-    Spark ``mapInPandas`` (a cogroup by segment for two inputs) or a direct
-    call in the driver. ``default`` formats are written by every build,
-    epoch and merge, the others are maintained once built. ``keys`` order
-    a full write (list-keyed tables prune the probe's ``list_id IN`` scan
-    by row-group statistics)."""
+    kernel per format, run on either transport by :meth:`rows`.
+    ``default`` formats are written by every build, epoch and merge, the
+    others are maintained once built. ``keys`` order a full write
+    (list-keyed tables prune the probe's ``list_id IN`` scan by row-group
+    statistics)."""
 
     table: str
     schema: str
@@ -532,6 +509,15 @@ class AnnFormat(NamedTuple):
     default: bool = False
     inputs: tuple[str, ...] = ("ann_flat",)
     keys: tuple[str, ...] = ()
+
+    def rows(self, src, cfg: IndexConfig, metric: str, **kw):
+        """The format's rows for the segments ``src(table)`` serves, by
+        ``frames.run_kernel`` on the transport its inputs come on: pandas
+        frames give an Arrow table; DataFrames a ``mapInPandas`` over the
+        flat rows, or their cogroup by segment for two inputs (IVF-PQ)."""
+        kernel = functools.partial(self.kernel, cfg=cfg, metric=metric, **kw)
+        ins = [src(t) for t in self.inputs]
+        return run_kernel(kernel, self.schema, *ins, by="segment_id" if len(ins) > 1 else None)
 
 
 def _graph_kernel(flat: pd.DataFrame, cfg: IndexConfig, metric: str, **kw) -> pd.DataFrame:
@@ -550,21 +536,6 @@ FORMATS: dict[str, AnnFormat] = {
     "ivfpq": AnnFormat("ann_ivfpq", IVFPQ_SCHEMA, _ivfpq_rows, _adc_coarse,
                        inputs=("ann_ivf", "ann_pq"), keys=("segment_id", "list_id")),
 }
-
-
-def _format_rows(fmt: AnnFormat, src, cfg: IndexConfig, metric: str, **kw):
-    """``fmt``'s rows for the segments ``src(table)`` serves, by its kernel
-    on the transport its inputs come on: pandas frames (the driver tier)
-    give an Arrow table; Spark DataFrames give a ``mapInPandas`` over the
-    flat rows, or a cogroup by segment for a two-input format (IVF-PQ)."""
-    kernel = functools.partial(fmt.kernel, cfg=cfg, metric=metric, **kw)
-    ins = [src(t) for t in fmt.inputs]
-    if isinstance(ins[0], pd.DataFrame):
-        return _arrow(kernel(*ins), fmt.schema)
-    if len(ins) == 1:
-        return ins[0].mapInPandas(lambda it: map(kernel, it), fmt.schema)
-    first, second = (d.groupby("segment_id") for d in ins)
-    return first.cogroup(second).applyInPandas(lambda _, a, b: kernel(a, b), fmt.schema)
 
 
 def _index_metric(cat: IndexCatalog) -> str:
@@ -600,8 +571,8 @@ def _write_format(spark: SparkSession, cat: IndexCatalog, fmt: AnnFormat,
         if src is None:
             src = ((lambda t: tx.read_arrow(t).to_pandas()) if _flat_fits(tx)
                    else (lambda t: tx.read(spark, t)))
-        tx.write(_format_rows(fmt, src, cfg, _index_metric(tx), **kw), fmt.table,
-                 sort_within_partitions=list(fmt.keys) or None)
+        tx.write(fmt.rows(src, cfg, _index_metric(tx), **kw), fmt.table,
+                 sort_by=list(fmt.keys) or None)
         tx.mark_stage(fmt.table)
 
 
@@ -619,7 +590,7 @@ def _append_formats(cat: IndexCatalog, cfg: IndexConfig, metric: str, src,
     ]
 
     def one(f: AnnFormat, src) -> None:
-        cat.append(_format_rows(f, src, cfg, metric), f.table, tag=tag,
+        cat.append(f.rows(src, cfg, metric), f.table, tag=tag,
                    extra_entry=extra_entry(f.table))
 
     first = [f for f in fmts if f.inputs == ("ann_flat",)]
@@ -686,14 +657,13 @@ def build_ann(
     """Build the ANN sidecar tables (flat, ids and the default formats)
     from (id, array<float>) rows, committed in one transaction.
 
-    Two tiers write the same rows with the same kernels. When
-    :func:`small_vectors` reads the caller's frame into the driver (at most
-    ``ANN_DRIVER_MAX_VALUES`` vector values), the driver tier flushes flat
-    and ids (:func:`flush_flat`), calls each default format's kernel on
-    the flat rows in hand and writes every table by pyarrow: no Spark job
-    beyond that read (none for a ``LocalRelation``). Otherwise the Spark
-    tier shuffles by segment into ``build_flat_pdf``, and ships the
-    kernels through ``mapInPandas`` over the staged flat rows."""
+    The gate :func:`small_vectors` chooses the source's transport: it
+    reads the caller's frame into the driver (at most
+    ``ANN_DRIVER_MAX_VALUES`` vector values), where the flat flush
+    (:func:`flat_rows`) and each default format's kernel run and every
+    table is written by pyarrow — no Spark job beyond that read (none for
+    a ``LocalRelation``); otherwise the same kernels run on Spark, the
+    formats' over the staged flat rows."""
     cfg = cfg or IndexConfig()
     ann = cfg.ann
     _check_index_metric(ann.metric)
@@ -702,15 +672,13 @@ def build_ann(
     small = small_vectors(vectors, id_col, vector_col, ann)
     if small is None:
         validate_vectors(vectors, vector_col, id_col, ann)
-        base = vectors.select(
+        src = vectors.select(
             F.col(id_col).cast("long").alias("ext_id"),
             F.col(vector_col).alias("vector"),
         ).withColumn("segment_id", (F.col("ext_id") / F.lit(rps)).cast("long"))
-        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
-        ids = base.select("segment_id", "ext_id")
     else:
-        flat_pdf, flat, ids = flush_flat(
-            small.assign(segment_id=S.range_segments(small["ext_id"].to_numpy(), rps)))
+        src = small.assign(segment_id=S.range_segments(small["ext_id"].to_numpy(), rps))
+    flat, ids = flat_rows(src)
     with cat.transaction() as tx:
         tx.set_config(ann_config(ann, rps))
         tx.write(flat, "ann_flat")
@@ -719,14 +687,14 @@ def build_ann(
         def _w_ids():
             # thin row-level (segment_id, ext_id) map — the DataFrame-filter
             # tier's join target (and the merge policy's id→segment resolver)
-            tx.write(ids, "ann_ids", sort_within_partitions=["segment_id", "ext_id"])
+            tx.write(ids, "ann_ids", sort_by=["segment_id", "ext_id"])
             tx.mark_stage("ann_ids")
 
         # the remaining tables are mutually independent (ids derives from
         # the input, the default formats from the staged flat — merge reads
         # flat only, M4); one flat read is shared by the pool (concurrent
         # first reads would each infer the parquet schema)
-        flat_src = tx.read(spark, "ann_flat") if small is None else flat_pdf
+        flat_src = tx.read(spark, "ann_flat") if small is None else flat.to_pandas()
         _concurrently(_w_ids, *(
             (lambda f=f: _write_format(spark, tx, f, cfg, lambda t: flat_src))
             for f in FORMATS.values() if f.default
@@ -2155,9 +2123,7 @@ def merge_ann(
         "ext_id",
         "vector",
     )
-    new_flat = assigned.groupBy("segment_id").applyInPandas(
-        build_flat_pdf, FLAT_SCHEMA
-    )
+    new_flat, new_id_rows = flat_rows(assigned)
 
     def _dropped_for(table: str) -> list[int]:
         prev = set(
@@ -2180,7 +2146,7 @@ def merge_ann(
         },
     )
     cat.append(
-        assigned.select("segment_id", "ext_id"),
+        new_id_rows,
         "ann_ids",
         tag=tag,
         extra_entry={"dropped_segments": _dropped_for("ann_ids")},
@@ -2250,7 +2216,7 @@ def compact_ann(spark: SparkSession, cat: IndexCatalog) -> None:
         cat.write(
             cat.read(spark, table),
             table,
-            sort_within_partitions=["segment_id"],
+            sort_by=["segment_id"],
             extra_entry={"ann_merge_gen": gen} if table == "ann_flat" else None,
         )
 

@@ -41,13 +41,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from cuvs_lucene_spark.config import IndexConfig, choose_build_algo
+from cuvs_lucene_spark.frames import _rows
 from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.ann import (
     FORMATS,
     GRAPH_SCHEMA,
     _nav_vectors,
     _Query,
-    _rows,
     _scores,
     _search,
     _topk_frame,

@@ -11,8 +11,8 @@ clear their tombstones.
 A delete of at most ``segments.DRIVER_FLUSH_MAX_DOCS`` ids on an index
 whose segdata fits ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES`` runs in the
 driver: the id frame is read once (``frames.small_arrow``), unioned with
-the committed tombstones read by pyarrow, written as one file through
-``IndexCatalog.write_arrow``, and the live count is a set difference over
+the committed tombstones read by pyarrow, written as one file by
+``IndexCatalog.write``, and the live count is a set difference over
 doc_map's ``ext_id``s — no other Spark job. A larger (or unbounded) id
 frame, or a larger index, runs the Spark union, write and anti-join.
 """
@@ -61,8 +61,8 @@ def _delete_in_driver(cat: IndexCatalog, ids: pa.ChunkedArray) -> int:
             cat.read_arrow("tombstones", ["ext_id"]).column(0).chunks + ids.chunks, pa.int64()
         )
     tomb = pc.unique(ids)
-    cat.write_arrow(pa.table([tomb], schema=arrow_schema("ext_id long")), "tombstones",
-                    lineage={"n": len(tomb)})
+    cat.write(pa.table([tomb], schema=arrow_schema("ext_id long")), "tombstones",
+              lineage={"n": len(tomb)})
     dm = cat.read_arrow("segdata", ["ext_id"], where=pc.field("kind") == "doc").column(0)
     return len(dm) - (pc.sum(pc.is_in(dm, value_set=tomb, skip_nulls=True)).as_py() or 0)
 

@@ -40,6 +40,7 @@ from cuvs_lucene_spark.functions.varint import varint_decode, varint_encode
 from cuvs_lucene_spark.operators.segments import (
     NORMS_SCHEMA,
     POSTINGS_SCHEMA,
+    SEGDATA_SORT,
     SEGDATA_VIEWS,
     build_norms_pdf,
     grouped_dense_rank,
@@ -363,7 +364,7 @@ def merge_segments(
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
         "terms_global",
-        sort_within_partitions=["term"],
+        sort_by=["term"],
     )
 
     lineage = {str(newseg[g]): {"merged_from": [int(s) for s in grp]} for g, grp in enumerate(groups)}
@@ -404,7 +405,7 @@ def rewrite_segdata(spark: SparkSession, cat: IndexCatalog) -> None:
     cat.write(
         current,
         "segdata",
-        sort_within_partitions=["kind", "term_bucket", "term", "segment_id", "block_id", "doc_id"],
+        sort_by=SEGDATA_SORT,
         # keep the merge generation monotone: a post-compaction merge must
         # never mint an id that a still-live earlier-generation segment holds
         extra_entry={"merge_gen": gen},

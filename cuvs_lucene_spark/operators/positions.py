@@ -43,16 +43,17 @@ GPUKnnFloatVectorQuery.java:21-58). Spark-first equivalent:
 
 Positions are an OPT-IN sidecar (like Lucene's per-field IndexOptions):
 ``build_positions`` derives them from the source docs + the committed
-``doc_map``. It flushes on the two tiers of ``segments.build_index``: a
-source the driver flush takes (``segments.small_docs``: at most
-``segments.DRIVER_FLUSH_MAX_DOCS`` rows, string text, no null id or text)
-on an index whose segdata fits ``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``
-(the driver reads doc_map and the sidecar's segment ids whole) is read
-once into the driver, joined with doc_map read by pyarrow
-(``IndexCatalog.read_arrow``), checked for coverage, built per segment by
-:func:`build_positions_pdf` and written by pyarrow — no other Spark job;
-any other source or index runs the Spark join and ``applyInPandas``.
-Both raise the same coverage ``ValueError``. After a merge/append changes
+``doc_map``, one kernel (:func:`build_positions_pdf`) per segment through
+``frames.run_kernel`` (:func:`positions_rows`), as the text flush does.
+The gate chooses the source's transport: a source the driver flush takes
+(``segments.small_docs``: at most ``segments.DRIVER_FLUSH_MAX_DOCS`` rows
+of string text) on an index whose segdata fits
+``segments.DRIVER_FLUSH_MAX_INDEX_BYTES`` (the driver reads doc_map and
+the sidecar's segment ids whole) is read once into the driver and joined
+with doc_map read by pyarrow (``IndexCatalog.read_arrow``), and its rows
+are written by pyarrow — no other Spark job; any other source or index is
+joined on Spark. Both tiers check coverage and raise the same
+``ValueError``. After a merge/append changes
 the segment set, phrase queries raise ``PositionsStaleError`` until
 ``refresh_positions`` re-derives the missing segments (group-wise
 incremental — untouched segments are never re-read; dead segments' rows
@@ -74,7 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..frames import arrow_schema, local_frame
+from ..frames import local_frame, run_kernel
 from ..functions.tokenize import tokenize_py
 from ..functions.varint import varint_byte_lengths, varint_decode, varint_encode
 from . import resident as R
@@ -104,7 +105,7 @@ class PositionsStaleError(RuntimeError):
 
 
 def build_positions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One segment's (segment_id, ext_id, text) rows → positions rows.
+    """One segment's (segment_id, ext_id, content) rows → positions rows.
 
     Same dense-batch shape as the postings flush (factorize + lexsort over
     the whole token stream, boundaries via flatnonzero/reduceat); the
@@ -112,7 +113,7 @@ def build_positions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     seg = int(pdf["segment_id"].iloc[0])
     pdf = pdf.sort_values("ext_id", kind="mergesort").reset_index(drop=True)
     ext_doc = pdf["ext_id"].to_numpy(np.int64)
-    toks = tokenize_py(pdf["text"])
+    toks = tokenize_py(pdf["content"])
     counts_per_doc = toks.str.len().to_numpy(np.int64)
     if counts_per_doc.max(initial=0) >= POS_SHIFT:
         raise ValueError(f"doc exceeds {POS_SHIFT} tokens (positions key space)")
@@ -180,17 +181,11 @@ def build_positions_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-POS_ARROW = arrow_schema(POS_SCHEMA)
-
-
-def positions_arrow(pdf: pd.DataFrame) -> pa.Table:
-    """(segment_id, ext_id, text) rows → positions rows in the driver,
-    :func:`build_positions_pdf` per segment."""
-    return pa.concat_tables(
-        [POS_ARROW.empty_table()]
-        + [pa.Table.from_pandas(build_positions_pdf(g), POS_ARROW, preserve_index=False)
-           for _, g in pdf.groupby("segment_id", sort=True)]
-    )
+def positions_rows(src):
+    """``src``'s (segment_id, ext_id, content) docs → positions rows,
+    :func:`build_positions_pdf` per segment by ``frames.run_kernel`` — an
+    Arrow table for a pandas ``src``, the Spark plan for a DataFrame."""
+    return run_kernel(build_positions_pdf, POS_SCHEMA, src, by="segment_id")
 
 
 def _decode_positions(ext_ids, counts, pos_blob) -> np.ndarray:
@@ -275,19 +270,20 @@ def _missing_segs(spark: SparkSession, cat) -> DataFrame:
     return live.join(pos, "segment_id", "left_anti")
 
 
-def _build_segments(
+def _spark_source(
     spark: SparkSession, cat, docs: DataFrame, segments: DataFrame | None,
     content_col: str, id_col: str,
 ) -> DataFrame:
-    """Positions rows for the given segment set (None = every live
-    segment). The doc_map join restricts the source scan; the segment
-    restriction is a broadcast semi-join, never a collected id list."""
+    """The source docs of the given segment set (None = every live
+    segment) as (ext_id, content, segment_id) rows, checked for coverage.
+    The doc_map join restricts the source scan; the segment restriction is
+    a broadcast semi-join, never a collected id list."""
     dm = cat.read(spark, "doc_map").select("segment_id", "ext_id")
     if segments is not None:
         dm = dm.join(F.broadcast(segments), "segment_id", "left_semi")
     src = docs.select(
         F.col(id_col).cast("long").alias("ext_id"),
-        F.col(content_col).alias("text"),
+        F.col(content_col).alias("content"),
     )
     joined = src.join(dm, "ext_id")
     # the sidecar must cover every indexed doc of these segments: a source
@@ -302,9 +298,7 @@ def _build_segments(
     row = bad.select("segment_id", "n_exp", "n_got").first()
     if row is not None:
         raise _coverage_error(row["segment_id"], row["n_got"], row["n_exp"])
-    return joined.groupBy("segment_id").applyInPandas(
-        lambda p: build_positions_pdf(p), POS_SCHEMA
-    )
+    return joined
 
 
 def _coverage_error(seg, n_got, n_exp) -> ValueError:
@@ -319,16 +313,15 @@ def _small_source(
     cat, docs: DataFrame, content_col: str, id_col: str
 ) -> pd.DataFrame | None:
     """A string-text source the driver flush takes (``segments.small_docs``)
-    as (ext_id, text) rows, on an index small enough for the driver to
+    as (ext_id, content) rows, on an index small enough for the driver to
     read its doc_map (``segments.driver_index``); None sends the build to
     the Spark tier."""
     from .segments import driver_index, small_docs
 
     if docs.schema[content_col].dataType.typeName() != "string" or not driver_index(cat):
         return None
-    src = small_docs(docs.select(F.col(id_col).cast("long").alias("ext_id"),
-                                 F.col(content_col).alias("content")))
-    return None if src is None else src.rename(columns={"content": "text"})
+    return small_docs(docs.select(F.col(id_col).cast("long").alias("ext_id"),
+                                  F.col(content_col).alias("content")))
 
 
 def _driver_missing(cat) -> tuple[pd.DataFrame, np.ndarray]:
@@ -343,10 +336,9 @@ def _driver_missing(cat) -> tuple[pd.DataFrame, np.ndarray]:
     return dm, live
 
 
-def _driver_segments(src: pd.DataFrame, dm: pd.DataFrame, segments: np.ndarray) -> pa.Table:
-    """:func:`_build_segments` in the driver: the source joined with the
-    given segments' doc_map rows, the same coverage check, then
-    :func:`positions_arrow`."""
+def _driver_source(src: pd.DataFrame, dm: pd.DataFrame, segments: np.ndarray) -> pd.DataFrame:
+    """:func:`_spark_source` in the driver: the source joined with the
+    given segments' doc_map rows, with the same coverage check."""
     dm = dm[dm["segment_id"].isin(segments)]
     joined = src.merge(dm, on="ext_id")
     exp = dm.groupby("segment_id").size()
@@ -354,7 +346,7 @@ def _driver_segments(src: pd.DataFrame, dm: pd.DataFrame, segments: np.ndarray) 
     bad = exp.index[(got != exp).to_numpy()]
     if len(bad):
         raise _coverage_error(bad[0], got[bad[0]], exp[bad[0]])
-    return positions_arrow(joined)
+    return joined
 
 
 def build_positions(
@@ -372,13 +364,12 @@ def build_positions(
         dm, missing = _driver_missing(cat)
         if cat.exists("positions") and missing.size == 0:
             return
-        out = _driver_segments(src, dm, np.unique(dm["segment_id"].to_numpy()))
-        cat.write_arrow(out, "positions", sort_by=["term"])
-        return
-    if cat.exists("positions") and _missing_segs(spark, cat).limit(1).count() == 0:
-        return
-    out = _build_segments(spark, cat, docs, None, content_col, id_col)
-    cat.write(out, "positions", sort_within_partitions=["term"])
+        src = _driver_source(src, dm, np.unique(dm["segment_id"].to_numpy()))
+    else:
+        if cat.exists("positions") and _missing_segs(spark, cat).limit(1).count() == 0:
+            return
+        src = _spark_source(spark, cat, docs, None, content_col, id_col)
+    cat.write(positions_rows(src), "positions", sort_by=["term"])
 
 
 def refresh_positions(
@@ -396,23 +387,20 @@ def refresh_positions(
     src = _small_source(cat, docs, content_col, id_col)
     if src is not None:
         dm, missing = _driver_missing(cat)
-        if missing.size == 0:
-            return 0
-        out = _driver_segments(src, dm, missing)
-        if cat.exists("positions"):
-            cat.append_arrow(out, "positions")
-        else:
-            cat.write_arrow(out, "positions", sort_by=["term"])
-        return int(missing.size)
-    missing = _missing_segs(spark, cat)
-    n_missing = missing.count()  # merge-bounded metadata job
+        n_missing = int(missing.size)
+        if n_missing:
+            src = _driver_source(src, dm, missing)
+    else:
+        missing = _missing_segs(spark, cat)
+        n_missing = missing.count()  # merge-bounded metadata job
+        if n_missing:
+            src = _spark_source(spark, cat, docs, missing, content_col, id_col)
     if n_missing == 0:
         return 0
-    out = _build_segments(spark, cat, docs, missing, content_col, id_col)
     if cat.exists("positions"):
-        cat.append(out, "positions")
+        cat.append(positions_rows(src), "positions")
     else:
-        cat.write(out, "positions", sort_within_partitions=["term"])
+        cat.write(positions_rows(src), "positions", sort_by=["term"])
     return n_missing
 
 

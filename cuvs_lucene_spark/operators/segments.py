@@ -22,22 +22,20 @@ Tables emitted (all committed through :class:`IndexCatalog` snapshots):
 - ``terms(segment_id, term, df, cf)`` — sorted term dictionary (H3).
 - ``segment_stats(segment_id, n_docs, n_tokens, avgdl)``.
 
-Two flush tiers write the same rows. For at most
-``DRIVER_FLUSH_MAX_DOCS`` input docs (the measured crossover), with the
-``range`` segmenter, the driver flushes (as Lucene's
-``IndexWriter`` flushes each segment in-process,
-``CuVS2510GPUVectorsWriter.java:128-148``): the caller's frame is read once
-into Arrow (``frames.small_arrow``), ``sha256`` and ``dl`` come from
-:func:`sha256_py` and ``tokenize.doclen_py``, each segment runs
-:func:`build_segment_pdf`, and segdata and ``terms_global`` are written by
-pyarrow through ``IndexCatalog.write_arrow`` (the same snapshot commit);
-``terms_global``, the corpus stats and the lineage fold from the table in
-hand. A build then runs no Spark job beyond that read. Otherwise, and for
-the ``hash`` / ``partition`` segmenters, the Spark flush runs: one shuffle
-by segment, the same kernel per group, one parquet write. Writes whose
-driver work grows with the index, not the input — a delete, a positions
-build or refresh — take the driver flush only while the index's segdata
-fits ``DRIVER_FLUSH_MAX_INDEX_BYTES`` (:func:`driver_index`).
+One kernel, :func:`build_segment_pdf`, flushes every segment, through
+``frames.run_kernel`` (:func:`segment_rows`); the gate only chooses its
+source's transport. For at most ``DRIVER_FLUSH_MAX_DOCS`` input docs (the
+measured crossover) with the ``range`` segmenter, the caller's frame is
+read once into the driver (:func:`small_docs`) and the kernel runs there,
+as Lucene's ``IndexWriter`` flushes each segment in process
+(``CuVS2510GPUVectorsWriter.java:128-148``): the rows are written by
+pyarrow, and ``terms_global``, the corpus stats and the lineage fold from
+the table in hand, so a build runs no Spark job beyond that read.
+Otherwise the kernel runs on Spark: one shuffle by segment, one parquet
+write (the ``partition`` segmenter calls it per input partition instead).
+Writes whose driver work grows with the index, not the input — a delete,
+a positions build or refresh — take the driver only while the index's
+segdata fits ``DRIVER_FLUSH_MAX_INDEX_BYTES`` (:func:`driver_index`).
 
 DocID assignment rule (frozen; merge and query depend on it):
 within a segment, docs sorted by ``ext_id`` ascending get ``doc_id`` 0..n-1.
@@ -47,6 +45,7 @@ simply permutes ext_id order upstream.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import itertools
 import zlib
@@ -59,8 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
-from cuvs_lucene_spark.frames import arrow_schema, small_arrow
-from cuvs_lucene_spark.functions.tokenize import doclen_expr, doclen_py, tokenize_py
+from cuvs_lucene_spark.frames import arrow_schema, run_kernel, small_arrow
+from cuvs_lucene_spark.functions.tokenize import tokenize_py
 from cuvs_lucene_spark.functions.varint import varint_encode
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
 
@@ -182,15 +181,11 @@ def term_bucket_py(term: str, n_buckets: int) -> int:
 def assign_segments(docs: DataFrame, cfg: IndexConfig, mode: str = "range") -> DataFrame:
     """Add ``segment_id``. ``range``: floor(ext_id / rows_per_segment) —
     contiguous ids per segment (best delta compression) when ext_ids are
-    dense. ``hash``: pmod(xxhash64(ext_id), n_segments) for arbitrary ids.
-    Both are deterministic → resumable (north rule)."""
+    dense; deterministic → resumable (north rule)."""
     if mode == "range":
         return docs.withColumn(
             "segment_id", (F.col("ext_id") / F.lit(cfg.rows_per_segment)).cast("long")
         )
-    if mode == "hash":
-        n = cfg.n_segments or 32
-        return docs.withColumn("segment_id", F.pmod(F.xxhash64("ext_id"), F.lit(n)))
     if mode == "partition":
         # placeholder — the zero-shuffle builder derives segment_id from
         # the task partition id inside the mapInPandas kernel
@@ -225,18 +220,15 @@ def _encode_grouped(values: np.ndarray, group_starts: np.ndarray) -> list[bytes]
     return [bytes(buf[a:b]) for a, b in zip(g_start_bytes, g_end_bytes)]
 
 
-def build_postings_pdf(pdf: pd.DataFrame, cfg: IndexConfig) -> pd.DataFrame:
-    """One segment's documents → posting-block rows.
+def _postings(seg: int, toks: pd.Series, counts: np.ndarray, cfg: IndexConfig) -> pd.DataFrame:
+    """One segment's token lists (doc_id order) and their lengths →
+    posting-block rows.
 
     Mirrors the reference flush (B1/B2): buffer columnar, build the whole
     field as one dense batch op (``Utils.createFloatMatrix`` analogue =
     factorize + sort over the full token stream).
     """
-    seg = int(pdf["segment_id"].iloc[0])
-    pdf = pdf.sort_values("ext_id", kind="mergesort").reset_index(drop=True)
-    n_docs = len(pdf)
-    toks = tokenize_py(pdf["content"])
-    counts = toks.str.len().to_numpy(np.int64)
+    n_docs = len(toks)
     flat = list(itertools.chain.from_iterable(toks))
     empty = pd.DataFrame(
         {
@@ -312,24 +304,26 @@ def build_postings_pdf(pdf: pd.DataFrame, cfg: IndexConfig) -> pd.DataFrame:
 
 
 def build_segment_pdf(pdf: pd.DataFrame, cfg: IndexConfig) -> pd.DataFrame:
-    """ONE segment flush in ONE pass: input (segment_id, ext_id, content,
-    sha256, dl) rows → kind-tagged rows for postings + doc_map + norms +
-    terms + stats (SEGDATA_SCHEMA). sha256/dl arrive precomputed from the
-    JVM map side (F.sha2 / regexp — no Python hashing here)."""
+    """ONE segment flush in ONE pass: the segment's (segment_id, ext_id,
+    content) rows → kind-tagged rows for postings + doc_map + norms +
+    terms + stats (SEGDATA_SCHEMA). Each doc's ``dl`` counts the tokens its
+    postings are built from, and its ``sha256`` is :func:`sha256_py`'s; a
+    null content indexes as an empty document (dl 0, sha256 null)."""
     seg = int(pdf["segment_id"].iloc[0])
     pdf = pdf.sort_values("ext_id", kind="mergesort").reset_index(drop=True)
     n_docs = len(pdf)
-    post = build_postings_pdf(pdf[["segment_id", "ext_id", "content"]], cfg)
+    toks = tokenize_py(pdf["content"])
+    dls = toks.str.len().to_numpy(np.int64)
+    post = _postings(seg, toks, dls, cfg)
     post.insert(1, "kind", "post")
 
-    dls = pdf["dl"].to_numpy(np.int64)
     doc_rows = pd.DataFrame(
         {
             "segment_id": np.full(n_docs, seg, dtype=np.int64),
             "kind": "doc",
             "doc_id": np.arange(n_docs, dtype=np.int32),
             "ext_id": pdf["ext_id"].to_numpy(np.int64),
-            "sha256": pdf["sha256"].to_numpy(object),
+            "sha256": sha256_py(pdf["content"]),
             "dl": dls.astype(np.int32),
         }
     )
@@ -406,19 +400,19 @@ def build_norms_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def sha256_py(texts: pd.Series) -> list:
-    """The driver's ``F.sha2(content, 256)``: hex SHA-256 of the UTF-8
-    text, null for a null text."""
+    """Hex SHA-256 of each text's UTF-8 bytes (Spark's ``sha2(text,
+    256)``), null for a null text."""
     return [None if pd.isna(t) else hashlib.sha256(t.encode("utf-8")).hexdigest()
             for t in texts]
 
 
 def small_docs(docs: DataFrame) -> pd.DataFrame | None:
     """A caller's (ext_id, content) frame read into the driver when the
-    driver flush takes it: at most ``DRIVER_FLUSH_MAX_DOCS`` rows, no null
-    id or content (the Spark flush keeps its own handling of those).
-    None otherwise."""
+    driver flush takes it: at most ``DRIVER_FLUSH_MAX_DOCS`` rows and no
+    null id (the Spark flush keeps its own handling of those). None
+    otherwise."""
     at = small_arrow(docs, DRIVER_FLUSH_MAX_DOCS)
-    if at is None or at.column("ext_id").null_count or at.column("content").null_count:
+    if at is None or at.column("ext_id").null_count:
         return None
     return at.to_pandas()
 
@@ -437,16 +431,12 @@ def range_segments(ext_id: np.ndarray, rows_per_segment: int) -> np.ndarray:
     return (ext_id.astype(np.float64) / rows_per_segment).astype(np.int64)
 
 
-def flush_segdata(pdf: pd.DataFrame, cfg: IndexConfig) -> pa.Table:
-    """The driver flush: (segment_id, ext_id, content) docs → segdata rows,
-    :func:`build_segment_pdf` per segment, with ``sha256`` and ``dl``
-    computed as the Spark flush's JVM side computes them."""
-    pdf = pdf.assign(sha256=sha256_py(pdf["content"]), dl=doclen_py(pdf["content"]))
-    return pa.concat_tables(
-        [SEGDATA_ARROW.empty_table()]
-        + [pa.Table.from_pandas(build_segment_pdf(g, cfg), SEGDATA_ARROW, preserve_index=False)
-           for _, g in pdf.groupby("segment_id", sort=True)]
-    )
+def segment_rows(src, cfg: IndexConfig):
+    """The flush: ``src``'s (segment_id, ext_id, content) docs → segdata
+    rows, :func:`build_segment_pdf` per segment by ``frames.run_kernel`` —
+    an Arrow table for a pandas ``src``, the Spark plan for a DataFrame."""
+    return run_kernel(functools.partial(build_segment_pdf, cfg=cfg), SEGDATA_SCHEMA, src,
+                      by="segment_id")
 
 
 def _fold_terms_global(segdata: pa.Table) -> pa.Table:
@@ -465,20 +455,18 @@ def _fold_terms_global(segdata: pa.Table) -> pa.Table:
 
 
 def _spark_flush(
-    spark: SparkSession, docs: DataFrame, base: DataFrame, cat: IndexCatalog,
-    cfg: IndexConfig, segmenter: str,
-) -> None:
-    """The Spark flush of segdata. ONE shuffle (groupBy segment), ONE
+    spark: SparkSession, docs: DataFrame, base: DataFrame, cfg: IndexConfig, segmenter: str,
+) -> DataFrame:
+    """The Spark flush's segdata plan. ONE shuffle (groupBy segment), ONE
     pandas pass per segment emitting postings + doc_map + norms + term
-    dictionary + stats, ONE plain parquet write. Mirrors a Lucene flush
-    writing all per-segment files together — and keeps the serial
-    (driver-side) fraction of the build near zero, which is what the N→4N
-    scaling efficiency lives on. sha256/dl are computed JVM-side in the map
-    stage (codegen'd), not in Python. Hot-term skew cannot bite: work is
-    partitioned by segment, never by term. Dynamic-partition (partitionBy)
-    writes are NOT used anywhere — their rename-based commit degrades ~4x
-    from 2→32 concurrent writers (measured); sorted row-group min/max stats
-    give kind/term pruning instead."""
+    dictionary + stats, written by ONE plain parquet write. Mirrors a
+    Lucene flush writing all per-segment files together — and keeps the
+    serial (driver-side) fraction of the build near zero, which is what
+    the N→4N scaling efficiency lives on. Hot-term skew cannot bite: work
+    is partitioned by segment, never by term. Dynamic-partition
+    (partitionBy) writes are NOT used anywhere — their rename-based commit
+    degrades ~4x from 2→32 concurrent writers (measured); sorted row-group
+    min/max stats give kind/term pruning instead."""
     # a single small parquet file would serialize the whole build into one
     # task; spread the scan before the segment shuffle. File count proxies
     # scan parallelism without forcing an RDD conversion of the plan.
@@ -504,43 +492,32 @@ def _spark_flush(
             base = base.repartition(
                 spark.sparkContext.defaultParallelism, "segment_id"
             )
-    enriched = base.select(
-        "segment_id",
-        "ext_id",
-        "content",
-        F.sha2(F.col("content"), 256).alias("sha256"),
-        doclen_expr("content").cast("int").alias("dl"),
-    )
-    if segmenter == "partition":
-        # ZERO-shuffle build: input partition ≙ flush batch, exactly the
-        # reference's model (SURVEY §3.1: "input partition ≙ flush
-        # batch; executor task ≙ writer thread"). segment_id derives
-        # from the task partition id; oversized partitions are chunked.
-        # The fat `content` column never crosses the wire. Query results
-        # are segmentation-invariant (property-tested), but resume
-        # determinism requires a stable input layout — use the default
-        # "range" segmenter when ids must map to fixed segments.
-        rps = cfg.rows_per_segment
+    if segmenter != "partition":
+        return segment_rows(base, cfg)
+    # ZERO-shuffle build: input partition ≙ flush batch, exactly the
+    # reference's model (SURVEY §3.1: "input partition ≙ flush batch;
+    # executor task ≙ writer thread"). segment_id derives from the task
+    # partition id; oversized partitions are chunked. The fat `content`
+    # column never crosses the wire. Query results are
+    # segmentation-invariant (property-tested), but resume determinism
+    # requires a stable input layout — use the default "range" segmenter
+    # when ids must map to fixed segments.
+    rps = cfg.rows_per_segment
 
-        def per_partition(batches):
-            from pyspark import TaskContext
+    def per_partition(batches):
+        from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId()
-            pdfs = [b for b in batches if len(b)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True).sort_values("ext_id")
-            for i in range(0, len(pdf), rps):
-                chunk = pdf.iloc[i : i + rps].copy()
-                chunk["segment_id"] = PARTITION_BASE + pid * 100_000 + i // rps
-                yield build_segment_pdf(chunk, cfg)
+        pid = TaskContext.get().partitionId()
+        pdfs = [b for b in batches if len(b)]
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True).sort_values("ext_id")
+        for i in range(0, len(pdf), rps):
+            chunk = pdf.iloc[i : i + rps].copy()
+            chunk["segment_id"] = PARTITION_BASE + pid * 100_000 + i // rps
+            yield build_segment_pdf(chunk, cfg)
 
-        segdata = enriched.mapInPandas(per_partition, SEGDATA_SCHEMA)
-    else:
-        segdata = enriched.groupBy("segment_id").applyInPandas(
-            lambda pdf: build_segment_pdf(pdf, cfg), SEGDATA_SCHEMA
-        )
-    cat.write(segdata, "segdata", sort_within_partitions=SEGDATA_SORT)
+    return base.mapInPandas(per_partition, SEGDATA_SCHEMA)
 
 
 def text_config(cfg: IndexConfig, segmenter: str = "range") -> dict:
@@ -582,17 +559,16 @@ def build_index(
     )
     # segdata in hand when this call flushed it in the driver: the later
     # stages fold from it instead of reading it back
-    segdata = None
+    held = None
     if not (resume and cat.stage_done("segdata")):
-        small = small_docs(base) if segmenter == "range" else None
-        if small is not None:
-            small["segment_id"] = range_segments(
-                small["ext_id"].to_numpy(np.int64), cfg.rows_per_segment
-            )
-            segdata = flush_segdata(small, cfg)
-            cat.write_arrow(segdata, "segdata", sort_by=SEGDATA_SORT)
+        src = small_docs(base) if segmenter == "range" else None
+        if src is None:
+            segdata = _spark_flush(spark, docs, base, cfg, segmenter)
         else:
-            _spark_flush(spark, docs, base, cat, cfg, segmenter)
+            src["segment_id"] = range_segments(src["ext_id"].to_numpy(np.int64),
+                                               cfg.rows_per_segment)
+            segdata = held = segment_rows(src, cfg)
+        cat.write(segdata, "segdata", sort_by=SEGDATA_SORT)
         cat.define_views(SEGDATA_VIEWS, "segdata")
         cat.mark_stage("segdata")
 
@@ -600,21 +576,21 @@ def build_index(
     #    sorted by term → a query's idf lookup is one pruned scan of a
     #    compact table instead of an aggregation over per-segment rows)
     if not (resume and cat.stage_done("terms_global")):
-        if segdata is not None:
-            cat.write_arrow(_fold_terms_global(segdata), "terms_global", sort_by=["term"])
+        if held is not None:
+            cat.write(_fold_terms_global(held), "terms_global", sort_by=["term"])
         else:
             tg = (
                 cat.read(spark, "terms")
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
             )
-            cat.write(tg, "terms_global", sort_within_partitions=["term"])
+            cat.write(tg, "terms_global", sort_by=["term"])
         cat.mark_stage("terms_global")
 
     # -- stage: corpus stats + per-partition lineage (tiny scan of the
     #    stats rows; cached in the manifest so queries pay zero jobs)
     if not (resume and cat.stage_done("finalize")):
-        rows = segment_stats(cat, segdata)
+        rows = segment_stats(cat, held)
         n = sum(int(r["n_docs"]) for r in rows)
         toks = sum(int(r["n_tokens"]) for r in rows)
         lineage = {

@@ -122,6 +122,26 @@ def _put_arrow(at: pa.Table, out: str, sort_by: list[str] | None) -> None:
     pq.write_table(at, os.path.join(out, "part-00000.parquet"), row_group_size=rows)
 
 
+def _put(df: DataFrame | pa.Table, sort_by: list[str] | None):
+    """The writer of ``df`` into a new directory ``out``: an Arrow table as
+    one parquet file by pyarrow (:func:`_put_arrow`), a DataFrame by
+    Spark's parquet write; either sorted by ``sort_by`` within each file
+    (Spark's ``sortWithinPartitions``)."""
+    if isinstance(df, pa.Table):
+        return lambda out: _put_arrow(df, out, sort_by)
+
+    def put(out: str) -> None:
+        w = df.sortWithinPartitions(*sort_by) if sort_by else df
+        # small row groups: with sorted-within-partition data, parquet
+        # row-group min/max stats become an effective skip index for the
+        # pushed term/kind/segment filters — a selective query then reads
+        # a few MB instead of decompressing whole files (the same role
+        # file-level stats play in Iceberg)
+        w.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES).parquet(out)
+
+    return put
+
+
 def transactional(op):
     """Run ``op(spark, cat, ...)`` over ``cat.transaction()``: every write
     it makes, through ``cat``, commits in one manifest swap (or joins the
@@ -150,9 +170,9 @@ class IndexCatalog:
     @contextlib.contextmanager
     def transaction(self):
         """A catalog over a working copy of the manifest: ``write`` /
-        ``write_arrow`` / ``append`` / ``append_arrow`` / ``mark_stage`` /
-        ``set_config`` / ``define_views`` stage into it, and ``read`` /
-        ``exists`` / ``read_manifest`` see what is staged. The block's end
+        ``append`` / ``mark_stage`` / ``set_config`` / ``define_views``
+        stage into it, and ``read`` / ``exists`` / ``read_manifest`` see
+        what is staged. The block's end
         swaps the manifest once (one commit point) and then prunes the
         directories no entry references any more; an exception swaps
         nothing. A transaction inside a transaction joins it."""
@@ -246,51 +266,17 @@ class IndexCatalog:
 
     def write(
         self,
-        df: DataFrame,
-        table: str,
-        partition_by: list[str] | None = None,
-        sort_within_partitions: list[str] | None = None,
-        lineage: dict[str, Any] | None = None,
-        extra_entry: dict | None = None,
-    ) -> str:
-        """Write ``df`` as a NEW snapshot of ``table`` and commit atomically.
-        An Arrow table goes to :meth:`write_arrow` (one file, sorted by
-        ``sort_within_partitions``)."""
-        if isinstance(df, pa.Table):
-            return self.write_arrow(df, table, sort_within_partitions, lineage, extra_entry)
-
-        def put(out: str) -> None:
-            w = df
-            if sort_within_partitions:
-                w = w.sortWithinPartitions(*sort_within_partitions)
-            writer = w.write.mode("overwrite")
-            # small row groups: with sorted-within-partition data, parquet
-            # row-group min/max stats become an effective skip index for
-            # the pushed term/kind/segment filters — a selective query then
-            # reads a few MB instead of decompressing whole files (the same
-            # role file-level stats play in Iceberg)
-            writer = writer.option("parquet.block.size", ROW_GROUP_BYTES)
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(out)
-
-        with self.transaction() as tx:
-            return tx._put_snapshot(table, put, lineage, extra_entry)
-
-    def write_arrow(
-        self,
-        at: pa.Table,
+        df: DataFrame | pa.Table,
         table: str,
         sort_by: list[str] | None = None,
         lineage: dict[str, Any] | None = None,
         extra_entry: dict | None = None,
     ) -> str:
-        """:meth:`write` of a driver-held Arrow table: one parquet file
-        written by pyarrow, then the same commit."""
+        """Write ``df`` — a Spark DataFrame, or an Arrow table the driver
+        holds (:func:`_put`) — as a NEW snapshot of ``table`` and commit
+        atomically."""
         with self.transaction() as tx:
-            return tx._put_snapshot(
-                table, lambda out: _put_arrow(at, out, sort_by), lineage, extra_entry
-            )
+            return tx._put_snapshot(table, _put(df, sort_by), lineage, extra_entry)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """The committed rows of ``table`` (a view resolved over the table
@@ -354,12 +340,14 @@ class IndexCatalog:
 
     def append(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         table: str,
+        sort_by: list[str] | None = None,
         tag: str | None = None,
         extra_entry: dict | None = None,
     ) -> str:
-        """Append an increment to ``table`` (streaming micro-batch epochs).
+        """Append an increment (a Spark DataFrame or an Arrow table, as
+        :meth:`write` takes) to ``table`` (streaming micro-batch epochs).
         New directory + atomic manifest commit; a later full ``write``
         collapses increments into one snapshot.
 
@@ -367,34 +355,10 @@ class IndexCatalog:
         (a replayed streaming epoch — foreachBatch is at-least-once)
         REPLACES the previous increment instead of duplicating it. The new
         increment is written and committed BEFORE the old directory is
-        removed, so a crash at any point leaves a readable snapshot. An
-        Arrow table goes to :meth:`append_arrow`."""
-        if isinstance(df, pa.Table):
-            return self.append_arrow(df, table, tag=tag, extra_entry=extra_entry)
-
-        def put(out: str) -> None:
-            df.write.mode("overwrite").option(
-                "parquet.block.size", ROW_GROUP_BYTES
-            ).parquet(out)
-
+        removed, so a crash at any point leaves a readable snapshot."""
         with self.transaction() as tx:
-            return tx._put_append(table, put, lambda: tx.write(df, table), tag, extra_entry)
-
-    def append_arrow(
-        self,
-        at: pa.Table,
-        table: str,
-        sort_by: list[str] | None = None,
-        tag: str | None = None,
-        extra_entry: dict | None = None,
-    ) -> str:
-        """:meth:`append` of a driver-held Arrow table: one parquet file
-        written by pyarrow, then the same commit."""
-        with self.transaction() as tx:
-            return tx._put_append(
-                table, lambda out: _put_arrow(at, out, sort_by),
-                lambda: tx.write_arrow(at, table, sort_by), tag, extra_entry,
-            )
+            return tx._put_append(table, _put(df, sort_by),
+                                  lambda: tx.write(df, table, sort_by), tag, extra_entry)
 
     def read_arrow(self, table: str, columns: list[str] | None = None,
                    where: pc.Expression | None = None, tables: dict | None = None,

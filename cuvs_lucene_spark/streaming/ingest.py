@@ -27,20 +27,17 @@ via its stage checkpoint. The appends are also tagged ``epoch_N``, and
 :meth:`IndexCatalog.append` replaces (not duplicates) an increment of the
 same tag.
 
-A text epoch flushes on the same two tiers as ``segments.build_index``:
-in the driver when its frame holds at most
-``segments.DRIVER_FLUSH_MAX_DOCS`` rows (one read of the frame, then
-``segments.flush_segdata`` and, when the index has a positions sidecar,
-``positions.build_positions_pdf`` per uncovered segment, appended by
-pyarrow through ``IndexCatalog.append_arrow`` — no other Spark job), else
-as Spark ``applyInPandas`` jobs. The driver epoch reads nothing of the
-index, so its work does not grow with it and, unlike a delete or a
-positions refresh, it is not gated by
-``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``. A vector epoch takes the ANN
-build's two tiers: in the driver when ``ann.small_vectors`` reads its
-frame (at most ``ann.ANN_DRIVER_MAX_VALUES`` vector values), its flat and
-id rows flushed by ``ann.flush_flat`` and every maintained format's kernel
-called on its staged rows (read back by pyarrow), else on Spark.
+An epoch runs the batch build's kernels through ``frames.run_kernel``
+(``segments.segment_rows``, and ``positions.build_positions_pdf`` when the
+index has a positions sidecar; ``ann.build_flat_pdf`` and every maintained
+format's kernel for a vector epoch); the gates ``segments.small_docs`` and
+``ann.small_vectors`` choose their source's transport. A frame of at most
+``segments.DRIVER_FLUSH_MAX_DOCS`` rows (``ann.ANN_DRIVER_MAX_VALUES``
+vector values) is read once and flushed in the driver, its rows appended
+by pyarrow with no other Spark job; a larger one runs on Spark. The driver
+text epoch reads nothing of the index, so its work does not grow with it
+and, unlike a delete or a positions refresh, it is not gated by
+``segments.DRIVER_FLUSH_MAX_INDEX_BYTES``.
 """
 
 from __future__ import annotations
@@ -54,16 +51,13 @@ from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.frames import arrow_schema
-from cuvs_lucene_spark.functions.tokenize import doclen_expr
 from cuvs_lucene_spark.operators.segments import (
     SEGDATA_ARROW,
-    SEGDATA_SCHEMA,
     SEGDATA_SORT,
     SEGDATA_VIEWS,
-    build_segment_pdf,
-    flush_segdata,
     index_term_buckets,
     range_segments,
+    segment_rows,
     small_docs,
     text_config,
 )
@@ -77,48 +71,17 @@ def _epoch_base(epoch: int) -> int:
     return STREAM_BASE + (epoch + 1) * EPOCH_STRIDE
 
 
-def _with_epoch_segment(df: DataFrame, epoch: int, rows_per_segment: int) -> DataFrame:
-    """``df`` (with an ``ext_id``) plus its epoch-namespaced ``segment_id``
-    (see the module docstring) — the text and vector ingest share it."""
-    seg = (F.col("ext_id") / F.lit(rows_per_segment)).cast("long")
-    return df.withColumn(
-        "segment_id", F.lit(_epoch_base(epoch)) + F.pmod(seg, F.lit(EPOCH_STRIDE))
-    )
-
-
-def _spark_epoch(
-    spark: SparkSession, cat: IndexCatalog, base: DataFrame, cfg: IndexConfig, epoch: int
-) -> None:
-    """An epoch's flush on Spark: ``base`` (ext_id, content) → segdata (and
-    positions) appends, tagged ``epoch_N``."""
-    base = _with_epoch_segment(base, epoch, cfg.rows_per_segment)
-    enriched = base.select(
-        "segment_id",
-        "ext_id",
-        "content",
-        F.sha2(F.col("content"), 256).alias("sha256"),
-        doclen_expr("content").cast("int").alias("dl"),
-    )
-    segdata = enriched.groupBy("segment_id").applyInPandas(
-        lambda pdf: build_segment_pdf(pdf, cfg), SEGDATA_SCHEMA
-    ).sortWithinPartitions(*SEGDATA_SORT)
-    cat.append(segdata, "segdata", tag=f"epoch_{epoch}")
-    # positions sidecar maintenance: when the index opted into positions
-    # (build_positions ran), every epoch appends its segments' position
-    # rows too, in the epoch's transaction — so phrase queries never see a
-    # streamed segment the sidecar doesn't cover
-    if cat.exists("positions"):
-        from cuvs_lucene_spark.operators.positions import (
-            POS_SCHEMA,
-            build_positions_pdf,
+def _with_epoch_segment(src, epoch: int, rows_per_segment: int):
+    """``src`` (with an ``ext_id``; a pandas frame or a DataFrame) plus its
+    epoch-namespaced ``segment_id`` (see the module docstring) — the text
+    and vector ingest share it."""
+    if isinstance(src, DataFrame):
+        seg = (F.col("ext_id") / F.lit(rows_per_segment)).cast("long")
+        return src.withColumn(
+            "segment_id", F.lit(_epoch_base(epoch)) + F.pmod(seg, F.lit(EPOCH_STRIDE))
         )
-
-        pos = (
-            base.select("segment_id", "ext_id", F.col("content").alias("text"))
-            .groupBy("segment_id")
-            .applyInPandas(lambda p: build_positions_pdf(p), POS_SCHEMA)
-        )
-        cat.append(pos, "positions", tag=f"epoch_{epoch}")
+    seg = range_segments(src["ext_id"].to_numpy(np.int64), rows_per_segment)
+    return src.assign(segment_id=_epoch_base(epoch) + np.mod(seg, EPOCH_STRIDE))
 
 
 @transactional
@@ -146,7 +109,7 @@ def incremental_add(
         # snapshot and the views, so every epoch (including the first)
         # lands as a tagged, replace-on-redelivery increment
         cat.set_config(text_config(cfg))
-        cat.write_arrow(SEGDATA_ARROW.empty_table(), "segdata")
+        cat.write(SEGDATA_ARROW.empty_table(), "segdata")
         cat.define_views(SEGDATA_VIEWS, "segdata")
     # postings are bucketed as the index's existing ones (query pruning)
     cfg = dataclasses.replace(cfg, term_buckets=index_term_buckets(cat))
@@ -155,20 +118,17 @@ def incremental_add(
         F.col(content_col).cast("string").alias("content"),
     )
     small = small_docs(base)
-    if small is None:
-        _spark_epoch(spark, cat, base, cfg, epoch)
-    else:
-        small["segment_id"] = _epoch_base(epoch) + np.mod(
-            range_segments(small["ext_id"].to_numpy(np.int64), cfg.rows_per_segment),
-            EPOCH_STRIDE,
-        )
-        tag = f"epoch_{epoch}"
-        cat.append_arrow(flush_segdata(small, cfg), "segdata", sort_by=SEGDATA_SORT, tag=tag)
-        if len(small) and cat.exists("positions"):  # as in _spark_epoch
-            from cuvs_lucene_spark.operators.positions import positions_arrow
+    src = _with_epoch_segment(base if small is None else small, epoch, cfg.rows_per_segment)
+    tag = f"epoch_{epoch}"
+    cat.append(segment_rows(src, cfg), "segdata", sort_by=SEGDATA_SORT, tag=tag)
+    # positions sidecar maintenance: when the index opted into positions
+    # (build_positions ran), every epoch appends its segments' position
+    # rows too, in the epoch's transaction — so phrase queries never see a
+    # streamed segment the sidecar doesn't cover
+    if cat.exists("positions"):
+        from cuvs_lucene_spark.operators.positions import positions_rows
 
-            cat.append_arrow(positions_arrow(small.rename(columns={"content": "text"})),
-                             "positions", tag=tag)
+        cat.append(positions_rows(src), "positions", tag=tag)
     cat.mark_stage(f"epoch_{epoch}", n_epoch=epoch)
 
 
@@ -204,8 +164,7 @@ def incremental_add_vectors(
         _index_metric,
         _mark_bf_fallback,
         ann_config,
-        build_flat_pdf,
-        flush_flat,
+        flat_rows,
         small_vectors,
         validate_vectors,
     )
@@ -225,32 +184,25 @@ def incremental_add_vectors(
     ]
     for table, schema in seeds:
         if not cat.exists(table):
-            cat.write_arrow(arrow_schema(schema).empty_table(), table)
+            cat.write(arrow_schema(schema).empty_table(), table)
     tag = f"ann_epoch_{epoch}"
     seg_base = _epoch_base(epoch)
     if small is None:
-        base = _with_epoch_segment(
-            vectors.select(
-                F.col(id_col).cast("long").alias("ext_id"),
-                F.col(vector_col).alias("vector"),
-            ),
-            epoch, cfg.rows_per_segment,
+        src = vectors.select(
+            F.col(id_col).cast("long").alias("ext_id"),
+            F.col(vector_col).alias("vector"),
         )
-        flat = base.groupBy("segment_id").applyInPandas(build_flat_pdf, FLAT_SCHEMA)
-        ids = base.select("segment_id", "ext_id")
         in_epoch = (F.col("segment_id") >= seg_base) & (
             F.col("segment_id") < seg_base + EPOCH_STRIDE
         )
-        src = lambda t: cat.read(spark, t).filter(in_epoch)
+        staged = lambda t: cat.read(spark, t).filter(in_epoch)
     else:
-        small["segment_id"] = seg_base + np.mod(
-            range_segments(small["ext_id"].to_numpy(), cfg.rows_per_segment), EPOCH_STRIDE
-        )
-        _, flat, ids = flush_flat(small)
+        src = small
         in_epoch = (pc.field("segment_id") >= seg_base) & (
             pc.field("segment_id") < seg_base + EPOCH_STRIDE
         )
-        src = lambda t: cat.read_arrow(t, where=in_epoch).to_pandas()
+        staged = lambda t: cat.read_arrow(t, where=in_epoch).to_pandas()
+    flat, ids = flat_rows(_with_epoch_segment(src, epoch, cfg.rows_per_segment))
     cat.append(flat, "ann_flat", tag=tag)
     # the DataFrame-filter tier's row-level map follows every flat append
     # (its blob join is an inner join)
@@ -261,7 +213,7 @@ def incremental_add_vectors(
     # committed IVF lists instead of re-running their k-means). Formats
     # follow the CATALOG's metric (set at first epoch / batch build), never
     # the per-call cfg — similarity is index state
-    _append_formats(cat, cfg, _index_metric(cat), src, tag)
+    _append_formats(cat, cfg, _index_metric(cat), staged, tag)
     _mark_bf_fallback(cat)
     cat.mark_stage(f"ann_epoch_{epoch}", n_epoch=epoch)
 

@@ -16,7 +16,7 @@ import cuvs_lucene_spark.sources.catalog as C
 from cuvs_lucene_spark.config import IndexConfig
 from cuvs_lucene_spark.fixtures import generate_documents_pdf
 from cuvs_lucene_spark.frames import local_frame, small_arrow
-from cuvs_lucene_spark.functions.tokenize import doclen_expr, doclen_py
+from cuvs_lucene_spark.functions.tokenize import doclen_expr
 from cuvs_lucene_spark.operators.deletes import delete_docs
 from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
 from cuvs_lucene_spark.sources.catalog import IndexCatalog
@@ -68,8 +68,9 @@ def _rows(spark, cat, table):
 
 
 def test_driver_equivalents_match_spark_expressions(spark):
-    """``sha256_py`` / ``doclen_py`` equal the Spark flush's ``F.sha2``
-    and ``doclen_expr`` value for value, null staying null."""
+    """``sha256_py`` and the flush kernel's ``sha256`` / ``dl`` equal
+    Spark's ``F.sha2`` and ``doclen_expr`` value for value; a null content
+    indexes as an empty document (sha256 null, dl 0)."""
     texts = ["", "Hello, World!", "snake_case x86_64 ÀÉÎ", "İstanbul KELVINK",
              "emoji 🙂 tabs\tand\nnewlines", "  UPPER lower 123 ", None, "ﬁne straße ΣΑΣ"]
     pdf = pd.DataFrame({"t": texts})
@@ -77,7 +78,29 @@ def test_driver_equivalents_match_spark_expressions(spark):
         F.sha2("t", 256).alias("sha"), doclen_expr("t").cast("int").alias("dl")
     ).collect()
     assert S.sha256_py(pdf["t"]) == [r["sha"] for r in got]
-    assert [None if pd.isna(v) else int(v) for v in doclen_py(pdf["t"])] == [r["dl"] for r in got]
+    seg = S.build_segment_pdf(pd.DataFrame(
+        {"segment_id": 0, "ext_id": range(len(texts)), "content": texts}), CFG)
+    docs = seg[seg["kind"] == "doc"].sort_values("doc_id")
+    assert docs["sha256"].tolist() == [r["sha"] for r in got]
+    assert docs["dl"].tolist() == [r["dl"] or 0 for r in got]
+
+
+def test_null_content_is_an_empty_doc_on_both_tiers(spark, tmp_path, monkeypatch):
+    """A null content indexes as an empty document on both flush tiers
+    (dl 0, sha256 null): the same segdata rows and corpus stats, whose
+    token count sums the other docs' lengths."""
+    rows = [(i, None if i == 4 else "alpha beta" + " gamma" * i) for i in range(10)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    kw = dict(content_col="text", id_col="doc_id")
+    driver = S.build_index(spark, docs, str(tmp_path / "driver"), CFG, **kw)
+    monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_DOCS", 0)
+    spark_tier = S.build_index(spark, docs, str(tmp_path / "spark"), CFG, **kw)
+    assert _rows(spark, driver, "segdata") == _rows(spark, spark_tier, "segdata")
+    for cat in (driver, spark_tier):
+        stats = cat.read_manifest()["stages"]["finalize"]["corpus_stats"]
+        assert stats == {"n_docs": 10, "n_tokens": sum(2 + i for i in range(10) if i != 4)}
+        null_doc = cat.read(spark, "doc_map").where("ext_id = 4").select("sha256", "dl")
+        assert [tuple(r) for r in null_doc.collect()] == [(None, 0)]
 
 
 def test_flush_tiers_commit_identical_rows(spark, tiers):

@@ -607,6 +607,75 @@ def test_ann_driver_writes_job_counts(spark, tmp_path):
     assert sorted(cat.read_arrow("ann_flat", ["n_vecs"]).column(0).to_pylist()) == [1, 40, 150, 150]
 
 
+WRITE_JOB_PINS = {  # Spark jobs of each write on the Spark tier (bounds 0)
+    "build_index": 5, "build_positions": 8, "epoch": 4,
+    "refresh_positions": 17, "build_ann": 6, "epoch_vectors": 7,
+}
+
+
+@pytest.fixture(scope="module")
+def write_inputs(spark):
+    """Tiny generated write inputs: 240 docs (segments of 100) and an
+    epoch of 40, the 8-d vectors of ids below 300 (segments of 150) and an
+    epoch of those of the next 100 ids (``generate_embeddings`` gives about
+    70% of ids a vector)."""
+    from cuvs_lucene_spark.fixtures import generate_documents_pdf, generate_embeddings
+
+    pdf = generate_documents_pdf(280, seed=5)[["ext_id", "content"]]
+    docs = spark.createDataFrame(pdf.iloc[:240])
+    epoch = spark.createDataFrame(pdf.iloc[240:].assign(ext_id=lambda p: p.ext_id + 10**5))
+    vecs = generate_embeddings(spark, 400, dim=8, seed=5)
+    epoch_vecs = vecs.where("ext_id >= 300").selectExpr("ext_id + 1000 AS ext_id", "vector")
+    return docs, epoch, vecs.where("ext_id < 300"), epoch_vecs
+
+
+def test_spark_tier_write_job_counts(spark, tmp_path, monkeypatch, write_inputs):
+    """Above the driver bounds (patched to 0) every per-segment write runs
+    on Spark, in a pinned number of jobs: the text build, the positions
+    build, an epoch with its positions append, a positions refresh, the
+    ANN build and a vector epoch."""
+    import cuvs_lucene_spark.operators.ann as A
+    import cuvs_lucene_spark.operators.segments as S
+    from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
+    from cuvs_lucene_spark.streaming.ingest import incremental_add, incremental_add_vectors
+
+    monkeypatch.setattr(S, "DRIVER_FLUSH_MAX_DOCS", 0)
+    monkeypatch.setattr(A, "ANN_DRIVER_MAX_VALUES", 0)
+    docs, epoch, vecs, epoch_vecs = write_inputs
+    sc = spark.sparkContext
+    counts, got = {}, {}
+
+    def jobs(name, fn):
+        group = f"spark_write_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            got[name] = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        counts[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    text = str(tmp_path / "text")
+    jobs("build_index", lambda: S.build_index(spark, docs, text, CFG))
+    cat = got["build_index"]
+    jobs("build_positions", lambda: build_positions(
+        spark, cat, docs, CFG, content_col="content", id_col="ext_id"))
+    jobs("epoch", lambda: incremental_add(spark, cat, epoch, CFG, epoch=0))
+    other = S.build_index(spark, docs, str(tmp_path / "refresh"), CFG)
+    incremental_add(spark, other, epoch, CFG, epoch=0)
+    jobs("refresh_positions", lambda: refresh_positions(
+        spark, other, docs.unionByName(epoch), CFG, content_col="content", id_col="ext_id"))
+    jobs("build_ann", lambda: A.build_ann(
+        spark, vecs, str(tmp_path / "ann"), CFG, rows_per_segment=150))
+    ann = got["build_ann"]
+    jobs("epoch_vectors", lambda: incremental_add_vectors(spark, ann, epoch_vecs, CFG, 0))
+    assert got["refresh_positions"] == 4
+    for c in (cat, other):
+        assert c.read(spark, "positions").select("segment_id").distinct().count() == 4
+    assert ann.read_arrow("ann_flat", ["segment_id"]).num_rows == 3
+    assert counts == WRITE_JOB_PINS, counts
+
+
 def test_reads_head_only_over_row_wise_plans(spark, tmp_path):
     """A limit reads only a head of a frame built by scans and row-wise
     operators; not of one behind an aggregate, join, sort, repartition,

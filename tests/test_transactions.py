@@ -42,15 +42,15 @@ def test_transaction_stages_then_swaps_once(tmp_path):
     and prunes what no entry references; a failing block swaps nothing."""
     cat = IndexCatalog(str(tmp_path / "c"))
     rows = pa.table({"segment_id": pa.array([1, 2], pa.int64())})
-    cat.write_arrow(rows, "t")
+    cat.write(rows, "t")
     assert cat.commit_points() == [1]
     with cat.transaction() as tx:
-        tx.append_arrow(rows, "t", tag="a")
-        tx.write_arrow(rows, "u")
+        tx.append(rows, "t", tag="a")
+        tx.write(rows, "u")
         tx.mark_stage("s")
         tx.set_config({"k": 1})
         with tx.transaction() as inner:  # a nested transaction joins
-            inner.write_arrow(rows, "t")
+            inner.write(rows, "t")
         assert tx.exists("u") and tx.stage_done("s") and tx.read_arrow("t").num_rows == 2
         assert not cat.exists("u") and not cat.stage_done("s")
         assert cat.commit_points() == [1]
@@ -62,7 +62,7 @@ def test_transaction_stages_then_swaps_once(tmp_path):
         ["snap-000001", "snap-000003"]  # the staged increment is pruned
     with pytest.raises(RuntimeError, match="fail"):
         with cat.transaction() as tx:
-            tx.write_arrow(rows, "v")
+            tx.write(rows, "v")
             raise RuntimeError("fail")
     assert cat.read_manifest() == m and cat.commit_points() == [1, 2]
 
@@ -78,8 +78,8 @@ def test_concurrent_puts_and_transactions_lose_no_entry(tmp_path):
     sys.setswitchinterval(1e-5)
     try:
         with cat.transaction() as tx:
-            A._concurrently(*(lambda i=i: tx.write_arrow(rows, f"a{i}") for i in range(8)))
-        A._concurrently(*(lambda i=i: cat.write_arrow(rows, f"b{i}") for i in range(8)))
+            A._concurrently(*(lambda i=i: tx.write(rows, f"a{i}") for i in range(8)))
+        A._concurrently(*(lambda i=i: cat.write(rows, f"b{i}") for i in range(8)))
     finally:
         sys.setswitchinterval(interval)
     assert sorted(cat.read_manifest()["tables"]) == sorted(
@@ -211,7 +211,7 @@ def test_text_epoch_crash_publishes_nothing(spark, tmp_path, text_root):
     are visible, and its stage is not done."""
     epoch = spark.createDataFrame(DOCS[20:], "doc_id long, text string")
     _crash_then_retry(
-        spark, tmp_path, text_root, "append_arrow",
+        spark, tmp_path, text_root, "append",
         lambda cat: incremental_add(spark, cat, epoch, TCFG, 0,
                                     content_col="text", id_col="doc_id"),
         _text_answers,

@@ -4,10 +4,16 @@ modes (``ann_*``) over a small generated index built in a temp dir, and
 the BM25 query family (``bm25_*``) over an index of the sf0.001 corpus
 (the ``sf0.001`` sibling of ``SPARK_GRAFT_SF_DIR``) built in a temp dir.
 Index plans are the Spark tier's: the resident budgets are set to 0.
+The ``write`` op records, as ``write_<op>_<table>``, the DataFrame each
+per-segment write hands to ``IndexCatalog.write`` / ``append`` with the
+driver bounds (``segments.DRIVER_FLUSH_MAX_DOCS``,
+``ann.ANN_DRIVER_MAX_VALUES``) set to 0: a text build, a positions build,
+an epoch with its positions append, a positions refresh, an ANN build and
+a vector epoch over tiny generated inputs in a temp dir.
 
 Usage: python tools/capture_plans.py <before|after> [op ...]
 An op argument ``ann`` selects every ``ann_*`` plan, ``bm25`` every
-``bm25_*`` plan.
+``bm25_*`` plan, ``write`` every ``write_*`` plan (and only when named).
 """
 
 from __future__ import annotations
@@ -126,6 +132,65 @@ def bm25_plans(spark, root: str) -> dict:
     }
 
 
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def write_plans(spark, root: str) -> dict:
+    """The formatted plan of every DataFrame the Spark-tier writes hand to
+    ``IndexCatalog.write`` / ``append``, keyed ``write_<op>_<table>``."""
+    from cuvs_lucene_spark.config import IndexConfig
+    from cuvs_lucene_spark.fixtures import generate_documents_pdf, generate_embeddings
+    from cuvs_lucene_spark.operators import ann as A
+    from cuvs_lucene_spark.operators import segments as S
+    from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
+    from cuvs_lucene_spark.sources.catalog import IndexCatalog
+    from cuvs_lucene_spark.streaming.ingest import incremental_add, incremental_add_vectors
+
+    S.DRIVER_FLUSH_MAX_DOCS = A.ANN_DRIVER_MAX_VALUES = 0
+    cfg = IndexConfig(rows_per_segment=100, block_size=16, term_buckets=8)
+    pdf = generate_documents_pdf(280, seed=5)[["ext_id", "content"]]
+    docs = spark.createDataFrame(pdf.iloc[:240])
+    epoch = spark.createDataFrame(pdf.iloc[240:].assign(ext_id=lambda p: p.ext_id + 10**5))
+    vecs = generate_embeddings(spark, 400, dim=8, seed=5)
+    epoch_vecs = vecs.where("ext_id >= 300").selectExpr("ext_id + 1000 AS ext_id", "vector")
+    plans, op = {}, [None]
+    real = {name: getattr(IndexCatalog, name) for name in ("write", "append")}
+
+    def spy(name):
+        def wrapped(cat, df, table, *args, **kwargs):
+            if op[0] is not None and not hasattr(df, "num_rows"):  # a DataFrame
+                plans[f"write_{op[0]}_{table}"] = _explain(df)
+            return real[name](cat, df, table, *args, **kwargs)
+        return wrapped
+
+    def run(name, fn):
+        op[0] = name
+        try:
+            return fn()
+        finally:
+            op[0] = None
+
+    for name in real:
+        setattr(IndexCatalog, name, spy(name))
+    try:
+        cat = run("build_index", lambda: S.build_index(spark, docs, f"{root}/text", cfg))
+        run("build_positions", lambda: build_positions(
+            spark, cat, docs, cfg, content_col="content", id_col="ext_id"))
+        run("epoch", lambda: incremental_add(spark, cat, epoch, cfg, epoch=0))
+        other = S.build_index(spark, docs, f"{root}/refresh", cfg)
+        incremental_add(spark, other, epoch, cfg, epoch=0)
+        run("refresh_positions", lambda: refresh_positions(
+            spark, other, docs.unionByName(epoch), cfg, content_col="content", id_col="ext_id"))
+        ann = run("build_ann", lambda: A.build_ann(
+            spark, vecs.where("ext_id < 300"), f"{root}/ann", cfg, rows_per_segment=150))
+        run("epoch_vectors", lambda: incremental_add_vectors(spark, ann, epoch_vecs, cfg, 0))
+    finally:
+        for name, fn in real.items():
+            setattr(IndexCatalog, name, fn)
+    return plans
+
+
 def main():
     tag = sys.argv[1]
     only = set(sys.argv[2:])
@@ -181,14 +246,16 @@ def main():
         plans.update(ann_plans(spark, os.path.join(tmp, "index")))
     if not only or "bm25" in only or any(o.startswith("bm25_") for o in only):
         plans.update(bm25_plans(spark, os.path.join(tmp, "bm25_index")))
+    texts = {}
+    if "write" in only:
+        texts = write_plans(spark, os.path.join(tmp, "write"))
     for name, fn in plans.items():
         family = name.split("_")[0]
         if only and name not in only and not (family in ("ann", "bm25") and family in only):
             continue
-        df = fn()
-        txt = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        ).replace(tmp, "<tmp>")  # so before/after captures diff cleanly
+        texts[name] = _explain(fn())
+    for name, txt in texts.items():
+        txt = txt.replace(tmp, "<tmp>")  # so before/after captures diff cleanly
         path = os.path.join(OUT, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(txt)
