@@ -7,16 +7,20 @@ over postings + norms (one segment-grouped pandas UDF) emitting exact
 per-segment top-k partials → global ``orderBy(score desc, ext_id asc)
 .limit(k)``*.
 
-One scoring core, as Lucene runs every scored query as a weight over one
-BM25 similarity. Each scored query — a term disjunction or conjunction, a
-boosted query, ``DisjunctionMaxQuery``, ``SynonymQuery``, a scored
-``BooleanQuery``, and every query of a batch — compiles to one normalized
-spec (:func:`_compile`: terms, a combiner, clause constraints, k), bound
-to live statistics as per-term weights idf × boost (:func:`_weigh`). A
-single query is a batch of one. One driver path (:func:`_scored`) reads
-the filter head and picks one of two tiers; one Spark-free numpy kernel
-(:func:`_score_batch_queries`) scores a segment on both as a dense
-per-doc accumulation followed by an exact tie-broken top-k. There is no
+One core for scored and match-only queries, as Lucene runs every query
+as a weight over one BM25 similarity, a match-only one with
+``ScoreMode.COMPLETE_NO_SCORES``. Each query — a term disjunction or
+conjunction, a boosted query, ``DisjunctionMaxQuery``, ``SynonymQuery``,
+a scored ``BooleanQuery``, every query of a batch, and the match sets of
+``term_docs``, the ``boolean_*`` family, ``hit_count`` and the
+multi-term ``*_docs`` (:func:`boolean_query`: every match, scores
+dropped) — compiles to one normalized spec (:func:`_compile`: terms, a
+combiner, clause constraints, k), bound to live statistics as per-term
+weights idf × boost (:func:`_weigh`). A single query is a batch of one.
+One driver path (:func:`_scored`) reads the filter head and picks one of
+two tiers; one Spark-free numpy kernel (:func:`_score_batch_queries`)
+scores a segment on both as a dense per-doc accumulation followed by an
+exact tie-broken top-k. There is no
 block-max pruning: the dense kernel measured faster on every query shape
 tried, on segments of 20k and 100k docs.
 
@@ -58,14 +62,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuvs_lucene_spark.config import IndexConfig, shuffle_partitions
-from cuvs_lucene_spark.frames import head_arrow, local_frame
+from cuvs_lucene_spark.frames import LocalResult, arrow_frame, head_arrow, local_frame
 from cuvs_lucene_spark.functions.varint import varint_decode
 from cuvs_lucene_spark.operators import resident as R
 from cuvs_lucene_spark.operators.segments import corpus_stats, index_term_buckets, term_bucket_py
 from cuvs_lucene_spark.sources.catalog import IndexCatalog, stats_version
 
 SCORE_SCHEMA = "segment_id long, ext_id long, score double"
-MATCH_SCHEMA = "segment_id long, ext_id long"
 FILTER_BROADCAST_MAX = 200_000  # allowed-set size above which the filter
                                 # goes through doc_map blobs, not a closure
 NORMS_BROADCAST_MAX_DOCS = 2_000_000  # ≤ ~24MB of packed norms: ship them
@@ -341,19 +344,24 @@ def _segment_scorer(
 
 
 def _compile(s: dict, label: str = "") -> dict | None:
-    """One query spec → the normalized spec every scored query runs as,
-    or None when Lucene's clause rules say it matches nothing.
+    """One query spec → the normalized spec every query runs as, scored
+    or match-only, or None when Lucene's clause rules say it matches
+    nothing.
 
     A plain spec ``{"terms", "mode", "k"}``: mode ``or`` (any term) or
     ``and`` (every term required). A boolean spec ``{"must", "should",
-    "exclude", "min_should_match", "k"}`` (scored ``BooleanQuery``): msm
-    None is 0 with must clauses, else 1; a pure-should query needs at
-    least one match; an msm above the should count matches nothing. The
-    internal keys ``comb`` (sum | dismax | synonym), ``tie`` and
-    ``boosts`` pass through. ``label`` prefixes validation errors."""
+    "exclude", "min_should_match", "k"}`` (``BooleanQuery``): msm None is
+    0 with must clauses, else 1; a pure-should query needs at least one
+    match; an msm above the should count matches nothing. Its clause
+    lists may overlap (a match-only query); a scored one is checked by
+    :func:`_disjoint` first. The internal keys ``comb`` (sum | dismax |
+    synonym), ``tie``, ``boosts`` and ``scores`` (False: a match-only
+    query, Lucene's ``COMPLETE_NO_SCORES``) pass through. ``label``
+    prefixes validation errors."""
     where = f"{label}: " if label else ""
     base = {"comb": s.get("comb", "sum"), "tie": float(s.get("tie", 0.0)),
-            "boosts": s.get("boosts") or {}, "k": int(s.get("k", 10))}
+            "boosts": s.get("boosts") or {}, "k": int(s.get("k", 10)),
+            "scores": bool(s.get("scores", True))}
     if not ({"must", "should", "exclude", "min_should_match"} & set(s)):
         mode = s.get("mode", "or")
         if mode not in ("or", "and"):
@@ -367,9 +375,6 @@ def _compile(s: dict, label: str = "") -> dict | None:
     must, should, exclude = (
         list(dict.fromkeys(s.get(c, ()))) for c in ("must", "should", "exclude")
     )
-    overlap = (set(must) | set(should)) & set(exclude) | (set(must) & set(should))
-    if overlap:
-        raise ValueError(f"{where}terms appear in more than one clause list: {sorted(overlap)}")
     if not must and not should:
         raise ValueError(f"{where}at least one positive clause (must / should) is required")
     msm = s.get("min_should_match")
@@ -378,8 +383,20 @@ def _compile(s: dict, label: str = "") -> dict | None:
         msm = max(1, msm)  # pure-SHOULD still needs one match (Lucene)
     if msm > len(should):
         return None
-    return {**base, "terms": must + should, "must": must, "should": should,
-            "msm": msm, "exclude": exclude}
+    return {**base, "terms": list(dict.fromkeys(must + should)), "must": must,
+            "should": should, "msm": msm, "exclude": exclude}
+
+
+def _disjoint(s: dict, label: str = "") -> dict:
+    """A scored boolean spec ``s``, checked: a term in two of its clause
+    lists would score twice (or score and veto), so it raises
+    ``ValueError``."""
+    must, should, exclude = (set(s.get(c, ())) for c in ("must", "should", "exclude"))
+    overlap = (must | should) & exclude | (must & should)
+    if overlap:
+        where = f"{label}: " if label else ""
+        raise ValueError(f"{where}terms appear in more than one clause list: {sorted(overlap)}")
+    return s
 
 
 def _weigh(s: dict, idf_of: dict[str, float], n: int, df: dict[str, int]) -> dict | None:
@@ -421,12 +438,19 @@ def _spark_partials(
     stats, df and idf; the norms tier (the executor-local norms broadcast
     when there are no tombstones and no blob filter, else the aux
     cogroup, which also carries a filter above ``FILTER_BROADCAST_MAX``).
-    The scan feeds the scorer, grouped by segment."""
+    The scan feeds the scorer, grouped by segment. Match-only specs
+    (``scores`` False) read no statistic: any positive weight gives the
+    same match set, and the scorer's alive mask already drops the dead
+    docs of a term, so they skip the live N / df jobs."""
     postings = _query_postings(spark, cat, terms)
-    n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, aux_filter)
+    if any(s["scores"] for s in specs.values()):
+        n, avgdl, df = _live_stats_and_df(spark, cat, terms, cfg, postings, aux_filter)
+        idf_of = {t: idf(n, d) for t, d in df.items() if d > 0}
+    else:
+        (n, _), avgdl, df = corpus_stats(cat), 1.0, {}
+        idf_of = dict.fromkeys(terms, 1.0)
     if n == 0:
         return None
-    idf_of = {t: idf(n, d) for t, d in df.items() if d > 0}
     specs = {q: w for q, s in specs.items() if (w := _weigh(s, idf_of, n, df)) is not None}
     if not specs:
         return None
@@ -1160,8 +1184,9 @@ def bm25_scored_matches(
     the result is the full match set, unsorted — downstream operators
     (grouping windows, collapse heads) impose their own order. Cost is
     ∝ the query terms' posting sizes (never the corpus), per-segment
-    parallel; the output size is the match-set size, the same class as
-    ``term_docs``/``boolean_query`` match sets."""
+    parallel; the output size is the match-set size. :func:`boolean_query`
+    (every match-only query) runs the same pass on its compiled
+    ``BooleanQuery`` spec and keeps only the ext_ids."""
     return bm25_topk(
         spark, cat, query_terms, k=_ALL_MATCHES_K, mode=mode, cfg=cfg,
         filter_ext_ids=filter_ext_ids, boosts=boosts, _no_global_sort=True,
@@ -1245,8 +1270,8 @@ def bm25_boolean_topk(
     for all clause terms (exclude terms ride the scan as a veto mask),
     per-segment scoring, global top-k (score desc, ext_id asc).
     Returns DataFrame(ext_id, score)."""
-    spec = _compile({"must": must, "should": should, "exclude": exclude,
-                     "min_should_match": min_should_match, "k": k})
+    spec = _compile(_disjoint({"must": must, "should": should, "exclude": exclude,
+                               "min_should_match": min_should_match, "k": k}))
     return _topk(spark, cat, spec, cfg, filter_ext_ids, visited_limit)
 
 
@@ -1267,7 +1292,8 @@ def bm25_topk_batch(
     [...], "exclude": [...], "min_should_match": m, "k": k}`` with
     :func:`bm25_boolean_topk` semantics (MUST_NOT terms ride the shared
     scan as veto masks and never score)."""
-    specs = {qid: c for qid, s in qspecs.items() if (c := _compile(s, qid)) is not None}
+    specs = {qid: c for qid, s in qspecs.items()
+             if (c := _compile(_disjoint(s, qid), qid)) is not None}
     return _scored(spark, cat, specs, cfg or IndexConfig(), batch=True)
 
 
@@ -1287,63 +1313,11 @@ def boolean_and(
     terms: list[str],
     cfg: IndexConfig | None = None,
 ) -> DataFrame:
-    """Boolean AND (H5): posting-list intersection → DataFrame(ext_id).
-
-    Per segment: decode each term's postings (already sorted), zipper-
-    intersect with numpy ``intersect1d`` (sorted-array fast path), skip
-    non-overlapping blocks via first/last_doc metadata.
-    """
-    cfg = cfg or IndexConfig()
-    terms = list(dict.fromkeys(terms))
-    postings = _query_postings(spark, cat, terms)
-    aux = _aux_df(spark, cat, None)
-    n_terms = len(terms)
-
-    def intersect(p: pd.DataFrame, a: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"segment_id": pd.Series([], dtype="int64"),
-             "ext_id": pd.Series([], dtype="int64")}
-        )
-        if p.empty or a.empty:
-            return empty
-        seg = int(p["segment_id"].iloc[0])
-        dls, ext_ids, tomb, allowed = _aux_arrays(a)
-        if ext_ids is None:
-            return empty
-        pt = _group_postings(p, set(terms))
-        if len(pt) < n_terms:
-            return empty
-        cur = None
-        # smallest term first (by total n) to keep the running set tiny
-        sizes = {t: int(g["n"].sum()) for t, g in pt.items()}
-        for t in sorted(pt, key=lambda t: sizes[t]):
-            g = pt[t]
-            if cur is not None and cur.size == 0:
-                return empty
-            keep = np.arange(g["block_id"].size)
-            if cur is not None:
-                lo, hi = cur.min(), cur.max()
-                keep = np.flatnonzero((g["last_doc"] >= lo) & (g["first_doc"] <= hi))
-            parts = [
-                np.cumsum(varint_decode(g["doc_deltas"][j]), dtype=np.int64)
-                for j in keep
-            ]
-            docs = np.concatenate(parts) if parts else np.empty(0, np.int64)
-            cur = docs if cur is None else np.intersect1d(cur, docs, assume_unique=True)
-        if cur is None or cur.size == 0:
-            return empty
-        alive = _alive_mask(dls.size, tomb, allowed)
-        cur = cur[alive[cur]]
-        return pd.DataFrame(
-            {"segment_id": np.full(cur.size, seg, dtype=np.int64), "ext_id": ext_ids[cur]}
-        )
-
-    return (
-        postings.groupby("segment_id")
-        .cogroup(aux.groupby("segment_id"))
-        .applyInPandas(lambda _k, p, a: intersect(p, a), MATCH_SCHEMA)
-        .select("ext_id")
-    )
+    """Boolean AND (H5): live docs containing every term (MUST) →
+    DataFrame(ext_id); no terms match nothing."""
+    if not terms:
+        return local_frame(spark, "ext_id long")
+    return boolean_query(spark, cat, must=terms, cfg=cfg)
 
 
 def boolean_query(
@@ -1355,100 +1329,35 @@ def boolean_query(
     cfg: IndexConfig | None = None,
     min_should_match: int | None = None,
 ) -> DataFrame:
-    """Lucene ``BooleanQuery`` MATCHING semantics as set algebra over the
-    posting lists (H5 generalized): ``must`` = every term required (MUST),
-    ``any_of`` = SHOULD clauses of which at least ``min_should_match``
-    must match (``BooleanQuery.Builder.setMinimumNumberShouldMatch``),
-    ``exclude`` = none may match (MUST_NOT). Lucene's rules apply
-    exactly: at least one positive clause is required (a pure MUST_NOT
-    query matches nothing); ``min_should_match=None`` is the Builder
-    default — 0 with MUST clauses present (SHOULD is then optional),
-    1 otherwise; an EXPLICIT value is honored strictly, so a value
-    greater than the SHOULD clause count matches nothing (including any
-    positive value with zero SHOULD clauses). One pruned postings scan
-    for the union of all clause terms; per segment the sorted doc-id
-    runs combine with numpy set ops (the >=m SHOULD count is a
-    unique-with-counts over the concatenated SHOULD doc runs); tombstones
-    apply. Returns DataFrame(ext_id)."""
-    cfg = cfg or IndexConfig()
-    must = list(dict.fromkeys(must))
-    any_of = list(dict.fromkeys(any_of))
-    exclude = list(dict.fromkeys(exclude))
+    """Lucene ``BooleanQuery`` MATCHING semantics (H5 generalized):
+    ``must`` = every term required (MUST), ``any_of`` = SHOULD clauses of
+    which at least ``min_should_match`` must match
+    (``BooleanQuery.Builder.setMinimumNumberShouldMatch``), ``exclude`` =
+    none may match (MUST_NOT). Lucene's rules apply exactly: at least one
+    positive clause is required (a pure MUST_NOT query raises
+    ``ValueError``); ``min_should_match=None`` is the Builder default — 0
+    with MUST clauses present (SHOULD is then optional), 1 otherwise; an
+    EXPLICIT value is honored strictly, so a value greater than the
+    SHOULD clause count matches nothing. The clause lists may overlap.
+
+    As Lucene runs a match-only query through the scored query's
+    ``Weight`` with ``ScoreMode.COMPLETE_NO_SCORES``, this is the scoring
+    core's query: one compiled spec run by :func:`_topk` with every match
+    kept, unsorted (as :func:`bm25_scored_matches`), its scores dropped.
+    So both tiers apply tombstones and the clause rules in the one
+    segment kernel, and a warm resident query runs no Spark job and makes
+    no Py4J call. On the Spark tier it reads no live statistic (see
+    :func:`_spark_partials`). Returns DataFrame(ext_id), every live match
+    once."""
     if not must and not any_of:
-        raise ValueError(
-            "at least one positive clause (must / any_of) is required"
-        )
-    m_should = 0 if min_should_match is None else int(min_should_match)
-    if not must:
-        m_should = max(1, m_should)  # pure-SHOULD still needs one match
-    if m_should > len(any_of):
-        return local_frame(spark, "ext_id long")  # Lucene: no hits
-    all_terms = list(dict.fromkeys([*must, *any_of, *exclude]))
-    postings = _query_postings(spark, cat, all_terms)
-    aux = _aux_df(spark, cat, None)
-
-    def ev(p: pd.DataFrame, a: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"segment_id": pd.Series([], dtype="int64"),
-             "ext_id": pd.Series([], dtype="int64")}
-        )
-        if p.empty or a.empty:
-            return empty
-        seg = int(p["segment_id"].iloc[0])
-        dls, ext_ids, tomb, allowed = _aux_arrays(a)
-        if ext_ids is None:
-            return empty
-        pt = _group_postings(p, set(all_terms))
-
-        def docs_of(t: str) -> np.ndarray:
-            if t not in pt:
-                return np.empty(0, np.int64)
-            return np.concatenate(
-                [
-                    np.cumsum(varint_decode(b), dtype=np.int64)
-                    for b in pt[t]["doc_deltas"]
-                ]
-            )
-
-        if any(t not in pt for t in must):
-            return empty  # a MUST term absent from this segment
-        cur = None
-        # smallest MUST term first keeps the running set tiny
-        for t in sorted(must, key=lambda t: int(pt[t]["n"].sum())):
-            d = docs_of(t)
-            cur = d if cur is None else np.intersect1d(cur, d, assume_unique=True)
-            if cur.size == 0:
-                return empty
-        if any_of and m_should > 0:
-            parts = [docs_of(t) for t in any_of]
-            allp = (
-                np.concatenate(parts) if parts else np.empty(0, np.int64)
-            )
-            if m_should == 1:
-                u = np.unique(allp)
-            else:
-                u, cnt = np.unique(allp, return_counts=True)
-                u = u[cnt >= m_should]  # each term lists a doc at most once
-            cur = u if cur is None else np.intersect1d(cur, u, assume_unique=True)
-        for t in exclude:
-            d = docs_of(t)
-            if cur.size and d.size:
-                cur = np.setdiff1d(cur, d, assume_unique=True)
-        if cur.size == 0:
-            return empty
-        alive = _alive_mask(dls.size, tomb, allowed)
-        cur = cur[alive[cur]]
-        return pd.DataFrame(
-            {"segment_id": np.full(cur.size, seg, dtype=np.int64),
-             "ext_id": ext_ids[cur]}
-        )
-
-    return (
-        postings.groupby("segment_id")
-        .cogroup(aux.groupby("segment_id"))
-        .applyInPandas(lambda _k, p, a: ev(p, a), MATCH_SCHEMA)
-        .select("ext_id")
-    )
+        raise ValueError("at least one positive clause (must / any_of) is required")
+    spec = _compile({"must": must, "should": any_of, "exclude": exclude,
+                     "min_should_match": min_should_match, "k": _ALL_MATCHES_K,
+                     "scores": False})
+    m = _topk(spark, cat, spec, cfg, sort=False)
+    if isinstance(m, LocalResult):  # project the table: no JVM side built
+        return arrow_frame(spark, m.table.select(["ext_id"]))
+    return m.select("ext_id")
 
 
 def boolean_or(
@@ -1495,13 +1404,15 @@ def hit_count(
     min_should_match: int | None = None,
 ) -> DataFrame:
     """``IndexSearcher.count(query)`` analogue → one row (n_hits): the
-    live-doc count of a BooleanQuery match, with no scoring and no
-    per-doc result materialization beyond the match set's map-side
-    partial counts."""
+    live-doc count of a :func:`boolean_query` match. A resident match set
+    is counted in the driver; on the Spark tier it is an aggregate of the
+    match set's map-side partial counts."""
     m = boolean_query(
         spark, cat, must=must, any_of=any_of, exclude=exclude, cfg=cfg,
         min_should_match=min_should_match,
     )
+    if isinstance(m, LocalResult):
+        return local_frame(spark, "n_hits long", [m.table.num_rows])
     return m.agg(F.count("*").alias("n_hits"))
 
 

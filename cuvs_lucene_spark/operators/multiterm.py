@@ -21,7 +21,11 @@ semantics mirrored here:
 - expansion is bounded by ``max_expansions`` (Lucene
   ``IndexSearcher.getMaxClauseCount``, default 1024) and EXCEEDING IT
   RAISES (``TooManyClauses``) — no silent truncation.
-- ``*_docs``: CONSTANT_SCORE_REWRITE — the match set, no ranking.
+- ``*_docs``: CONSTANT_SCORE_REWRITE — the match set, no ranking: the
+  expanded terms as the SHOULD clauses of one match-only
+  ``bm25.boolean_query``, which runs the BM25 scoring core with every
+  match kept and the scores dropped (so a resident catalog answers in
+  the driver).
 - ``prefix_topk`` / ``fuzzy_topk``: SCORING_BOOLEAN_REWRITE — the
   expanded terms feed the standard BM25 disjunction (same scorer, stats
   recomputed over live docs, so terms surviving only in deleted docs

@@ -259,10 +259,11 @@ def _live_segs(spark: SparkSession, cat) -> DataFrame:
 
 
 def _missing_segs(spark: SparkSession, cat) -> DataFrame:
-    """Live segments the sidecar does not cover (DataFrame — never a
-    driver-side set; at 10⁶ segments this stays a metadata-scale
-    anti-join). The driver flush's :func:`_driver_missing` reads the same
-    set into the driver, only under ``DRIVER_FLUSH_MAX_INDEX_BYTES``."""
+    """Live segments the sidecar does not cover, as a metadata-scale
+    anti-join: checked for emptiness by a build and a phrase query, and
+    collected once by :func:`refresh_positions` (a merge or an epoch
+    bounds it). The driver flush's :func:`_driver_missing` reads the same
+    set by pyarrow, only under ``DRIVER_FLUSH_MAX_INDEX_BYTES``."""
     live = _live_segs(spark, cat)
     if not cat.exists("positions"):
         return live
@@ -277,7 +278,7 @@ def _spark_source(
     """The source docs of the given segment set (None = every live
     segment) as (ext_id, content, segment_id) rows, checked for coverage.
     The doc_map join restricts the source scan; the segment restriction is
-    a broadcast semi-join, never a collected id list."""
+    a broadcast semi-join on the ``segments`` frame."""
     dm = cat.read(spark, "doc_map").select("segment_id", "ext_id")
     if segments is not None:
         dm = dm.join(F.broadcast(segments), "segment_id", "left_semi")
@@ -391,10 +392,14 @@ def refresh_positions(
         if n_missing:
             src = _driver_source(src, dm, missing)
     else:
-        missing = _missing_segs(spark, cat)
-        n_missing = missing.count()  # merge-bounded metadata job
+        # the merge-bounded missing set, collected once: the semi-join and
+        # the coverage check below read it as a LocalRelation, not a
+        # re-planned anti-join
+        missing = [r[0] for r in _missing_segs(spark, cat).collect()]
+        n_missing = len(missing)
         if n_missing:
-            src = _spark_source(spark, cat, docs, missing, content_col, id_col)
+            src = _spark_source(spark, cat, docs, local_frame(spark, "segment_id long", missing),
+                                content_col, id_col)
     if n_missing == 0:
         return 0
     if cat.exists("positions"):

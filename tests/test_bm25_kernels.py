@@ -13,6 +13,7 @@ from cuvs_lucene_spark.operators.bm25 import (
     _alive_mask,
     _compile,
     _decode_term,
+    _disjoint,
     _score_batch_queries,
     _weigh,
     idf,
@@ -168,6 +169,27 @@ def test_all_rejected_segment_emits_no_rows():
     assert _run(veto, only_ab, dls, ext_ids, np.ones(dls.size, bool)) == {}
 
 
+def test_match_only_specs_may_overlap():
+    """A match-only ``BooleanQuery`` (``boolean_query``) may name a term in
+    two clause lists: the kernel matches as Lucene's clause rules say."""
+    tf, dls, ext_ids = _segment(5)
+    raw = {
+        "must_should": {"must": ["a"], "should": ["a", "b"], "min_should_match": 2},
+        "should_exclude": {"should": ["a", "b"], "exclude": ["b"]},
+        "must_exclude": {"must": ["a"], "exclude": ["a"]},
+    }
+    specs = _specs({q: {**s, "k": 1 << 40} for q, s in raw.items()}, tf, dls.size)
+    got = _run(specs, tf, dls, ext_ids, np.ones(dls.size, bool))
+
+    def docs(rule):
+        return sorted(float(ext_ids[d]) for d in range(dls.size)
+                      if rule({t for t in VOCAB if d in tf[t]}))
+
+    assert sorted(e for e, _ in got["must_should"]) == docs(lambda h: {"a", "b"} <= h)
+    assert sorted(e for e, _ in got["should_exclude"]) == docs(lambda h: "a" in h and "b" not in h)
+    assert "must_exclude" not in got
+
+
 def test_decode_skips_blocks_past_the_visit_limit():
     docs = np.arange(0, 200, 3, dtype=np.int64)
     tfs = (docs % 4 + 1).astype(np.int64)
@@ -191,8 +213,13 @@ def test_compile_checks_modes_and_clauses_once():
         _compile({"terms": ["a"], "mode": "AND"})
     with pytest.raises(ValueError, match="q7: unknown mode 'xor'"):
         _compile({"terms": ["a"], "mode": "xor"}, "q7")
+    # a scored spec's clause lists are checked apart; a match-only one may overlap
+    with pytest.raises(ValueError, match="q2: terms appear in more than one clause"):
+        _disjoint({"must": ["a"], "exclude": ["a"]}, "q2")
     with pytest.raises(ValueError, match="more than one clause"):
-        _compile({"must": ["a"], "exclude": ["a"]})
+        _disjoint({"must": ["a"], "should": ["a", "b"]})
+    c = _compile({"must": ["a"], "should": ["a", "b"], "exclude": ["b"]})
+    assert (c["terms"], c["should"], c["exclude"]) == (["a", "b"], ["a", "b"], ["b"])
     with pytest.raises(ValueError, match="positive clause"):
         _compile({"exclude": ["a"]})
     with pytest.raises(ValueError, match="terms/mode"):

@@ -8,7 +8,9 @@ kernel under the same tie rule, so every query kind must return the same
 (ext_id, score) list bit for bit — with no filter, a set filter (a
 driver-built ``LocalRelation``) and a DataFrame filter, on a fresh index,
 after a delete and after an append and a merge. Forcing the budget to 0,
-or a pack read that fails, selects the Spark tier.
+or a pack read that fails, selects the Spark tier. The match-only
+queries (term, Boolean, count and multi-term match sets) run the same
+core and must return the same match sets on both tiers.
 """
 
 from __future__ import annotations
@@ -68,6 +70,27 @@ KINDS = {
     "batch": lambda s, c, f: B.bm25_topk_batch(s, c, BATCH, CFG),
     "batch_params": lambda s, c, f: B.bm25_topk_batch(s, c, BATCH, PARAMS),
 }
+# match-only queries (the scoring core with every match kept): each
+# match set sorted, hit_count's one count
+MATCHES = {
+    "term": lambda s, c: B.term_docs(s, c, "dup", CFG),
+    "and": lambda s, c: B.boolean_and(s, c, ["dup", "slow"], CFG),
+    "or": lambda s, c: B.boolean_or(s, c, T, CFG),
+    "and_not": lambda s, c: B.boolean_and_not(s, c, ["join"], ["slow", "dup"], CFG),
+    "query": lambda s, c: B.boolean_query(s, c, must=["join"], any_of=["vector", "spark", "dup"],
+                                          exclude=["slow"], cfg=CFG, min_should_match=2),
+    "overlap": lambda s, c: B.boolean_query(s, c, must=["join"], any_of=["join", "vector"],
+                                            exclude=["vector"], cfg=CFG, min_should_match=1),
+    "msm_over": lambda s, c: B.boolean_query(s, c, any_of=["join", "vector"], cfg=CFG,
+                                             min_should_match=3),
+    "hit_count": lambda s, c: B.hit_count(s, c, must=["join"], any_of=["vector", "spark", "dup"],
+                                          exclude=["slow"], cfg=CFG, min_should_match=2),
+    "prefix": lambda s, c: M.prefix_docs(s, c, "sp", CFG),
+    "wildcard": lambda s, c: M.wildcard_docs(s, c, "s?a*", CFG),
+    "fuzzy": lambda s, c: M.fuzzy_docs(s, c, "ordre", max_edits=1, cfg=CFG),
+    "range": lambda s, c: M.range_docs(s, c, "d", "f", cfg=CFG),
+    "regexp": lambda s, c: M.regexp_docs(s, c, "sl.*", CFG),
+}
 FILTERS = {
     "none": lambda spark: None,
     "set": lambda spark: local_frame(spark, "ext_id long", range(0, 500, 2)),
@@ -108,6 +131,20 @@ def _both_tiers(spark, cat, cases, monkeypatch) -> None:
         resident[c], tier[c] = sorted(resident[c]), sorted(tier[c])
     assert all(resident.values())
     assert {c: v for c, v in resident.items() if v != tier[c]} == {}
+
+
+def _match_tiers(spark, cat, monkeypatch, matches=MATCHES) -> dict:
+    """Each match-only query on the resident tier (the Spark tier
+    poisoned) and on the Spark tier (budget 0): the same sorted rows.
+    Returns the resident tier's."""
+    with monkeypatch.context() as m:
+        m.setattr(B, "_spark_partials", lambda *a, **k: pytest.fail("took the Spark tier"))
+        resident = {k: sorted(_rows(q(spark, cat))) for k, q in matches.items()}
+    with monkeypatch.context() as m:
+        m.setattr(R, "TEXT_RESIDENT_MAX_BYTES", 0)
+        tier = {k: sorted(_rows(q(spark, cat))) for k, q in matches.items()}
+    assert {k: v for k, v in resident.items() if v != tier[k]} == {}
+    return resident
 
 
 def _reads(spark, cat, fn) -> list:
@@ -160,6 +197,29 @@ def merged(spark, deleted):
 
 def test_tiers_equal_fresh(spark, cat, monkeypatch):
     _both_tiers(spark, cat, _cases(), monkeypatch)
+
+
+def _check_matches(got: dict) -> None:
+    """Every match set but the msm-over-count one holds docs, and
+    ``hit_count`` counts its query's match set."""
+    assert [k for k, v in got.items() if not v] == ["msm_over"]
+    assert got["hit_count"] == [(len(got["query"]),)]
+
+
+def test_match_sets_tiers_equal_fresh(spark, cat, monkeypatch):
+    _check_matches(_match_tiers(spark, cat, monkeypatch))
+
+
+def test_empty_and_pure_negative_boolean_queries(spark, cat):
+    """``boolean_and`` of no terms matches nothing, as an empty Lucene
+    ``BooleanQuery`` does; a pure MUST_NOT query raises ``ValueError``
+    naming the caller's arguments."""
+    empty = B.boolean_and(spark, cat, [], CFG)
+    assert empty.schema.simpleString() == "struct<ext_id:bigint>" and empty.collect() == []
+    with pytest.raises(ValueError, match=r"\(must / any_of\)"):
+        B.boolean_query(spark, cat, exclude=["dup"], cfg=CFG)
+    with pytest.raises(ValueError, match=r"\(must / any_of\)"):
+        B.hit_count(spark, cat, exclude=["dup"], cfg=CFG)
 
 
 def test_concurrent_first_queries_fill_the_pack_once(spark, cat):
@@ -281,6 +341,42 @@ def test_tiers_equal_after_delete(spark, deleted, monkeypatch):
     assert sc.statusTracker().getJobIdsForGroup("bm25_resident_deleted") == []
 
 
+def test_match_sets_tiers_equal_after_delete(spark, deleted, monkeypatch):
+    got = _match_tiers(spark, deleted, monkeypatch)
+    _check_matches(got)
+    assert not {e for (e,) in got["or"]} & set(range(0, 500, 7))
+
+
+@pytest.fixture(scope="module")
+def term_deleted(spark, tmp_path_factory):
+    """A fresh index with every doc holding "dup" deleted by term."""
+    from cuvs_lucene_spark.operators.deletes import delete_by_term
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    c = build_index(spark, docs, str(tmp_path_factory.mktemp("bm25dup")), CFG,
+                    content_col="text", id_col="doc_id")
+    dup = sorted(_rows(B.term_docs(spark, c, "dup", CFG)))
+    assert dup and delete_by_term(spark, c, "dup", CFG) == docs.count() - len(dup)
+    return c
+
+
+def test_wholly_deleted_terms_match_and_veto_nothing(spark, term_deleted, monkeypatch):
+    """A must term whose live docs are all deleted matches nothing, and
+    an exclude term whose live docs are all deleted vetoes nothing, on
+    both tiers."""
+    got = _match_tiers(spark, term_deleted, monkeypatch, {
+        "term": MATCHES["term"],
+        "must": lambda s, c: B.boolean_query(s, c, must=["dup", "join"], cfg=CFG),
+        "should": lambda s, c: B.boolean_query(s, c, any_of=["dup", "join"], cfg=CFG,
+                                               min_should_match=2),
+        "count": lambda s, c: B.hit_count(s, c, must=["dup"], cfg=CFG),
+        "or": lambda s, c: B.boolean_or(s, c, ["join"], CFG),
+        "exclude": lambda s, c: B.boolean_and_not(s, c, ["join"], ["dup"], CFG),
+    })
+    assert got["term"] == got["must"] == got["should"] == [] and got["count"] == [(0,)]
+    assert got["exclude"] == got["or"] != []
+
+
 def test_refill_reads_only_new_directories(spark, merged):
     """After an append and after a merge, the warm pack reads only the
     appended directory (the merge's drops are filtered in the driver),
@@ -297,6 +393,10 @@ def test_refill_reads_only_new_directories(spark, merged):
 
 def test_tiers_equal_after_merge(spark, merged, monkeypatch):
     _both_tiers(spark, merged[0], _cases(rotate=2), monkeypatch)
+
+
+def test_match_sets_tiers_equal_after_merge(spark, merged, monkeypatch):
+    _check_matches(_match_tiers(spark, merged[0], monkeypatch))
 
 
 def test_spark_tier_buckets_by_the_index_term_buckets(spark, cat, monkeypatch):

@@ -609,7 +609,7 @@ def test_ann_driver_writes_job_counts(spark, tmp_path):
 
 WRITE_JOB_PINS = {  # Spark jobs of each write on the Spark tier (bounds 0)
     "build_index": 5, "build_positions": 8, "epoch": 4,
-    "refresh_positions": 17, "build_ann": 6, "epoch_vectors": 7,
+    "refresh_positions": 14, "build_ann": 6, "epoch_vectors": 7,
 }
 
 
@@ -717,7 +717,33 @@ BM25_JOB_PINS = {  # warm per-query Spark jobs of the BM25 family
     "topk": 2, "topk_and": 2, "boolean": 2, "dismax": 2, "synonym": 2,
     "batch": 3, "batch_cached": 3, "topk_cached": 2, "set_filter": 3,
     "df_filter_over_cap": 6, "after_delete": 3, "phrase": 5, "fuzzy": 4,
+    # match-only queries: the scoring core's two jobs (hit_count's
+    # aggregate one more, prefix_docs' dictionary scan two more); cold
+    # after a delete, the tombstone pack's fill and no statistics job
+    "term_docs": 2, "boolean_and": 2, "boolean_or": 2, "boolean_and_not": 2,
+    "boolean_query": 2, "hit_count": 3, "prefix_docs": 4, "boolean_query_after_delete": 3,
+    "boolean_query_cold_after_delete": 7,
 }
+
+
+def _match_calls(spark, cat) -> dict:
+    """The match-only queries: term, Boolean, count and prefix match sets."""
+    import cuvs_lucene_spark.operators.bm25 as B
+    from cuvs_lucene_spark.operators.multiterm import prefix_docs
+
+    return {
+        "term_docs": lambda: B.term_docs(spark, cat, "dup", CFG),
+        "boolean_and": lambda: B.boolean_and(spark, cat, ["dup", "slow"], CFG),
+        "boolean_or": lambda: B.boolean_or(spark, cat, ["join", "vector"], CFG),
+        "boolean_and_not": lambda: B.boolean_and_not(spark, cat, ["dup"], ["slow"], CFG),
+        "boolean_query": lambda: B.boolean_query(
+            spark, cat, must=["dup"], any_of=["join", "vector"], exclude=["slow"], cfg=CFG,
+            min_should_match=1,
+        ),
+        "hit_count": lambda: B.hit_count(spark, cat, must=["dup"], any_of=["join", "vector"],
+                                         cfg=CFG),
+        "prefix_docs": lambda: prefix_docs(spark, cat, "sp", CFG),
+    }
 
 
 def _bm25_calls(spark, cat) -> dict:
@@ -735,6 +761,7 @@ def _bm25_calls(spark, cat) -> dict:
     }
     small = spark.range(0, 400, 3).select(F.col("id").alias("ext_id"))
     return {
+        **_match_calls(spark, cat),
         "topk": lambda: B.bm25_topk(spark, cat, ["join", "vector"], k=10, cfg=CFG),
         "topk_and": lambda: B.bm25_topk(spark, cat, ["dup", "slow"], k=10, mode="and", cfg=CFG),
         "boolean": lambda: B.bm25_boolean_topk(
@@ -753,9 +780,10 @@ def _bm25_calls(spark, cat) -> dict:
 
 def test_bm25_resident_query_job_counts(spark, cat):
     """Under the default budget every warm BM25 scored query and batch,
-    phrase and fuzzy queries included, is served from the resident pack:
-    0 jobs, 1 with a DataFrame filter (its head read); a filter built in
-    the driver (a LocalRelation) reads its head with none."""
+    phrase and fuzzy queries included, and every match-only query (term,
+    Boolean, count, prefix) is served from the resident pack: 0 jobs, 1
+    with a DataFrame filter (its head read); a filter built in the driver
+    (a LocalRelation) reads its head with none."""
     from cuvs_lucene_spark.frames import local_frame
     from cuvs_lucene_spark.operators.bm25 import bm25_topk
     from cuvs_lucene_spark.operators.multiterm import prefix_topk
@@ -795,6 +823,30 @@ def test_resident_query_py4j_round_trips(spark, cat, ann_cat):
             call().collect()
         trips[mode] = n[0]
     assert trips == dict.fromkeys(calls, 0)
+
+
+def test_delete_by_term_in_the_driver_runs_no_job(spark, tmp_path):
+    """On a driver-sized index, ``delete_by_term`` reads the term's
+    resident match set, tombstones it and counts the live docs with no
+    Spark job."""
+    from cuvs_lucene_spark.operators.bm25 import term_docs
+    from cuvs_lucene_spark.operators.deletes import delete_by_term
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    c = build_index(spark, docs, str(tmp_path / "idx"), CFG, content_col="text",
+                    id_col="doc_id")
+    hits = {r["ext_id"] for r in term_docs(spark, c, "dup", CFG).collect()}
+    sc = spark.sparkContext
+    sc.setJobGroup("delete_by_term", "delete_by_term")
+    try:
+        live = delete_by_term(spark, c, "dup", CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("delete_by_term") == []
+    assert hits and live == docs.count() - len(hits)
+    assert {r["ext_id"] for r in c.read(spark, "tombstones").collect()} == hits
+    assert term_docs(spark, c, "dup", CFG).collect() == []
 
 
 ANN_MANIFEST_READS = {  # IndexCatalog.read_manifest calls per warm resident query
@@ -899,5 +951,13 @@ def test_bm25_query_job_counts(spark, cat, monkeypatch, spark_tier):
         mp.setattr(B, "FILTER_BROADCAST_MAX", 0)
         counts.update(_warm_job_counts(spark, {"df_filter_over_cap": calls["set_filter"]}, "bm25"))
     delete_docs(spark, cat, spark.range(1).select(F.col("id").alias("ext_id")))
-    counts.update(_warm_job_counts(spark, {"after_delete": calls["topk"]}, "bm25"))
+    counts.update(_warm_job_counts(spark, {"after_delete": calls["topk"],
+                                           "boolean_query_after_delete": calls["boolean_query"]},
+                                   "bm25"))
+    # cold: the first match query with a new term set after a delete, as
+    # each delete_by_term runs one; it reads no live statistic
+    delete_docs(spark, cat, spark.range(1, 2).select(F.col("id").alias("ext_id")))
+    counts["boolean_query_cold_after_delete"] = _job_count(spark, lambda: B.boolean_query(
+        spark, cat, must=["slow"], any_of=["data", "group"], exclude=["join"], cfg=CFG,
+    ), "bm25_cold_after_delete")
     assert {m: n for m, n in counts.items() if n > BM25_JOB_PINS[m]} == {}, counts

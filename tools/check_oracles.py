@@ -7,12 +7,16 @@ and an order-insensitive value hash. Usage:
 
 ``--flush driver`` (the default) runs every query as it runs by default:
 the dedup, text-statistics and training-mix stages and the small writes
-run in the driver below ``segments.DRIVER_FLUSH_MAX_DOCS``. ``--flush
-spark`` sets that bound to 0 in-process, so they run their Spark tier.
+run in the driver below ``segments.DRIVER_FLUSH_MAX_DOCS``, and the BM25
+and ANN queries on the resident tier. ``--flush spark`` sets that bound
+and the resident budgets (``resident.RESIDENT_MAX_BYTES``,
+``resident.TEXT_RESIDENT_MAX_BYTES``) to 0 in-process, so the writes and
+the queries run their Spark tier.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import os
 import sys
@@ -45,22 +49,26 @@ def _norm(v):
 
 
 def main():
-    flush = "driver"
-    if "--flush" in sys.argv:
-        i = sys.argv.index("--flush")
-        flush = sys.argv[i + 1]
-        del sys.argv[i:i + 2]
-    if flush not in ("driver", "spark"):
-        raise SystemExit(f"unknown flush {flush!r}; expected driver or spark")
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = sys.argv[2] if len(sys.argv) > 2 else ""
+    ap = argparse.ArgumentParser(
+        description="Run every __spark_entry__ query and compare it with its DuckDB oracle.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001",
+                    help="parquet dir of the tables (default: %(default)s)")
+    ap.add_argument("only", nargs="?", default="",
+                    help="run only the queries whose name contains this")
+    ap.add_argument("--flush", choices=("driver", "spark"), default="driver",
+                    help="driver: default bounds; spark: the write bound and the "
+                         "resident budgets set to 0 (default: %(default)s)")
+    args = ap.parse_args()
+    sf_dir, only = args.sf_dir, args.only
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
-    from cuvs_lucene_spark.operators import segments
+    from cuvs_lucene_spark.operators import resident, segments
 
-    if flush == "spark":
+    if args.flush == "spark":
         segments.DRIVER_FLUSH_MAX_DOCS = 0
+        resident.RESIDENT_MAX_BYTES = 0
+        resident.TEXT_RESIDENT_MAX_BYTES = 0
 
     spark = (
         SparkSession.builder.master("local[4]")

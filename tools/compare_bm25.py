@@ -1,14 +1,20 @@
 """Dump the (ext_id, score) lists of every public BM25 scoring function,
-phrase (plain and multi-phrase) and fuzzy queries included, and the fuzzy
-expansions' term lists, over one small index with a positions sidecar,
-so two checkouts can be compared result for result.
+phrase (plain and multi-phrase) and fuzzy queries included, the fuzzy
+expansions' term lists, and the sorted ext_id lists of every match-only
+query (``term_docs``, the ``boolean_*`` family and ``boolean_query``
+with overlapping clause lists, msm 0 / 2 / above the ``any_of`` count
+and absent terms, ``hit_count``'s count, the five multiterm ``*_docs``),
+over one small index with a positions sidecar, so two checkouts can be
+compared result for result.
 
 Scenarios: no filter, a small set filter, a DataFrame filter over the
 broadcast cap (``FILTER_BROADCAST_MAX`` patched to 0), the cogroup tier
 (``NORMS_BROADCAST_MAX_DOCS`` patched to 0), each run once (``cold``)
 and again (``warm``); then after a delete and after a merge (the
-sidecar refreshed), the latter again repeated (``merged_warm``). Scores
-are written as ``float.hex`` so the comparison is bit for bit.
+sidecar refreshed), the latter again repeated (``merged_warm``), and
+last after a ``delete_by_term`` (``by_term``, with the count it returned).
+The match-only queries run in every unfiltered scenario. Scores are
+written as ``float.hex`` so the comparison is bit for bit.
 
 The index goes through a build, the positions build, one epoch
 (``incremental_add`` of 40 re-keyed docs, with its positions append), a
@@ -112,6 +118,51 @@ def _calls(spark, cat, cfg, filt):
     }
 
 
+def _match_calls(spark, cat, cfg):
+    """Match-only queries: their sorted ext_id lists (``hit_count``: its
+    one count). The ``boolean_query`` lists may overlap, and an msm above
+    the ``any_of`` count matches nothing."""
+    from cuvs_lucene_spark.operators import bm25 as B
+    from cuvs_lucene_spark.operators import multiterm as M
+
+    def bq(**kw):
+        return lambda: B.boolean_query(spark, cat, cfg=cfg, **kw)
+
+    three = ["spark", "customer", "dup"]
+    return {
+        "term_docs": lambda: B.term_docs(spark, cat, "dup", cfg),
+        "term_docs_absent": lambda: B.term_docs(spark, cat, "zzz_not_in_corpus", cfg),
+        "boolean_and": lambda: B.boolean_and(spark, cat, ["dup", "slow"], cfg),
+        "boolean_or": lambda: B.boolean_or(spark, cat, ["join", "vector"], cfg),
+        "boolean_and_not": lambda: B.boolean_and_not(spark, cat, ["dup"], ["slow"], cfg),
+        "bq_mixed": bq(must=["dup"], any_of=["join", "vector"], exclude=["slow"],
+                       min_should_match=1),
+        "bq_default_msm": bq(must=["dup"], any_of=["join", "vector"], exclude=["slow"]),
+        "bq_msm0": bq(any_of=three, min_should_match=0),
+        "bq_msm2": bq(any_of=three, min_should_match=2),
+        "bq_must_msm2": bq(must=["join"], any_of=three, min_should_match=2),
+        "bq_msm_over": bq(any_of=["spark", "customer"], min_should_match=3),
+        "bq_overlap_must_any": bq(must=["dup"], any_of=["dup", "slow"], min_should_match=2),
+        "bq_overlap_any_exclude": bq(any_of=["join", "vector"], exclude=["vector"]),
+        "bq_overlap_must_exclude": bq(must=["join"], exclude=["join"]),
+        "bq_absent_should": bq(must=["join"], any_of=["zzz_not_in_corpus", "vector"],
+                               min_should_match=1),
+        "bq_absent_must": bq(must=["zzz_not_in_corpus"], any_of=["join"]),
+        "bq_absent_exclude": bq(must=["join"], exclude=["zzz_not_in_corpus"]),
+        "hit_count": lambda: B.hit_count(spark, cat, must=["dup"], any_of=["join", "vector"],
+                                         cfg=cfg),
+        "prefix_docs": lambda: M.prefix_docs(spark, cat, "sp", cfg),
+        "wildcard_docs": lambda: M.wildcard_docs(spark, cat, "s?a*", cfg),
+        "fuzzy_docs": lambda: M.fuzzy_docs(spark, cat, "ordre", max_edits=1, cfg=cfg),
+        "range_docs": lambda: M.range_docs(spark, cat, "d", "f", cfg=cfg),
+        "regexp_docs": lambda: M.regexp_docs(spark, cat, "sl.*", cfg),
+    }
+
+
+def _ids(df):
+    return sorted(list(r) for r in df.collect())
+
+
 def _rows(df, batch=False):
     if batch:
         return sorted(
@@ -128,7 +179,7 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident", flush: str = "drive
 
     from cuvs_lucene_spark.config import IndexConfig
     from cuvs_lucene_spark.operators import bm25 as B
-    from cuvs_lucene_spark.operators.deletes import delete_docs
+    from cuvs_lucene_spark.operators.deletes import delete_by_term, delete_docs
     from cuvs_lucene_spark.operators.merge import merge_segments
     from cuvs_lucene_spark.operators.positions import build_positions, refresh_positions
     from cuvs_lucene_spark.operators import segments
@@ -183,6 +234,8 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident", flush: str = "drive
                     for call, fn in _text_calls(spark, cat, cfg).items():
                         got = fn()
                         out[f"{stage}/{name}/{call}"] = got if isinstance(got, list) else _rows(got)
+                    for call, fn in _match_calls(spark, cat, cfg).items():
+                        out[f"{stage}/{name}/{call}"] = _ids(fn())
                     out[f"{stage}/{name}/batch"] = _rows(
                         B.bm25_topk_batch(spark, cat, BATCH, cfg), batch=True
                     )
@@ -202,6 +255,8 @@ def dump(out_path: str, sf_dir: str, tier: str = "resident", flush: str = "drive
     refresh_positions(spark, cat, docs, cfg)
     run("merged", ["nofilter", "setfilter"])
     run("merged_warm", ["nofilter"])
+    out["by_term/live_docs"] = [delete_by_term(spark, cat, "slow", cfg)]
+    run("by_term", ["nofilter"])
     with open(out_path, "w") as f:
         json.dump(out, f, indent=0, sort_keys=True)
     n_rows = sum(len(v) for v in out.values())
